@@ -643,9 +643,9 @@ object Similarity {
     // aggregator's mergeSorted ∘ finish). A full .agg() spelling paid a
     // second stage behind a single-partition exchange plus the udaf
     // machinery — ~0.15 s of pure fixed cost per training call at
-    // bench scale (measured via SeedPoolTimer) for no scan saved; this
-    // form has the same per-job shape as one TakeOrdered, while still
-    // reading the corpus ONCE for all m pools.
+    // bench scale (measured; see OPTIMIZATION_r22.md, SeedPoolAggregator)
+    // for no scan saved; this form has the same per-job shape as one
+    // TakeOrdered, while still reading the corpus ONCE for all m pools.
     val partials = seedPoolPartials(embeddings, idCol, vecCol, seeds, poolK)
       .collect()
     val byPool = partials.groupBy(_._1)

@@ -8,6 +8,7 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, concat, input_file_name, lit, max, min, not, struct, sum, to_json, when, xxhash64}
 import org.apache.spark.sql.types._
 
@@ -1505,18 +1506,14 @@ final class TableStore(val root: HPath, spark: SparkSession) {
           files.forall(f => f.partition.exists(_._1.equalsIgnoreCase(key)) &&
             TableStore.bucketIdFromName(TableStore.fileName(f.path)).isDefined)
       }
-    val base = bucketable.map { sp => (paths: Seq[String], s: StructType) =>
-      org.apache.spark.sql.GraftSqlShim.bucketedParquetRead(spark, paths, s,
-        sp.param.get, sp.column,
-        sortCols = sp.column +: sortOrder(table).filterNot(
-          _.equalsIgnoreCase(sp.column)))
-    }
-    readFileListAs(table, files, schema(table), base)
+    val buckets = bucketable.map(sp => BucketSpec(sp.param.get, Seq(sp.column),
+      sp.column +: sortOrder(table).filterNot(_.equalsIgnoreCase(sp.column))))
+    readFileListAs(table, files, schema(table), buckets)
   }
 
   private def readFileListAs(table: String, files: Seq[DataFile],
       sch: StructType,
-      base: Option[(Seq[String], StructType) => DataFrame] = None,
+      buckets: Option[BucketSpec] = None,
       applyDeletes: Boolean = true,
       keepPos: Boolean = false,
       applyEqDeletes: Boolean = true): DataFrame =
@@ -1549,11 +1546,9 @@ final class TableStore(val root: HPath, spark: SparkSession) {
       // `withPos` additionally threads the scan's file/row-index
       // metadata through the projection for the delete anti-join.
       def scanPart(part: Seq[DataFile], withPos: Boolean): DataFrame = {
-        val paths = part.map(f => absPath(table, f.path).toString)
-        def scan(s: StructType): DataFrame = base match {
-          case Some(b) => b(paths, s)
-          case None    => spark.read.schema(s).parquet(paths: _*)
-        }
+        val logged = part.map(f => (absPath(table, f.path).toString, f.bytes))
+        def scan(s: StructType): DataFrame =
+          org.apache.spark.sql.GraftSqlShim.parquetScan(spark, logged, s, buckets)
         def meta(df: DataFrame): DataFrame =
           if (!withPos) df
           else df.select(col("*"),
@@ -4064,18 +4059,26 @@ object TableStore {
   }
 
   /** Driver-side parallel map over independent per-file metadata ops
-    * (footer reads, renames). Bounded pool; exceptions propagate. */
+    * (footer reads, renames). Bounded pool. The first task to fail
+    * cancels (interrupts) the others, and its own exception is rethrown,
+    * not the `ExecutionException` wrapper. */
   private[graft] def inParallel[A, B](xs: Seq[A], parallelism: Int = 16)(
       f: A => B): Seq[B] =
     if (xs.lengthCompare(2) < 0) xs.map(f)
     else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(parallelism, xs.size))
+      import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors}
+      val pool = Executors.newFixedThreadPool(math.min(parallelism, xs.size))
       try {
-        val futures = xs.map(x => pool.submit(
-          new java.util.concurrent.Callable[B] { def call(): B = f(x) }))
+        val done = new ExecutorCompletionService[B](pool)
+        val futures = xs.map(x => done.submit(() => f(x)))
+        // completion order: a failure surfaces as soon as it happens,
+        // not after the tasks submitted before it
+        xs.foreach { _ =>
+          try done.take().get()
+          catch { case e: ExecutionException => throw e.getCause }
+        }
         futures.map(_.get())
-      } finally pool.shutdown()
+      } finally pool.shutdownNow()
     }
 
   /** Undo Hive-style `%xx` escaping in partition directory values. */

@@ -198,26 +198,76 @@ object GraftSqlShim {
     scala.util.Try(org.apache.spark.sql.catalyst.catalog.CatalogColumnStat
       .fromExternalString(s, name, dt, 1)).isSuccess
 
-  /** Parquet scan over an explicit file list WITH bucket metadata: a
-    * hand-built [[execution.datasources.HadoopFsRelation]] carrying a
-    * `BucketSpec`, so `FileSourceScanExec` groups the files by their
-    * `_NNNNN` name tags and reports `HashPartitioning(bucketCol, n)` —
-    * same-bucketed joins/aggregations plan with NO exchange, exactly
-    * like a catalog bucketed table, but driven from the snapshot log's
-    * file list (time-travel-able, no catalog entry to desync). Every
-    * listed file MUST carry a parsable bucket tag (the scan throws on
-    * untagged files); callers fall back to a plain read otherwise. */
-  def bucketedParquetRead(spark: SparkSession, paths: Seq[String],
-      schema: types.StructType, numBuckets: Int, bucketCol: String,
-      sortCols: Seq[String]): DataFrame = {
+  /** Parquet scan over a snapshot's file list: the one relation every
+    * table read builds. It is the `HadoopFsRelation` over an
+    * `InMemoryFileIndex` that `spark.read.schema(s).parquet(paths: _*)`
+    * builds (paths qualified the same way, no options, the data schema
+    * made nullable), except that the index's [[FileStatusCache]] is
+    * pre-filled from the log's `(path, bytes)` entries, so listing the
+    * files is a map lookup: no per-file stat while planning and no
+    * listing job past `parallelPartitionDiscovery.threshold` paths.
+    * Spark's file-sink reader (`MetadataLogFileIndex`) trusts its log
+    * the same way. The statuses carry no block locations and no
+    * modification time.
+    *
+    * Entries logged without a size (`bytes < 0`, logs written before
+    * sizes were captured) miss the cache: they get Spark's own
+    * existence check and listing, as through `spark.read`. A logged file
+    * missing from storage therefore fails when the scan runs
+    * (`FileNotFoundException`), never by being skipped.
+    *
+    * `bucketSpec`: the scan groups files by their `_NNNNN` name tags and
+    * reports `HashPartitioning(bucketCol, n)`, so same-bucketed joins and
+    * aggregations plan with no exchange, like a catalog bucketed table.
+    * Every file must carry a parsable bucket tag (the scan throws on
+    * untagged files). Bucketed relations keep the schema as given. */
+  def parquetScan(spark: SparkSession, files: Seq[(String, Long)],
+      schema: types.StructType,
+      bucketSpec: Option[catalyst.catalog.BucketSpec] = None): DataFrame = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
     import org.apache.spark.sql.execution.datasources._
-    val index = new InMemoryFileIndex(spark, paths.map(new org.apache.hadoop.fs.Path(_)),
-      Map.empty, Some(schema), FileStatusCache.getOrCreate(spark))
-    val relation = HadoopFsRelation(index, new types.StructType(), schema,
-      Some(org.apache.spark.sql.catalyst.catalog.BucketSpec(
-        numBuckets, Seq(bucketCol), sortCols)),
-      new parquet.ParquetFileFormat, Map.empty)(spark)
-    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
-      LogicalRelation(relation, isStreaming = false))
+    val session = spark.asInstanceOf[classic.SparkSession]
+    val hadoopConf = session.sessionState.newHadoopConf()
+    // a root is qualified as `DataSource` qualifies a path; its status
+    // carries the form the file system's own listing returns (a local
+    // file lists as `file:///…`), so `inputFiles` and `input_file_name()`
+    // read as they do through `spark.read`
+    val roots = files.map { case (p, bytes) =>
+      val path = new Path(p)
+      val fs = path.getFileSystem(hadoopConf)
+      val root = path.makeQualified(fs.getUri, fs.getWorkingDirectory)
+      (root, bytes, fs.makeQualified(Path.getPathWithoutSchemeAndAuthority(root)))
+    }
+    val unsized = roots.collect { case (root, b, _) if b < 0 => root.toString }
+    if (unsized.nonEmpty)
+      DataSource.checkAndGlobPathIfNecessary(unsized, hadoopConf,
+        checkEmptyGlobPath = true, checkFilesExist = true,
+        enableGlobbing = false)
+    val logged = new LoggedFileStatusCache(roots.collect {
+      case (root, b, listed) if b >= 0 =>
+        root -> Array(new FileStatus(b, false, 0, 0L, 0L, listed))
+    }.toMap)
+    val index = new InMemoryFileIndex(spark, roots.map(_._1), Map.empty,
+      Some(schema), logged)
+    val dataSchema = if (bucketSpec.isEmpty) schema.asNullable else schema
+    util.SchemaUtils.checkSchemaColumnNameDuplication(dataSchema,
+      session.sessionState.conf.resolver)
+    val relation = HadoopFsRelation(index, new types.StructType(), dataSchema,
+      bucketSpec, new parquet.ParquetFileFormat, Map.empty)(spark)
+    classic.Dataset.ofRows(session, LogicalRelation(relation, isStreaming = false))
+  }
+
+  /** Leaf statuses known up front: root path → its one file status.
+    * `refresh()` on the index clears it, so a refreshed relation lists
+    * storage again. */
+  private final class LoggedFileStatusCache(
+      known: Map[org.apache.hadoop.fs.Path, Array[org.apache.hadoop.fs.FileStatus]])
+      extends execution.datasources.FileStatusCache {
+    @volatile private var entries = known
+    override def getLeafFiles(path: org.apache.hadoop.fs.Path)
+        : Option[Array[org.apache.hadoop.fs.FileStatus]] = entries.get(path)
+    override def putLeafFiles(path: org.apache.hadoop.fs.Path,
+        leafFiles: Array[org.apache.hadoop.fs.FileStatus]): Unit = ()
+    override def invalidateAll(): Unit = entries = Map.empty
   }
 }

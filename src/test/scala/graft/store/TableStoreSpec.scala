@@ -32,6 +32,22 @@ class TableStoreSpec extends AnyFunSuite {
     assert(st.read("t").count() == 15)
   }
 
+  test("inParallel: the first failure cancels its siblings and surfaces unwrapped") {
+    val never = new java.util.concurrent.CountDownLatch(1)
+    val interrupted = new java.util.concurrent.CountDownLatch(1)
+    val e = intercept[IllegalStateException] {
+      TableStore.inParallel(0 until 4) { i =>
+        if (i == 2) throw new IllegalStateException("task 2 failed")
+        try never.await(30, java.util.concurrent.TimeUnit.SECONDS)
+        catch { case _: InterruptedException => interrupted.countDown() }
+        i
+      }
+    }
+    assert(e.getMessage == "task 2 failed")
+    assert(interrupted.await(10, java.util.concurrent.TimeUnit.SECONDS),
+      "no sibling task was cancelled")
+  }
+
   test("empty table is readable through its persisted schema") {
     val st = newStore()
     st.create("empty", df(1 to 1).schema)
