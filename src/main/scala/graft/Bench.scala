@@ -4,39 +4,166 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
 
-/** Benchmark main: runs every SparkEntry query against
-  * `SPARK_GRAFT_SF_DIR`. The FULL per-query payload (both runs plus the
-  * min-of-runs map) goes to `SPARK_GRAFT_BENCH_OUT` (default
-  * `bench_out.json`); stdout gets only a COMPACT totals-only JSON line as
-  * the last line printed — the 61-query two-pass payload outgrew the
-  * driver's stdout tail capture, which starts mid-line and parses to
-  * null. A failed query records `-1` and lands in `"failed"` instead of
-  * masquerading as a fast green bar; one warmup query runs first so
-  * JIT/codegen warmup isn't billed to whichever query happens to be
-  * iterated first.
+/** Benchmark main and graft's only timing harness: runs the named
+  * SparkEntry queries (all of them when none are named) against
+  * `SPARK_GRAFT_SF_DIR`, `SPARK_GRAFT_BENCH_PASSES` times (default 2).
+  * Each entry reports its minimum over all passes; a failed run never
+  * counts as the minimum. The FULL per-query payload (the first two
+  * passes plus the min-of-passes map) goes to `SPARK_GRAFT_BENCH_OUT`
+  * (default `bench_out.json`); stdout gets only a COMPACT totals-only
+  * JSON line as the last line printed — the 61-query two-pass payload
+  * outgrew the stdout tail capture that reads it, which starts
+  * mid-line and parses to null. A failed query records `-1` and lands
+  * in `"failed"` instead of masquerading as a fast green bar; warm-up
+  * queries run first so JIT/codegen warmup isn't billed to whichever
+  * query happens to be iterated first.
+  *
+  * Usage: `runMain graft.Bench [entry ...]`. Min-of-K on a few entries
+  * (wall-clock A/B) is `SPARK_GRAFT_BENCH_PASSES=K runMain graft.Bench
+  * <names…>`; a one-shot at another scale sets `SPARK_GRAFT_SF_DIR` and
+  * `SPARK_GRAFT_BENCH_PASSES=1`.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // int64-micros timestamps (Iceberg's own mandate): INT96 is
-      // deprecated and carries no usable footer statistics
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // cost-based optimization: tables carrying COMPUTE STATS plan
-      // joins/broadcasts from row counts + NDV, not file size
-      .config("spark.sql.cbo.enabled", "true")
-      .config("spark.sql.cbo.joinReorder.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val names = entries(args.toSeq)
+    // Two passes by default: single-sample totals have shown ±2×
+    // machine-noise swings across rounds on byte-identical code, so one
+    // number cannot distinguish a regression from scheduler contention.
+    // `value` stays the FIRST pass (comparable with earlier rounds);
+    // `value_run2` + `runs` bound the noise. One pass suits the sf1
+    // full-suite run, where a second pass doubles an already-long
+    // wall-clock.
+    val nPasses = passes(sys.env.get("SPARK_GRAFT_BENCH_PASSES"))
+    val spark = GraftSession.local(cpus)
+    warmUp(spark, sfDir)
+    val runs = Seq.fill(nPasses)(pass(spark, sfDir, names, cpus))
+    spark.stop()
 
-    // Warmup: scan-only then join+agg+shuffle, so JIT/codegen/shuffle
-    // machinery costs aren't billed to whichever query runs first.
+    val results = runs.head
+    val results2 = runs.lift(1).getOrElse(results)
+    // Min-of-passes per reported name: the round-over-round comparison
+    // basis — single samples have shown ±2× scheduler-contention swings
+    // on byte-identical code, and min-of-N discards exactly that noise.
+    val resultsMin = results.map { case (k, _) =>
+      val ok = runs.flatMap(_.collect { case (`k`, v) if v >= 0 => v })
+      k -> (if (ok.isEmpty) -1.0 else ok.min)
+    }
+    // Sub-metrics re-slice time already billed to their headline — the
+    // total counts headlines only, or splitting a query would change the
+    // total on byte-identical engine code.
+    val headline = names.toSet
+    val failedNames = runs.flatten.collect { case (k, v) if v < 0 && headline(k) => k }.distinct
+    val failed = failedNames.map(k => s""""$k"""").mkString("[", ",", "]")
+    def total(rs: Seq[(String, Double)]): Double =
+      rs.collect { case (k, v) if v >= 0 && headline(k) => v }.sum
+    def jmap(rs: Seq[(String, Double)]): String =
+      rs.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+    val (t1, t2, tMin) = (total(results), total(results2), total(resultsMin))
+    val full =
+      s"""{"metric":"total","value":$t1,"unit":"sec","value_run2":$t2,""" +
+        s""""value_min":$tMin,"runs":${runs.map(total).mkString("[", ",", "]")},""" +
+        s""""queries":${jmap(results)},"queries_run2":${jmap(results2)},""" +
+        s""""queries_min":${jmap(resultsMin)},"failed":$failed,"sf":"$sfDir"}"""
+    Files.writeString(Paths.get(outPath), full + "\n")
+    // Compact line LAST on stdout, short enough that a stdout tail
+    // capture always contains its start. It embeds the per-query
+    // min-of-passes map (ms precision) — the round-over-round comparison
+    // basis must live in BENCH_rXX.json itself, not depend on
+    // bench_out.json surviving the round.
+    val minCompact = resultsMin
+      .map { case (k, v) => s""""$k":${math.rint(v * 1000) / 1000}""" }
+      .mkString("{", ",", "}")
+    val compact =
+      s"""{"metric":"total","value":$t1,"unit":"sec","value_run2":$t2,""" +
+        s""""value_min":$tMin,"n_queries":${names.size},"n_entries":${results.size},""" +
+        s""""failed":$failed,"queries_min":$minCompact,""" +
+        s""""detail":"$outPath","sf":"$sfDir"}"""
+    println(compact)
+    if (failedNames.nonEmpty) sys.exit(1)
+  }
+
+  private val Usage = "usage: Bench [entry ...] (SPARK_GRAFT_BENCH_PASSES >= 1)"
+
+  /** The entries to run: `args` (checked, duplicates dropped), or every
+    * declared entry when none are named. */
+  def entries(args: Seq[String]): Seq[String] = {
+    SparkEntry.requireKnown(args, Usage)
+    if (args.nonEmpty) args.distinct else SparkEntry.queries.keys.toSeq.sorted
+  }
+
+  /** The pass count `SPARK_GRAFT_BENCH_PASSES` sets (default 2). */
+  def passes(setting: Option[String]): Int = {
+    val n = setting.fold(2)(v => v.trim.toIntOption.getOrElse(0))
+    require(n >= 1, s"SPARK_GRAFT_BENCH_PASSES=${setting.getOrElse("")} is not " +
+      s"a pass count >= 1; $Usage")
+    n
+  }
+
+  /** Every name a pass reports for `entry`: its headline, then one
+    * sub-metric per part of a split entry. Runs nothing. */
+  def reportedNames(entry: String): Seq[String] =
+    entry +: SparkEntry.benchSplits.get(entry).toSeq.flatMap { split =>
+      Seq(s"${entry}_${split.parts._1}", s"${entry}_${split.parts._2}")
+    }
+
+  /** One pass over `entries`: (name, seconds) for every reported name, in
+    * [[reportedNames]] order. A split entry runs once; its headline is
+    * the sum of its two sub-metrics. A failed entry reports `-1` for its
+    * headline and sub-metrics. */
+  def pass(spark: SparkSession, sfDir: String, entries: Seq[String],
+      cpus: Int): Seq[(String, Double)] = {
+    // Streaming entries pay the state store per shuffle partition per
+    // micro-batch: 32 partitions × a handful of batches is pure
+    // bookkeeping at bench scale (r14: q_stream_join spent 7.1 s of
+    // 7.3 s in drain; the r22 A/B read q_stream_neardup 6.4 s at 8
+    // partitions vs 16.5 s at 32). Results are partition-count-invariant
+    // (the oracle gate runs these same queries at the default).
+    val streamParts = SparkEntry.streamShufflePartitions(cpus).toString
+    def withStreamConf[T](name: String)(body: => T): T =
+      if (!SparkEntry.streamingEntries(name)) body
+      else {
+        val prev = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", streamParts)
+        try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+      }
+    entries.flatMap { name =>
+      val names = reportedNames(name)
+      val secs =
+        try withStreamConf(name) {
+          SparkEntry.benchSplits.get(name) match {
+            case Some(split) =>
+              val (a, b) = split.run(spark, sfDir)
+              Seq(a + b, a, b)
+            case None =>
+              val t0 = System.nanoTime()
+              SparkEntry.queries(name)(spark, sfDir).count()
+              Seq((System.nanoTime() - t0) / 1e9)
+          }
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+          names.map(_ => -1.0)
+        }
+      // reclaim the entry's scratch warehouses OUTSIDE the timed body:
+      // ~300 accumulated fixture warehouses of dirty page cache and
+      // writeback otherwise tax every later entry's I/O (r14 measured
+      // a uniform ~1.2-1.4× inflation across the tail of the run).
+      // Also drop cached/persisted frames: operators that persist
+      // model aggregates (the LM tier) would otherwise serve later
+      // entries — and the next pass — from cache, so per-entry times
+      // would attribute one entry's model fit to another and the
+      // min-of-passes basis would flatter cached entries.
+      SparkEntry.cleanScratchDirs()
+      spark.catalog.clearCache()
+      names.zip(secs)
+    }
+  }
+
+  /** Warm-up outside any timed body: scan-only then join+agg+shuffle,
+    * then the streaming machinery. */
+  private def warmUp(spark: SparkSession, sfDir: String): Unit = {
     Seq("q_filter_count", "q_multiway_join").foreach { w =>
       try SparkEntry.queries(w)(spark, sfDir).count()
       catch { case e: Throwable => System.err.println(s"[bench] warmup $w failed: $e") }
@@ -76,164 +203,5 @@ object Bench {
     } catch { case e: Throwable =>
       System.err.println(s"[bench] streaming warmup failed: $e")
     }
-
-    // Two full back-to-back passes: single-sample totals have shown ±2×
-    // machine-noise swings across rounds on byte-identical code, so one
-    // number cannot distinguish a regression from scheduler contention.
-    // `value` stays the FIRST pass (comparable with earlier rounds);
-    // `value_run2` + `runs` bound the noise.
-    def timed(name: String)(body: => Unit): (String, Double, Boolean) = {
-      val t0 = System.nanoTime()
-      val ok =
-        try { body; true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-          false
-        }
-      val sec = (System.nanoTime() - t0) / 1e9
-      (name, if (ok) sec else -1.0, ok)
-    }
-    // Streaming entries pay the state store per shuffle partition per
-    // micro-batch: 32 partitions × a handful of batches is pure
-    // bookkeeping at bench scale (r14: q_stream_join spent 7.1 s of
-    // 7.3 s in drain; the r22 A/B read q_stream_neardup 6.4 s at 8
-    // partitions vs 16.5 s at 32). The count now derives from the
-    // session's core count via SparkEntry.streamShufflePartitions
-    // (max(4, cpus/4) — 8 at 32 cores, identical to the former pinned
-    // value, so round-over-round numbers stay comparable; the same
-    // formula applies at every core count the driver runs). Results are
-    // partition-count-invariant (the oracle gate runs these same
-    // queries at the default).
-    val streamingEntries =
-      Set("q_stream_dedup", "q_stream_join", "q_stream_table", "q_stream_cdc",
-        "q_stream_upsert", "q_stream_neardup")
-    val streamParts = SparkEntry.streamShufflePartitions(cpus.toInt).toString
-    def withStreamConf[T](name: String)(body: => T): T =
-      if (!streamingEntries(name)) body
-      else {
-        val prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", streamParts)
-        try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-      }
-    def runAll(): Seq[(String, Double, Boolean)] = {
-      val main = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-        val res = SparkEntry.benchSplits.get(name) match {
-          // write-dominated entries: one execution, reported as the
-          // historical headline name PLUS _fixture/_query sub-metrics,
-          // so the read-path cost stays visible under the write noise
-          case Some(split) =>
-            try {
-              val (fixSec, qSec) = withStreamConf(name)(split.run(spark, sfDir))
-              Seq((name, fixSec + qSec, true),
-                (s"${name}_fixture", fixSec, true),
-                (s"${name}_query", qSec, true))
-            } catch { case e: Throwable =>
-              System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-              Seq((name, -1.0, false))
-            }
-          case None =>
-            Seq(timed(name)(withStreamConf(name)(fn(spark, sfDir).count())))
-        }
-        // reclaim the entry's scratch warehouses OUTSIDE the timed body:
-        // ~300 accumulated fixture warehouses of dirty page cache and
-        // writeback otherwise tax every later entry's I/O (r14 measured
-        // a uniform ~1.2-1.4× inflation across the tail of the run).
-        // Also drop cached/persisted frames: operators that persist
-        // model aggregates (the LM tier) would otherwise serve later
-        // entries — and the second pass — from cache, so per-entry
-        // times would attribute one entry's model fit to another and
-        // the min-of-runs basis would flatter cached entries.
-        SparkEntry.cleanScratchDirs()
-        spark.catalog.clearCache()
-        res
-      }
-      // q_embed_ivf bills k-means + index write to a query named like a
-      // lookup; these sub-metrics keep probe-side regressions visible.
-      val idx = Files.createTempDirectory("graft-ivf-bench").toString
-      val build = timed("q_embed_ivf_build")(SparkEntry.ivfBuild(spark, sfDir, idx))
-      val probe = timed("q_embed_ivf_probe")(
-        SparkEntry.ivfProbeQuery(spark, sfDir, idx).count())
-      // q_stream_table's headline is mostly StreamingQuery lifecycle
-      // fixture; these sub-metrics keep the engine-work (drain) cost
-      // comparable round-over-round without the fixture noise.
-      val (fixSec, drainSec) =
-        try withStreamConf("q_stream_table")(SparkEntry.streamTableSplit(spark, sfDir))
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] q_stream_table split FAILED: ${e.getMessage}")
-          (-1.0, -1.0)
-        }
-      val (sdFixSec, sdDrainSec) =
-        try withStreamConf("q_stream_dedup")(SparkEntry.streamDedupSplit(spark, sfDir))
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] q_stream_dedup split FAILED: ${e.getMessage}")
-          (-1.0, -1.0)
-        }
-      val (sjFixSec, sjDrainSec) =
-        try withStreamConf("q_stream_join")(SparkEntry.streamJoinSplit(spark, sfDir))
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] q_stream_join split FAILED: ${e.getMessage}")
-          (-1.0, -1.0)
-        }
-      main :+ build :+ probe :+
-        ("q_stream_table_fixture", fixSec, fixSec >= 0) :+
-        ("q_stream_table_drain", drainSec, drainSec >= 0) :+
-        ("q_stream_dedup_fixture", sdFixSec, sdFixSec >= 0) :+
-        ("q_stream_dedup_drain", sdDrainSec, sdDrainSec >= 0) :+
-        ("q_stream_join_fixture", sjFixSec, sjFixSec >= 0) :+
-        ("q_stream_join_drain", sjDrainSec, sjDrainSec >= 0)
-    }
-    // SPARK_GRAFT_BENCH_PASSES=1 → one-shot (the sf1 full-suite run,
-    // where a second pass doubles an already-long wall-clock); default
-    // stays two passes for the noise-bounding min-of-runs.
-    val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "2").toInt
-    val results = runAll()
-    val results2 = if (passes > 1) runAll() else results
-    def jmap(rs: Seq[(String, Double, Boolean)]): String =
-      rs.map { case (k, v, _) => s""""$k":$v""" }.mkString("{", ",", "}")
-    // Min-of-two-runs per query: the round-over-round comparison basis —
-    // single samples have shown ±2× scheduler-contention swings on
-    // byte-identical code, and min-of-N discards exactly that noise.
-    val minByName = results.map(r => r._1 -> r).toMap
-    val resultsMin = results2.map { case (k, v2, ok2) =>
-      val (_, v1, ok1) = minByName(k)
-      if (ok1 && ok2) (k, math.min(v1, v2), true)
-      else if (ok1) (k, v1, true) else (k, v2, ok2)
-    }
-    val failed = (results ++ results2).collect { case (k, _, false) => s""""$k"""" }
-      .distinct.mkString("[", ",", "]")
-    // Sub-metrics (_build/_probe/_fixture/_drain/_query) re-slice time
-    // already billed to their parent entry — the headline total counts
-    // TOP-LEVEL queries only, or splitting a query would change the
-    // total on byte-identical engine code.
-    def isSub(name: String): Boolean =
-      name.endsWith("_build") || name.endsWith("_probe") ||
-        name.endsWith("_fixture") || name.endsWith("_drain") ||
-        name.endsWith("_query")
-    def total(rs: Seq[(String, Double, Boolean)]): Double =
-      rs.collect { case (k, v, true) if !isSub(k) => v }.sum
-    val (t1, t2, tMin) = (total(results), total(results2), total(resultsMin))
-    val nTop = results.count(r => !isSub(r._1))
-    val full =
-      s"""{"metric":"total","value":$t1,"unit":"sec","value_run2":$t2,""" +
-        s""""value_min":$tMin,"runs":[$t1,$t2],"queries":${jmap(results)},""" +
-        s""""queries_run2":${jmap(results2)},"queries_min":${jmap(resultsMin)},""" +
-        s""""failed":$failed,"sf":"$sfDir"}"""
-    Files.writeString(Paths.get(outPath), full + "\n")
-    // Compact line LAST on stdout, short enough that the driver's tail
-    // capture always contains its start. It embeds the per-query
-    // min-of-runs map (ms precision) — the round-over-round comparison
-    // basis must live in BENCH_rXX.json itself, not depend on
-    // bench_out.json surviving the round.
-    val minCompact = resultsMin
-      .map { case (k, v, _) => s""""$k":${math.rint(v * 1000) / 1000}""" }
-      .mkString("{", ",", "}")
-    val compact =
-      s"""{"metric":"total","value":$t1,"unit":"sec","value_run2":$t2,""" +
-        s""""value_min":$tMin,"n_queries":$nTop,"n_entries":${results.size},""" +
-        s""""failed":$failed,"queries_min":$minCompact,""" +
-        s""""detail":"$outPath","sf":"$sfDir"}"""
-    spark.stop()
-    println(compact)
-    if ((results ++ results2).exists(!_._3)) sys.exit(1)
   }
 }

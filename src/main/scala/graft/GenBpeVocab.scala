@@ -2,8 +2,6 @@ package graft
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
-
 import graft.functions.BpeTable
 
 /** Trains and emits the SHIPPED BPE merge table
@@ -75,12 +73,7 @@ object GenBpeVocab {
     Seq("Ġ1990", "Ġ2000", "Ġ2010", "Ġ2020", "Ġ2024").foreach(add(_, 1800L))
 
     // -- 2) measured corpus frequencies (distributed count) -------------
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     try {
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       graft.ext.TextAnalysis.bpeWordFrequencies(docs, "text")

@@ -25,14 +25,7 @@ object GenData {
     require(args.nonEmpty, "usage: GenData <outDir> [multiplier]")
     val out = args(0)
     val mult = if (args.length > 1) args(1).toDouble else 10.0
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     try generate(spark, out, mult) finally spark.stop()
   }
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ext.Classify
@@ -32,12 +31,7 @@ object GenQualityModel {
       else "src/main/resources/graft/quality_weights.txt"
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     import spark.implicits._
     try {
       val corpus = spark.read.parquet(s"$sfDir/documents.parquet")

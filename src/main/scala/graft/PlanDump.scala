@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Measurement tool (optimization rounds): dumps the FORMATTED physical
@@ -18,23 +17,15 @@ import org.apache.spark.sql.execution.ExplainMode
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     // flags are not positionals: `PlanDump --time q_x` must not write
     // plans into a directory literally named "--time"
     val positional = args.filterNot(_.startsWith("--")).toSeq
     val outDir = positional.headOption.getOrElse("plans/current")
     val doTime = args.contains("--time")
     val names0 = positional.drop(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.cbo.enabled", "true")
-      .config("spark.sql.cbo.joinReorder.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    SparkEntry.requireKnown(names0, "usage: PlanDump <outDir> [--time] [names...]")
+    val spark = GraftSession.local(cpus)
     Files.createDirectories(Paths.get(outDir))
     val names =
       if (names0.nonEmpty) names0.toSeq else SparkEntry.queries.keys.toSeq.sorted

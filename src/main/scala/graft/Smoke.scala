@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-
 import graft.catalog.GraftCatalog
 import graft.ingest.TelcoDataGen
 import graft.present.{Introspector, PlotDecider, Summarizer}
@@ -17,20 +15,7 @@ import graft.translate.RuleTranslator
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // int64-micros timestamps (Iceberg's own mandate): INT96 is
-      // deprecated and carries no usable footer statistics
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // cost-based optimization: tables carrying COMPUTE STATS plan
-      // joins/broadcasts from row counts + NDV, not file size
-      .config("spark.sql.cbo.enabled", "true")
-      .config("spark.sql.cbo.joinReorder.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(4)
 
     // t1: driver smoke
     val n = SparkEntry.entry(spark).collect()

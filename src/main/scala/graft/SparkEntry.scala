@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{ArrayType, FloatType}
 
 import graft.catalog.GraftCatalog
@@ -66,14 +67,19 @@ object SparkEntry {
     * cannot drift. */
   sealed trait BenchSplit {
     def composed: (SparkSession, String) => DataFrame
-    /** (fixtureSec, querySec) — query timed over a full action. */
+    /** Suffixes of the two sub-metrics `run` times, in `run`'s order. */
+    def parts: (String, String)
+    /** One execution ending in a full action, timed as its two parts;
+      * they sum to the entry's whole time. */
     def run(s: SparkSession, dir: String): (Double, Double)
   }
 
-  private def benchSplit[C](fix: (SparkSession, String) => C)(
+  private def benchSplit[C](fix: (SparkSession, String) => C,
+      partNames: (String, String) = ("fixture", "query"))(
       q: C => DataFrame): BenchSplit = new BenchSplit {
     def composed: (SparkSession, String) => DataFrame =
       (s, dir) => q(fix(s, dir))
+    def parts: (String, String) = partNames
     def run(s: SparkSession, dir: String): (Double, Double) = {
       val t0 = System.nanoTime()
       val ctx = fix(s, dir)
@@ -83,6 +89,32 @@ object SparkEntry {
       ((t1 - t0) / 1e9, (t2 - t1) / 1e9)
     }
   }
+
+  /** A streaming entry split at `processAllAvailable`: the body drains
+    * its queries through the function it is handed. `_drain` is the time
+    * inside `processAllAvailable` (micro-batch planning and the stateful
+    * engine work, the part that scales with data); `_fixture` is the
+    * rest (table builds, appends, query start/stop, the sink read).
+    * Streaming-query lifecycle dominates these entries' headlines, so
+    * the drain keeps the engine-work cost visible. */
+  private def drainSplit(
+      body: (SparkSession, String, StreamingQuery => Unit) => DataFrame): BenchSplit =
+    new BenchSplit {
+      def composed: (SparkSession, String) => DataFrame =
+        (s, dir) => body(s, dir, _.processAllAvailable())
+      def parts: (String, String) = ("fixture", "drain")
+      def run(s: SparkSession, dir: String): (Double, Double) = {
+        var drainNs = 0L
+        val t0 = System.nanoTime()
+        body(s, dir, { q =>
+          val d0 = System.nanoTime()
+          q.processAllAvailable()
+          drainNs += System.nanoTime() - d0
+        }).count()
+        val totalNs = System.nanoTime() - t0
+        ((totalNs - drainNs) / 1e9, drainNs / 1e9)
+      }
+    }
 
   /** The CDC oracle fixture, in both serving modes: `storedFeed=false`
     * recovers each COW commit's changes by diffing the files it touched;
@@ -116,10 +148,11 @@ object SparkEntry {
         .orderBy(col("commit_id"), col("o_orderkey"), col("change_type"))
     }
 
-  /** The write-dominated entries, split: `Bench` reports each as
-    * `<name>` (fixture+query, the historical headline shape) plus
-    * `<name>_fixture` / `<name>_query` sub-metrics. Doc comments for
-    * each live at the `queries` entry. */
+  /** The split entries: `Bench` reports each as `<name>` (the whole
+    * execution, the historical headline shape) plus one sub-metric per
+    * part (`_fixture`/`_query` for the write-dominated entries,
+    * `_fixture`/`_drain` for streams, `_build`/`_probe` for the IVF
+    * index). Doc comments for each live at the `queries` entry. */
   lazy val benchSplits: Map[String, BenchSplit] = Map(
     "q_partition_evolve" -> benchSplit { (s, dir) =>
       val cat = tempCatalog(s)
@@ -1126,7 +1159,101 @@ object SparkEntry {
       val v1 = eng.sql("SELECT COUNT(*) AS cnt, MIN(o_orderkey) AS min_key, " +
         "MAX(o_orderkey) AS max_key FROM orders_mg FOR SYSTEM_VERSION AS OF 1")
       stamp("cur", cur).unionByName(stamp("v1", v1)).orderBy(col("phase"))
-    })
+    },
+
+    // build = k-means + the partitioned index write; probe = the
+    // nprobe-pruned read, so a probe-side regression cannot hide behind
+    // index construction.
+    "q_embed_ivf" -> benchSplit({ (s, dir) =>
+      val idx = scratchDir("graft-ivf").toString
+      ivfBuild(s, dir, idx)
+      (s, dir, idx)
+    }, partNames = ("build", "probe")) { case (s, dir, idx) =>
+      rankedIds(ivfProbeQuery(s, dir, idx))
+    },
+
+    "q_stream_table" -> drainSplit { (s, dir, drain) =>
+      val cat = tempCatalog(s)
+      val orders = t(s, dir, "orders")
+      cat.createTable("orders_stream", orders.schema)
+      cat.append("orders_stream", orders.filter(col("o_orderkey") % 2 === 0), 1000L)
+      val sink = "stream_sink_" + java.util.UUID.randomUUID().toString.takeWhile(_ != '-')
+      val q = s.readStream.format("graft-table")
+        .option("warehouse", cat.warehouse.toString)
+        .option("table", "orders_stream").load()
+        .writeStream.format("memory").queryName(sink).outputMode("append").start()
+      try {
+        drain(q)
+        cat.append("orders_stream", orders.filter(col("o_orderkey") % 2 === 1), 2000L)
+        drain(q)
+      } finally q.stop()
+      s.table(sink)
+        .groupBy(col("o_orderstatus"))
+        .agg(count(lit(1)).as("cnt"), round(sum(col("o_totalprice")), 2).as("revenue"))
+        .orderBy(col("o_orderstatus"))
+    },
+
+    "q_stream_join" -> drainSplit { (s, dir, drain) =>
+      val cat = tempCatalog(s)
+      // the nanos-aware reader normalizes the testdata's nanos form; the
+      // table stores ts as NTZ (int64 in every parquet output mode —
+      // an LTZ column under an INT96 writer would hand the stream
+      // source INT96 pages) and the stream casts back to the zoned
+      // type watermarks require, the same seam q_stream_dedup uses
+      val ev = events(s, dir)
+        .withColumn("ts", col("ts").cast("timestamp_ntz"))
+      cat.createTable("events_sj", ev.schema)
+      cat.append("events_sj", ev, 1000L)
+      def side(tpe: String, p: String): DataFrame =
+        s.readStream.format("graft-table")
+          .option("warehouse", cat.warehouse.toString)
+          .option("table", "events_sj").load()
+          .filter(col("event_type") === tpe)
+          .select(col("user_id").as(p + "_user"),
+            col("ts").cast("timestamp").as(p + "_ts"),
+            col("value").as(p + "_value"))
+      val joined = graft.streaming.EventStreams.joinStreams(
+        side("click", "c"), side("purchase", "p"),
+        "c_user", "p_user", "c_ts", "p_ts",
+        lag = "1 hour", watermarkDelay = "720 hours")
+      val sink = "stream_join_" + java.util.UUID.randomUUID().toString.takeWhile(_ != '-')
+      val q = joined.writeStream.format("memory").queryName(sink)
+        .outputMode("append").start()
+      try drain(q) finally q.stop()
+      s.table(sink).agg(
+        count(lit(1)).as("n_pairs"),
+        countDistinct(col("c_user")).as("n_users"),
+        round(sum(col("p_value")), 2).as("purchase_total"))
+    },
+
+    "q_stream_dedup" -> drainSplit { (s, dir, drain) =>
+      val cat = tempCatalog(s)
+      val orders = t(s, dir, "orders")
+      cat.createTable("orders_sd", orders.schema)
+      cat.append("orders_sd", orders.filter(col("o_orderkey") % 2 === 0), 1000L)
+      val sink = "stream_dedup_" + java.util.UUID.randomUUID().toString.takeWhile(_ != '-')
+      val src = s.readStream.format("graft-table")
+        .option("warehouse", cat.warehouse.toString)
+        .option("table", "orders_sd").load()
+        .select(col("o_orderkey").cast("string").as("okey"),
+          col("o_orderstatus"), col("o_totalprice"),
+          // the parquet dates surface as TIMESTAMP_NTZ; watermarks
+          // require the zoned type
+          col("o_orderdate").cast("timestamp").as("ts"))
+      val q = graft.streaming.EventStreams
+        .dedupStream(src, "okey", watermarkDelay = "87600 hours")
+        .writeStream.format("memory").queryName(sink).outputMode("append").start()
+      try {
+        drain(q)
+        cat.append("orders_sd", orders, 2000L) // evens re-delivered + odds
+        drain(q)
+      } finally q.stop()
+      s.table(sink)
+        .groupBy(col("o_orderstatus"))
+        .agg(count(lit(1)).as("cnt"), round(sum(col("o_totalprice")), 2).as("revenue"))
+        .orderBy(col("o_orderstatus"))
+    }
+  )
 
   /** events.parquet has shipped with ts as either TIMESTAMP(NANOS) —
     * which Spark's parquet reader rejects unless nanos are read as long —
@@ -1683,26 +1810,7 @@ object SparkEntry {
     // the incremental append scan (delta files only, offsets = snapshot
     // ids); the streamed rows aggregate to exactly the source table's
     // aggregate, proving exactly-once delivery end-to-end.
-    "q_stream_table" -> ((s, dir) => {
-      val cat = tempCatalog(s)
-      val orders = t(s, dir, "orders")
-      cat.createTable("orders_stream", orders.schema)
-      cat.append("orders_stream", orders.filter(col("o_orderkey") % 2 === 0), 1000L)
-      val sink = "stream_sink_" + java.util.UUID.randomUUID().toString.takeWhile(_ != '-')
-      val q = s.readStream.format("graft-table")
-        .option("warehouse", cat.warehouse.toString)
-        .option("table", "orders_stream").load()
-        .writeStream.format("memory").queryName(sink).outputMode("append").start()
-      try {
-        q.processAllAvailable()
-        cat.append("orders_stream", orders.filter(col("o_orderkey") % 2 === 1), 2000L)
-        q.processAllAvailable()
-      } finally q.stop()
-      s.table(sink)
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("cnt"), round(sum(col("o_totalprice")), 2).as("revenue"))
-        .orderBy(col("o_orderstatus"))
-    }),
+    "q_stream_table" -> benchSplits("q_stream_table").composed,
 
     // Streaming CDC through the DSv2 source (readChangeFeed=true): the
     // stream delivers row-level insert/delete changes — the append
@@ -1827,38 +1935,7 @@ object SparkEntry {
     // unbounded forms by construction). The watermark delay spans the
     // fixture's whole time range, so no on-time row is dropped and the
     // streamed join must equal the static join the oracle computes.
-    "q_stream_join" -> ((s, dir) => {
-      val cat = tempCatalog(s)
-      // the nanos-aware reader normalizes the driver's nanos form; the
-      // table stores ts as NTZ (int64 in every parquet output mode —
-      // an LTZ column under an INT96 writer would hand the stream
-      // source INT96 pages) and the stream casts back to the zoned
-      // type watermarks require, the same seam q_stream_dedup uses
-      val ev = events(s, dir)
-        .withColumn("ts", col("ts").cast("timestamp_ntz"))
-      cat.createTable("events_sj", ev.schema)
-      cat.append("events_sj", ev, 1000L)
-      def side(tpe: String, p: String): DataFrame =
-        s.readStream.format("graft-table")
-          .option("warehouse", cat.warehouse.toString)
-          .option("table", "events_sj").load()
-          .filter(col("event_type") === tpe)
-          .select(col("user_id").as(p + "_user"),
-            col("ts").cast("timestamp").as(p + "_ts"),
-            col("value").as(p + "_value"))
-      val joined = graft.streaming.EventStreams.joinStreams(
-        side("click", "c"), side("purchase", "p"),
-        "c_user", "p_user", "c_ts", "p_ts",
-        lag = "1 hour", watermarkDelay = "720 hours")
-      val sink = "stream_join_" + java.util.UUID.randomUUID().toString.takeWhile(_ != '-')
-      val q = joined.writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table(sink).agg(
-        count(lit(1)).as("n_pairs"),
-        countDistinct(col("c_user")).as("n_users"),
-        round(sum(col("p_value")), 2).as("purchase_total"))
-    }),
+    "q_stream_join" -> benchSplits("q_stream_join").composed,
 
     // §2.10 streaming EXACT dedup, oracle-gated end-to-end: the second
     // micro-batch re-delivers every even-keyed order (duplicate rows
@@ -1867,33 +1944,7 @@ object SparkEntry {
     // exactly. The watermark delay exceeds the data's full date span,
     // so no state evicts mid-run and the dedup is exact (the documented
     // contract; production trades delay for bounded state).
-    "q_stream_dedup" -> ((s, dir) => {
-      val cat = tempCatalog(s)
-      val orders = t(s, dir, "orders")
-      cat.createTable("orders_sd", orders.schema)
-      cat.append("orders_sd", orders.filter(col("o_orderkey") % 2 === 0), 1000L)
-      val sink = "stream_dedup_" + java.util.UUID.randomUUID().toString.takeWhile(_ != '-')
-      val src = s.readStream.format("graft-table")
-        .option("warehouse", cat.warehouse.toString)
-        .option("table", "orders_sd").load()
-        .select(col("o_orderkey").cast("string").as("okey"),
-          col("o_orderstatus"), col("o_totalprice"),
-          // the parquet dates surface as TIMESTAMP_NTZ; watermarks
-          // require the zoned type
-          col("o_orderdate").cast("timestamp").as("ts"))
-      val q = graft.streaming.EventStreams
-        .dedupStream(src, "okey", watermarkDelay = "87600 hours")
-        .writeStream.format("memory").queryName(sink).outputMode("append").start()
-      try {
-        q.processAllAvailable()
-        cat.append("orders_sd", orders, 2000L) // evens re-delivered + odds
-        q.processAllAvailable()
-      } finally q.stop()
-      s.table(sink)
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("cnt"), round(sum(col("o_totalprice")), 2).as("revenue"))
-        .orderBy(col("o_orderstatus"))
-    }),
+    "q_stream_dedup" -> benchSplits("q_stream_dedup").composed,
 
     // S1: latest-snapshot read = all appends.
     "q_tt_latest" -> ((s, dir) => {
@@ -3110,11 +3161,7 @@ object SparkEntry {
     // analogue of partition pruning. Same planted-neighbor oracle as
     // q_embed_ann_lsh: the nprobe-pruned probe must recover the known
     // exact top-10.
-    "q_embed_ivf" -> ((s, dir) => {
-      val idx = scratchDir("graft-ivf").toString
-      ivfBuild(s, dir, idx)
-      rankedIds(ivfProbeQuery(s, dir, idx))
-    }),
+    "q_embed_ivf" -> benchSplits("q_embed_ivf").composed,
 
     // QUANTIZED IVF (FAISS IVF-SQ8 analogue): the index stores int8
     // codes + per-vector scales (4x smaller probe I/O); the probe
@@ -6323,6 +6370,21 @@ object SparkEntry {
     * read 1.4-1.6x on q_stream_table/cdc/join with no stateful win. */
   def streamShufflePartitions(cpus: Int): Int = math.max(4, cpus / 4)
 
+  /** The stateful streaming entries that run at
+    * [[streamShufflePartitions]] instead of the session's count. */
+  val streamingEntries: Set[String] =
+    Set("q_stream_dedup", "q_stream_join", "q_stream_table", "q_stream_cdc",
+      "q_stream_upsert", "q_stream_neardup")
+
+  /** Fails with `usage` and every name in `names` that [[queries]] does
+    * not declare. Harnesses call it before their session starts, so a
+    * typo is a usage error instead of a FAILED entry mid-run. */
+  def requireKnown(names: Iterable[String], usage: String): Unit = {
+    val known = queries.keySet
+    val unknown = names.filterNot(known).toSeq.distinct
+    require(unknown.isEmpty, s"unknown entries ${unknown.mkString(", ")}; $usage")
+  }
+
   /** Delete every scratch dir registered by completed query fixtures.
     * Call only BETWEEN entries: frames over a deleted warehouse cannot
     * be re-evaluated. */
@@ -6406,13 +6468,11 @@ object SparkEntry {
         Window.orderBy(col("score").desc, col("vec_id"))).as("rank"),
       col("vec_id")).orderBy(col("rank"))
 
-  /** IVF index construction alone (k-means + partitioned index write).
-    * Split out of `q_embed_ivf` so the bench can bill build and probe
-    * separately — a probe-side regression must not hide behind index
-    * construction cost. The index includes the planted oracle neighbors
-    * (10 rows — negligible against the corpus).
+  /** IVF index construction (k-means + partitioned index write), the
+    * build half of `q_embed_ivf`. The index includes the planted oracle
+    * neighbors (10 rows — negligible against the corpus).
     */
-  def ivfBuild(s: SparkSession, dir: String, idxDir: String): Unit = {
+  private def ivfBuild(s: SparkSession, dir: String, idxDir: String): Unit = {
     val e = emb(s, dir)
     Similarity.ivfWriteIndex(embeddingsWithPlanted(s, e, firstVector(e)),
       "vec_id", "embedding", idxDir, nlist = 16, iters = 2)
@@ -6421,116 +6481,9 @@ object SparkEntry {
   /** IVF probe alone against an index previously written by [[ivfBuild]]:
     * reads only the `nprobe` nearest lists' directories.
     */
-  def ivfProbeQuery(s: SparkSession, dir: String, idxDir: String): DataFrame = {
+  private def ivfProbeQuery(s: SparkSession, dir: String, idxDir: String): DataFrame = {
     val q = firstVector(emb(s, dir))
     Similarity.ivfProbe(s, idxDir, "vec_id", "embedding", q, k = 10, nprobe = 6)
       .withColumn("score", round(col("score"), 4))
-  }
-
-  /** Bench split for `q_stream_table`, whose headline is dominated by
-    * StreamingQuery lifecycle fixture (session/checkpoint start +
-    * teardown), not engine work: returns `(fixtureSec, drainSec)` where
-    * DRAIN is the time inside `processAllAvailable` — micro-batch
-    * planning (log diff) + per-file vectorized reads, the part that
-    * scales with data — and FIXTURE is everything else (table build,
-    * appends, query start/stop). Same workload as `q_stream_table`.
-    */
-  def streamTableSplit(s: SparkSession, dir: String): (Double, Double) = {
-    val t0 = System.nanoTime()
-    var drainNs = 0L
-    def drained(body: => Unit): Unit = {
-      val d0 = System.nanoTime(); body; drainNs += System.nanoTime() - d0
-    }
-    val cat = tempCatalog(s)
-    val orders = t(s, dir, "orders")
-    cat.createTable("orders_stream_b", orders.schema)
-    cat.append("orders_stream_b", orders.filter(col("o_orderkey") % 2 === 0), 1000L)
-    val sink = "stream_bench_" + java.util.UUID.randomUUID().toString.takeWhile(_ != '-')
-    val q = s.readStream.format("graft-table")
-      .option("warehouse", cat.warehouse.toString)
-      .option("table", "orders_stream_b").load()
-      .writeStream.format("memory").queryName(sink).outputMode("append").start()
-    try {
-      drained(q.processAllAvailable())
-      cat.append("orders_stream_b", orders.filter(col("o_orderkey") % 2 === 1), 2000L)
-      drained(q.processAllAvailable())
-    } finally q.stop()
-    s.table(sink).count()
-    val totalNs = System.nanoTime() - t0
-    ((totalNs - drainNs) / 1e9, drainNs / 1e9)
-  }
-
-  /** q_stream_join's fixture/drain seam, same accounting as
-    * [[streamTableSplit]]: drain = `processAllAvailable` over the
-    * watermarked stream-stream join (two-sided state buffering + the
-    * range-bounded matching — the engine work), fixture = table build +
-    * stream lifecycle. */
-  def streamJoinSplit(s: SparkSession, dir: String): (Double, Double) = {
-    val t0 = System.nanoTime()
-    var drainNs = 0L
-    def drained(body: => Unit): Unit = {
-      val d0 = System.nanoTime(); body; drainNs += System.nanoTime() - d0
-    }
-    val cat = tempCatalog(s)
-    val ev = events(s, dir)
-      .withColumn("ts", col("ts").cast("timestamp_ntz"))
-    cat.createTable("events_sjb", ev.schema)
-    cat.append("events_sjb", ev, 1000L)
-    def side(tpe: String, p: String): DataFrame =
-      s.readStream.format("graft-table")
-        .option("warehouse", cat.warehouse.toString)
-        .option("table", "events_sjb").load()
-        .filter(col("event_type") === tpe)
-        .select(col("user_id").as(p + "_user"),
-          col("ts").cast("timestamp").as(p + "_ts"),
-          col("value").as(p + "_value"))
-    val sink = "stream_join_b_" +
-      java.util.UUID.randomUUID().toString.takeWhile(_ != '-')
-    val q = graft.streaming.EventStreams.joinStreams(
-      side("click", "c"), side("purchase", "p"),
-      "c_user", "p_user", "c_ts", "p_ts",
-      lag = "1 hour", watermarkDelay = "720 hours")
-      .writeStream.format("memory").queryName(sink)
-      .outputMode("append").start()
-    try drained(q.processAllAvailable()) finally q.stop()
-    s.table(sink).count()
-    val totalNs = System.nanoTime() - t0
-    ((totalNs - drainNs) / 1e9, drainNs / 1e9)
-  }
-
-  /** q_stream_dedup's fixture/drain seam, same accounting as
-    * [[streamTableSplit]]: drain = `processAllAvailable` time (delta
-    * planning + watermarked dedup state — the engine work that must
-    * stay flat round-over-round), fixture = table builds + stream
-    * lifecycle overhead. */
-  def streamDedupSplit(s: SparkSession, dir: String): (Double, Double) = {
-    val t0 = System.nanoTime()
-    var drainNs = 0L
-    def drained(body: => Unit): Unit = {
-      val d0 = System.nanoTime(); body; drainNs += System.nanoTime() - d0
-    }
-    val cat = tempCatalog(s)
-    val orders = t(s, dir, "orders")
-    cat.createTable("orders_sdb", orders.schema)
-    cat.append("orders_sdb", orders.filter(col("o_orderkey") % 2 === 0), 1000L)
-    val sink = "stream_dedup_b_" +
-      java.util.UUID.randomUUID().toString.takeWhile(_ != '-')
-    val src = s.readStream.format("graft-table")
-      .option("warehouse", cat.warehouse.toString)
-      .option("table", "orders_sdb").load()
-      .select(col("o_orderkey").cast("string").as("okey"),
-        col("o_orderstatus"), col("o_totalprice"),
-        col("o_orderdate").cast("timestamp").as("ts"))
-    val q = graft.streaming.EventStreams
-      .dedupStream(src, "okey", watermarkDelay = "87600 hours")
-      .writeStream.format("memory").queryName(sink).outputMode("append").start()
-    try {
-      drained(q.processAllAvailable())
-      cat.append("orders_sdb", orders, 2000L)
-      drained(q.processAllAvailable())
-    } finally q.stop()
-    s.table(sink).count()
-    val totalNs = System.nanoTime() - t0
-    ((totalNs - drainNs) / 1e9, drainNs / 1e9)
   }
 }

@@ -1,34 +1,35 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare.
+  *
+  * Usage: `runMain graft.Verify <sfDir> <outDir>`; `GRAFT_VERIFY_ONLY`
+  * (comma-separated entry names) limits the dump. */
 object Verify {
+  private val Usage = "usage: Verify <sfDir> <outDir> (GRAFT_VERIFY_ONLY=q_a,q_b limits the dump)"
+
   def main(args: Array[String]): Unit = {
+    require(args.length == 2, Usage)
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // INT96 here ONLY: the driver's DuckDB compare reads INT96 dumps as
-      // naive timestamps, matching the oracle's own naive values; micros
-      // dumps read as TIMESTAMP WITH TIME ZONE and hash-mismatch. The
-      // engine itself writes int64 micros (see TableStore/Bench/Smoke) —
-      // this governs just the correctness-dump files.
-      .config("spark.sql.parquet.outputTimestampType", "INT96")
-      // cost-based optimization: tables carrying COMPUTE STATS plan
-      // joins/broadcasts from row counts + NDV, not file size
-      .config("spark.sql.cbo.enabled", "true")
-      .config("spark.sql.cbo.joinReorder.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
     // local-iteration filter (comma-separated names); absent for the
     // driver's full pass
+    // Checked before the session starts: a typo would otherwise dump
+    // nothing, and a dump-vs-dump equivalence check would pass with
+    // nothing compared.
     val only = sys.env.get("GRAFT_VERIFY_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    only.foreach { names =>
+      require(names.nonEmpty, s"GRAFT_VERIFY_ONLY names no entry; $Usage")
+      SparkEntry.requireKnown(names, Usage)
+    }
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+    // INT96 here ONLY: the DuckDB oracle compare reads INT96 dumps as
+    // naive timestamps, matching the oracle's own naive values; micros
+    // dumps read as TIMESTAMP WITH TIME ZONE and hash-mismatch. The
+    // engine itself writes int64 micros (see GraftSession) — this
+    // governs just the correctness-dump files.
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
+    new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>

@@ -2199,10 +2199,6 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     * exchange reuse dedupes). Multiset semantics identical: group-by
     * equality is exceptAll's own NULL-safe, float-normalized equality,
     * and ReplicateRows is the generator exceptAll itself plans. */
-  /** Plan-evidence seam for [[changeDiff]] (measurement tooling only). */
-  private[graft] def changeDiffFrame(removed: DataFrame,
-      added: DataFrame): DataFrame = changeDiff(removed, added)
-
   private def changeDiff(removed: DataFrame, added: DataFrame): DataFrame = {
     import org.apache.spark.sql.GraftSqlShim
     val cols = removed.columns.toSeq

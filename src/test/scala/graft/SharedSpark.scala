@@ -4,25 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** One session for the whole test JVM (Test / fork := true runs every
   * suite in a single forked JVM, so suites share the warmed-up session
-  * instead of paying ~5 s of startup each).
+  * instead of paying ~5 s of startup each). Built by the same factory
+  * as the mains, so tests run under the engine's own confs.
   */
 object SharedSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // int64-micros timestamps (Iceberg's own mandate): INT96 is
-      // deprecated and carries no usable footer statistics
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // cost-based optimization: tables carrying COMPUTE STATS plan
-      // joins/broadcasts from row counts + NDV, not file size
-      .config("spark.sql.cbo.enabled", "true")
-      .config("spark.sql.cbo.joinReorder.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.local(4)
 }
