@@ -14,10 +14,12 @@ if [ -n "$builders" ]; then
   echo "[precommit] SparkSession.builder() outside GraftSession.scala — use GraftSession.local"
   exit 1
 fi
-echo "[precommit] sbt compile (Test/compile included)…"
-sbt -batch 'Test/compile' >/tmp/precommit.log 2>&1 || {
+# QueryRegistrySpec builds no session: a repeated query name, or a
+# query that lost its oracle, fails here in the same sbt start-up.
+echo "[precommit] sbt Test/compile + QueryRegistrySpec…"
+sbt -batch 'Test/compile' 'testOnly graft.QueryRegistrySpec' >/tmp/precommit.log 2>&1 || {
   tail -30 /tmp/precommit.log
-  echo "[precommit] COMPILE FAILED — commit blocked"
+  echo "[precommit] COMPILE OR QUERY REGISTRY FAILED — commit blocked"
   exit 1
 }
 echo "[precommit] OK"

@@ -17,8 +17,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Usage: `runMain graft.GenData <outDir> [multiplier-vs-sf0.1]`.
   * `events` is generated as native TIMESTAMP_MICROS (the driver's copy
   * is TIMESTAMP(NANOS), which Spark cannot produce — the
-  * `SparkEntry.events` reader normalizes both forms), so the streaming
-  * operators spot-bench at sf1 too.
+  * `graft.queries.Fixtures.events` reader normalizes both forms), so
+  * the streaming operators spot-bench at sf1 too.
   */
 object GenData {
   def main(args: Array[String]): Unit = {

@@ -1,1278 +1,29 @@
 package graft
 
-import java.nio.file.Files
-
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.{ArrayType, FloatType}
 
-import graft.catalog.GraftCatalog
-import graft.ext.{Boilerplate, Dedup, Multimodal, Similarity, Splits, TextAnalysis}
-import graft.functions.GraftFunctions
-import graft.ingest.Ingest
-import graft.sql.Engine
+import graft.queries._
+import graft.queries.Fixtures.t
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
-  * Each entry re-expresses an operator from SURVEY.md §2 (reference:
+  * Each query re-expresses an operator from SURVEY.md §2 (reference:
   * dennislee22/Local-LLM-Iceberg-CDW) or a north-star pipeline operator
-  * over the driver's TPC-H-ish testdata. Queries with a DuckDB-expressible
-  * oracle appear in [[oracleSql]] with IDENTICAL column names/ordering;
-  * sketch/LSH operators (not SQL-expressible) get the rows-only check.
+  * over the driver's TPC-H-ish testdata. Each is one [[QuerySpec]] in a
+  * tier file under `graft/queries/`: its comment, body or bench split,
+  * and DuckDB oracle SQL in one declaration. The name-keyed maps below
+  * are all derived from that one list.
   */
 object SparkEntry {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
-  /** embeddings.parquet with the vector column pinned to array<float> —
-    * every vector expression expects float elements, and a regenerated
-    * testdata drop could plausibly ship doubles (the events table's
-    * timestamp type already drifted once). */
-  private def emb(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    if (e.schema("embedding").dataType == ArrayType(FloatType))
-      e
-    else e.withColumn("embedding", col("embedding").cast("array<float>"))
-  }
-
-  /** Shared constants for the search/quality queries so the Spark entry
-    * and its generated oracle SQL (Search.bm25OracleSql / lmOracleSql)
-    * can only be parameterized together. */
-  private val bm25Terms = Seq("vector", "spark", "merge")
-  private val lmVocabCap = 1000
-
-  /** Planted rows for q_quality_classifier — one prose row the shipped
-    * classifier must keep and three garbage-family rows it must reject
-    * (negative ids keep them clear of real doc_ids). The ORACLE builds
-    * its VALUES from these same literals, so query and oracle cannot
-    * drift. No apostrophes: the strings embed into single-quoted SQL. */
-  private val QualityPlant: Seq[(Long, String)] = Seq(
-    -4L -> "The data is in the table and the system can read it well.",
-    -3L -> "zqx zqx zqx zqx zqx zqx zqx zqx zqx zqx zqx zqx zqx zqx",
-    -2L -> "!!! @@@ ### $$$ %%% ^^^ &&& *** ((( ))) 12345 67890 []{}",
-    -1L -> "bcdfg hjklm npqrs tvwxz bcdfg hjklm npqrs tvwxz bcdfg")
-
-  private def qualityPlantValuesSql: String =
-    QualityPlant.map { case (id, text) => s"($id, '$text')" }
-      .mkString("VALUES ", ", ", "")
-
-  /** A write-dominated benchmark entry split at its fixture/query seam,
-    * so `Bench` can time table-building and the read path separately
-    * (the read-path number is what must stay flat round-over-round; the
-    * fixture is a write benchmark in disguise). `queries` composes the
-    * SAME two functions, so the correctness surface and the bench split
-    * cannot drift. */
-  sealed trait BenchSplit {
-    def composed: (SparkSession, String) => DataFrame
-    /** Suffixes of the two sub-metrics `run` times, in `run`'s order. */
-    def parts: (String, String)
-    /** One execution ending in a full action, timed as its two parts;
-      * they sum to the entry's whole time. */
-    def run(s: SparkSession, dir: String): (Double, Double)
-  }
-
-  private def benchSplit[C](fix: (SparkSession, String) => C,
-      partNames: (String, String) = ("fixture", "query"))(
-      q: C => DataFrame): BenchSplit = new BenchSplit {
-    def composed: (SparkSession, String) => DataFrame =
-      (s, dir) => q(fix(s, dir))
-    def parts: (String, String) = partNames
-    def run(s: SparkSession, dir: String): (Double, Double) = {
-      val t0 = System.nanoTime()
-      val ctx = fix(s, dir)
-      val t1 = System.nanoTime()
-      q(ctx).count()
-      val t2 = System.nanoTime()
-      ((t1 - t0) / 1e9, (t2 - t1) / 1e9)
-    }
-  }
-
-  /** A streaming entry split at `processAllAvailable`: the body drains
-    * its queries through the function it is handed. `_drain` is the time
-    * inside `processAllAvailable` (micro-batch planning and the stateful
-    * engine work, the part that scales with data); `_fixture` is the
-    * rest (table builds, appends, query start/stop, the sink read).
-    * Streaming-query lifecycle dominates these entries' headlines, so
-    * the drain keeps the engine-work cost visible. */
-  private def drainSplit(
-      body: (SparkSession, String, StreamingQuery => Unit) => DataFrame): BenchSplit =
-    new BenchSplit {
-      def composed: (SparkSession, String) => DataFrame =
-        (s, dir) => body(s, dir, _.processAllAvailable())
-      def parts: (String, String) = ("fixture", "drain")
-      def run(s: SparkSession, dir: String): (Double, Double) = {
-        var drainNs = 0L
-        val t0 = System.nanoTime()
-        body(s, dir, { q =>
-          val d0 = System.nanoTime()
-          q.processAllAvailable()
-          drainNs += System.nanoTime() - d0
-        }).count()
-        val totalNs = System.nanoTime() - t0
-        ((totalNs - drainNs) / 1e9, drainNs / 1e9)
-      }
-    }
-
-  /** The CDC oracle fixture, in both serving modes: `storedFeed=false`
-    * recovers each COW commit's changes by diffing the files it touched;
-    * `storedFeed=true` ENABLEs the change feed first, so the commits
-    * materialize their diffs as change files and the scan reads those.
-    * Identical oracle either way — the two paths must be value-equal. */
-  private def cdcChangesSplit(storedFeed: Boolean): BenchSplit =
-    benchSplit { (s, dir) =>
-      val cat = tempCatalog(s)
-      val eng = new Engine(cat)
-      val orders = t(s, dir, "orders")
-      cat.createTable("cdc_src", orders.schema)
-      cat.append("cdc_src", orders, 1000L)
-      eng.sql("CREATE TABLE cdc_t STORED AS ICEBERG AS " +
-        "SELECT o_orderkey, o_custkey, o_totalprice FROM cdc_src " +
-        "WHERE o_orderkey % 3 = 0")                                // snap 1
-      if (storedFeed) eng.sql("ALTER TABLE cdc_t ENABLE CHANGE FEED")
-      eng.sql("INSERT INTO cdc_t SELECT o_orderkey, o_custkey, " +
-        "o_totalprice FROM cdc_src WHERE o_orderkey % 3 = 1")      // snap 2
-      eng.sql("UPDATE cdc_t SET o_totalprice = o_totalprice + 1 " +
-        "WHERE o_orderkey % 7 = 0")                                // snap 3
-      eng.sql("DELETE FROM cdc_t WHERE o_orderkey % 5 = 0")        // snap 4
-      eng.sql("OPTIMIZE cdc_t")                                    // snap 5
-      eng
-    } { eng =>
-      eng.sql("CALL table_changes('cdc_t')")
-        .select(col("o_orderkey"),
-          round(col("o_totalprice"), 2).as("price"),
-          col("_change_type").as("change_type"),
-          col("_commit_snapshot_id").as("commit_id"))
-        .orderBy(col("commit_id"), col("o_orderkey"), col("change_type"))
-    }
-
-  /** The split entries: `Bench` reports each as `<name>` (the whole
-    * execution, the historical headline shape) plus one sub-metric per
-    * part (`_fixture`/`_query` for the write-dominated entries,
-    * `_fixture`/`_drain` for streams, `_build`/`_probe` for the IVF
-    * index). Doc comments for each live at the `queries` entry. */
-  lazy val benchSplits: Map[String, BenchSplit] = Map(
-    "q_partition_evolve" -> benchSplit { (s, dir) =>
-      val cat = tempCatalog(s)
-      val orders = t(s, dir, "orders")
-      val cut = lit(ts("2000-01-01 00:00:00"))
-      cat.createTable("orders_evo", orders.schema,
-        Some(graft.store.PartitionSpec("o_orderdate", "month")))
-      cat.append("orders_evo", orders.filter(col("o_orderdate") < cut)
-        .repartition(date_format(col("o_orderdate"), "yyyy-MM")), 1000L)
-      cat.setPartitionSpec("orders_evo",
-        graft.store.PartitionSpec("o_orderdate", "year"))
-      cat.append("orders_evo", orders.filter(col("o_orderdate") >= cut)
-        .repartition(date_format(col("o_orderdate"), "yyyy")), 2000L)
-      cat
-    } { cat =>
-      val pred = col("o_orderdate") >= lit(ts("1999-11-01 00:00:00")) &&
-        col("o_orderdate") < lit(ts("2000-03-01 00:00:00"))
-      cat.tableWhere("orders_evo", pred)
-        .groupBy(year(col("o_orderdate")).cast("int").as("yr"),
-          month(col("o_orderdate")).cast("int").as("mo"))
-        .agg(count(lit(1)).as("cnt"),
-          round(sum(col("o_totalprice")), 2).as("revenue"))
-        .orderBy(col("yr"), col("mo"))
-    },
-
-    // §2.10 + equality deletes composed: STREAMING UPSERT SINK (the
-    // Flink-to-Iceberg-v2 shape). A CDC stream off the source table
-    // replicates into a mirror via one equality-apply commit per
-    // micro-batch. The first sink session delivers ONLY the initial
-    // load; then FIVE commits land while the sink is down (two UPDATEs
-    // + a DELETE + two more UPDATEs + a DELETE across overlapping
-    // keys), so the restarted stream replays them all in ONE
-    // micro-batch and netLatestByKey must collapse each key to its
-    // last writer (ties inside an UPDATE commit — its delete+insert
-    // pair shares a snapshot id — resolve post-image-over-delete).
-    // Zero reads of the mirror throughout. sink_proof pins: every
-    // mirror file ever written survives by reference (nothing
-    // rewritten) and the mirror took exactly one commit per
-    // micro-batch — TWO total, so the five-commit replay provably
-    // netted. (Live per-batch update/delete cycles are unit-covered by
-    // EventStreamsSpec/CdcStreamSpec — the bench fixture pays for ONE
-    // stream bring-up, not three micro-batch cycles.)
-    //
-    // Split: fixture = table builds + the initial-load sink session +
-    // the five source commits (all bring-up); query = the CHECKPOINT
-    // RESTART replaying them as one netted equality commit + the proof
-    // + the mirror read — the steady-state sink cost the regression
-    // watch must see on its own.
-    "q_stream_upsert" -> benchSplit { (s, dir) =>
-      val cat = tempCatalog(s)
-      val eng = new Engine(cat)
-      val orders = t(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-      cat.createTable("orders_su", orders.schema)
-      cat.store().setChangeFeed("orders_su", enabled = true)
-      cat.createTable("mirror_su", orders.schema)
-      cat.append("orders_su", orders, 1000L)
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft-ckpt-su").toString
-      def startSink() = {
-        val cdc = s.readStream.format("graft-table")
-          .option("warehouse", cat.warehouse.toString)
-          .option("table", "orders_su")
-          .option("readChangeFeed", "true").load()
-          .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
-            col(graft.store.TableStore.ChangeTypeCol),
-            col("_commit_snapshot_id"))
-        // AvailableNow (the sink's default): both sink sessions are
-        // batch-shaped — everything they must see is committed before
-        // start — so the one-shot trigger processes it all and
-        // terminates. The former ProcessingTime(50 ms) + poll spelling
-        // billed timer waits and machine load to the bench, not work.
-        graft.streaming.EventStreams.upsertStream(cat, "mirror_su",
-          cdc, Seq("o_orderkey"), ckpt,
-          netOrdCol = Some("_commit_snapshot_id"))
-      }
-      val q = startSink()
-      try q.awaitTermination() finally q.stop()
-      // un-netted phase: the sink is DOWN while five commits land —
-      // %15 keys carry two post-images (the %5 and %3 UPDATEs), %30
-      // keys three (%5, %3, %6), %35 keys a post-image then a delete,
-      // %77 keys fall in both DELETE predicates (the second finds the
-      // row already gone)
-      eng.sql("UPDATE orders_su SET o_totalprice = o_totalprice * 2 " +
-        "WHERE o_orderkey % 5 = 0")
-      eng.sql("DELETE FROM orders_su WHERE o_orderkey % 7 = 0")
-      eng.sql("UPDATE orders_su SET o_totalprice = o_totalprice + 10 " +
-        "WHERE o_orderkey % 3 = 0")
-      eng.sql("UPDATE orders_su SET o_totalprice = o_totalprice * 3 " +
-        "WHERE o_orderkey % 6 = 0")
-      eng.sql("DELETE FROM orders_su WHERE o_orderkey % 11 = 0")
-      (cat, eng, () => startSink())
-    } { case (cat, eng, startSink) =>
-      val q2 = startSink()
-      try q2.awaitTermination() finally q2.stop()
-      val st = cat.store()
-      val hist = st.dataFilesAsOf("mirror_su", None)
-      val everWritten = (1L to 2L).flatMap(v =>
-        st.snapshotMetaVersion("mirror_su", v)
-          .map(_._3().map(_.path).toSet).getOrElse(Set.empty)).toSet
-      val sinkProof = everWritten.subsetOf(hist.map(_.path).toSet) &&
-        eng.sql("SELECT COUNT(*) FROM `mirror_su$history`")
-          .head().getLong(0) == 2L
-      cat.table("mirror_su")
-        .select(col("o_orderkey"), col("o_custkey"),
-          round(col("o_totalprice"), 2).as("price"))
-        .withColumn("sink_proof", lit(sinkProof))
-    },
-
-    // fixture = base builds + MV create + compaction + delta append;
-    // query = the INCREMENTAL REFRESH (delta scan + view-sized merge —
-    // the cost that must stay ∝ delta, not base) + the rendered read.
-    "q_mv_refresh" -> benchSplit { (s, dir) =>
-      val cat = tempCatalog(s)
-      val eng = new Engine(cat)
-      val orders = t(s, dir, "orders")
-      cat.createTable("orders_mvb", orders.schema)
-      cat.append("orders_mvb", orders.filter(col("o_orderkey") % 2 === 0), 1000L)
-      eng.sql("CREATE MATERIALIZED VIEW orders_mv AS " +
-        "SELECT o_orderstatus, count(*) AS cnt, sum(o_totalprice) AS total, " +
-        "min(o_totalprice) AS lo, max(o_totalprice) AS hi, " +
-        "avg(o_totalprice) AS mean " +
-        "FROM orders_mvb GROUP BY o_orderstatus")
-      eng.sql("OPTIMIZE orders_mvb")
-      cat.append("orders_mvb", orders.filter(col("o_orderkey") % 2 === 1), 2000L)
-      (cat, eng)
-    } { case (cat, eng) =>
-      val status = eng.sql("REFRESH MATERIALIZED VIEW orders_mv").head()
-      require(status.getString(0).startsWith("incremental"),
-        s"expected an incremental refresh, got ${status.getString(0)}")
-      graft.store.MaterializedView.read(cat.store(), "orders_mv")
-        .select(col("o_orderstatus"), col("cnt"),
-          round(col("total"), 2).as("total"), col("lo"), col("hi"),
-          round(col("mean"), 2).as("mean"))
-        .orderBy(col("o_orderstatus"))
-    },
-
-    // fixture = CTAS + append + COW update + COW delete + compaction
-    // (all writes); query = the change-data-feed scan itself — reading
-    // the row-level changelog back is the cost that must stay ∝ the
-    // commits' own footprint (the compaction snapshot is skipped from
-    // metadata alone via its rows-preserved marker).
-    "q_cdc_changes" -> cdcChangesSplit(storedFeed = false),
-
-    // same contract served from MATERIALIZED change files (ENABLE
-    // CHANGE FEED before the COW commits): each rewrite wrote its own
-    // row-level diff at commit time, so the feed scan reads cdc files
-    // at cost ∝ |changes| instead of re-diffing the touched files —
-    // the values must be indistinguishable from the diff path's.
-    "q_cdc_stored" -> cdcChangesSplit(storedFeed = true),
-
-    // fixture = base build + MV create + delta append (writes); query =
-    // the INCREMENTAL sketch refresh + rendered read. The deltas'
-    // visitor ids OVERLAP the base's — the case where adding counts
-    // would double-count and only a mergeable sketch (HLL union) or a
-    // rescan answers. Cardinality (≤200/group) keeps the DataSketches
-    // sketch in its exact coupon range, so the estimate EQUALS the true
-    // distinct count and DuckDB can check it by value.
-    "q_mv_approx_distinct" -> benchSplit { (s, dir) =>
-      val cat = tempCatalog(s)
-      val eng = new Engine(cat)
-      val visits = t(s, dir, "orders")
-        .select((col("o_custkey") % 200).cast("int").as("visitor"),
-          col("o_orderstatus").as("status"),
-          col("o_orderkey"))
-      cat.createTable("visits_nd", visits.drop("o_orderkey").schema)
-      cat.append("visits_nd",
-        visits.filter(col("o_orderkey") % 3 =!= 0).drop("o_orderkey"), 1000L)
-      eng.sql("CREATE MATERIALIZED VIEW orders_nd AS SELECT status, " +
-        "approx_count_distinct(visitor) AS nd, count(*) AS cnt " +
-        "FROM visits_nd GROUP BY status")
-      cat.append("visits_nd",
-        visits.filter(col("o_orderkey") % 3 === 0).drop("o_orderkey"), 2000L)
-      (cat, eng)
-    } { case (cat, eng) =>
-      val status = eng.sql("REFRESH MATERIALIZED VIEW orders_nd").head()
-      require(status.getString(0).startsWith("incremental"),
-        s"expected an incremental refresh, got ${status.getString(0)}")
-      graft.store.MaterializedView.read(cat.store(), "orders_nd")
-        .orderBy(col("status"))
-    },
-
-    // fixture = the sorted fact build (a write benchmark in disguise);
-    // query = the DYNAMIC-FILE-PRUNING join — the dim side's keys are
-    // collected (metadata-sized) and probe the fact's per-file min/max
-    // bounds, so the scan touches only files whose range admits a dim
-    // key. Plan shape + file-count asserts live in
-    // DynamicFilePruningSpec; here the oracle checks the join's VALUES.
-    "q_dfp_join" -> benchSplit { (s, dir) =>
-      val cat = tempCatalog(s)
-      val li = t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice"))
-      cat.createTable("li_dfp", li.schema, sortBy = Seq("l_orderkey"))
-      cat.append("li_dfp", li, 1000L)
-      (cat, t(s, dir, "orders")
-        .filter(col("o_orderkey").between(1000, 2000))
-        .select(col("o_orderkey"), col("o_orderstatus")))
-    } { case (cat, dim) =>
-      cat.joinPruned("li_dfp", "l_orderkey", dim, "o_orderkey")
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n_items"),
-          round(sum(col("l_quantity")), 2).as("qty"),
-          countDistinct(col("l_orderkey")).as("n_orders"))
-        .orderBy(col("o_orderstatus"))
-    },
-
-    // fixture = base build + MV create + COW delete + COW update (all
-    // writes); query = the RETRACTION refresh — the change feed
-    // partial-aggregates with a ±1 sign and merges into the view state
-    // (cost ∝ the changes, base never re-read) — plus the rendered
-    // read. The require proves the delta path ran, not a rebuild.
-    "q_mv_retract" -> benchSplit { (s, dir) =>
-      val cat = tempCatalog(s)
-      val eng = new Engine(cat)
-      val orders = t(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-      cat.createTable("orders_ret", orders.schema)
-      cat.append("orders_ret", orders, 1000L)
-      eng.sql("CREATE MATERIALIZED VIEW mv_ret AS SELECT o_orderstatus, " +
-        "count(*) AS cnt, sum(o_totalprice) AS total, " +
-        "avg(o_totalprice) AS mean FROM orders_ret GROUP BY o_orderstatus")
-      eng.sql("DELETE FROM orders_ret WHERE o_orderkey % 4 = 0")
-      eng.sql("UPDATE orders_ret SET o_totalprice = o_totalprice + 2 " +
-        "WHERE o_orderkey % 9 = 0")
-      (cat, eng)
-    } { case (cat, eng) =>
-      val status = eng.sql("REFRESH MATERIALIZED VIEW mv_ret").head()
-      require(status.getString(0).startsWith("incremental-retract"),
-        s"expected a retraction refresh, got ${status.getString(0)}")
-      graft.store.MaterializedView.read(cat.store(), "mv_ret")
-        .select(col("o_orderstatus").as("status"), col("cnt"),
-          round(col("total"), 2).as("total"),
-          round(col("mean"), 2).as("mean"))
-        .orderBy(col("status"))
-    },
-
-    // fixture = PQ codebook training + corpus encode (the m per-subspace
-    // k-means loops — index-build cost); query = the ADC scan + exact
-    // re-rank, the serving path whose cost must stay flat.
-    "q_embed_pq" -> benchSplit { (s, dir) =>
-      val e = emb(s, dir)
-      val all = embeddingsWithPlanted(s, e, firstVector(e))
-      val cb = Similarity.pqTrain(all, "vec_id", "embedding",
-        m = 4, ksub = 16, iters = 2)
-      val enc = Similarity.pqEncode(all, "embedding", cb)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      enc.count() // materialize the encode under the fixture's clock
-      (enc, cb, firstVector(e))
-    } { case (enc, cb, q) =>
-      // materialize through the shared seam (conf-selectable checkpoint
-      // mode) so the fixture's persisted encode can be freed before
-      // returning — the result is tiny (top-k ids)
-      val out = graft.ext.Dedup.materialize(
-        rankedIds(Similarity.pqTopKAdc(enc, "vec_id", "embedding",
-          q, cb, k = 10, refine = 100)))
-      enc.unpersist()
-      out
-    },
-
-    // fixture = the IVF-PQ index build (k-means lists + per-subspace
-    // codebooks + codes-only write); query = the probe — list-file
-    // pruning + ADC over codes + SQ8 refine.
-    "q_embed_ivfpq" -> benchSplit { (s, dir) =>
-      val idx = scratchDir("graft-ivfpq").toString
-      val e = emb(s, dir)
-      Similarity.ivfWriteIndexPq(
-        embeddingsWithPlanted(s, e, firstVector(e)),
-        "vec_id", "embedding", idx, nlist = 16, m = 4, ksub = 16, iters = 2)
-      (s, idx, firstVector(e))
-    } { case (s, idx, q) =>
-      rankedIds(Similarity.ivfProbePq(s, idx, "vec_id", "embedding",
-        q, k = 10, nprobe = 4, refine = 100))
-    },
-
-    "q_sql_rollback" -> benchSplit { (s, dir) =>
-      val cat = tempCatalog(s)
-      val eng = new Engine(cat)
-      val orders = t(s, dir, "orders")
-      cat.createTable("orders_rb", orders.schema)
-      cat.append("orders_rb", orders.filter(col("o_orderkey") % 2 === 0), 1000L)
-      cat.append("orders_rb", orders.filter(col("o_orderkey") % 2 === 1), 2000L)
-      eng.sql("CALL rollback_to_snapshot('orders_rb', 1)")
-      eng
-    } { eng =>
-      eng.sql("SELECT COUNT(*) AS cnt, ROUND(SUM(o_totalprice), 2) AS revenue " +
-        "FROM orders_rb")
-    },
-
-    // fixture = warehouse build + CTAS half + conf-gated staged INSERT
-    // (a write benchmark); query = audit scan + the metadata-only
-    // publish + the published read — the publish cost must stay flat
-    // regardless of batch size (zero data movement).
-    "q_wap" -> benchSplit { (s, dir) =>
-      val cat = tempCatalog(s)
-      val eng = new Engine(cat)
-      val nation = t(s, dir, "nation")
-      cat.createTable("nation_src", nation.schema)
-      cat.append("nation_src", nation, 1000L)
-      eng.sql("CREATE TABLE nation_wap STORED AS ICEBERG AS " +
-        "SELECT * FROM nation_src WHERE n_nationkey < 10")
-      def liveCount(): Long =
-        eng.sql("SELECT COUNT(*) FROM nation_wap").collect()(0).getLong(0)
-      val before = liveCount()
-      s.conf.set(graft.sql.SqlDdl.WapIdConf, "audit-1")
-      try eng.sql("INSERT INTO nation_wap SELECT * FROM nation_src " +
-        "WHERE n_nationkey >= 10")
-      finally s.conf.unset(graft.sql.SqlDdl.WapIdConf)
-      (s, cat, eng, before, liveCount())
-    } { case (s, cat, eng, before, whileStaged) =>
-      import s.implicits._
-      val audit = cat.store().auditWap("nation_wap", "audit-1").count()
-      eng.sql("CALL publish_changes(table => 'nation_wap', wap_id => 'audit-1')")
-      val after = eng.sql("SELECT COUNT(*) FROM nation_wap")
-        .collect()(0).getLong(0)
-      Seq((before, whileStaged, audit, after))
-        .toDF("rows_before", "rows_while_staged", "rows_audit", "rows_after")
-    },
-
-    // fixture = warehouse + CTAS + two conf-routed branch commits
-    // (writes); query = the by-name branch read, the fast-forward
-    // publish (metadata-only commits), and the published read.
-    "q_branch" -> benchSplit { (s, dir) =>
-      val cat = tempCatalog(s)
-      val eng = new Engine(cat)
-      val nation = t(s, dir, "nation")
-      cat.createTable("nation_src_br", nation.schema)
-      cat.append("nation_src_br", nation, 1000L)
-      eng.sql("CREATE TABLE nation_br STORED AS ICEBERG AS " +
-        "SELECT * FROM nation_src_br WHERE n_nationkey < 10")
-      eng.sql("ALTER TABLE nation_br CREATE BRANCH etl")
-      s.conf.set(graft.sql.SqlDdl.BranchConf, "etl")
-      try {
-        eng.sql("INSERT INTO nation_br SELECT * FROM nation_src_br " +
-          "WHERE n_nationkey >= 10 AND n_nationkey < 20")
-        eng.sql("INSERT INTO nation_br SELECT * FROM nation_src_br " +
-          "WHERE n_nationkey >= 20")
-      } finally s.conf.unset(graft.sql.SqlDdl.BranchConf)
-      (s, cat, eng)
-    } { case (s, cat, eng) =>
-      import s.implicits._
-      def c(sql: String): Long = eng.sql(sql).collect()(0).getLong(0)
-      val mainRows = c("SELECT COUNT(*) FROM nation_br")
-      val branchRows =
-        c("SELECT COUNT(*) FROM nation_br FOR SYSTEM_VERSION AS OF 'etl'")
-      eng.sql("CALL fast_forward(table => 'nation_br', branch => 'etl')")
-      val after = c("SELECT COUNT(*) FROM nation_br")
-      val nSnapshots = cat.store().history("nation_br").count()
-      Seq((mainRows, branchRows, after, nSnapshots))
-        .toDF("rows_main", "rows_branch", "rows_after", "n_snapshots")
-    },
-
-    // fixture = warehouse + full load + branch fork + conf-routed COW
-    // UPDATE and DELETE recorded on the branch chain (writes); query =
-    // main isolation check, the composed branch read, the fast-forward
-    // publish (metadata + replayed COW commits), and the published read.
-    "q_branch_dml" -> benchSplit { (s, dir) =>
-      val cat = tempCatalog(s)
-      val eng = new Engine(cat)
-      val orders = t(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-      cat.createTable("orders_bd", orders.schema)
-      cat.append("orders_bd", orders, 1000L)                        // snap 1
-      eng.sql("ALTER TABLE orders_bd CREATE BRANCH wip")
-      s.conf.set(graft.sql.SqlDdl.BranchConf, "wip")
-      try {
-        eng.sql("UPDATE orders_bd SET o_totalprice = o_totalprice * 2 " +
-          "WHERE o_orderkey % 5 = 0")
-        eng.sql("DELETE FROM orders_bd WHERE o_orderkey % 7 = 0")
-      } finally s.conf.unset(graft.sql.SqlDdl.BranchConf)
-      (s, cat, eng)
-    } { case (s, cat, eng) =>
-      import s.implicits._
-      def agg(suffix: String): (Long, Double) = {
-        val r = eng.sql("SELECT COUNT(*) AS c, ROUND(SUM(o_totalprice), 2) " +
-          s"AS r FROM orders_bd$suffix").collect()(0)
-        (r.getLong(0), r.getDouble(1))
-      }
-      val (mainCnt, _) = agg("")
-      val (brCnt, brRev) = agg(" FOR SYSTEM_VERSION AS OF 'wip'")
-      eng.sql("CALL fast_forward(table => 'orders_bd', branch => 'wip')")
-      val (afterCnt, afterRev) = agg("")
-      val nCommits = cat.store().history("orders_bd").count()
-      Seq((mainCnt, brCnt, brRev, afterCnt, afterRev, nCommits))
-        .toDF("rows_main_before", "branch_cnt", "branch_rev",
-          "after_cnt", "after_rev", "n_commits")
-    },
-
-    // fixture = base + views + second append (writes); query = the
-    // nested-view read, re-evaluated from stored text against the
-    // now-doubled base.
-    "q_sql_view" -> benchSplit { (s, dir) =>
-      val cat = tempCatalog(s)
-      val eng = new Engine(cat)
-      val orders = t(s, dir, "orders")
-      cat.createTable("orders_v", orders.schema)
-      cat.append("orders_v", orders.filter(col("o_orderkey") % 2 === 0), 1000L)
-      eng.sql("CREATE VIEW v_open AS SELECT o_orderkey, o_orderstatus, " +
-        "o_totalprice FROM orders_v WHERE o_totalprice > 100000")
-      eng.sql("CREATE VIEW v_by_status AS SELECT o_orderstatus, " +
-        "COUNT(*) AS cnt, SUM(o_totalprice) AS total FROM v_open " +
-        "GROUP BY o_orderstatus")
-      cat.append("orders_v", orders.filter(col("o_orderkey") % 2 === 1), 2000L)
-      eng
-    } { eng =>
-      eng.sql("SELECT o_orderstatus, cnt, total FROM v_by_status " +
-          "ORDER BY o_orderstatus")
-        .withColumn("total", round(col("total"), 2))
-    },
-
-    "q_bucket_join" -> benchSplit { (s, dir) =>
-      val cat = tempCatalog(s)
-      val eng = new Engine(cat)
-      val orders = t(s, dir, "orders")
-        .select(col("o_custkey").as("custkey"), col("o_totalprice"))
-      val cust = t(s, dir, "customer")
-        .select(col("c_custkey").as("custkey"), col("c_mktsegment"))
-      cat.createTable("orders_bkt", orders.schema,
-        bucketBy = Some(("custkey", 8)))
-      cat.append("orders_bkt", orders, 1000L)
-      cat.createTable("cust_bkt", cust.schema, bucketBy = Some(("custkey", 8)))
-      cat.append("cust_bkt", cust, 2000L)
-      eng
-    } { eng =>
-      eng.sql("SELECT c_mktsegment, COUNT(*) AS cnt, " +
-        "ROUND(SUM(o_totalprice), 2) AS revenue " +
-        "FROM orders_bkt JOIN cust_bkt USING (custkey) " +
-        "GROUP BY c_mktsegment ORDER BY c_mktsegment")
-    },
-
-    "q_bucket_prune" -> benchSplit { (s, dir) =>
-      val cat = tempCatalog(s)
-      val eng = new Engine(cat)
-      val cust = t(s, dir, "customer")
-        .select(col("c_custkey").as("custkey"), col("c_name"),
-          col("c_acctbal"))
-      cat.createTable("cust_bp", cust.schema,
-        Some(graft.store.PartitionSpec.parse("bucket(16, custkey)")))
-      cat.append("cust_bp", cust, 1000L)
-      eng.sql("DELETE FROM cust_bp WHERE custkey = 7")
-      eng
-    } { eng =>
-      eng.sql("SELECT custkey, c_name, ROUND(c_acctbal, 2) AS acctbal " +
-        "FROM cust_bp WHERE custkey IN (3, 7, 11, 42, 100) " +
-        "ORDER BY custkey")
-    },
-
-    "q_truncate_prune" -> benchSplit { (s, dir) =>
-      val cat = tempCatalog(s)
-      val eng = new Engine(cat)
-      val orders = t(s, dir, "orders")
-        .select(col("o_orderkey").as("okey"), col("o_totalprice"))
-      cat.createTable("orders_tr", orders.schema,
-        Some(graft.store.PartitionSpec.parse("truncate(10000, okey)")))
-      cat.append("orders_tr", orders, 1000L)
-      eng
-    } { eng =>
-      eng.sql("SELECT COUNT(*) AS cnt, ROUND(SUM(o_totalprice), 2) AS rev " +
-        "FROM orders_tr WHERE okey >= 5000 AND okey < 25000")
-    },
-
-    "q_bloom_prune" -> benchSplit { (s, dir) =>
-      val cat = tempCatalog(s)
-      val eng = new Engine(cat)
-      val orders = t(s, dir, "orders")
-        .select(col("o_orderkey").as("okey"), col("o_totalprice"))
-      cat.createTable("orders_bl", orders.schema)
-      eng.sql("ALTER TABLE orders_bl SET BLOOM FILTER (okey)")
-      // hash-scatter the key so every file's min/max spans the whole
-      // domain — the stats tier cannot prune a needle, only the bloom
-      // tier can. The file count scales WITH the input so each file
-      // stays under the log-tier row cap at any SF (a fixed count
-      // would silently lose the log filters at 10x the data).
-      val rows = orders.count()
-      val nFiles = math.max(4, math.ceil(rows / 8000.0).toInt)
-      cat.append("orders_bl", orders.repartition(nFiles, col("okey")), 1000L)
-      val needle = orders.agg(min(col("okey"))).head().getLong(0)
-      (cat, eng, needle)
-    } { case (cat, eng, needle) =>
-      // the pruning PROOF is part of the checked tuple: the needle must
-      // touch at most 2 of the files (1 real + FP headroom) and
-      // strictly fewer than all of them — a bloom tier that stopped
-      // skipping flips the boolean and fails the oracle hash-compare
-      val touched = cat.store()
-        .prunedFiles("orders_bl", col("okey") === needle).size
-      val total = cat.store().prunedFiles("orders_bl", lit(true)).size
-      eng.sql("SELECT COUNT(*) AS cnt, ROUND(SUM(o_totalprice), 2) AS rev " +
-          s"FROM orders_bl WHERE okey = $needle")
-        .withColumn("bloom_pruned", lit(touched <= 2 && touched < total))
-    },
-
-    "q_delete_files_meta" -> benchSplit { (s, dir) =>
-      val cat = tempCatalog(s)
-      val orders = t(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_totalprice"))
-      cat.createTable("orders_dfm", orders.schema)
-      // ONE data file, so referencing_data_files is deterministic
-      cat.append("orders_dfm", orders.coalesce(1), 1000L)
-      val st = cat.store()
-      st.setTableProperties("orders_dfm",
-        Map(graft.store.TableStore.DeleteModeProp ->
-          graft.store.TableStore.MergeOnRead))
-      // TWO stacked position-delete commits against the same data file
-      // (the consolidation-eligible shape), plus an equality delete
-      st.deleteWhere("orders_dfm", col("o_orderkey") % 9 === 0, 2000L)
-      st.deleteWhere("orders_dfm", col("o_orderkey") % 13 === 0, 2500L)
-      st.equalityDelete("orders_dfm",
-        orders.filter(col("o_orderkey") % 1000 === 1)
-          .select(col("o_orderkey")), 3000L)
-      cat
-    } { cat =>
-      val eng = new Engine(cat)
-      // the delete-debt report that picks the maintenance rung: one row
-      // per delete dir — kind, rows it carries (positions targeted /
-      // key tuples), and how many data files reference it — all
-      // DuckDB-recomputable from the raw rows. Then CALL
-      // rewrite_position_delete_files and oracle-gate its EFFECT: the
-      // two stacked position dirs consolidate into one (n_before 3 →
-      // the report's 2 rows) whose record_count is the DISTINCT
-      // position union, the equality dir rides along untouched, and
-      // the table reads byte-identically before and after (the
-      // maintenance op may never change answers).
-      val debtBefore = eng.sql(
-        "SELECT COUNT(*) FROM `orders_dfm$delete_files`").head().getLong(0)
-      val pre = cat.table("orders_dfm")
-        .agg(count(lit(1)), round(sum(col("o_totalprice")), 2)).head()
-      eng.sql("CALL rewrite_position_delete_files('orders_dfm')")
-      val post = cat.table("orders_dfm")
-        .agg(count(lit(1)), round(sum(col("o_totalprice")), 2)).head()
-      eng.sql("SELECT kind, record_count, referencing_data_files " +
-          "FROM `orders_dfm$delete_files` ORDER BY kind")
-        .withColumn("n_before", lit(debtBefore))
-        .withColumn("reads_equal", lit(pre == post))
-        .withColumn("cnt", lit(post.getLong(0)))
-        .withColumn("rev", lit(post.getDouble(1)))
-    },
-
-    "q_auto_compact" -> benchSplit { (s, dir) =>
-      val cat = tempCatalog(s)
-      val eng = new Engine(cat)
-      val orders = t(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_totalprice"))
-      cat.createTable("orders_ac", orders.schema)
-      eng.sql("ALTER TABLE orders_ac SET TBLPROPERTIES " +
-        "('auto.compact' = 'true', 'auto.compact.min-files' = '4')")
-      // four small appends: the fourth crosses min-files and the append
-      // path binpacks inline — no external OPTIMIZE job ever runs
-      (0 to 3).foreach(q => cat.append("orders_ac",
-        orders.filter(col("o_orderkey") % 4 === q).coalesce(1),
-        1000L * (q + 1)))
-      cat
-    } { cat =>
-      val st = cat.store()
-      val hist = st.history("orders_ac").orderBy("snapshot_id").collect()
-      // 4 appends + exactly one trailing rows-preserved replace
-      val acProof = st.dataFilesAsOf("orders_ac", None).size == 1 &&
-        hist.length == 5 &&
-        hist.last.getAs[String]("operation") == "replace" &&
-        // the triggering append's own snapshot stays readable pre-compact
-        st.read("orders_ac", Some(4000L)).count() ==
-          st.read("orders_ac").count()
-      cat.table("orders_ac")
-        .agg(count(lit(1)).as("cnt"),
-          round(sum(col("o_totalprice")), 2).as("rev"))
-        .withColumn("ac_proof", lit(acProof))
-    },
-
-    "q_write_distribution" -> benchSplit { (s, dir) =>
-      val cat = tempCatalog(s)
-      val eng = new Engine(cat)
-      val orders = t(s, dir, "orders")
-      cat.createTable("orders_wd", orders.schema,
-        Some(graft.store.PartitionSpec("o_orderdate", "month")))
-      eng.sql("ALTER TABLE orders_wd SET TBLPROPERTIES " +
-        "('write.distribution-mode' = 'hash')")
-      // a deliberately wide fan-in write: without the property this
-      // lands tasks × months files; with it, the writer shuffles on
-      // the partition value first — one file per month
-      cat.append("orders_wd", orders.repartition(16), 1000L)
-      cat
-    } { cat =>
-      val st = cat.store()
-      val wdProof =
-        st.dataFilesAsOf("orders_wd", None).size ==
-          st.partitionSummary("orders_wd").size
-      cat.table("orders_wd")
-        .groupBy(year(col("o_orderdate")).cast("int").as("yr"),
-          month(col("o_orderdate")).cast("int").as("mo"))
-        .agg(count(lit(1)).as("cnt"),
-          round(sum(col("o_totalprice")), 2).as("revenue"))
-        .withColumn("wd_proof", lit(wdProof))
-        .orderBy(col("yr"), col("mo"))
-    },
-
-    "q_partition_prune" -> benchSplit { (s, dir) =>
-      val cat = tempCatalog(s)
-      val orders = t(s, dir, "orders")
-      cat.createTable("orders_part", orders.schema,
-        Some(graft.store.PartitionSpec("o_orderdate", "month")))
-      // co-locate each month in one task before the partitioned write, so
-      // the table lands as ~one file per month instead of tasks × months
-      cat.append("orders_part",
-        orders.repartition(date_format(col("o_orderdate"), "yyyy-MM")), 1000L)
-      cat
-    } { cat =>
-      val pred = col("o_orderdate") >= lit(ts("2000-03-01 00:00:00")) &&
-        col("o_orderdate") < lit(ts("2000-06-01 00:00:00"))
-      cat.tableWhere("orders_part", pred)
-        .groupBy(year(col("o_orderdate")).cast("int").as("yr"),
-          month(col("o_orderdate")).cast("int").as("mo"))
-        .agg(count(lit(1)).as("cnt"),
-          round(sum(col("o_totalprice")), 2).as("revenue"))
-        .orderBy(col("yr"), col("mo"))
-    },
-
-    "q_zorder" -> benchSplit { (s, dir) =>
-      val cat = tempCatalog(s)
-      val eng = new Engine(cat)
-      val li = t(s, dir, "lineitem")
-        .select(col("l_partkey"), col("l_suppkey"), col("l_quantity"),
-          col("l_extendedprice"))
-      cat.createTable("lineitem_z", li.schema)
-      // hash-scattered layout: every file spans both key ranges
-      cat.append("lineitem_z", li.repartition(8), 1000L)
-      // re-cluster on the Morton curve of the two probe dimensions.
-      // The file target scales WITH the input (~16 files at any SF):
-      // a fixed small target is the classic scale trap — at 10× data
-      // it would mean 10× the files, and file-count overhead would
-      // swamp the rewrite (measured: 33 s vs 8 s at sf1)
-      val srcBytes = org.apache.hadoop.fs.FileSystem.getLocal(
-          new org.apache.hadoop.conf.Configuration())
-        .getContentSummary(new org.apache.hadoop.fs.Path(
-          s"$dir/lineitem.parquet")).getLength
-      cat.zorder("lineitem_z", Seq("l_partkey", "l_suppkey"),
-        targetBytes = math.max(64L * 1024, srcBytes / 16))
-      eng
-    } { eng =>
-      eng.sql("SELECT COUNT(*) AS cnt, ROUND(SUM(l_extendedprice), 2) AS rev, " +
-        "ROUND(SUM(l_quantity), 2) AS qty FROM lineitem_z " +
-        "WHERE l_partkey BETWEEN 100 AND 600 AND l_suppkey BETWEEN 10 AND 60")
-    },
-
-    "q_meta_count_filtered" -> benchSplit { (s, dir) =>
-      val cat = tempCatalog(s)
-      val eng = new Engine(cat)
-      val orders = t(s, dir, "orders")
-      cat.createTable("orders_mc", orders.schema,
-        Some(graft.store.PartitionSpec("o_orderdate", "month")))
-      cat.append("orders_mc",
-        orders.repartition(date_format(col("o_orderdate"), "yyyy-MM")), 1000L)
-      eng
-    } { eng =>
-      eng.sql("SELECT COUNT(*) AS cnt FROM orders_mc " +
-        "WHERE o_orderdate >= TIMESTAMP '2000-03-01 00:00:00' " +
-        "AND o_orderdate < TIMESTAMP '2000-06-01 00:00:00'")
-    },
-
-    "q_insert_overwrite" -> benchSplit { (s, dir) =>
-      val cat = tempCatalog(s)
-      val eng = new Engine(cat)
-      val orders = t(s, dir, "orders")
-      cat.createTable("orders_io", orders.schema)
-      cat.append("orders_io", orders, 1000L)                        // snap 1
-      eng.sql("INSERT OVERWRITE orders_io SELECT * FROM orders_io " +
-        "WHERE o_orderkey % 3 = 0")                                 // snap 2
-      eng
-    } { eng =>
-      eng.sql("SELECT 'after' AS phase, COUNT(*) AS cnt, " +
-          "ROUND(SUM(o_totalprice), 2) AS rev FROM orders_io")
-        .unionByName(eng.sql("SELECT 'before' AS phase, COUNT(*) AS cnt, " +
-          "ROUND(SUM(o_totalprice), 2) AS rev FROM orders_io " +
-          "FOR SYSTEM_VERSION AS OF 1"))
-        .orderBy(col("phase"))
-    },
-
-    "q_restore" -> benchSplit { (s, dir) =>
-      val cat = tempCatalog(s)
-      val eng = new Engine(cat)
-      val orders = t(s, dir, "orders")
-      cat.createTable("orders_rs", orders.schema)
-      cat.append("orders_rs", orders.filter(col("o_orderkey") % 2 === 0), 1000L)
-      cat.append("orders_rs", orders.filter(col("o_orderkey") % 2 === 1), 2000L)
-      eng.sql("RESTORE TABLE orders_rs TO VERSION AS OF 1")
-      (cat, eng)
-    } { case (cat, eng) =>
-      // history is PRESERVED by restore (append, append, rollback):
-      // pinning the commit count in the checked tuple makes a restore
-      // that truncates the log — or fails to commit — an oracle failure
-      eng.sql("SELECT COUNT(*) AS cnt, ROUND(SUM(o_totalprice), 2) AS rev " +
-          "FROM orders_rs")
-        .withColumn("n_commits", lit(cat.history("orders_rs").count()))
-    },
-
-    "q_apply_changes" -> benchSplit { (s, dir) =>
-      val cat = tempCatalog(s)
-      val eng = new Engine(cat)
-      val orders = t(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-      cat.createTable("cdc_m_src", orders.schema)
-      cat.createTable("cdc_m_dst", orders.schema)
-      cat.append("cdc_m_src", orders, 1000L)                        // snap 1
-      eng.sql("UPDATE cdc_m_src SET o_totalprice = o_totalprice * 2 " +
-        "WHERE o_orderkey % 5 = 0")                                 // snap 2
-      eng.sql("DELETE FROM cdc_m_src WHERE o_orderkey % 7 = 0")     // snap 3
-      cat
-    } { cat =>
-      // one catch-up poll nets all three commits per key (latest commit
-      // wins; an update's insert outranks its delete) and lands the
-      // mirror in ONE file-granular COW commit on the target
-      graft.streaming.ChangeFeedFollower.mirror(cat, "cdc_m_src", "cdc_m_dst",
-        Seq("o_orderkey"))
-      cat.table("cdc_m_dst")
-        .select(col("o_orderkey"), col("o_custkey"),
-          round(col("o_totalprice"), 2).as("price"))
-    },
-
-    "q_apply_changes_mor" -> benchSplit { (s, dir) =>
-      val cat = tempCatalog(s)
-      val eng = new Engine(cat)
-      val orders = t(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-      cat.createTable("cdc_e_src", orders.schema)
-      cat.createTable("cdc_e_dst", orders.schema)
-      cat.append("cdc_e_src", orders, 1000L)                        // snap 1
-      // the mirror is seeded with the initial load; only the CDC tail
-      // replays through the apply, so the no-rewrite proof is real
-      cat.append("cdc_e_dst", orders, 1000L)
-      val seedId = cat.store().currentSnapshotId("cdc_e_src").get
-      eng.sql("UPDATE cdc_e_src SET o_totalprice = o_totalprice * 2 " +
-        "WHERE o_orderkey % 5 = 0")                                 // snap 2
-      eng.sql("DELETE FROM cdc_e_src WHERE o_orderkey % 7 = 0")     // snap 3
-      (cat, seedId)
-    } { case (cat, seedId) =>
-      // merge-on-read APPLY CHANGES: the same netted batch as
-      // q_apply_changes lands as ONE equality commit — zero reads of
-      // the target, zero files rewritten. eq_proof pins (a) every
-      // seeded file survived by reference, (b) an equality ref is
-      // attached, (c) metadata COUNT declines while the ref is live.
-      graft.streaming.ChangeFeedFollower.mirrorMor(cat, "cdc_e_src",
-        "cdc_e_dst", Seq("o_orderkey"), startAfterId = seedId)
-      val st = cat.store()
-      val seeded = st.snapshotMetaVersion("cdc_e_dst", 1L)
-        .map(_._3().map(_.path).toSet).getOrElse(Set.empty)
-      val cur = st.dataFilesAsOf("cdc_e_dst", None)
-      val eqProof = seeded.subsetOf(cur.map(_.path).toSet) &&
-        cur.exists(_.deletes.exists(_.isEquality)) &&
-        st.snapshotMetaAsOf("cdc_e_dst", None).exists(_._2 == -1L)
-      cat.table("cdc_e_dst")
-        .select(col("o_orderkey"), col("o_custkey"),
-          round(col("o_totalprice"), 2).as("price"))
-        .withColumn("eq_proof", lit(eqProof))
-    },
-
-    "q_table_changes_rel" -> benchSplit { (s, dir) =>
-      val cat = tempCatalog(s)
-      val eng = new Engine(cat)
-      val orders = t(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_totalprice"))
-      cat.createTable("tcr_o", orders.schema)
-      cat.append("tcr_o", orders, 1000L)                            // snap 1
-      eng.sql("DELETE FROM tcr_o WHERE o_orderkey % 4 = 0")         // snap 2
-      eng.sql("UPDATE tcr_o SET o_totalprice = o_totalprice + 1 " +
-        "WHERE o_orderkey % 9 = 1")                                 // snap 3
-      eng
-    } { eng =>
-      // the table-valued RELATION form: arbitrary SQL composes over the
-      // feed (bounds exclude snap 1's initial load)
-      eng.sql("SELECT _change_type AS change_type, COUNT(*) AS n, " +
-        "ROUND(SUM(o_totalprice), 2) AS total " +
-        "FROM table_changes('tcr_o', 1) " +
-        "GROUP BY _change_type ORDER BY change_type")
-    },
-
-    "q_mor_delete" -> benchSplit { (s, dir) =>
-      val cat = tempCatalog(s)
-      val eng = new Engine(cat)
-      val orders = t(s, dir, "orders")
-      cat.createTable("orders_mor", orders.schema)
-      // Iceberg's v2 write mode, through the SQL property surface
-      eng.sql("ALTER TABLE orders_mor SET TBLPROPERTIES " +
-        "('write.delete.mode'='merge-on-read')")
-      cat.append("orders_mor", orders, 1000L)                     // snap 1
-      eng.sql("DELETE FROM orders_mor WHERE o_orderkey % 3 = 0")  // snap 2
-      (cat, eng)
-    } { case (cat, eng) =>
-      // merge-on-read DELETE: rows disappear but the DATA FILE SET is
-      // untouched — the commit wrote only a position-delete file. The
-      // checked tuple pins the proof: every current data file was
-      // already in snapshot 1 (no rewrite), the commit is marked
-      // merge-on-read, and at least one entry carries a delete ref.
-      val st = cat.store()
-      val v1 = st.snapshotMetaVersion("orders_mor", 1L)
-        .map(_._3().map(_.path).toSet).getOrElse(Set.empty)
-      val cur = st.dataFilesAsOf("orders_mor", None)
-      val noRewrite = cur.map(_.path).toSet.subsetOf(v1) &&
-        cur.exists(_.deletes.nonEmpty) &&
-        st.currentSummary("orders_mor").get("merge-on-read").contains("true")
-      eng.sql("SELECT 'after' AS phase, COUNT(*) AS cnt, " +
-          "ROUND(SUM(o_totalprice), 2) AS rev FROM orders_mor")
-        .unionByName(eng.sql("SELECT 'before' AS phase, COUNT(*) AS cnt, " +
-          "ROUND(SUM(o_totalprice), 2) AS rev FROM orders_mor " +
-          "FOR SYSTEM_VERSION AS OF 1"))
-        .withColumn("no_rewrite", lit(noRewrite))
-        .orderBy(col("phase"))
-    },
-
-    "q_mor_update" -> benchSplit { (s, dir) =>
-      val cat = tempCatalog(s)
-      val eng = new Engine(cat)
-      val orders = t(s, dir, "orders")
-      cat.createTable("orders_mu", orders.schema)
-      eng.sql("ALTER TABLE orders_mu SET TBLPROPERTIES " +
-        "('write.update.mode'='merge-on-read')")
-      cat.append("orders_mu", orders, 1000L)                      // snap 1
-      eng.sql("UPDATE orders_mu SET o_totalprice = o_totalprice * 2 " +
-        "WHERE o_orderkey % 5 = 0")                               // snap 2
-      eng.sql("OPTIMIZE orders_mu")                               // snap 3
-      (cat, eng)
-    } { case (cat, eng) =>
-      // merge-on-read UPDATE decomposes into position deletes + appended
-      // post-images (snapshot 2 keeps every original file), then
-      // OPTIMIZE materializes the deletes away (snapshot 3 has no refs).
-      val st = cat.store()
-      val v1 = st.snapshotMetaVersion("orders_mu", 1L)
-        .map(_._3().map(_.path).toSet).getOrElse(Set.empty)
-      val v2 = st.snapshotMetaVersion("orders_mu", 2L)
-        .map(_._3()).getOrElse(Seq.empty)
-      val morThenClean = v1.subsetOf(v2.map(_.path).toSet) &&
-        v2.exists(_.deletes.nonEmpty) &&
-        st.dataFilesAsOf("orders_mu", None).forall(_.deletes.isEmpty)
-      eng.sql("SELECT COUNT(*) AS cnt, " +
-          "ROUND(SUM(o_totalprice), 2) AS rev FROM orders_mu")
-        .withColumn("mor_then_clean", lit(morThenClean))
-    },
-
-    "q_mor_cdc" -> benchSplit { (s, dir) =>
-      val cat = tempCatalog(s)
-      val eng = new Engine(cat)
-      val orders = t(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_totalprice"))
-      cat.createTable("mor_cdc", orders.schema)
-      eng.sql("ALTER TABLE mor_cdc SET TBLPROPERTIES " +
-        "('write.delete.mode'='merge-on-read', " +
-        "'write.update.mode'='merge-on-read')")
-      cat.append("mor_cdc", orders, 1000L)                        // snap 1
-      eng.sql("DELETE FROM mor_cdc WHERE o_orderkey % 4 = 0")     // snap 2
-      eng.sql("UPDATE mor_cdc SET o_totalprice = o_totalprice + 1 " +
-        "WHERE o_orderkey % 9 = 1")                               // snap 3
-      eng
-    } { eng =>
-      // the change feed recovers MOR commits' exact row-level diff from
-      // the delete files themselves (cost ∝ changes, no exceptAll) —
-      // value-identical to the COW feed over the same statements
-      // (q_table_changes_rel), which is exactly what the shared oracle
-      // checks
-      eng.sql("SELECT _change_type AS change_type, COUNT(*) AS n, " +
-        "ROUND(SUM(o_totalprice), 2) AS total " +
-        "FROM table_changes('mor_cdc', 1) " +
-        "GROUP BY _change_type ORDER BY change_type")
-    },
-
-    "q_mor_merge" -> benchSplit { (s, dir) =>
-      val cat = tempCatalog(s)
-      val eng = new Engine(cat)
-      val orders = t(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_totalprice"))
-      cat.createTable("orders_mm", orders.schema)
-      eng.sql("ALTER TABLE orders_mm SET TBLPROPERTIES " +
-        "('write.merge.mode'='merge-on-read')")
-      cat.append("orders_mm", orders, 1000L)                      // snap 1
-      // three-arm MERGE under merge-on-read: %7=3 keys delete (first
-      // arm wins over the update), %5=0 keys double, shifted keys insert
-      eng.sql("""MERGE INTO orders_mm AS t
-        USING (SELECT o_orderkey AS k, o_totalprice AS p FROM orders_mm
-               WHERE o_orderkey % 5 = 0 OR o_orderkey % 7 = 3
-               UNION ALL
-               SELECT o_orderkey + 100000000 AS k, CAST(1.0 AS DOUBLE) AS p
-               FROM orders_mm WHERE o_orderkey % 1000 = 1) AS s(k, p)
-        ON t.o_orderkey = s.k
-        WHEN MATCHED AND s.k % 7 = 3 THEN DELETE
-        WHEN MATCHED THEN UPDATE SET o_totalprice = s.p * 2
-        WHEN NOT MATCHED THEN INSERT (o_orderkey, o_totalprice) VALUES (s.k, s.p)""")
-      (cat, eng)
-    } { case (cat, eng) =>
-      // arm semantics vs DuckDB recompute + the no-rewrite proof: every
-      // original data file survives the merge by reference (uniformly
-      // spread keys keep live rows in each), only position deletes and
-      // appended post-images/inserts were committed
-      val st = cat.store()
-      val v1 = st.snapshotMetaVersion("orders_mm", 1L)
-        .map(_._3().map(_.path).toSet).getOrElse(Set.empty)
-      val cur = st.dataFilesAsOf("orders_mm", None).map(_.path).toSet
-      val noRewrite = v1.subsetOf(cur) &&
-        st.currentSummary("orders_mm").get("merge-on-read").contains("true")
-      eng.sql("SELECT COUNT(*) AS cnt, " +
-          "ROUND(SUM(o_totalprice), 2) AS rev FROM orders_mm")
-        .withColumn("no_rewrite", lit(noRewrite))
-    },
-
-    "q_eq_upsert" -> benchSplit { (s, dir) =>
-      val cat = tempCatalog(s)
-      val eng = new Engine(cat)
-      val orders = t(s, dir, "orders")
-      cat.createTable("orders_eq", orders.schema)
-      cat.append("orders_eq", orders, 1000L)                      // snap 1
-      // the Flink-CDC writer batch: %10=7 keys re-arrive with a bumped
-      // price (replacements), %1000=1 keys re-arrive under fresh ids
-      // (inserts) — ONE equality-upsert commit, zero table reads
-      val keyType = orders.schema("o_orderkey").dataType
-      orders.filter(col("o_orderkey") % 10 === 7)
-        .withColumn("o_totalprice", col("o_totalprice") + lit(100.0))
-        .unionByName(orders.filter(col("o_orderkey") % 1000 === 1)
-          .withColumn("o_orderkey",
-            (col("o_orderkey") + lit(100000000L)).cast(keyType)))
-        .createOrReplaceTempView("eq_batch")
-      eng.sql("CALL equality_upsert('orders_eq', " +
-        "source => 'eq_batch', keys => 'o_orderkey')")            // snap 2
-      (cat, eng)
-    } { case (cat, eng) =>
-      // Iceberg v2 equality deletes: the upsert wrote ONE key-tuple file
-      // + the batch — no data file read or rewritten. The checked tuple
-      // pins the row semantics (after + time-traveled before vs DuckDB)
-      // and the proof that (a) every original file survived by
-      // reference, (b) an equality ref is attached, (c) metadata COUNT
-      // correctly declines to the scan while the ref is live.
-      val st = cat.store()
-      val v1 = st.snapshotMetaVersion("orders_eq", 1L)
-        .map(_._3().map(_.path).toSet).getOrElse(Set.empty)
-      val cur = st.dataFilesAsOf("orders_eq", None)
-      val eqProof = v1.subsetOf(cur.map(_.path).toSet) &&
-        cur.exists(_.deletes.exists(_.isEquality)) &&
-        st.snapshotMetaAsOf("orders_eq", None).exists(_._2 == -1L)
-      // minor compaction: equality refs materialize into positional
-      // ones with a key-column read — STILL no data file rewritten,
-      // and metadata COUNT is exact again. The 'after' aggregate below
-      // then exercises the converted (positional) read path vs DuckDB.
-      eng.sql("CALL convert_equality_deletes('orders_eq')")
-      val conv = st.dataFilesAsOf("orders_eq", None)
-      val convProof = v1.subsetOf(conv.map(_.path).toSet) &&
-        conv.forall(_.deletes.forall(!_.isEquality)) &&
-        st.snapshotMetaAsOf("orders_eq", None).exists(_._2 >= 0L)
-      eng.sql("SELECT 'after' AS phase, COUNT(*) AS cnt, " +
-          "ROUND(SUM(o_totalprice), 2) AS rev FROM orders_eq")
-        .unionByName(eng.sql("SELECT 'before' AS phase, COUNT(*) AS cnt, " +
-          "ROUND(SUM(o_totalprice), 2) AS rev FROM orders_eq " +
-          "FOR SYSTEM_VERSION AS OF 1"))
-        .withColumn("eq_proof", lit(eqProof))
-        .withColumn("conv_proof", lit(convProof))
-        .orderBy(col("phase"))
-    },
-
-    "q_dml_subquery" -> benchSplit { (s, dir) =>
-      val cat = tempCatalog(s)
-      val eng = new Engine(cat)
-      val orders = t(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-      val cust = t(s, dir, "customer")
-        .select(col("c_custkey"), col("c_acctbal"))
-      cat.createTable("orders_su", orders.schema)
-      cat.createTable("cust_su", cust.schema)
-      cat.append("orders_su", orders, 1000L)
-      cat.append("cust_su", cust, 1000L)
-      // cross-table subquery DML: the store's predicate walker cannot
-      // evaluate these — the engine seam does, file-granular
-      eng.sql("DELETE FROM orders_su WHERE o_custkey IN " +
-        "(SELECT c_custkey FROM cust_su WHERE c_acctbal < 0)")
-      eng.sql("UPDATE orders_su SET o_totalprice = o_totalprice + " +
-        "(SELECT COUNT(*) FROM cust_su WHERE c_acctbal < 0) " +
-        "WHERE o_orderkey IN " +
-        "(SELECT c_custkey FROM cust_su WHERE c_acctbal > 9000)")
-      eng
-    } { eng =>
-      eng.sql("SELECT COUNT(*) AS cnt, " +
-        "ROUND(SUM(o_totalprice), 2) AS rev FROM orders_su")
-    },
-
-    "q_meta_agg" -> benchSplit { (s, dir) =>
-      val cat = tempCatalog(s)
-      val eng = new Engine(cat)
-      val orders = t(s, dir, "orders")
-      cat.createTable("orders_mg", orders.schema,
-        Some(graft.store.PartitionSpec("o_orderdate", "month")))
-      cat.append("orders_mg", orders.filter(col("o_orderkey") % 2 === 0)
-        .repartition(date_format(col("o_orderdate"), "yyyy-MM")), 1000L)
-      cat.append("orders_mg", orders.filter(col("o_orderkey") % 2 === 1)
-        .repartition(date_format(col("o_orderdate"), "yyyy-MM")), 2000L)
-      eng
-    } { eng =>
-      // metadata-answered COUNT/MIN/MAX: the partition-aligned WHERE
-      // folds only the matching files' footer stats, the as-of form
-      // folds the pinned snapshot's — and the PROOF rides the checked
-      // tuple: a plan that fell through to a file scan flips the
-      // boolean and fails the oracle hash-compare
-      def stamp(phase: String, df: DataFrame): DataFrame = {
-        val plan = df.queryExecution.executedPlan.toString
-        val fromMeta = plan.contains("LocalTableScan") &&
-          !plan.contains("FileScan")
-        df.withColumn("phase", lit(phase))
-          .withColumn("from_metadata", lit(fromMeta))
-      }
-      val cur = eng.sql("SELECT COUNT(*) AS cnt, MIN(o_orderkey) AS min_key, " +
-        "MAX(o_orderkey) AS max_key FROM orders_mg " +
-        "WHERE o_orderdate >= TIMESTAMP '2000-03-01 00:00:00' " +
-        "AND o_orderdate < TIMESTAMP '2000-06-01 00:00:00'")
-      val v1 = eng.sql("SELECT COUNT(*) AS cnt, MIN(o_orderkey) AS min_key, " +
-        "MAX(o_orderkey) AS max_key FROM orders_mg FOR SYSTEM_VERSION AS OF 1")
-      stamp("cur", cur).unionByName(stamp("v1", v1)).orderBy(col("phase"))
-    },
-
-    // build = k-means + the partitioned index write; probe = the
-    // nprobe-pruned read, so a probe-side regression cannot hide behind
-    // index construction.
-    "q_embed_ivf" -> benchSplit({ (s, dir) =>
-      val idx = scratchDir("graft-ivf").toString
-      ivfBuild(s, dir, idx)
-      (s, dir, idx)
-    }, partNames = ("build", "probe")) { case (s, dir, idx) =>
-      rankedIds(ivfProbeQuery(s, dir, idx))
-    },
-
-    "q_stream_table" -> drainSplit { (s, dir, drain) =>
-      val cat = tempCatalog(s)
-      val orders = t(s, dir, "orders")
-      cat.createTable("orders_stream", orders.schema)
-      cat.append("orders_stream", orders.filter(col("o_orderkey") % 2 === 0), 1000L)
-      val sink = "stream_sink_" + java.util.UUID.randomUUID().toString.takeWhile(_ != '-')
-      val q = s.readStream.format("graft-table")
-        .option("warehouse", cat.warehouse.toString)
-        .option("table", "orders_stream").load()
-        .writeStream.format("memory").queryName(sink).outputMode("append").start()
-      try {
-        drain(q)
-        cat.append("orders_stream", orders.filter(col("o_orderkey") % 2 === 1), 2000L)
-        drain(q)
-      } finally q.stop()
-      s.table(sink)
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("cnt"), round(sum(col("o_totalprice")), 2).as("revenue"))
-        .orderBy(col("o_orderstatus"))
-    },
-
-    "q_stream_join" -> drainSplit { (s, dir, drain) =>
-      val cat = tempCatalog(s)
-      // the nanos-aware reader normalizes the testdata's nanos form; the
-      // table stores ts as NTZ (int64 in every parquet output mode —
-      // an LTZ column under an INT96 writer would hand the stream
-      // source INT96 pages) and the stream casts back to the zoned
-      // type watermarks require, the same seam q_stream_dedup uses
-      val ev = events(s, dir)
-        .withColumn("ts", col("ts").cast("timestamp_ntz"))
-      cat.createTable("events_sj", ev.schema)
-      cat.append("events_sj", ev, 1000L)
-      def side(tpe: String, p: String): DataFrame =
-        s.readStream.format("graft-table")
-          .option("warehouse", cat.warehouse.toString)
-          .option("table", "events_sj").load()
-          .filter(col("event_type") === tpe)
-          .select(col("user_id").as(p + "_user"),
-            col("ts").cast("timestamp").as(p + "_ts"),
-            col("value").as(p + "_value"))
-      val joined = graft.streaming.EventStreams.joinStreams(
-        side("click", "c"), side("purchase", "p"),
-        "c_user", "p_user", "c_ts", "p_ts",
-        lag = "1 hour", watermarkDelay = "720 hours")
-      val sink = "stream_join_" + java.util.UUID.randomUUID().toString.takeWhile(_ != '-')
-      val q = joined.writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try drain(q) finally q.stop()
-      s.table(sink).agg(
-        count(lit(1)).as("n_pairs"),
-        countDistinct(col("c_user")).as("n_users"),
-        round(sum(col("p_value")), 2).as("purchase_total"))
-    },
-
-    "q_stream_dedup" -> drainSplit { (s, dir, drain) =>
-      val cat = tempCatalog(s)
-      val orders = t(s, dir, "orders")
-      cat.createTable("orders_sd", orders.schema)
-      cat.append("orders_sd", orders.filter(col("o_orderkey") % 2 === 0), 1000L)
-      val sink = "stream_dedup_" + java.util.UUID.randomUUID().toString.takeWhile(_ != '-')
-      val src = s.readStream.format("graft-table")
-        .option("warehouse", cat.warehouse.toString)
-        .option("table", "orders_sd").load()
-        .select(col("o_orderkey").cast("string").as("okey"),
-          col("o_orderstatus"), col("o_totalprice"),
-          // the parquet dates surface as TIMESTAMP_NTZ; watermarks
-          // require the zoned type
-          col("o_orderdate").cast("timestamp").as("ts"))
-      val q = graft.streaming.EventStreams
-        .dedupStream(src, "okey", watermarkDelay = "87600 hours")
-        .writeStream.format("memory").queryName(sink).outputMode("append").start()
-      try {
-        drain(q)
-        cat.append("orders_sd", orders, 2000L) // evens re-delivered + odds
-        drain(q)
-      } finally q.stop()
-      s.table(sink)
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("cnt"), round(sum(col("o_totalprice")), 2).as("revenue"))
-        .orderBy(col("o_orderstatus"))
-    }
-  )
-
-  /** events.parquet has shipped with ts as either TIMESTAMP(NANOS) —
-    * which Spark's parquet reader rejects unless nanos are read as long —
-    * or plain TIMESTAMP(MICROS). Handle both: if the read schema shows a
-    * long, integer-divide nanos to micros (double math would lose
-    * precision at 1e18 nanos); if it's already a timestamp, use as-is.
-    */
-  private def events(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = t(s, dir, "events")
-    raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case _ => raw.withColumn("ts", col("ts").cast("timestamp"))
-    }
-  }
-
-  private def ts(lit: String): java.sql.Timestamp =
-    java.sql.Timestamp.valueOf(lit)
+  /** Every declared query, in tier order. A name declared twice fails
+    * here, when this object loads. */
+  private[graft] val specs: Seq[QuerySpec] = QuerySpec.registry(
+    RelationalQueries.specs ++ EventTimeQueries.specs ++
+      IcebergQueries.specs ++ DedupQueries.specs ++
+      SimilarityQueries.specs ++ PipelineQueries.specs ++
+      TextQueries.specs ++ MultimodalQueries.specs)
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * Analogue of the reference's logged flagship (`README.md:75-79`):
@@ -1291,5067 +42,22 @@ object SparkEntry {
   }
 
   /** One per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // =================================================================
-    // §2.2 projections / filters / predicates
-    // =================================================================
-
-    // P1/P3: projection + range predicate on a date column pushed to the
-    // parquet scan (PushedFilters visible in explain).
-    "q_project_filter" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .filter(col("l_shipdate") >= lit(ts("1998-01-01 00:00:00")) &&
-          col("l_shipdate") < lit(ts("1998-03-01 00:00:00")))
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
-          col("l_shipdate"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
-
-    // P4/P6/P8: equality + IN-list + BETWEEN + LIKE predicate combo.
-    "q_predicates" -> ((s, dir) => {
-      t(s, dir, "part")
-        .filter(col("p_size").between(10, 20) &&
-          col("p_type").like("%A%") &&
-          col("p_brand").isin("Brand#1", "Brand#2", "Brand#3"))
-        .select(col("p_partkey"), col("p_name"), col("p_brand"),
-          col("p_type"), col("p_size"))
-        .orderBy(col("p_partkey"))
-    }),
-
-    // P7: null predicates (nulls introduced via NULLIF, the testdata has
-    // no nullable columns) + COALESCE back-fill.
-    "q_null_pred" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .withColumn("status_o", nullif(col("o_orderstatus"), lit("O")))
-        .groupBy(coalesce(col("status_o"), lit("OPEN")).as("status"))
-        .agg(count(lit(1)).as("cnt"),
-          count(col("status_o")).as("cnt_non_null"))
-        .orderBy(col("status"))
-    }),
-
-    // =================================================================
-    // §2.3 joins
-    // =================================================================
-
-    // J1+J2+L1 flagship analogue (`README.md:75-79`): COUNT over inner
-    // join + IN-subquery (semi-join). Catalyst broadcasts nation (25 rows).
-    "q_count_join_in" -> ((s, dir) => {
-      val c = t(s, dir, "customer"); val o = t(s, dir, "orders")
-      val n = t(s, dir, "nation")
-      c.join(o, c("c_custkey") === o("o_custkey"))
-        .join(broadcast(n.filter(col("n_regionkey") === 1)),
-          c("c_nationkey") === n("n_nationkey"), "left_semi")
-        .agg(count(lit(1)).as("cnt"))
-    }),
-
-    // J3: multi-way join (5 tables) with grouped aggregation — TPC-H
-    // Q5 shape. region+nation broadcast; the big joins shuffle on keys.
-    "q_multiway_join" -> ((s, dir) => {
-      val c = t(s, dir, "customer"); val o = t(s, dir, "orders")
-      val l = t(s, dir, "lineitem"); val n = t(s, dir, "nation")
-      val r = t(s, dir, "region")
-      c.join(o, c("c_custkey") === o("o_custkey"))
-        .join(l, o("o_orderkey") === l("l_orderkey"))
-        .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
-        .join(broadcast(r.filter(col("r_name") === "ASIA")),
-          n("n_regionkey") === r("r_regionkey"))
-        .groupBy(col("n_name"))
-        .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
-          .as("revenue"))
-        .orderBy(col("n_name"))
-    }),
-
-    // J4: left outer join keeping customers with zero orders.
-    "q_left_join" -> ((s, dir) => {
-      val c = t(s, dir, "customer"); val o = t(s, dir, "orders")
-      c.join(o, c("c_custkey") === o("o_custkey"), "left")
-        .groupBy(col("c_custkey"))
-        .agg(count(col("o_orderkey")).as("n_orders"))
-        .orderBy(col("c_custkey"))
-    }),
-
-    // J2: semi-join (EXISTS).
-    "q_semi_join" -> ((s, dir) => {
-      val c = t(s, dir, "customer"); val o = t(s, dir, "orders")
-      c.join(o.filter(col("o_totalprice") > 100000.0),
-          c("c_custkey") === o("o_custkey"), "left_semi")
-        .select(col("c_custkey"), col("c_name"))
-        .orderBy(col("c_custkey"))
-    }),
-
-    // J4: anti-join (NOT EXISTS) — customers with no EARLY orders. The
-    // orders side is date-restricted so the result is provably
-    // non-empty (every customer in the driver's testdata has SOME
-    // order, so the unrestricted form matched on 0 rows and gated
-    // nothing) while still excluding most customers — both branches of
-    // the anti-join are exercised.
-    "q_anti_join" -> ((s, dir) => {
-      val c = t(s, dir, "customer"); val o = t(s, dir, "orders")
-      val early = o.filter(col("o_orderdate") < lit(ts("1997-01-01 00:00:00")))
-      c.join(early, c("c_custkey") === early("o_custkey"), "left_anti")
-        .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
-        .orderBy(col("c_custkey"))
-    }),
-
-    // J2 (SQL form): CORRELATED EXISTS through the SQL parser — the
-    // exact shape an NL→SQL model emits (the DataFrame left_semi twin
-    // is q_semi_join). Catalyst decorrelates to the same semi-join.
-    "q_exists_subquery" -> ((s, dir) => {
-      t(s, dir, "customer").createOrReplaceTempView("v_exq_customer")
-      t(s, dir, "orders").createOrReplaceTempView("v_exq_orders")
-      s.sql("""SELECT c_custkey, c_name FROM v_exq_customer c
-              |WHERE EXISTS (SELECT 1 FROM v_exq_orders o
-              |              WHERE o.o_custkey = c.c_custkey
-              |                AND o.o_totalprice > 300000.0)
-              |ORDER BY c_custkey""".stripMargin)
-    }),
-
-    // Uncorrelated SCALAR subquery as a filter threshold. The threshold
-    // is max/2 — an EXACT double (power-of-two divide of one input
-    // value), so the comparison cannot flip on cross-engine FP drift
-    // the way an avg() threshold could.
-    "q_scalar_subquery" -> ((s, dir) => {
-      t(s, dir, "orders").createOrReplaceTempView("v_ssq_orders")
-      s.sql("""SELECT o_orderstatus, count(*) AS cnt
-              |FROM v_ssq_orders
-              |WHERE o_totalprice > (SELECT max(o_totalprice) / 2 FROM v_ssq_orders)
-              |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)
-    }),
-
-    // =================================================================
-    // §2.4 aggregations
-    // =================================================================
-
-    // A1: global COUNT(*) with a date filter (`README.md:114-116` shape).
-    "q_filter_count" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .filter(col("o_orderdate") >= lit(ts("1999-01-01 00:00:00")))
-        .agg(count(lit(1)).as("cnt"))
-    }),
-
-    // A2: global MAX (id-continuation pattern, `append_iceberg.py:116`).
-    "q_max_key" -> ((s, dir) =>
-      t(s, dir, "customer").agg(max(col("c_custkey")).as("max_key"),
-        min(col("c_custkey")).as("min_key"))),
-
-    // A3: grouped SUM — the "revenue by type" question (`app-gradio.py:114`).
-    "q_group_revenue" -> ((s, dir) => {
-      val c = t(s, dir, "customer"); val o = t(s, dir, "orders")
-      c.join(o, c("c_custkey") === o("o_custkey"))
-        .groupBy(col("c_mktsegment"))
-        .agg(round(sum(col("o_totalprice")), 2).as("revenue"),
-          count(lit(1)).as("n_orders"))
-        .orderBy(col("c_mktsegment"))
-    }),
-
-    // A1-A4 combined: TPC-H Q1 pricing summary (partial+final hash agg).
-    "q_pricing_summary" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .filter(col("l_shipdate") <= lit(ts("2001-09-01 00:00:00")))
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          round(sum(col("l_quantity")), 2).as("sum_qty"),
-          round(sum(col("l_extendedprice")), 2).as("sum_base_price"),
-          round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
-            .as("sum_disc_price"),
-          round(avg(col("l_quantity")), 4).as("avg_qty"),
-          round(avg(col("l_discount")), 4).as("avg_disc"),
-          count(lit(1)).as("count_order"))
-        .orderBy(col("l_returnflag"), col("l_linestatus"))
-    }),
-
-    // A4: AVG / MIN / COUNT(DISTINCT) + HAVING post-aggregation filter.
-    "q_having_distinct" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .groupBy(col("l_suppkey"))
-        .agg(countDistinct(col("l_partkey")).as("n_parts"),
-          round(avg(col("l_quantity")), 4).as("avg_qty"),
-          round(min(col("l_extendedprice")), 2).as("min_price"))
-        .filter(col("n_parts") > 10)
-        .orderBy(col("l_suppkey"))
-    }),
-
-    // TPC-H Q6: tight scan+filter+single agg (filter pushdown showcase).
-    "q_forecast_revenue" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .filter(col("l_shipdate") >= lit(ts("1996-01-01 00:00:00")) &&
-          col("l_shipdate") < lit(ts("1997-01-01 00:00:00")) &&
-          col("l_discount").between(0.02, 0.06) &&
-          col("l_quantity") < 24)
-        .agg(round(sum(col("l_extendedprice") * col("l_discount")), 2)
-          .as("revenue"))
-    }),
-
-    // A5 (beyond reference): ROLLUP grouping sets.
-    "q_rollup" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("cnt"), round(sum(col("l_quantity")), 2).as("qty"))
-        .select(coalesce(col("l_returnflag"), lit("ALL")).as("rflag"),
-          coalesce(col("l_linestatus"), lit("ALL")).as("lstatus"),
-          col("cnt"), col("qty"))
-        .orderBy(col("rflag"), col("lstatus"))
-    }),
-
-    // A5b (beyond reference): full CUBE — all four grouping sets in one
-    // pass (Catalyst expands to a single Expand + hash agg, not four
-    // scans).
-    "q_cube" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .cube(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("cnt"),
-          round(sum(col("l_extendedprice")), 2).as("rev"))
-        .select(coalesce(col("l_returnflag"), lit("ALL")).as("rflag"),
-          coalesce(col("l_linestatus"), lit("ALL")).as("lstatus"),
-          col("cnt"), col("rev"))
-        .orderBy(col("rflag"), col("lstatus"))
-    }),
-
-    // A5c (beyond reference): explicit GROUPING SETS — two disjoint
-    // one-column sets (status totals ∪ priority totals) from ONE scan.
-    "q_grouping_sets" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .groupingSets(
-          Seq(Seq(col("o_orderstatus")), Seq(col("o_orderpriority"))),
-          col("o_orderstatus"), col("o_orderpriority"))
-        .agg(count(lit(1)).as("cnt"),
-          round(sum(col("o_totalprice")), 2).as("rev"))
-        .select(coalesce(col("o_orderstatus"), lit("ALL")).as("status"),
-          coalesce(col("o_orderpriority"), lit("ALL")).as("prio"),
-          col("cnt"), col("rev"))
-        .orderBy(col("status"), col("prio"))
-    }),
-
-    // A6 (beyond reference): exact percentiles — the distribution view a
-    // data-quality pipeline needs before clipping/outlier rules. Exact
-    // `percentile` (sort-based per group), not `percentile_approx`: the
-    // quartile fractions over whole-numbered quantities interpolate to
-    // exactly-representable doubles, so the DuckDB oracle hash-matches.
-    "q_percentiles" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"))
-        .agg(count(lit(1)).as("cnt"),
-          percentile(col("l_quantity"), lit(0.25)).as("qty_p25"),
-          percentile(col("l_quantity"), lit(0.5)).as("qty_p50"),
-          percentile(col("l_quantity"), lit(0.75)).as("qty_p75"))
-        .orderBy(col("l_returnflag"))
-    }),
-
-    // =================================================================
-    // §2.5 window functions (built-in; beyond-reference tier)
-    // =================================================================
-
-    // Top order per customer via ROW_NUMBER.
-    "q_window_rank" -> ((s, dir) => {
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      t(s, dir, "orders")
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("o_custkey"), col("o_orderkey"),
-          round(col("o_totalprice"), 2).as("top_price"))
-        .orderBy(col("o_custkey"))
-    }),
-
-    // Running total per supplier (deterministic frame order).
-    "q_window_running" -> ((s, dir) => {
-      val w = Window.partitionBy(col("l_suppkey"))
-        .orderBy(col("l_shipdate"), col("l_orderkey"), col("l_linenumber"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      t(s, dir, "lineitem")
-        .filter(col("l_suppkey") <= 3)
-        .withColumn("running_qty", round(sum(col("l_quantity")).over(w), 2))
-        .select(col("l_suppkey"), col("l_orderkey"), col("l_linenumber"),
-          col("running_qty"))
-        .orderBy(col("l_suppkey"), col("l_orderkey"), col("l_linenumber"))
-    }),
-
-    // =================================================================
-    // §2.6 sorts / limits / top-k
-    // =================================================================
-
-    // L2: ORDER BY + LIMIT ⇒ TakeOrderedAndProject (no global sort).
-    "q_topk_orders" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-        .select(col("o_orderkey"), col("o_custkey"),
-          round(col("o_totalprice"), 2).as("price"))
-        .limit(10)
-    }),
-
-    // TPC-H Q3 shape: join + group + top-k by computed revenue.
-    "q_shipping_priority" -> ((s, dir) => {
-      val c = t(s, dir, "customer"); val o = t(s, dir, "orders")
-      val l = t(s, dir, "lineitem")
-      c.filter(col("c_mktsegment") === "BUILDING")
-        .join(o, c("c_custkey") === o("o_custkey"))
-        .join(l, o("o_orderkey") === l("l_orderkey"))
-        .filter(o("o_orderdate") < lit(ts("1998-01-01 00:00:00")) &&
-          l("l_shipdate") > lit(ts("1998-01-01 00:00:00")))
-        .groupBy(col("o_orderkey"), col("o_orderdate"))
-        .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
-          .as("revenue"))
-        .orderBy(col("revenue").desc, col("o_orderkey"))
-        .limit(10)
-    }),
-
-    // =================================================================
-    // §2.7 set operations (beyond-reference tier)
-    // =================================================================
-
-    "q_set_ops" -> ((s, dir) => {
-      val c = t(s, dir, "customer").select(col("c_nationkey").as("key"))
-      val su = t(s, dir, "supplier").select(col("s_nationkey").as("key"))
-      c.union(su).distinct()
-        .except(t(s, dir, "nation").filter(col("n_regionkey") === 4)
-          .select(col("n_nationkey").as("key")))
-        .orderBy(col("key"))
-    }),
-
-    // =================================================================
-    // §2.7b reshaping: PIVOT / UNPIVOT (beyond-reference tier)
-    // =================================================================
-
-    // PIVOT with an EXPLICIT value list — the values clause keeps the
-    // plan a single pass (Catalyst needs no distinct-values pre-query,
-    // which at 100 TB would be a second full scan).
-    "q_pivot" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .groupBy(year(col("o_orderdate")).cast("int").as("yr"))
-        .pivot("o_orderstatus", Seq("F", "O", "P"))
-        .agg(round(sum(col("o_totalprice")), 2))
-        .select(col("yr"),
-          coalesce(col("F"), lit(0.0)).as("f_total"),
-          coalesce(col("O"), lit(0.0)).as("o_total"),
-          coalesce(col("P"), lit(0.0)).as("p_total"))
-        .orderBy(col("yr"))
-    }),
-
-    // UNPIVOT (melt) back to long form — wide per-status counts become
-    // (yr, status, cnt) rows; scan-local Expand, no shuffle beyond the
-    // feeding aggregation.
-    "q_unpivot" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .groupBy(year(col("o_orderdate")).cast("int").as("yr"))
-        .agg(count(when(col("o_orderstatus") === "F", 1)).as("f_cnt"),
-          count(when(col("o_orderstatus") === "O", 1)).as("o_cnt"),
-          count(when(col("o_orderstatus") === "P", 1)).as("p_cnt"))
-        .unpivot(Array(col("yr")),
-          Array(col("f_cnt"), col("o_cnt"), col("p_cnt")), "status", "cnt")
-        .orderBy(col("yr"), col("status"))
-    }),
-
-    // =================================================================
-    // §2.8 scalar functions
-    // =================================================================
-
-    // F1/F2/F7: date extraction + arithmetic + truncation.
-    "q_date_functions" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .withColumn("yr", year(col("o_orderdate")))
-        .withColumn("mo", month(col("o_orderdate")))
-        .groupBy(col("yr"), col("mo"))
-        .agg(count(lit(1)).as("cnt"),
-          round(sum(col("o_totalprice")), 2).as("revenue"))
-        .filter(col("yr") === 2000)
-        .orderBy(col("yr"), col("mo"))
-    }),
-
-    // string functions: upper/substring/concat/length/trim.
-    "q_string_functions" -> ((s, dir) => {
-      t(s, dir, "part")
-        .select(col("p_partkey"),
-          upper(col("p_brand")).as("brand_u"),
-          substring(col("p_name"), 1, 5).as("name5"),
-          concat_ws("-", col("p_brand"), col("p_type")).as("brand_type"),
-          length(col("p_name")).cast("int").as("name_len"))
-        .orderBy(col("p_partkey"))
-    }),
-
-    // CASE expression + numeric cast/round (F4/F6 analogues).
-    "q_case_expr" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .withColumn("bucket",
-          when(col("o_totalprice") > 200000, "high")
-            .when(col("o_totalprice") > 100000, "mid")
-            .otherwise("low"))
-        .groupBy(col("bucket"))
-        .agg(count(lit(1)).as("cnt"),
-          round(avg(col("o_totalprice")), 2).as("avg_price"))
-        .orderBy(col("bucket"))
-    }),
-
-    // JSON extraction from the events.props column.
-    "q_json_extract" -> ((s, dir) => {
-      events(s, dir)
-        .withColumn("k", get_json_object(col("props"), "$.k").cast("int"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("cnt"), round(avg(col("k")), 4).as("avg_k"))
-        .orderBy(col("event_type"))
-    }),
-
-    // =================================================================
-    // §2.10-analogue: event-time processing in batch. The streaming
-    // forms live in graft.streaming.EventStreams (watermarked windowed
-    // aggregation, mapGroupsWithState sessionization, micro-batch
-    // snapshot sink — MemoryStream-tested); these are the
-    // oracle-checkable batch twins of the same logic.
-    // =================================================================
-
-    // Tumbling-window aggregation (1 hour) per event type.
-    "q_events_hourly" -> ((s, dir) => {
-      events(s, dir)
-        .withColumn("hour", date_trunc("hour", col("ts")))
-        .groupBy(col("hour"), col("event_type"))
-        .agg(count(lit(1)).as("cnt"), round(sum(col("value")), 2).as("total_value"))
-        .filter(col("hour") < lit(ts("2024-01-02 00:00:00")))
-        .orderBy(col("hour"), col("event_type"))
-    }),
-
-    // Sessionization via gaps-and-islands (30 min inactivity gap).
-    "q_sessionize" -> ((s, dir) => {
-      val byUser = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      events(s, dir)
-        .withColumn("prev_ts", lag(col("ts"), 1).over(byUser))
-        .withColumn("new_session",
-          when(col("prev_ts").isNull ||
-            col("ts").cast("double") - col("prev_ts").cast("double") > 1800.0, 1)
-            .otherwise(0))
-        .groupBy(col("user_id"))
-        .agg(sum(col("new_session")).as("n_sessions"),
-          count(lit(1)).as("n_events"))
-        .orderBy(col("user_id"))
-    }),
-
-    // =================================================================
-    // Iceberg-semantics surface (S1/S2/S3/S6/S7, §2.1) on the native
-    // snapshot store: append → snapshot; AS OF → pinned file set;
-    // history → metadata frame; compact → replace snapshot.
-    // =================================================================
-
-    // S2: time travel through the SQL rewriter (rule 3, `app-gradio.py:138`).
-    "q_tt_asof" -> ((s, dir) => {
-      val cat = tempCatalog(s)
-      val nation = t(s, dir, "nation")
-      cat.createTable("nation_v", nation.schema)
-      cat.append("nation_v", nation.filter(col("n_nationkey") < 13), 1000L)
-      cat.append("nation_v", nation.filter(col("n_nationkey") >= 13), 2000L)
-      new Engine(cat).sql(
-        "SELECT n_nationkey, n_name, n_regionkey FROM nation_v " +
-          "FOR SYSTEM_TIME AS OF '1970-01-01 00:00:01.500' ORDER BY n_nationkey")
-    }),
-
-    // S2b: snapshot-id travel (`FOR SYSTEM_VERSION AS OF`) — version 1
-    // = the first append only.
-    "q_tt_version" -> ((s, dir) => {
-      val cat = tempCatalog(s)
-      val nation = t(s, dir, "nation")
-      cat.createTable("nation_sv", nation.schema)
-      cat.append("nation_sv", nation.filter(col("n_nationkey") < 13), 1000L)
-      cat.append("nation_sv", nation.filter(col("n_nationkey") >= 13), 2000L)
-      new Engine(cat).sql(
-        "SELECT n_nationkey, n_name, n_regionkey FROM nation_sv " +
-          "FOR SYSTEM_VERSION AS OF 1 ORDER BY n_nationkey")
-    }),
-
-    // Named snapshot ref (Iceberg tag): the tag pins the first append
-    // and time travel reads through it by NAME — the release-marker
-    // read (`FOR SYSTEM_VERSION AS OF '<tag>'`). Tag lifecycle +
-    // expire-protection invariants live in TagSpec; the tagged read's
-    // rows are oracle-checked here.
-    "q_tt_tag" -> ((s, dir) => {
-      val cat = tempCatalog(s)
-      val eng = new Engine(cat)
-      val nation = t(s, dir, "nation")
-      cat.createTable("nation_tag", nation.schema)
-      cat.append("nation_tag", nation.filter(col("n_nationkey") < 13), 1000L)
-      eng.sql("ALTER TABLE nation_tag CREATE TAG v1")
-      cat.append("nation_tag", nation.filter(col("n_nationkey") >= 13), 2000L)
-      eng.sql(
-        "SELECT n_nationkey, n_name, n_regionkey FROM nation_tag " +
-          "FOR SYSTEM_VERSION AS OF 'v1' ORDER BY n_nationkey")
-    }),
-
-    // Sorted table read: SORT BY range-clusters writes so per-file
-    // min/max bounds are tight and disjoint — a key-range predicate
-    // prunes to the files covering that slice (readWhere re-applies the
-    // predicate in full; pruning is conservative). File-count assertions
-    // live in CowAndPartitionSpec; this verifies the pruned read's ROWS.
-    "q_sorted_prune" -> ((s, dir) => {
-      val cat = tempCatalog(s)
-      val orders = t(s, dir, "orders")
-      cat.createTable("orders_sorted", orders.schema, sortBy = Seq("o_orderkey"))
-      cat.append("orders_sorted", orders, 1000L)
-      cat.tableWhere("orders_sorted",
-          col("o_orderkey").between(4000, 8000))
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("cnt"),
-          round(sum(col("o_totalprice")), 2).as("revenue"))
-        .orderBy(col("o_orderstatus"))
-    }),
-
-    // S2c: incremental append scan — only the files added between two
-    // snapshots are read (metadata file-set diff, delta-only I/O).
-    "q_tt_incremental" -> ((s, dir) => {
-      val cat = tempCatalog(s)
-      val nation = t(s, dir, "nation")
-      cat.createTable("nation_inc", nation.schema)
-      val v1 = cat.append("nation_inc", nation.filter(col("n_nationkey") < 13), 1000L)
-      cat.append("nation_inc", nation.filter(col("n_nationkey") >= 13), 2000L)
-      cat.readIncremental("nation_inc", fromId = v1.id)
-        .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
-        .orderBy(col("n_nationkey"))
-    }),
-
-    // §2.10 + S2b composed: the DSv2 `graft-table` streaming source —
-    // two appends arrive as two micro-batches via spark.readStream over
-    // the incremental append scan (delta files only, offsets = snapshot
-    // ids); the streamed rows aggregate to exactly the source table's
-    // aggregate, proving exactly-once delivery end-to-end.
-    "q_stream_table" -> benchSplits("q_stream_table").composed,
-
-    // Streaming CDC through the DSv2 source (readChangeFeed=true): the
-    // stream delivers row-level insert/delete changes — the append
-    // batch from data files, the COW delete from its MATERIALIZED
-    // change files — and the memory sink accumulates exactly the same
-    // feed the batch oracle reconstructs. The fixture's UPDATE/DELETE
-    // land AFTER the stream starts, so micro-batch planning (not a
-    // catch-up scan) is what's proven.
-    "q_stream_cdc" -> ((s, dir) => {
-      val cat = tempCatalog(s)
-      val eng = new Engine(cat)
-      val orders = t(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_totalprice"))
-      cat.createTable("orders_cdc", orders.schema)
-      cat.store().setChangeFeed("orders_cdc", enabled = true)
-      cat.append("orders_cdc", orders.filter(col("o_orderkey") % 3 === 0), 1000L)
-      val sink = "cdc_sink_" + java.util.UUID.randomUUID().toString.takeWhile(_ != '-')
-      val q = s.readStream.format("graft-table")
-        .option("warehouse", cat.warehouse.toString)
-        .option("table", "orders_cdc")
-        .option("readChangeFeed", "true").load()
-        .writeStream.format("memory").queryName(sink).outputMode("append").start()
-      try {
-        q.processAllAvailable()
-        eng.sql("UPDATE orders_cdc SET o_totalprice = o_totalprice + 1 " +
-          "WHERE o_orderkey % 7 = 0")
-        eng.sql("DELETE FROM orders_cdc WHERE o_orderkey % 5 = 0")
-        eng.sql("OPTIMIZE orders_cdc")
-        q.processAllAvailable()
-      } finally q.stop()
-      s.table(sink)
-        .select(col("o_orderkey"),
-          round(col("o_totalprice"), 2).as("price"),
-          col("_change_type").as("change_type"),
-          col("_commit_snapshot_id").as("commit_id"))
-        .orderBy(col("commit_id"), col("o_orderkey"), col("change_type"))
-    }),
-
-    // §2.10 + dedup composed: STREAMING NEAR-DUP detection (MinHash+LSH
-    // banding with per-bucket state, then exact verification — the same
-    // candidates→verify shape as the batch path) — WITH the bounded-
-    // state claim on the oracle path: buckets run a finite EVENT-TIME
-    // timeout (watermark-driven, so eviction is replay-deterministic —
-    // no sleeps, no wall clock). Originals arrive in batch 1, exact
-    // twins (doc_id+100000) in batch 2 INSIDE the horizon — every twin
-    // must pair with its original ACROSS the batch boundary (identical
-    // text ⇒ all bands collide, recall structural at jaccard 1). Two
-    // non-colliding watermark-advancer batches then push the watermark
-    // past the horizon, evicting every live bucket; batch 5 re-delivers
-    // the same texts under ids +200000/+300000 — those must pair ONLY
-    // with each other (within the batch), never with the evicted
-    // originals. If eviction silently stopped working, the extra cross-
-    // pairs fail the oracle hash-compare. Fuzzy band collisions are
-    // correct LSH output; verification filters them at the threshold,
-    // so the oracle can derive the exact token-identical pair set.
-    "q_stream_neardup" -> ((s, dir) => {
-      val base = t(s, dir, "documents").filter(col("doc_id") < 25)
-        .select(col("doc_id"), col("text"))
-      val docs = base.collect()
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      implicit val sqlCtx = s.sqlContext
-      import s.implicits._
-      val input = MemoryStream[(Long, String, java.sql.Timestamp)]
-      val stream = input.toDF.toDF("doc_id", "text", "ts")
-      val pairs = graft.streaming.EventStreams.nearDupStream(s, stream,
-        "doc_id", "text", "ts", stateTimeout = None,
-        eventTimeTimeoutMs = Some(600_000L)) // 10-minute horizon
-      val sink = "neardup_" + java.util.UUID.randomUUID().toString.takeWhile(_ != '-')
-      val q = pairs.toDF.writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      def ts(sec: Long) = new java.sql.Timestamp(sec * 1000L)
-      try {
-        input.addData(docs.toSeq.map(r =>
-          (r.getLong(0), r.getString(1), ts(1000L))))
-        q.processAllAvailable()
-        // twins 100 s later — well inside the 600 s horizon
-        input.addData(docs.toSeq.map(r =>
-          (r.getLong(0) + 100000L, r.getString(1), ts(1100L))))
-        q.processAllAvailable()
-        // two advancer batches (unique non-colliding texts): the first
-        // moves the watermark past every bucket's expiry, the second
-        // triggers the timeout pass that removes them (a bucket only
-        // times out in a batch that brings it no data)
-        input.addData(Seq((900001L,
-          "zq xv qj wk vz kx jq wv zx qk vw kz jx", ts(100000L))))
-        q.processAllAvailable()
-        input.addData(Seq((900002L,
-          "pf gy fb yd gp bf yg df pb gd fy bp dg", ts(100001L))))
-        q.processAllAvailable()
-        // same texts again — buckets were evicted, so these pair only
-        // within the batch (+200000 with +300000), never with batch 1/2
-        input.addData(docs.toSeq.flatMap(r => Seq(
-          (r.getLong(0) + 200000L, r.getString(1), ts(100002L)),
-          (r.getLong(0) + 300000L, r.getString(1), ts(100002L)))))
-        q.processAllAvailable()
-      } finally q.stop()
-      val candidates = s.table(sink)
-        .select(least(col("id_a").cast("long"), col("id_b").cast("long"))
-            .as("id_a"),
-          greatest(col("id_a").cast("long"), col("id_b").cast("long"))
-            .as("id_b"))
-        .distinct()
-      val all = base.unionByName(base.select(
-          (col("doc_id") + 100000L).as("doc_id"), col("text")))
-        .unionByName(base.select(
-          (col("doc_id") + 200000L).as("doc_id"), col("text")))
-        .unionByName(base.select(
-          (col("doc_id") + 300000L).as("doc_id"), col("text")))
-      Dedup.ngramJaccard(all, candidates, "doc_id", "text")
-        .filter(col("ngram_jaccard") >= 1.0)
-        .select(col("id_a"), col("id_b"))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    "q_stream_upsert" -> benchSplits("q_stream_upsert").composed,
-
-    // §2.10 stream-stream watermarked INNER join, oracle-gated: click →
-    // purchase attribution within a 1-hour window, per user. Two
-    // independent graft-table source streams join on user with the
-    // MANDATORY event-time range bound — the shape whose state stays
-    // O(lag window) on an unbounded stream (joinStreams rejects
-    // unbounded forms by construction). The watermark delay spans the
-    // fixture's whole time range, so no on-time row is dropped and the
-    // streamed join must equal the static join the oracle computes.
-    "q_stream_join" -> benchSplits("q_stream_join").composed,
-
-    // §2.10 streaming EXACT dedup, oracle-gated end-to-end: the second
-    // micro-batch re-delivers every even-keyed order (duplicate rows
-    // ACROSS batches), and `dedupStream`'s watermarked state must drop
-    // them — the streamed aggregate equals the plain `orders` aggregate
-    // exactly. The watermark delay exceeds the data's full date span,
-    // so no state evicts mid-run and the dedup is exact (the documented
-    // contract; production trades delay for bounded state).
-    "q_stream_dedup" -> benchSplits("q_stream_dedup").composed,
-
-    // S1: latest-snapshot read = all appends.
-    "q_tt_latest" -> ((s, dir) => {
-      val cat = tempCatalog(s)
-      val nation = t(s, dir, "nation")
-      cat.createTable("nation_l", nation.schema)
-      cat.append("nation_l", nation.filter(col("n_nationkey") < 13), 1000L)
-      cat.append("nation_l", nation.filter(col("n_nationkey") >= 13), 2000L)
-      cat.table("nation_l").orderBy(col("n_nationkey"))
-    }),
-
-    // S3: history metadata scan (deterministic commit timestamps).
-    "q_tt_history" -> ((s, dir) => {
-      val cat = tempCatalog(s)
-      val nation = t(s, dir, "nation")
-      cat.createTable("nation_h", nation.schema)
-      cat.append("nation_h", nation.filter(col("n_nationkey") < 13), 1000L)
-      cat.append("nation_h", nation.filter(col("n_nationkey") >= 13), 2000L)
-      cat.history("nation_h")
-        .select(col("snapshot_id"), col("operation"), col("record_count"))
-        .orderBy(col("snapshot_id"))
-    }),
-
-    // Compaction: many small files → one replace snapshot, same rows.
-    "q_compact" -> ((s, dir) => {
-      val cat = tempCatalog(s)
-      val orders = t(s, dir, "orders")
-      cat.createTable("orders_c", orders.schema)
-      cat.append("orders_c", orders.filter(col("o_orderkey") % 2 === 0).repartition(4), 1000L)
-      cat.append("orders_c", orders.filter(col("o_orderkey") % 2 === 1).repartition(4), 2000L)
-      cat.compact("orders_c")
-      cat.history("orders_c")
-        .orderBy(col("snapshot_id").desc).limit(1)
-        .select(col("operation"), col("record_count"))
-    }),
-
-    // Partition pruning (hidden partitioning, Iceberg-style): orders
-    // partitioned by month(o_orderdate); a quarter-scoped read must scan
-    // only that quarter's files (asserted in CowAndPartitionSpec /
-    // PlanShapeSpec; here the result is oracle-checked). The predicate
-    // stays on the SOURCE column — the transform is hidden, as Iceberg
-    // users expect for the reference's tables (`create_iceberg.py:119-148`).
-    // `t$delete_files` metadata table (Iceberg parity): the MOR
-    // delete-debt report — a positional delete dir (record_count =
-    // positions targeted) and an equality key-tuple dir (record_count =
-    // key tuples), each with its referencing-file count, recomputed by
-    // the oracle from the raw rows.
-    "q_delete_files_meta" -> benchSplits("q_delete_files_meta").composed,
-
-    // AUTO COMPACTION (TBLPROPERTIES auto.compact): four small appends,
-    // the fourth crosses min-files and binpacks inline — ac_proof pins
-    // one final file, exactly one trailing rows-preserved replace
-    // commit, and intact pre-compact time travel; values recomputed by
-    // the oracle from the raw rows.
-    "q_auto_compact" -> benchSplits("q_auto_compact").composed,
-
-    // write.distribution-mode=hash (Iceberg's writer-side shuffle): a
-    // 16-task append to a month-partitioned table lands ONE file per
-    // month instead of 16 × months — the small-files fix that keeps a
-    // 1000-executor ingest from drowning the log in kilobyte files.
-    // wd_proof pins files == partitions; values oracle-recomputed.
-    "q_write_distribution" -> benchSplits("q_write_distribution").composed,
-
-    "q_partition_prune" -> benchSplits("q_partition_prune").composed,
-
-    // Partition-spec evolution (Iceberg contract): month(ts) files from
-    // before the ALTER keep their month values, year(ts) files after it
-    // record year values, and a cross-boundary pruned read stays correct
-    // over the mixed population — no data rewritten by the ALTER.
-    "q_partition_evolve" -> benchSplits("q_partition_evolve").composed,
-
-    // Change-data-feed scan (Iceberg changelog / Delta CDF via
-    // CALL table_changes): appends surface as tagged 'insert' rows from
-    // a metadata-only file diff; COW update/delete commits recover
-    // their net row-level changes by diffing ONLY the files each commit
-    // touched; the trailing compaction emits nothing. Snapshot ids are
-    // sequential per table, so the oracle reconstructs the exact feed —
-    // including the update's delete+insert pair and the
-    // deleted-after-update prices — from the source rows alone.
-    "q_cdc_changes" -> benchSplits("q_cdc_changes").composed,
-
-    // the SAME changelog served from materialized change files (ENABLE
-    // CHANGE FEED): each COW commit wrote its row-level diff at commit
-    // time, the scan reads those files at cost ∝ |changes| — and the
-    // oracle cannot tell the difference (value-identical by contract).
-    "q_cdc_stored" -> benchSplits("q_cdc_stored").composed,
-
-    // APPROX_COUNT_DISTINCT in a materialized view: NDV state is a
-    // mergeable DataSketches HLL sketch, refreshed INCREMENTALLY across
-    // an overlapping delta (sketch union — adding counts would
-    // double-count). At the fixture's cardinality the sketch is in its
-    // exact coupon range, so the oracle checks the estimate by value.
-    "q_mv_approx_distinct" -> benchSplits("q_mv_approx_distinct").composed,
-
-    // Retraction-based incremental view maintenance: a DELETE + UPDATE
-    // on the base refresh the count/sum/avg view FROM THE CHANGE FEED
-    // (±1-signed partial aggregate merged into state) instead of a full
-    // rebuild — the require in the fixture proves the delta path ran,
-    // the oracle recomputes the post-mutation aggregate from scratch.
-    "q_mv_retract" -> benchSplits("q_mv_retract").composed,
-
-    // Dynamic file pruning (join-driven skipping): the selective dim's
-    // collected keys probe the sorted fact's per-file min/max bounds —
-    // the scan reads only the files whose range admits a dim key, then
-    // the broadcast join and aggregation run normally. Values must
-    // equal the plain join's (pruning is conservative).
-    "q_dfp_join" -> benchSplits("q_dfp_join").composed,
-
-    // Salted join over a PLANTED hot key (70% of lineitem lands on
-    // k=0 — the celebrity-key shape a single AQE skew-split cannot
-    // always fix, since one reducer still owns the whole key): the
-    // left fans out over 8 salt sub-keys (deterministic row hash, no
-    // rand()), the small side replicates 8×, and the result must
-    // EQUAL the plain join — DuckDB recomputes it un-salted. The
-    // checked tuple carries the plan proof that the executed join
-    // keyed on the salt column.
-    "q_salted_join" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val k = when(pmod(col("l_orderkey"), lit(10)) < 7, lit(0L))
-        .otherwise(pmod(col("l_orderkey"), lit(100))).as("k")
-      val left = li.select(k, col("l_quantity"))
-      val right = s.range(0, 100).select(col("id").as("k"),
-        concat(lit("t"), col("id")).as("tag"))
-      val joined = graft.ext.Skew.saltedJoin(left, right, "k", factor = 8)
-      val saltOk =
-        joined.queryExecution.executedPlan.toString.contains("_salt")
-      joined.groupBy(col("k"), col("tag"))
-        .agg(count(lit(1)).as("cnt"),
-          round(sum(col("l_quantity")).cast("double"), 2).as("qty"))
-        .withColumn("salted_plan_ok", lit(saltOk))
-        .orderBy(col("k"))
-    }),
-
-    // CALL rollback_to_snapshot: the current state reverts to an
-    // earlier snapshot's file list via a new commit — undone snapshots
-    // stay time-travelable, and the post-rollback read answers from the
-    // rolled-back file set only.
-    "q_sql_rollback" -> benchSplits("q_sql_rollback").composed,
-
-    // CLUSTERED BY … INTO n BUCKETS through SQL DDL: both sides of the
-    // hot join are written bucket-aligned on the join key, so the
-    // sort-merge join plans with NO shuffle exchange (plan-asserted in
-    // SqlDdlSpec) — at 100 TB, the fact table is read join-ready
-    // instead of reshuffled per query.
-    "q_bucket_join" -> benchSplits("q_bucket_join").composed,
-
-    // bucket(16, key) partition transform (Iceberg's hash transform):
-    // point-key DELETE and SELECT touch 1/16th of the files from log
-    // metadata alone — the prune hashes the literal with the same
-    // murmur3 expression the write shuffled by (file-count-asserted in
-    // TransformSpec/SqlDdlSpec; at 100 TB this is what makes a key
-    // lookup or a single-key COW delete file-granular).
-    "q_bucket_prune" -> benchSplits("q_bucket_prune").composed,
-
-    // truncate(w, key) partition transform: width-floored slots give
-    // range predicates real partition pruning (slot count asserted in
-    // TransformSpec) — the integer sibling of day()-style binning.
-    "q_truncate_prune" -> benchSplits("q_truncate_prune").composed,
-
-    // Bloom-filter file skipping (ALTER TABLE … SET BLOOM FILTER):
-    // point lookups on an UNSORTED high-cardinality key, where min/max
-    // bounds span the whole domain in every file. Two tiers: parquet
-    // row-group filters built by the executors during the write, plus
-    // capped per-file filters in the snapshot log so the file list
-    // prunes from metadata alone (file counts asserted in
-    // BloomFilterSpec; here the needle answer AND the skip proof are
-    // oracle-checked — `bloom_pruned` encodes "touched ≤ 2 of N files").
-    "q_bloom_prune" -> benchSplits("q_bloom_prune").composed,
-
-    // OPTIMIZE … ZORDER BY (a, b): Morton-curve re-clustering so
-    // per-file min/max bounds are tight in BOTH probe dimensions and a
-    // 2-D box predicate skips most files from log metadata (skip ratio
-    // asserted in ZOrderSpec; here the rewritten table's answer is
-    // oracle-checked against the raw rows).
-    "q_zorder" -> benchSplits("q_zorder").composed,
-
-    // Iceberg schema evolution, RENAME COLUMN: metadata-only — files
-    // written before the rename keep the old physical column name and
-    // one scan reconciles both populations onto the new name (no
-    // rewrite); time travel still renders the name of its snapshot.
-    // Iceberg schema evolution, ADD + DROP: the added column null-fills
-    // for pre-ADD files and carries real values after; the dropped
-    // column disappears from reads while old files still physically
-    // carry it (tombstoned — never re-addable). Both ALTERs are
-    // metadata-only: no file is rewritten, the oracle reconstructs the
-    // visible table from the source rows and the evolution boundary.
-    "q_schema_add_drop" -> ((s, dir) => {
-      val cat = tempCatalog(s)
-      val eng = new Engine(cat)
-      val nation = t(s, dir, "nation")
-      cat.createTable("nation_ad", nation.schema)
-      cat.append("nation_ad", nation.filter(col("n_nationkey") < 13), 1000L)
-      eng.sql("ALTER TABLE nation_ad ADD COLUMN pop BIGINT")
-      cat.append("nation_ad", nation.filter(col("n_nationkey") >= 13)
-        .withColumn("pop", col("n_nationkey").cast("long") * 1000L), 2000L)
-      eng.sql("ALTER TABLE nation_ad DROP COLUMN n_regionkey")
-      cat.table("nation_ad")
-        .select(col("n_nationkey"), col("n_name"), col("pop"))
-        .orderBy(col("n_nationkey"))
-    }),
-
-    "q_schema_rename" -> ((s, dir) => {
-      val cat = tempCatalog(s)
-      val nation = t(s, dir, "nation")
-      cat.createTable("nation_rn", nation.schema)
-      cat.append("nation_rn", nation.filter(col("n_nationkey") < 13), 1000L)
-      cat.renameColumn("nation_rn", "n_name", "nation_name")
-      cat.append("nation_rn", nation.filter(col("n_nationkey") >= 13)
-        .withColumnRenamed("n_name", "nation_name"), 2000L)
-      cat.table("nation_rn").select(col("n_nationkey"), col("nation_name"))
-        .orderBy(col("n_nationkey"))
-    }),
-
-    // Iceberg schema evolution, type widening: int → bigint is a schema
-    // version bump only; pre-widening int32 files up-cast at scan time
-    // (one aggregate spans both physical widths), and post-widening rows
-    // exceed the old range.
-    "q_schema_widen" -> ((s, dir) => {
-      val cat = tempCatalog(s)
-      val eng = new Engine(cat)
-      val orders = t(s, dir, "orders")
-      cat.createTable("orders_w", org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("k",
-          org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("price",
-          org.apache.spark.sql.types.DoubleType))))
-      cat.append("orders_w", orders.filter(col("o_orderkey") % 2 === 0)
-        .select(col("o_orderkey").cast("int").as("k"),
-          col("o_totalprice").as("price")), 1000L)
-      cat.widenColumn("orders_w", "k", org.apache.spark.sql.types.LongType)
-      cat.append("orders_w", orders.filter(col("o_orderkey") % 2 === 1)
-        .select((col("o_orderkey") + lit(5000000000L)).as("k"),
-          col("o_totalprice").as("price")), 2000L)
-      eng.sql("SELECT COUNT(*) AS cnt, MAX(k) AS max_k, SUM(k) AS sum_k " +
-        "FROM orders_w")
-    }),
-
-    // Metadata-answered COUNT with a partition-aligned WHERE: the month
-    // partitioning makes every file all-in or all-out for a month-range
-    // predicate, so the engine folds per-file record counts from the log
-    // — O(files) metadata, no scan (LocalRelation plan asserted in
-    // EngineSpec); DuckDB recomputes the count from the raw rows.
-    "q_meta_count_filtered" -> benchSplits("q_meta_count_filtered").composed,
-
-    // DELETE/UPDATE with cross-table SUBQUERY predicates (IN/EXISTS/
-    // scalar): evaluated through the engine seam — one marking scan,
-    // matched files rewrite, the rest carry — because file bounds
-    // cannot prune what another table's rows decide. Oracle recomputes
-    // the final state from the raw rows.
-    "q_dml_subquery" -> benchSplits("q_dml_subquery").composed,
-
-    // Metadata-answered COUNT/MIN/MAX, filtered AND pinned: the
-    // partition-aligned WHERE folds footer stats of only the matching
-    // files, the SYSTEM_VERSION form folds the pinned snapshot's — the
-    // checked tuple carries a plan-shape boolean that flips (and fails
-    // the hash) if either answer fell through to a file scan.
-    "q_meta_agg" -> benchSplits("q_meta_agg").composed,
-
-    // INSERT OVERWRITE: one replace snapshot swaps the visible contents;
-    // time travel still serves the pre-overwrite state — both phases in
-    // one checked tuple (Delta/Iceberg overwrite semantics).
-    "q_insert_overwrite" -> benchSplits("q_insert_overwrite").composed,
-
-    // RESTORE TABLE ... TO VERSION AS OF: the rollback procedures as a
-    // first-class statement; restored rows AND the preserved history
-    // length are both oracle-pinned.
-    "q_restore" -> benchSplits("q_restore").composed,
-
-    // SHALLOW CLONE (Delta's zero-copy clone): one metadata commit
-    // references the source's files relatively — the clone's data dir
-    // is EMPTY at clone time (the zero_copy proof rides the tuple; at
-    // 100 TB this is the instant dev/test-sandbox) — then a clone-side
-    // DELETE rewrites into the clone's own dirs while the source holds
-    // every row. DuckDB recomputes both sides from the raw table.
-    "q_shallow_clone" -> ((s, dir) => {
-      val cat = tempCatalog(s)
-      val eng = new Engine(cat)
-      val orders = t(s, dir, "orders")
-      cat.createTable("orders_src", orders.schema)
-      cat.append("orders_src", orders, 1000L)
-      eng.sql("CREATE TABLE orders_clone SHALLOW CLONE orders_src")
-      val st = cat.store()
-      val hfs = st.tableDir("orders_clone")
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      val zeroCopy = hfs.listStatus(new org.apache.hadoop.fs.Path(
-        st.tableDir("orders_clone"), "data")).isEmpty
-      eng.sql("DELETE FROM orders_clone WHERE o_orderkey % 3 = 0")
-      eng.sql("SELECT 'clone' AS side, COUNT(*) AS cnt, " +
-          "ROUND(SUM(o_totalprice), 2) AS rev FROM orders_clone")
-        .unionByName(eng.sql("SELECT 'source' AS side, COUNT(*) AS cnt, " +
-          "ROUND(SUM(o_totalprice), 2) AS rev FROM orders_src"))
-        .withColumn("zero_copy", lit(zeroCopy))
-        .orderBy(col("side"))
-    }),
-
-    // APPLY CHANGES INTO (DLT-style CDC apply): one catch-up poll over
-    // the change feed nets insert/update/delete per key and mirrors the
-    // source into the target in one COW commit; the oracle recomputes
-    // the final mirrored state from the raw rows.
-    "q_apply_changes" -> benchSplits("q_apply_changes").composed,
-
-    // Merge-on-read APPLY CHANGES: the netted batch lands as one
-    // equality commit — zero target reads, zero rewrites, O(batch)
-    // per poll whatever the mirror's size (the continuously-replicated-
-    // 100 TB-table shape). Proof column pins seed-file survival +
-    // attached equality ref + metadata-COUNT decline.
-    "q_apply_changes_mor" -> benchSplits("q_apply_changes_mor").composed,
-
-    // `table_changes(...)` as a composable RELATION (Delta's
-    // table-valued form): aggregation over the feed of a DELETE and a
-    // COW UPDATE, oracle-recomputed change type by change type.
-    "q_table_changes_rel" -> benchSplits("q_table_changes_rel").composed,
-
-    // Merge-on-read row-level writes (Iceberg v2 position deletes):
-    // DELETE commits a position-delete file instead of rewriting data
-    // files — the checked tuple pins both the row semantics (after +
-    // time-traveled before vs DuckDB) and the no-rewrite proof.
-    "q_mor_delete" -> benchSplits("q_mor_delete").composed,
-
-    // MOR UPDATE (delete + appended post-images) followed by OPTIMIZE,
-    // which materializes the deletes back into clean files; values and
-    // the dirty-then-clean file-set proof are both pinned.
-    "q_mor_update" -> benchSplits("q_mor_update").composed,
-
-    // Change feed across MOR commits: deleted rows recovered from the
-    // commits' own delete files (cost ∝ changes, no exceptAll diff),
-    // value-identical to the COW feed over the same statements.
-    "q_mor_cdc" -> benchSplits("q_mor_cdc").composed,
-
-    // Three-arm MERGE under write.merge.mode=merge-on-read: deletes and
-    // update pre-images become position deletes, post-images and
-    // not-matched inserts append — no data file rewrites (proof pinned).
-    "q_mor_merge" -> benchSplits("q_mor_merge").composed,
-
-    // Equality deletes (Iceberg v2's second delete shape, the Flink CDC
-    // writer path): one upsert commit = one key-tuple file + the batch,
-    // ZERO table reads — replacements and inserts land without locating
-    // a single matched file. Proof column pins no-rewrite + attached
-    // equality ref + metadata-COUNT decline.
-    "q_eq_upsert" -> benchSplits("q_eq_upsert").composed,
-
-    // Ordered conditional MERGE arms (first match wins): a negative
-    // amount deletes, a larger amount updates, positive unmatched rows
-    // insert — the "update if newer, else ignore" warehouse shape.
-    "q_sql_merge_cond" -> ((s, dir) => {
-      val cat = tempCatalog(s)
-      val eng = new Engine(cat)
-      eng.sql("CREATE TABLE accounts_c (id INT, balance DOUBLE, status STRING)")
-      eng.sql("INSERT INTO accounts_c VALUES (1, 100.0, 'open'), " +
-        "(2, 50.0, 'open'), (3, 75.0, 'open')")
-      eng.sql("""MERGE INTO accounts_c AS t
-        USING (VALUES (1, -1.0), (2, 500.0), (4, 40.0)) AS s(id, amount)
-        ON t.id = s.id
-        WHEN MATCHED AND s.amount < 0 THEN DELETE
-        WHEN MATCHED AND s.amount > t.balance THEN
-          UPDATE SET balance = s.amount, status = 'raised'
-        WHEN NOT MATCHED AND s.amount > 0 THEN
-          INSERT (id, balance, status) VALUES (s.id, s.amount, 'new')""")
-      eng.sql("SELECT id, balance, status FROM accounts_c ORDER BY id")
-    }),
-
-    // Catalog keyed by (database, table): a dimension table lives in its
-    // own database (the reference's PC-variant layout, iceberg-PC.py:97)
-    // and joins against the current database with no USE.
-    "q_sql_multidb" -> ((s, dir) => {
-      val cat = tempCatalog(s)
-      val eng = new Engine(cat)
-      eng.sql("CREATE DATABASE IF NOT EXISTS dimdb")
-      eng.sql("CREATE TABLE dimdb.plans_md (plan_id INT, plan_name STRING)")
-      eng.sql("INSERT INTO dimdb.plans_md VALUES (1, 'basic'), (2, 'pro')")
-      eng.sql("CREATE TABLE subs_md (sub_id INT, plan_id INT)")
-      eng.sql("INSERT INTO subs_md VALUES (10, 1), (11, 2), (12, 2)")
-      eng.sql("SELECT p.plan_name, COUNT(*) AS n FROM subs_md s " +
-        "JOIN dimdb.plans_md p ON s.plan_id = p.plan_id " +
-        "GROUP BY p.plan_name ORDER BY plan_name")
-    }),
-
-    // SQL MERGE INTO (file-granular COW): update matched keys, insert the
-    // rest — the statement that replaces the reference's manual max-id
-    // continuation append (`append_iceberg.py:104-123`).
-    "q_sql_merge" -> ((s, dir) => {
-      val cat = tempCatalog(s)
-      val eng = new Engine(cat)
-      eng.sql("CREATE TABLE accounts_m (id INT, balance DOUBLE, status STRING)")
-      eng.sql("INSERT INTO accounts_m VALUES (1, 100.0, 'open'), " +
-        "(2, 50.0, 'open'), (3, 75.0, 'open')")
-      eng.sql("""MERGE INTO accounts_m AS t
-        USING (VALUES (2, 500.0), (4, 10.0)) AS s(id, amount)
-        ON t.id = s.id
-        WHEN MATCHED THEN UPDATE SET balance = s.amount, status = 'merged'
-        WHEN NOT MATCHED THEN INSERT (id, balance, status) VALUES (s.id, s.amount, 'new')""")
-      eng.sql("SELECT id, balance, status FROM accounts_m ORDER BY id")
-    }),
-
-    // S7/S8: the reference's warehouse-build script surface, replayed
-    // verbatim through the SQL engine (`create_iceberg.py:106-203`):
-    // CREATE DATABASE / USE / DROP / CREATE TABLE STORED AS ICEBERG,
-    // then batched INSERT VALUES (backtick columns, '' escaping, NULLs,
-    // string date literals) — one snapshot per INSERT — then read back.
-    "q_sql_ddl_insert" -> ((s, dir) => {
-      val cat = tempCatalog(s)
-      val eng = new Engine(cat)
-      eng.sql("CREATE DATABASE IF NOT EXISTS telco")
-      eng.sql("USE telco")
-      eng.sql("DROP TABLE IF EXISTS plans_sql")
-      eng.sql("""CREATE TABLE plans_sql (
-        plan_id INT, plan_name STRING, monthly_fee DOUBLE, launch_date DATE
-      ) STORED AS ICEBERG""")
-      eng.sql("INSERT INTO plans_sql (`plan_id`, `plan_name`, `monthly_fee`, `launch_date`) " +
-        "VALUES (1, 'Basic', 10, '2025-01-01'), (2, 'It''s Big', 49.99, '2025-02-01'), " +
-        "(3, NULL, NULL, NULL)")
-      eng.sql("INSERT INTO plans_sql (`plan_id`, `plan_name`, `monthly_fee`, `launch_date`) " +
-        "VALUES (4, 'Pro', 99, '2025-03-01')")
-      eng.sql("SELECT plan_id, plan_name, monthly_fee, launch_date " +
-        "FROM plans_sql ORDER BY plan_id")
-    }),
-
-    // Row-level write surface (Iceberg DELETE/UPDATE analogues): insert,
-    // update matched rows, delete matched rows — each one snapshot —
-    // then read back. Oracle recomputes the surviving rows.
-    // COPY INTO end-to-end: two loads of the same directory (the second
-    // must skip every already-loaded file), then an incremental third
-    // file — final rows and the per-call (loaded, skipped) ledger are
-    // literal-reconstructible.
-    "q_sql_copy_into" -> ((s, dir) => {
-      val cat = tempCatalog(s)
-      val eng = new Engine(cat)
-      eng.sql("CREATE TABLE cp (id INT, name STRING, fee DOUBLE)")
-      val scratch = scratchDir("graft-q-copy")
-      def csv(name: String, rows: String*): Unit =
-        java.nio.file.Files.writeString(scratch.resolve(name),
-          ("fee,id,name" +: rows).mkString("\n"))
-      csv("a.csv", "10.5,1,alpha", "20.0,2,beta")
-      def copy() = eng.sql(
-        s"COPY INTO cp FROM '${scratch.toUri}' FILEFORMAT = CSV").head()
-      val first = copy()
-      val second = copy() // idempotent: skips a.csv
-      csv("b.csv", "5.0,3,gamma")
-      val third = copy()  // loads only b.csv
-      eng.sql("SELECT id, name, fee FROM cp ORDER BY id")
-        .withColumn("first_loaded", lit(first.getInt(1)))
-        .withColumn("second_loaded", lit(second.getInt(1)))
-        .withColumn("third_loaded", lit(third.getInt(1)))
-        .withColumn("third_skipped", lit(third.getInt(2)))
-    }),
-
-    // column write-DEFAULTs through the SQL engine: the pre-default
-    // INSERT keeps its NULLs, post-default INSERTs store the constant,
-    // DROP DEFAULT reverts — all literal-reconstructible.
-    "q_sql_defaults" -> ((s, dir) => {
-      val cat = tempCatalog(s)
-      val eng = new Engine(cat)
-      eng.sql("CREATE TABLE dft (id INT, status STRING, fee DOUBLE)")
-      eng.sql("INSERT INTO dft (id) VALUES (1)")
-      eng.sql("ALTER TABLE dft ALTER COLUMN status SET DEFAULT 'new'")
-      eng.sql("ALTER TABLE dft ALTER COLUMN fee SET DEFAULT 10.0 + 2.5")
-      eng.sql("INSERT INTO dft (id) VALUES (2)")
-      eng.sql("ALTER TABLE dft ALTER COLUMN status DROP DEFAULT")
-      eng.sql("INSERT INTO dft (id) VALUES (3)")
-      eng.sql("SELECT id, status, fee FROM dft ORDER BY id")
-    }),
-
-    // CHECK constraints end-to-end through the SQL engine: ADD guards
-    // every later write inside the write job itself — the violating
-    // INSERT fails (counted, not committed), NULL passes per the SQL
-    // standard, and the surviving rows are exactly the valid inserts.
-    "q_sql_constraint" -> ((s, dir) => {
-      val cat = tempCatalog(s)
-      val eng = new Engine(cat)
-      eng.sql("CREATE TABLE lim (id INT, qty DOUBLE)")
-      eng.sql("ALTER TABLE lim ADD CONSTRAINT qty_nonneg CHECK (qty >= 0)")
-      eng.sql("INSERT INTO lim VALUES (1, 5.0), (2, 0.0), (3, NULL)")
-      val rejected =
-        try { eng.sql("INSERT INTO lim VALUES (4, -1.0), (5, 9.0)"); 0 }
-        catch { case _: Exception => 1 }
-      eng.sql("SELECT id, qty FROM lim ORDER BY id")
-        .withColumn("rejected_writes", lit(rejected))
-    }),
-
-    "q_sql_row_ops" -> ((s, dir) => {
-      val cat = tempCatalog(s)
-      val eng = new Engine(cat)
-      eng.sql("CREATE TABLE accounts (id INT, balance DOUBLE, status STRING)")
-      eng.sql("INSERT INTO accounts VALUES (1, 100.0, 'open'), (2, 50.0, 'open'), " +
-        "(3, 0.0, 'open'), (4, 75.0, 'open')")
-      eng.sql("UPDATE accounts SET balance = balance + 10, status = 'bonus' WHERE balance >= 75")
-      eng.sql("DELETE FROM accounts WHERE balance = 0")
-      eng.sql("SELECT id, balance, status FROM accounts ORDER BY id")
-    }),
-
-    // §2.11b maintenance surface end-to-end through the SQL engine:
-    // three append snapshots, then OPTIMIZE → VACUUM → CALL
-    // checkpoint_log → DESCRIBE HISTORY. The final history must still
-    // show every snapshot with its cumulative record count — OPTIMIZE
-    // adds one replace snapshot, VACUUM touches only crash debris, and
-    // checkpointing is pure metadata reshaping — so the
-    // (snapshot_id, operation, record_count) sequence is fully
-    // reconstructible by the oracle from the source rows alone.
-    "q_sql_maintenance" -> ((s, dir) => {
-      import s.implicits._
-      val cat = tempCatalog(s)
-      val eng = new Engine(cat)
-      val nation = t(s, dir, "nation")
-      cat.createTable("nation_src", nation.schema)
-      cat.append("nation_src", nation, 1000L)
-      eng.sql("CREATE TABLE nation_maint STORED AS ICEBERG AS " +
-        "SELECT * FROM nation_src WHERE n_nationkey < 8")
-      eng.sql("INSERT INTO nation_maint SELECT * FROM nation_src " +
-        "WHERE n_nationkey >= 8 AND n_nationkey < 16")
-      eng.sql("INSERT INTO nation_maint SELECT * FROM nation_src " +
-        "WHERE n_nationkey >= 16")
-      eng.sql("OPTIMIZE nation_maint")
-      eng.sql("VACUUM nation_maint")
-      eng.sql("CALL checkpoint_log('nation_maint')")
-      val hist = eng.sql("DESCRIBE HISTORY nation_maint")
-        .select(col("snapshot_id"), col("operation"), col("record_count"))
-        .orderBy(col("snapshot_id")).collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
-      // SHOW TBLPROPERTIES round-trip: SET shows both, UNSET removes
-      // exactly the named key
-      eng.sql("ALTER TABLE nation_maint SET TBLPROPERTIES " +
-        "('owner'='etl', 'note'='keep')")
-      def props(): Map[String, String] =
-        eng.sql("SHOW TBLPROPERTIES nation_maint").collect()
-          .map(r => r.getString(0) -> r.getString(1)).toMap
-      val p1 = props()
-      eng.sql("ALTER TABLE nation_maint UNSET TBLPROPERTIES ('note')")
-      val p2 = props()
-      val propsOk = p1.get("owner").contains("etl") &&
-        p1.get("note").contains("keep") &&
-        p2.get("owner").contains("etl") && !p2.contains("note")
-      // VACUUM … DRY RUN contract on crash debris (expire deletes its
-      // own files, so the reclaimable class is UNREFERENCED data — a
-      // crashed write's leftovers): the dry run LISTS the planted
-      // orphan and touches nothing, the real VACUUM reclaims exactly
-      // it (second dry run empty), and the table still serves every row
-      val tdir = cat.store().tableDir("nation_maint")
-      val hfs = tdir.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val orphan =
-        new org.apache.hadoop.fs.Path(tdir, "data/orphan-debris.parquet")
-      hfs.create(orphan, true).close()
-      Thread.sleep(20) // file mtime strictly before the RETAIN 0 cutoff
-      val dry1 = eng.sql("VACUUM nation_maint RETAIN 0 HOURS DRY RUN")
-        .collect()
-      val listedOrphan = dry1.exists(r =>
-        r.getAs[String]("kind") == "data-file" &&
-          r.getAs[String]("path").endsWith("orphan-debris.parquet")) &&
-        hfs.exists(orphan) // DRY RUN touched nothing
-      eng.sql("VACUUM nation_maint RETAIN 0 HOURS")
-      val dry2 = eng.sql("VACUUM nation_maint RETAIN 0 HOURS DRY RUN")
-        .collect()
-      val total = eng.sql("SELECT COUNT(*) FROM nation_maint")
-        .head().getLong(0)
-      val dryOk = listedOrphan && !hfs.exists(orphan) && dry2.isEmpty &&
-        total == nation.count()
-      hist.toDF("snapshot_id", "operation", "record_count")
-        .withColumn("props_roundtrip_ok", lit(propsOk))
-        .withColumn("vacuum_dry_run_ok", lit(dryOk))
-        .orderBy(col("snapshot_id"))
-    }),
-
-    // Logical views (CREATE VIEW / views-over-views / OR REPLACE): the
-    // stored artifact is SELECT text re-evaluated per query, so the
-    // view tracks appends that land AFTER its creation — the oracle
-    // recomputes the final nested aggregate over the full base.
-    "q_sql_view" -> benchSplits("q_sql_view").composed,
-
-    // Iceberg-style metadata tables as SQL relations: `t$files`,
-    // `t$history`, `t$snapshots`, `t$partitions` join/aggregate like any
-    // table (the warehouse-ops shape SHOW statements can't compose).
-    // Every aggregated number is reconstructible from the source rows:
-    // per-file record counts must sum to the table, the snapshot chain
-    // is two appends, identity partitions carry the per-region counts.
-    "q_meta_tables" -> ((s, dir) => {
-      val cat = tempCatalog(s)
-      val eng = new Engine(cat)
-      val nation = t(s, dir, "nation")
-      cat.createTable("nation_meta", nation.schema,
-        Some(graft.store.PartitionSpec("n_regionkey", "identity")))
-      cat.append("nation_meta", nation.filter(col("n_nationkey") < 10)
-        .repartition(col("n_regionkey")), 1000L)
-      cat.append("nation_meta", nation.filter(col("n_nationkey") >= 10)
-        .repartition(col("n_regionkey")), 2000L)
-      eng.sql("""
-        SELECT f.files_rows, h.n_snapshots, h.last_total,
-               p.n_partitions, p.partition_rows
-        FROM (SELECT SUM(record_count) AS files_rows
-              FROM `nation_meta$files`) f
-        CROSS JOIN (SELECT COUNT(*) AS n_snapshots,
-                           MAX(record_count) AS last_total
-                    FROM `nation_meta$history`) h
-        CROSS JOIN (SELECT COUNT(*) AS n_partitions,
-                           SUM(n_records) AS partition_rows
-                    FROM `nation_meta$partitions`) p""")
-    }),
-
-    // Iceberg's `t$refs` + `t$manifests` metadata tables, SQL-composed:
-    // the ref namespace (a release TAG pinning snapshot 1, a BRANCH
-    // forked at snapshot 2) joins against `t$history` to answer "what
-    // commit does each ref pin" — the joinable form SHOW TAGS/BRANCHES
-    // cannot give — and a log checkpoint folds the non-latest snapshot
-    // into a manifest whose count/size surface through `t$manifests`.
-    // All values recomputed by the oracle from the raw rows (+ the
-    // fixture's deterministic structure).
-    "q_refs_meta" -> ((s, dir) => {
-      val cat = tempCatalog(s)
-      val eng = new Engine(cat)
-      val nation = t(s, dir, "nation")
-      cat.createTable("nation_refs", nation.schema)
-      cat.append("nation_refs",
-        nation.filter(col("n_nationkey") < 10).coalesce(1), 1000L)
-      cat.append("nation_refs",
-        nation.filter(col("n_nationkey") >= 10).coalesce(1), 2000L)
-      val st = cat.store()
-      st.createTag("nation_refs", "v1", Some(1L))
-      st.createBranch("nation_refs", "dev")
-      // fold the non-latest snapshot's inline file list into a manifest
-      st.checkpointLog("nation_refs", Long.MaxValue)
-      eng.sql("""
-        SELECT r.name, r.type, r.snapshot_id, r.staged_commits,
-               h.operation, h.record_count,
-               m.n_manifests, m.manifest_files, m.manifests_sized
-        FROM `nation_refs$refs` r
-        JOIN `nation_refs$history` h ON r.snapshot_id = h.snapshot_id
-        CROSS JOIN (SELECT COUNT(*) AS n_manifests,
-                           CAST(SUM(data_files_count) AS BIGINT)
-                             AS manifest_files,
-                           MIN(length) > 0 AS manifests_sized
-                    FROM `nation_refs$manifests`) m
-        ORDER BY r.name""")
-    }),
-
-    // Write-audit-publish (Iceberg's `spark.wap.id` + publish_changes):
-    // a conf-gated INSERT stages the second half of the table
-    // invisibly — readers hold the committed count while the audit
-    // query sees committed + staged in place — then CALL
-    // publish_changes commits the staged files atomically (metadata
-    // only; the files were promoted at staging time). Every observable
-    // count is reconstructible from the source rows.
-    "q_wap" -> benchSplits("q_wap").composed,
-
-    // Branches (Iceberg's writable refs): two conf-routed commits stage
-    // on a branch forked at the CTAS snapshot; `FOR SYSTEM_VERSION AS
-    // OF 'etl'` reads fork + branch as a unit while main holds its
-    // half; CALL fast_forward replays the branch commits as real
-    // snapshots under the ancestor rule.
-    "q_branch" -> benchSplits("q_branch").composed,
-
-    // Branch-scoped row-level DML (Iceberg branch writes / the WAP
-    // backfill story): UPDATE + DELETE rewrite COW against the branch's
-    // file set, invisible on main; fast-forward replays them as real
-    // 'update'/'delete' commits. Oracle recomputes every phase.
-    "q_branch_dml" -> benchSplits("q_branch_dml").composed,
-
-    // Incrementally-maintained materialized view (the CDW feature the
-    // reference leans on Impala/Iceberg for — pre-aggregated dashboard
-    // answers): create over half the base, compact the base (row-
-    // preserving replace MUST NOT force a rebuild), append the rest,
-    // REFRESH. The refresh scans ONLY the appended files (metadata
-    // file-set diff — a 100 TB base is never re-read; the incremental
-    // path is plan-asserted in MaterializedViewSpec) and merges two
-    // view-sized partial-aggregate frames. The oracle recomputes the
-    // same aggregate from scratch over the full base — the refreshed
-    // state must be indistinguishable from a cold rebuild.
-    "q_mv_refresh" -> benchSplits("q_mv_refresh").composed,
-
-    // Aggregate navigation (warehouse query rewrite): the engine answers
-    // a plain GROUP BY SELECT from a FRESH materialized view — rolling
-    // the view's (o_orderstatus, o_orderpriority) state up to
-    // o_orderstatus — instead of scanning the base. The `require`
-    // asserts the answer's input files live under the VIEW's directory
-    // (the 100 TB claim: the base is never read), and the oracle
-    // recomputes the same aggregate from the raw table — rewrite output
-    // must be indistinguishable from the scan.
-    "q_mv_rewrite" -> ((s, dir) => {
-      val cat = tempCatalog(s)
-      val eng = new Engine(cat)
-      val orders = t(s, dir, "orders")
-      cat.createTable("orders_nav", orders.schema)
-      cat.append("orders_nav", orders, 1000L)
-      eng.sql("CREATE MATERIALIZED VIEW orders_nav_mv AS " +
-        "SELECT o_orderstatus, o_orderpriority, count(*) AS cnt, " +
-        "sum(o_totalprice) AS total, avg(o_totalprice) AS mean " +
-        "FROM orders_nav GROUP BY o_orderstatus, o_orderpriority")
-      val answered = eng.sql("SELECT o_orderstatus, count(*) AS cnt, " +
-        "count(DISTINCT o_orderpriority) AS nprio, " +
-        "sum(o_totalprice) AS total, avg(o_totalprice) AS mean " +
-        "FROM orders_nav GROUP BY o_orderstatus ORDER BY o_orderstatus")
-      require(answered.inputFiles.nonEmpty &&
-        answered.inputFiles.forall(_.contains("/orders_nav_mv/")),
-        "expected the materialized view to answer the roll-up")
-      answered.select(col("o_orderstatus"), col("cnt"), col("nprio"),
-        round(col("total"), 2).as("total"), round(col("mean"), 2).as("mean"))
-    }),
-
-    // Impala's stats surface (COMPUTE STATS / SHOW TABLE STATS): the
-    // row count comes from the snapshot log (zero data I/O) and the
-    // stats pass stamps the snapshot it covered — 'current' proves the
-    // staleness tracking sees the commit. SHOW COLUMN STATS' NDV path
-    // is oracle-gated separately in q_column_stats.
-    "q_table_stats" -> ((s, dir) => {
-      val cat = tempCatalog(s)
-      val eng = new Engine(cat)
-      val orders = t(s, dir, "orders")
-      cat.createTable("orders_st", orders.schema)
-      cat.append("orders_st", orders, 1000L)
-      eng.sql("COMPUTE STATS orders_st")
-      eng.sql("SHOW TABLE STATS orders_st")
-        .select(col("row_count"), col("stats"))
-    }),
-
-    // COMPUTE STATS feeding the QUERY PLANNER (cost-based
-    // optimization): `fat_cbo` is 15k+ rows of near-constant longs —
-    // dictionary/RLE shrinks its parquet file under the broadcast
-    // threshold, so FILE-SIZE estimation broadcasts it (the 100 TB
-    // failure mode: a well-compressed fact table shipped to every
-    // executor). After COMPUTE STATS the registered view carries the
-    // catalog row count + NDV, the size estimate becomes rows × width,
-    // and the join plans sort-merge. Both plan shapes ride the checked
-    // tuple; the values are the plain join aggregate DuckDB recomputes.
-    "q_cbo_stats" -> ((s, dir) => {
-      val cat = tempCatalog(s)
-      val eng = new Engine(cat)
-      val orders = t(s, dir, "orders")
-      // `fat`: one row per order on a 50-value key — dictionary/RLE
-      // shrink its parquet file to KBs however many rows it holds, the
-      // exact shape file-size estimation mis-ranks at 100 TB
-      val fat = orders.select(pmod(col("o_orderkey"), lit(50)).as("k"),
-        lit(7L).as("v"))
-      cat.createTable("fat_cbo", fat.schema)
-      cat.append("fat_cbo", fat.coalesce(1), 1000L)
-      val fatBytes = cat.store().dataFilesAsOf("fat_cbo", None)
-        .map(_.bytes).sum
-      // `dim`: ONE row per key (the join stays O(rows) at any SF), but
-      // its incompressible payload — sized off fat's measured file —
-      // keeps its FILE several times larger than fat's, so file-size
-      // estimation ranks the million-row fact as the "smaller" build
-      // side until COMPUTE STATS corrects the ranking
-      val payloadLen = math.max(2048L, fatBytes / 5).toInt
-      val pieces = math.max(1, payloadLen / 64)
-      val dim = s.range(0, 50).select(col("id").as("k"),
-        concat((0 until pieces).map(i =>
-          sha2(concat(col("id").cast("string"), lit(s"#$i")), 256)): _*)
-          .as("payload"))
-      cat.createTable("dim_cbo", dim.schema)
-      cat.append("dim_cbo", dim.coalesce(1), 2000L)
-      val q = "SELECT f.k AS g, COUNT(*) AS n FROM fat_cbo f " +
-        "JOIN dim_cbo d ON f.k = d.k GROUP BY f.k"
-      val before = eng.sql(q).queryExecution.executedPlan.toString
-      eng.sql("COMPUTE STATS fat_cbo")
-      eng.sql("COMPUTE STATS dim_cbo (k)")
-      val planned = eng.sql(q)
-      val after = planned.queryExecution.executedPlan.toString
-      planned
-        .withColumn("filesize_builds_fact",
-          lit(before.contains("BuildLeft")))
-        .withColumn("stats_build_dim",
-          lit(after.contains("BuildRight") && !after.contains("BuildLeft")))
-        .orderBy(col("g"))
-    }),
-
-    // Equi-height HISTOGRAMS feeding selectivity (COMPUTE STATS …
-    // WITH HISTOGRAM): 90% of rows sit on one hot key, so uniform
-    // min/max interpolation calls `k >= 500` ~50% selective when the
-    // truth is ~5% — a 10× row-estimate error that flows into every
-    // join-order/broadcast decision above the filter. The two checked
-    // booleans pin both sides: plain stats over-estimate ≥3×, the
-    // histogram lands within 2× of truth. Values are the filtered
-    // aggregate DuckDB recomputes with the same CASE.
-    "q_histogram_stats" -> ((s, dir) => {
-      val cat = tempCatalog(s)
-      val eng = new Engine(cat)
-      val orders = t(s, dir, "orders")
-      val skew = orders.select(col("o_orderkey"),
-        when(pmod(col("o_orderkey"), lit(10)) < 9, lit(0L))
-          .otherwise(pmod(col("o_orderkey"), lit(999)) + 1).as("k"),
-        col("o_totalprice"))
-      cat.createTable("orders_hist", skew.schema)
-      cat.append("orders_hist", skew.coalesce(1), 1000L)
-      def est(): Long = eng.sql("SELECT * FROM orders_hist WHERE k >= 500")
-        .queryExecution.optimizedPlan.stats.rowCount
-        .map(_.toLong).getOrElse(-1L)
-      val truth = skew.filter(col("k") >= 500).count()
-      eng.sql("COMPUTE STATS orders_hist")
-      val uniform = est()
-      eng.sql("COMPUTE STATS orders_hist WITH HISTOGRAM")
-      val hist = est()
-      eng.sql("SELECT COUNT(*) AS cnt, ROUND(SUM(o_totalprice), 2) AS rev " +
-          "FROM orders_hist WHERE k >= 500")
-        .withColumn("uniform_overestimates", lit(uniform > truth * 3))
-        .withColumn("histogram_honest",
-          lit(hist < truth * 2 && hist > truth / 2))
-    }),
-
-    // The DATE sibling of q_histogram_stats: 90% of rows land on ONE
-    // hot load day (the commonest warehouse skew there is — the
-    // reference's only observed range predicate is on a DATE,
-    // `/root/reference/README.md:114-116`), the rest spread over ~999
-    // days. Histogram bins live in epoch-day space (Catalyst's own
-    // estimation domain for DateType), so a date-range filter above the
-    // hot day flips from a ~10× uniform over-estimate to within 2× of
-    // truth — the same two estimate-quality booleans as the numeric
-    // twin, values recomputed by DuckDB with the same CASE.
-    "q_histogram_date" -> ((s, dir) => {
-      val cat = tempCatalog(s)
-      val eng = new Engine(cat)
-      val orders = t(s, dir, "orders")
-      val base = to_date(lit("2024-01-01"))
-      val skew = orders.select(col("o_orderkey"),
-        when(pmod(col("o_orderkey"), lit(10)) < 9, base)
-          .otherwise(date_add(base,
-            (pmod(col("o_orderkey"), lit(999)) + 1).cast("int"))).as("d"),
-        col("o_totalprice"))
-      cat.createTable("orders_hd", skew.schema)
-      cat.append("orders_hd", skew.coalesce(1), 1000L)
-      def est(): Long = eng.sql(
-          "SELECT * FROM orders_hd WHERE d >= DATE '2025-05-16'")
-        .queryExecution.optimizedPlan.stats.rowCount
-        .map(_.toLong).getOrElse(-1L)
-      val truth = skew.filter(col("d") >= lit("2025-05-16")).count()
-      eng.sql("COMPUTE STATS orders_hd")
-      val uniform = est()
-      eng.sql("COMPUTE STATS orders_hd WITH HISTOGRAM")
-      val hist = est()
-      eng.sql("SELECT COUNT(*) AS cnt, ROUND(SUM(o_totalprice), 2) AS rev " +
-          "FROM orders_hd WHERE d >= DATE '2025-05-16'")
-        .withColumn("uniform_overestimates", lit(uniform > truth * 3))
-        .withColumn("histogram_honest",
-          lit(hist < truth * 2 && hist > truth / 2))
-    }),
-
-    // Column stats in the EXACT verification mode (the HLL default is
-    // spec-asserted within tolerance in TableStatsSpec): per-column
-    // NDV + null counts from one aggregation pass must equal the
-    // oracle's own COUNT(DISTINCT …) ground truth.
-    "q_column_stats" -> ((s, dir) => {
-      val cat = tempCatalog(s)
-      val orders = t(s, dir, "orders")
-      cat.createTable("orders_cs", orders.schema)
-      cat.append("orders_cs", orders, 1000L)
-      val stats = graft.store.TableStats.compute(cat.store(), "orders_cs",
-        cols = Seq("o_orderkey", "o_custkey", "o_orderstatus",
-          "o_orderpriority"),
-        exactNdv = true)
-      import s.implicits._
-      stats.cols.map(c => (c.column, c.ndv, c.nullCount))
-        .toDF("col_name", "ndv", "null_count")
-        .orderBy(col("col_name"))
-    }),
-
-    // Warehouse-ETL surface: CTAS + INSERT INTO … SELECT + TRUNCATE — the
-    // statements an Impala warehouse build uses beyond batched VALUES.
-    "q_sql_ctas" -> ((s, dir) => {
-      val cat = tempCatalog(s)
-      val eng = new Engine(cat)
-      val orders = t(s, dir, "orders")
-      cat.createTable("orders_src", orders.schema)
-      cat.append("orders_src", orders, 1000L)
-      eng.sql("CREATE TABLE big_orders STORED AS ICEBERG AS " +
-        "SELECT o_orderkey, o_custkey, o_totalprice FROM orders_src " +
-        "WHERE o_totalprice > 200000")
-      eng.sql("INSERT INTO big_orders " +
-        "SELECT o_orderkey, o_custkey, o_totalprice FROM orders_src " +
-        "WHERE o_totalprice <= 50000")
-      eng.sql("SELECT COUNT(*) AS cnt, round(sum(o_totalprice), 2) AS total " +
-        "FROM big_orders")
-    }),
-
-    // S4/S5: CSV sink + source with inferSchema and corrective timestamp
-    // cast (`telco_spark/append_telco_spark_iceberg.py:40-59` shape).
-    "q_csv_roundtrip" -> ((s, dir) => {
-      val tmp = scratchDir("graft-csv").toString
-      t(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
-          date_format(col("o_orderdate"), "yyyy-MM-dd HH:mm:ss").as("o_orderdate"))
-        .write.mode("overwrite").option("header", "true").csv(tmp)
-      Ingest.readCsv(s, tmp, Seq(Ingest.Cast.timestamp("o_orderdate")))
-        .agg(count(lit(1)).as("cnt"),
-          round(sum(col("o_totalprice")), 2).as("total"),
-          min(col("o_orderdate")).as("first_date"),
-          max(col("o_orderdate")).as("last_date"))
-    }),
-
-    // =================================================================
-    // North star: deduplication (SURVEY.md §7.1 module 7)
-    // =================================================================
-
-    // Exact dedup accounting via content hash (md5 — oracle-checkable).
-    "q_dedup_exact" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      d.agg(count(lit(1)).as("n_docs"),
-        countDistinct(md5(col("text"))).as("n_unique"),
-        countDistinct(col("lang")).as("n_langs"))
-    }),
-
-    // Exact-dedup operator itself: normalized-content first-writer-wins.
-    "q_dedup_exact_rows" -> ((s, dir) => {
-      Dedup.exactByContent(t(s, dir, "documents"), "text", "doc_id")
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // Connected-components dedup clustering (Large-Star/Small-Star) over
-    // a deterministic, SQL-expressible duplicate graph: an edge links
-    // consecutive doc_ids whose n_chars fall in the same mod-5 bucket.
-    // The oracle computes the same components with a DIFFERENT algorithm
-    // (DuckDB islands-and-gaps windowing) — a full hash-match check of
-    // the distributed star-contraction against an independent method.
-    "q_dedup_clusters" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val labels = sharedChainLabels(s, dir)
-      docs.select(col("doc_id"))
-        .join(labels, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("component"), col("doc_id")).as("component"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // Cluster RETENTION on top of the same deterministic duplicate
-    // graph: keep the highest-n_chars member per component (ties →
-    // lowest doc_id) with the cluster size — the "keep best, drop rest"
-    // step after near-dup clustering. One map-side-combining hash agg
-    // (no corpus-wide window sort); the oracle recomputes it with
-    // DuckDB's independent islands + row_number method.
-    "q_dedup_canonical" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val labels = sharedChainLabels(s, dir)
-      val labeled = docs.select(col("doc_id"), col("n_chars"))
-        .join(labels, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("n_chars"),
-          coalesce(col("component"), col("doc_id")).as("component"))
-      Dedup.canonicalPerCluster(labeled, "doc_id", "component", "n_chars")
-        .orderBy(col("component"))
-    }),
-
-    // Benchmark contamination (decontamination gate): corpus docs
-    // sharing any distinct 5-gram with the "eval set" (first 10 docs
-    // standing in for a benchmark). Broadcast gram join — the corpus
-    // never shuffles. The oracle recomputes gram sets independently in
-    // DuckDB (string slicing, different separator — only token
-    // sequences must agree), so every overlap count is hash-checked.
-    "q_contamination" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Dedup.contamination(docs, "doc_id", "text",
-          docs.filter(col("doc_id") < 10), "doc_id", "text", n = 5)
-        .orderBy(col("doc_id"), col("bench_id"))
-    }),
-
-    // MinHash+LSH near-dup candidate pairs (rows-only check: sketch-based).
-    // The candidate pair set is computed ONCE per sf-dir (checkpointed)
-    // and shared with q_ngram_jaccard — the pipeline posture at 100 TB,
-    // where candidate generation dominates and must never run twice.
-    "q_minhash_pairs" -> ((s, dir) => {
-      Dedup.minhashNearDuplicates(t(s, dir, "documents"), "doc_id", "text",
-          threshold = 0.5, candidates = Some(sharedCandidatePairs(s, dir)))
-        .withColumn("jaccard", round(col("jaccard"), 4))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    // MinHash banding + exact-Jaccard verification over a corpus with
-    // PLANTED near-duplicates an oracle can rebuild: each of the first
-    // 25 docs gets an 80%-token-prefix twin at doc_id+100000
-    // (jaccard ≈ 0.8, background pairs ≈ 0.02 at the verify scale).
-    // The banding must surface every planted pair and the verification
-    // scores must match DuckDB's recomputation from raw text — a full
-    // recall + scoring gate on the LSH path, while q_minhash_pairs
-    // keeps exercising the real corpus (rows-only, sketch-based).
-    "q_minhash_pairs_exact" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").filter(col("doc_id") < 25)
-      val tk = TextAnalysis.tokens(col("text"))
-      val m = greatest(lit(3), floor(size(tk) * lit(4.0) / 5).cast("int"))
-      val variants = docs.select((col("doc_id") + 100000).as("doc_id"),
-        concat_ws(" ", slice(tk, lit(1), m)).as("text"))
-      val all = docs.select("doc_id", "text").unionByName(variants)
-      Dedup.minhashNearDuplicates(all, "doc_id", "text", threshold = 0.5)
-        .withColumn("jaccard", round(col("jaccard"), 4))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    // SimHash near-dup candidates (rows-only). Radius 4 is the widest a
-    // 64-bit sketch can shard (Dedup.MaxSimhashRadius) — looser
-    // similarity goes through minhash banding instead.
-    "q_simhash_pairs" -> ((s, dir) => {
-      Dedup.simhashNearDuplicates(t(s, dir, "documents"), "doc_id", "text",
-          maxHamming = 4)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    // SimHash banding over a corpus with EXACT-duplicate twins planted
-    // at doc_id+100000 for the first 25 docs: identical text guarantees
-    // hamming 0 (recall is structural, not probabilistic — a 1-token
-    // edit can flip >4 of 64 bits, so near-identical twins can't give a
-    // deterministic expected set), while the ≈0.02-jaccard background
-    // guarantees no other pair sits within radius 4. The oracle derives
-    // the expected (pair, hamming=0) set from the documents table — a
-    // precision + plumbing gate; probabilistic radius behavior stays in
-    // q_simhash_pairs (rows-only).
-    "q_simhash_pairs_exact" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").filter(col("doc_id") < 25)
-      val twins = docs.select((col("doc_id") + 100000).as("doc_id"),
-        col("text"))
-      Dedup.simhashNearDuplicates(docs.select("doc_id", "text")
-          .unionByName(twins), "doc_id", "text", maxHamming = 4)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    // n-gram Jaccard verification over minhash-band candidates (rows-only).
-    // Minhash bands shard by content at any similarity level, unlike
-    // high-radius simhash chunks whose keyspace collapses. REUSES the
-    // checkpointed pair set q_minhash_pairs built — verification joins
-    // onto the shared candidates instead of re-running generation.
-    "q_ngram_jaccard" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Dedup.ngramJaccard(docs, sharedCandidatePairs(s, dir), "doc_id", "text", n = 3)
-        .withColumn("ngram_jaccard", round(col("ngram_jaccard"), 4))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    // The same word-3-gram Jaccard scorer over a DETERMINISTIC pair set
-    // an oracle can rebuild: each of the first 25 docs paired with its
-    // own 60%-token prefix (planted at doc_id+100000). Prefix grams are
-    // a subset of the doc's grams, so every score is a nontrivial ratio
-    // DuckDB recomputes from the raw text — the scorer gets a full hash
-    // check while the LSH-candidate variant above stays sketch-based.
-    // Extended PII scrub with a Luhn validity gate: plant a known
-    // card number (valid for even doc_ids, Luhn-INVALID for odd), a
-    // phone, and an IP into digit-free corpus text. The scrubbed text
-    // is exactly reconstructible: the valid card becomes <CARD>, the
-    // invalid digit run survives (the precision half of the contract —
-    // order ids and ISBNs must not be eaten), phone and IP always
-    // scrub.
-    "q_pii_extended" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").filter(col("doc_id") < 40)
-      val card = when(pmod(col("doc_id"), lit(2)) === 0,
-        lit("4242-4242-4242-4242")).otherwise(lit("1234-5678-9012-3456"))
-      val planted = concat(col("text"), lit(" card "), card,
-        lit(" ip 10.1.2.3 call +1 555-123-4567"))
-      val (scrubbed, cards, phones, ips) =
-        TextAnalysis.scrubPiiExtended(planted)
-      docs.select(col("doc_id"), scrubbed.as("scrubbed"),
-          cards.as("n_cards"), phones.as("n_phones"), ips.as("n_ips"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // EXACT substring-overlap pairs over the real corpus (Lee et al.
-    // verbatim-span dedup at window granularity): every shared 8-token
-    // run between any two docs, counted. Windows travel as shingle
-    // hashes; DuckDB rebuilds the distinct gram sets as strings and
-    // self-joins — full hash-match of the whole pair list.
-    "q_substring_pairs" -> ((s, dir) => {
-      Dedup.substringOverlapPairs(t(s, dir, "documents"), "doc_id", "text",
-          n = 8)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    // Planted-truth twin: doc_id+100000 carries the 60%-token prefix of
-    // its source (≥ 6 tokens), so the pair's shared-window count equals
-    // the twin's own distinct 5-token windows — every planted pair must
-    // surface with exactly that count (left join keeps recall failures
-    // visible as nulls).
-    "q_substring_pairs_exact" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").filter(col("doc_id") < 25)
-      val tk = TextAnalysis.tokens(col("text"))
-      val m = greatest(lit(6), floor(size(tk) * lit(3.0) / 5).cast("int"))
-      val variants = docs.select((col("doc_id") + 100000).as("doc_id"),
-        concat_ws(" ", slice(tk, lit(1), m)).as("text"))
-      val all = docs.select("doc_id", "text").unionByName(variants)
-      val expected = docs.select(col("doc_id").as("id_a"),
-        (col("doc_id") + 100000).as("id_b"))
-      expected.join(
-          Dedup.substringOverlapPairs(all, "doc_id", "text", n = 5),
-          Seq("id_a", "id_b"), "left")
-        .select(col("id_a"), col("id_b"), col("shared_windows"))
-        .orderBy(col("id_a"))
-    }),
-
-    "q_ngram_jaccard_exact" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").filter(col("doc_id") < 25)
-      val tk = TextAnalysis.tokens(col("text"))
-      val m = greatest(lit(3), floor(size(tk) * lit(3.0) / 5).cast("int"))
-      val variants = docs.select((col("doc_id") + 100000).as("doc_id"),
-        concat_ws(" ", slice(tk, lit(1), m)).as("text"))
-      val all = docs.select("doc_id", "text").unionByName(variants)
-      val pairs = docs.select(col("doc_id").as("id_a"),
-        (col("doc_id") + 100000).as("id_b"))
-      Dedup.ngramJaccard(all, pairs, "doc_id", "text", n = 3)
-        .withColumn("ngram_jaccard", round(col("ngram_jaccard"), 4))
-        .orderBy(col("id_a"))
-    }),
-
-    // Embedding-cosine near-dup via amplified hyperplane LSH. The
-    // testdata embeddings are near-orthogonal random vectors (max pair
-    // cosine ≈ 0.46), so near-duplicates are planted: each vec_id < 20
-    // gets a slightly-perturbed copy at id+100000 (cosine 0.917–0.936).
-    // 12 tables × 6 planes put recall at the planted similarity ≈ 1, so
-    // the operator must surface ALL 20 planted pairs — and DuckDB
-    // recomputes their exact cosines from the same construction, making
-    // this a full recall + scoring oracle. Scores round to 3 decimals:
-    // every planted cosine sits ≥5e-5 from a 3-decimal boundary, far
-    // beyond the ~1e-7 float(engine)-vs-double(DuckDB) noise.
-    "q_embed_neardup" -> ((s, dir) => {
-      val e = emb(s, dir)
-      val planted = e.filter(col("vec_id") < 20)
-        .select((col("vec_id") + 100000).as("vec_id"),
-          transform(col("embedding"), x => x + lit(0.05f)).as("embedding"))
-      Dedup.embeddingNearDuplicates(e.select("vec_id", "embedding").union(planted),
-          "vec_id", "embedding", threshold = 0.9, numPlanes = 6, numTables = 12)
-        .withColumn("cosine", round(col("cosine"), 3))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    // SemDeDup-style semantic dedup (k-means cells + within-cell cosine
-    // gate). Plants are EXACT vector copies: identical vectors tie on
-    // every centroid score and the argmax tie-break is deterministic,
-    // so a twin can never straddle a cell boundary — the 20 planted
-    // pairs (cosine 1.0) are the complete answer (background cosine
-    // tops out at ~0.46, far under the 0.9 gate). Perturbed-plant
-    // recall and the cell-scoping trade are spec-tested (DedupSpec).
-    "q_semantic_dedup" -> ((s, dir) => {
-      val e = emb(s, dir).select("vec_id", "embedding")
-      val planted = e.filter(col("vec_id") < 20)
-        .select((col("vec_id") + 100000).as("vec_id"), col("embedding"))
-      Dedup.semanticNearDuplicates(e.union(planted), "vec_id", "embedding",
-          threshold = 0.9, nlist = 8, iters = 2)
-        .withColumn("cosine", round(col("cosine"), 3))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    // Distributed k-NN JOIN in exact mode (nprobe = nlist probes every
-    // IVF list, so the banded join IS brute-force k-NN — the
-    // verification baseline): for each of 5 query rows, the exact
-    // top-5 of the full corpus, DuckDB-recomputed. The ANN mode
-    // (nprobe < nlist) is spec-gated on recall vs this exact mode.
-    "q_knn_join" -> ((s, dir) => {
-      val e = emb(s, dir)
-      val left = e.filter(col("vec_id") < 5)
-      Similarity.knnJoin(left, "vec_id", "embedding",
-          e, "vec_id", "embedding", k = 5, nlist = 8, nprobe = 8, iters = 1)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // =================================================================
-    // North star: similarity search
-    // =================================================================
-
-    // Brute-force cosine top-k for one query vector (rows-only; the
-    // codegen'd CosineSimilarity expression + TakeOrderedAndProject).
-    "q_embed_topk" -> ((s, dir) => {
-      val e = emb(s, dir)
-      val q = firstVector(e)
-      Similarity.cosineTopK(e, "vec_id", "embedding", q, 10)
-        .withColumn("score", round(col("score"), 4))
-    }),
-
-    // INT8 vector quantization (the 4x-smaller storage form embeddings
-    // ship at corpus scale): per-vector symmetric scale, codes in
-    // [-127, 127], scan-local expressions. The oracle asserts the two
-    // properties that make quantized storage usable: reconstruction
-    // error provably <= scale/2 per element on EVERY vector, and the
-    // planted known top-10 surviving search over dequantized vectors
-    // (planted cosine gaps >= 0.05 dwarf the <= 0.004 quantization
-    // noise, so recall must be exact).
-    "q_embed_quantized" -> ((s, dir) => {
-      val e = emb(s, dir)
-      val q = firstVector(e)
-      val base = embeddingsWithPlanted(s, e, q)
-      val deq = base
-        .withColumn("_q8", Similarity.quantizeInt8(col("embedding")))
-        .withColumn("_deq", Similarity.dequantizeInt8(col("_q8")))
-      val errOk = deq.select(
-          (aggregate(zip_with(col("embedding"), col("_deq"),
-              (a, b) => abs(a - b)), lit(0.0f), (m, x) => greatest(m, x))
-            <= col("_q8.scale") * 0.5f * 1.000001f).as("ok"))
-        .agg(min(col("ok")).as("error_bound_ok"),
-          count(lit(1)).as("n_vectors"))
-      val planted = Similarity.cosineTopK(
-          deq.select(col("vec_id"), col("_deq").as("embedding")),
-          "vec_id", "embedding", q, 11)
-        .filter(col("vec_id") >= 900001L && col("vec_id") <= 900010L)
-        .agg((count(lit(1)) === 10).as("top10_preserved"))
-      errOk.crossJoin(planted)
-        .select(col("n_vectors"), col("error_bound_ok"),
-          col("top10_preserved"))
-    }),
-
-    // Top-k for a set of query vectors via bounded-heap aggregation.
-    "q_embed_topk_multi" -> ((s, dir) => {
-      val e = emb(s, dir)
-      val queries = e.filter(col("vec_id") < 3)
-        .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      Similarity.cosineTopKForQueries(e, "vec_id", "embedding",
-          queries, "qid", "qvec", k = 5)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // LSH-pruned ANN (scale path). Oracle-checkable via planted
-    // neighbors: the corpus is augmented with 10 copies of the query
-    // vector shifted by 0.02·i along the all-ones direction, giving a
-    // KNOWN exact top-10 (query itself + 9 nearest plants, cosine gaps
-    // ≥ 0.05 — far above the ≈0.46 random background and any
-    // float/double noise). The pruned search must find them all in
-    // order; DuckDB recomputes the exact side independently, so a
-    // recall regression in the LSH probe fails the hash match.
-    "q_embed_ann_lsh" -> ((s, dir) => {
-      val e = emb(s, dir)
-      val q = firstVector(e)
-      rankedIds(Similarity.lshTopK(embeddingsWithPlanted(s, e, q),
-        "vec_id", "embedding", q, k = 10, numPlanes = 12, maxHammingProbe = 3))
-    }),
-
-    // IVF-pruned ANN over a PERSISTED index: k-means centroids, data
-    // parquet-partitioned by `_ivf_list`, probe reads only the nprobe
-    // nearest lists' directories — file-level pruning, the vector-search
-    // analogue of partition pruning. Same planted-neighbor oracle as
-    // q_embed_ann_lsh: the nprobe-pruned probe must recover the known
-    // exact top-10.
-    "q_embed_ivf" -> benchSplits("q_embed_ivf").composed,
-
-    // QUANTIZED IVF (FAISS IVF-SQ8 analogue): the index stores int8
-    // codes + per-vector scales (4x smaller probe I/O); the probe
-    // detects the layout from the commit summary and dequantizes
-    // scan-locally. Reconstruction error <= scale/2 per element is far
-    // below the planted 0.05 cosine gaps, so the SAME exact top-10
-    // must come back — the oracle is identical to the float index's.
-    "q_embed_ivf_q8" -> ((s, dir) => {
-      val idx = scratchDir("graft-ivfq").toString
-      val e = emb(s, dir)
-      Similarity.ivfWriteIndexQuantized(
-        embeddingsWithPlanted(s, e, firstVector(e)),
-        "vec_id", "embedding", idx, nlist = 16, iters = 2)
-      rankedIds(ivfProbeQuery(s, dir, idx))
-    }),
-
-    // IVF-PQ persisted index (FAISS's production composition + SQ8
-    // refine channel): list pruning cuts FILES, ADC scores only the
-    // probed lists' m-int codes, SQ8 re-ranks just the candidates —
-    // floats never stored, never scanned. Same exact-top-10 oracle.
-    "q_embed_ivfpq" -> benchSplits("q_embed_ivfpq").composed,
-
-    // PRODUCT QUANTIZATION ANN (FAISS PQ + ADC): the corpus stores m
-    // small codes per vector (4·D/m× under float), the query scores by
-    // m table lookups per row (built-in element_at arithmetic inside
-    // whole-stage codegen — the vectors never load during selection),
-    // and exact cosine re-ranks only the candidate set. The planted
-    // 0.02-gap neighbors dominate both the ADC candidates and the
-    // refined ordering, so the SAME exact top-10 comes back and the
-    // oracle is identical to the IVF index's.
-    "q_embed_pq" -> benchSplits("q_embed_pq").composed,
-
-    // Verbatim-span REMOVAL (Lee et al. ExactSubstr — the excision half
-    // of q_substring_pairs' detection): every 8-token window shared
-    // across >= 2 docs survives only in its minimum-id owner; all other
-    // docs have those token spans excised and re-join single-spaced.
-    // DuckDB re-runs the complete algorithm — window keys, owners,
-    // per-doc removal sets, reconstruction — and compares the md5 of
-    // every reconstructed document on the REAL corpus.
-    "q_verbatim_scrub" -> ((s, dir) => {
-      Dedup.removeVerbatimSpans(t(s, dir, "documents"), "doc_id", "text",
-          n = 8)
-        .select(col("doc_id"), col("removed_spans"),
-          md5(col("clean_text")).as("clean_md5"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // Deterministic EXACT-k per-stratum sampling (eval-set
-    // construction: exactly k docs per language): bounded-heap ranks by
-    // key hash, so cost is O(k·partitions·strata) regardless of
-    // stratum skew. The oracle checks the exact-count contract per
-    // stratum; stability is asserted by re-running.
-    "q_stratified_sample" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val s1 = Splits.stratifiedSampleExact(docs, "lang", "doc_id", k = 30)
-      val s2 = Splits.stratifiedSampleExact(docs, "lang", "doc_id", k = 30)
-      val stable = s1.select("doc_id").except(s2.select("doc_id")).count() == 0 &&
-        s1.count() == s2.count()
-      s1.groupBy(col("lang")).agg(count(lit(1)).as("n_sampled"))
-        .join(docs.groupBy(col("lang")).agg(count(lit(1)).as("_n")), "lang")
-        .select(col("lang"), col("n_sampled"),
-          least(lit(30L), col("_n")).as("expected"),
-          (col("n_sampled") === least(lit(30L), col("_n"))).as("exact_k"),
-          lit(stable).as("stable"))
-        .orderBy(col("lang"))
-    }),
-
-    // =================================================================
-    // Flagship COMPOSED pipeline: the C4/FineWeb-style cleaning recipe
-    // end-to-end from the engine's own operators — language gate →
-    // Gopher quality gates (token count, alpha ratio, duplicate-line
-    // ratio) → exact content dedup (normalized-hash, first writer
-    // wins; 5 planted exact copies must vanish) → near-dup cluster
-    // retention on the shared CC labels → PII scrub → corpus stats.
-    // Every stage's survivor count AND the order-independent signature
-    // of the final scrubbed corpus are reconstructed by DuckDB from
-    // the documented rules alone. Plan shape: each gate is a
-    // scan-local filter, dedup is one hash shuffle, retention one
-    // hash agg + semi-join — the whole recipe is four shuffles
-    // regardless of corpus size.
-    "q_pipeline" -> ((s, dir) => {
-      import s.implicits._
-      val base = t(s, dir, "documents")
-      val docs = base.union(base.filter(col("doc_id") < 5)
-        .withColumn("doc_id", col("doc_id") + 100000))
-      // Every stage's survivor count rides the ONE materializing pass
-      // as an observed metric (CollectMetrics) instead of its own
-      // action: the former count() chain re-ran the scan + gates once
-      // per stage — 4 corpus passes before dedup even started (guide
-      // §1.2: don't re-compute what one pass can observe). Counts are
-      // the rows flowing through the same operators, so values are
-      // unchanged.
-      val obsTotal = org.apache.spark.sql.Observation()
-      val obsLang = org.apache.spark.sql.Observation()
-      val obsQuality = org.apache.spark.sql.Observation()
-      val obsUnique = org.apache.spark.sql.Observation()
-      val en = docs.observe(obsTotal, count(lit(1)).as("n"))
-        .filter(col("lang") === "en")
-      val (dupLine, _) = TextAnalysis.repetitionStats(col("text"))
-      val alpha = length(regexp_replace(col("text"), "[^a-z]", ""))
-        .cast("double") / length(col("text"))
-      val quality = en.observe(obsLang, count(lit(1)).as("n"))
-        .filter(TextAnalysis.tokenCount(col("text")).between(20, 100000))
-        .filter(alpha >= 0.82)
-        .filter(dupLine <= 0.3)
-      // the dedup output feeds two consumers (retention agg, semi-join)
-      // — persist for the span of the stage, as a real pipeline would
-      // checkpoint between stages, then free
-      val uniq = Dedup.exactByContent(
-          quality.observe(obsQuality, count(lit(1)).as("n")),
-          "text", "doc_id")
-        .observe(obsUnique, count(lit(1)).as("n"))
-        .persist()
-      val row =
-        try {
-          val labeled = uniq
-            .join(sharedChainLabels(s, dir), Seq("doc_id"), "left")
-            .withColumn("_comp", coalesce(col("component"), col("doc_id")))
-          val winners = labeled.groupBy(col("_comp"))
-            .agg(min(col("doc_id")).as("doc_id"))
-          val fin = labeled.join(winners, Seq("doc_id"), "left_semi")
-          val (scrubbed, _, _) = TextAnalysis.scrubPii(col("text"))
-          fin
-            .select(md5(scrubbed).as("_m"),
-              TextAnalysis.tokenCount(col("text")).as("_ntok"))
-            .agg(count(lit(1)).as("n_final"),
-              sum(col("_ntok")).cast("long").as("total_tokens"),
-              md5(concat_ws("", sort_array(collect_list(col("_m")))))
-                .as("corpus_md5"))
-            .head()
-        } finally uniq.unpersist()
-      def n(o: org.apache.spark.sql.Observation): Long =
-        o.get("n").asInstanceOf[Long]
-      Seq((n(obsTotal), n(obsLang), n(obsQuality), n(obsUnique),
-          row.getLong(0), row.getLong(1), row.getString(2)))
-        .toDF("n_total", "n_lang", "n_quality", "n_unique", "n_final",
-          "total_tokens", "corpus_md5")
-    }),
-
-    // MODERN selection recipe composed end-to-end (the Llama/CCNet/
-    // RefinedWeb selection tier in one oracle-checked query): LEARNED
-    // classifier gate (pinned hashed-trigram model) → PERPLEXITY
-    // tercile bucketing on an LM fit to the survivors (head keeps all,
-    // middle 50%, tail 10%) → TOKEN-BUDGET cap in tokenizer-faithful
-    // BPE tokens (en capped at half its token mass, other domains
-    // kept). Every sampling decision rides the md5 carve
-    // (Splits.md5Keep) instead of xxhash, so DuckDB re-derives not
-    // just the per-stage survivor counts but the EXACT final corpus
-    // signature — classifier doubles, LM arithmetic, quantile cuts,
-    // carve thresholds, budget rate and BPE token counts all replayed.
-    // Plan shape: gates and carves are scan-local; the LM fit is one
-    // count agg per n-gram order + broadcast scoring joins; cuts one
-    // bounded percentile agg; the budget one sum agg — no extra
-    // shuffles at any corpus size.
-    "q_pipeline_select" -> ((s, dir) => {
-      import s.implicits._
-      val planted = QualityPlant.map { case (id, txt) => (id, "en", txt) }
-        .toDF("doc_id", "lang", "text")
-      val base = t(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), col("text"))
-        .unionByName(planted)
-      // n_total rides the classifier-gate materialization as an
-      // observed metric instead of its own corpus scan (guide §1.2:
-      // stage 1 formerly scanned the base union twice — once to count
-      // it, once to materialize the gate).
-      val obsTotal = org.apache.spark.sql.Observation()
-      // stage 1: learned quality gate — compare on the ROUNDED prob,
-      // exactly what the oracle replays
-      val cls = base.observe(obsTotal, count(lit(1)).as("n"))
-        .filter(round(graft.ext.Classify.qualityProb(
-          col("text"), graft.ext.Classify.PinnedModel), 6) >= 0.5).persist()
-      try {
-        val nCls = cls.count()
-        val nTotal = obsTotal.get("n").asInstanceOf[Long]
-        // degenerate corpus (classifier keeps nothing): the oracle's
-        // empty CTE chain yields zero counts and NULL corpus_md5 —
-        // emit the same row instead of running percentile over nothing
-        if (nCls == 0) {
-          Seq((nTotal, 0L, 0L, 0L, 0L, null.asInstanceOf[String]))
-            .toDF("n_total", "n_classifier", "n_perplexity", "n_final",
-              "final_tokens", "corpus_md5")
-        } else {
-        // stage 2: perplexity terciles from ONE bounded percentile agg
-        // over an LM fit to the survivors (lmScores materializes and
-        // frees its model frames)
-        val scored = graft.ext.Search.lmScores(cls, "doc_id", "text",
-          lmVocabCap)
-        val cuts = scored.agg(
-          expr("percentile(nll, 0.3333333333333333)").as("c1"),
-          expr("percentile(nll, 0.6666666666666666)").as("c2")).head()
-        val (c1, c2) = (cuts.getDouble(0), cuts.getDouble(1))
-        val keepPpl = when(col("nll") <= c1, lit(true))
-          .when(col("nll") <= c2,
-            Splits.md5Keep(col("doc_id"), "ppl", lit(0.5)))
-          .otherwise(Splits.md5Keep(col("doc_id"), "ppl", lit(0.1)))
-        // the en token mass rides the SAME materializing count as an
-        // observed metric (sum over the filtered rows ≡ sum of the
-        // when()-gated column: long addition, order-independent) — one
-        // cached-corpus aggregation job fewer
-        val obsEnTok = org.apache.spark.sql.Observation()
-        val kept = cls.join(scored.filter(keepPpl).select("doc_id"),
-            Seq("doc_id"), "left_semi")
-          .withColumn("n_tok",
-            TextAnalysis.bpeTokenCountRanked(col("text")).cast("long"))
-          .observe(obsEnTok, coalesce(sum(when(col("lang") === "en",
-            col("n_tok"))), lit(0L)).as("en_tok"))
-          .persist()
-        try {
-          val nPpl = kept.count()
-          // stage 3: en capped at half its token mass (integer-div
-          // budget so the oracle's t//2 arithmetic is identical)
-          val enTok = obsEnTok.get("en_tok").asInstanceOf[Long]
-          val rate = if (enTok > 0) (enTok / 2).toDouble / enTok else 1.0
-          val fin = kept.filter(col("lang") =!= "en" ||
-            Splits.md5Keep(col("doc_id"), "budget", lit(rate)))
-          // empty-final parity: tokens coalesce to 0 and corpus_md5
-          // stays NULL on BOTH engines (DuckDB's string_agg over zero
-          // rows is NULL; an unguarded concat_ws would md5(''))
-          val row = fin.agg(count(lit(1)).as("n_final"),
-            coalesce(sum(col("n_tok")), lit(0L)).cast("long")
-              .as("final_tokens"),
-            when(count(lit(1)) > 0,
-              md5(concat_ws("", sort_array(collect_list(md5(col("text")))))))
-              .as("corpus_md5")).head()
-          Seq((nTotal, nCls, nPpl, row.getLong(0), row.getLong(1),
-              row.getString(2)))
-            .toDF("n_total", "n_classifier", "n_perplexity", "n_final",
-              "final_tokens", "corpus_md5")
-        } finally kept.unpersist()
-        }
-      } finally cls.unpersist()
-    }),
-
-    // Web-corpus recipe with the URL stage FIRST (the RefinedWeb/C4
-    // ordering UrlOps documents): parse → domain blocklist → per-domain
-    // cap → URL-exact dedup under normalization, THEN the content gates
-    // (language, token-count, alpha-ratio). URLs are built
-    // deterministically from doc_id with every decoration
-    // normalizeUrl must cancel (scheme/host case, :443, utm params,
-    // trailing slash, fragment); DuckDB re-derives each stage's
-    // survivor count from the generating arithmetic. At 100 TB the URL
-    // stages run before any text is read — parse/blocklist are
-    // scan-local, the cap and dedup shuffle only (domain|url, id)
-    // pairs, and every later gate sees an already-shrunk corpus.
-    "q_pipeline_web" -> ((s, dir) => {
-      import s.implicits._
-      val docs = t(s, dir, "documents")
-      val k = pmod(col("doc_id"), lit(40)).cast("string")
-      val deco = pmod(col("doc_id"), lit(5))
-      val scheme = when(deco === 0, "HTTPS://").otherwise("https://")
-      val host = when(deco === 1,
-          concat(lit("S"), substring(col("source"), 2, 100), lit("-Web.COM")))
-        .otherwise(concat(col("source"), lit("-web.com")))
-      val port = when(deco === 2, ":443").otherwise("")
-      val track = when(deco === 2, "?utm_source=feed").otherwise("")
-      val slash = when(deco === 3, "/").otherwise("")
-      val frag = when(deco === 4, "#top").otherwise("")
-      val url = concat(scheme, host, port, lit("/p/"), k, slash, track, frag)
-      val withUrl = docs.select(col("doc_id"), col("lang"), col("text"),
-        url.as("url"))
-      // Stage counts ride the ONE materializing pass as observed
-      // metrics (CollectMetrics) instead of each being its own action
-      // over a progressively deeper re-execution of the chain — the
-      // former spelling ran the URL stages up to six times (guide
-      // §1.2). afterCap persists for the span: it already had TWO
-      // consumers (the dedup aggregation and the semi-join's left
-      // side), and the cache is also the barrier that makes the
-      // upstream metrics fire exactly once.
-      val obsTotal = org.apache.spark.sql.Observation()
-      val obsBlock = org.apache.spark.sql.Observation()
-      val obsCap = org.apache.spark.sql.Observation()
-      val obsUniq = org.apache.spark.sql.Observation()
-      val obsLang = org.apache.spark.sql.Observation()
-      val parsed = graft.ext.UrlOps.parseUrl(
-        withUrl.observe(obsTotal, count(lit(1)).as("n")))
-      val afterBlock = graft.ext.UrlOps.domainBlocklistFilter(parsed,
-        Seq("src1-web.com", "src7-web.com", "src13-web.com"))
-      val afterCap = graft.ext.UrlOps.capPerDomain(
-          afterBlock.observe(obsBlock, count(lit(1)).as("n")), maxDocs = 20)
-        .observe(obsCap, count(lit(1)).as("n"))
-        .persist()
-      try {
-        val keep = graft.ext.UrlOps.dedupByUrl(afterCap)
-        val uniq = afterCap.join(
-          keep.select(col("keep_doc_id").as("doc_id")), Seq("doc_id"),
-          "left_semi")
-        val en = uniq.observe(obsUniq, count(lit(1)).as("n"))
-          .filter(col("lang") === "en")
-        val alpha = length(regexp_replace(col("text"), "[^a-z]", ""))
-          .cast("double") / length(col("text"))
-        val q = en.observe(obsLang, count(lit(1)).as("n"))
-          .filter(TextAnalysis.tokenCount(col("text")).between(20, 100000))
-          .filter(alpha >= 0.82)
-        val row = q.agg(count(lit(1)).as("n"),
-          coalesce(sum(TextAnalysis.tokenCount(col("text"))), lit(0L))
-            .cast("long").as("tok")).head()
-        def n(o: org.apache.spark.sql.Observation): Long =
-          o.get("n").asInstanceOf[Long]
-        Seq((n(obsTotal), n(obsBlock), n(obsCap), n(obsUniq), n(obsLang),
-            row.getLong(0), row.getLong(1)))
-          .toDF("n_total", "n_after_blocklist", "n_after_cap",
-            "n_url_unique", "n_lang", "n_quality", "total_tokens")
-      } finally afterCap.unpersist()
-    }),
-
-    // =================================================================
-    // North star: text analysis
-    // =================================================================
-
-    // Token counting (whitespace tokens — oracle-checkable).
-    "q_doc_tokens" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          TextAnalysis.tokenCount(col("text")).as("n_tokens"),
-          length(col("text")).cast("int").as("len_chars"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // TOKENIZER-FAITHFUL token counting at production vocab scale: the
-    // 3000-rank shipped merge table applied by the rank-map merge loop
-    // (BpeTokenize — scan-local, shuffle-free, plan size independent of
-    // merge count), beside the regex proxy so the drift is visible.
-    // The DuckDB oracle replays the SAME rank map (BpeVocab.oracleCtes:
-    // rank-ordered single-pass replaces over sentinel-encoded symbols,
-    // once per DISTINCT pretoken, joined back in stream order).
-    "q_doc_tokens_bpe" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          TextAnalysis.bpeTokenCountRanked(col("text")).cast("int")
-            .as("n_bpe_tokens"),
-          TextAnalysis.bpeTokenCount(col("text")).cast("int")
-            .as("n_regex_tokens"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // The actual SUBWORD TOKEN STREAM (what a training pipeline feeds
-    // a model): per doc the BPE token count plus an order-sensitive
-    // md5 of the space-joined stream — DuckDB re-derives the whole
-    // sequence from the same merge literals, so symbol ORDER and
-    // boundaries are hash-checked, not just the count.
-    "q_doc_tokenize" -> ((s, dir) => {
-      val toks = TextAnalysis.bpeTokensRanked(col("text"))
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          size(toks).as("n_tokens"),
-          when(toks.isNotNull, md5(concat_ws(" ", toks)))
-            .as("stream_md5"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // Quality scoring (components are simple ratios — oracle-checkable
-    // ones only; the composite score is rows-only via q_doc_stats).
-    "q_doc_quality" -> ((s, dir) => {
-      val text = col("text")
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          round(length(regexp_replace(text, "[^a-z]", ""))
-            .cast("double") / length(text), 4).as("alpha_ratio"),
-          round((length(text) - length(replace(text, lit(" "), lit(""))))
-            .cast("double") / length(text), 4).as("space_ratio"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // The Gopher rule set (Rae et al. 2021 A1.1) per document, every
-    // rule its own boolean — DuckDB recomputes word/line/symbol
-    // arithmetic and the rule thresholds independently.
-    "q_gopher_rules" -> ((s, dir) => {
-      graft.ext.TextAnalysis.gopherRules(t(s, dir, "documents"))
-        .select(col("doc_id"), col("n_words"), col("r_words"),
-          col("r_mean_len"), col("r_symbol"), col("r_bullet"),
-          col("r_ellipsis"), col("r_alpha"), col("r_stopwords"),
-          col("gopher_keep"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // LEARNED quality classification (the fastText-style supervised
-    // signal beside the rule tier): score every document with the
-    // SHIPPED hashed-trigram logistic model plus four planted garbage
-    // rows (negative ids) the classifier must reject — the corpus
-    // itself is all prose, so the plant is what makes the boundary
-    // observable. DuckDB replays the scoring arithmetic bit-for-bit
-    // from the same pinned weight literals (md5-hex buckets, pinned
-    // fold order, same σ).
-    "q_quality_classifier" -> ((s, dir) => {
-      import s.implicits._
-      val planted = QualityPlant.toDF("doc_id", "text")
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-        .unionByName(planted)
-      graft.ext.Classify.scoreQuality(docs, "text")
-        .select(col("doc_id"), col("q_prob"), col("q_keep"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // Token-count + character-class stats (oracle-checkable).
-    "q_doc_stats" -> ((s, dir) => {
-      val text = col("text")
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          TextAnalysis.tokenCount(text).as("n_tokens"),
-          TextAnalysis.bpeTokenCount(text).cast("int").as("n_bpe"),
-          round((length(text) - length(regexp_replace(text, "[0-9]", "")))
-            .cast("double") / length(text), 4).as("digit_ratio"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // Gopher-style repetition signals (oracle-checkable).
-    "q_doc_repetition" -> ((s, dir) => {
-      val (dupLine, dupWord) = TextAnalysis.repetitionStats(col("text"))
-      t(s, dir, "documents")
-        .select(col("doc_id"), dupLine.as("dup_line_ratio"),
-          dupWord.as("dup_word_ratio"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // URL/email scrubbing — the minimum PII pass (oracle-checkable).
-    "q_doc_scrub" -> ((s, dir) => {
-      val (scrubbed, nUrls, nEmails) = TextAnalysis.scrubPii(col("text"))
-      t(s, dir, "documents")
-        .select(col("doc_id"), md5(scrubbed).as("scrub_md5"),
-          nUrls.as("n_urls"), nEmails.as("n_emails"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // BM25 top-k keyword retrieval over the REAL corpus: per-doc term
-    // frequencies are scan-local array expressions; corpus stats are a
-    // single broadcast row; top-k is TakeOrderedAndProject. The corpus
-    // itself never shuffles (Search.scala scale notes). Full DuckDB
-    // oracle replays the identical fixed-order arithmetic.
-    "q_bm25_topk" -> ((s, dir) =>
-      graft.ext.Search.bm25TopK(t(s, dir, "documents"), "doc_id", "text",
-        bm25Terms, 20)),
-
-    // Interpolated-trigram-LM surprisal (CCNet-style statistical
-    // quality score): the corpus trains its own add-one-smoothed model
-    // (capped vocab → broadcastable at any corpus size); output = 20
-    // most surprising documents — the OOD tail a curation pass reviews
-    // or drops.
-    "q_lm_surprisal" -> ((s, dir) =>
-      graft.ext.Search.lmSurprisal(t(s, dir, "documents"), "doc_id", "text",
-        20, lmVocabCap)),
-
-    // CCNet-style perplexity bucketing (keep the head, sample the
-    // middle, drop most of the tail): tercile cutoffs from ONE exact-
-    // percentile agg (no ntile global sort), hash-carved per-bucket
-    // keep rates. All structural checks are closed-form Spark-side;
-    // DuckDB pins the corpus size.
-    "q_ccnet_buckets" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val n = docs.count()
-      // score ONCE; the cutoff check and the operator share the frame
-      // (lmScores returns it MATERIALIZED — every consumer is a cheap
-      // block read, and no persist outlives this entry)
-      val scored = graft.ext.Search.lmScores(docs, "doc_id", "text", lmVocabCap)
-      val cuts = scored.agg(
-        expr("percentile(nll, 0.3333333333333333)").as("c1"),
-        expr("percentile(nll, 0.6666666666666666)").as("c2")).head()
-      val (c1, c2) = (cuts.getDouble(0), cuts.getDouble(1))
-      val kept = graft.ext.Search.perplexityBuckets(docs, "doc_id", "text",
-        rates = (1.0, 0.5, 0.1), vocabCap = lmVocabCap,
-        precomputedScores = Some(scored),
-        // the entry already aggregated these exact cutoffs above —
-        // don't pay the identical percentile job a second time
-        precomputedCuts = Some((c1, c2)))
-        .groupBy("bucket").agg(count(lit(1)).as("kept"))
-      val sizes = scored.withColumn("bucket",
-          when(col("nll") <= c1, "head")
-            .when(col("nll") <= c2, "middle").otherwise("tail"))
-        .groupBy("bucket").agg(count(lit(1)).as("total"))
-      val m = sizes.join(kept, Seq("bucket"), "left")
-        .na.fill(0L, Seq("kept")).collect()
-        .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-      val (hT, hK) = m("head"); val (mT, mK) = m("middle")
-      val (tT, tK) = m("tail")
-      def near(k: Long, t: Long, r: Double, tol: Double) =
-        t > 0 && math.abs(k.toDouble / t - r) < tol
-      import s.implicits._
-      Seq((n,
-        Seq(hT, mT, tT).forall(b => math.abs(b - n / 3.0) < n * 0.1),
-        hK == hT,
-        near(mK, mT, 0.5, 0.15),
-        near(tK, tT, 0.1, 0.10),
-        c1 <= c2))
-        .toDF("n_docs", "terciles_ok", "head_keeps_all", "middle_rate_ok",
-          "tail_rate_ok", "cuts_monotonic")
-    }),
-
-    // DSIR-style importance weighting (Xie et al., NeurIPS'23 —
-    // deterministic ranking core): target = the corpus's own 'en'
-    // slice, raw = everything; per-doc weight = mean log-likelihood
-    // ratio of two shared-vocab unigram models; output = the 20 most
-    // target-like documents. One aggregation per model + a broadcast
-    // scoring join — the data-selection shape that scales to a corpus
-    // build.
-    "q_dsir_select" -> ((s, dir) =>
-      graft.ext.Search.dsirImportance(t(s, dir, "documents"), "doc_id",
-        "text", col("lang") === "en", 20, lmVocabCap)),
-
-    // Deterministic train/val/test split assignment: split is a pure
-    // function of xxhash64(key, seed) — stable across runs, leakage-
-    // free per key, append-invariant (new rows never reshuffle old
-    // assignments). The oracle checks the EQUALITY STRUCTURE the
-    // splitter promises (every key assigned to a real split; an
-    // independent re-assignment agrees); the fraction tolerances and
-    // group-key/append invariants are exact-asserted in SplitsSpec.
-    "q_split_assign" -> ((s, dir) => {
-      val keys = t(s, dir, "documents").filter(col("doc_id") < 200)
-        .select("doc_id")
-      val a = Splits.assign(keys, "doc_id")
-      val b = Splits.assign(keys, "doc_id").withColumnRenamed("split", "split2")
-      a.join(b, "doc_id")
-        .select(col("doc_id"),
-          col("split").isin("train", "validation", "test").as("assigned"),
-          (col("split") === col("split2")).as("stable"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // Deterministic DOMAIN MIXING (Pile/Dolma-style source weights):
-    // keep each row with its language's configured probability, decided
-    // by a pure hash of the doc key — reproducible, append-invariant,
-    // scan-local. The oracle asserts the equality STRUCTURE per
-    // language (exact keep-all/drop-all at weights 1/0, tolerance-band
-    // acceptance at fractional weights, run-to-run stability, and
-    // subset invariance — the filtered corpus keeps exactly the same
-    // docs), which DuckDB can check without replicating the hash.
-    // Temperature (alpha) sampling — the multilingual rebalancing
-    // recipe: p_i ∝ n_i^alpha. The Spark side recomputes the expected
-    // per-domain keep rate in closed form from the true counts and
-    // checks the carve lands within hash noise; alpha=1 must reproduce
-    // natural proportions (one uniform rate). DuckDB pins the totals.
-    "q_alpha_sample" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val totalN = docs.count()
-      val target = totalN / 2
-      def samp(a: Double) = Splits.alphaSample(docs, "lang", "doc_id", a, target)
-      val tot = docs.groupBy("lang").agg(count(lit(1)).as("total"))
-      val k03 = samp(0.3).groupBy("lang").agg(count(lit(1)).as("kept03"))
-      val k03b = samp(0.3).groupBy("lang").agg(count(lit(1)).as("kept03b"))
-      val k1 = samp(1.0).groupBy("lang").agg(count(lit(1)).as("kept1"))
-      val wsum = sum(pow(col("total"), lit(0.3))).over(
-        org.apache.spark.sql.expressions.Window.partitionBy())
-      tot.join(k03, Seq("lang"), "left").join(k03b, Seq("lang"), "left")
-        .join(k1, Seq("lang"), "left")
-        .na.fill(0L, Seq("kept03", "kept03b", "kept1"))
-        .withColumn("r03", least(lit(1.0),
-          lit(target) * (pow(col("total"), lit(0.3)) / wsum) / col("total")))
-        .select(col("lang"), col("total"),
-          (abs(col("kept03") / col("total") - col("r03")) < 0.18)
-            .as("mix03_ok"),
-          (col("kept03") === col("kept03b")).as("stable"),
-          (abs(col("kept1") / col("total") - lit(target.toDouble / totalN))
-            < 0.18).as("natural1_ok"))
-        .orderBy(col("lang"))
-    }),
-
-    // TOKEN-budget domain mixing (the recipe as a training config
-    // states it — "X tokens of domain d"): en capped at half its token
-    // mass, de far under budget (keeps all), zh budget 0, fr/es
-    // unlisted (dropped) — rate-below-1 carve, cap-at-1, zero-budget
-    // and unlisted-drop all checked; budgets count FAITHFUL BPE
-    // tokens. Structural booleans Spark-side; DuckDB pins per-domain
-    // totals (the carve hash has no SQL mirror — same contract as
-    // q_domain_mix/q_alpha_sample).
-    "q_token_budget_mix" -> ((s, dir) => {
-      // count tokens ONCE (the merge loop is the scan's whole cost and
-      // six consumers read the result): materialize the tiny
-      // (id, lang, n_bpe) frame through the reliable-checkpoint seam —
-      // executor-local by default, durable-directory when
-      // Dedup.CheckpointDirConf names one, exactly the crash-safe form
-      // a real pipeline's token-count stage needs
-      val docs = Dedup.materialize(t(s, dir, "documents")
-        .select(col("doc_id"), col("lang"),
-          TextAnalysis.bpeTokenCountRanked(col("text")).cast("long")
-            .as("n_bpe")))
-      val enTokens = docs.filter(col("lang") === "en")
-        .agg(sum(col("n_bpe"))).head().getLong(0)
-      val budgets = Map("en" -> enTokens / 2, "de" -> enTokens * 10,
-        "zh" -> 0L)
-      def mix(d: DataFrame) = Splits.tokenBudgetMix(d, "lang", "doc_id",
-        "n_bpe", budgets)
-      val tot = docs.groupBy("lang").agg(count(lit(1)).as("total"),
-        sum(col("n_bpe")).as("total_tokens"))
-      val kept = mix(docs).groupBy("lang")
-        .agg(sum(col("n_bpe")).as("kept_tokens"))
-      val kept2 = mix(docs).groupBy("lang")
-        .agg(sum(col("n_bpe")).as("kept_tokens2"))
-      tot.join(kept, Seq("lang"), "left").join(kept2, Seq("lang"), "left")
-        .na.fill(0L, Seq("kept_tokens", "kept_tokens2"))
-        .select(col("lang"), col("total"), col("total_tokens"),
-          when(col("lang") === "en",
-            abs(col("kept_tokens") / lit(enTokens / 2.0) - 1.0) < 0.2)
-            .when(col("lang") === "de",
-              col("kept_tokens") === col("total_tokens"))
-            .when(col("lang") === "zh", col("kept_tokens") === 0)
-            .otherwise(col("kept_tokens") === 0).as("budget_ok"),
-          (col("kept_tokens") === col("kept_tokens2")).as("stable"))
-        .orderBy(col("lang"))
-    }),
-
-    "q_domain_mix" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val weights = Map("en" -> 0.5, "zh" -> 1.0, "es" -> 0.0)
-      def mix(d: DataFrame) =
-        Splits.domainMix(d, "lang", "doc_id", weights, defaultWeight = 0.25)
-      val tot = docs.groupBy("lang").agg(count(lit(1)).as("total"))
-      val kept = mix(docs).groupBy("lang").agg(count(lit(1)).as("kept"))
-      val kept2 = mix(docs).groupBy("lang")
-        .agg(count(lit(1)).as("kept2"))
-      val keptSubA = mix(docs).filter(col("doc_id") < 500).groupBy("lang")
-        .agg(count(lit(1)).as("sub_of_kept"))
-      val keptSubB = mix(docs.filter(col("doc_id") < 500)).groupBy("lang")
-        .agg(count(lit(1)).as("kept_of_sub"))
-      val w = typedLit(weights)
-      tot.join(kept, Seq("lang"), "left")
-        .join(kept2, Seq("lang"), "left")
-        .join(keptSubA, Seq("lang"), "left")
-        .join(keptSubB, Seq("lang"), "left")
-        .na.fill(0L, Seq("kept", "kept2", "sub_of_kept", "kept_of_sub"))
-        .select(col("lang"), col("total"),
-          when(col("lang") === "zh", col("kept") === col("total"))
-            .when(col("lang") === "es", col("kept") === 0)
-            .otherwise(abs(col("kept") / col("total") -
-              coalesce(w(col("lang")), lit(0.25))) < 0.18).as("mix_ok"),
-          (col("kept") === col("kept2")).as("stable"),
-          (col("sub_of_kept") === col("kept_of_sub")).as("invariant"))
-        .orderBy(col("lang"))
-    }),
-
-    // Deterministic GLOBAL SHUFFLE (training-order randomization):
-    // pos = distributed rank of xxhash64(doc_id) — the two-pass prefix
-    // shape, never a single-task global sort. doc_ids are contiguous
-    // 0..n-1 in the corpus, so the shuffle must be a permutation of
-    // that range; the oracle asserts exactly that structure plus
-    // stability and genuine displacement, without knowing the hash.
-    "q_shuffle_order" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").select("doc_id")
-      val a = Splits.shuffled(docs, "doc_id")
-      val b = Splits.shuffled(docs, "doc_id")
-        .withColumnRenamed("pos", "pos2")
-      a.join(b, "doc_id")
-        .agg(count(lit(1)).as("n"),
-          (count_distinct(col("pos")) === count(lit(1)) &&
-            min(col("pos")) === 0 &&
-            max(col("pos")) === count(lit(1)) - 1).as("permutation"),
-          max(when(col("pos") =!= col("pos2"), 1L).otherwise(0L))
-            .as("unstable_rows"),
-          (max(when(col("pos") =!= col("doc_id"), 1L).otherwise(0L)) === 1L)
-            .as("displaced"))
-        .select(col("n"), col("permutation"),
-          (col("unstable_rows") === 0L).as("stable"), col("displaced"))
-    }),
-
-    // LEAKAGE-SAFE SPLITTING keyed by dedup CLUSTER (The-Stack-style:
-    // near-duplicates of a test doc must never train) — the natural
-    // composition of the shared component labels with the hash splitter:
-    // the split key is the CLUSTER id, so every member of a duplicate
-    // cluster lands in one split by construction. The oracle rebuilds
-    // the clusters independently (DuckDB islands) and asserts the
-    // no-straddle structure per cluster.
-    "q_split_leakage_safe" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val labeled = docs.select(col("doc_id"))
-        .join(sharedChainLabels(s, dir), Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("component"), col("doc_id")).as("component"))
-      Splits.assign(labeled, "component")
-        .groupBy(col("component"))
-        .agg(count(lit(1)).as("members"),
-          (count_distinct(col("split")) === 1).as("no_straddle"),
-          max(col("split").isin("train", "validation", "test"))
-            .as("assigned"))
-        .orderBy(col("component"))
-    }),
-
-    // EPOCH REPLICATION (the ×2.5-style up-weighting half of a mixing
-    // recipe): every row emitted floor(w) times plus a deterministic
-    // hash-sampled fractional copy, with an epoch index — one scan, one
-    // explode, no per-epoch self-union. Oracle asserts the per-language
-    // structure: exact doubling at 2.0, identity at 1.0, tolerance at
-    // fractional weights, and the right epoch range.
-    "q_replicate" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val rep = Splits.replicate(docs, "lang", "doc_id",
-        Map("en" -> 2.0, "zh" -> 1.0, "es" -> 0.5), defaultWeight = 2.5)
-      val tot = docs.groupBy("lang").agg(count(lit(1)).as("total"))
-      val r = rep.groupBy("lang").agg(count(lit(1)).as("emitted"),
-        max(col("epoch")).as("max_epoch"))
-      tot.join(r, Seq("lang"), "left")
-        .select(col("lang"), col("total"),
-          when(col("lang") === "en", col("emitted") === col("total") * 2)
-            .when(col("lang") === "zh", col("emitted") === col("total"))
-            .when(col("lang") === "es",
-              abs(col("emitted") / col("total") - 0.5) < 0.18)
-            .otherwise(abs(col("emitted") / col("total") - 2.5) < 0.18)
-            .as("rep_ok"),
-          when(col("lang") === "en", col("max_epoch") === 1)
-            .when(col("lang") === "zh", col("max_epoch") === 0)
-            .when(col("lang") === "es", col("max_epoch") === 0)
-            .otherwise(col("max_epoch") === 2).as("epochs_ok"))
-        .orderBy(col("lang"))
-    }),
-
-    // Contiguous token-budget sharding (corpus → ~equal-token shard
-    // files): distributed two-pass prefix sum — range shuffle, tiny
-    // per-partition totals to the driver, broadcast offsets, window per
-    // PARTITION (never a global single-task window). The shard budget
-    // is in TOKENIZER-FAITHFUL BPE tokens (the number a training run
-    // actually packs by — the regex proxy drifts 10-30%); DuckDB
-    // recomputes every merge, offset and shard cut — exact match.
-    "q_pack_shards" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").filter(col("doc_id") < 200)
-        .select(col("doc_id"),
-          TextAnalysis.bpeTokenCountRanked(col("text")).cast("int")
-            .as("n_tokens"))
-      Splits.packShards(docs, "doc_id", "n_tokens", budget = 2000L)
-        .select(col("doc_id"), col("n_tokens"),
-          col("offset_in_corpus"), col("shard"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // Fixed-window token chunking with overlap (context-length
-    // preprocessing for training/RAG): one codegen'd scan-local
-    // projection — sequence→transform→slice→posexplode, no shuffle.
-    // The oracle recomputes every window with DuckDB list slicing, so
-    // window boundaries, overlap and tail handling are all hash-checked.
-    "q_doc_chunks" -> ((s, dir) => {
-      TextAnalysis.chunk(t(s, dir, "documents").filter(col("doc_id") < 50),
-          "doc_id", "text", maxTokens = 64, overlap = 16)
-        .orderBy(col("doc_id"), col("chunk_idx"))
-    }),
-
-    // Context-length chunking with the budget in TOKENIZER-FAITHFUL
-    // BPE tokens (chunk windows whitespace words; this windows the
-    // subword stream itself — every chunk is exactly ≤ budget MODEL
-    // tokens). DuckDB re-derives the full subword stream from the
-    // merge literals, then recomputes every window — boundaries,
-    // overlap, tail, and the joined chunk text all hash-checked.
-    "q_doc_chunks_bpe" -> ((s, dir) => {
-      TextAnalysis.chunkBpe(
-          t(s, dir, "documents").filter(col("doc_id") < 50),
-          "doc_id", "text", maxTokens = 64, overlap = 16)
-        .orderBy(col("doc_id"), col("chunk_idx"))
-    }),
-
-    // Cross-document boilerplate line removal (rows-only: reassembly
-    // order + normalization are painful to mirror in SQL). Sentences
-    // become pseudo-lines so the single-line test corpus exercises the
-    // explode→frequency→anti-join→reassemble pipeline.
-    "q_doc_boilerplate" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-        .withColumn("text", regexp_replace(col("text"), "\\. ", ".\n"))
-      Boilerplate.removeFrequentLines(docs, "doc_id", "text", minDocFreq = 10)
-        .select(col("doc_id"), col("n_lines_kept"), md5(col("text")).as("clean_md5"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // Language ID against PLANTED ground truth — one stopworded
-    // sentence AND one stopword-free technical/compound document per
-    // language, plus unspaced Chinese and junk. The stopword-free and
-    // unspaced rows are exactly what the old stopword-argmax operator
-    // misclassified to "und" (no function words to match; Chinese
-    // without spaces tokenized to one giant unmatched "word") — the
-    // char-trigram profiles must label ALL of them.
-    "q_lang_id" -> ((s, dir) => {
-      import s.implicits._
-      val planted = Seq(
-        (1L, "the cat is on the mat and it is very happy there"),
-        (2L, "der hund ist nicht in der küche und das ist auch gut"),
-        (3L, "le chat est dans la maison et il est très content"),
-        (4L, "el gato es un animal y la casa es grande"),
-        (5L, "il gatto è un animale che dorme nella casa"),
-        (6L, "o cachorro não está em casa e a menina é grande demais"),
-        (7L, "installation requirements troubleshooting documentation"),
-        (8L, "geschwindigkeitsbegrenzung versicherungsunternehmen"),
-        (9L, "téléchargement développement référencement"),
-        (10L, "programación internacionalización automatización"),
-        (11L, "internazionalizzazione configurazione ottimizzazione"),
-        (12L, "programação internacionalização automatização"),
-        (13L, "这是一个没有空格的中文测试文档"),
-        (14L, "zxcv qwer asdf mnbv"))
-      planted.toDF("doc_id", "text")
-        .select(col("doc_id"),
-          TextAnalysis.langId(col("text")).as("pred_lang"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // Language ID + composite quality score + fingerprint presence. The
-    // quality composite and the stopword-argmax langId are plain
-    // arithmetic/set ops — fully oracle-checked; the rolling-hash VALUE
-    // has no SQL twin, so the query asserts it computed (IS NOT NULL)
-    // while its exact bits stay covered by TextExpressionsSpec.
-    "q_doc_fingerprint" -> ((s, dir) => {
-      TextAnalysis.documentStats(t(s, dir, "documents"))
-        .select(col("doc_id"), col("quality"), col("pred_lang"),
-          col("fingerprint").isNotNull.as("has_fingerprint"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // Fingerprint CONTRACT gate with planted ground truth: identical
-    // twins (whitespace-normalized variants included — the fingerprint
-    // normalizes before hashing) must collide, and the first 25 real
-    // docs must all be pairwise distinct (injectivity on the sample —
-    // deterministic for the seeded corpus). The hash VALUES cannot be
-    // recomputed by DuckDB; equality structure can, which is exactly
-    // what a fingerprint promises.
-    "q_doc_fingerprint_exact" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").filter(col("doc_id") < 25)
-        .select(col("doc_id"), col("text"))
-      // twin = same text with shuffled whitespace (normalization target)
-      val twins = docs.select((col("doc_id") + 100000).as("doc_id"),
-        concat(lit("  "), regexp_replace(col("text"), lit(" "), lit("\t "))).as("text"))
-      val fp = docs.union(twins)
-        .select(col("doc_id"), TextAnalysis.fingerprint(col("text")).as("_fp"))
-      val orig = fp.filter(col("doc_id") < 25)
-      val twin = fp.filter(col("doc_id") >= 100000)
-        .select((col("doc_id") - 100000).as("doc_id"), col("_fp").as("_fp_twin"))
-      val distinctFps = orig.select(countDistinct(col("_fp")).as("n"))
-      orig.join(twin, "doc_id")
-        .crossJoin(broadcast(distinctFps))
-        .select(col("doc_id"),
-          (col("_fp") === col("_fp_twin")).as("twin_match"),
-          (col("n") === lit(25)).as("injective_sample"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // =================================================================
-    // North star: multimodal columns (decode layer STUBBED, plumbing real)
-    // =================================================================
-
-    // REAL full pixel decode, oracle-gated: complete constant-color
-    // 24-bit BMPs built per doc (dims/colors derived from doc_id), then
-    // BmpPixelStats walks every padded pixel row — no codec library,
-    // BI_RGB is pure byte arithmetic. Constant color makes the channel
-    // means exactly the planted values, so DuckDB reconstructs the
-    // whole result from doc_id alone.
-    // Image near-dup dedup: perceptual dHash (integer-deterministic
-    // 9×8 luma comparison grid) + the same pigeonhole-banded hamming
-    // join text simhash uses. 300 planted images in 3 families × 2
-    // one-bit variants across PNG/BMP/GIF containers: same-variant
-    // pairs collide at hamming 0 (C(50,2)·2 per family), cross-variant
-    // at hamming 1 (50·50), families sit ≥31 bits apart — so the pair
-    // census is fully reconstructible by the oracle from the counts.
-    "q_image_dedup" -> ((s, dir) => {
-      import s.implicits._
-      val pairs = graft.ext.Dedup.imageNearDuplicates(
-        plantedImages(300).toDF("id", "content").repartition(8),
-        "id", "content", maxHamming = 3)
-      pairs.groupBy(col("hamming"))
-        .agg(count(lit(1)).as("n_pairs"))
-        .orderBy(col("hamming"))
-    }),
-
-    // Canonical retention over the IMAGE near-dup graph: the hamming
-    // pairs feed the same Large-Star/Small-Star contraction text dedup
-    // uses; each planted family collapses to ONE component rooted at
-    // its minimum id (families are the residues mod 3 → roots 0, 1, 2)
-    // of exactly 100 members — the multimodal dedup pipeline end to
-    // end, census-checkable.
-    "q_image_canonical" -> ((s, dir) => {
-      import s.implicits._
-      val pairs = graft.ext.Dedup.imageNearDuplicates(
-        plantedImages(300).toDF("id", "content").repartition(8),
-        "id", "content", maxHamming = 3)
-      graft.ext.Dedup.connectedComponents(pairs)
-        .groupBy(col("component"))
-        .agg(count(lit(1)).as("cluster_size")) // every member incl. the root
-        .orderBy(col("component"))
-    }),
-
-    // Audio near-dup dedup: 65-frame integer energy-envelope hash +
-    // the same banded hamming join. 300 planted PCM clips in 3
-    // envelope families × 2 one-bit variants: same census arithmetic
-    // as q_image_dedup (gain invariance is spec-covered — an 8-bit
-    // doubled ramp would clip, so the oracle fixture keeps unit gain).
-    "q_audio_dedup" -> ((s, dir) => {
-      def wav(env: Int => Int, gain: Int): Array[Byte] = {
-        val samples = Array.tabulate(130)(k => (128 + env(k / 2) * gain).toByte)
-        val out = new java.io.ByteArrayOutputStream()
-        def ascii(str: String): Unit = out.write(str.getBytes("US-ASCII"))
-        def le32(v: Int): Unit =
-          Seq(v, v >> 8, v >> 16, v >> 24).foreach(b => out.write(b & 0xFF))
-        def le16(v: Int): Unit = { out.write(v & 0xFF); out.write((v >> 8) & 0xFF) }
-        ascii("RIFF"); le32(36 + samples.length); ascii("WAVE")
-        ascii("fmt "); le32(16); le16(1); le16(1); le32(8000); le32(8000)
-        le16(1); le16(8)
-        ascii("data"); le32(samples.length); out.write(samples)
-        out.toByteArray
-      }
-      val base: Seq[Int => Int] = Seq(
-        i => i,                       // rising: all 64 bits
-        _ => 10,                      // flat: no bits
-        i => (i % 2) * 50)            // alternating: 32 bits
-      val tweak: Seq[Int => Int] = Seq(
-        i => if (i == 64) 0 else i,
-        i => if (i == 64) 99 else 10,
-        i => if (i == 64) 99 else (i % 2) * 50)
-      val rows = (0 until 300).map { id =>
-        val fam = id % 3
-        val env = if ((id / 3) % 2 == 0) base(fam) else tweak(fam)
-        (id, wav(env, gain = 1))
-      }
-      import s.implicits._
-      graft.ext.Dedup.audioNearDuplicates(
-        rows.toDF("id", "content").repartition(8), "id", "content",
-        maxHamming = 3)
-        .groupBy(col("hamming"))
-        .agg(count(lit(1)).as("n_pairs"))
-        .orderBy(col("hamming"))
-    }),
-
-    "q_multimodal_pixels" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").filter(col("doc_id") < 50)
-      docs.select(col("doc_id"),
-          graft.functions.GraftFunctions.bmpPixelStats(
-            Multimodal.syntheticBmpContent(
-              (lit(4) + pmod(col("doc_id"), lit(5))).cast("int"),
-              (lit(2) + pmod(col("doc_id"), lit(3))).cast("int"),
-              pmod(col("doc_id"), lit(256)).cast("int"),
-              pmod(col("doc_id") * 7, lit(256)).cast("int"),
-              pmod(col("doc_id") * 13, lit(256)).cast("int"))).as("px"))
-        .select(col("doc_id"),
-          col("px.width").as("width"), col("px.height").as("height"),
-          col("px.n_pixels").as("n_pixels"),
-          round(col("px.mean_r"), 6).as("mean_r"),
-          round(col("px.mean_g"), 6).as("mean_g"),
-          round(col("px.mean_b"), 6).as("mean_b"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // REAL COMPRESSED-format pixel decode (PNG deflate / GIF LZW /
-    // JPEG DCT) via the JDK's javax.imageio — no external codec after
-    // all. Payloads are planted constant-color images encoded by the
-    // REAL encoders, decoded by ImagePixelStats inside the scan:
-    // lossless formats round-trip the planted channel means exactly
-    // (full-precision oracle columns), JPEG keeps exact dimensions and
-    // lands within the YCbCr rounding band (boolean).
-    "q_multimodal_compressed" -> ((s, dir) => {
-      import graft.functions.GraftFunctions._
-      val docs = t(s, dir, "documents").filter(col("doc_id") < 50)
-      val w = (lit(4) + pmod(col("doc_id"), lit(5))).cast("int")
-      val h = (lit(2) + pmod(col("doc_id"), lit(3))).cast("int")
-      val r = pmod(col("doc_id"), lit(256)).cast("int")
-      val g = pmod(col("doc_id") * 7, lit(256)).cast("int")
-      val b = pmod(col("doc_id") * 13, lit(256)).cast("int")
-      docs.select(col("doc_id"),
-          imagePixelStats(imageEncodeConst("png", w, h, r, g, b)).as("png"),
-          imagePixelStats(imageEncodeConst("gif", w, h, r, g, b)).as("gif"),
-          imagePixelStats(imageEncodeConst("jpg", w, h, r, g, b)).as("jpg"))
-        .select(col("doc_id"),
-          col("png.width").as("width"), col("png.height").as("height"),
-          round(col("png.mean_r"), 6).as("mean_r"),
-          round(col("png.mean_g"), 6).as("mean_g"),
-          round(col("png.mean_b"), 6).as("mean_b"),
-          (col("gif.mean_r") === col("png.mean_r") &&
-            col("gif.mean_g") === col("png.mean_g") &&
-            col("gif.mean_b") === col("png.mean_b")).as("gif_exact"),
-          (col("jpg.width") === col("png.width") &&
-            col("jpg.height") === col("png.height") &&
-            abs(col("jpg.mean_r") - col("png.mean_r")) <= 3 &&
-            abs(col("jpg.mean_g") - col("png.mean_g")) <= 3 &&
-            abs(col("jpg.mean_b") - col("png.mean_b")) <= 3).as("jpeg_ok"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // REAL full PCM sample decode, oracle-gated: complete 16-bit WAVs
-    // (every sample = a planted amplitude) decoded by WavPcmStats —
-    // rms and peak are exactly amplitude/2^15, bit-identical across
-    // engines.
-    // MP3 frame-header walk (codec-free metadata decode): crafted
-    // MPEG-1 Layer III streams — real sync/bitrate/samplerate header
-    // bits, zeroed payloads, ID3v2 tag on odd ids — walked by the
-    // native Mp3FrameStats expression; the oracle recomputes frame
-    // count, bitrate, and exact duration from the same parametrization.
-    "q_multimodal_mp3" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").filter(col("doc_id") < 50)
-      val idx = element_at(array(lit(9), lit(11), lit(13)),
-        (pmod(col("doc_id"), lit(3)) + 1).cast("int"))
-      val frames = (lit(5) + pmod(col("doc_id"), lit(7))).cast("int")
-      docs.select(col("doc_id"),
-          graft.functions.GraftFunctions.mp3FrameStats(
-            Multimodal.syntheticMp3Content(idx, frames,
-              pmod(col("doc_id"), lit(2)) === 1)).as("m"))
-        .select(col("doc_id"), col("m.frames").as("frames"),
-          col("m.sample_rate").as("sample_rate"),
-          round(col("m.avg_bitrate_kbps"), 3).as("avg_bitrate_kbps"),
-          round(col("m.duration_sec"), 6).as("duration_sec"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "q_multimodal_pcm" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").filter(col("doc_id") < 50)
-      docs.select(col("doc_id"),
-          graft.functions.GraftFunctions.wavPcmStats(
-            Multimodal.syntheticWavPcmContent(
-              lit(16000),
-              (lit(1) + pmod(col("doc_id"), lit(2))).cast("int"),
-              (lit(100) + pmod(col("doc_id") * 31, lit(1000))).cast("int"),
-              (lit(50) + pmod(col("doc_id"), lit(20))).cast("int"))).as("pcm"))
-        .select(col("doc_id"), col("pcm.n_samples").as("n_samples"),
-          round(col("pcm.rms"), 6).as("rms"),
-          round(col("pcm.peak"), 6).as("peak"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // Binary payload plumbing: byte length + md5 fingerprint of the
-    // binary content (oracle-checkable on both engines).
-    "q_multimodal_bytes" -> ((s, dir) => {
-      Multimodal.asAssets(t(s, dir, "documents"), "doc_id", "text",
-          "image", "source")
-        .select(col("asset_id"), col("modality"),
-          col("meta.byte_len").as("byte_len"),
-          md5(col("content")).as("content_md5"))
-        .orderBy(col("asset_id"))
-    }),
-
-    // REAL header decode + resize pipeline: payloads are crafted PNG
-    // headers (dimensions derived from asset_id), parsed by the native
-    // ImageHeaderMeta expression — oracle recomputes the arithmetic.
-    "q_multimodal_decode" -> ((s, dir) => {
-      val assets = Multimodal.asAssets(t(s, dir, "documents"), "doc_id", "text",
-          "image", "source")
-        .withColumn("content", Multimodal.syntheticPngContent(
-          (pmod(col("asset_id"), lit(1920)) + 32).cast("int"),
-          (pmod(col("asset_id") * 7, lit(1080)) + 32).cast("int")))
-      Multimodal.resize(Multimodal.decodeImageMeta(assets), maxSide = 256)
-        .select(col("asset_id"),
-          col("image_meta.width").as("width"),
-          col("image_meta.height").as("height"),
-          col("image_meta.format").as("format"),
-          col("resized_meta.width").as("resized_w"),
-          col("resized_meta.height").as("resized_h"))
-        .orderBy(col("asset_id"))
-    }),
-
-    // REAL WAV header decode: crafted RIFF headers (rates/sizes derived
-    // from asset_id), parsed by AudioHeaderMeta — arithmetic oracle.
-    "q_multimodal_audio" -> ((s, dir) => {
-      val assets = Multimodal.asAssets(t(s, dir, "documents"), "doc_id", "text",
-          "audio", "source")
-        .withColumn("content", Multimodal.syntheticWavContent(
-          (pmod(col("asset_id"), lit(8)) * 1000 + 8000).cast("int"),
-          (pmod(col("asset_id"), lit(2)) + 1).cast("int"),
-          lit(16),
-          ((pmod(col("asset_id"), lit(997)) + 1) * 64).cast("int")))
-      Multimodal.decodeAudioMeta(assets)
-        .select(col("asset_id"),
-          col("audio_meta.sample_rate").as("sample_rate"),
-          col("audio_meta.channels").as("channels"),
-          col("audio_meta.duration_ms").as("duration_ms"),
-          col("audio_meta.format").as("format"))
-        .orderBy(col("asset_id"))
-    }),
-
-    // REAL video container-header decode: structurally real MP4 boxes
-    // (ftyp/moov/mvhd/trak/tkhd, 16.16-fixed dims, timescale-1000
-    // duration) for even assets, AVI RIFF/hdrl/avih for odd — the box
-    // walk must recover exactly the planted dimensions and durations
-    // (frame/codec decode stays a labeled stub; containers don't need
-    // codecs).
-    "q_multimodal_video" -> ((s, dir) => {
-      val w = (pmod(col("asset_id"), lit(640)) + 16).cast("int")
-      val h = (pmod(col("asset_id"), lit(360)) + 9).cast("int")
-      val durMs = (pmod(col("asset_id"), lit(9973)) + 40) * 100
-      val frames = pmod(col("asset_id"), lit(250)) + 1
-      val assets = Multimodal.asAssets(t(s, dir, "documents"), "doc_id",
-          "text", "video", "source")
-        .withColumn("content", when(pmod(col("asset_id"), lit(2)) === 0,
-            Multimodal.syntheticMp4Content(w, h, durMs))
-          .otherwise(Multimodal.syntheticAviContent(w, h, lit(40000L), frames)))
-      Multimodal.decodeVideoMeta(assets)
-        .select(col("asset_id"),
-          col("video_meta.width").as("width"),
-          col("video_meta.height").as("height"),
-          col("video_meta.duration_ms").as("duration_ms"),
-          col("video_meta.format").as("format"))
-        .orderBy(col("asset_id"))
-    }),
-
-    // URL filtering (RefinedWeb/C4's FIRST pipeline gate): synthesized
-    // URLs (scheme/www/port decorations vary per row) → parse_url host
-    // → registrable domain (simplified-PSL: co.uk keeps three labels)
-    // → blocklist → deterministic per-domain cap. The oracle recomputes
-    // the domain from the GENERATING formula, so a parse or PSL bug on
-    // the Spark side mismatches.
-    "q_url_filter" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val tld = element_at(array(lit(".co.uk"), lit(".com"), lit(".org"),
-        lit(".net"), lit(".io")), (pmod(col("doc_id"), lit(5)) + 1).cast("int"))
-      val scheme = when(pmod(col("doc_id"), lit(3)) === 0, "HTTPS://")
-        .otherwise("https://")
-      val www = when(pmod(col("doc_id"), lit(4)) === 0, "www.").otherwise("")
-      val port = when(pmod(col("doc_id"), lit(6)) === 0, ":443").otherwise("")
-      val url = concat(scheme, www, col("source"), lit("-site"), tld, port,
-        lit("/page/"), pmod(col("doc_id"), lit(20)).cast("string"))
-      val blocked = for {
-        src <- Seq("src1", "src7")
-        t <- Seq(".co.uk", ".com", ".org", ".net", ".io")
-      } yield s"$src-site$t"
-      val parsed = graft.ext.UrlOps.parseUrl(
-        docs.select(col("doc_id"), url.as("url")))
-      val kept = graft.ext.UrlOps.capPerDomain(
-        graft.ext.UrlOps.domainBlocklistFilter(parsed, blocked), maxDocs = 3)
-      kept.select(col("doc_id"), col("url_domain")).orderBy(col("doc_id"))
-    }),
-
-    // URL-exact dedup under normalization: per canonical group the rows
-    // differ only by tracking params, fragments, default ports, scheme/
-    // host case, or trailing slashes — all of which must canonicalize
-    // away; DuckDB recomputes the canonical string and group stats from
-    // the generating arithmetic.
-    "q_url_dedup" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val k = pmod(col("doc_id"), lit(25)).cast("string")
-      val kNum = pmod(col("doc_id"), lit(25))
-      val qs = when(pmod(kNum, lit(3)) === 0, concat(lit("?id="), k))
-        .otherwise(lit(""))
-      val deco = pmod(col("doc_id"), lit(5))
-      val scheme = when(deco === 0, "HTTPS://").otherwise("https://")
-      val host = when(deco === 1, concat(lit("Site"), k, lit(".Example.COM")))
-        .otherwise(concat(lit("site"), k, lit(".example.com")))
-      val port = when(deco === 2, ":443").otherwise("")
-      val slash = when(deco === 3 && qs === "", "/").otherwise("")
-      val frag = when(deco === 4, "#top").otherwise("")
-      val track = when(deco === 2,
-          when(qs === "", "?utm_source=news").otherwise("&utm_campaign=z"))
-        .otherwise(lit(""))
-      val url = concat(scheme, host, port, lit("/p/"), k, slash, qs,
-        track, frag)
-      graft.ext.UrlOps.dedupByUrl(
-          docs.select(col("doc_id"), url.as("url")))
-        .orderBy(col("canonical_url"))
-    }),
-
-    // REAL video FRAME decode end to end, for the one codec the JDK can
-    // finish: Motion-JPEG AVI — each movi chunk is a complete JPEG,
-    // built at runtime by javax.imageio (constant gray per frame),
-    // extracted by the MjpegFrames RIFF walk, and pixel-decoded back by
-    // ImagePixelStats. Dimensions and frame count check exactly; the
-    // decoded grays check within the JPEG quantization tolerance, and
-    // the container header must agree with the frames (header_ok).
-    "q_multimodal_frames" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").filter(col("doc_id") < 50)
-      val w = (lit(8) + pmod(col("doc_id"), lit(5)) * 2).cast("int")
-      val h = (lit(8) + pmod(col("doc_id"), lit(3)) * 2).cast("int")
-      def gray(i: Int) =
-        (pmod(col("doc_id") * 37 + lit(i * 64), lit(224)) + 16).cast("int")
-      val avi = docs.select(col("doc_id"),
-        Multimodal.syntheticMjpegAviContent(w, h,
-          Seq(gray(0), gray(1), gray(2))).as("content"))
-      val frames = Multimodal.decodeVideoFrames(avi)
-      val hdr = graft.functions.GraftFunctions.videoHeaderMeta(col("content"))
-      val expGray = (pmod(col("doc_id") * 37 + col("frame_idx") * 64,
-        lit(224)) + 16).cast("double")
-      frames
-        .withColumn("gray_ok",
-          abs(col("frame_pixels.mean_r") - expGray) <= 3 &&
-            abs(col("frame_pixels.mean_g") - expGray) <= 3 &&
-            abs(col("frame_pixels.mean_b") - expGray) <= 3)
-        .withColumn("header_ok",
-          hdr("width") === col("frame_pixels.width") &&
-            hdr("height") === col("frame_pixels.height") &&
-            hdr("format") === "avi")
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_frames"),
-          min(col("frame_pixels.width")).as("width"),
-          min(col("frame_pixels.height")).as("height"),
-          min(col("gray_ok")).as("all_grays_ok"),
-          min(col("header_ok")).as("header_ok"))
-        .orderBy(col("doc_id"))
-    })
-  )
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted keys (sketch/LSH/stub operators)
-    * get the driver's rows-only check. */
-  def oracleSql: Map[String, String] = Map(
-    "q_project_filter" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity, l_shipdate
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1998-01-01' AND l_shipdate < TIMESTAMP '1998-03-01'
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "q_predicates" ->
-      """SELECT p_partkey, p_name, p_brand, p_type, p_size
-        |FROM part
-        |WHERE p_size BETWEEN 10 AND 20 AND p_type LIKE '%A%'
-        |  AND p_brand IN ('Brand#1', 'Brand#2', 'Brand#3')
-        |ORDER BY p_partkey""".stripMargin,
-
-    "q_null_pred" ->
-      """SELECT coalesce(nullif(o_orderstatus, 'O'), 'OPEN') AS status,
-        |       count(*) AS cnt,
-        |       count(nullif(o_orderstatus, 'O')) AS cnt_non_null
-        |FROM orders
-        |GROUP BY 1 ORDER BY status""".stripMargin,
-
-    "q_count_join_in" ->
-      """SELECT count(*) AS cnt
-        |FROM customer JOIN orders ON c_custkey = o_custkey
-        |WHERE c_nationkey IN (SELECT n_nationkey FROM nation WHERE n_regionkey = 1)""".stripMargin,
-
-    "q_multiway_join" ->
-      """SELECT n_name, round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-        |FROM customer
-        |JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON o_orderkey = l_orderkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA'
-        |GROUP BY n_name ORDER BY n_name""".stripMargin,
-
-    "q_left_join" ->
-      """SELECT c_custkey, count(o_orderkey) AS n_orders
-        |FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-        |GROUP BY c_custkey ORDER BY c_custkey""".stripMargin,
-
-    "q_semi_join" ->
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE EXISTS (SELECT 1 FROM orders
-        |              WHERE o_custkey = c_custkey AND o_totalprice > 100000.0)
-        |ORDER BY c_custkey""".stripMargin,
-
-    "q_anti_join" ->
-      """SELECT c_custkey, c_name, c_mktsegment FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
-        |                  AND o_orderdate < TIMESTAMP '1997-01-01')
-        |ORDER BY c_custkey""".stripMargin,
-
-    "q_filter_count" ->
-      "SELECT count(*) AS cnt FROM orders WHERE o_orderdate >= TIMESTAMP '1999-01-01'",
-
-    "q_max_key" ->
-      "SELECT max(c_custkey) AS max_key, min(c_custkey) AS min_key FROM customer",
-
-    "q_group_revenue" ->
-      """SELECT c_mktsegment, round(sum(o_totalprice), 2) AS revenue,
-        |       count(*) AS n_orders
-        |FROM customer JOIN orders ON c_custkey = o_custkey
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-
-    "q_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-        |       round(sum(l_quantity), 2) AS sum_qty,
-        |       round(sum(l_extendedprice), 2) AS sum_base_price,
-        |       round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-        |       round(avg(l_quantity), 4) AS avg_qty,
-        |       round(avg(l_discount), 4) AS avg_disc,
-        |       count(*) AS count_order
-        |FROM lineitem
-        |WHERE l_shipdate <= TIMESTAMP '2001-09-01'
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q_having_distinct" ->
-      """SELECT l_suppkey, count(DISTINCT l_partkey) AS n_parts,
-        |       round(avg(l_quantity), 4) AS avg_qty,
-        |       round(min(l_extendedprice), 2) AS min_price
-        |FROM lineitem
-        |GROUP BY l_suppkey HAVING count(DISTINCT l_partkey) > 10
-        |ORDER BY l_suppkey""".stripMargin,
-
-    "q_forecast_revenue" ->
-      """SELECT round(sum(l_extendedprice * l_discount), 2) AS revenue
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
-        |  AND l_discount BETWEEN 0.02 AND 0.06 AND l_quantity < 24""".stripMargin,
-
-    "q_rollup" ->
-      """SELECT coalesce(l_returnflag, 'ALL') AS rflag,
-        |       coalesce(l_linestatus, 'ALL') AS lstatus,
-        |       count(*) AS cnt, round(sum(l_quantity), 2) AS qty
-        |FROM lineitem
-        |GROUP BY ROLLUP(l_returnflag, l_linestatus)
-        |ORDER BY rflag, lstatus""".stripMargin,
-
-    "q_cube" ->
-      """SELECT coalesce(l_returnflag, 'ALL') AS rflag,
-        |       coalesce(l_linestatus, 'ALL') AS lstatus,
-        |       count(*) AS cnt, round(sum(l_extendedprice), 2) AS rev
-        |FROM lineitem
-        |GROUP BY CUBE(l_returnflag, l_linestatus)
-        |ORDER BY rflag, lstatus""".stripMargin,
-
-    "q_grouping_sets" ->
-      """SELECT coalesce(o_orderstatus, 'ALL') AS status,
-        |       coalesce(o_orderpriority, 'ALL') AS prio,
-        |       count(*) AS cnt, round(sum(o_totalprice), 2) AS rev
-        |FROM orders
-        |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))
-        |ORDER BY status, prio""".stripMargin,
-
-    "q_pivot" ->
-      """SELECT CAST(year(o_orderdate) AS INTEGER) AS yr,
-        |       coalesce(round(sum(o_totalprice) FILTER (WHERE o_orderstatus = 'F'), 2), 0.0) AS f_total,
-        |       coalesce(round(sum(o_totalprice) FILTER (WHERE o_orderstatus = 'O'), 2), 0.0) AS o_total,
-        |       coalesce(round(sum(o_totalprice) FILTER (WHERE o_orderstatus = 'P'), 2), 0.0) AS p_total
-        |FROM orders GROUP BY 1 ORDER BY yr""".stripMargin,
-
-    "q_unpivot" ->
-      """WITH wide AS (
-        |  SELECT CAST(year(o_orderdate) AS INTEGER) AS yr,
-        |         count(*) FILTER (WHERE o_orderstatus = 'F') AS f_cnt,
-        |         count(*) FILTER (WHERE o_orderstatus = 'O') AS o_cnt,
-        |         count(*) FILTER (WHERE o_orderstatus = 'P') AS p_cnt
-        |  FROM orders GROUP BY 1)
-        |SELECT yr, status, cnt FROM (
-        |  SELECT yr, 'f_cnt' AS status, f_cnt AS cnt FROM wide
-        |  UNION ALL SELECT yr, 'o_cnt', o_cnt FROM wide
-        |  UNION ALL SELECT yr, 'p_cnt', p_cnt FROM wide)
-        |ORDER BY yr, status""".stripMargin,
-
-    "q_exists_subquery" ->
-      """SELECT c_custkey, c_name FROM customer c
-        |WHERE EXISTS (SELECT 1 FROM orders o
-        |              WHERE o.o_custkey = c.c_custkey
-        |                AND o.o_totalprice > 300000.0)
-        |ORDER BY c_custkey""".stripMargin,
-
-    "q_scalar_subquery" ->
-      """SELECT o_orderstatus, count(*) AS cnt
-        |FROM orders
-        |WHERE o_totalprice > (SELECT max(o_totalprice) / 2 FROM orders)
-        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    "q_percentiles" ->
-      """SELECT l_returnflag, count(*) AS cnt,
-        |       quantile_cont(l_quantity, 0.25) AS qty_p25,
-        |       quantile_cont(l_quantity, 0.5)  AS qty_p50,
-        |       quantile_cont(l_quantity, 0.75) AS qty_p75
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    "q_window_rank" ->
-      """SELECT o_custkey, o_orderkey, round(o_totalprice, 2) AS top_price
-        |FROM (SELECT o_custkey, o_orderkey, o_totalprice,
-        |             row_number() OVER (PARTITION BY o_custkey
-        |               ORDER BY o_totalprice DESC, o_orderkey) AS rn
-        |      FROM orders) x
-        |WHERE rn = 1 ORDER BY o_custkey""".stripMargin,
-
-    "q_window_running" ->
-      """SELECT l_suppkey, l_orderkey, l_linenumber,
-        |       round(sum(l_quantity) OVER (PARTITION BY l_suppkey
-        |         ORDER BY l_shipdate, l_orderkey, l_linenumber
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2) AS running_qty
-        |FROM lineitem WHERE l_suppkey <= 3
-        |ORDER BY l_suppkey, l_orderkey, l_linenumber""".stripMargin,
-
-    "q_topk_orders" ->
-      """SELECT o_orderkey, o_custkey, round(o_totalprice, 2) AS price
-        |FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 10""".stripMargin,
-
-    "q_shipping_priority" ->
-      """SELECT o_orderkey, o_orderdate,
-        |       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-        |FROM customer JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON o_orderkey = l_orderkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |  AND o_orderdate < TIMESTAMP '1998-01-01'
-        |  AND l_shipdate > TIMESTAMP '1998-01-01'
-        |GROUP BY o_orderkey, o_orderdate
-        |ORDER BY revenue DESC, o_orderkey LIMIT 10""".stripMargin,
-
-    "q_set_ops" ->
-      """SELECT key FROM (
-        |  SELECT c_nationkey AS key FROM customer
-        |  UNION
-        |  SELECT s_nationkey AS key FROM supplier
-        |) u
-        |WHERE key NOT IN (SELECT n_nationkey FROM nation WHERE n_regionkey = 4)
-        |ORDER BY key""".stripMargin,
-
-    "q_date_functions" ->
-      """SELECT CAST(year(o_orderdate) AS INTEGER) AS yr,
-        |       CAST(month(o_orderdate) AS INTEGER) AS mo,
-        |       count(*) AS cnt, round(sum(o_totalprice), 2) AS revenue
-        |FROM orders
-        |GROUP BY 1, 2 HAVING CAST(year(o_orderdate) AS INTEGER) = 2000
-        |ORDER BY yr, mo""".stripMargin,
-
-    "q_string_functions" ->
-      """SELECT p_partkey, upper(p_brand) AS brand_u,
-        |       substring(p_name, 1, 5) AS name5,
-        |       concat_ws('-', p_brand, p_type) AS brand_type,
-        |       CAST(length(p_name) AS INTEGER) AS name_len
-        |FROM part ORDER BY p_partkey""".stripMargin,
-
-    "q_case_expr" ->
-      """SELECT CASE WHEN o_totalprice > 200000 THEN 'high'
-        |            WHEN o_totalprice > 100000 THEN 'mid'
-        |            ELSE 'low' END AS bucket,
-        |       count(*) AS cnt, round(avg(o_totalprice), 2) AS avg_price
-        |FROM orders GROUP BY 1 ORDER BY bucket""".stripMargin,
-
-    "q_json_extract" ->
-      """SELECT event_type, count(*) AS cnt,
-        |       round(avg(CAST(json_extract_string(props, '$.k') AS INTEGER)), 4) AS avg_k
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q_events_hourly" ->
-      """SELECT date_trunc('hour', ts) AS hour, event_type,
-        |       count(*) AS cnt, round(sum(value), 2) AS total_value
-        |FROM events
-        |WHERE date_trunc('hour', ts) < TIMESTAMP '2024-01-02'
-        |GROUP BY 1, 2 ORDER BY hour, event_type""".stripMargin,
-
-    "q_sessionize" ->
-      """SELECT user_id, CAST(sum(new_session) AS BIGINT) AS n_sessions,
-        |       count(*) AS n_events
-        |FROM (SELECT user_id,
-        |             CASE WHEN prev_ts IS NULL
-        |                    OR epoch(ts) - epoch(prev_ts) > 1800.0 THEN 1
-        |                  ELSE 0 END AS new_session
-        |      FROM (SELECT user_id, ts,
-        |                   lag(ts) OVER (PARTITION BY user_id
-        |                     ORDER BY ts, event_id) AS prev_ts
-        |            FROM events) a) b
-        |GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "q_tt_asof" ->
-      """SELECT n_nationkey, n_name, n_regionkey FROM nation
-        |WHERE n_nationkey < 13 ORDER BY n_nationkey""".stripMargin,
-
-    "q_tt_version" ->
-      """SELECT n_nationkey, n_name, n_regionkey FROM nation
-        |WHERE n_nationkey < 13 ORDER BY n_nationkey""".stripMargin,
-
-    "q_tt_tag" ->
-      """SELECT n_nationkey, n_name, n_regionkey FROM nation
-        |WHERE n_nationkey < 13 ORDER BY n_nationkey""".stripMargin,
-
-    "q_sorted_prune" ->
-      """SELECT o_orderstatus, count(*) AS cnt,
-        |       round(sum(o_totalprice), 2) AS revenue
-        |FROM orders
-        |WHERE o_orderkey BETWEEN 4000 AND 8000
-        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    "q_tt_incremental" ->
-      """SELECT n_nationkey, n_name, n_regionkey FROM nation
-        |WHERE n_nationkey >= 13 ORDER BY n_nationkey""".stripMargin,
-
-    // the dedup must reduce the re-delivered stream to exactly the
-    // source table's rows
-    "q_stream_dedup" ->
-      """SELECT o_orderstatus, count(*) AS cnt,
-        |       round(sum(o_totalprice), 2) AS revenue
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    "q_stream_table" ->
-      """SELECT o_orderstatus, count(*) AS cnt,
-        |       round(sum(o_totalprice), 2) AS revenue
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    // the watermarked stream-stream join must equal the static
-    // time-range join
-    "q_stream_join" ->
-      """SELECT count(*) AS n_pairs, count(DISTINCT c.user_id) AS n_users,
-        |       round(sum(p.value), 2) AS purchase_total
-        |FROM events c JOIN events p
-        |  ON p.user_id = c.user_id
-        | AND c.event_type = 'click' AND p.event_type = 'purchase'
-        | AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 1 HOUR""".stripMargin,
-
-    "q_tt_latest" ->
-      "SELECT n_nationkey, n_name, n_regionkey FROM nation ORDER BY n_nationkey",
-
-    "q_table_stats" ->
-      "SELECT count(*) AS row_count, 'current' AS stats FROM orders",
-
-    // histogram selectivity: the filtered aggregate recomputed with the
-    // same hot-key CASE; the booleans pin the estimate quality flip
-    "q_histogram_stats" ->
-      """WITH skew AS (
-        |  SELECT CASE WHEN o_orderkey % 10 < 9 THEN 0
-        |              ELSE (o_orderkey % 999) + 1 END AS k,
-        |         o_totalprice
-        |  FROM orders)
-        |SELECT count(*) AS cnt, round(sum(o_totalprice), 2) AS rev,
-        |       TRUE AS uniform_overestimates, TRUE AS histogram_honest
-        |FROM skew WHERE k >= 500""".stripMargin,
-
-    // date-histogram selectivity: the filtered aggregate recomputed
-    // with the same hot-load-day CASE (DuckDB date + int = day add)
-    "q_histogram_date" ->
-      """WITH skew AS (
-        |  SELECT CASE WHEN o_orderkey % 10 < 9 THEN DATE '2024-01-01'
-        |              ELSE DATE '2024-01-01' +
-        |                   CAST((o_orderkey % 999) + 1 AS INTEGER) END AS d,
-        |         o_totalprice
-        |  FROM orders)
-        |SELECT count(*) AS cnt, round(sum(o_totalprice), 2) AS rev,
-        |       TRUE AS uniform_overestimates, TRUE AS histogram_honest
-        |FROM skew WHERE d >= DATE '2025-05-16'""".stripMargin,
-
-    // CBO join: the dim holds exactly one row per key, so the join
-    // grouped by key is the plain per-group order count; the two
-    // plan-proof booleans pin the build-side flip COMPUTE STATS causes
-    // (fact wrongly broadcast by file size → dim broadcast by stats)
-    "q_cbo_stats" ->
-      """SELECT o_orderkey % 50 AS g, count(*) AS n,
-        |       TRUE AS filesize_builds_fact, TRUE AS stats_build_dim
-        |FROM orders GROUP BY 1 ORDER BY g""".stripMargin,
-
-    // the view-answered roll-up must equal the scan's aggregate
-    "q_mv_rewrite" ->
-      """SELECT o_orderstatus, count(*) AS cnt,
-        |       count(DISTINCT o_orderpriority) AS nprio,
-        |       round(sum(o_totalprice), 2) AS total,
-        |       round(avg(o_totalprice), 2) AS mean
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    "q_column_stats" ->
-      """SELECT 'o_orderkey' AS col_name, count(DISTINCT o_orderkey) AS ndv,
-        |       count(*) - count(o_orderkey) AS null_count FROM orders
-        |UNION ALL
-        |SELECT 'o_custkey', count(DISTINCT o_custkey),
-        |       count(*) - count(o_custkey) FROM orders
-        |UNION ALL
-        |SELECT 'o_orderstatus', count(DISTINCT o_orderstatus),
-        |       count(*) - count(o_orderstatus) FROM orders
-        |UNION ALL
-        |SELECT 'o_orderpriority', count(DISTINCT o_orderpriority),
-        |       count(*) - count(o_orderpriority) FROM orders
-        |ORDER BY col_name""".stripMargin,
-
-    // the incrementally-refreshed view state must equal a from-scratch
-    // aggregate over the full base
-    "q_mv_refresh" ->
-      """SELECT o_orderstatus, count(*) AS cnt,
-        |       round(sum(o_totalprice), 2) AS total,
-        |       min(o_totalprice) AS lo, max(o_totalprice) AS hi,
-        |       round(avg(o_totalprice), 2) AS mean
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    "q_tt_history" ->
-      """SELECT CAST(1 AS BIGINT) AS snapshot_id, 'append' AS operation,
-        |       (SELECT count(*) FROM nation WHERE n_nationkey < 13) AS record_count
-        |UNION ALL
-        |SELECT CAST(2 AS BIGINT), 'append', (SELECT count(*) FROM nation)
-        |ORDER BY snapshot_id""".stripMargin,
-
-    "q_compact" ->
-      "SELECT 'replace' AS operation, count(*) AS record_count FROM orders",
-
-    "q_sql_maintenance" ->
-      """SELECT CAST(s.ord AS BIGINT) AS snapshot_id, s.op AS operation,
-        |       CAST(s.rc AS BIGINT) AS record_count,
-        |       TRUE AS props_roundtrip_ok, TRUE AS vacuum_dry_run_ok
-        |FROM (
-        |  SELECT 1 AS ord, 'append' AS op,
-        |         (SELECT count(*) FROM nation WHERE n_nationkey < 8) AS rc
-        |  UNION ALL SELECT 2, 'append',
-        |         (SELECT count(*) FROM nation WHERE n_nationkey < 16)
-        |  UNION ALL SELECT 3, 'append', (SELECT count(*) FROM nation)
-        |  UNION ALL SELECT 4, 'replace', (SELECT count(*) FROM nation)
-        |) s
-        |ORDER BY snapshot_id""".stripMargin,
-
-    "q_sql_ctas" ->
-      """SELECT count(*) AS cnt, round(sum(o_totalprice), 2) AS total
-        |FROM orders
-        |WHERE o_totalprice > 200000 OR o_totalprice <= 50000""".stripMargin,
-
-    // delete-file debt recomputed, then the consolidation effect: 3
-    // delete dirs before (two stacked positional + one equality), 2
-    // after the CALL — the merged positional dir carries the DISTINCT
-    // union of both predicates' positions, the equality dir is
-    // untouched, and the post-CALL read equals the pre-CALL read
-    // (recomputed from the raw rows minus all three delete sets)
-    "q_delete_files_meta" ->
-      """WITH live AS (
-        |  SELECT * FROM orders
-        |  WHERE NOT (o_orderkey % 9 = 0 OR o_orderkey % 13 = 0
-        |             OR o_orderkey % 1000 = 1))
-        |SELECT 'equality' AS kind,
-        |       (SELECT count(*) FROM orders WHERE o_orderkey % 1000 = 1)
-        |         AS record_count,
-        |       CAST(1 AS BIGINT) AS referencing_data_files,
-        |       CAST(3 AS BIGINT) AS n_before, TRUE AS reads_equal,
-        |       (SELECT count(*) FROM live) AS cnt,
-        |       (SELECT round(sum(o_totalprice), 2) FROM live) AS rev
-        |UNION ALL
-        |SELECT 'position',
-        |       (SELECT count(*) FROM orders
-        |        WHERE o_orderkey % 9 = 0 OR o_orderkey % 13 = 0),
-        |       CAST(1 AS BIGINT),
-        |       CAST(3 AS BIGINT), TRUE,
-        |       (SELECT count(*) FROM live),
-        |       (SELECT round(sum(o_totalprice), 2) FROM live)
-        |ORDER BY kind""".stripMargin,
-
-    // auto-compacted table: same rows as the plain aggregate; ac_proof
-    // is the Spark-side one-file + one-replace-commit + time-travel
-    // layout proof
-    "q_auto_compact" ->
-      """SELECT count(*) AS cnt, round(sum(o_totalprice), 2) AS rev,
-        |       TRUE AS ac_proof
-        |FROM orders""".stripMargin,
-
-    // hash-distributed partitioned write: values identical to a plain
-    // per-month aggregate; wd_proof is the Spark-side files==partitions
-    // layout proof
-    "q_write_distribution" ->
-      """SELECT CAST(year(o_orderdate) AS INTEGER) AS yr,
-        |       CAST(month(o_orderdate) AS INTEGER) AS mo,
-        |       count(*) AS cnt, round(sum(o_totalprice), 2) AS revenue,
-        |       TRUE AS wd_proof
-        |FROM orders
-        |GROUP BY 1, 2 ORDER BY yr, mo""".stripMargin,
-
-    "q_partition_prune" ->
-      """SELECT CAST(year(o_orderdate) AS INTEGER) AS yr,
-        |       CAST(month(o_orderdate) AS INTEGER) AS mo,
-        |       count(*) AS cnt, round(sum(o_totalprice), 2) AS revenue
-        |FROM orders
-        |WHERE o_orderdate >= TIMESTAMP '2000-03-01'
-        |  AND o_orderdate < TIMESTAMP '2000-06-01'
-        |GROUP BY 1, 2 ORDER BY yr, mo""".stripMargin,
-
-    "q_partition_evolve" ->
-      """SELECT CAST(year(o_orderdate) AS INTEGER) AS yr,
-        |       CAST(month(o_orderdate) AS INTEGER) AS mo,
-        |       count(*) AS cnt, round(sum(o_totalprice), 2) AS revenue
-        |FROM orders
-        |WHERE o_orderdate >= TIMESTAMP '1999-11-01'
-        |  AND o_orderdate < TIMESTAMP '2000-03-01'
-        |GROUP BY 1, 2 ORDER BY yr, mo""".stripMargin,
-
-    "q_meta_count_filtered" ->
-      """SELECT count(*) AS cnt FROM orders
-        |WHERE o_orderdate >= TIMESTAMP '2000-03-01'
-        |  AND o_orderdate < TIMESTAMP '2000-06-01'""".stripMargin,
-
-    "q_sql_rollback" ->
-      """SELECT count(*) AS cnt, round(sum(o_totalprice), 2) AS revenue
-        |FROM orders WHERE o_orderkey % 2 = 0""".stripMargin,
-
-    // after = the overwrite's survivors; before = the time-traveled full
-    // load the replace snapshot must still serve
-    "q_insert_overwrite" ->
-      """SELECT 'after' AS phase, count(*) AS cnt,
-        |       round(sum(o_totalprice), 2) AS rev
-        |FROM orders WHERE o_orderkey % 3 = 0
-        |UNION ALL
-        |SELECT 'before', count(*), round(sum(o_totalprice), 2) FROM orders
-        |ORDER BY phase""".stripMargin,
-
-    // restored to the even-keys snapshot; history = append, append,
-    // rollback (restore preserves the log, never truncates it)
-    "q_restore" ->
-      """SELECT count(*) AS cnt, round(sum(o_totalprice), 2) AS rev,
-        |       3 AS n_commits
-        |FROM orders WHERE o_orderkey % 2 = 0""".stripMargin,
-
-    // clone diverged by its DELETE; the source holds every row; the
-    // zero-copy proof is a Spark-side boolean (TRUE here)
-    "q_shallow_clone" ->
-      """SELECT 'clone' AS side, count(*) AS cnt,
-        |       round(sum(o_totalprice), 2) AS rev, TRUE AS zero_copy
-        |FROM orders WHERE o_orderkey % 3 <> 0
-        |UNION ALL
-        |SELECT 'source', count(*), round(sum(o_totalprice), 2), TRUE
-        |FROM orders
-        |ORDER BY side""".stripMargin,
-
-    // the mirrored final state: %7 keys deleted (latest commit wins),
-    // %5 survivors carry the update's post-image
-    "q_apply_changes" ->
-      """SELECT o_orderkey, o_custkey,
-        |       round(CASE WHEN o_orderkey % 5 = 0
-        |                  THEN o_totalprice * 2 ELSE o_totalprice END,
-        |             2) AS price
-        |FROM orders WHERE o_orderkey % 7 <> 0""".stripMargin,
-
-    // the SAME mirrored final state as q_apply_changes, reached by the
-    // merge-on-read apply (one equality commit, zero target reads);
-    // eq_proof is the Spark-side no-rewrite + ref-attached + metadata-
-    // decline proof
-    "q_apply_changes_mor" ->
-      """SELECT o_orderkey, o_custkey,
-        |       round(CASE WHEN o_orderkey % 5 = 0
-        |                  THEN o_totalprice * 2 ELSE o_totalprice END,
-        |             2) AS price, TRUE AS eq_proof
-        |FROM orders WHERE o_orderkey % 7 <> 0""".stripMargin,
-
-    // the feed after the initial load: the DELETE's victims plus the
-    // UPDATE's pre-images are 'delete' rows; the post-images 'insert'
-    "q_table_changes_rel" ->
-      """WITH deleted AS (
-        |  SELECT o_totalprice FROM orders WHERE o_orderkey % 4 = 0
-        |  UNION ALL
-        |  SELECT o_totalprice FROM orders
-        |  WHERE o_orderkey % 4 <> 0 AND o_orderkey % 9 = 1
-        |), inserted AS (
-        |  SELECT o_totalprice + 1 AS o_totalprice FROM orders
-        |  WHERE o_orderkey % 4 <> 0 AND o_orderkey % 9 = 1
-        |)
-        |SELECT 'delete' AS change_type, count(*) AS n,
-        |       round(sum(o_totalprice), 2) AS total FROM deleted
-        |UNION ALL
-        |SELECT 'insert', count(*), round(sum(o_totalprice), 2) FROM inserted
-        |ORDER BY change_type""".stripMargin,
-
-    // merge-on-read DELETE: after = the survivors, before = the
-    // time-traveled pre-delete state; no_rewrite is the Spark-side
-    // proof that no data file was rewritten (position deletes only)
-    "q_mor_delete" ->
-      """SELECT 'after' AS phase, count(*) AS cnt,
-        |       round(sum(o_totalprice), 2) AS rev, TRUE AS no_rewrite
-        |FROM orders WHERE o_orderkey % 3 <> 0
-        |UNION ALL
-        |SELECT 'before', count(*), round(sum(o_totalprice), 2), TRUE
-        |FROM orders
-        |ORDER BY phase""".stripMargin,
-
-    // MOR UPDATE then OPTIMIZE: %5 keys carry the doubled price;
-    // mor_then_clean is the Spark-side file-set proof (update kept all
-    // originals + refs, compaction left zero refs)
-    "q_mor_update" ->
-      """SELECT count(*) AS cnt,
-        |       round(sum(CASE WHEN o_orderkey % 5 = 0
-        |                      THEN o_totalprice * 2
-        |                      ELSE o_totalprice END), 2) AS rev,
-        |       TRUE AS mor_then_clean
-        |FROM orders""".stripMargin,
-
-    // same statements as q_table_changes_rel, MOR mode: the feed must
-    // be value-identical to the COW feed
-    "q_mor_cdc" ->
-      """WITH deleted AS (
-        |  SELECT o_totalprice FROM orders WHERE o_orderkey % 4 = 0
-        |  UNION ALL
-        |  SELECT o_totalprice FROM orders
-        |  WHERE o_orderkey % 4 <> 0 AND o_orderkey % 9 = 1
-        |), inserted AS (
-        |  SELECT o_totalprice + 1 AS o_totalprice FROM orders
-        |  WHERE o_orderkey % 4 <> 0 AND o_orderkey % 9 = 1
-        |)
-        |SELECT 'delete' AS change_type, count(*) AS n,
-        |       round(sum(o_totalprice), 2) AS total FROM deleted
-        |UNION ALL
-        |SELECT 'insert', count(*), round(sum(o_totalprice), 2) FROM inserted
-        |ORDER BY change_type""".stripMargin,
-
-    // MOR MERGE arm semantics recomputed: %7=3 keys deleted (first arm
-    // wins), surviving %5=0 keys doubled, one insert per %1000=1 key
-    "q_mor_merge" ->
-      """WITH kept AS (
-        |  SELECT CASE WHEN o_orderkey % 5 = 0 THEN o_totalprice * 2
-        |              ELSE o_totalprice END AS p
-        |  FROM orders WHERE o_orderkey % 7 <> 3
-        |), ins AS (
-        |  SELECT CAST(1.0 AS DOUBLE) AS p FROM orders
-        |  WHERE o_orderkey % 1000 = 1
-        |)
-        |SELECT count(*) AS cnt, round(sum(p), 2) AS rev, TRUE AS no_rewrite
-        |FROM (SELECT p FROM kept UNION ALL SELECT p FROM ins)""".stripMargin,
-
-    // equality upsert recomputed: %10=7 keys replaced with the bumped
-    // price, %1000=1 keys re-inserted under fresh ids; eq_proof is the
-    // Spark-side file-set + metadata-decline proof, conv_proof the
-    // post-convert_equality_deletes refs-positional + count-exact proof
-    // (the 'after' aggregate reads through the CONVERTED path)
-    "q_eq_upsert" ->
-      """WITH after AS (
-        |  SELECT o_totalprice FROM orders WHERE o_orderkey % 10 <> 7
-        |  UNION ALL
-        |  SELECT o_totalprice + 100.0 FROM orders WHERE o_orderkey % 10 = 7
-        |  UNION ALL
-        |  SELECT o_totalprice FROM orders WHERE o_orderkey % 1000 = 1
-        |)
-        |SELECT 'after' AS phase, count(*) AS cnt,
-        |       round(sum(o_totalprice), 2) AS rev, TRUE AS eq_proof,
-        |       TRUE AS conv_proof
-        |FROM after
-        |UNION ALL
-        |SELECT 'before', count(*), round(sum(o_totalprice), 2), TRUE, TRUE
-        |FROM orders
-        |ORDER BY phase""".stripMargin,
-
-    // orders of negative-balance customers deleted; surviving orders
-    // whose key is a rich customer's key gain the negative-customer
-    // count (the scalar subquery's value)
-    "q_dml_subquery" ->
-      """WITH neg AS (SELECT c_custkey FROM customer WHERE c_acctbal < 0),
-        |     rich AS (SELECT c_custkey FROM customer WHERE c_acctbal > 9000),
-        |     fin AS (
-        |       SELECT CASE WHEN o_orderkey IN (SELECT c_custkey FROM rich)
-        |              THEN o_totalprice + (SELECT count(*) FROM neg)
-        |              ELSE o_totalprice END AS p
-        |       FROM orders
-        |       WHERE o_custkey NOT IN (SELECT c_custkey FROM neg))
-        |SELECT count(*) AS cnt, round(sum(p), 2) AS rev FROM fin""".stripMargin,
-
-    // cur = the quarter's rows (folded from matching files' footers);
-    // v1 = the even-keys first snapshot (folded from the pinned log
-    // entry); TRUE = the plan-shape proof the Spark side computes
-    "q_meta_agg" ->
-      """SELECT 'cur' AS phase, count(*) AS cnt,
-        |       min(o_orderkey) AS min_key, max(o_orderkey) AS max_key,
-        |       TRUE AS from_metadata
-        |FROM orders
-        |WHERE o_orderdate >= TIMESTAMP '2000-03-01'
-        |  AND o_orderdate < TIMESTAMP '2000-06-01'
-        |UNION ALL
-        |SELECT 'v1', count(*), min(o_orderkey), max(o_orderkey), TRUE
-        |FROM orders WHERE o_orderkey % 2 = 0
-        |ORDER BY phase""".stripMargin,
-
-    // the view over the FULL base after the incremental refresh: per
-    // status, the true distinct (visitor cardinality ≤ 200 keeps the
-    // HLL sketch exact) and the plain row count
-    "q_mv_approx_distinct" ->
-      """SELECT o_orderstatus AS status,
-        |       count(DISTINCT o_custkey % 200) AS nd,
-        |       count(*) AS cnt
-        |FROM orders GROUP BY o_orderstatus ORDER BY status""".stripMargin,
-
-    // recompute the view's answer from scratch over the mutated base:
-    // %4 keys deleted first, then the update applies to the remainder
-    "q_mv_retract" ->
-      """WITH cur AS (
-        |  SELECT o_orderstatus,
-        |         CASE WHEN o_orderkey % 9 = 0 THEN o_totalprice + 2
-        |              ELSE o_totalprice END AS p
-        |  FROM orders WHERE o_orderkey % 4 <> 0)
-        |SELECT o_orderstatus AS status, count(*) AS cnt,
-        |       round(sum(p), 2) AS total, round(avg(p), 2) AS mean
-        |FROM cur GROUP BY o_orderstatus ORDER BY status""".stripMargin,
-
-    "q_dfp_join" ->
-      """SELECT o_orderstatus, count(*) AS n_items,
-        |       round(sum(l_quantity), 2) AS qty,
-        |       count(DISTINCT l_orderkey) AS n_orders
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE o_orderkey BETWEEN 1000 AND 2000
-        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    // salted join must equal the plain join — the oracle computes it
-    // un-salted; salted_plan_ok is the Spark-side plan proof
-    "q_salted_join" ->
-      """WITH l AS (
-        |  SELECT CASE WHEN l_orderkey % 10 < 7 THEN 0
-        |              ELSE l_orderkey % 100 END AS k,
-        |         l_quantity
-        |  FROM lineitem),
-        |r AS (SELECT i AS k, 't' || i AS tag FROM range(0, 100) t(i))
-        |SELECT l.k AS k, r.tag, count(*) AS cnt,
-        |       round(CAST(sum(l_quantity) AS DOUBLE), 2) AS qty,
-        |       TRUE AS salted_plan_ok
-        |FROM l JOIN r ON l.k = r.k
-        |GROUP BY l.k, r.tag
-        |ORDER BY l.k""".stripMargin,
-
-    // the full change feed, reconstructed from the source rows: two
-    // insert batches (snapshots 1/2), the UPDATE's delete+insert pair
-    // (snapshot 3, post-image price +1), the DELETE's rows (snapshot 4,
-    // with the post-update price where both predicates hit), and
-    // NOTHING from the compaction (snapshot 5)
-    "q_cdc_changes" ->
-      """WITH base AS (
-        |  SELECT o_orderkey, o_totalprice FROM orders
-        |  WHERE o_orderkey % 3 IN (0, 1)),
-        |feed AS (
-        |  SELECT o_orderkey, o_totalprice AS price, 'insert' AS change_type,
-        |         1 AS commit_id FROM base WHERE o_orderkey % 3 = 0
-        |  UNION ALL
-        |  SELECT o_orderkey, o_totalprice, 'insert', 2
-        |  FROM base WHERE o_orderkey % 3 = 1
-        |  UNION ALL
-        |  SELECT o_orderkey, o_totalprice, 'delete', 3
-        |  FROM base WHERE o_orderkey % 7 = 0
-        |  UNION ALL
-        |  SELECT o_orderkey, o_totalprice + 1, 'insert', 3
-        |  FROM base WHERE o_orderkey % 7 = 0
-        |  UNION ALL
-        |  SELECT o_orderkey,
-        |         CASE WHEN o_orderkey % 7 = 0 THEN o_totalprice + 1
-        |              ELSE o_totalprice END, 'delete', 4
-        |  FROM base WHERE o_orderkey % 5 = 0)
-        |SELECT o_orderkey, round(price, 2) AS price, change_type,
-        |       CAST(commit_id AS BIGINT) AS commit_id
-        |FROM feed ORDER BY commit_id, o_orderkey, change_type""".stripMargin,
-
-    // streaming near-dup candidates: every token-identical pair among
-    // docs whose LSH buckets COEXIST must surface (identical tokens ⇒
-    // every band collides — structural recall), and no pair may cross
-    // the event-time eviction horizon — era 1 is originals ∪ twins
-    // (+100000), era 2 the post-eviction re-delivery (+200000/+300000);
-    // a cross-era pair means eviction silently stopped working
-    "q_stream_neardup" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |         regexp_split_to_array(trim(lower(text)), '\s+') AS tk
-        |  FROM documents WHERE doc_id < 25),
-        |era1 AS (
-        |  SELECT doc_id, tk FROM d
-        |  UNION ALL
-        |  SELECT doc_id + 100000 AS doc_id, tk FROM d),
-        |era2 AS (
-        |  SELECT doc_id + 200000 AS doc_id, tk FROM d
-        |  UNION ALL
-        |  SELECT doc_id + 300000 AS doc_id, tk FROM d),
-        |pairs AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM era1 a JOIN era1 b ON a.tk = b.tk AND a.doc_id < b.doc_id
-        |  UNION ALL
-        |  SELECT a.doc_id, b.doc_id
-        |  FROM era2 a JOIN era2 b ON a.tk = b.tk AND a.doc_id < b.doc_id)
-        |SELECT id_a, id_b FROM pairs ORDER BY id_a, id_b""".stripMargin,
-
-    // the mirror after the streaming upsert sink replayed the CDC feed:
-    // initial load, then the un-netted replay batch applied in
-    // source-commit order — %5 prices doubled, %7 keys deleted, %3 keys
-    // +10, %6 keys ×3 on top, %11 keys deleted; sink_proof is the
-    // Spark-side no-rewrite + one-commit-per-micro-batch proof (2
-    // commits total = the 5-commit replay provably netted to one)
-    "q_stream_upsert" ->
-      """WITH p1 AS (
-        |  SELECT o_orderkey, o_custkey,
-        |         CASE WHEN o_orderkey % 5 = 0
-        |              THEN o_totalprice * 2 ELSE o_totalprice END AS p
-        |  FROM orders WHERE o_orderkey % 7 <> 0),
-        |p2 AS (
-        |  SELECT o_orderkey, o_custkey,
-        |         CASE WHEN o_orderkey % 3 = 0 THEN p + 10 ELSE p END AS p
-        |  FROM p1 WHERE o_orderkey % 11 <> 0)
-        |SELECT o_orderkey, o_custkey,
-        |       round(CASE WHEN o_orderkey % 6 = 0 THEN p * 3 ELSE p END,
-        |             2) AS price, TRUE AS sink_proof
-        |FROM p2""".stripMargin,
-
-    // the streamed change feed: one insert batch (snapshot 1), the
-    // UPDATE's delete+insert pair (snapshot 2), the DELETE's rows
-    // (snapshot 3, post-update price where both hit), nothing from the
-    // trailing OPTIMIZE
-    "q_stream_cdc" ->
-      """WITH base AS (
-        |  SELECT o_orderkey, o_totalprice FROM orders
-        |  WHERE o_orderkey % 3 = 0),
-        |feed AS (
-        |  SELECT o_orderkey, o_totalprice AS price, 'insert' AS change_type,
-        |         1 AS commit_id FROM base
-        |  UNION ALL
-        |  SELECT o_orderkey, o_totalprice, 'delete', 2
-        |  FROM base WHERE o_orderkey % 7 = 0
-        |  UNION ALL
-        |  SELECT o_orderkey, o_totalprice + 1, 'insert', 2
-        |  FROM base WHERE o_orderkey % 7 = 0
-        |  UNION ALL
-        |  SELECT o_orderkey,
-        |         CASE WHEN o_orderkey % 7 = 0 THEN o_totalprice + 1
-        |              ELSE o_totalprice END, 'delete', 3
-        |  FROM base WHERE o_orderkey % 5 = 0)
-        |SELECT o_orderkey, round(price, 2) AS price, change_type,
-        |       CAST(commit_id AS BIGINT) AS commit_id
-        |FROM feed ORDER BY commit_id, o_orderkey, change_type""".stripMargin,
-
-    // stored change files must be value-indistinguishable from the
-    // diff path — the oracle is deliberately the SAME reconstruction
-    "q_cdc_stored" ->
-      """WITH base AS (
-        |  SELECT o_orderkey, o_totalprice FROM orders
-        |  WHERE o_orderkey % 3 IN (0, 1)),
-        |feed AS (
-        |  SELECT o_orderkey, o_totalprice AS price, 'insert' AS change_type,
-        |         1 AS commit_id FROM base WHERE o_orderkey % 3 = 0
-        |  UNION ALL
-        |  SELECT o_orderkey, o_totalprice, 'insert', 2
-        |  FROM base WHERE o_orderkey % 3 = 1
-        |  UNION ALL
-        |  SELECT o_orderkey, o_totalprice, 'delete', 3
-        |  FROM base WHERE o_orderkey % 7 = 0
-        |  UNION ALL
-        |  SELECT o_orderkey, o_totalprice + 1, 'insert', 3
-        |  FROM base WHERE o_orderkey % 7 = 0
-        |  UNION ALL
-        |  SELECT o_orderkey,
-        |         CASE WHEN o_orderkey % 7 = 0 THEN o_totalprice + 1
-        |              ELSE o_totalprice END, 'delete', 4
-        |  FROM base WHERE o_orderkey % 5 = 0)
-        |SELECT o_orderkey, round(price, 2) AS price, change_type,
-        |       CAST(commit_id AS BIGINT) AS commit_id
-        |FROM feed ORDER BY commit_id, o_orderkey, change_type""".stripMargin,
-
-    "q_sql_view" ->
-      """SELECT o_orderstatus, count(*) AS cnt,
-        |       round(sum(o_totalprice), 2) AS total
-        |FROM orders WHERE o_totalprice > 100000
-        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    "q_verbatim_scrub" ->
-      """WITH base AS (SELECT doc_id, text,
-        |                     string_split_regex(trim(text), '\s+') AS tk
-        |              FROM documents),
-        |w AS (SELECT doc_id, i - 1 AS pos,
-        |             array_to_string(tk[i:i+7], chr(1)) AS wkey
-        |      FROM base, LATERAL UNNEST(generate_series(1, len(tk) - 8 + 1)) AS t(i)),
-        |stats AS (SELECT wkey, min(doc_id) AS owner
-        |          FROM (SELECT DISTINCT doc_id, wkey FROM w) GROUP BY wkey
-        |          HAVING count(*) >= 2),
-        |marks AS (SELECT w.doc_id, list(DISTINCT pos) AS starts
-        |          FROM w JOIN stats USING (wkey) WHERE w.doc_id <> stats.owner
-        |          GROUP BY w.doc_id)
-        |SELECT b.doc_id,
-        |  CAST(coalesce(len(m.starts), 0) AS INTEGER) AS removed_spans,
-        |  md5(CASE WHEN m.starts IS NULL THEN b.text
-        |      -- coalesce: DuckDB's array_to_string([]) is NULL, but a
-        |      -- fully-duplicated doc legitimately reduces to ''
-        |      ELSE coalesce(array_to_string(
-        |        [b.tk[i] FOR i IN generate_series(1, len(b.tk))
-        |         IF len(list_filter(m.starts,
-        |              s -> s <= i - 1 AND i - 1 < s + 8)) = 0],
-        |        ' '), '') END) AS clean_md5
-        |FROM base b LEFT JOIN marks m USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_stratified_sample" ->
-      """SELECT lang, least(30, count(*)) AS n_sampled,
-        |       least(30, count(*)) AS expected,
-        |       TRUE AS exact_k, TRUE AS stable
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-
-    // Composed pipeline: DuckDB re-runs the full recipe independently —
-    // its own windows for components, row_number for dedup, regex
-    // mirrors for the gates and the scrub.
-    "q_pipeline" ->
-      """WITH docs AS (
-        |  SELECT * FROM documents
-        |  UNION ALL SELECT * REPLACE (doc_id + 100000 AS doc_id)
-        |  FROM documents WHERE doc_id < 5
-        |),
-        |en AS (SELECT * FROM docs WHERE lang = 'en'),
-        |q AS (
-        |  SELECT * FROM en
-        |  WHERE (CASE WHEN length(trim(text)) = 0 THEN 0
-        |         ELSE len(string_split_regex(trim(lower(text)), '\s+')) END)
-        |          BETWEEN 20 AND 100000
-        |    AND CAST(length(regexp_replace(text, '[^a-z]', '', 'g')) AS DOUBLE)
-        |          / length(text) >= 0.82
-        |    AND (CASE WHEN len(string_split(text, chr(10))) <= 1 THEN 0.0
-        |         ELSE 1.0 - CAST(len(list_distinct(string_split(text, chr(10)))) AS DOUBLE)
-        |              / len(string_split(text, chr(10))) END) <= 0.3
-        |),
-        |u AS (
-        |  SELECT * FROM (
-        |    SELECT q.*, row_number() OVER (
-        |      PARTITION BY trim(regexp_replace(regexp_replace(lower(text),
-        |        '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g'))
-        |      ORDER BY doc_id) AS rn
-        |    FROM q) WHERE rn = 1
-        |),
-        |b AS (SELECT doc_id, CASE WHEN lag(doc_id) OVER w = doc_id - 1
-        |       AND lag(n_chars % 5) OVER w = n_chars % 5 THEN 0 ELSE 1 END AS brk
-        |      FROM documents WINDOW w AS (ORDER BY doc_id)),
-        |r AS (SELECT doc_id, sum(brk) OVER (ORDER BY doc_id) AS run FROM b),
-        |c AS (SELECT doc_id, min(doc_id) OVER (PARTITION BY run) AS component
-        |      FROM r),
-        |lab AS (SELECT u.*, coalesce(c.component, u.doc_id) AS component
-        |        FROM u LEFT JOIN c USING (doc_id)),
-        |fin AS (SELECT * FROM (
-        |  SELECT lab.*, min(doc_id) OVER (PARTITION BY component) AS keep
-        |  FROM lab) WHERE doc_id = keep)
-        |SELECT
-        | (SELECT count(*) FROM docs) AS n_total,
-        | (SELECT count(*) FROM en) AS n_lang,
-        | (SELECT count(*) FROM q) AS n_quality,
-        | (SELECT count(*) FROM u) AS n_unique,
-        | (SELECT count(*) FROM fin) AS n_final,
-        | (SELECT CAST(sum(CASE WHEN length(trim(text)) = 0 THEN 0
-        |     ELSE len(string_split_regex(trim(lower(text)), '\s+')) END) AS BIGINT)
-        |  FROM fin) AS total_tokens,
-        | (SELECT md5(string_agg(m, '' ORDER BY m)) FROM
-        |   (SELECT md5(regexp_replace(regexp_replace(text,
-        |      'https?://[^\s]+', '<URL>', 'g'),
-        |      '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g')) AS m
-        |    FROM fin)) AS corpus_md5""".stripMargin,
-
-    // Web recipe with the URL stage first: every stage's survivor count
-    // re-derived from the generating arithmetic — the decorations
-    // (case, :443, utm, slash, fragment) must all canonicalize away, so
-    // the oracle groups by the undecorated canonical key
-    "q_pipeline_web" ->
-      """WITH u AS (
-        |  SELECT doc_id, lang, text,
-        |         source || '-web.com' AS url_domain,
-        |         source || '-web.com/p/' || (doc_id % 40) AS canon
-        |  FROM documents
-        |),
-        |b AS (SELECT * FROM u WHERE url_domain NOT IN
-        |       ('src1-web.com', 'src7-web.com', 'src13-web.com')),
-        |c AS (SELECT * FROM (
-        |    SELECT b.*, row_number() OVER (
-        |      PARTITION BY url_domain ORDER BY doc_id) AS rk FROM b)
-        |  WHERE rk <= 20),
-        |d AS (SELECT * FROM (
-        |    SELECT c.*, row_number() OVER (
-        |      PARTITION BY canon ORDER BY doc_id) AS rn FROM c)
-        |  WHERE rn = 1),
-        |e AS (SELECT * FROM d WHERE lang = 'en'),
-        |q AS (SELECT * FROM e
-        |  WHERE (CASE WHEN length(trim(text)) = 0 THEN 0
-        |         ELSE len(string_split_regex(trim(lower(text)), '\s+')) END)
-        |          BETWEEN 20 AND 100000
-        |    AND CAST(length(regexp_replace(text, '[^a-z]', '', 'g')) AS DOUBLE)
-        |          / length(text) >= 0.82)
-        |SELECT
-        | (SELECT count(*) FROM u) AS n_total,
-        | (SELECT count(*) FROM b) AS n_after_blocklist,
-        | (SELECT count(*) FROM c) AS n_after_cap,
-        | (SELECT count(*) FROM d) AS n_url_unique,
-        | (SELECT count(*) FROM e) AS n_lang,
-        | (SELECT count(*) FROM q) AS n_quality,
-        | (SELECT CAST(coalesce(sum(CASE WHEN length(trim(text)) = 0 THEN 0
-        |     ELSE len(string_split_regex(trim(lower(text)), '\s+')) END), 0)
-        |   AS BIGINT) FROM q) AS total_tokens""".stripMargin,
-
-    // Metadata tables: every aggregate is reconstructible from the
-    // source rows (per-file counts sum to the table; two appends; one
-    // identity partition per region).
-    "q_meta_tables" ->
-      """SELECT
-        |  (SELECT count(*) FROM nation) AS files_rows,
-        |  CAST(2 AS BIGINT) AS n_snapshots,
-        |  (SELECT count(*) FROM nation) AS last_total,
-        |  (SELECT count(DISTINCT n_regionkey) FROM nation) AS n_partitions,
-        |  (SELECT count(*) FROM nation) AS partition_rows""".stripMargin,
-
-    // t$refs ⋈ t$history: the tag pins snapshot 1 (the first append's
-    // cumulative count), the branch forks at snapshot 2 (the full
-    // table); the log checkpoint folds exactly the one non-latest
-    // snapshot (one coalesced file) into a sized manifest
-    "q_refs_meta" ->
-      """SELECT 'dev' AS name, 'BRANCH' AS type,
-        |       CAST(2 AS BIGINT) AS snapshot_id,
-        |       CAST(0 AS BIGINT) AS staged_commits,
-        |       'append' AS operation,
-        |       (SELECT count(*) FROM nation) AS record_count,
-        |       CAST(1 AS BIGINT) AS n_manifests,
-        |       CAST(1 AS BIGINT) AS manifest_files,
-        |       TRUE AS manifests_sized
-        |UNION ALL
-        |SELECT 'v1', 'TAG', CAST(1 AS BIGINT), CAST(0 AS BIGINT), 'append',
-        |       (SELECT count(*) FROM nation WHERE n_nationkey < 10),
-        |       CAST(1 AS BIGINT), CAST(1 AS BIGINT), TRUE
-        |ORDER BY name""".stripMargin,
-
-    // Branches: main holds the CTAS half while two commits stage on the
-    // branch; the by-name read sees fork + both; fast-forward replays
-    // them as real snapshots (CTAS + 2 = 3).
-    "q_branch" ->
-      """SELECT
-        |  (SELECT count(*) FROM nation WHERE n_nationkey < 10) AS rows_main,
-        |  (SELECT count(*) FROM nation) AS rows_branch,
-        |  (SELECT count(*) FROM nation) AS rows_after,
-        |  CAST(3 AS BIGINT) AS n_snapshots""".stripMargin,
-
-    // main holds the full load until publish; the branch (and the
-    // published main) carry the composed UPDATE-then-DELETE effect;
-    // history = initial append + the two replayed COW commits
-    "q_branch_dml" ->
-      """WITH fin AS (
-        |  SELECT CASE WHEN o_orderkey % 5 = 0 THEN o_totalprice * 2
-        |              ELSE o_totalprice END AS p
-        |  FROM orders WHERE o_orderkey % 7 <> 0
-        |)
-        |SELECT
-        |  (SELECT count(*) FROM orders) AS rows_main_before,
-        |  (SELECT count(*) FROM fin) AS branch_cnt,
-        |  (SELECT round(sum(p), 2) FROM fin) AS branch_rev,
-        |  (SELECT count(*) FROM fin) AS after_cnt,
-        |  (SELECT round(sum(p), 2) FROM fin) AS after_rev,
-        |  CAST(3 AS BIGINT) AS n_commits""".stripMargin,
-
-    // WAP: readers hold the committed half while a batch is staged;
-    // audit sees the union; publish makes them equal.
-    "q_wap" ->
-      """SELECT
-        |  (SELECT count(*) FROM nation WHERE n_nationkey < 10) AS rows_before,
-        |  (SELECT count(*) FROM nation WHERE n_nationkey < 10) AS rows_while_staged,
-        |  (SELECT count(*) FROM nation) AS rows_audit,
-        |  (SELECT count(*) FROM nation) AS rows_after""".stripMargin,
-
-    "q_bucket_join" ->
-      """SELECT c_mktsegment, count(*) AS cnt,
-        |       round(sum(o_totalprice), 2) AS revenue
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-
-    "q_bucket_prune" ->
-      """SELECT c_custkey AS custkey, c_name,
-        |       round(c_acctbal, 2) AS acctbal
-        |FROM customer
-        |WHERE c_custkey IN (3, 11, 42, 100)
-        |ORDER BY custkey""".stripMargin,
-
-    "q_truncate_prune" ->
-      """SELECT count(*) AS cnt, round(sum(o_totalprice), 2) AS rev
-        |FROM orders WHERE o_orderkey >= 5000 AND o_orderkey < 25000""".stripMargin,
-
-    "q_bloom_prune" ->
-      """SELECT count(*) AS cnt, round(sum(o_totalprice), 2) AS rev,
-        |       TRUE AS bloom_pruned
-        |FROM orders
-        |WHERE o_orderkey = (SELECT min(o_orderkey) FROM orders)""".stripMargin,
-
-    "q_zorder" ->
-      """SELECT count(*) AS cnt, round(sum(l_extendedprice), 2) AS rev,
-        |       round(sum(l_quantity), 2) AS qty
-        |FROM lineitem
-        |WHERE l_partkey BETWEEN 100 AND 600
-        |  AND l_suppkey BETWEEN 10 AND 60""".stripMargin,
-
-    "q_schema_add_drop" ->
-      """SELECT n_nationkey, n_name,
-        |       CASE WHEN n_nationkey >= 13
-        |            THEN CAST(n_nationkey * 1000 AS BIGINT) END AS pop
-        |FROM nation ORDER BY n_nationkey""".stripMargin,
-
-    "q_schema_rename" ->
-      """SELECT n_nationkey, n_name AS nation_name FROM nation
-        |ORDER BY n_nationkey""".stripMargin,
-
-    "q_schema_widen" ->
-      """SELECT count(*) AS cnt, CAST(MAX(k) AS BIGINT) AS max_k,
-        |       CAST(SUM(k) AS BIGINT) AS sum_k
-        |FROM (SELECT CASE WHEN o_orderkey % 2 = 1
-        |             THEN o_orderkey + 5000000000
-        |             ELSE o_orderkey END AS k
-        |      FROM orders)""".stripMargin,
-
-    "q_sql_merge_cond" ->
-      """SELECT id, CAST(balance AS DOUBLE) AS balance, status FROM (VALUES
-        |  (2, 500.0, 'raised'), (3, 75.0, 'open'), (4, 40.0, 'new'))
-        |  AS t(id, balance, status)
-        |ORDER BY id""".stripMargin,
-
-    "q_sql_multidb" ->
-      """SELECT plan_name, n FROM (VALUES ('basic', CAST(1 AS BIGINT)),
-        |  ('pro', CAST(2 AS BIGINT))) AS t(plan_name, n)
-        |ORDER BY plan_name""".stripMargin,
-
-    "q_sql_merge" ->
-      """SELECT id, CAST(balance AS DOUBLE) AS balance, status FROM (VALUES
-        |  (1, 100.0, 'open'), (2, 500.0, 'merged'), (3, 75.0, 'open'),
-        |  (4, 10.0, 'new'))
-        |  AS t(id, balance, status)
-        |ORDER BY id""".stripMargin,
-
-    "q_sql_ddl_insert" ->
-      """SELECT plan_id, plan_name, CAST(monthly_fee AS DOUBLE) AS monthly_fee,
-        |       launch_date
-        |FROM (VALUES
-        |  (1, 'Basic', 10.0, DATE '2025-01-01'),
-        |  (2, 'It''s Big', 49.99, DATE '2025-02-01'),
-        |  (3, NULL, NULL, NULL),
-        |  (4, 'Pro', 99.0, DATE '2025-03-01'))
-        |  AS t(plan_id, plan_name, monthly_fee, launch_date)
-        |ORDER BY plan_id""".stripMargin,
-
-    "q_sql_copy_into" ->
-      """SELECT id, name, CAST(fee AS DOUBLE) AS fee,
-        |       1 AS first_loaded, 0 AS second_loaded,
-        |       1 AS third_loaded, 1 AS third_skipped
-        |FROM (VALUES (1, 'alpha', 10.5), (2, 'beta', 20.0),
-        |             (3, 'gamma', 5.0)) AS t(id, name, fee)
-        |ORDER BY id""".stripMargin,
-
-    // pre-default NULLs survive, the constant default lands on row 2
-    // only, the dropped default reverts row 3's status to NULL
-    "q_sql_defaults" ->
-      """SELECT id, status, CAST(fee AS DOUBLE) AS fee FROM (VALUES
-        |  (1, NULL, NULL), (2, 'new', 12.5), (3, NULL, 12.5))
-        |  AS t(id, status, fee)
-        |ORDER BY id""".stripMargin,
-
-    // only the constraint-passing inserts survive (the whole violating
-    // batch rolls back — (5, 9.0) rides with (4, -1.0)); NULL passes
-    "q_sql_constraint" ->
-      """SELECT id, CAST(qty AS DOUBLE) AS qty, 1 AS rejected_writes
-        |FROM (VALUES (1, 5.0), (2, 0.0), (3, NULL)) AS t(id, qty)
-        |ORDER BY id""".stripMargin,
-
-    "q_sql_row_ops" ->
-      """SELECT id, CAST(balance AS DOUBLE) AS balance, status FROM (VALUES
-        |  (1, 110.0, 'bonus'), (2, 50.0, 'open'), (4, 85.0, 'bonus'))
-        |  AS t(id, balance, status)
-        |ORDER BY id""".stripMargin,
-
-    "q_csv_roundtrip" ->
-      """SELECT count(*) AS cnt, round(sum(o_totalprice), 2) AS total,
-        |       min(o_orderdate) AS first_date, max(o_orderdate) AS last_date
-        |FROM orders""".stripMargin,
-
-    "q_dedup_exact" ->
-      """SELECT count(*) AS n_docs, count(DISTINCT md5(text)) AS n_unique,
-        |       count(DISTINCT lang) AS n_langs
-        |FROM documents""".stripMargin,
-
-    // first-writer-wins within identical normalized content — the oracle
-    // partitions on the normalized text itself (equivalent to the 64-bit
-    // content hash modulo collisions)
-    "q_dedup_exact_rows" ->
-      """SELECT doc_id, lang, n_chars FROM (
-        |  SELECT doc_id, lang, n_chars, row_number() OVER (
-        |    PARTITION BY trim(regexp_replace(regexp_replace(lower(text),
-        |      '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g'))
-        |    ORDER BY doc_id) AS rn
-        |  FROM documents) x
-        |WHERE rn = 1 ORDER BY doc_id""".stripMargin,
-
-    // independent algorithm: islands-and-gaps windowing computes the same
-    // components the Spark side derives by Large-Star/Small-Star
-    // contraction (edges join consecutive doc_ids sharing n_chars % 5)
-    "q_dedup_clusters" ->
-      """WITH b AS (
-        |  SELECT doc_id, CASE WHEN lag(doc_id) OVER w = doc_id - 1
-        |                       AND lag(n_chars % 5) OVER w = n_chars % 5
-        |                      THEN 0 ELSE 1 END AS brk
-        |  FROM documents WINDOW w AS (ORDER BY doc_id)),
-        |r AS (SELECT doc_id, sum(brk) OVER (ORDER BY doc_id) AS run FROM b)
-        |SELECT doc_id, min(doc_id) OVER (PARTITION BY run) AS component
-        |FROM r ORDER BY doc_id""".stripMargin,
-
-    // independent gram computation: DuckDB list slicing over split
-    // tokens (space separator vs Spark's  — equality of token
-    // SEQUENCES is what both encode)
-    "q_contamination" ->
-      """WITH d AS (SELECT doc_id, string_split(trim(lower(text)), ' ') AS toks
-        |           FROM documents),
-        |g AS (SELECT doc_id, array_to_string(toks[i:i+4], ' ') AS gram
-        |      FROM d, LATERAL UNNEST(generate_series(1, len(toks) - 4)) AS t(i)),
-        |dg AS (SELECT DISTINCT doc_id, gram FROM g),
-        |bg AS (SELECT DISTINCT doc_id AS bench_id, gram FROM g WHERE doc_id < 10)
-        |SELECT dg.doc_id, bg.bench_id, count(*) AS overlap_grams
-        |FROM dg JOIN bg USING (gram)
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // same islands-and-gaps components, then an independent per-cluster
-    // argmax (row_number, vs Spark's struct-max aggregation)
-    "q_dedup_canonical" ->
-      """WITH b AS (
-        |  SELECT doc_id, n_chars,
-        |         CASE WHEN lag(doc_id) OVER w = doc_id - 1
-        |               AND lag(n_chars % 5) OVER w = n_chars % 5
-        |              THEN 0 ELSE 1 END AS brk
-        |  FROM documents WINDOW w AS (ORDER BY doc_id)),
-        |r AS (SELECT doc_id, n_chars, sum(brk) OVER (ORDER BY doc_id) AS run
-        |      FROM b),
-        |c AS (SELECT doc_id, n_chars,
-        |             min(doc_id) OVER (PARTITION BY run) AS component
-        |      FROM r)
-        |SELECT component, doc_id AS keep_id, n_chars AS keep_score,
-        |       cnt AS cluster_size
-        |FROM (
-        |  SELECT component, doc_id, n_chars,
-        |         count(*) OVER (PARTITION BY component) AS cnt,
-        |         row_number() OVER (PARTITION BY component
-        |                            ORDER BY n_chars DESC, doc_id) AS rn
-        |  FROM c)
-        |WHERE rn = 1 ORDER BY component""".stripMargin,
-
-    "q_doc_stats" ->
-      """SELECT doc_id,
-        |       CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-        |            ELSE length(string_split_regex(trim(lower(text)), '\s+')) END AS INTEGER) AS n_tokens,
-        |       CAST(length(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]')) AS INTEGER) AS n_bpe,
-        |       round(CAST(length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS DOUBLE)
-        |             / length(text), 4) AS digit_ratio
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q_doc_tokens" ->
-      """SELECT doc_id,
-        |       CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-        |            ELSE length(string_split_regex(trim(lower(text)), '\s+')) END AS INTEGER) AS n_tokens,
-        |       CAST(length(text) AS INTEGER) AS len_chars
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q_doc_tokenize" ->
-      s"""WITH ${graft.ext.BpeVocab.oracleCtes("documents")}
-         |SELECT doc_id, CAST(len(toks) AS INTEGER) AS n_tokens,
-         |       CASE WHEN toks IS NULL THEN NULL
-         |            ELSE md5(array_to_string(toks, ' ')) END AS stream_md5
-         |FROM bpe ORDER BY doc_id""".stripMargin,
-
-    // the full rank-map replay, generated from the SAME shipped merge
-    // table the operator walks (independent arithmetic, not a copy)
-    "q_doc_tokens_bpe" ->
-      s"""WITH ${graft.ext.BpeVocab.oracleCtes("documents")}
-         |SELECT d.doc_id,
-         |       CAST(len(b.toks) AS INTEGER) AS n_bpe_tokens,
-         |       CAST(length(regexp_extract_all(d.text,
-         |            '[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]')) AS INTEGER)
-         |         AS n_regex_tokens
-         |FROM documents d JOIN bpe b USING (doc_id)
-         |ORDER BY doc_id""".stripMargin,
-
-    "q_doc_quality" ->
-      """SELECT doc_id,
-        |       round(CAST(length(regexp_replace(text, '[^a-z]', '', 'g')) AS DOUBLE)
-        |             / length(text), 4) AS alpha_ratio,
-        |       round(CAST(length(text) - length(replace(text, ' ', '')) AS DOUBLE)
-        |             / length(text), 4) AS space_ratio
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // independent recomputation of every Gopher rule: list lambdas for
-    // word/line arithmetic, same thresholds
-    "q_gopher_rules" ->
-      """WITH w AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(trim(text), '\s+'),
-        |                x -> x <> '') AS ws,
-        |    string_split(text, chr(10)) AS lines,
-        |    length(text) - length(replace(replace(text, '#', ''), '…', ''))
-        |      AS n_sym
-        |  FROM documents
-        |), m AS (
-        |  SELECT doc_id, len(ws) AS n_words, n_sym,
-        |    CASE WHEN len(ws) > 0 THEN
-        |      list_sum(list_transform(ws, x -> length(x))) * 1.0 / len(ws)
-        |      ELSE 0 END AS mean_len,
-        |    len(list_filter(lines,
-        |      l -> regexp_matches(ltrim(l), '^(•|- |\* )'))) * 1.0
-        |      / greatest(len(lines), 1) AS bullet_frac,
-        |    len(list_filter(lines,
-        |      l -> regexp_matches(rtrim(l), '(\.\.\.|…)$'))) * 1.0
-        |      / greatest(len(lines), 1) AS ell_frac,
-        |    CASE WHEN len(ws) > 0 THEN
-        |      len(list_filter(ws, x -> regexp_matches(x, '[A-Za-z]'))) * 1.0
-        |        / len(ws) ELSE 0 END AS alpha_frac,
-        |    len(list_intersect(
-        |      list_distinct(list_transform(ws, x -> lower(x))),
-        |      ['the','be','to','of','and','that','have','with'])) AS stops
-        |  FROM w
-        |), r AS (
-        |  SELECT doc_id, n_words,
-        |    n_words BETWEEN 50 AND 100000 AS r_words,
-        |    mean_len >= 3 AND mean_len <= 10 AS r_mean_len,
-        |    CASE WHEN n_words > 0 THEN n_sym * 1.0 / n_words < 0.1
-        |         ELSE FALSE END AS r_symbol,
-        |    bullet_frac < 0.9 AS r_bullet,
-        |    ell_frac < 0.3 AS r_ellipsis,
-        |    alpha_frac > 0.8 AS r_alpha,
-        |    stops >= 2 AS r_stopwords
-        |  FROM m
-        |)
-        |SELECT doc_id, n_words, r_words, r_mean_len, r_symbol, r_bullet,
-        |       r_ellipsis, r_alpha, r_stopwords,
-        |       r_words AND r_mean_len AND r_symbol AND r_bullet
-        |         AND r_ellipsis AND r_alpha AND r_stopwords AS gopher_keep
-        |FROM r ORDER BY doc_id""".stripMargin,
-
-    // the FULL pipeline replay: classifier doubles, LM arithmetic,
-    // type-7 quantile cuts, md5-carve thresholds, integer-div budget
-    // rate and BPE token counts — the final corpus md5 is re-derived,
-    // not pinned
-    "q_pipeline_select" ->
-      s"""WITH ${graft.ext.Classify.weightsCteSql()},
-         |base AS (SELECT doc_id, lang, text FROM documents
-         |         UNION ALL
-         |         SELECT doc_id, 'en' AS lang, text
-         |         FROM ($qualityPlantValuesSql) v(doc_id, text)),
-         |cls AS (SELECT b.doc_id, b.lang, b.text FROM base b, qw
-         |        WHERE round(${graft.ext.Classify.probOracleSqlExpr("b.text")},
-         |                    6) >= 0.5),
-         |${graft.ext.Search.lmScoresCtes("cls", lmVocabCap)},
-         |cuts AS (SELECT quantile_cont(nll, 0.3333333333333333) AS c1,
-         |                quantile_cont(nll, 0.6666666666666666) AS c2
-         |         FROM lmsc),
-         |ppl AS (SELECT l.doc_id FROM lmsc l, cuts
-         |        WHERE CASE WHEN l.nll <= c1 THEN TRUE
-         |              WHEN l.nll <= c2 THEN
-         |                ${Splits.md5KeepSqlExpr("l.doc_id", "ppl", "0.5")}
-         |              ELSE
-         |                ${Splits.md5KeepSqlExpr("l.doc_id", "ppl", "0.1")}
-         |              END),
-         |${graft.ext.BpeVocab.oracleCtes(
-             "(SELECT c.doc_id, c.text FROM cls c JOIN ppl USING (doc_id))")},
-         |kept AS (SELECT c.doc_id, c.lang, c.text,
-         |                CAST(len(b.toks) AS BIGINT) AS n_tok
-         |         FROM cls c JOIN ppl USING (doc_id)
-         |         JOIN bpe b ON b.doc_id = c.doc_id),
-         |bstats AS (SELECT coalesce(sum(CASE WHEN lang = 'en'
-         |                  THEN n_tok END), 0) AS t FROM kept),
-         |fin AS (SELECT k.* FROM kept k, bstats
-         |        WHERE k.lang <> 'en' OR ${Splits.md5KeepSqlExpr(
-                     "k.doc_id", "budget",
-                     "CASE WHEN t > 0 THEN CAST(t // 2 AS DOUBLE) / " +
-                       "CAST(t AS DOUBLE) ELSE 1.0 END")})
-         |SELECT (SELECT count(*) FROM base) AS n_total,
-         |       (SELECT count(*) FROM cls) AS n_classifier,
-         |       (SELECT count(*) FROM kept) AS n_perplexity,
-         |       count(*) AS n_final,
-         |       CAST(coalesce(sum(n_tok), 0) AS BIGINT) AS final_tokens,
-         |       md5(string_agg(md5(text), '' ORDER BY md5(text)))
-         |         AS corpus_md5
-         |FROM fin""".stripMargin,
-
-    // the scoring replay from the SAME pinned weights (weights bound
-    // once in a CTE; md5-hex bucket arithmetic and a pinned-order fold
-    // reproduce the engine's doubles bit-for-bit)
-    "q_quality_classifier" ->
-      s"""WITH ${graft.ext.Classify.weightsCteSql()},
-         |docs AS (SELECT doc_id, text FROM documents
-         |         UNION ALL
-         |         SELECT * FROM ($qualityPlantValuesSql) v(doc_id, text)),
-         |scored AS (
-         |  SELECT doc_id,
-         |         round(${graft.ext.Classify.probOracleSqlExpr("text")}, 6)
-         |           AS q_prob
-         |  FROM docs, qw)
-         |SELECT doc_id, q_prob, q_prob >= 0.5 AS q_keep
-         |FROM scored ORDER BY doc_id""".stripMargin,
-
-    "q_bm25_topk" -> graft.ext.Search.bm25OracleSql(bm25Terms, 20),
-
-    "q_lm_surprisal" -> graft.ext.Search.lmOracleSql(20, lmVocabCap),
-
-    "q_ccnet_buckets" ->
-      """SELECT count(*) AS n_docs, TRUE AS terciles_ok,
-        |       TRUE AS head_keeps_all, TRUE AS middle_rate_ok,
-        |       TRUE AS tail_rate_ok, TRUE AS cuts_monotonic
-        |FROM documents""".stripMargin,
-
-    "q_dsir_select" ->
-      graft.ext.Search.dsirOracleSql("lang = 'en'", 20, lmVocabCap),
-
-    "q_doc_repetition" ->
-      """SELECT doc_id,
-        |  CASE WHEN len(string_split(text, chr(10))) <= 1 THEN 0.0
-        |       ELSE round(1.0 - CAST(len(list_distinct(string_split(text, chr(10)))) AS DOUBLE)
-        |                  / len(string_split(text, chr(10))), 4) END AS dup_line_ratio,
-        |  CASE WHEN len(string_split_regex(trim(lower(text)), '\s+')) <= 1 THEN 0.0
-        |       ELSE round(1.0 - CAST(len(list_distinct(string_split_regex(trim(lower(text)), '\s+'))) AS DOUBLE)
-        |                  / len(string_split_regex(trim(lower(text)), '\s+')), 4) END AS dup_word_ratio
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q_doc_scrub" ->
-      """SELECT doc_id,
-        |  md5(regexp_replace(regexp_replace(text, 'https?://[^\s]+', '<URL>', 'g'),
-        |      '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g')) AS scrub_md5,
-        |  CAST(len(regexp_extract_all(text, 'https?://[^\s]+')) AS INTEGER) AS n_urls,
-        |  CAST(len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS INTEGER) AS n_emails
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // composite quality = (length score + alpha ratio + punct penalty +
-    // stopword ratio) / 4, each term mirrored exactly; langId = argmax of
-    // per-language stopword hits, encoded as a zero-padded sortable
-    // string because this DuckDB lacks struct greatest. floor(x*1e4+0.5)
-    // emulates Spark's HALF_UP round.
-    // identical census arithmetic to q_image_dedup: per family,
-    // same-variant pairs at hamming 0 (2 · C(50,2) = 2450) and
-    // cross-variant at hamming 1 (50 · 50 = 2500); ×3 families
-    "q_audio_dedup" ->
-      """SELECT hamming, n_pairs FROM (VALUES
-        |  (0, CAST(7350 AS BIGINT)), (1, CAST(7500 AS BIGINT)))
-        |  AS t(hamming, n_pairs)
-        |ORDER BY hamming""".stripMargin,
-
-    // each family is one connected component rooted at its minimum id
-    // (the residues 0/1/2 mod 3), 100 members each
-    "q_image_canonical" ->
-      """SELECT component, cluster_size FROM (VALUES
-        |  (CAST(0 AS BIGINT), CAST(100 AS BIGINT)),
-        |  (CAST(1 AS BIGINT), CAST(100 AS BIGINT)),
-        |  (CAST(2 AS BIGINT), CAST(100 AS BIGINT)))
-        |  AS t(component, cluster_size)
-        |ORDER BY component""".stripMargin,
-
-    // the planted families make the census arithmetic: per family,
-    // same-variant pairs collide at hamming 0 (2 · C(50,2) = 2450) and
-    // cross-variant at hamming 1 (50 · 50 = 2500); ×3 families
-    "q_image_dedup" ->
-      """SELECT hamming, n_pairs FROM (VALUES
-        |  (0, CAST(7350 AS BIGINT)), (1, CAST(7500 AS BIGINT)))
-        |  AS t(hamming, n_pairs)
-        |ORDER BY hamming""".stripMargin,
-
-    "q_multimodal_pixels" ->
-      """SELECT doc_id,
-        |  CAST(4 + doc_id % 5 AS INTEGER) AS width,
-        |  CAST(2 + doc_id % 3 AS INTEGER) AS height,
-        |  CAST((4 + doc_id % 5) * (2 + doc_id % 3) AS BIGINT) AS n_pixels,
-        |  round(CAST(doc_id % 256 AS DOUBLE), 6) AS mean_r,
-        |  round(CAST((doc_id * 7) % 256 AS DOUBLE), 6) AS mean_g,
-        |  round(CAST((doc_id * 13) % 256 AS DOUBLE), 6) AS mean_b
-        |FROM documents WHERE doc_id < 50 ORDER BY doc_id""".stripMargin,
-
-    "q_multimodal_compressed" ->
-      """SELECT doc_id,
-        |  CAST(4 + doc_id % 5 AS INTEGER) AS width,
-        |  CAST(2 + doc_id % 3 AS INTEGER) AS height,
-        |  round(CAST(doc_id % 256 AS DOUBLE), 6) AS mean_r,
-        |  round(CAST((doc_id * 7) % 256 AS DOUBLE), 6) AS mean_g,
-        |  round(CAST((doc_id * 13) % 256 AS DOUBLE), 6) AS mean_b,
-        |  TRUE AS gif_exact, TRUE AS jpeg_ok
-        |FROM documents WHERE doc_id < 50 ORDER BY doc_id""".stripMargin,
-
-    "q_multimodal_pcm" ->
-      """SELECT doc_id,
-        |  CAST((50 + doc_id % 20) * (1 + doc_id % 2) AS BIGINT) AS n_samples,
-        |  round(CAST(100 + (doc_id * 31) % 1000 AS DOUBLE) / 32768, 6) AS rms,
-        |  round(CAST(100 + (doc_id * 31) % 1000 AS DOUBLE) / 32768, 6) AS peak
-        |FROM documents WHERE doc_id < 50 ORDER BY doc_id""".stripMargin,
-
-    // header fields are exact by construction: bitrate from the table
-    // index (%3 → 128/192/256 kbps), 5..11 frames, 44.1 kHz, duration
-    // = frames·1152/44100 (the MPEG-1 Layer III samples-per-frame)
-    "q_multimodal_mp3" ->
-      """SELECT doc_id,
-        |  5 + doc_id % 7 AS frames,
-        |  44100 AS sample_rate,
-        |  round(CAST(CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 128.0
-        |             WHEN 1 THEN 192.0 ELSE 256.0 END AS DOUBLE), 3)
-        |    AS avg_bitrate_kbps,
-        |  round((5 + doc_id % 7) * 1152.0 / 44100, 6) AS duration_sec
-        |FROM documents WHERE doc_id < 50 ORDER BY doc_id""".stripMargin,
-
-    // equality structure only — the expected table is reconstructible
-    // without knowing the hash: every twin matches, no sample collision
-    "q_doc_fingerprint_exact" ->
-      """SELECT doc_id, true AS twin_match, true AS injective_sample
-        |FROM documents WHERE doc_id < 25 ORDER BY doc_id""".stripMargin,
-
-    // planted ground truth: the labels ARE the oracle (classification
-    // quality, not a mirrored formula)
-    "q_lang_id" ->
-      """SELECT doc_id, pred_lang FROM (VALUES
-        |  (CAST(1 AS BIGINT), 'en'), (2, 'de'), (3, 'fr'), (4, 'es'),
-        |  (5, 'it'), (6, 'pt'), (7, 'en'), (8, 'de'), (9, 'fr'),
-        |  (10, 'es'), (11, 'it'), (12, 'pt'), (13, 'zh'), (14, 'und'))
-        |  AS t(doc_id, pred_lang)
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_doc_fingerprint" ->
-      s"""WITH base AS (
-        |  SELECT doc_id, text,
-        |         CAST(length(text) AS DOUBLE) AS len,
-        |         string_split_regex(trim(lower(text)), '\\s+') AS tk,
-        |         CASE WHEN length(trim(text)) = 0 THEN 0
-        |              ELSE len(string_split_regex(trim(lower(text)), '\\s+')) END AS ntok
-        |  FROM documents
-        |), comp AS (
-        |  SELECT doc_id, text, len, tk, ntok,
-        |    CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS DOUBLE) AS alpha,
-        |    CAST(length(regexp_replace(text, '[^.,;:!?''"()-]', '', 'g')) AS DOUBLE) AS punct,
-        |    CAST(len(list_intersect(tk, ['the','a','an','and','or','of','to','in',
-        |      'is','it','that','for','on','with','as','are','was','be','this','at','by'])) AS DOUBLE) AS stop
-        |  FROM base
-        |), scored AS (
-        |  SELECT doc_id, text,
-        |    least(len/500.0, 1.0) AS length_score,
-        |    CASE WHEN len > 0 THEN alpha/len ELSE 0.0 END AS alpha_ratio,
-        |    CASE WHEN len > 0 THEN 1.0 - least(punct/len*10.0, 1.0) ELSE 0.0 END AS punct_penalty,
-        |    CASE WHEN ntok > 0 THEN least(stop/ntok*2.0, 1.0) ELSE 0.0 END AS stop_ratio
-        |  FROM comp
-        |)
-        |SELECT doc_id,
-        |  floor((length_score + alpha_ratio + punct_penalty + stop_ratio)/4.0
-        |        * 10000 + 0.5)/10000 AS quality,
-        |  ${graft.ext.TextAnalysis.langIdOracleSqlExpr("text")} AS pred_lang,
-        |  TRUE AS has_fingerprint
-        |FROM scored ORDER BY doc_id""".stripMargin,
-
-    "q_split_assign" ->
-      """SELECT doc_id, TRUE AS assigned, TRUE AS stable
-        |FROM documents WHERE doc_id < 200 ORDER BY doc_id""".stripMargin,
-
-    "q_domain_mix" ->
-      """SELECT lang, count(*) AS total, TRUE AS mix_ok, TRUE AS stable,
-        |       TRUE AS invariant
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-
-    "q_alpha_sample" ->
-      """SELECT lang, count(*) AS total, TRUE AS mix03_ok, TRUE AS stable,
-        |       TRUE AS natural1_ok
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-
-    "q_token_budget_mix" ->
-      s"""WITH ${graft.ext.BpeVocab.oracleCtes("documents")}
-         |SELECT d.lang, count(*) AS total,
-         |       CAST(sum(len(b.toks)) AS BIGINT) AS total_tokens,
-         |       TRUE AS budget_ok, TRUE AS stable
-         |FROM documents d JOIN bpe b USING (doc_id)
-         |GROUP BY d.lang ORDER BY d.lang""".stripMargin,
-
-    "q_replicate" ->
-      """SELECT lang, count(*) AS total, TRUE AS rep_ok, TRUE AS epochs_ok
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-
-    "q_shuffle_order" ->
-      """SELECT count(*) AS n, TRUE AS permutation, TRUE AS stable,
-        |       TRUE AS displaced
-        |FROM documents""".stripMargin,
-
-    "q_split_leakage_safe" ->
-      """WITH b AS (
-        |  SELECT doc_id, CASE WHEN lag(doc_id) OVER w = doc_id - 1
-        |                       AND lag(n_chars % 5) OVER w = n_chars % 5
-        |                      THEN 0 ELSE 1 END AS brk
-        |  FROM documents WINDOW w AS (ORDER BY doc_id)),
-        |r AS (SELECT doc_id, sum(brk) OVER (ORDER BY doc_id) AS run FROM b),
-        |c AS (SELECT doc_id, min(doc_id) OVER (PARTITION BY run) AS component
-        |      FROM r)
-        |SELECT component, count(*) AS members, TRUE AS no_straddle,
-        |       TRUE AS assigned
-        |FROM c GROUP BY component ORDER BY component""".stripMargin,
-
-    "q_pack_shards" ->
-      s"""WITH ${graft.ext.BpeVocab.oracleCtes(
-                  "(SELECT * FROM documents WHERE doc_id < 200)")},
-         |d AS (SELECT doc_id, CAST(len(toks) AS INT) AS n_tokens
-         |      FROM bpe)
-         |SELECT doc_id, n_tokens,
-        |       CAST(coalesce(SUM(n_tokens) OVER (ORDER BY doc_id
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |         AS BIGINT) AS offset_in_corpus,
-        |       CAST(floor(coalesce(SUM(n_tokens) OVER (ORDER BY doc_id
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |         / 2000.0) AS BIGINT) AS shard
-        |FROM d ORDER BY doc_id""".stripMargin,
-
-    "q_doc_chunks" ->
-      """WITH d AS (SELECT doc_id, string_split(trim(lower(text)), ' ') AS toks
-        |           FROM documents WHERE doc_id < 50),
-        |p AS (SELECT doc_id, toks,
-        |             CASE WHEN len(toks) <= 64 THEN 1
-        |                  ELSE CAST(ceil((len(toks) - 16) / 48.0) AS INT) END AS nc
-        |      FROM d)
-        |SELECT doc_id, CAST(k AS INT) AS chunk_idx,
-        |       CAST(len(toks[k*48+1 : k*48+64]) AS INT) AS n_tokens,
-        |       array_to_string(toks[k*48+1 : k*48+64], ' ') AS chunk_text
-        |FROM p, LATERAL UNNEST(generate_series(0, nc - 1)) AS t(k)
-        |ORDER BY doc_id, chunk_idx""".stripMargin,
-
-    "q_doc_chunks_bpe" ->
-      s"""WITH ${graft.ext.BpeVocab.oracleCtes(
-                  "(SELECT * FROM documents WHERE doc_id < 50)")},
-         |d AS (SELECT doc_id, toks FROM bpe),
-         |p AS (SELECT doc_id, toks,
-         |             CASE WHEN len(toks) <= 64 THEN 1
-         |                  ELSE CAST(ceil((len(toks) - 16) / 48.0) AS INT) END AS nc
-         |      FROM d)
-         |SELECT doc_id, CAST(k AS INT) AS chunk_idx,
-         |       CAST(len(toks[k*48+1 : k*48+64]) AS INT) AS n_tokens,
-         |       array_to_string(toks[k*48+1 : k*48+64], ' ') AS chunk_text
-         |FROM p, LATERAL UNNEST(generate_series(0, nc - 1)) AS t(k)
-         |ORDER BY doc_id, chunk_idx""".stripMargin,
-
-    "q_doc_boilerplate" ->
-      """WITH split AS (
-        |  SELECT doc_id, string_split(regexp_replace(text, '\. ', '.' || chr(10), 'g'), chr(10)) AS parts
-        |  FROM documents
-        |), lines AS (
-        |  SELECT doc_id, s.x['pos'] AS pos, s.x['line'] AS line,
-        |         trim(regexp_replace(regexp_replace(lower(s.x['line']),
-        |           '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')) AS nl
-        |  FROM split, unnest(list_transform(range(1, len(parts)+1),
-        |    i -> {'pos': i, 'line': parts[i]})) s(x)
-        |), frequent AS (
-        |  SELECT nl FROM (SELECT DISTINCT doc_id, nl FROM lines) GROUP BY nl
-        |  HAVING count(*) >= 10 AND nl <> ''
-        |)
-        |SELECT doc_id, count(*) AS n_lines_kept,
-        |       md5(string_agg(line, chr(10) ORDER BY pos)) AS clean_md5
-        |FROM lines WHERE nl NOT IN (SELECT nl FROM frequent)
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // DuckDB's list_cosine_similarity over DOUBLE[] reproduces the
-    // engine's double-precision scoring bit-for-bit at 4/6 decimals
-    "q_embed_topk" ->
-      """SELECT vec_id, round(list_cosine_similarity(CAST(embedding AS DOUBLE[]),
-        |        (SELECT CAST(embedding AS DOUBLE[]) FROM embeddings
-        |         ORDER BY vec_id LIMIT 1)), 4) AS score
-        |FROM embeddings ORDER BY score DESC, vec_id LIMIT 10""".stripMargin,
-
-    // Planted-neighbor ANN oracles: DuckDB rebuilds the same augmented
-    // corpus (query + 0.02·i shifts at vec_ids 900001..900010) and
-    // recomputes the EXACT top-10 — the pruned LSH/IVF searches must
-    // recover it exactly, so the hash match doubles as a recall gate.
-    // Ranks only (no scores): the ≥0.05 cosine gaps make the order
-    // immune to float(Spark)-vs-double(DuckDB) arithmetic noise.
-    "q_embed_ann_lsh" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings ORDER BY vec_id LIMIT 1),
-        |planted AS (
-        |  SELECT 900000 + i AS vec_id,
-        |         list_transform(q.qv, x -> x + 0.02 * i) AS v
-        |  FROM range(1, 11) t(i), q),
-        |alld AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-        |  UNION ALL SELECT vec_id, v FROM planted)
-        |SELECT rank, vec_id FROM (
-        |  SELECT CAST(row_number() OVER (
-        |           ORDER BY list_cosine_similarity(v, (SELECT qv FROM q))
-        |             DESC, vec_id) AS INTEGER) AS rank, vec_id
-        |  FROM alld) x
-        |WHERE rank <= 10 ORDER BY rank""".stripMargin,
-
-    "q_embed_ivf" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings ORDER BY vec_id LIMIT 1),
-        |planted AS (
-        |  SELECT 900000 + i AS vec_id,
-        |         list_transform(q.qv, x -> x + 0.02 * i) AS v
-        |  FROM range(1, 11) t(i), q),
-        |alld AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-        |  UNION ALL SELECT vec_id, v FROM planted)
-        |SELECT rank, vec_id FROM (
-        |  SELECT CAST(row_number() OVER (
-        |           ORDER BY list_cosine_similarity(v, (SELECT qv FROM q))
-        |             DESC, vec_id) AS INTEGER) AS rank, vec_id
-        |  FROM alld) x
-        |WHERE rank <= 10 ORDER BY rank""".stripMargin,
-
-    // quantized index must recover the same exact top-10 (quantization
-    // noise ~0.004 cosine vs planted gaps >= 0.05)
-    "q_embed_ivf_q8" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings ORDER BY vec_id LIMIT 1),
-        |planted AS (
-        |  SELECT 900000 + i AS vec_id,
-        |         list_transform(q.qv, x -> x + 0.02 * i) AS v
-        |  FROM range(1, 11) t(i), q),
-        |alld AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-        |  UNION ALL SELECT vec_id, v FROM planted)
-        |SELECT rank, vec_id FROM (
-        |  SELECT CAST(row_number() OVER (
-        |           ORDER BY list_cosine_similarity(v, (SELECT qv FROM q))
-        |             DESC, vec_id) AS INTEGER) AS rank, vec_id
-        |  FROM alld) x
-        |WHERE rank <= 10 ORDER BY rank""".stripMargin,
-
-    // the persisted IVF-PQ composition: list pruning + ADC candidates
-    // + SQ8 refine must also land the exact planted top-10
-    "q_embed_ivfpq" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings ORDER BY vec_id LIMIT 1),
-        |planted AS (
-        |  SELECT 900000 + i AS vec_id,
-        |         list_transform(q.qv, x -> x + 0.02 * i) AS v
-        |  FROM range(1, 11) t(i), q),
-        |alld AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-        |  UNION ALL SELECT vec_id, v FROM planted)
-        |SELECT rank, vec_id FROM (
-        |  SELECT CAST(row_number() OVER (
-        |           ORDER BY list_cosine_similarity(v, (SELECT qv FROM q))
-        |             DESC, vec_id) AS INTEGER) AS rank, vec_id
-        |  FROM alld) x
-        |WHERE rank <= 10 ORDER BY rank""".stripMargin,
-
-    // PQ + ADC + exact re-rank must also recover the exact top-10: the
-    // planted neighbors dominate the ADC candidate set and the refine
-    // step is exact cosine — same oracle as the IVF pair
-    "q_embed_pq" ->
-      """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings ORDER BY vec_id LIMIT 1),
-        |planted AS (
-        |  SELECT 900000 + i AS vec_id,
-        |         list_transform(q.qv, x -> x + 0.02 * i) AS v
-        |  FROM range(1, 11) t(i), q),
-        |alld AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-        |  UNION ALL SELECT vec_id, v FROM planted)
-        |SELECT rank, vec_id FROM (
-        |  SELECT CAST(row_number() OVER (
-        |           ORDER BY list_cosine_similarity(v, (SELECT qv FROM q))
-        |             DESC, vec_id) AS INTEGER) AS rank, vec_id
-        |  FROM alld) x
-        |WHERE rank <= 10 ORDER BY rank""".stripMargin,
-
-    "q_embed_topk_multi" ->
-      """SELECT query_id, rank, neighbor_id, score FROM (
-        |  SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-        |         CAST(row_number() OVER (PARTITION BY q.vec_id
-        |             ORDER BY list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-        |                                             CAST(q.embedding AS DOUBLE[])) DESC,
-        |                      e.vec_id) AS INTEGER) AS rank,
-        |         round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-        |                                      CAST(q.embedding AS DOUBLE[])), 6) AS score
-        |  FROM embeddings e, (SELECT * FROM embeddings WHERE vec_id < 3) q) x
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-
-    // Exact-duplicate SimHash gate: identical twins are the only pairs
-    // within radius 4 of each other (background jaccard ≈0.02), and an
-    // identical token stream hashes to hamming 0 by construction.
-    "q_simhash_pairs_exact" ->
-      """SELECT doc_id AS id_a, doc_id + 100000 AS id_b,
-        |       CAST(0 AS INTEGER) AS hamming
-        |FROM documents WHERE doc_id < 25 ORDER BY id_a""".stripMargin,
-
-    // Planted-pair embedding near-dup gate: the 20 perturbed copies are
-    // the ONLY pairs above the 0.9 threshold (background tops out at
-    // ≈0.46), so the amplified LSH must surface exactly this set with
-    // matching cosines.
-    "q_embed_neardup" ->
-      """SELECT id_a, id_b, round(list_cosine_similarity(orig, v), 3) AS cosine
-        |FROM (
-        |  SELECT vec_id AS id_a, vec_id + 100000 AS id_b,
-        |         CAST(embedding AS DOUBLE[]) AS orig,
-        |         list_transform(CAST(embedding AS DOUBLE[]), x -> x + 0.05) AS v
-        |  FROM embeddings WHERE vec_id < 20) p
-        |WHERE list_cosine_similarity(orig, v) >= 0.9
-        |ORDER BY id_a""".stripMargin,
-
-    // SemDeDup planted exact-copy gate: identical twins (cosine 1.0)
-    // are the only pairs >= 0.9; cell assignment cannot separate an
-    // exact copy from its original (deterministic argmax tie-break).
-    "q_semantic_dedup" ->
-      """SELECT vec_id AS id_a, vec_id + 100000 AS id_b,
-        |       round(list_cosine_similarity(CAST(embedding AS DOUBLE[]),
-        |                                    CAST(embedding AS DOUBLE[])), 3) AS cosine
-        |FROM embeddings WHERE vec_id < 20 ORDER BY id_a""".stripMargin,
-
-    // Exact-mode distributed k-NN join: DuckDB recomputes the full
-    // brute-force ranking for the 5 query rows.
-    "q_knn_join" ->
-      """SELECT query_id, rank, neighbor_id, score FROM (
-        |  SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-        |         CAST(row_number() OVER (PARTITION BY q.vec_id
-        |             ORDER BY list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-        |                                             CAST(q.embedding AS DOUBLE[])) DESC,
-        |                      e.vec_id) AS INTEGER) AS rank,
-        |         round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-        |                                      CAST(q.embedding AS DOUBLE[])), 6) AS score
-        |  FROM embeddings e, (SELECT * FROM embeddings WHERE vec_id < 5) q) x
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-
-    // Planted-pair MinHash gate: DuckDB recomputes exact word-3-gram
-    // Jaccard for every planted (doc, 80%-prefix twin) pair and keeps
-    // those >= 0.5 — the banding must surface exactly that set with
-    // matching scores. Background pairs sit at ~0.02 at this scale, so
-    // the threshold separates cleanly.
-    "q_minhash_pairs_exact" ->
-      """WITH base AS (
-        |  SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS tka
-        |  FROM documents WHERE doc_id < 25),
-        |pairs AS (
-        |  SELECT doc_id AS id_a, doc_id + 100000 AS id_b, tka,
-        |         tka[1:greatest(3, CAST(floor(len(tka) * 4.0 / 5) AS INT))] AS tkb
-        |  FROM base),
-        |g AS (
-        |  SELECT id_a, id_b,
-        |    CASE WHEN len(tka) < 3 THEN [array_to_string(tka, chr(1))]
-        |      ELSE list_distinct(list_transform(generate_series(1, len(tka)-2),
-        |        i -> array_to_string(tka[i:i+2], chr(1)))) END AS ga,
-        |    CASE WHEN len(tkb) < 3 THEN [array_to_string(tkb, chr(1))]
-        |      ELSE list_distinct(list_transform(generate_series(1, len(tkb)-2),
-        |        i -> array_to_string(tkb[i:i+2], chr(1)))) END AS gb
-        |  FROM pairs)
-        |SELECT id_a, id_b, round(j, 4) AS jaccard FROM (
-        |  SELECT id_a, id_b,
-        |         len(list_intersect(ga, gb))::DOUBLE
-        |           / len(list_distinct(ga || gb)) AS j
-        |  FROM g) x
-        |WHERE j >= 0.5 ORDER BY id_a, id_b""".stripMargin,
-
-    // Word-3-gram Jaccard of each doc against its 60%-token prefix —
-    // DuckDB rebuilds the exact gram sets from raw text (the engine
-    // compares 64-bit gram hashes; identical unless a hash collision,
-    // none in this corpus).
-    "q_embed_quantized" ->
-      """SELECT count(*) + 10 AS n_vectors, TRUE AS error_bound_ok,
-        |       TRUE AS top10_preserved
-        |FROM embeddings""".stripMargin,
-
-    "q_pii_extended" ->
-      """SELECT doc_id,
-        |  text || ' card ' ||
-        |    CASE WHEN doc_id % 2 = 0 THEN '<CARD>'
-        |         ELSE '1234-5678-9012-3456' END ||
-        |    ' ip <IP> call <PHONE>' AS scrubbed,
-        |  CAST(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END AS INTEGER)
-        |    AS n_cards,
-        |  CAST(1 AS INTEGER) AS n_phones,
-        |  CAST(1 AS INTEGER) AS n_ips
-        |FROM documents WHERE doc_id < 40 ORDER BY doc_id""".stripMargin,
-
-    "q_substring_pairs" ->
-      """WITH d AS (
-        |  SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS t
-        |  FROM documents),
-        |g AS (
-        |  SELECT DISTINCT doc_id, gram
-        |  FROM d, LATERAL UNNEST(list_transform(
-        |    generate_series(1, len(t) - 7),
-        |    i -> array_to_string(t[i:i+7], chr(1)))) AS u(gram)
-        |  WHERE len(t) >= 8)
-        |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |       count(*) AS shared_windows
-        |FROM g a JOIN g b ON a.gram = b.gram AND a.doc_id < b.doc_id
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q_substring_pairs_exact" ->
-      """WITH base AS (
-        |  SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS tka
-        |  FROM documents WHERE doc_id < 25),
-        |p AS (
-        |  SELECT doc_id AS id_a, doc_id + 100000 AS id_b,
-        |         tka[1:greatest(6, CAST(floor(len(tka) * 3.0 / 5) AS INT))]
-        |           AS tkb
-        |  FROM base)
-        |SELECT id_a, id_b,
-        |  CAST(len(list_distinct(list_transform(
-        |    generate_series(1, len(tkb) - 4),
-        |    i -> array_to_string(tkb[i:i+4], chr(1))))) AS BIGINT)
-        |    AS shared_windows
-        |FROM p ORDER BY id_a""".stripMargin,
-
-    "q_ngram_jaccard_exact" ->
-      """WITH base AS (
-        |  SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS tka
-        |  FROM documents WHERE doc_id < 25),
-        |pairs AS (
-        |  SELECT doc_id AS id_a, tka,
-        |         tka[1:greatest(3, CAST(floor(len(tka) * 3.0 / 5) AS INT))] AS tkb
-        |  FROM base),
-        |g AS (
-        |  SELECT id_a,
-        |    CASE WHEN len(tka) < 3 THEN [array_to_string(tka, chr(1))]
-        |      ELSE list_distinct(list_transform(generate_series(1, len(tka)-2),
-        |        i -> array_to_string(tka[i:i+2], chr(1)))) END AS ga,
-        |    CASE WHEN len(tkb) < 3 THEN [array_to_string(tkb, chr(1))]
-        |      ELSE list_distinct(list_transform(generate_series(1, len(tkb)-2),
-        |        i -> array_to_string(tkb[i:i+2], chr(1)))) END AS gb
-        |  FROM pairs)
-        |SELECT id_a, id_a + 100000 AS id_b,
-        |  round(CASE WHEN len(list_distinct(ga || gb)) = 0 THEN 0.0
-        |    ELSE len(list_intersect(ga, gb))::DOUBLE / len(list_distinct(ga || gb))
-        |    END, 4) AS ngram_jaccard
-        |FROM g ORDER BY id_a""".stripMargin,
-
-    "q_multimodal_bytes" ->
-      """SELECT doc_id AS asset_id, 'image' AS modality,
-        |       CAST(octet_length(encode(text)) AS BIGINT) AS byte_len,
-        |       md5(text) AS content_md5
-        |FROM documents ORDER BY asset_id""".stripMargin,
-
-    "q_multimodal_decode" ->
-      """SELECT asset_id, width, height, 'png' AS format,
-        |       CAST(floor(width * scale + 0.5) AS INTEGER) AS resized_w,
-        |       CAST(floor(height * scale + 0.5) AS INTEGER) AS resized_h
-        |FROM (
-        |  SELECT asset_id, width, height,
-        |         least(256.0 / greatest(width, height), 1.0) AS scale
-        |  FROM (SELECT doc_id AS asset_id,
-        |               CAST(doc_id % 1920 + 32 AS INTEGER) AS width,
-        |               CAST((doc_id * 7) % 1080 + 32 AS INTEGER) AS height
-        |        FROM documents) a) b
-        |ORDER BY asset_id""".stripMargin,
-
-    // byte_rate = sample_rate * channels * 2 (16-bit PCM);
-    // duration_ms = data_size * 1000 // byte_rate (integer division)
-    "q_multimodal_audio" ->
-      """SELECT asset_id, sample_rate, channels,
-        |       CAST(data_size * 1000 // (sample_rate * channels * 2) AS BIGINT)
-        |         AS duration_ms,
-        |       'wav' AS format
-        |FROM (SELECT doc_id AS asset_id,
-        |             CAST(doc_id % 8 * 1000 + 8000 AS INTEGER) AS sample_rate,
-        |             CAST(doc_id % 2 + 1 AS INTEGER) AS channels,
-        |             (doc_id % 997 + 1) * 64 AS data_size
-        |      FROM documents) a
-        |ORDER BY asset_id""".stripMargin,
-
-    // planted container metadata: mp4 duration = the planted ms value
-    // (timescale 1000); avi duration = 40000 us/frame * frames / 1000
-    "q_multimodal_video" ->
-      """SELECT doc_id AS asset_id,
-        |  CAST(doc_id % 640 + 16 AS INTEGER) AS width,
-        |  CAST(doc_id % 360 + 9 AS INTEGER) AS height,
-        |  CAST(CASE WHEN doc_id % 2 = 0 THEN (doc_id % 9973 + 40) * 100
-        |       ELSE 40 * (doc_id % 250 + 1) END AS BIGINT) AS duration_ms,
-        |  CASE WHEN doc_id % 2 = 0 THEN 'mp4' ELSE 'avi' END AS format
-        |FROM documents ORDER BY asset_id""".stripMargin,
-
-    // URL filter: the registrable domain is recomputed from the
-    // generating formula (tld by doc_id%5, source-site name), so the
-    // Spark side's parse_url + simplified-PSL walk must agree
-    "q_url_filter" ->
-      """WITH u AS (
-        |  SELECT doc_id,
-        |    source || '-site' ||
-        |      ['.co.uk', '.com', '.org', '.net', '.io'][(doc_id % 5) + 1]
-        |      AS url_domain
-        |  FROM documents
-        |), f AS (
-        |  SELECT doc_id, url_domain,
-        |    row_number() OVER (PARTITION BY url_domain ORDER BY doc_id) AS rk
-        |  FROM u
-        |  WHERE url_domain NOT IN (
-        |    'src1-site.co.uk', 'src1-site.com', 'src1-site.org',
-        |    'src1-site.net', 'src1-site.io',
-        |    'src7-site.co.uk', 'src7-site.com', 'src7-site.org',
-        |    'src7-site.net', 'src7-site.io')
-        |)
-        |SELECT doc_id, url_domain FROM f WHERE rk <= 3
-        |ORDER BY doc_id""".stripMargin,
-
-    // URL dedup: every decoration (case, :443, utm/fragment, trailing
-    // slash) must canonicalize away — group stats recomputed from the
-    // generating arithmetic
-    "q_url_dedup" ->
-      """SELECT 'https://site' || (doc_id % 25) || '.example.com/p/' ||
-        |         (doc_id % 25) ||
-        |         CASE WHEN (doc_id % 25) % 3 = 0
-        |              THEN '?id=' || (doc_id % 25) ELSE '' END
-        |         AS canonical_url,
-        |       min(doc_id) AS keep_doc_id,
-        |       count(*) AS n_dupes
-        |FROM documents GROUP BY doc_id % 25
-        |ORDER BY canonical_url""".stripMargin,
-
-    // MJPEG frame decode: frame count / dimensions are exact; decoded
-    // constant-gray means landed inside the JPEG quantization tolerance
-    // and the container header agreed with every frame (Spark-side
-    // booleans, TRUE here)
-    "q_multimodal_frames" ->
-      """SELECT doc_id, CAST(3 AS BIGINT) AS n_frames,
-        |  CAST(8 + (doc_id % 5) * 2 AS INTEGER) AS width,
-        |  CAST(8 + (doc_id % 3) * 2 AS INTEGER) AS height,
-        |  TRUE AS all_grays_ok, TRUE AS header_ok
-        |FROM documents WHERE doc_id < 50 ORDER BY doc_id""".stripMargin
-  )
-
-  // -------------------------------------------------------------------
-  // helpers
-  // -------------------------------------------------------------------
-
-  /** One checkpointed minhash candidate-pair set per (session, sf-dir),
-    * shared by every dedup scenario that needs candidates
-    * (q_minhash_pairs reports + verifies them, q_ngram_jaccard verifies
-    * with a different measure). Generation — tokenize → shingle → 64-hash
-    * signature → band → capped self-join — is the dominant dedup cost;
-    * computing it once mirrors how a real pipeline stages its candidate
-    * set, and the checkpoint makes reuse free. */
-  private val pairCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (SparkSession, DataFrame)]()
-
-  private def sharedCandidatePairs(s: SparkSession, dir: String): DataFrame =
-    // keyed by sf-dir, validated by session IDENTITY and liveness: a
-    // cached frame's checkpoint blocks die with their SparkContext, so a
-    // stale entry must recompute, never resurface
-    pairCache.compute(dir, (_, cached) =>
-      if (cached != null && (cached._1 eq s) && !s.sparkContext.isStopped) cached
-      else (s, Dedup.minhashCandidatePairs(t(s, dir, "documents"), "doc_id", "text"))
-    )._2
-
-  private val labelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (SparkSession, DataFrame)]()
-
-  /** Component labels of the deterministic chain-edge duplicate graph
-    * (consecutive doc_ids sharing an n_chars mod-5 bucket) — the input
-    * both q_dedup_clusters and q_dedup_canonical consume. The iterative
-    * star-contraction is the dominant cost of both; running it once and
-    * checkpointing mirrors how a real pipeline stages its cluster
-    * assignment before clustering-dependent passes (same contract as
-    * [[sharedCandidatePairs]]). */
-  private def sharedChainLabels(s: SparkSession, dir: String): DataFrame =
-    labelCache.compute(dir, (_, cached) =>
-      if (cached != null && (cached._1 eq s) && !s.sparkContext.isStopped) cached
-      else {
-        val d = t(s, dir, "documents")
-          .select(col("doc_id"), (col("n_chars") % 5).as("_b"))
-        val edges = d.select(col("doc_id").as("id_a"), col("_b").as("_ba"))
-          .join(d.select(col("doc_id").as("id_b"), col("_b").as("_bb")),
-            col("id_b") === col("id_a") + 1 && col("_bb") === col("_ba"))
-          .select(col("id_a"), col("id_b"))
-        (s, Dedup.materialize(Dedup.connectedComponents(edges)
-          .withColumnRenamed("id", "doc_id")))
-      }
-    )._2
-
-  /** Scratch dirs created by query fixtures (temp warehouses, index
-    * dirs). Self-contained per entry, but a 143-entry two-pass bench
-    * that never reclaims them accumulates hundreds of fixture
-    * warehouses — dirty page cache, writeback, and inode churn that
-    * taxes every later entry's own I/O. [[cleanScratchDirs]] lets the
-    * bench reclaim them between entries (outside the timed body);
-    * Verify/tests keep the default leave-until-exit behavior. */
-  private val scratchDirs =
-    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
-
-  private def scratchDir(prefix: String): java.nio.file.Path = {
-    val d = Files.createTempDirectory(prefix)
-    scratchDirs.add(d)
-    d
-  }
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    specs.map(q => q.name -> (q.run.apply _)).toMap
+
+  /** For each key in [[queries]] with an oracle, equivalent ANSI SQL
+    * runnable by DuckDB on the same parquet tables, with IDENTICAL column
+    * names/ordering. Omitted keys (sketch/LSH/stub operators) get the
+    * driver's rows-only check. */
+  lazy val oracleSql: Map[String, String] =
+    specs.flatMap(q => q.oracle.map(q.name -> _)).toMap
+
+  /** The split entries: `Bench` reports each as `<name>` plus one
+    * sub-metric per part (`_fixture`/`_query` for the write-dominated
+    * entries, `_fixture`/`_drain` for streams, `_build`/`_probe` for the
+    * IVF index). */
+  lazy val benchSplits: Map[String, BenchSplit] =
+    specs.collect { case QuerySpec(name, split: BenchSplit, _, _) => name -> split }.toMap
 
   /** Stateful streaming entries' shuffle-partition count, as a function
     * of the session's core count — the state store pays one
@@ -6372,9 +78,7 @@ object SparkEntry {
 
   /** The stateful streaming entries that run at
     * [[streamShufflePartitions]] instead of the session's count. */
-  val streamingEntries: Set[String] =
-    Set("q_stream_dedup", "q_stream_join", "q_stream_table", "q_stream_cdc",
-      "q_stream_upsert", "q_stream_neardup")
+  lazy val streamingEntries: Set[String] = specs.filter(_.streaming).map(_.name).toSet
 
   /** Fails with `usage` and every name in `names` that [[queries]] does
     * not declare. Harnesses call it before their session starts, so a
@@ -6388,102 +92,5 @@ object SparkEntry {
   /** Delete every scratch dir registered by completed query fixtures.
     * Call only BETWEEN entries: frames over a deleted warehouse cannot
     * be re-evaluated. */
-  def cleanScratchDirs(): Unit = {
-    var d = scratchDirs.poll()
-    while (d != null) {
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(d).iterator().asScala.toSeq.reverse
-          .foreach(p => try java.nio.file.Files.deleteIfExists(p)
-            catch { case _: java.io.IOException => () })
-      } catch { case _: java.io.IOException => () }
-      d = scratchDirs.poll()
-    }
-  }
-
-  private def tempCatalog(s: SparkSession): GraftCatalog = {
-    val wh = scratchDir("graft-wh")
-    val cat = new GraftCatalog(wh, s)
-    cat.createDatabase("default")
-    cat
-  }
-
-  private def firstVector(embeddings: DataFrame): Array[Float] =
-    embeddings.orderBy(col("vec_id")).limit(1)
-      .select(col("embedding")).head().getSeq[Float](0).toArray
-
-  /** The ANN corpus with 10 planted nearest neighbors of `q` at vec_ids
-    * 900001..900010: `q + 0.02·i` element-wise, monotonically farther
-    * with ≥0.05 cosine gaps — a KNOWN exact top-10 an oracle can
-    * recompute, in the high-similarity regime ANN exists to serve
-    * (the random base corpus tops out at ≈0.46 pair cosine). */
-  /** The planted image corpus the image-dedup oracles share: `n` 9×8
-    * grayscale images in 3 luminance families × 2 one-bit variants,
-    * rotated across PNG/BMP/GIF containers — dHash values are exact by
-    * construction (see ImageDHashSpec), so pair/cluster censuses are
-    * literal arithmetic. */
-  private def plantedImages(n: Int): Seq[(Int, Array[Byte])] = {
-    import java.awt.image.BufferedImage
-    import java.io.ByteArrayOutputStream
-    import javax.imageio.ImageIO
-    def img(format: String)(lum: (Int, Int) => Int): Array[Byte] = {
-      val b = new BufferedImage(9, 8, BufferedImage.TYPE_INT_RGB)
-      for (y <- 0 until 8; x <- 0 until 9) {
-        val v = lum(x, y) & 0xFF
-        b.setRGB(x, y, (v << 16) | (v << 8) | v)
-      }
-      val out = new ByteArrayOutputStream()
-      require(ImageIO.write(b, format, out), s"no writer for $format")
-      out.toByteArray
-    }
-    val base: Seq[(Int, Int) => Int] = Seq(
-      (x, _) => x * 10,                           // rising rows: all bits
-      (_, y) => y * 10,                           // flat rows: no bits
-      (x, y) => if ((x + y) % 2 == 0) 0 else 100) // checkerboard
-    val tweak: Seq[(Int, Int) => Int] = Seq(
-      (x, y) => if (y == 2 && x == 8) 0 else x * 10,   // clears bit 23
-      (x, y) => if (y == 5 && x == 8) 255 else y * 10, // sets bit 47
-      (x, y) => if (y == 1 && x == 8) 0 else (if ((x + y) % 2 == 0) 0 else 100))
-    val formats = Seq("png", "bmp", "gif")
-    (0 until n).map { id =>
-      val fam = id % 3
-      val lum = if ((id / 3) % 2 == 0) base(fam) else tweak(fam)
-      (id, img(formats(id % formats.size))(lum))
-    }
-  }
-
-  private def embeddingsWithPlanted(s: SparkSession, e: DataFrame,
-      q: Array[Float]): DataFrame =
-    e.select("vec_id", "embedding").unionByName(
-      s.range(1, 11).select(
-        (lit(900000L) + col("id")).as("vec_id"),
-        transform(lit(q), x => x + col("id").cast("float") * lit(0.02f))
-          .as("embedding")))
-
-  /** Score-ordered (rank, vec_id) of an ANN result — id-level agreement
-    * with the exact top-k is the recall claim the oracle checks; scores
-    * are excluded so float-vs-double noise cannot blur the hash. */
-  private def rankedIds(topk: DataFrame): DataFrame =
-    topk.select(row_number().over(
-        Window.orderBy(col("score").desc, col("vec_id"))).as("rank"),
-      col("vec_id")).orderBy(col("rank"))
-
-  /** IVF index construction (k-means + partitioned index write), the
-    * build half of `q_embed_ivf`. The index includes the planted oracle
-    * neighbors (10 rows — negligible against the corpus).
-    */
-  private def ivfBuild(s: SparkSession, dir: String, idxDir: String): Unit = {
-    val e = emb(s, dir)
-    Similarity.ivfWriteIndex(embeddingsWithPlanted(s, e, firstVector(e)),
-      "vec_id", "embedding", idxDir, nlist = 16, iters = 2)
-  }
-
-  /** IVF probe alone against an index previously written by [[ivfBuild]]:
-    * reads only the `nprobe` nearest lists' directories.
-    */
-  private def ivfProbeQuery(s: SparkSession, dir: String, idxDir: String): DataFrame = {
-    val q = firstVector(emb(s, dir))
-    Similarity.ivfProbe(s, idxDir, "vec_id", "embedding", q, k = 10, nprobe = 6)
-      .withColumn("score", round(col("score"), 4))
-  }
+  def cleanScratchDirs(): Unit = Fixtures.cleanScratchDirs()
 }

@@ -516,9 +516,14 @@ class PlanShapeSpec extends AnyFunSuite {
   test("no query plans a cartesian product at sf0.001") {
     // cartesian products are the canonical does-not-scale plan; the DDL
     // and store-backed queries mutate temp state, so check the pure ones
+    val mutating = Set("q_compact", "q_sql_ddl_insert", "q_csv_roundtrip")
+    // a renamed query would otherwise silently lose its exclusion
+    val unknown = mutating.filterNot(SparkEntry.queries.contains)
+    assert(unknown.isEmpty, s"excluded names that no query declares: $unknown")
+    assert(SparkEntry.queries.keys.exists(_.startsWith("q_tt_")),
+      "no q_tt_ query left to exclude")
     val pure = SparkEntry.queries.keys.filterNot(k =>
-      k.startsWith("q_tt_") || k == "q_compact" || k == "q_sql_ddl_insert" ||
-        k == "q_csv_roundtrip")
+      k.startsWith("q_tt_") || mutating(k))
     pure.foreach { name =>
       val p = plan(name)
       assert(!p.contains("CartesianProduct"), s"$name plans a cartesian:\n$p")

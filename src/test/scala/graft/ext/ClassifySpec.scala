@@ -49,9 +49,12 @@ class ClassifySpec extends AnyFunSuite {
   test("trainer frees its feature frame (materialize-then-free discipline)") {
     val labeled = (prose.map((_, 1.0)) ++ junk.map((_, 0.0)))
       .toDF("text", "label")
+    // scoped to RDDs the trainer persists: earlier suites in this JVM can
+    // leave local checkpoints registered until they are garbage-collected
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     Classify.trainQuality(labeled, "text", "label", dim = 128, epochs = 5)
-    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
-      "trainQuality left a cached frame behind")
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"trainQuality left cached RDDs $left behind")
   }
 
   test("the PINNED model keeps real prose and rejects every garbage family") {
