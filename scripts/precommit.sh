@@ -14,6 +14,15 @@ if [ -n "$builders" ]; then
   echo "[precommit] SparkSession.builder() outside GraftSession.scala — use GraftSession.local"
   exit 1
 fi
+# One metadata format: table state lives in metadata/v<N>.json records
+# (graft.store.TableMeta). The per-table JSON side files they replaced
+# are named only by the one legacy-migration reader.
+sidefiles=$(git grep -nE '"(schema|sort|partition|bloom|identifier|constraints|defaults|properties|cdc|renames|drops|tags|stats|mv)\.json"' -- src/main ':!src/main/scala/graft/store/LegacyMeta.scala' || true)
+if [ -n "$sidefiles" ]; then
+  echo "$sidefiles"
+  echo "[precommit] table side-file name outside LegacyMeta.scala — keep table metadata in TableMeta"
+  exit 1
+fi
 # QueryRegistrySpec builds no session: a repeated query name, or a
 # query that lost its oracle, fails here in the same sbt start-up.
 echo "[precommit] sbt Test/compile + QueryRegistrySpec…"

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import graft.catalog.GraftCatalog
 import graft.ingest.TelcoDataGen
-import graft.present.{Introspector, PlotDecider, Summarizer}
+import graft.present.{Introspector, PlotDecider}
 import graft.sql.Engine
 import graft.translate.RuleTranslator
 

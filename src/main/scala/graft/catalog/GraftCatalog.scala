@@ -18,7 +18,7 @@ import graft.store.{PartitionSpec, Snapshot, SnapshotLog, TableStore}
   * so the same catalog code serves the local test layout and a cluster
   * deployment.
   *
-  * Layout: `<warehouse>/<database>/<table>/{data/, snapshots.json, schema.json}`.
+  * Layout: `<warehouse>/<database>/<table>/{data/, snapshots.json, metadata/v<N>.json}`.
   */
 final class GraftCatalog(val warehouse: HPath, val spark: SparkSession) {
 
@@ -434,7 +434,12 @@ final class GraftCatalog(val warehouse: HPath, val spark: SparkSession) {
     * [[withTableStats]].
     */
   def registerView(name: String): Unit =
-    if (!viewless) withTableStats(name, table(name)).createOrReplaceTempView(name)
+    if (!viewless) {
+      val st = store()
+      val m = st.meta(name)
+      withTableStats(name, st.read(name, None, m), meta = Some(m))
+        .createOrReplaceTempView(name)
+    }
 
   /** Attach the table's persisted statistics (row count from the
     * snapshot log — always current; NDV/null/min-max from the last
@@ -448,16 +453,18 @@ final class GraftCatalog(val warehouse: HPath, val spark: SparkSession) {
     * so a filtered fact relation keeps its stats: the row count is the
     * full table's (the pruned files are a subset — conservative), and
     * the ON-TOP filter's own selectivity estimate shrinks it from
-    * there. */
+    * there. `meta` is the table's record when the caller has loaded it. */
   private[graft] def withTableStats(name: String,
       df: DataFrame,
-      prunedTo: Option[Seq[graft.store.DataFile]] = None): DataFrame =
+      prunedTo: Option[Seq[graft.store.DataFile]] = None,
+      meta: Option[graft.store.TableMeta] = None): DataFrame =
     scala.util.Try {
       val st = store()
-      graft.store.TableStats.readStats(st, name) match {
+      val m = meta.getOrElse(st.meta(name))
+      m.stats match {
         case None => df
         case Some(s) =>
-          st.snapshotMetaAsOf(name, None) match {
+          st.snapshotMetaAsOf(name, None, m) match {
             case Some((schema, recordCount, filesThunk)) =>
               def sumBytes(fs: Seq[graft.store.DataFile]): Option[Long] = {
                 val b = fs.map(_.bytes)

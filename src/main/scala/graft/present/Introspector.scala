@@ -26,9 +26,11 @@ final class Introspector(
     * compact per-column stats line rides along — row counts, NDV, and
     * value ranges ground the LLM's join-key and filter choices the same
     * way they ground Impala's planner, at zero extra scan cost (the
-    * stats are read from the table's persisted `stats.json`). */
+    * stats are read from the table's metadata record). */
   def tableInfo(name: String): String = {
-    val df = catalog.table(name)
+    val st = catalog.store()
+    val meta = st.meta(name) // one metadata read serves the scan and the stats
+    val df = st.read(name, None, meta)
     val ddlCols = df.schema.fields
       .map(f => s"  ${f.name} ${f.dataType.sql}${if (f.nullable) "" else " NOT NULL"}")
       .mkString(",\n")
@@ -36,17 +38,16 @@ final class Introspector(
     val sample = df.limit(sampleRows).collect()
     val header = df.columns.mkString("\t")
     val rows = sample.map(renderSampleRow).mkString("\n")
-    val stats = graft.store.TableStats.readStats(catalog.store(), name)
-      .map { s =>
-        val cols = s.cols.map { c =>
-          val range = (c.min, c.max) match {
-            case (Some(lo), Some(hi)) => s" range=[$lo, $hi]"
-            case _ => ""
-          }
-          s"${c.column}: ndv=${c.ndv} nulls=${c.nullCount}$range"
-        }.mkString("\n")
-        s"\n\n/*\nstats (${s.rowCount} rows):\n$cols\n*/"
-      }.getOrElse("")
+    val stats = meta.stats.map { s =>
+      val cols = s.cols.map { c =>
+        val range = (c.min, c.max) match {
+          case (Some(lo), Some(hi)) => s" range=[$lo, $hi]"
+          case _ => ""
+        }
+        s"${c.column}: ndv=${c.ndv} nulls=${c.nullCount}$range"
+      }.mkString("\n")
+      s"\n\n/*\nstats (${s.rowCount} rows):\n$cols\n*/"
+    }.getOrElse("")
     s"""$ddl
        |
        |/*

@@ -251,12 +251,12 @@ private[graft] object IcebergQueries {
       implicit val sqlCtx = s.sqlContext
       import s.implicits._
       val input = MemoryStream[(Long, String, java.sql.Timestamp)]
-      val stream = input.toDF.toDF("doc_id", "text", "ts")
+      val stream = input.toDF().toDF("doc_id", "text", "ts")
       val pairs = graft.streaming.EventStreams.nearDupStream(s, stream,
         "doc_id", "text", "ts", stateTimeout = None,
         eventTimeTimeoutMs = Some(600_000L)) // 10-minute horizon
       val sink = "neardup_" + java.util.UUID.randomUUID().toString.takeWhile(_ != '-')
-      val q = pairs.toDF.writeStream.format("memory").queryName(sink)
+      val q = pairs.toDF().writeStream.format("memory").queryName(sink)
         .outputMode("append").start()
       def ts(sec: Long) = new java.sql.Timestamp(sec * 1000L)
       try {

@@ -684,15 +684,17 @@ final class Engine(catalog: GraftCatalog) {
     // file-size estimation would have chosen.
     def pruned(db: String, t: String, cond: Expression): Option[LogicalPlan] = {
       val store = catalog.store(db)
-      // one log read serves both the prunability check and the prune
+      // one log read and one metadata read serve both the prunability
+      // check and the prune
       val files = store.dataFilesAsOf(t, None)
-      val prunable = store.partitionSpec(t).isDefined ||
-        files.exists(_.stats.nonEmpty)
+      val m = store.meta(t)
+      val prunable = m.partition.isDefined || files.exists(_.stats.nonEmpty)
       if (!prunable) None
       else scala.util.Try {
-        val kept = store.prunedSubset(t, files, GraftSqlShim.column(cond))
+        val kept = store.prunedSubset(t, files, GraftSqlShim.column(cond), m)
         catalog.forDatabase(db).withTableStats(t,
-            store.readFromFileList(t, kept), prunedTo = Some(kept))
+            store.readFromFileList(t, kept, m), prunedTo = Some(kept),
+            meta = Some(m))
           .queryExecution.analyzed
       }.toOption
     }

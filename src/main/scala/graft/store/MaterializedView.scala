@@ -1,7 +1,6 @@
 package graft.store
 
-import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Incrementally-maintained materialized aggregate views over snapshot
@@ -44,8 +43,8 @@ object MaterializedView {
     * None for `count(*)`. `alias` is the user-visible output column. */
   final case class AggSpec(func: String, input: Option[String], alias: String)
 
-  /** The view definition persisted as `mv.json` in the view's table dir
-    * (immutable after create, like an Iceberg view's stored SQL).
+  /** The view definition, persisted in the view's metadata record
+    * ([[TableMeta.view]]; immutable after create, like an Iceberg view's stored SQL).
     * `filter` makes the view PARTIAL: only base rows satisfying the
     * predicate contribute — applied identically to the initial build,
     * every delta, and every rebuild, so the state is always "the
@@ -109,7 +108,7 @@ object MaterializedView {
     val baseId = store.currentSnapshotId(d.base).getOrElse(0L)
     val state = partialAgg(store.read(d.base), d)
     store.create(name, state.schema)
-    writeDef(store, name, d)
+    store.commitMeta(name)(_.copy(view = Some(d)))
     store.append(name, state,
       extraSummary = Map("mv-base-snapshot" -> baseId.toString,
         "mv-refresh" -> "create"))
@@ -206,7 +205,7 @@ object MaterializedView {
     render(store.read(name), definition(store, name))
 
   def isMaterializedView(store: TableStore, name: String): Boolean =
-    store.exists(name) && store.metaFs.exists(defPath(store, name))
+    store.exists(name) && store.meta(name).view.isDefined
 
   /** Base snapshot id the current state covers. */
   def watermark(store: TableStore, name: String): Long =
@@ -323,44 +322,9 @@ object MaterializedView {
     state.select(cols: _*)
   }
 
-  // ---- definition persistence -------------------------------------
-
-  private def defPath(store: TableStore, name: String): HPath =
-    new HPath(store.tableDir(name), "mv.json")
-
-  private def writeDef(store: TableStore, name: String, d: MvDef): Unit = {
-    def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    val aggs = d.aggs.map(a => s"""{"func":${q(a.func)},""" +
-      s""""input":${a.input.map(q).getOrElse("null")},""" +
-      s""""alias":${q(a.alias)}}""").mkString("[", ",", "]")
-    val json = s"""{"base":${q(d.base)},""" +
-      s""""groupCols":${d.groupCols.map(q).mkString("[", ",", "]")},""" +
-      s""""aggs":$aggs,""" +
-      s""""filter":${d.filter.map(q).getOrElse("null")}}"""
-    val out = store.metaFs.create(defPath(store, name), true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
   def definition(store: TableStore, name: String): MvDef = {
-    val p = defPath(store, name)
-    require(store.metaFs.exists(p), s"$name is not a materialized view")
-    val in = store.metaFs.open(p)
-    val bytes =
-      try org.apache.commons.io.IOUtils.toByteArray(in)
-      finally in.close()
-    val node = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
-    import scala.jdk.CollectionConverters._
-    MvDef(
-      base = node.get("base").asText(),
-      groupCols = node.get("groupCols").elements().asScala.map(_.asText()).toSeq,
-      aggs = node.get("aggs").elements().asScala.map { a =>
-        AggSpec(a.get("func").asText(),
-          if (a.get("input").isNull) None else Some(a.get("input").asText()),
-          a.get("alias").asText())
-      }.toSeq,
-      // absent in pre-filter definitions → unfiltered
-      filter = Option(node.get("filter")).filterNot(_.isNull).map(_.asText()))
+    val d = store.meta(name).view
+    require(d.isDefined, s"$name is not a materialized view")
+    d.get
   }
 }

@@ -167,7 +167,7 @@ object SnapshotLog {
     * concurrent query) can catch the fresh json with the stale checksum.
     * Transient by construction (the sidecar lands moments later; HDFS and
     * object stores never throw it), so: bounded retry, then rethrow. */
-  private def readLogText(fs: FileSystem, p: HPath): String = {
+  private[store] def readLogText(fs: FileSystem, p: HPath): String = {
     var attempt = 0
     while (true) {
       attempt += 1

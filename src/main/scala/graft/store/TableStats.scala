@@ -1,7 +1,7 @@
 package graft.store
 
-import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{DataFrame, Row}
+import com.fasterxml.jackson.annotation.{JsonFormat, JsonPropertyOrder}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -21,14 +21,17 @@ import org.apache.spark.sql.types._
   * `count(DISTINCT …)` for small tables and verification (the oracle
   * path — one expand + shuffle, documented as the non-default). Null
   * counts, min/max, and avg length ride the same pass. Results persist
-  * in `stats.json` beside the table's other metadata, stamped with the
-  * snapshot id they were computed at, so SHOW can mark staleness
+  * in the table's metadata record ([[TableMeta.stats]]), stamped with
+  * the snapshot id they were computed at, so SHOW can mark staleness
   * without recomputing.
   */
 object TableStats {
 
   /** One equi-height histogram bin: [lo, hi] plus the approximate
-    * distinct count inside it — Catalyst's `HistogramBin` shape. */
+    * distinct count inside it — Catalyst's `HistogramBin` shape, stored
+    * as a `[lo, hi, ndv]` array. */
+  @JsonFormat(shape = JsonFormat.Shape.ARRAY)
+  @JsonPropertyOrder(Array("lo", "hi", "ndv"))
   final case class HistBin(lo: Double, hi: Double, ndv: Long)
 
   /** Equi-height histogram (`height` ≈ non-null rows per bin) — the
@@ -179,7 +182,7 @@ object TableStats {
           hists.get(c.column).map(h => c.copy(hist = Some(h))).getOrElse(c))
       }
     val stats = Stats(snapId, row.getLong(0), withHist)
-    write(store, table, stats)
+    store.commitMeta(table)(_.copy(stats = Some(stats)))
     stats
   }
 
@@ -187,38 +190,8 @@ object TableStats {
 
   /** Stored stats, if COMPUTE STATS ever ran. `stale` when the table has
     * committed past the stats' snapshot. */
-  def readStats(store: TableStore, table: String): Option[Stats] = {
-    val p = path(store, table)
-    if (!store.metaFs.exists(p)) None
-    else {
-      val in = store.metaFs.open(p)
-      val bytes =
-        try org.apache.commons.io.IOUtils.toByteArray(in)
-        finally in.close()
-      val node = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
-      import scala.jdk.CollectionConverters._
-      Some(Stats(
-        node.get("snapshotId").asLong(),
-        node.get("rowCount").asLong(),
-        node.get("cols").elements().asScala.map { c =>
-          def field(n: String): Option[String] =
-            Option(c.get(n)).filterNot(_.isNull).map(_.asText())
-          val hist = Option(c.get("hist")).filterNot(_.isNull).map { h =>
-            Hist(h.get("height").asDouble(),
-              h.get("bins").elements().asScala.map { b =>
-                HistBin(b.get(0).asDouble(), b.get(1).asDouble(),
-                  b.get(2).asLong())
-              }.toSeq)
-          }
-          ColStat(c.get("column").asText(), c.get("dataType").asText(),
-            c.get("ndv").asLong(), c.get("nullCount").asLong(),
-            field("min"), field("max"),
-            Option(c.get("avgLen")).filterNot(_.isNull).map(_.asDouble()),
-            hist)
-        }.toSeq))
-    }
-  }
+  def readStats(store: TableStore, table: String): Option[Stats] =
+    store.meta(table).stats
 
   def isStale(store: TableStore, table: String, s: Stats): Boolean =
     store.currentSnapshotId(table).getOrElse(0L) != s.snapshotId
@@ -226,26 +199,15 @@ object TableStats {
   /** Follow an ALTER TABLE RENAME COLUMN: persisted stats are keyed by
     * logical name, so the entry re-keys instead of silently orphaning
     * (the planner would lose the column's NDV/bounds until the next
-    * COMPUTE STATS). No-op when no stats exist or the column was not
-    * in the last pass. Called under the table lock by
-    * [[TableStore.renameColumn]]. */
-  def renameColumn(store: TableStore, table: String,
-      from: String, to: String): Unit =
-    readStats(store, table).foreach { s =>
-      if (s.cols.exists(_.column.equalsIgnoreCase(from)))
-        write(store, table, s.copy(cols = s.cols.map(c =>
-          if (c.column.equalsIgnoreCase(from)) c.copy(column = to) else c)))
-    }
+    * COMPUTE STATS). */
+  def renameColumn(s: Stats, from: String, to: String): Stats =
+    s.copy(cols = s.cols.map(c =>
+      if (c.column.equalsIgnoreCase(from)) c.copy(column = to) else c))
 
   /** Follow an ALTER TABLE DROP COLUMN: remove the column's persisted
-    * entry so SHOW COLUMN STATS never lists a ghost column. Called
-    * under the table lock by [[TableStore.dropColumn]]. */
-  def dropColumn(store: TableStore, table: String, column: String): Unit =
-    readStats(store, table).foreach { s =>
-      if (s.cols.exists(_.column.equalsIgnoreCase(column)))
-        write(store, table, s.copy(cols =
-          s.cols.filterNot(_.column.equalsIgnoreCase(column))))
-    }
+    * entry so SHOW COLUMN STATS never lists a ghost column. */
+  def dropColumn(s: Stats, column: String): Stats =
+    s.copy(cols = s.cols.filterNot(_.column.equalsIgnoreCase(column)))
 
   /** The persisted stats as a Catalyst [[CatalogTable]] carrying
     * [[CatalogStatistics]] — the bridge that makes COMPUTE STATS feed
@@ -342,30 +304,5 @@ object TableStats {
         sizeInBytes = BigInt(sizeOnDiskBytes),
         rowCount = Some(BigInt(math.max(liveRows, 0L))),
         colStats = colStats)))
-  }
-
-  private def path(store: TableStore, table: String): HPath =
-    new HPath(store.tableDir(table), "stats.json")
-
-  private def write(store: TableStore, table: String, s: Stats): Unit = {
-    def q(v: String) = "\"" + v.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    val cols = s.cols.map { c =>
-      val hist = c.hist.map { h =>
-        val bins = h.bins.map(b => s"[${b.lo},${b.hi},${b.ndv}]")
-          .mkString("[", ",", "]")
-        s"""{"height":${h.height},"bins":$bins}"""
-      }.getOrElse("null")
-      s"""{"column":${q(c.column)},"dataType":${q(c.dataType)},""" +
-        s""""ndv":${c.ndv},"nullCount":${c.nullCount},""" +
-        s""""min":${c.min.map(q).getOrElse("null")},""" +
-        s""""max":${c.max.map(q).getOrElse("null")},""" +
-        s""""avgLen":${c.avgLen.map(_.toString).getOrElse("null")},""" +
-        s""""hist":$hist}"""
-    }.mkString("[", ",", "]")
-    val json =
-      s"""{"snapshotId":${s.snapshotId},"rowCount":${s.rowCount},"cols":$cols}"""
-    val out = store.metaFs.create(path(store, table), true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
   }
 }

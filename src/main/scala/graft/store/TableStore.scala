@@ -1,6 +1,5 @@
 package graft.store
 
-import java.nio.charset.StandardCharsets
 import java.time.ZoneId
 import java.util.UUID
 
@@ -15,7 +14,9 @@ import org.apache.spark.sql.types._
 /** Versioned-Parquet table with Iceberg-style snapshot semantics.
   *
   * Layout: `<root>/<table>/data/part-*.parquet` + `<root>/<table>/snapshots.json`
-  * (+ `schema.json`, optional `partition.json`).
+  * + `<root>/<table>/metadata/v<N>.json`, one immutable [[TableMeta]]
+  * record per table version (schema, partition spec, sort order,
+  * constraints, properties, tags, stats, …).
   *
   * Maps the reference's observable table semantics
   * (`telco_spark/append_telco_spark_iceberg.py:67` `writeTo().append()`;
@@ -41,8 +42,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
   private val fs: FileSystem =
     root.getFileSystem(spark.sessionState.newHadoopConf())
 
-  /** Filesystem handle for sibling metadata writers (materialized-view
-    * definitions live beside the table's own schema/partition json). */
+  /** The store's filesystem handle (tests inspect table dirs with it). */
   private[store] def metaFs: FileSystem = fs
 
   def tableDir(table: String): HPath = new HPath(root, table)
@@ -73,22 +73,18 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     fs.mkdirs(dataDir(table))
     sortBy.foreach(c => require(schema.fieldNames.exists(_.equalsIgnoreCase(c)),
       s"sort column '$c' not in schema of $table"))
-    if (sortBy.nonEmpty)
-      writeString(new HPath(tableDir(table), "sort.json"),
-        sortBy.map(c => "\"" + c + "\"").mkString("[", ",", "]"))
-    // Persist the schema so an empty table is still readable; v1 starts
-    // the schema history (each ALTER appends a version, and snapshots
-    // record which version was current — so time travel renders the
-    // schema OF ITS TIME, Iceberg's schema-id contract).
-    writeString(new HPath(tableDir(table), "schema.json"), schema.json)
-    writeString(schemaVersionPath(table, 1), schema.json)
-    partition.foreach { sp =>
-      PartitionSpec.validateFor(sp, schema, table)
-      // the session zone at CREATE time is pinned into the spec: timestamp
-      // partition values are wall-clock renderings, so writer and pruner
-      // must agree on one zone forever, not on whatever the session has
-      writePartitionJson(table, sp, sessionZone)
-    }
+    partition.foreach(PartitionSpec.validateFor(_, schema, table))
+    // v1 starts the version history: snapshots record which version was
+    // current, so time travel renders the schema OF ITS TIME (Iceberg's
+    // schema-id contract). The session zone at CREATE time is pinned
+    // into the spec: timestamp partition values are wall-clock
+    // renderings, so writer and pruner must agree on one zone forever,
+    // not on whatever the session has.
+    commitMeta(table)(m => m.copy(schema = schema,
+      sortOrder = if (sortBy.nonEmpty) sortBy else m.sortOrder,
+      partition = partition.orElse(m.partition),
+      partitionZone = partition.map(_ => sessionZone.getId)
+        .orElse(m.partitionZone)))
     if (SnapshotLog.read(fs, tableDir(table)).isEmpty)
       SnapshotLog.write(fs, tableDir(table), Seq.empty)
   }
@@ -98,62 +94,103 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     if (fs.exists(dir)) fs.delete(dir, true)
   }
 
+  // ---- table metadata ------------------------------------------------
+
+  /** The table's current metadata record; an empty one when the table
+    * has none (a missing table, or a bare snapshot log). A legacy table
+    * is converted from its side files on first open ([[LegacyMeta]]).
+    * Hot paths load it once per operation and pass it down. */
+  def meta(table: String): TableMeta = current(table).meta
+
+  /** Metadata version `version` — what a snapshot stamped with it
+    * committed under. */
+  def meta(table: String, version: Int): TableMeta =
+    TableMeta.read(fs, tableDir(table), version)
+
+  private[store] def current(table: String): MetaVersion = load(table, locked = false)
+
+  /** Highest version, converting a legacy table first (under the table
+    * lock, unless the caller already holds it — the lock is a file and
+    * NOT reentrant). */
+  private def load(table: String, locked: Boolean): MetaVersion = {
+    val dir = tableDir(table)
+    TableMeta.latest(fs, dir).getOrElse {
+      if (!LegacyMeta.present(fs, dir)) MetaVersion(0, TableMeta.Empty)
+      else {
+        def migrate(): MetaVersion = TableMeta.latest(fs, dir).getOrElse {
+          LegacyMeta.migrate(fs, dir, sessionZone)
+          TableMeta.latest(fs, dir).get
+        }
+        if (locked) migrate() else SnapshotLog.withTableLock(fs, dir)(migrate())
+      }
+    }
+  }
+
+  /** The one writer of table metadata: under the table's commit lock,
+    * apply `f` to the current record and publish the result as the next
+    * version (`v<N+1>.json`, temp file + rename — a version is never
+    * rewritten). A metadata-only change adds no snapshot. Returns the
+    * new record (the current one when `f` changed nothing). */
+  private[store] def commitMeta(table: String)(f: TableMeta => TableMeta): TableMeta =
+    SnapshotLog.withTableLock(fs, tableDir(table)) {
+      val cur = load(table, locked = true)
+      // a bare snapshot log has no record: start from its files' schema
+      val base =
+        if (cur.n > 0 || !exists(table)) cur.meta
+        else TableMeta(scala.util.Try(inferredSchema(table)).getOrElse(new StructType()))
+      val next = f(base)
+      if (cur.n == 0 || next != base)
+        TableMeta.write(fs, tableDir(table), cur.n + 1, next)
+      next
+    }
+
+  /** Commit hook evaluated INSIDE the commit lock: the metadata version
+    * to stamp into the snapshot (-1 when the table has no record). When
+    * `guard` is the record a write built its CHECK guard from, a changed
+    * constraint set since then fails the commit — the rows were never
+    * checked against the new constraints. */
+  private def stamp(table: String,
+      guard: Option[MetaVersion] = None): () => Int = () => {
+    val dir = tableDir(table)
+    val n = TableMeta.latestVersion(fs, dir) match {
+      case 0 => load(table, locked = true).n
+      case v => v
+    }
+    guard.filter(_.n != n).foreach { g =>
+      if (TableMeta.read(fs, dir, n).constraints != g.meta.constraints)
+        throw new SnapshotLog.CommitConflictException(
+          s"CHECK constraints of $table changed while a write was being " +
+            "prepared — retry against the new constraints")
+    }
+    if (n == 0) -1 else n
+  }
+
+  private def inferredSchema(table: String): StructType =
+    spark.read.parquet(currentFiles(table): _*).schema
+
   def schema(table: String): StructType = {
-    val p = new HPath(tableDir(table), "schema.json")
-    if (fs.exists(p))
-      DataType.fromJson(readString(p)).asInstanceOf[StructType]
-    else spark.read.parquet(currentFiles(table): _*).schema
+    val c = current(table)
+    if (c.n > 0) c.meta.schema else inferredSchema(table)
   }
 
-  private def schemaVersionPath(table: String, v: Int): HPath =
-    new HPath(new HPath(tableDir(table), "schemas"), s"v$v.json")
-
-  /** Highest recorded schema version; 0 = table predates versioning. */
-  private def currentSchemaVersion(table: String): Int = {
-    val dir = new HPath(tableDir(table), "schemas")
-    if (!fs.exists(dir)) 0
-    else fs.listStatus(dir).toSeq.map(_.getPath.getName)
-      .collect { case n if n.startsWith("v") && n.endsWith(".json") =>
-        n.stripPrefix("v").stripSuffix(".json").toIntOption.getOrElse(0)
-      }.maxOption.getOrElse(0)
-  }
-
-  /** The schema a given snapshot committed under; falls back to the
-    * current schema for pre-versioning snapshots. */
-  private def schemaAt(table: String, snap: Snapshot): StructType = {
-    val p = schemaVersionPath(table, snap.schemaVersion)
-    if (snap.schemaVersion >= 1 && fs.exists(p))
-      DataType.fromJson(readString(p)).asInstanceOf[StructType]
-    else schema(table)
-  }
+  /** The schema a given snapshot committed under; the current schema
+    * for snapshots stamped before versioning. */
+  private def schemaAt(table: String, snap: Snapshot, m: TableMeta): StructType =
+    if (snap.schemaVersion < 1) m.schema
+    else try meta(table, snap.schemaVersion).schema
+    catch { case _: java.io.FileNotFoundException => m.schema }
 
   /** Declared sort order (empty = none). Sorted tables range-cluster
     * their writes so per-file min/max bounds are tight and disjoint —
     * a single-key DELETE then rewrites exactly one file. */
-  def sortOrder(table: String): Seq[String] = {
-    val p = new HPath(tableDir(table), "sort.json")
-    if (!fs.exists(p)) Seq.empty
-    else {
-      val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(readString(p))
-      import scala.jdk.CollectionConverters._
-      node.elements().asScala.map(_.asText()).toSeq
-    }
-  }
+  def sortOrder(table: String): Seq[String] = meta(table).sortOrder
 
   /** Columns with bloom-filter indexing (empty = none). See
     * [[BloomFilter]] for the two-tier design this enables: parquet
     * row-group blooms built by the executors during every write, plus
     * capped file-level blooms in the snapshot log for point-lookup file
     * skipping with zero storage I/O. */
-  def bloomColumns(table: String): Seq[String] = {
-    val p = new HPath(tableDir(table), "bloom.json")
-    if (!fs.exists(p)) Seq.empty
-    else {
-      val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(readString(p))
-      import scala.jdk.CollectionConverters._
-      node.elements().asScala.map(_.asText()).toSeq
-    }
-  }
+  def bloomColumns(table: String): Seq[String] = meta(table).bloomColumns
 
   /** Declare bloom-indexed columns (`ALTER TABLE … SET BLOOM FILTER
     * (…)`). Applies to SUBSEQUENT writes — existing files gain filters
@@ -161,21 +198,16 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     * properties-change contract: metadata now, data lazily). An empty
     * list drops the index. Atomic types only: a bloom hashes whole
     * values, and nested/complex equality is not a point-lookup shape. */
-  def setBloomColumns(table: String, cols: Seq[String]): Unit = {
-    val sch = schema(table)
-    cols.foreach { c =>
-      val f = sch.fields.find(_.name.equalsIgnoreCase(c)).getOrElse(
-        throw new IllegalArgumentException(s"no column '$c' in $table"))
-      require(org.apache.spark.sql.GraftSqlShim.isAtomic(f.dataType),
-        s"cannot bloom-index '$c': ${f.dataType.sql} is not an atomic type")
+  def setBloomColumns(table: String, cols: Seq[String]): Unit =
+    commitMeta(table) { m =>
+      cols.foreach { c =>
+        val f = m.schema.fields.find(_.name.equalsIgnoreCase(c)).getOrElse(
+          throw new IllegalArgumentException(s"no column '$c' in $table"))
+        require(org.apache.spark.sql.GraftSqlShim.isAtomic(f.dataType),
+          s"cannot bloom-index '$c': ${f.dataType.sql} is not an atomic type")
+      }
+      m.copy(bloomColumns = cols)
     }
-    SnapshotLog.withTableLock(fs, tableDir(table)) {
-      val p = new HPath(tableDir(table), "bloom.json")
-      if (cols.isEmpty) { if (fs.exists(p)) fs.delete(p, false) }
-      else writeString(p,
-        cols.map(c => "\"" + c + "\"").mkString("[", ",", "]"))
-    }
-  }
 
   /** Iceberg IDENTIFIER FIELDS — the table's declared row-identity key
     * (empty = none). Equality writes default to it: `CALL
@@ -183,94 +215,29 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     * streaming upsert sink resolve their key columns here, so the
     * CDC-writer contract lives with the table instead of every caller.
     * Follows RENAME; a declared identifier column cannot be dropped. */
-  def identifierFields(table: String): Seq[String] = {
-    val p = new HPath(tableDir(table), "identifier.json")
-    if (!fs.exists(p)) Seq.empty
-    else {
-      val node = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(readString(p))
-      import scala.jdk.CollectionConverters._
-      node.elements().asScala.map(_.asText()).toSeq
-    }
-  }
+  def identifierFields(table: String): Seq[String] = meta(table).identifierFields
 
   /** `ALTER TABLE … SET IDENTIFIER FIELDS (…)`; an empty list drops the
     * declaration (`DROP IDENTIFIER FIELDS`). Atomic columns only —
     * row identity is a point-equality shape, like blooms. */
-  def setIdentifierFields(table: String, cols: Seq[String]): Unit = {
-    val sch = schema(table)
-    val resolved = cols.map { c =>
-      val f = sch.fields.find(_.name.equalsIgnoreCase(c)).getOrElse(
-        throw new IllegalArgumentException(s"no column '$c' in $table"))
-      require(org.apache.spark.sql.GraftSqlShim.isAtomic(f.dataType),
-        s"cannot use '$c' as an identifier field: ${f.dataType.sql} " +
-          "is not an atomic type")
-      f.name
+  def setIdentifierFields(table: String, cols: Seq[String]): Unit =
+    commitMeta(table) { m =>
+      m.copy(identifierFields = cols.map { c =>
+        val f = m.schema.fields.find(_.name.equalsIgnoreCase(c)).getOrElse(
+          throw new IllegalArgumentException(s"no column '$c' in $table"))
+        require(org.apache.spark.sql.GraftSqlShim.isAtomic(f.dataType),
+          s"cannot use '$c' as an identifier field: ${f.dataType.sql} " +
+            "is not an atomic type")
+        f.name
+      })
     }
-    SnapshotLog.withTableLock(fs, tableDir(table)) {
-      val p = new HPath(tableDir(table), "identifier.json")
-      if (resolved.isEmpty) { if (fs.exists(p)) fs.delete(p, false) }
-      else writeString(p,
-        resolved.map(c => "\"" + c + "\"").mkString("[", ",", "]"))
-    }
-  }
 
-  def partitionSpec(table: String): Option[PartitionSpec] =
-    partitionSpecZone(table).map(_._1)
-
-  private def writePartitionJson(table: String, sp: PartitionSpec,
-      zone: ZoneId): Unit =
-    writeString(new HPath(tableDir(table), "partition.json"),
-      s"""{"column":"${sp.column}","transform":"${sp.transform}",""" +
-        sp.param.map(p => s""""param":$p,""").getOrElse("") +
-        s""""zone":"${zone.getId}"}""")
+  def partitionSpec(table: String): Option[PartitionSpec] = meta(table).partition
 
   /** Spec plus the zone its timestamp partition values are rendered in
     * (pinned at create; absent in pre-zone tables → session zone). */
-  private def partitionSpecZone(table: String): Option[(PartitionSpec, ZoneId)] = {
-    migrateLegacyBucketJson(table)
-    val p = new HPath(tableDir(table), "partition.json")
-    if (!fs.exists(p)) None
-    else {
-      val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(readString(p))
-      val zone =
-        if (node.has("zone")) ZoneId.of(node.get("zone").asText()) else sessionZone
-      val param = if (node.has("param")) Some(node.get("param").asInt()) else None
-      Some((PartitionSpec(node.get("column").asText(),
-        node.get("transform").asText(), param), zone))
-    }
-  }
-
-  /** One-way migration of a pre-native-bucketing table: the retired
-    * CLUSTERED BY implementation recorded its layout in `bucket.json`
-    * (`{"column":k,"buckets":n}`) which nothing reads any more — without
-    * conversion such a table silently degrades to unpartitioned (reads
-    * stay correct via the file-list scan, but new appends write
-    * untagged files and the no-exchange join property is lost without
-    * warning). On first open convert it to the equivalent
-    * `bucket(n, k)` partition spec; the legacy data files keep working
-    * unchanged because they lack the qualified partition key, so both
-    * pruning and the BucketSpec guard ([[readFileList]]) conservatively
-    * ignore them until a COW rewrite or OPTIMIZE re-tags them. Runs
-    * under the table lock; the legacy file is renamed (not deleted) so
-    * a concurrent pre-migration reader's `fs.exists` race is harmless —
-    * both orderings end with partition.json present and bucket.json
-    * gone. */
-  private def migrateLegacyBucketJson(table: String): Unit = {
-    val legacy = new HPath(tableDir(table), "bucket.json")
-    if (!fs.exists(legacy)) return
-    SnapshotLog.withTableLock(fs, tableDir(table)) {
-      if (fs.exists(legacy)) {
-        val node = new com.fasterxml.jackson.databind.ObjectMapper()
-          .readTree(readString(legacy))
-        val spec = PartitionSpec(node.get("column").asText(), "bucket",
-          Some(node.get("buckets").asInt()))
-        if (!fs.exists(new HPath(tableDir(table), "partition.json")))
-          writePartitionJson(table, spec, sessionZone)
-        fs.rename(legacy, new HPath(tableDir(table), "bucket.json.migrated"))
-      }
-    }
-  }
+  private def partitionSpecZone(m: TableMeta): Option[(PartitionSpec, ZoneId)] =
+    m.partition.map(_ -> m.partitionZone.map(ZoneId.of).getOrElse(sessionZone))
 
   /** Partition-spec evolution (`ALTER TABLE … SET PARTITION SPEC`):
     * subsequent writes cluster and record values under the NEW transform;
@@ -286,24 +253,21 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     *
     * A pinned zone outlives the evolution: the old files' wall-clock
     * renderings were fixed at CREATE time, so the writer/pruner zone
-    * agreement must persist across spec changes. Runs under the table
-    * lock so concurrent ALTERs serialize against racing writes' spec
-    * reads. */
-  def setPartitionSpec(table: String, spec: PartitionSpec): Unit = {
-    PartitionSpec.validateFor(spec, schema(table), table)
-    SnapshotLog.withTableLock(fs, tableDir(table)) {
-      val zone = partitionSpecZone(table).map(_._2).getOrElse(sessionZone)
-      writePartitionJson(table, spec, zone)
+    * agreement must persist across spec changes. */
+  def setPartitionSpec(table: String, spec: PartitionSpec): Unit =
+    commitMeta(table) { m =>
+      PartitionSpec.validateFor(spec, m.schema, table)
+      m.copy(partition = Some(spec),
+        partitionZone = m.partitionZone.orElse(Some(sessionZone.getId)))
     }
-  }
 
   /** Whether the partition column's rendered values depend on a zone AND
     * the current session zone disagrees with the table's pinned zone.
     * Only the calendar transforms render wall-clock values; identity,
     * bucket (internal-micros hash) and truncate are zone-free. */
-  private def zoneMismatch(table: String, sp: PartitionSpec,
+  private def zoneMismatch(m: TableMeta, sp: PartitionSpec,
       specZone: ZoneId): Boolean = {
-    val zoneSensitive = schema(table).fields
+    val zoneSensitive = m.schema.fields
       .find(_.name.equalsIgnoreCase(sp.column))
       .exists(f => f.dataType == TimestampType) &&
       Set("hour", "day", "month", "year").contains(sp.transform)
@@ -320,7 +284,8 @@ final class TableStore(val root: HPath, spark: SparkSession) {
   def append(table: String, df: DataFrame,
       timestampMs: Long = System.currentTimeMillis(),
       extraSummary: Map[String, String] = Map.empty): Snapshot = {
-    val moved = writeStaged(table, df)
+    val mv = current(table)
+    val moved = writeStaged(table, df, mv)
     val n = moved.map(_.records).sum
     // Only the DELTA row count goes in: the cumulative recordCount is
     // computed inside the commit lock from the predecessor snapshot, so
@@ -330,8 +295,8 @@ final class TableStore(val root: HPath, spark: SparkSession) {
       n, timestampMs, replaceAll = false,
       summary = Map("added-files" -> moved.size.toString,
         "added-records" -> n.toString) ++ extraSummary,
-      schemaVersionOf = () => commitSchemaVersion(table))
-    maybeAutoCompact(table)
+      schemaVersionOf = stamp(table, Some(mv)))
+    maybeAutoCompact(table, mv.meta)
     snap
   }
 
@@ -348,8 +313,8 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     * is a separate rows-preserved replace snapshot AFTER the append
     * (readers of the append's snapshot are unaffected), and the COW
     * retry makes it safe beside concurrent writers. */
-  private def maybeAutoCompact(table: String): Unit = {
-    val props = tableProperties(table)
+  private def maybeAutoCompact(table: String, m: TableMeta): Unit = {
+    val props = m.properties
     if (!props.get(TableStore.AutoCompactProp)
         .exists(_.equalsIgnoreCase("true"))) return
     val minFiles = props.get(TableStore.AutoCompactMinFilesProp)
@@ -380,7 +345,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
   def stageWap(table: String, df: DataFrame, wapId: String,
       timestampMs: Long = System.currentTimeMillis()): Unit = {
     require(wapId.nonEmpty, "WAP id must be non-empty")
-    val moved = writeStaged(table, df)
+    val moved = writeStaged(table, df, current(table))
     val n = moved.map(_.records).sum
     SnapshotLog.updateWap(fs, tableDir(table)) { entries =>
       require(!entries.exists(_.wapId == wapId),
@@ -402,7 +367,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     val entry = wapEntries(table).find(_.wapId == wapId).getOrElse(
       throw new IllegalArgumentException(
         s"no staged WAP change set '$wapId' on $table"))
-    readFileList(table, dataFilesAsOf(table, None) ++ entry.files)
+    readFileList(table, dataFilesAsOf(table, None) ++ entry.files, meta(table))
   }
 
   /** Publish a staged change set: one atomic append commit of the
@@ -411,7 +376,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
   def publishWap(table: String, wapId: String,
       timestampMs: Long = System.currentTimeMillis()): Snapshot =
     SnapshotLog.publishWap(fs, tableDir(table), wapId, timestampMs,
-      schemaVersionOf = () => commitSchemaVersion(table))
+      schemaVersionOf = stamp(table))
 
   /** Discard a staged change set: the sidecar entry is removed now; the
     * orphaned data files are reclaimed by the next [[vacuum]] (grace
@@ -442,7 +407,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
   def createBranch(table: String, name: String,
       atSnapshotId: Option[Long] = None): Unit = {
     require(name.nonEmpty, "branch name must be non-empty")
-    require(!tags(table).keys.exists(_.equalsIgnoreCase(name)),
+    require(!meta(table).tags.keys.exists(_.equalsIgnoreCase(name)),
       s"cannot create branch '$name': a tag with that name exists on $table")
     val base = atSnapshotId.getOrElse(currentSnapshotId(table).getOrElse(0L))
     if (atSnapshotId.isDefined)
@@ -469,7 +434,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     * branch would need merge semantics fast-forward cannot publish. */
   def appendToBranch(table: String, df: DataFrame, name: String,
       timestampMs: Long = System.currentTimeMillis()): Unit = {
-    val moved = writeStaged(table, df)
+    val moved = writeStaged(table, df, current(table))
     val n = moved.map(_.records).sum
     SnapshotLog.updateBranches(fs, tableDir(table)) { bs =>
       val key = bs.keys.find(_.equalsIgnoreCase(name)).getOrElse(
@@ -485,7 +450,8 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     * their matched files and add rewrites), current schema. This is
     * what `FOR SYSTEM_VERSION AS OF '<branch>'` resolves to. */
   def readBranch(table: String, name: String): DataFrame =
-    readFileList(table, branchFileSet(table, branchNamed(table, name)._2))
+    readFileList(table, branchFileSet(table, branchNamed(table, name)._2),
+      meta(table))
 
   private def branchNamed(table: String, name: String): (String, Branch) = {
     val bs = branches(table)
@@ -519,29 +485,33 @@ final class TableStore(val root: HPath, spark: SparkSession) {
   def deleteOnBranch(table: String, name: String, predicate: Column,
       timestampMs: Long = System.currentTimeMillis()): Unit =
     withCowRetry() {
+      val mv = current(table)
+      val m = mv.meta
       val (entriesAtPlan, cur) = branchCowBase(table, name)
-      val (matched, _) = matchedByPredicate(table, cur, predicate)
+      val (matched, _) = matchedByPredicate(table, cur, predicate, m)
       val replacement =
         if (matched.isEmpty) None
-        else Some(readFileList(table, matched)
+        else Some(readFileList(table, matched, m)
           .filter(not(coalesce(predicate, lit(false)))))
       branchCowRecord(table, name, "delete", matched, replacement,
-        entriesAtPlan, timestampMs)
+        entriesAtPlan, timestampMs, mv)
     }
 
   /** Branch-scoped [[updateWhere]]. */
   def updateOnBranch(table: String, name: String,
       assignments: Seq[(String, Column)], cond: Option[Column],
-      timestampMs: Long = System.currentTimeMillis()): Unit = {
-    val sch = schema(table)
-    assignments.foreach { case (n, _) =>
-      require(sch.fieldNames.exists(_.equalsIgnoreCase(n)),
-        s"unknown column '$n' in UPDATE $table")
-    }
+      timestampMs: Long = System.currentTimeMillis()): Unit =
     withCowRetry() {
+      val mv = current(table)
+      val m = mv.meta
+      val sch = m.schema
+      assignments.foreach { case (n, _) =>
+        require(sch.fieldNames.exists(_.equalsIgnoreCase(n)),
+          s"unknown column '$n' in UPDATE $table")
+      }
       val (entriesAtPlan, cur) = branchCowBase(table, name)
       val (matched, _) = cond match {
-        case Some(p) => matchedByPredicate(table, cur, p)
+        case Some(p) => matchedByPredicate(table, cur, p, m)
         case None    => (cur, Seq.empty[DataFile])
       }
       val replacement =
@@ -549,7 +519,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
         else {
           val matchedPred = coalesce(cond.getOrElse(lit(true)), lit(false))
           val byName = assignments.map { case (n, v) => n.toLowerCase -> v }.toMap
-          Some(readFileList(table, matched).select(sch.fields.toIndexedSeq.map { f =>
+          Some(readFileList(table, matched, m).select(sch.fields.toIndexedSeq.map { f =>
             byName.get(f.name.toLowerCase) match {
               case Some(value) =>
                 when(matchedPred, value.cast(f.dataType))
@@ -559,9 +529,8 @@ final class TableStore(val root: HPath, spark: SparkSession) {
           }: _*))
         }
       branchCowRecord(table, name, "update", matched, replacement,
-        entriesAtPlan, timestampMs)
+        entriesAtPlan, timestampMs, mv)
     }
-  }
 
   /** Branch-scoped [[merge]]. */
   def mergeOnBranch(table: String, name: String, sourceKeys: DataFrame,
@@ -569,13 +538,15 @@ final class TableStore(val root: HPath, spark: SparkSession) {
       timestampMs: Long = System.currentTimeMillis(),
       rewriteAll: Boolean = false): Unit =
     withCowRetry() {
+      val mv = current(table)
+      val m = mv.meta
       val (entriesAtPlan, cur) = branchCowBase(table, name)
       val (matched, _) =
         if (rewriteAll) (cur, Seq.empty[DataFile])
-        else matchedByKeys(table, cur, sourceKeys, keyCols)
-      val replacement = replace(readFileList(table, matched))
+        else matchedByKeys(table, cur, sourceKeys, keyCols, m)
+      val replacement = replace(readFileList(table, matched, m))
       branchCowRecord(table, name, "merge", matched, Some(replacement),
-        entriesAtPlan, timestampMs)
+        entriesAtPlan, timestampMs, mv)
     }
 
   private def branchCowBase(table: String, name: String): (Int, Seq[DataFile]) = {
@@ -590,8 +561,8 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     * caller's bounded retry recompute. */
   private def branchCowRecord(table: String, name: String, operation: String,
       matched: Seq[DataFile], replacement: Option[DataFrame],
-      entriesAtPlan: Int, timestampMs: Long): Unit = {
-    val newFiles = replacement.map(writeStaged(table, _)).getOrElse(Seq.empty)
+      entriesAtPlan: Int, timestampMs: Long, mv: MetaVersion): Unit = {
+    val newFiles = replacement.map(writeStaged(table, _, mv)).getOrElse(Seq.empty)
     val removedRows = TableStore.inParallel(matched)(recordsOf(table, _)).sum
     val delta = newFiles.map(_.records).sum - removedRows
     SnapshotLog.updateBranches(fs, tableDir(table)) { bs =>
@@ -626,7 +597,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     val key = bs.keys.find(_.equalsIgnoreCase(name)).getOrElse(
       throw new IllegalArgumentException(s"no branch '$name' on $table"))
     SnapshotLog.fastForward(fs, tableDir(table), key, timestampMs,
-      schemaVersionOf = () => commitSchemaVersion(table))
+      schemaVersionOf = stamp(table))
   }
 
   /** Highest streaming batch id `sinkId` has committed into this table
@@ -653,14 +624,16 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     // skip inside writeChangeFiles, same as the COW path.
     val prevFiles = SnapshotLog.resolve(fs, tableDir(table), None)
       .map(_.files).getOrElse(Seq.empty)
-    val moved = writeStaged(table, df)
+    val mv = current(table)
+    val moved = writeStaged(table, df, mv)
     val n = moved.map(_.records).sum
-    val cdcSummary = writeChangeFiles(table, prevFiles, moved, extraSummary)
+    val cdcSummary =
+      writeChangeFiles(table, prevFiles, moved, extraSummary, mv.meta)
     SnapshotLog.commit(fs, tableDir(table), operation, moved, n, timestampMs,
       replaceAll = true,
       summary = Map("added-files" -> moved.size.toString,
         "total-records" -> n.toString) ++ extraSummary ++ cdcSummary,
-      schemaVersionOf = () => commitSchemaVersion(table))
+      schemaVersionOf = stamp(table, Some(mv)))
   }
 
   /** Newest snapshot committed at or before `tsMs` (time-travel
@@ -680,10 +653,6 @@ final class TableStore(val root: HPath, spark: SparkSession) {
       .toSet
   }
 
-  /** Distributed Parquet write into a staging dir (partitioned by the
-    * table's spec when one exists), promote the part files into data/,
-    * return their [[DataFile]] entries with footer row counts and
-    * partition values. */
   /** Reject frames whose columns cannot land in the table's schema —
     * BEFORE any bytes are written. An unknown frame column (typo, stale
     * rename, case slip) would otherwise write files the by-name read
@@ -692,8 +661,9 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     * (reads null-fill them — how pre-ADD writers keep working after
     * schema evolution), and a narrower numeric frame type is legal
     * (widened columns accept old-width writers; reads up-cast). */
-  private def validateAppendSchema(table: String, df: DataFrame): Unit = {
-    val sch = schema(table)
+  private def validateAppendSchema(table: String, df: DataFrame,
+      m: TableMeta): Unit = {
+    val sch = m.schema
     val known = sch.fields.map(f => f.name.toLowerCase -> f.dataType).toMap
     df.schema.fields.foreach { f =>
       val dt = known.getOrElse(f.name.toLowerCase,
@@ -722,30 +692,12 @@ final class TableStore(val root: HPath, spark: SparkSession) {
 
   // ---- CHECK constraints -------------------------------------------
 
-  /** Declared CHECK constraints: (name, boolean SQL expression) pairs
-    * from `constraints.json`. SQL CHECK semantics: a row VIOLATES only
-    * when the expression evaluates FALSE — NULL (unknown) passes, like
-    * Delta's CHECK constraints and the SQL standard. */
-  def checkConstraints(table: String): Seq[(String, String)] = {
-    val p = new HPath(tableDir(table), "constraints.json")
-    if (!fs.exists(p)) Seq.empty
-    else {
-      val node = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(readString(p))
-      import scala.jdk.CollectionConverters._
-      node.elements().asScala.map(e =>
-        (e.get("name").asText(), e.get("expr").asText())).toSeq
-    }
-  }
-
-  private def writeConstraints(table: String,
-      cks: Seq[(String, String)]): Unit = {
-    val p = new HPath(tableDir(table), "constraints.json")
-    if (cks.isEmpty) { if (fs.exists(p)) fs.delete(p, false) }
-    else writeString(p, cks.map { case (n, e) =>
-      s"""{"name":${jsonStr(n)},"expr":${jsonStr(e)}}"""
-    }.mkString("[", ",", "]"))
-  }
+  /** Declared CHECK constraints: (name, boolean SQL expression) pairs.
+    * SQL CHECK semantics: a row VIOLATES only when the expression
+    * evaluates FALSE — NULL (unknown) passes, like Delta's CHECK
+    * constraints and the SQL standard. */
+  def checkConstraints(table: String): Seq[(String, String)] =
+    meta(table).constraints.map(c => (c.name, c.expr))
 
   /** Column names a constraint expression references (for the
     * drop/rename guards — a constraint must never silently dangle). */
@@ -767,28 +719,47 @@ final class TableStore(val root: HPath, spark: SparkSession) {
       exprText: String): Unit = {
     require(name.matches("[A-Za-z_]\\w*"),
       s"constraint name '$name' must be an identifier")
-    require(!checkConstraints(table).exists(_._1.equalsIgnoreCase(name)),
-      s"constraint '$name' already exists on $table")
-    val sch = schema(table)
+    def unused(m: TableMeta): Unit =
+      require(!m.constraints.exists(_.name.equalsIgnoreCase(name)),
+        s"constraint '$name' already exists on $table")
+    val m = meta(table)
+    unused(m)
     constraintRefs(exprText).foreach(c =>
-      require(sch.fieldNames.exists(_.equalsIgnoreCase(c)),
+      require(m.schema.fieldNames.exists(_.equalsIgnoreCase(c)),
         s"CHECK constraint '$name' references unknown column '$c' of $table"))
     val cond = org.apache.spark.sql.functions.expr(exprText)
-    val violated = read(table).filter(not(coalesce(cond, lit(true))))
-      .limit(1).collect()
-    require(violated.isEmpty,
-      s"cannot add CHECK constraint '$name' to $table: existing row " +
-        s"violates ($exprText): ${violated.headOption.getOrElse("")}")
-    writeConstraints(table, checkConstraints(table) :+ ((name, exprText)))
+    def validate(files: Seq[DataFile], m: TableMeta): Unit = {
+      val violated = readFileList(table, files, m)
+        .filter(not(coalesce(cond, lit(true)))).limit(1).collect()
+      require(violated.isEmpty,
+        s"cannot add CHECK constraint '$name' to $table: existing row " +
+          s"violates ($exprText): ${violated.headOption.getOrElse("")}")
+    }
+    val base = SnapshotLog.resolve(fs, tableDir(table), None)
+    validate(base.map(_.files).getOrElse(Seq.empty), m)
+    // a commit that landed after the scan was never checked: re-check
+    // the files it added under the lock, so no violating row can end up
+    // under the new constraint (writes guarded without it fail their
+    // commit from here on — see [[stamp]])
+    commitMeta(table) { cur =>
+      unused(cur)
+      val now = SnapshotLog.resolve(fs, tableDir(table), None)
+      if (now.map(_.id) != base.map(_.id)) {
+        val seen = base.map(_.filePaths.toSet).getOrElse(Set.empty[String])
+        validate(now.map(_.files).getOrElse(Seq.empty)
+          .filterNot(f => seen(f.path)), cur)
+      }
+      cur.copy(constraints = cur.constraints :+ CheckConstraint(name, exprText))
+    }
   }
 
   /** `ALTER TABLE … DROP CONSTRAINT name`. */
-  def dropCheckConstraint(table: String, name: String): Unit = {
-    val cks = checkConstraints(table)
-    require(cks.exists(_._1.equalsIgnoreCase(name)),
-      s"no constraint '$name' on $table")
-    writeConstraints(table, cks.filterNot(_._1.equalsIgnoreCase(name)))
-  }
+  def dropCheckConstraint(table: String, name: String): Unit =
+    commitMeta(table) { m =>
+      require(m.constraints.exists(_.name.equalsIgnoreCase(name)),
+        s"no constraint '$name' on $table")
+      m.copy(constraints = m.constraints.filterNot(_.name.equalsIgnoreCase(name)))
+    }
 
   /** Per-row constraint guard woven into the write job: each row
     * evaluates every CHECK inside an `assert_true` filter that always
@@ -797,15 +768,16 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     * Frames legally omitting schema columns evaluate them as NULL (what
     * the table will hold), via typed-null augmentation dropped before
     * the write. */
-  private def constraintGuarded(table: String, df: DataFrame): DataFrame = {
-    val cks = checkConstraints(table)
+  private def constraintGuarded(table: String, df: DataFrame,
+      m: TableMeta): DataFrame = {
+    val cks = m.constraints
     if (cks.isEmpty) return df
     val present = df.schema.fieldNames.map(_.toLowerCase).toSet
-    val aug = schema(table).fields
+    val aug = m.schema.fields
       .filterNot(f => present(f.name.toLowerCase))
       .foldLeft(df)((d, f) =>
         d.withColumn(f.name, lit(null).cast(f.dataType)))
-    val guard = cks.map { case (n, ex) =>
+    val guard = cks.map { case CheckConstraint(n, ex) =>
       coalesce(org.apache.spark.sql.functions.assert_true(
         coalesce(org.apache.spark.sql.functions.expr(ex), lit(true)),
         concat(lit(s"CHECK constraint '$n' violated on $table " +
@@ -816,17 +788,24 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     aug.filter(guard).select(df.columns.toIndexedSeq.map(col): _*)
   }
 
-  private def writeStaged(table: String, df0: DataFrame): Seq[DataFile] = {
-    validateAppendSchema(table, df0)
-    val df = constraintGuarded(table, df0)
+  /** Distributed Parquet write into a staging dir (partitioned by the
+    * table's spec when one exists), promote the part files into data/,
+    * return their [[DataFile]] entries with footer row counts and
+    * partition values. `mv` is the record the write is shaped and
+    * guarded by; a commit of the files passes it to [[stamp]]. */
+  private def writeStaged(table: String, df0: DataFrame,
+      mv: MetaVersion): Seq[DataFile] = {
+    val m = mv.meta
+    validateAppendSchema(table, df0, m)
+    val df = constraintGuarded(table, df0, m)
     val staging = new HPath(tableDir(table), s"stage-${UUID.randomUUID()}")
     // bloom-indexed columns resolve once per write: the schema fields
     // drive both the parquet row-group filters (write options, executor
     // side) and the capped log-level filters ([[attachFileBlooms]])
     val bloomFields: Seq[StructField] = {
-      val bc = bloomColumns(table)
+      val bc = m.bloomColumns
       if (bc.isEmpty) Seq.empty
-      else { val sch = schema(table)
+      else { val sch = m.schema
         bc.flatMap(c => sch.fields.find(_.name.equalsIgnoreCase(c))) }
     }
     // parquet-embedded row-group blooms: built by the executors during
@@ -840,16 +819,13 @@ final class TableStore(val root: HPath, spark: SparkSession) {
         w2.option(s"parquet.bloom.filter.enabled#${f.name}", "true")
           .option(s"parquet.bloom.filter.adaptive.enabled#${f.name}", "true")
       }
-    // ONE read of the partition metadata serves both the clustering
-    // decision and the staging branch (three fs round-trips per write
-    // otherwise, on every append/COW rewrite)
-    val specZone = partitionSpecZone(table)
+    val specZone = partitionSpecZone(m)
     // sorted tables: range-cluster the incoming rows (one shuffle) so
     // each written file covers a tight, disjoint slice of the sort key —
     // the difference between min/max pruning skipping most files and
     // every file overlapping every predicate. Under a partition spec the
     // clustering is within-partition only (partitionBy owns placement).
-    val sort = sortOrder(table)
+    val sort = m.sortOrder
     val clustered =
       if (sort.isEmpty) df
       else if (specZone.isDefined)
@@ -859,11 +835,11 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     // (staged part file, logged partition value, promoted-name builder)
     val parts: Seq[(HPath, Map[String, String], String => String)] = specZone match {
       case Some((sp, specZone)) =>
-        require(!zoneMismatch(table, sp, specZone),
+        require(!zoneMismatch(m, sp, specZone),
           s"cannot write partitioned table $table: session time zone " +
             s"$sessionZone differs from the table's pinned partition zone " +
             s"$specZone (set spark.sql.session.timeZone to ${specZone.getId})")
-        val srcType = schema(table).fields
+        val srcType = m.schema.fields
           .find(_.name.equalsIgnoreCase(sp.column)).map(_.dataType)
           .getOrElse(StringType)
         val isBucket = sp.transform == "bucket"
@@ -887,7 +863,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
             // value before the write — one file per partition per
             // append instead of one per (task, partition). The re-sort
             // restores any sort-order clustering the shuffle broke.
-            if (tableProperties(table).get(TableStore.DistributionModeProp)
+            if (m.properties.get(TableStore.DistributionModeProp)
                 .exists(_.equalsIgnoreCase("hash")))
               tagged.repartition(col(TableStore.PartDirCol))
                 .sortWithinPartitions(
@@ -1113,7 +1089,12 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     * semantics). A created-but-empty table resolves with count 0 and no
     * files. */
   def snapshotMetaAsOf(table: String, asOfMs: Option[Long])
-      : Option[(StructType, Long, () => Seq[DataFile])] = {
+      : Option[(StructType, Long, () => Seq[DataFile])] =
+    snapshotMetaAsOf(table, asOfMs, meta(table))
+
+  /** [[snapshotMetaAsOf]] under an already-loaded record. */
+  private[graft] def snapshotMetaAsOf(table: String, asOfMs: Option[Long],
+      m: TableMeta): Option[(StructType, Long, () => Seq[DataFile])] = {
     if (!exists(table)) return None
     val dir = tableDir(table)
     val all = SnapshotLog.read(fs, dir)
@@ -1124,12 +1105,12 @@ final class TableStore(val root: HPath, spark: SparkSession) {
       else s.recordCount
     asOfMs match {
       case None => all.lastOption match {
-        case None => Some((schema(table), 0L, () => Seq.empty))
-        case Some(s) => Some((schema(table), countOf(s),
+        case None => Some((m.schema, 0L, () => Seq.empty))
+        case Some(s) => Some((m.schema, countOf(s),
           () => SnapshotLog.hydrate(fs, dir, s).files))
       }
       case Some(ts) => all.filter(_.timestampMs <= ts).lastOption.map(s =>
-        (schemaAt(table, s), countOf(s),
+        (schemaAt(table, s, m), countOf(s),
           () => SnapshotLog.hydrate(fs, dir, s).files))
     }
   }
@@ -1141,7 +1122,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     else {
       val dir = tableDir(table)
       SnapshotLog.read(fs, dir).find(_.id == snapshotId).map(s =>
-        (schemaAt(table, s),
+        (schemaAt(table, s, meta(table)),
           if (s.summary.contains(SnapshotLog.EqualityDeletesMarker)) -1L
           else s.recordCount,
           () => SnapshotLog.hydrate(fs, dir, s).files))
@@ -1161,23 +1142,27 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     val snap = SnapshotLog.resolveVersion(fs, tableDir(table), snapshotId)
       .getOrElse(throw new IllegalArgumentException(
         s"table $table has no snapshot id $snapshotId"))
-    (readFileListAs(table, snap.files, schemaAt(table, snap)), snap.files)
+    val m = meta(table)
+    (readFileListAs(table, snap.files, schemaAt(table, snap, m), m), snap.files)
   }
 
   /** [[read]] plus the resolved file list (same stats-scaling seam as
     * [[readVersionWithFiles]], for the AS-OF and latest pins). */
   private[graft] def readWithFiles(table: String,
-      asOfMs: Option[Long]): (DataFrame, Seq[DataFile]) = asOfMs match {
+      asOfMs: Option[Long]): (DataFrame, Seq[DataFile]) = {
+    val m = meta(table)
+    asOfMs match {
     case None =>
       val files = dataFilesAsOf(table, None)
-      (readFileList(table, files), files)
+      (readFileList(table, files, m), files)
     case Some(_) =>
       SnapshotLog.resolve(fs, tableDir(table), asOfMs) match {
         case Some(snap) =>
-          (readFileListAs(table, snap.files, schemaAt(table, snap)),
+          (readFileListAs(table, snap.files, schemaAt(table, snap, m), m),
             snap.files)
-        case None => (readFileList(table, Seq.empty), Seq.empty)
+        case None => (readFileList(table, Seq.empty, m), Seq.empty)
       }
+    }
   }
 
   /** Latest-snapshot read; `asOfMs` = time travel. Snapshot resolution →
@@ -1185,16 +1170,21 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     * files of that version (no directory listing, no stale files).
     */
   def read(table: String, asOfMs: Option[Long] = None): DataFrame =
+    read(table, asOfMs, meta(table))
+
+  /** [[read]] under an already-loaded record. */
+  private[graft] def read(table: String, asOfMs: Option[Long],
+      m: TableMeta): DataFrame =
     asOfMs match {
       // latest read: always the CURRENT schema (evolution applies to all
       // live data, Iceberg's current-read contract)
-      case None => readFileList(table, dataFilesAsOf(table, None))
+      case None => readFileList(table, dataFilesAsOf(table, None), m)
       // time travel: the schema of the resolved snapshot's time
       case Some(_) =>
         SnapshotLog.resolve(fs, tableDir(table), asOfMs) match {
           case Some(snap) =>
-            readFileListAs(table, snap.files, schemaAt(table, snap))
-          case None => readFileList(table, Seq.empty)
+            readFileListAs(table, snap.files, schemaAt(table, snap, m), m)
+          case None => readFileList(table, Seq.empty, m)
         }
     }
 
@@ -1219,8 +1209,9 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     val snap = SnapshotLog.resolveVersion(fs, tableDir(table), snapshotId)
       .getOrElse(throw new IllegalArgumentException(
         s"table $table has no snapshot id $snapshotId"))
-    readFileListAs(table, pruneList(table, snap.files, predicate),
-      schemaAt(table, snap)).filter(predicate)
+    val m = meta(table)
+    readFileListAs(table, pruneList(table, snap.files, predicate, m),
+      schemaAt(table, snap, m), m).filter(predicate)
   }
 
   /** Summary map of snapshot `snapshotId` (raises on unknown ids). */
@@ -1241,26 +1232,29 @@ final class TableStore(val root: HPath, spark: SparkSession) {
   /** [[readPruned]] plus the KEPT file list, so the caller can scale
     * attached statistics to the surviving subset. */
   private[graft] def readPrunedWithFiles(table: String, predicate: Column,
-      asOfMs: Option[Long] = None): (DataFrame, Seq[DataFile]) = asOfMs match {
+      asOfMs: Option[Long] = None): (DataFrame, Seq[DataFile]) = {
+    val m = meta(table)
+    asOfMs match {
     case None =>
-      val kept = prunedFiles(table, predicate, None)
-      (readFileList(table, kept), kept)
+      val kept = pruneList(table, dataFilesAsOf(table, None), predicate, m)
+      (readFileList(table, kept, m), kept)
     // time travel: same snapshot-schema binding as read() — a pruned
     // AS-OF read must not render a different schema than the unpruned one
     case Some(_) =>
       SnapshotLog.resolve(fs, tableDir(table), asOfMs) match {
         case Some(snap) =>
-          val kept = pruneList(table, snap.files, predicate)
-          (readFileListAs(table, kept, schemaAt(table, snap)), kept)
-        case None => (readFileList(table, Seq.empty), Seq.empty)
+          val kept = pruneList(table, snap.files, predicate, m)
+          (readFileListAs(table, kept, schemaAt(table, snap, m), m), kept)
+        case None => (readFileList(table, Seq.empty, m), Seq.empty)
       }
+    }
   }
 
   /** The file list [[readWhere]] would scan (exposed for plan/pruning
     * assertions). */
   def prunedFiles(table: String, predicate: Column,
       asOfMs: Option[Long] = None): Seq[DataFile] =
-    pruneList(table, dataFilesAsOf(table, asOfMs), predicate)
+    pruneList(table, dataFilesAsOf(table, asOfMs), predicate, meta(table))
 
   /** Dynamic file pruning (the join-driven skipping Databricks calls
     * DFP): the files a scan for rows whose `keyCol` is one of `keys`
@@ -1275,28 +1269,35 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     * metadata-sized ([[graft.catalog.GraftCatalog.joinPruned]] enforces
     * a cap and falls back to the plain join beyond it). */
   def filesForKeys(table: String, keyCol: String,
-      keys: Seq[Any]): Seq[DataFile] = {
-    val sch = schema(table)
+      keys: Seq[Any]): Seq[DataFile] = filesForKeys(table, keyCol, keys, meta(table))
+
+  private def filesForKeys(table: String, keyCol: String, keys: Seq[Any],
+      m: TableMeta): Seq[DataFile] = {
+    val sch = m.schema
     require(sch.fieldNames.exists(_.equalsIgnoreCase(keyCol)),
       s"join-prune column '$keyCol' not in schema of $table")
     if (keys.isEmpty) return Seq.empty
     pruneList(table, dataFilesAsOf(table, None),
-      col(keyCol).isin(keys: _*))
+      col(keyCol).isin(keys: _*), m)
   }
 
   /** The relation over exactly [[filesForKeys]]'s files — no row filter
     * (the caller's join keeps only matching rows; pruning is
     * conservative, so the composition is semantics-preserving). */
-  def readForKeys(table: String, keyCol: String, keys: Seq[Any]): DataFrame =
-    readFileList(table, filesForKeys(table, keyCol, keys))
+  def readForKeys(table: String, keyCol: String, keys: Seq[Any]): DataFrame = {
+    val m = meta(table)
+    readFileList(table, filesForKeys(table, keyCol, keys, m), m)
+  }
 
   /** Pruned relation over an ALREADY-FETCHED file list (the SQL-path
     * splice prefetches the list for its prunability check — re-reading
     * the log, and re-hydrating a manifest, on every query would double
     * the hot path's metadata I/O). */
   private[graft] def readPrunedFrom(table: String, files: Seq[DataFile],
-      predicate: Column): DataFrame =
-    readFileList(table, pruneList(table, files, predicate))
+      predicate: Column): DataFrame = {
+    val m = meta(table)
+    readFileList(table, pruneList(table, files, predicate, m), m)
+  }
 
   /** The subset of an already-fetched file list the prune keeps — for
     * callers that need the KEPT entries themselves (the SQL splice
@@ -1304,24 +1305,24 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     * rows/bytes, so a heavily pruned leg is not estimated at full-table
     * size and mis-ranked out of a broadcast). */
   private[graft] def prunedSubset(table: String, files: Seq[DataFile],
-      predicate: Column): Seq[DataFile] =
-    pruneList(table, files, predicate)
+      predicate: Column, m: TableMeta): Seq[DataFile] =
+    pruneList(table, files, predicate, m)
 
   /** Relation over an explicit (already pruned) file list. */
   private[graft] def readFromFileList(table: String,
-      files: Seq[DataFile]): DataFrame =
-    readFileList(table, files)
+      files: Seq[DataFile], m: TableMeta): DataFrame =
+    readFileList(table, files, m)
 
   private def pruneList(table: String, files: Seq[DataFile],
-      predicate: Column): Seq[DataFile] = {
+      predicate: Column, m: TableMeta): Seq[DataFile] = {
     if (files.isEmpty) return files
-    val (hasPart, rangesOf) = fileRangeInfo(table)
-    val bucketKeep = bucketChecker(table)
-    val bloomOf = bloomLookup(table, files)
+    val (hasPart, rangesOf) = fileRangeInfo(m)
+    val bucketKeep = bucketChecker(m)
+    val bloomOf = bloomLookup(m, files)
     if (!hasPart && bucketKeep.isEmpty && files.forall(_.stats.isEmpty) &&
         bloomOf.isEmpty)
       return files
-    val pe = analyzedPredicate(table, predicate)
+    val pe = analyzedPredicate(m, predicate)
     files.filter(f => Pruning.mightMatch(pe, rangesOf(f)) &&
       bucketKeep.forall(_(pe, f)) &&
       bloomOf.forall(lk => BloomFilter.mightMatchBlooms(pe, lk(f))))
@@ -1332,13 +1333,13 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     * so probe names remap the same way [[fileRangeInfo]] remaps stats
     * keys. None when no file in the list carries a filter (the common
     * case skips the remap build entirely). */
-  private def bloomLookup(table: String, files: Seq[DataFile])
+  private def bloomLookup(m: TableMeta, files: Seq[DataFile])
       : Option[DataFile => String => Option[ColBloom]] = {
     if (files.forall(_.blooms.isEmpty)) return None
-    val events = renameEvents(table)
+    val events = m.renameEvents
     val remap: Map[String, String] =
       if (events.isEmpty) Map.empty
-      else schema(table).fields.toSeq.flatMap(f =>
+      else m.schema.fields.toSeq.flatMap(f =>
         aliasesOf(events, f.name).map(a =>
           a.toLowerCase -> f.name.toLowerCase)).toMap
     Some(f => name => f.blooms.collectFirst {
@@ -1350,15 +1351,15 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     * current spec is `bucket(n, col)`. A file's bucket id comes from its
     * logged partition value under the spec-qualified key (old-spec files
     * miss the key → conservative keep). */
-  private def bucketChecker(table: String)
+  private def bucketChecker(m: TableMeta)
       : Option[(org.apache.spark.sql.catalyst.expressions.Expression,
         DataFile) => Boolean] =
-    partitionSpec(table).filter(_.transform == "bucket").map { sp =>
+    m.partition.filter(_.transform == "bucket").map { sp =>
       val n = sp.param.get
-      val srcType = schema(table).fields
+      val srcType = m.schema.fields
         .find(_.name.equalsIgnoreCase(sp.column)).map(_.dataType)
         .getOrElse(StringType)
-      val keys = specPartitionKeys(table, sp)
+      val keys = specPartitionKeys(m, sp)
       (pe, f) =>
         keys.iterator.flatMap(k => f.partition.collectFirst {
           case (pk, v) if pk.equalsIgnoreCase(k) => v
@@ -1370,9 +1371,9 @@ final class TableStore(val root: HPath, spark: SparkSession) {
 
   /** Spec-qualified partition keys a bucket file may be logged under —
     * the current column name plus its historical physical names. */
-  private def specPartitionKeys(table: String,
+  private def specPartitionKeys(m: TableMeta,
       sp: PartitionSpec): Seq[String] = {
-    val events = renameEvents(table)
+    val events = m.renameEvents
     val cols = sp.column +:
       (if (events.isEmpty) Seq.empty else aliasesOf(events, sp.column))
     cols.map(c => sp.copy(column = c).partitionKey)
@@ -1382,14 +1383,14 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     * partition-derived range (when the spec survives the zone check)
     * intersected with the logged footer stats. Returns whether a live
     * partition dimension exists plus the per-file range function. */
-  private def fileRangeInfo(table: String)
+  private def fileRangeInfo(m: TableMeta)
       : (Boolean, DataFile => Map[String, Pruning.ColRange]) = {
     // zone drifted since create: partition values and predicate literals
     // live in different wall-clock frames — the partition dimension is
     // skipped (conservative); stored column stats are zone-free
-    val partInfo = partitionSpecZone(table)
-      .filterNot { case (sp, z) => zoneMismatch(table, sp, z) }
-    val sch = schema(table)
+    val partInfo = partitionSpecZone(m)
+      .filterNot { case (sp, z) => zoneMismatch(m, sp, z) }
+    val sch = m.schema
     val srcType = partInfo.map { case (sp, _) =>
       sch.fields.find(_.name.equalsIgnoreCase(sp.column)).map(_.dataType)
         .getOrElse(StringType)
@@ -1397,7 +1398,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     // Renamed columns: old files logged their stats/partition values
     // under the physical name of their time — remap onto the current
     // name so a predicate on the new name still prunes them.
-    val events = renameEvents(table)
+    val events = m.renameEvents
     val statRemap: Map[String, String] =
       if (events.isEmpty) Map.empty
       else sch.fields.toSeq.flatMap(f =>
@@ -1406,7 +1407,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     // (see PartitionSpec.partitionKey) so a later spec never misreads
     // an old file's value; each historical column name gets its own key
     val partNames: Seq[String] = partInfo.toSeq.flatMap { case (sp, _) =>
-      specPartitionKeys(table, sp)
+      specPartitionKeys(m, sp)
     }
     (partInfo.isDefined, { f =>
       val partRanges: Map[String, Pruning.ColRange] = partInfo match {
@@ -1444,11 +1445,12 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     * classification is exact. */
   private[graft] def exactMatchFiles(table: String, files: Seq[DataFile],
       predicate: Column): Option[Seq[DataFile]] = {
+    val m = meta(table)
     if (files.isEmpty) return Some(Seq.empty)
-    val (_, rangesOf) = fileRangeInfo(table)
-    val bucketKeep = bucketChecker(table)
-    val bloomOf = bloomLookup(table, files)
-    val pe = analyzedPredicate(table, predicate)
+    val (_, rangesOf) = fileRangeInfo(m)
+    val bucketKeep = bucketChecker(m)
+    val bloomOf = bloomLookup(m, files)
+    val pe = analyzedPredicate(m, predicate)
     val out = Seq.newBuilder[DataFile]
     for (f <- files) {
       val ranges = rangesOf(f)
@@ -1468,10 +1470,10 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     * sees real Catalyst comparisons (the Spark 4 Column DSL builds lazy
     * ColumnNodes) with the analyzer's coercion casts in place. Analysis
     * over an empty relation — driver-only, no job. */
-  private def analyzedPredicate(table: String,
+  private def analyzedPredicate(m: TableMeta,
       predicate: Column): org.apache.spark.sql.catalyst.expressions.Expression = {
     import org.apache.spark.sql.catalyst.plans.logical.Filter
-    val df = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema(table))
+    val df = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], m.schema)
     df.filter(predicate).queryExecution.analyzed.collectFirst {
       case f: Filter => f.condition
     }.getOrElse(org.apache.spark.sql.catalyst.expressions.Literal.TrueLiteral)
@@ -1480,7 +1482,8 @@ final class TableStore(val root: HPath, spark: SparkSession) {
   private def sessionZone: ZoneId =
     ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone)
 
-  private def readFileList(table: String, files: Seq[DataFile]): DataFrame = {
+  private def readFileList(table: String, files: Seq[DataFile],
+      m: TableMeta): DataFrame = {
     // bucket(n, key) tables: attach the BucketSpec so the scan reports
     // HashPartitioning(key, n) and same-bucketed joins plan shuffle-free.
     // Engaged only when the WHOLE current file population was written
@@ -1492,7 +1495,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     // scan's key attribute — and the partitioning claim — would be
     // null-poisoned; non-key renames keep it, their coalesce projection
     // sits above the scan and preserves partitioning).
-    val bucketable = partitionSpec(table)
+    val bucketable = m.partition
       .filter(_.transform == "bucket")
       .filter(_ => files.nonEmpty)
       // merge-on-read deletes splice an anti-join above the scan, which
@@ -1502,17 +1505,18 @@ final class TableStore(val root: HPath, spark: SparkSession) {
       .filter(_ => files.forall(_.deletes.isEmpty))
       .filter { sp =>
         val key = sp.partitionKey
-        aliasesOf(renameEvents(table), sp.column).isEmpty &&
+        aliasesOf(m.renameEvents, sp.column).isEmpty &&
           files.forall(f => f.partition.exists(_._1.equalsIgnoreCase(key)) &&
             TableStore.bucketIdFromName(TableStore.fileName(f.path)).isDefined)
       }
     val buckets = bucketable.map(sp => BucketSpec(sp.param.get, Seq(sp.column),
-      sp.column +: sortOrder(table).filterNot(_.equalsIgnoreCase(sp.column))))
-    readFileListAs(table, files, schema(table), buckets)
+      sp.column +: m.sortOrder.filterNot(_.equalsIgnoreCase(sp.column))))
+    readFileListAs(table, files, m.schema, m, buckets)
   }
 
   private def readFileListAs(table: String, files: Seq[DataFile],
       sch: StructType,
+      m: TableMeta,
       buckets: Option[BucketSpec] = None,
       applyDeletes: Boolean = true,
       keepPos: Boolean = false,
@@ -1533,7 +1537,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
       val (dirty, clean) =
         if (applyDeletes) files.partition(_.deletes.nonEmpty)
         else (Seq.empty[DataFile], files)
-      val events = renameEvents(table)
+      val events = m.renameEvents
       val aliased: Seq[(String, Seq[String])] =
         if (events.isEmpty) Seq.empty
         else sch.fields.toSeq.map(f => f.name -> aliasesOf(events, f.name))
@@ -1612,7 +1616,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
               "left_anti")
           }
           if (applyEqDeletes)
-            cur = equalityDeleteJoin(table, cur, eqRefs, sch, "left_anti")
+            cur = equalityDeleteJoin(table, cur, eqRefs, sch, "left_anti", m)
           if (keepPos) cur
           else cur.drop(TableStore.MorFileCol, TableStore.MorPosCol)
         }
@@ -1674,8 +1678,9 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     */
   def readIncremental(table: String, fromId: Long,
       toId: Option[Long] = None): DataFrame = {
+    val m = meta(table)
     val (added, to) = incrementalFiles(table, fromId, toId)
-    readFileListAs(table, added, schemaAt(table, to))
+    readFileListAs(table, added, schemaAt(table, to, m), m)
   }
 
   /** [[readIncremental]] via [[incrementalAppendFiles]]: tolerates
@@ -1687,8 +1692,9 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     * past (the documented append-feed contract). */
   def readIncrementalAppends(table: String, fromId: Long,
       toId: Option[Long] = None): DataFrame = {
+    val m = meta(table)
     val (added, to) = incrementalAppendFiles(table, fromId, toId)
-    readFileListAs(table, added, schemaAt(table, to))
+    readFileListAs(table, added, schemaAt(table, to, m), m)
   }
 
   /** The (added files, target snapshot) a [[readIncremental]] scan covers
@@ -1804,6 +1810,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     * such a table is rejected loudly rather than answered wrongly. */
   def readChanges(table: String, fromId: Long,
       toId: Option[Long] = None): DataFrame = {
+    val m = meta(table)
     val dir = tableDir(table)
     val all = SnapshotLog.read(fs, dir)
     def idx(id: Long, what: String): Int = {
@@ -1820,7 +1827,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     val fromIdx = if (fromId == 0L) -1 else idx(fromId, "fromId")
     require(fromIdx <= toIdx,
       s"fromId $fromId is newer than toId ${all(toIdx).id} on $table")
-    val sch = schemaAt(table, all(toIdx))
+    val sch = schemaAt(table, all(toIdx), m)
     val metaFree = sch.fields.forall(f => !TableStore.hasMapType(f.dataType))
     def tagged(df: DataFrame, ct: String, s: Snapshot): DataFrame =
       df.select(sch.fieldNames.toIndexedSeq.map(col) ++ Seq(
@@ -1842,7 +1849,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
         () // layout-only rewrite: row multiset unchanged by contract
       } else if (s.operation == "append") {
         if (added.nonEmpty)
-          parts += tagged(readFileListAs(table, added, sch), "insert", s)
+          parts += tagged(readFileListAs(table, added, sch, m), "insert", s)
       } else if (s.summary.contains(TableStore.CdcDirKey)) {
         // materialized change files (change feed was enabled at commit
         // time): serve the commit at cost ∝ |changes| — no re-diff of
@@ -1851,7 +1858,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
         val cdc = spark.read.parquet(
           new HPath(tableDir(table), s.summary(TableStore.CdcDirKey)).toString)
         val have = cdc.schema.fieldNames.map(_.toLowerCase).toSet
-        val events = renameEvents(table)
+        val events = m.renameEvents
         val aligned = cdc.select(sch.fields.toIndexedSeq.map { f =>
           val names = (f.name +: aliasesOf(events, f.name))
             .filter(n => have(n.toLowerCase))
@@ -1883,10 +1890,10 @@ final class TableStore(val root: HPath, spark: SparkSession) {
           .filter(d => d.isEquality && rels.contains(d.path)).distinct
         if (refs.nonEmpty && touched.nonEmpty)
           parts += tagged(equalityDeleteJoin(table,
-            readFileListAs(table, touched, sch), refs, sch, "left_semi"),
+            readFileListAs(table, touched, sch, m), refs, sch, "left_semi", m),
             "delete", s)
         if (added.nonEmpty)
-          parts += tagged(readFileListAs(table, added, sch), "insert", s)
+          parts += tagged(readFileListAs(table, added, sch, m), "insert", s)
       } else if (s.summary.contains(TableStore.MorDeletesKey)) {
         // merge-on-read commit without stored change files: its row-level
         // diff is EXACT by construction — deleted rows are the positions
@@ -1902,7 +1909,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
         })
         val pos = spark.read.parquet(
           rels.map(r => new HPath(dir, r).toString): _*)
-        val deleted = readFileListAs(table, touched, sch, keepPos = true)
+        val deleted = readFileListAs(table, touched, sch, m, keepPos = true)
           .join(broadcast(pos),
             col(TableStore.MorFileCol) === col(TableStore.DeleteFileField) &&
               col(TableStore.MorPosCol) === col(TableStore.DeletePosField),
@@ -1910,15 +1917,15 @@ final class TableStore(val root: HPath, spark: SparkSession) {
           .drop(TableStore.MorFileCol, TableStore.MorPosCol)
         parts += tagged(deleted, "delete", s)
         if (added.nonEmpty)
-          parts += tagged(readFileListAs(table, added, sch), "insert", s)
+          parts += tagged(readFileListAs(table, added, sch, m), "insert", s)
       } else if (added.nonEmpty || removed.nonEmpty) {
         require(metaFree,
           s"change feed on $table crosses a row-rewriting snapshot " +
             s"(${s.id}:${s.operation}) and the schema contains a MAP " +
             "column — Spark set operations cannot compare maps, so the " +
             "row-level diff cannot be computed")
-        val addedDf = readFileListAs(table, added, sch)
-        val removedDf = readFileListAs(table, removed, sch)
+        val addedDf = readFileListAs(table, added, sch, m)
+        val removedDf = readFileListAs(table, removed, sch, m)
         // one fused count-and-replicate for BOTH diff directions (see
         // changeDiff) — the former exceptAll pair aggregated twice
         val diff = changeDiff(removedDf, addedDf)
@@ -2009,7 +2016,8 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     * footer-stat walk [[readWhere]] uses, exposed for callers that
     * manage their own file sets. */
   private[graft] def pruneDataFiles(table: String, files: Seq[DataFile],
-      predicate: Column): Seq[DataFile] = pruneList(table, files, predicate)
+      predicate: Column): Seq[DataFile] =
+    pruneList(table, files, predicate, meta(table))
 
   /** `tbl$snapshots` metadata DataFrame (Iceberg's snapshots metadata
     * table): one row per commit with its parent id and summary map —
@@ -2062,10 +2070,10 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     * predicate-pushed scan, so only row groups that might match are read).
     */
   private def matchedByPredicate(table: String, baseFiles: Seq[DataFile],
-      predicate: Column): (Seq[DataFile], Seq[DataFile]) = {
-    val surviving = pruneList(table, baseFiles, predicate) // stage 1: partition prune
+      predicate: Column, m: TableMeta): (Seq[DataFile], Seq[DataFile]) = {
+    val surviving = pruneList(table, baseFiles, predicate, m) // stage 1: partition prune
     val partCarried = baseFiles.diff(surviving)
-    val pe = analyzedPredicate(table, predicate)
+    val pe = analyzedPredicate(m, predicate)
     // footer reads are independent driver metadata ops: parallelize.
     // Skip a file's footer only when every column the predicate touches
     // has LOGGED stats (then stage 1 already applied exactly these
@@ -2085,7 +2093,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
       // predicate would silently miss their rows. Deletes are NOT
       // applied: input_file_name() needs a join-free plan, and a
       // matched-file superset only costs an unneeded rewrite
-      else readFileListAs(table, statCand, schema(table),
+      else readFileListAs(table, statCand, m.schema, m,
           applyDeletes = false)
         .filter(predicate)
         .select(input_file_name()).distinct()
@@ -2113,6 +2121,11 @@ final class TableStore(val root: HPath, spark: SparkSession) {
   private[graft] def keyProbeCandidates(table: String,
       statCand: Seq[DataFile], keys: DataFrame,
       keyCols: Seq[String]): Seq[DataFile] =
+    keyProbeCandidates(table, statCand, keys, keyCols, meta(table))
+
+  private def keyProbeCandidates(table: String,
+      statCand: Seq[DataFile], keys: DataFrame,
+      keyCols: Seq[String], m: TableMeta): Seq[DataFile] =
     if (statCand.isEmpty || keyCols.size != 1) statCand
     else {
       val sample = keys.limit(TableStore.KeyProbeCap + 1).collect()
@@ -2120,13 +2133,13 @@ final class TableStore(val root: HPath, spark: SparkSession) {
       else {
         val vals = sample.map(_.get(0)).filter(_ != null).toSeq
         if (vals.isEmpty) Seq.empty
-        else pruneList(table, statCand, col(keyCols.head).isin(vals: _*))
+        else pruneList(table, statCand, col(keyCols.head).isin(vals: _*), m)
       }
     }
 
   private def matchedByKeys(table: String, baseFiles: Seq[DataFile],
-      updates: DataFrame,
-      keyCols: Seq[String]): (Seq[DataFile], Seq[DataFile]) = {
+      updates: DataFrame, keyCols: Seq[String],
+      m: TableMeta): (Seq[DataFile], Seq[DataFile]) = {
     val files = baseFiles
     if (files.isEmpty) return (Seq.empty, Seq.empty)
     val keys = updates.select(keyCols.map(col): _*).distinct()
@@ -2137,21 +2150,21 @@ final class TableStore(val root: HPath, spark: SparkSession) {
       if (lo == null || hi == null) lit(true)
       else col(k) >= lit(lo) && col(k) <= lit(hi)
     }.reduce(_ && _)
-    val surviving = pruneList(table, files, rangePred)
+    val surviving = pruneList(table, files, rangePred, m)
     val partCarried = files.diff(surviving)
-    val pe = analyzedPredicate(table, rangePred)
+    val pe = analyzedPredicate(m, rangePred)
     val rangeCols = pe.references.map(_.name.toLowerCase).toSet
     val keep = TableStore.inParallel(surviving)(f =>
       rangeCols.subsetOf(f.stats.keySet.map(_.toLowerCase)) ||
         Pruning.mightMatch(pe, Pruning.footerRanges(fs, absPath(table, f.path))))
     val (kept, dropped) = surviving.zip(keep).partition(_._2)
     val (statCand, statCarried) = (kept.map(_._1), dropped.map(_._1))
-    val keyPruned = keyProbeCandidates(table, statCand, keys, keyCols)
+    val keyPruned = keyProbeCandidates(table, statCand, keys, keyCols, m)
     val matchedNames: Set[String] =
       if (keyPruned.isEmpty) Set.empty
       // rename-reconciling, delete-free read, same reasoning as
       // matchedByPredicate
-      else readFileListAs(table, keyPruned, schema(table),
+      else readFileListAs(table, keyPruned, m.schema, m,
           applyDeletes = false)
         .withColumn(TableStore.FileCol, input_file_name())
         .join(keys, keyCols, "left_semi")
@@ -2169,14 +2182,15 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     * throws [[SnapshotLog.CommitConflictException]] instead of silently
     * dropping that writer's changes (Iceberg's conflict contract). The
     * public row-level ops recompute and retry a bounded number of times. */
-  private def cowCommit(table: String, operation: String,
+  private def cowCommit(table: String, mv: MetaVersion, operation: String,
       carried: Seq[DataFile], matched: Seq[DataFile],
       replacement: Option[DataFrame], timestampMs: Long,
       baseId: Long, extraSummary: Map[String, String] = Map.empty): Snapshot = {
-    val newFiles = replacement.map(writeStaged(table, _)).getOrElse(Seq.empty)
+    val newFiles = replacement.map(writeStaged(table, _, mv)).getOrElse(Seq.empty)
     val total = TableStore.inParallel(carried)(recordsOf(table, _)).sum +
       newFiles.map(_.records).sum
-    val cdcSummary = writeChangeFiles(table, matched, newFiles, extraSummary)
+    val cdcSummary =
+      writeChangeFiles(table, matched, newFiles, extraSummary, mv.meta)
     SnapshotLog.commit(fs, tableDir(table), operation, carried ++ newFiles,
       total, timestampMs, replaceAll = true,
       summary = Map(
@@ -2184,7 +2198,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
         "carried-files" -> carried.size.toString,
         "added-files" -> newFiles.size.toString) ++ extraSummary ++ cdcSummary,
       expectedLastId = Some(baseId),
-      schemaVersionOf = () => commitSchemaVersion(table))
+      schemaVersionOf = stamp(table, Some(mv)))
   }
 
   /** BOTH directions of the multiset diff between `removed` and `added`
@@ -2242,17 +2256,17 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     * record) and map-typed schemas (set ops cannot compare maps — the
     * read-side diff rejects those too, so behavior stays consistent). */
   private def writeChangeFiles(table: String, matched: Seq[DataFile],
-      newFiles: Seq[DataFile],
-      extraSummary: Map[String, String]): Map[String, String] = {
-    if (!changeFeedEnabled(table)) return Map.empty
+      newFiles: Seq[DataFile], extraSummary: Map[String, String],
+      m: TableMeta): Map[String, String] = {
+    if (!m.changeFeedEnabled) return Map.empty
     if (extraSummary.get(TableStore.RowsPreservedKey).contains("true"))
       return Map.empty
     if (matched.isEmpty && newFiles.isEmpty) return Map.empty
-    val sch = schema(table)
+    val sch = m.schema
     if (sch.fields.exists(f => TableStore.hasMapType(f.dataType)))
       return Map.empty
-    val removedDf = readFileListAs(table, matched, sch)
-    val addedDf = readFileListAs(table, newFiles, sch)
+    val removedDf = readFileListAs(table, matched, sch, m)
+    val addedDf = readFileListAs(table, newFiles, sch, m)
     // one fused count-and-replicate for BOTH diff directions (see
     // changeDiff) — the former exceptAll pair aggregated twice
     val changes = changeDiff(removedDf, addedDf)
@@ -2268,34 +2282,23 @@ final class TableStore(val root: HPath, spark: SparkSession) {
   }
 
   /** Whether the table materializes change files at COW commits
-    * (`cdc.json`, Delta's `enableChangeDataFeed` analogue). */
-  def changeFeedEnabled(table: String): Boolean =
-    fs.exists(new HPath(tableDir(table), "cdc.json"))
+    * (`change.feed.enabled`, Delta's `enableChangeDataFeed` analogue). */
+  def changeFeedEnabled(table: String): Boolean = meta(table).changeFeedEnabled
 
   // ---- column write-defaults ---------------------------------------
 
-  /** Column write-DEFAULTs (`defaults.json`: column → literal SQL).
+  /** Column write-DEFAULTs (column → literal SQL).
     * Spark/Delta semantics, WRITE defaults only: an INSERT omitting the
     * column stores the default; existing rows and pre-default files are
     * untouched (reads still null-fill history — a read-side
     * initial-default would need Iceberg field ids to tell "written
     * before the default" from "written as null"). */
-  def columnDefaults(table: String): Map[String, String] = {
-    val p = new HPath(tableDir(table), "defaults.json")
-    if (!fs.exists(p)) Map.empty
-    else {
-      val node = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(readString(p))
-      import scala.jdk.CollectionConverters._
-      node.fields().asScala.map(e => e.getKey -> e.getValue.asText()).toMap
-    }
-  }
+  def columnDefaults(table: String): Map[String, String] = meta(table).defaults
 
   def setColumnDefault(table: String, column: String,
       exprText: String): Unit = {
-    val sch = schema(table)
-    val field = sch.fields.find(_.name.equalsIgnoreCase(column)).getOrElse(
-      throw new IllegalArgumentException(s"no column '$column' in $table"))
+    val field = meta(table).schema.fields.find(_.name.equalsIgnoreCase(column))
+      .getOrElse(throw new IllegalArgumentException(s"no column '$column' in $table"))
     // the expression must be constant-foldable and cast-compatible NOW
     // — a typo surfacing at some later INSERT would strand writers
     val probe = spark.range(1).select(
@@ -2304,80 +2307,49 @@ final class TableStore(val root: HPath, spark: SparkSession) {
       .forall(_.references.isEmpty),
       s"DEFAULT for $table.$column must be a constant expression: $exprText")
     probe.collect() // evaluates once; malformed literals fail here
-    writeDefaults(table,
-      columnDefaults(table) + (field.name.toLowerCase -> exprText))
+    commitMeta(table)(m =>
+      m.copy(defaults = m.defaults + (field.name.toLowerCase -> exprText)))
   }
 
-  def dropColumnDefault(table: String, column: String): Unit = {
-    val m = columnDefaults(table)
-    require(m.contains(column.toLowerCase),
-      s"no DEFAULT on $table.$column")
-    writeDefaults(table, m - column.toLowerCase)
-  }
-
-  private def writeDefaults(table: String, m: Map[String, String]): Unit = {
-    val p = new HPath(tableDir(table), "defaults.json")
-    if (m.isEmpty) { if (fs.exists(p)) fs.delete(p, false) }
-    else writeString(p, m.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${jsonStr(k)}:${jsonStr(v)}" }
-      .mkString("{", ",", "}"))
-  }
+  def dropColumnDefault(table: String, column: String): Unit =
+    commitMeta(table) { m =>
+      require(m.defaults.contains(column.toLowerCase),
+        s"no DEFAULT on $table.$column")
+      m.copy(defaults = m.defaults - column.toLowerCase)
+    }
 
   // ---- table properties --------------------------------------------
 
-  /** Free-form table properties (`properties.json`) — Delta/Iceberg's
-    * TBLPROPERTIES map. The RECOGNIZED key `change.feed.enabled`
-    * routes to [[setChangeFeed]] (the Delta
-    * `delta.enableChangeDataFeed` pattern: behavior toggles ARE
-    * properties); everything else stores verbatim for pipelines and
-    * SHOW TBLPROPERTIES. */
-  def tableProperties(table: String): Map[String, String] = {
-    val p = new HPath(tableDir(table), "properties.json")
-    val stored =
-      if (!fs.exists(p)) Map.empty[String, String]
-      else {
-        val node = new com.fasterxml.jackson.databind.ObjectMapper()
-          .readTree(readString(p))
-        import scala.jdk.CollectionConverters._
-        node.fields().asScala.map(e => e.getKey -> e.getValue.asText()).toMap
-      }
-    // the toggle's live state wins over any stale stored copy
-    stored ++ (if (changeFeedEnabled(table))
-      Map(TableStore.ChangeFeedProp -> "true") else Map.empty)
-  }
+  /** Free-form table properties — Delta/Iceberg's TBLPROPERTIES map.
+    * The RECOGNIZED key `change.feed.enabled` toggles the change feed
+    * (the Delta `delta.enableChangeDataFeed` pattern: behavior toggles
+    * ARE properties) and is kept only while enabled; everything else
+    * stores verbatim for pipelines and SHOW TBLPROPERTIES. */
+  def tableProperties(table: String): Map[String, String] = meta(table).properties
 
-  def setTableProperties(table: String, props: Map[String, String]): Unit = {
-    props.get(TableStore.ChangeFeedProp).foreach(v =>
-      setChangeFeed(table, v.equalsIgnoreCase("true")))
-    val merged = (tableProperties(table) ++ props) -
-      TableStore.ChangeFeedProp // lives in cdc.json, not the map
-    writeProps(table, merged)
-  }
+  def setTableProperties(table: String, props: Map[String, String]): Unit =
+    commitMeta(table)(m => m.copy(properties = withChangeFeed(
+      m.properties ++ props - TableStore.ChangeFeedProp,
+      props.get(TableStore.ChangeFeedProp)
+        .map(_.equalsIgnoreCase("true")).getOrElse(m.changeFeedEnabled))))
 
   def unsetTableProperties(table: String, keys: Seq[String]): Unit = {
-    if (keys.exists(_.equalsIgnoreCase(TableStore.ChangeFeedProp)))
-      setChangeFeed(table, enabled = false)
     val lower = keys.map(_.toLowerCase).toSet
-    writeProps(table, (tableProperties(table) - TableStore.ChangeFeedProp)
-      .filterNot { case (k, _) => lower(k.toLowerCase) })
+    commitMeta(table)(m => m.copy(properties =
+      m.properties.filterNot { case (k, _) => lower(k.toLowerCase) }))
   }
 
-  private def writeProps(table: String, m: Map[String, String]): Unit = {
-    val p = new HPath(tableDir(table), "properties.json")
-    if (m.isEmpty) { if (fs.exists(p)) fs.delete(p, false) }
-    else writeString(p, m.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${jsonStr(k)}:${jsonStr(v)}" }
-      .mkString("{", ",", "}"))
-  }
+  private def withChangeFeed(props: Map[String, String],
+      enabled: Boolean): Map[String, String] =
+    if (enabled) props + (TableStore.ChangeFeedProp -> "true")
+    else props - TableStore.ChangeFeedProp
 
   /** Enable/disable the materialized change feed. Commits BEFORE the
     * enable have no stored change files — [[readChanges]] falls back to
     * the file-pair diff for them, so history stays readable either way. */
-  def setChangeFeed(table: String, enabled: Boolean): Unit = {
-    val p = new HPath(tableDir(table), "cdc.json")
-    if (enabled) writeString(p, """{"enabled":true}""")
-    else if (fs.exists(p)) fs.delete(p, false)
-  }
+  def setChangeFeed(table: String, enabled: Boolean): Unit =
+    commitMeta(table)(m =>
+      m.copy(properties = withChangeFeed(m.properties, enabled)))
 
   /** Current snapshot (hydrated) + its id, the base a COW op computes
     * against; id 0 = empty table. */
@@ -2402,7 +2374,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     * schema evolution, time travel — works unchanged, because a rewrite
     * routes through the same bucket-preserving staged write. */
   def bucketSpec(table: String): Option[(String, Int)] =
-    partitionSpec(table).collect {
+    meta(table).partition.collect {
       case sp if sp.transform == "bucket" => (sp.column, sp.param.get)
     }
 
@@ -2424,13 +2396,15 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     if (morMode(table, TableStore.DeleteModeProp))
       morDeleteWhere(table, predicate, timestampMs)
     else withCowRetry() {
+      val mv = current(table)
+      val m = mv.meta
       val (baseId, baseFiles) = cowBase(table)
-      val (matched, carried) = matchedByPredicate(table, baseFiles, predicate)
+      val (matched, carried) = matchedByPredicate(table, baseFiles, predicate, m)
       val replacement =
         if (matched.isEmpty) None
-        else Some(readFileList(table, matched)
+        else Some(readFileList(table, matched, m)
           .filter(not(coalesce(predicate, lit(false)))))
-      cowCommit(table, "delete", carried, matched, replacement,
+      cowCommit(table, mv, "delete", carried, matched, replacement,
         timestampMs, baseId)
     }
 
@@ -2441,7 +2415,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
   def updateWhere(table: String, assignments: Seq[(String, Column)],
       cond: Option[Column],
       timestampMs: Long = System.currentTimeMillis()): Snapshot = {
-    val sch = schema(table)
+    val sch = meta(table).schema
     assignments.foreach { case (n, _) =>
       require(sch.fieldNames.exists(_.equalsIgnoreCase(n)),
         s"unknown column '$n' in UPDATE $table")
@@ -2449,9 +2423,11 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     if (morMode(table, TableStore.UpdateModeProp))
       return morUpdateWhere(table, assignments, cond, timestampMs)
     withCowRetry() {
+      val mv = current(table)
+      val m = mv.meta
       val (baseId, baseFiles) = cowBase(table)
       val (matched, carried) = cond match {
-        case Some(p) => matchedByPredicate(table, baseFiles, p)
+        case Some(p) => matchedByPredicate(table, baseFiles, p, m)
         case None    => (baseFiles, Seq.empty[DataFile])
       }
       val replacement =
@@ -2459,7 +2435,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
         else {
           val matchedPred = coalesce(cond.getOrElse(lit(true)), lit(false))
           val byName = assignments.map { case (n, v) => n.toLowerCase -> v }.toMap
-          Some(readFileList(table, matched).select(sch.fields.toIndexedSeq.map { f =>
+          Some(readFileList(table, matched, m).select(sch.fields.toIndexedSeq.map { f =>
             byName.get(f.name.toLowerCase) match {
               case Some(value) =>
                 when(matchedPred, value.cast(f.dataType))
@@ -2468,7 +2444,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
             }
           }: _*))
         }
-      cowCommit(table, "update", carried, matched, replacement,
+      cowCommit(table, mv, "update", carried, matched, replacement,
         timestampMs, baseId)
     }
   }
@@ -2489,7 +2465,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
   /** Whether `prop` routes this table's row-level writes to
     * merge-on-read. */
   private def morMode(table: String, prop: String): Boolean =
-    tableProperties(table).get(prop)
+    meta(table).properties.get(prop)
       .exists(_.equalsIgnoreCase(TableStore.MergeOnRead))
 
   /** Current-schema read of `files` with the scan's (leaf name, row
@@ -2497,8 +2473,9 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     * and any EXISTING position deletes already subtracted — the frame a
     * MOR write computes doomed positions from (a position never enters
     * two delete files, so the live-count arithmetic stays exact). */
-  private def readWithPos(table: String, files: Seq[DataFile]): DataFrame =
-    readFileListAs(table, files, schema(table), keepPos = true)
+  private def readWithPos(table: String, files: Seq[DataFile],
+      m: TableMeta): DataFrame =
+    readFileListAs(table, files, m.schema, m, keepPos = true)
 
   /** Merge-on-read DELETE: identical row semantics to [[deleteWhere]]
     * (NULL predicate keeps the row), but the commit adds position-delete
@@ -2508,10 +2485,12 @@ final class TableStore(val root: HPath, spark: SparkSession) {
   def morDeleteWhere(table: String, predicate: Column,
       timestampMs: Long = System.currentTimeMillis()): Snapshot =
     withCowRetry() {
+      val mv = current(table)
+      val m = mv.meta
       val (baseId, baseFiles) = cowBase(table)
-      val (matched, carried) = matchedByPredicate(table, baseFiles, predicate)
-      morCommit(table, "delete", baseId, matched, carried,
-        doomed = readWithPos(table, matched)
+      val (matched, carried) = matchedByPredicate(table, baseFiles, predicate, m)
+      morCommit(table, mv, "delete", baseId, matched, carried,
+        doomed = readWithPos(table, matched, m)
           .filter(coalesce(predicate, lit(false))),
         insertRows = None, timestampMs)
     }
@@ -2524,14 +2503,16 @@ final class TableStore(val root: HPath, spark: SparkSession) {
   def morUpdateWhere(table: String, assignments: Seq[(String, Column)],
       cond: Option[Column],
       timestampMs: Long = System.currentTimeMillis()): Snapshot = {
-    val sch = schema(table)
+    val sch = meta(table).schema
     withCowRetry() {
+      val mv = current(table)
+      val m = mv.meta
       val (baseId, baseFiles) = cowBase(table)
       val (matched, carried) = cond match {
-        case Some(p) => matchedByPredicate(table, baseFiles, p)
+        case Some(p) => matchedByPredicate(table, baseFiles, p, m)
         case None    => (baseFiles, Seq.empty[DataFile])
       }
-      val doomed = readWithPos(table, matched)
+      val doomed = readWithPos(table, matched, m)
         .filter(coalesce(cond.getOrElse(lit(true)), lit(false)))
       val byName = assignments.map { case (n, v) => n.toLowerCase -> v }.toMap
       val updatedRows = doomed.select(sch.fields.toIndexedSeq.map { f =>
@@ -2540,7 +2521,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
           case None        => col(f.name)
         }
       }: _*)
-      morCommit(table, "update", baseId, matched, carried, doomed,
+      morCommit(table, mv, "update", baseId, matched, carried, doomed,
         insertRows = if (matched.isEmpty) None else Some(updatedRows),
         timestampMs)
     }
@@ -2564,12 +2545,14 @@ final class TableStore(val root: HPath, spark: SparkSession) {
       timestampMs: Long = System.currentTimeMillis(),
       rewriteAll: Boolean = false): Snapshot =
     withCowRetry() {
+      val mv = current(table)
+      val m = mv.meta
       val (baseId, baseFiles) = cowBase(table)
       val (matched, carried) =
         if (rewriteAll) (baseFiles, Seq.empty[DataFile])
-        else matchedByKeys(table, baseFiles, sourceKeys, keyCols)
-      val (doomed, post) = doomedAndPost(readWithPos(table, matched))
-      morCommit(table, "merge", baseId, matched, carried, doomed,
+        else matchedByKeys(table, baseFiles, sourceKeys, keyCols, m)
+      val (doomed, post) = doomedAndPost(readWithPos(table, matched, m))
+      morCommit(table, mv, "merge", baseId, matched, carried, doomed,
         insertRows = Some(post), timestampMs)
     }
 
@@ -2579,9 +2562,11 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     * data files, serve the change feed, and commit atomically against
     * `baseId`. All driver-side collects are per-matched-file counts —
     * metadata-sized by construction. */
-  private def morCommit(table: String, operation: String, baseId: Long,
+  private def morCommit(table: String, mv: MetaVersion, operation: String,
+      baseId: Long,
       matched: Seq[DataFile], carried: Seq[DataFile], doomed: DataFrame,
       insertRows: Option[DataFrame], timestampMs: Long): Snapshot = {
+    val m = mv.meta
     val dir = tableDir(table)
     val rel = s"${TableStore.DeletesDir}/delete-${UUID.randomUUID()}"
     val abs = new HPath(dir, rel).toString
@@ -2615,7 +2600,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     }
     val newFiles = insertRows
       .map(rows => writeStaged(table,
-        rows.drop(TableStore.MorFileCol, TableStore.MorPosCol)))
+        rows.drop(TableStore.MorFileCol, TableStore.MorPosCol), mv))
       .getOrElse(Seq.empty)
       // an all-arms-delete MERGE stages zero rows — drop the empty part
       // files rather than logging them (vacuum reclaims the bytes)
@@ -2624,17 +2609,17 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     // store it when the feed is on (cost ∝ changes); the diff path can
     // also recover it later from the delete files ([[readChanges]])
     val cdcSummary =
-      if (!changeFeedEnabled(table) || (totalDeleted == 0 && newFiles.isEmpty))
+      if (!m.changeFeedEnabled || (totalDeleted == 0 && newFiles.isEmpty))
         Map.empty[String, String]
       else {
-        val sch = schema(table)
+        val sch = m.schema
         val deleted = doomed
           .drop(TableStore.MorFileCol, TableStore.MorPosCol)
           .withColumn(TableStore.ChangeTypeCol, lit("delete"))
         val changes = newFiles match {
           case Seq() => deleted
           case nf => deleted.unionByName(
-            readFileListAs(table, nf, sch)
+            readFileListAs(table, nf, sch, m)
               .withColumn(TableStore.ChangeTypeCol, lit("insert")))
         }
         val cdcRel = s"cdc/${UUID.randomUUID()}"
@@ -2659,7 +2644,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
         "carried-files" -> carried.size.toString,
         "added-files" -> newFiles.size.toString) ++ morSummary ++ cdcSummary,
       expectedLastId = Some(baseId),
-      schemaVersionOf = () => commitSchemaVersion(table))
+      schemaVersionOf = stamp(table, Some(mv)))
   }
 
   // -------------------------------------------------------------------
@@ -2683,8 +2668,9 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     * equality: a NULL key tuple deletes NULL-key rows, Iceberg's
     * equality-delete contract. Keys broadcast below the MOR threshold. */
   private def equalityDeleteJoin(table: String, df: DataFrame,
-      eqRefs: Seq[DeleteRef], sch: StructType, joinType: String): DataFrame = {
-    val events = renameEvents(table)
+      eqRefs: Seq[DeleteRef], sch: StructType, joinType: String,
+      m: TableMeta): DataFrame = {
+    val events = m.renameEvents
     eqRefs.groupBy(_.equalityCols).toSeq.sortBy(_._1.mkString(","))
       .foldLeft(df) { case (cur, (storedCols, refs)) =>
         val resolved = storedCols.map { ec =>
@@ -2757,7 +2743,9 @@ final class TableStore(val root: HPath, spark: SparkSession) {
       insertRows: Option[DataFrame], timestampMs: Long,
       extraSummary: Map[String, String] = Map.empty): Snapshot =
     withCowRetry() {
-      val sch = schema(table)
+      val mv = current(table)
+      val m = mv.meta
+      val sch = m.schema
       val keyFields: Seq[(String, StructField)] =
         keys0.schema.fieldNames.toSeq.map { n =>
           n -> sch.fields.find(_.name.equalsIgnoreCase(n)).getOrElse(
@@ -2792,7 +2780,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
           val vals = spark.read.parquet(abs).collect().map(_.get(0)).toSeq
           if (vals.contains(null)) baseFiles
           else pruneList(table, baseFiles,
-            col(keyFields.head._2.name).isin(vals: _*))
+            col(keyFields.head._2.name).isin(vals: _*), m)
         } else baseFiles
       if (tupleCount == 0) fs.delete(new HPath(dir, rel), true)
       val ref = DeleteRef(rel, tupleCount,
@@ -2801,7 +2789,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
         f.copy(deletes = f.deletes :+ ref))
       val carried = baseFiles.diff(attachSet)
       val newFiles = insertRows
-        .map(rows => writeStaged(table, rows))
+        .map(rows => writeStaged(table, rows, mv))
         .getOrElse(Seq.empty)
         .filter(_.records != 0L)
       // change feed ON: the exact row-level diff requires locating the
@@ -2810,18 +2798,18 @@ final class TableStore(val root: HPath, spark: SparkSession) {
       // O(batch) write; the batch table_changes() reader can also
       // recover the diff later from the key file alone.
       val cdcSummary =
-        if (!changeFeedEnabled(table) ||
+        if (!m.changeFeedEnabled ||
             (tupleCount == 0 && newFiles.isEmpty))
           Map.empty[String, String]
         else {
           val deleted = equalityDeleteJoin(table,
-            readFileListAs(table, attachSet, sch), Seq(ref), sch,
-            "left_semi")
+            readFileListAs(table, attachSet, sch, m), Seq(ref), sch,
+            "left_semi", m)
             .withColumn(TableStore.ChangeTypeCol, lit("delete"))
           val changes = newFiles match {
             case Seq() => deleted
             case nf => deleted.unionByName(
-              readFileListAs(table, nf, sch)
+              readFileListAs(table, nf, sch, m)
                 .withColumn(TableStore.ChangeTypeCol, lit("insert")))
           }
           val cdcRel = s"cdc/${UUID.randomUUID()}"
@@ -2851,7 +2839,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
           "added-files" -> newFiles.size.toString) ++ eqSummary ++
           cdcSummary ++ extraSummary,
         expectedLastId = Some(baseId),
-        schemaVersionOf = () => commitSchemaVersion(table))
+        schemaVersionOf = stamp(table, Some(mv)))
     }
 
   /** Delta-style SHALLOW CLONE: a new table whose first snapshot
@@ -2885,22 +2873,12 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     }
     val snap = SnapshotLog.hydrate(fs, srcDir, raw)
     fs.mkdirs(dataDir(target))
-    val conf = spark.sessionState.newHadoopConf()
-    val metaNames = Seq("schema.json", "partition.json", "sort.json",
-      "bloom.json", "bucket.json", "cdc.json", "constraints.json",
-      "defaults.json", "drops.json", "identifier.json",
-      "properties.json", "renames.json")
-    for (n <- metaNames; p = new HPath(srcDir, n) if fs.exists(p))
-      org.apache.hadoop.fs.FileUtil.copy(fs, p, fs,
-        new HPath(tableDir(target), n), false, conf)
-    val sdir = new HPath(srcDir, "schemas")
-    if (fs.exists(sdir)) {
-      val tdir = new HPath(tableDir(target), "schemas")
-      fs.mkdirs(tdir)
-      for (st <- fs.listStatus(sdir) if st.isFile)
-        org.apache.hadoop.fs.FileUtil.copy(fs, st.getPath, fs,
-          new HPath(tdir, st.getPath.getName), false, conf)
-    }
+    // every version, so the clone's snapshot stamp resolves; tags, stats
+    // and a view definition describe the source, not the clone
+    current(source) // a legacy source converts first
+    for (n <- TableMeta.versions(fs, srcDir))
+      TableMeta.write(fs, tableDir(target), n, meta(source, n)
+        .copy(tags = Map.empty, stats = None, view = None))
     SnapshotLog.write(fs, tableDir(target), Seq.empty)
     def rebase(rel: String): String =
       if (rel.startsWith("../") || new HPath(rel).isAbsolute) rel
@@ -2914,7 +2892,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
         "source-table" -> source,
         "source-snapshot-id" -> snap.id.toString,
         TableStore.RowsPreservedKey -> "true"),
-      schemaVersionOf = () => commitSchemaVersion(target))
+      schemaVersionOf = stamp(target))
   }
 
   /** `CALL rewrite_position_delete_files` (Iceberg parity): consolidate
@@ -2950,7 +2928,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
             "added-delete-files" -> "0",
             TableStore.RowsPreservedKey -> "true"),
           expectedLastId = Some(baseId),
-          schemaVersionOf = () => commitSchemaVersion(table))
+          schemaVersionOf = stamp(table))
       else {
         val dir = tableDir(table)
         val dirtyNames = dirty.map(f => TableStore.fileName(f.path)).toSet
@@ -2990,7 +2968,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
             TableStore.MorDeletesKey -> s"""["$rel"]""",
             TableStore.RowsPreservedKey -> "true"),
           expectedLastId = Some(baseId),
-          schemaVersionOf = () => commitSchemaVersion(table))
+          schemaVersionOf = stamp(table))
       }
     }
 
@@ -3013,6 +2991,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
   def convertEqualityDeletes(table: String,
       timestampMs: Long = System.currentTimeMillis()): Snapshot =
     withCowRetry() {
+      val m = meta(table)
       val (baseId, baseFiles) = cowBase(table)
       val dirty = baseFiles.filter(_.deletes.exists(_.isEquality))
       if (dirty.isEmpty)
@@ -3023,12 +3002,12 @@ final class TableStore(val root: HPath, spark: SparkSession) {
             "added-delete-files" -> "0",
             TableStore.RowsPreservedKey -> "true"),
           expectedLastId = Some(baseId),
-          schemaVersionOf = () => commitSchemaVersion(table))
+          schemaVersionOf = stamp(table))
       else {
-        val sch = schema(table)
+        val sch = m.schema
         val dir = tableDir(table)
         def positions(applyEq: Boolean): DataFrame =
-          readFileListAs(table, dirty, sch, keepPos = true,
+          readFileListAs(table, dirty, sch, m, keepPos = true,
             applyEqDeletes = applyEq)
             .select(col(TableStore.MorFileCol).as(TableStore.DeleteFileField),
               col(TableStore.MorPosCol).as(TableStore.DeletePosField))
@@ -3069,7 +3048,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
             (if (counts.isEmpty) Map.empty[String, String]
              else Map(TableStore.MorDeletesKey -> s"""["$rel"]""")),
           expectedLastId = Some(baseId),
-          schemaVersionOf = () => commitSchemaVersion(table))
+          schemaVersionOf = stamp(table))
       }
     }
 
@@ -3080,15 +3059,17 @@ final class TableStore(val root: HPath, spark: SparkSession) {
   def upsert(table: String, updates: DataFrame, keyCols: Seq[String],
       timestampMs: Long = System.currentTimeMillis()): Snapshot =
     withCowRetry() {
+      val mv = current(table)
+      val m = mv.meta
       val (baseId, baseFiles) = cowBase(table)
-      val (matched, carried) = matchedByKeys(table, baseFiles, updates, keyCols)
+      val (matched, carried) = matchedByKeys(table, baseFiles, updates, keyCols, m)
       val keys = updates.select(keyCols.map(col): _*).distinct()
-      val aligned = updates.select(schema(table).fieldNames.toIndexedSeq.map(col): _*)
+      val aligned = updates.select(m.schema.fieldNames.toIndexedSeq.map(col): _*)
       val kept =
         if (matched.isEmpty) aligned
-        else readFileList(table, matched).join(keys, keyCols, "left_anti")
+        else readFileList(table, matched, m).join(keys, keyCols, "left_anti")
           .unionByName(aligned)
-      cowCommit(table, "overwrite", carried, matched, Some(kept),
+      cowCommit(table, mv, "overwrite", carried, matched, Some(kept),
         timestampMs, baseId)
     }
 
@@ -3103,12 +3084,14 @@ final class TableStore(val root: HPath, spark: SparkSession) {
       timestampMs: Long = System.currentTimeMillis(),
       rewriteAll: Boolean = false): Snapshot =
     withCowRetry() {
+      val mv = current(table)
+      val m = mv.meta
       val (baseId, baseFiles) = cowBase(table)
       val (matched, carried) =
         if (rewriteAll) (baseFiles, Seq.empty[DataFile])
-        else matchedByKeys(table, baseFiles, sourceKeys, keyCols)
-      val replacement = replace(readFileList(table, matched))
-      cowCommit(table, "merge", carried, matched, Some(replacement),
+        else matchedByKeys(table, baseFiles, sourceKeys, keyCols, m)
+      val replacement = replace(readFileList(table, matched, m))
+      cowCommit(table, mv, "merge", carried, matched, Some(replacement),
         timestampMs, baseId)
     }
 
@@ -3117,9 +3100,10 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     * second pass of subquery DML: the rewrite scan touches matched
     * files alone, never the table. */
   def readNamedFiles(table: String, leafNames: Set[String]): DataFrame = {
+    val m = meta(table)
     val files = dataFilesAsOf(table, None)
       .filter(f => leafNames(TableStore.fileName(f.path)))
-    readFileListAs(table, files, schema(table))
+    readFileListAs(table, files, m.schema, m)
   }
 
   /** COW rewrite whose matched-file set and replacement rows were
@@ -3138,7 +3122,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
       .map(_.files).getOrElse(Seq.empty)
     val (matched, carried) = baseFiles.partition(f =>
       matchedNames(TableStore.fileName(f.path)))
-    cowCommit(table, operation, carried, matched,
+    cowCommit(table, current(table), operation, carried, matched,
       if (matched.isEmpty) None else replacement, timestampMs, expectedLastId)
   }
 
@@ -3148,125 +3132,70 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     * rewritten (Iceberg ADD COLUMN semantics). Snapshots committed
     * BEFORE the ALTER keep their recorded schema version, so time-travel
     * reads render the schema of their time (see [[schemaAt]]). */
-  def addColumns(table: String, cols: StructType): Unit = {
-    val cur = schema(table)
-    cols.fields.foreach(f => require(
-      !cur.fieldNames.exists(_.equalsIgnoreCase(f.name)),
-      s"column '${f.name}' already exists in $table"))
-    // any name in the rename chain or drop tombstones must never come
-    // back: data files may still carry it, and by-name reads
-    // ([[readFileListAs]]) would resurrect the old data
-    cols.fields.foreach(f => require(
-      !renameEvents(table).exists(e =>
-        e._1.equalsIgnoreCase(f.name) || e._2.equalsIgnoreCase(f.name)),
-      s"column name '${f.name}' appears in $table's rename history " +
-        "and cannot be reused"))
-    cols.fields.foreach(f => require(
-      !droppedNames(table).exists(_.equalsIgnoreCase(f.name)),
-      s"column name '${f.name}' was dropped from $table and cannot be " +
-        "reused (old data files still carry it)"))
-    writeSchemaVersion(table, StructType(cur.fields ++ cols.fields))
-  }
+  def addColumns(table: String, cols: StructType): Unit =
+    commitMeta(table) { m =>
+      cols.fields.foreach(f => require(
+        !m.schema.fieldNames.exists(_.equalsIgnoreCase(f.name)),
+        s"column '${f.name}' already exists in $table"))
+      // any name in the rename chain or drop tombstones must never come
+      // back: data files may still carry it, and by-name reads
+      // ([[readFileListAs]]) would resurrect the old data
+      cols.fields.foreach(f => require(
+        !m.renames.exists(e =>
+          e.from.equalsIgnoreCase(f.name) || e.to.equalsIgnoreCase(f.name)),
+        s"column name '${f.name}' appears in $table's rename history " +
+          "and cannot be reused"))
+      cols.fields.foreach(f => require(
+        !m.drops.exists(_.equalsIgnoreCase(f.name)),
+        s"column name '${f.name}' was dropped from $table and cannot be " +
+          "reused (old data files still carry it)"))
+      m.copy(schema = StructType(m.schema.fields ++ cols.fields))
+    }
 
   /** Schema evolution: drop a column from the persisted schema. Data
     * files keep the physical column; reads with the narrowed schema
     * never materialize it (column pruning at the scan). The partition
     * source column cannot be dropped. */
-  def dropColumn(table: String, name: String): Unit = {
-    SnapshotLog.withTableLock(fs, tableDir(table)) {
-      val cur = schema(table)
-      val field = cur.fields.find(_.name.equalsIgnoreCase(name)).getOrElse(
+  def dropColumn(table: String, name: String): Unit =
+    commitMeta(table) { m =>
+      val field = m.schema.fields.find(_.name.equalsIgnoreCase(name)).getOrElse(
         throw new IllegalArgumentException(s"no column '$name' in $table"))
-      partitionSpec(table).foreach(sp => require(
+      m.partition.foreach(sp => require(
         !sp.column.equalsIgnoreCase(name),
         s"cannot drop partition column '$name' of $table"))
-      require(!sortOrder(table).exists(_.equalsIgnoreCase(name)),
+      require(!m.sortOrder.exists(_.equalsIgnoreCase(name)),
         s"cannot drop sort column '$name' of $table (every write clusters by it)")
-      require(!identifierFields(table).exists(_.equalsIgnoreCase(name)),
+      require(!m.identifierFields.exists(_.equalsIgnoreCase(name)),
         s"cannot drop identifier field '$name' of $table — " +
           "SET IDENTIFIER FIELDS without it first")
-      checkConstraints(table).foreach { case (ck, ex) =>
-        require(!constraintRefs(ex).exists(_.equalsIgnoreCase(name)),
+      m.constraints.foreach { ck =>
+        require(!constraintRefs(ck.expr).exists(_.equalsIgnoreCase(name)),
           s"cannot drop column '$name' of $table: CHECK constraint " +
-            s"'$ck' ($ex) references it — drop the constraint first")
+            s"'${ck.name}' (${ck.expr}) references it — drop the constraint first")
       }
-      require(cur.fields.length > 1, s"cannot drop the last column of $table")
-      writeSchemaVersionLocked(table,
-        StructType(cur.fields.filterNot(_.name.equalsIgnoreCase(name))))
-      // tombstone the physical name: data files keep the column, and
-      // by-name reads would RESURRECT its values if the name ever came
-      // back (no Iceberg field ids to disambiguate) — so reuse is
-      // rejected in addColumns/renameColumn
-      writeString(new HPath(tableDir(table), "drops.json"),
-        (droppedNames(table) :+ field.name).map(jsonStr)
-          .mkString("[", ",", "]"))
-      // a dropped column's write-default goes with it
-      val defs = columnDefaults(table)
-      if (defs.contains(name.toLowerCase))
-        writeDefaults(table, defs - name.toLowerCase)
-      // a dropped column's bloom index goes with it — later writes
-      // would otherwise fail the schema lookup for a ghost column
-      val bc = bloomColumns(table)
-      if (bc.exists(_.equalsIgnoreCase(name))) {
-        val rest = bc.filterNot(_.equalsIgnoreCase(name))
-        val p = new HPath(tableDir(table), "bloom.json")
-        if (rest.isEmpty) { if (fs.exists(p)) fs.delete(p, false) }
-        else writeString(p, rest.map(jsonStr).mkString("[", ",", "]"))
-      }
-      // a dropped column's persisted stats entry goes with it — SHOW
-      // COLUMN STATS must not list a ghost column
-      TableStats.dropColumn(this, table, field.name)
+      require(m.schema.fields.length > 1, s"cannot drop the last column of $table")
+      m.copy(
+        schema = StructType(m.schema.fields.filterNot(_.name.equalsIgnoreCase(name))),
+        // tombstone the physical name: data files keep the column, and
+        // by-name reads would RESURRECT its values if the name ever came
+        // back (no Iceberg field ids to disambiguate) — so reuse is
+        // rejected in addColumns/renameColumn
+        drops = m.drops :+ field.name,
+        // a dropped column's write-default, bloom index (later writes
+        // would fail the schema lookup for a ghost column) and persisted
+        // stats entry (SHOW COLUMN STATS must not list it) go with it
+        defaults = m.defaults - name.toLowerCase,
+        bloomColumns = m.bloomColumns.filterNot(_.equalsIgnoreCase(name)),
+        stats = m.stats.map(TableStats.dropColumn(_, field.name)))
     }
-  }
-
-  /** Physical names dropped from this table's schema (tombstones — see
-    * [[dropColumn]]); empty for tables that never dropped a column. */
-  private def droppedNames(table: String): Seq[String] = {
-    val p = new HPath(tableDir(table), "drops.json")
-    if (!fs.exists(p)) Seq.empty
-    else {
-      val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(readString(p))
-      import scala.jdk.CollectionConverters._
-      node.elements().asScala.map(_.asText()).toSeq
-    }
-  }
-
-  /** Record a new current schema: archive it as the next version (and,
-    * for a pre-versioning table, first archive the old schema as v1 so
-    * existing snapshots keep a resolvable version). Runs under the
-    * table's commit lock, so concurrent ALTERs serialize (never sharing
-    * a version number) and a racing commit stamps either the old or the
-    * new version — never a torn one. */
-  private def writeSchemaVersion(table: String, next: StructType): Unit =
-    SnapshotLog.withTableLock(fs, tableDir(table)) {
-      writeSchemaVersionLocked(table, next)
-    }
-
-  // lock-free body, for callers already holding the table lock (the
-  // lock is a file and NOT reentrant)
-  private def writeSchemaVersionLocked(table: String, next: StructType): Unit = {
-    val cur = currentSchemaVersion(table)
-    if (cur == 0) writeString(schemaVersionPath(table, 1), schema(table).json)
-    val v = math.max(cur, 1) + 1
-    writeString(schemaVersionPath(table, v), next.json)
-    writeString(new HPath(tableDir(table), "schema.json"), next.json)
-  }
 
   /** Rename events (oldest first) — the per-table column mapping that
     * stands in for Iceberg's field ids: data files keep their physical
     * column names forever, and reads reconcile a renamed column from
     * ALL its historical names (sound because names are never reused —
     * [[renameColumn]] and [[addColumns]] reject resurrecting one). */
-  private[graft] def renameEvents(table: String): Seq[(String, String)] = {
-    val p = new HPath(tableDir(table), "renames.json")
-    if (!fs.exists(p)) Seq.empty
-    else {
-      val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(readString(p))
-      import scala.jdk.CollectionConverters._
-      node.elements().asScala
-        .map(e => (e.get("from").asText(), e.get("to").asText())).toSeq
-    }
-  }
+  private[graft] def renameEvents(table: String): Seq[(String, String)] =
+    meta(table).renameEvents
 
   /** Historical physical names a render-schema field may carry in data
     * files written before its rename(s) — transitive over the event
@@ -3286,80 +3215,53 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     out.toSeq
   }
 
-  private def jsonStr(s: String): String =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-
   /** `ALTER TABLE … RENAME COLUMN`: pure metadata — a new schema
     * version plus a rename event; no data file is touched. Reads of any
     * snapshot reconcile by the event chain ([[readFileListAs]]), so old
     * files keep answering under the new name, and time travel renders
     * the name OF ITS TIME via the snapshot's schema version. The
-    * partition/sort specs follow the rename (their values stay keyed by
-    * the logical column). */
-  def renameColumn(table: String, from: String, to: String): Unit = {
-    SnapshotLog.withTableLock(fs, tableDir(table)) {
-      val cur = schema(table)
-      val field = cur.fields.find(_.name.equalsIgnoreCase(from)).getOrElse(
+    * partition/sort specs, identifier fields, bloom index, write-default
+    * and persisted stats follow the rename (all keyed by the logical
+    * column), in the same version. */
+  def renameColumn(table: String, from: String, to: String): Unit =
+    commitMeta(table) { m =>
+      val field = m.schema.fields.find(_.name.equalsIgnoreCase(from)).getOrElse(
         throw new IllegalArgumentException(s"no column '$from' in $table"))
-      require(!cur.fields.exists(_.name.equalsIgnoreCase(to)),
+      require(!m.schema.fields.exists(_.name.equalsIgnoreCase(to)),
         s"column '$to' already exists in $table")
-      require(!renameEvents(table).exists(e =>
-        e._1.equalsIgnoreCase(to) || e._2.equalsIgnoreCase(to)),
+      require(!m.renames.exists(e =>
+        e.from.equalsIgnoreCase(to) || e.to.equalsIgnoreCase(to)),
         s"cannot rename to '$to' in $table: the name appears in the " +
           "rename history and data files may still carry it " +
           "(physical names are never reused)")
-      require(!droppedNames(table).exists(_.equalsIgnoreCase(to)),
+      require(!m.drops.exists(_.equalsIgnoreCase(to)),
         s"cannot rename to '$to' in $table: the name was dropped and " +
           "old data files still carry it")
       // constraint expressions store the column NAME as text — a rename
       // would silently dangle them, so it is rejected loudly (drop the
       // constraint, rename, re-add under the new name)
-      checkConstraints(table).foreach { case (ck, ex) =>
-        require(!constraintRefs(ex).exists(_.equalsIgnoreCase(from)),
+      m.constraints.foreach { ck =>
+        require(!constraintRefs(ck.expr).exists(_.equalsIgnoreCase(from)),
           s"cannot rename column '$from' of $table: CHECK constraint " +
-            s"'$ck' ($ex) references it — drop the constraint first")
+            s"'${ck.name}' (${ck.expr}) references it — drop the constraint first")
       }
-      writeSchemaVersionLocked(table, StructType(cur.fields.map(f =>
-        if (f.name.equalsIgnoreCase(from)) f.copy(name = to) else f)))
-      val events = renameEvents(table) :+ ((field.name, to))
-      writeString(new HPath(tableDir(table), "renames.json"),
-        events.map { case (f, t) =>
-          s"""{"from":${jsonStr(f)},"to":${jsonStr(t)}}"""
-        }.mkString("[", ",", "]"))
-      partitionSpecZone(table).foreach { case (sp, zone) =>
-        if (sp.column.equalsIgnoreCase(from))
-          writePartitionJson(table, sp.copy(column = to), zone)
-      }
-      val so = sortOrder(table)
-      if (so.exists(_.equalsIgnoreCase(from)))
-        writeString(new HPath(tableDir(table), "sort.json"),
-          so.map(c => if (c.equalsIgnoreCase(from)) to else c)
-            .map(jsonStr).mkString("[", ",", "]"))
-      // identifier fields hold logical names: follow the rename
-      val idf = identifierFields(table)
-      if (idf.exists(_.equalsIgnoreCase(from)))
-        writeString(new HPath(tableDir(table), "identifier.json"),
-          idf.map(c => if (c.equalsIgnoreCase(from)) to else c)
-            .map(jsonStr).mkString("[", ",", "]"))
-      // the bloom index follows the rename too (bloom.json holds
-      // LOGICAL names; old files' filters stay keyed by their physical
-      // name and the probe remaps — [[bloomLookup]])
-      val bc = bloomColumns(table)
-      if (bc.exists(_.equalsIgnoreCase(from)))
-        writeString(new HPath(tableDir(table), "bloom.json"),
-          bc.map(c => if (c.equalsIgnoreCase(from)) to else c)
-            .map(jsonStr).mkString("[", ",", "]"))
-      // so does the write-default (keyed by logical name)
-      val defs = columnDefaults(table)
-      defs.get(from.toLowerCase).foreach(d =>
-        writeDefaults(table, defs - from.toLowerCase + (to.toLowerCase -> d)))
-      // persisted column stats are keyed by logical name too: follow
-      // the rename so the planner keeps the column's NDV/bounds
-      // (silently orphaning them would degrade every plan over the
-      // renamed column until the next COMPUTE STATS)
-      TableStats.renameColumn(this, table, field.name, to)
+      def follow(cols: Seq[String]): Seq[String] =
+        cols.map(c => if (c.equalsIgnoreCase(from)) to else c)
+      m.copy(
+        schema = StructType(m.schema.fields.map(f =>
+          if (f.name.equalsIgnoreCase(from)) f.copy(name = to) else f)),
+        renames = m.renames :+ Rename(field.name, to),
+        partition = m.partition.map(sp =>
+          if (sp.column.equalsIgnoreCase(from)) sp.copy(column = to) else sp),
+        sortOrder = follow(m.sortOrder),
+        identifierFields = follow(m.identifierFields),
+        // old files' bloom filters stay keyed by their physical name and
+        // the probe remaps ([[bloomLookup]])
+        bloomColumns = follow(m.bloomColumns),
+        defaults = m.defaults.get(from.toLowerCase).fold(m.defaults)(d =>
+          m.defaults - from.toLowerCase + (to.toLowerCase -> d)),
+        stats = m.stats.map(TableStats.renameColumn(_, field.name, to)))
     }
-  }
 
   /** Safe type widening (Iceberg's int→long / float→double evolution):
     * the schema changes, data files keep their narrower physical type,
@@ -3367,39 +3269,40 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     * Logged bounds are already width-normalised ([[Pruning.normalise]]
     * stores every integer family as long), so file skipping and
     * metadata-answered MIN/MAX are unaffected. */
-  def widenColumn(table: String, name: String, to: DataType): Unit = {
-    val cur = schema(table)
-    val field = cur.fields.find(_.name.equalsIgnoreCase(name)).getOrElse(
-      throw new IllegalArgumentException(s"no column '$name' in $table"))
-    val ok = (field.dataType, to) match {
-      case (ByteType | ShortType | IntegerType, LongType) => true
-      case (ByteType | ShortType, IntegerType)            => true
-      case (ByteType, ShortType)                          => true
-      case (FloatType, DoubleType)                        => true
-      case _                                              => false
+  def widenColumn(table: String, name: String, to: DataType): Unit =
+    commitMeta(table) { m =>
+      val field = m.schema.fields.find(_.name.equalsIgnoreCase(name)).getOrElse(
+        throw new IllegalArgumentException(s"no column '$name' in $table"))
+      val ok = (field.dataType, to) match {
+        case (ByteType | ShortType | IntegerType, LongType) => true
+        case (ByteType | ShortType, IntegerType)            => true
+        case (ByteType, ShortType)                          => true
+        case (FloatType, DoubleType)                        => true
+        case _                                              => false
+      }
+      require(ok, s"cannot widen ${field.dataType.simpleString} column " +
+        s"'$name' to ${to.simpleString} (integer-family upcasts and " +
+        "float→double only)")
+      // murmur3(int 5) ≠ murmur3(long 5): widening the bucket column would
+      // silently desync new writes' placement from old files' — reject
+      m.partition.foreach(sp => require(
+        !(sp.transform == "bucket" && sp.column.equalsIgnoreCase(name)),
+        s"cannot widen bucket partition column '$name' of $table " +
+          "(the bucket hash is width-sensitive); drop the spec first"))
+      m.copy(schema = StructType(m.schema.fields.map(f =>
+        if (f.name.equalsIgnoreCase(name)) f.copy(dataType = to) else f)))
     }
-    require(ok, s"cannot widen ${field.dataType.simpleString} column " +
-      s"'$name' to ${to.simpleString} (integer-family upcasts and " +
-      "float→double only)")
-    // murmur3(int 5) ≠ murmur3(long 5): widening the bucket column would
-    // silently desync new writes' placement from old files' — reject
-    partitionSpec(table).foreach(sp => require(
-      !(sp.transform == "bucket" && sp.column.equalsIgnoreCase(name)),
-      s"cannot widen bucket partition column '$name' of $table " +
-        "(the bucket hash is width-sensitive); drop the spec first"))
-    writeSchemaVersion(table, StructType(cur.fields.map(f =>
-      if (f.name.equalsIgnoreCase(name)) f.copy(dataType = to) else f)))
-  }
 
   /** SHOW PARTITIONS source: (value, files, records) per partition of
     * the current snapshot — log metadata, with the footer fallback for
     * legacy entries whose record count is unknown (never reported as 0). */
   def partitionSummary(table: String): Seq[(String, Int, Long)] = {
-    val sp = partitionSpec(table).getOrElse(
+    val m = meta(table)
+    val sp = m.partition.getOrElse(
       throw new IllegalArgumentException(s"table $table is not partitioned"))
     // old files logged their value under the partition column's name of
     // their time — look up through the rename chain
-    val names = sp.column +: aliasesOf(renameEvents(table), sp.column)
+    val names = sp.column +: aliasesOf(m.renameEvents, sp.column)
     dataFilesAsOf(table, None)
       .groupBy(f => names.iterator.flatMap(n =>
         f.partition.collectFirst { case (k, v) if k.equalsIgnoreCase(n) => v })
@@ -3418,12 +3321,13 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     // against an empty rewrite materializes exactly that
     val prevFiles = SnapshotLog.resolve(fs, tableDir(table), None)
       .map(_.files).getOrElse(Seq.empty)
-    val cdcSummary = writeChangeFiles(table, prevFiles, Seq.empty, Map.empty)
+    val cdcSummary =
+      writeChangeFiles(table, prevFiles, Seq.empty, Map.empty, meta(table))
     SnapshotLog.commit(fs, tableDir(table), "delete", Seq.empty, 0L,
       timestampMs, replaceAll = true,
       summary = Map("carried-files" -> "0",
         "added-files" -> "0") ++ cdcSummary,
-      schemaVersionOf = () => commitSchemaVersion(table))
+      schemaVersionOf = stamp(table))
   }
 
   /** `CALL rollback_to_snapshot`: make an earlier snapshot's file list
@@ -3450,12 +3354,12 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     val targetPaths = target.filePaths.toSet
     val cdcSummary = writeChangeFiles(table,
       prevFiles.filterNot(f => targetPaths(f.path)),
-      target.files.filterNot(f => prevPaths(f.path)), Map.empty)
+      target.files.filterNot(f => prevPaths(f.path)), Map.empty, meta(table))
     SnapshotLog.commit(fs, tableDir(table), "rollback", target.files,
       target.recordCount, timestampMs, replaceAll = true,
       summary = Map("rolled-back-to" -> snapshotId.toString,
         "total-records" -> target.recordCount.toString) ++ cdcSummary,
-      schemaVersionOf = () => commitSchemaVersion(table))
+      schemaVersionOf = stamp(table))
   }
 
   /** `CALL rollback_to_timestamp`: rollback to the newest snapshot
@@ -3520,7 +3424,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     * entries (0 for tags). Log metadata only — O(refs) bytes, no data
     * I/O, whatever the table's size. */
   def refsMetadata(table: String): Seq[(String, String, Long, Long)] = {
-    val tg = tags(table).toSeq.sortBy(_._1)
+    val tg = meta(table).tags.toSeq.sortBy(_._1)
       .map { case (n, id) => (n, "TAG", id, 0L) }
     val br = branches(table).toSeq.sortBy(_._1)
       .map { case (n, b) =>
@@ -3547,13 +3451,6 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     }
   }
 
-  /** Version to stamp into a commit (-1 when the table predates schema
-    * versioning, keeping old logs byte-stable). */
-  private def commitSchemaVersion(table: String): Int = {
-    val v = currentSchemaVersion(table)
-    if (v == 0) -1 else v
-  }
-
   /** Bin-pack the UNDER-SIZED files into ~targetBytes files; commit a
     * `replace` snapshot carrying already-compliant files by reference.
     * Old files stay referenced by old snapshots (time travel keeps
@@ -3562,6 +3459,8 @@ final class TableStore(val root: HPath, spark: SparkSession) {
   def compact(table: String, targetBytes: Long = TableStore.CompactTargetBytes,
       includeDirty: Boolean = true): Snapshot =
     withCowRetry() {
+      val mv = current(table)
+      val m = mv.meta
       val (baseId, baseFiles) = cowBase(table)
       // sizes come from the log when captured at promote time; the fs
       // probe is the pre-upgrade fallback only
@@ -3590,12 +3489,12 @@ final class TableStore(val root: HPath, spark: SparkSession) {
           // shuffle — at 100 TB a full shuffle to rewrite a table is
           // the difference between an I/O-bound rewrite and doubling
           // cluster network traffic
-          Some(readFileList(table, small.map(_._1)).coalesce(n))
+          Some(readFileList(table, small.map(_._1), m).coalesce(n))
         }
       // always commits (even a no-op rewrite) so maintenance scripts
       // see their OPTIMIZE in DESCRIBE HISTORY
       val kept = if (replacement.isEmpty) carried ++ small.map(_._1) else carried
-      cowCommit(table, "replace", kept,
+      cowCommit(table, mv, "replace", kept,
         if (replacement.isEmpty) Seq.empty else small.map(_._1),
         replacement, System.currentTimeMillis(), baseId,
         extraSummary = Map(TableStore.RowsPreservedKey -> "true"))
@@ -3613,17 +3512,19 @@ final class TableStore(val root: HPath, spark: SparkSession) {
       targetBytes: Long = 128L * 1024 * 1024,
       timestampMs: Long = System.currentTimeMillis()): Snapshot =
     withCowRetry() {
+      val mv = current(table)
+      val m = mv.meta
       val (baseId, baseFiles) = cowBase(table)
-      val matched = pruneList(table, baseFiles, predicate)
+      val matched = pruneList(table, baseFiles, predicate, m)
       val carried = baseFiles.diff(matched)
       val replacement =
         if (matched.isEmpty) None
         else {
           val bytes = matched.map(f => bytesOf(table, f)).sum
           val n = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-          Some(readFileList(table, matched).coalesce(n))
+          Some(readFileList(table, matched, m).coalesce(n))
         }
-      cowCommit(table, "replace", carried, matched, replacement,
+      cowCommit(table, mv, "replace", carried, matched, replacement,
         timestampMs, baseId,
         extraSummary = Map(TableStore.RowsPreservedKey -> "true"))
     }
@@ -3637,13 +3538,14 @@ final class TableStore(val root: HPath, spark: SparkSession) {
   def sortRewrite(table: String, cols: Seq[String],
       targetBytes: Long = 128L * 1024 * 1024): Snapshot = {
     require(cols.nonEmpty, "sort rewrite needs at least one column")
-    val sch = schema(table)
+    val m = meta(table)
+    val sch = m.schema
     cols.foreach(c => require(sch.fieldNames.exists(_.equalsIgnoreCase(c)),
       s"sort column '$c' not in schema of $table"))
-    require(sortOrder(table).isEmpty,
+    require(m.sortOrder.isEmpty,
       s"cannot sort-rewrite $table: it declares SORTED BY — every write" +
         " already clusters on it")
-    require(!partitionSpec(table).exists(_.transform == "bucket"),
+    require(!m.partition.exists(_.transform == "bucket"),
       s"cannot sort-rewrite $table: bucket hash placement owns its layout")
     val totalBytes = dataFilesAsOf(table, None).map(bytesOf(table, _)).sum
     val numFiles = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
@@ -3671,19 +3573,20 @@ final class TableStore(val root: HPath, spark: SparkSession) {
       targetBytes: Long = 128L * 1024 * 1024): Snapshot = {
     require(zcols.nonEmpty && zcols.size <= ZOrder.MaxCols,
       s"ZORDER BY takes 1..${ZOrder.MaxCols} columns (got ${zcols.size})")
-    val sch = schema(table)
+    val m = meta(table)
+    val sch = m.schema
     val resolved = zcols.map(c => sch.fields
       .find(_.name.equalsIgnoreCase(c))
       .getOrElse(throw new IllegalArgumentException(
         s"z-order column '$c' not in schema of $table")))
     resolved.foreach(f => require(ZOrder.supportedType(f.dataType),
       s"z-order unsupported for ${f.dataType.sql} column '${f.name}' of $table"))
-    val sort = sortOrder(table)
+    val sort = m.sortOrder
     require(sort.isEmpty,
       s"cannot z-order $table: it declares SORTED BY (${sort.mkString(", ")})" +
         " — the persistent sort re-clusters every write and would undo the" +
         " z layout on the next append")
-    require(!partitionSpec(table).exists(_.transform == "bucket"),
+    require(!m.partition.exists(_.transform == "bucket"),
       s"cannot z-order $table: bucket hash placement owns its layout")
     val names = resolved.map(_.name)
     val rowCount = dataFilesAsOf(table, None).map(recordsOf(table, _)).sum
@@ -3795,22 +3698,12 @@ final class TableStore(val root: HPath, spark: SparkSession) {
   def checkpointLog(table: String, olderThanMs: Long): Int =
     SnapshotLog.checkpoint(fs, tableDir(table), olderThanMs)
 
-  /** Named snapshot refs (Iceberg TAGS): name → snapshot id, stored in
-    * `tags.json`. A tag pins history: [[expire]] keeps tagged snapshots
-    * (and their files) regardless of age, and time travel accepts a
-    * quoted tag name wherever a snapshot id is legal
-    * (`FOR SYSTEM_VERSION AS OF 'v1'`). Metadata-only — O(tags) bytes,
-    * independent of table size. */
-  def tags(table: String): Map[String, Long] = {
-    val p = new HPath(tableDir(table), "tags.json")
-    if (!fs.exists(p)) Map.empty
-    else {
-      val node = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(readString(p))
-      import scala.jdk.CollectionConverters._
-      node.fields().asScala.map(e => e.getKey -> e.getValue.asLong()).toMap
-    }
-  }
+  /** Named snapshot refs (Iceberg TAGS): name → snapshot id. A tag pins
+    * history: [[expire]] keeps tagged snapshots (and their files)
+    * regardless of age, and time travel accepts a quoted tag name
+    * wherever a snapshot id is legal (`FOR SYSTEM_VERSION AS OF 'v1'`).
+    * Metadata-only — O(tags) bytes, independent of table size. */
+  def tags(table: String): Map[String, Long] = meta(table).tags
 
   /** Tag a snapshot (default: the current one). Tags are immutable —
     * re-pointing requires an explicit drop first, so a script cannot
@@ -3822,32 +3715,27 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     require(all.nonEmpty, s"table $table has no snapshots to tag")
     val id = snapshotId.getOrElse(all.last.id)
     require(all.exists(_.id == id), s"table $table has no snapshot id $id")
-    val existing = tags(table)
-    require(!existing.contains(name),
-      s"tag '$name' already exists on $table (drop it first to re-point)")
     // tags and branches share the AS-OF ref namespace
     require(!branchExists(table, name),
       s"cannot create tag '$name': a branch with that name exists on $table")
-    writeTags(table, existing + (name -> id))
+    commitMeta(table) { m =>
+      require(!m.tags.contains(name),
+        s"tag '$name' already exists on $table (drop it first to re-point)")
+      m.copy(tags = m.tags + (name -> id))
+    }
   }
 
-  def dropTag(table: String, name: String): Unit = {
-    val existing = tags(table)
-    require(existing.contains(name), s"no tag '$name' on $table")
-    writeTags(table, existing - name)
-  }
+  def dropTag(table: String, name: String): Unit =
+    commitMeta(table) { m =>
+      require(m.tags.contains(name), s"no tag '$name' on $table")
+      m.copy(tags = m.tags - name)
+    }
 
   /** The snapshot id a tag names; loud on unknown tags — a silent
     * fallback to "latest" would turn a typo into a wrong-data read. */
   def resolveTag(table: String, name: String): Long =
     tags(table).getOrElse(name, throw new IllegalArgumentException(
       s"no tag '$name' on $table"))
-
-  private def writeTags(table: String, m: Map[String, Long]): Unit =
-    // names are validated identifiers: no JSON escaping needed
-    writeString(new HPath(tableDir(table), "tags.json"),
-      m.toSeq.sortBy(_._1).map { case (k, v) => s""""$k":$v""" }
-        .mkString("{", ",", "}"))
 
   /** Drop snapshots older than `olderThanMs` (keeping the latest and
     * every TAGGED snapshot) and delete data files no surviving snapshot
@@ -3908,18 +3796,6 @@ final class TableStore(val root: HPath, spark: SparkSession) {
             mapper.writeValueAsString(merged.asJava))))
       }
     SnapshotLog.write(fs, dir, kept2)
-  }
-
-  private def readString(p: HPath): String = {
-    val in = fs.open(p)
-    try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-    finally in.close()
-  }
-
-  private def writeString(p: HPath, s: String): Unit = {
-    val out = fs.create(p, true)
-    try out.write(s.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
   }
 }
 

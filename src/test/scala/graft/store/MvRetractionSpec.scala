@@ -173,15 +173,11 @@ class MvRetractionSpec extends AnyFunSuite {
       sum($"amount".cast("double")).as("__mv_sum_mean"),
       count($"amount").as("__mv_cnt_mean"))
     cat.createTable("mv_old", oldState.schema)
-    val defJson = """{"base":"sales","groupCols":["grp"],"aggs":[""" +
-      """{"func":"count","input":null,"alias":"cnt"},""" +
-      """{"func":"sum","input":"amount","alias":"total"},""" +
-      """{"func":"sum","input":"bonus","alias":"bonus_total"},""" +
-      """{"func":"avg","input":"amount","alias":"mean"}],"filter":null}"""
-    val out = st.metaFs.create(
-      new org.apache.hadoop.fs.Path(st.tableDir("mv_old"), "mv.json"), true)
-    out.write(defJson.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
+    st.commitMeta("mv_old")(_.copy(view = Some(MV.MvDef("sales", Seq("grp"),
+      Seq(MV.AggSpec("count", None, "cnt"),
+        MV.AggSpec("sum", Some("amount"), "total"),
+        MV.AggSpec("sum", Some("bonus"), "bonus_total"),
+        MV.AggSpec("avg", Some("amount"), "mean"))))))
     val baseId = st.currentSnapshotId("sales").get
     st.append("mv_old", oldState, extraSummary =
       Map("mv-base-snapshot" -> baseId.toString, "mv-refresh" -> "create"))

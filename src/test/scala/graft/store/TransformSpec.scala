@@ -204,14 +204,23 @@ class TransformSpec extends AnyFunSuite {
     val df = (1 to 100).map(i => (i % 10, s"p$i")).toDF("k", "v")
     st.create("tl", df.schema, None)
     st.append("tl", df)
-    // plant the retired CLUSTERED BY implementation's metadata file
+    // turn it into a table of the side-file era: the metadata record
+    // goes, the schema files and the retired CLUSTERED BY
+    // implementation's bucket.json come in its place
     val dir = java.nio.file.Paths.get(st.tableDir("tl").toUri)
-    java.nio.file.Files.write(dir.resolve("bucket.json"),
+    org.apache.commons.io.FileUtils.deleteDirectory(
+      dir.resolve(TableMeta.Dir).toFile)
+    Files.createDirectories(dir.resolve("schemas"))
+    for (f <- Seq("schema.json", "schemas/v1.json"))
+      Files.write(dir.resolve(f), df.schema.json.getBytes("UTF-8"))
+    Files.write(dir.resolve("bucket.json"),
       """{"column":"k","buckets":4}""".getBytes("UTF-8"))
-    // opening the table converts it (one-way) to the native spec
+    // opening the table converts it (one-way) to the native spec; the
+    // legacy files are only read
     assert(st.bucketSpec("tl") == Some(("k", 4)))
-    assert(java.nio.file.Files.exists(dir.resolve("partition.json")))
-    assert(!java.nio.file.Files.exists(dir.resolve("bucket.json")))
+    assert(Files.exists(dir.resolve(TableMeta.Dir).resolve("v1.json")))
+    assert(Files.exists(dir.resolve("bucket.json")))
+    assert(st.schema("tl") == df.schema)
     // new appends are tagged under the migrated spec; reads stay correct
     // over the mixed (untagged legacy + tagged new) population
     st.append("tl", df)
