@@ -23,12 +23,18 @@ if [ -n "$sidefiles" ]; then
   echo "[precommit] table side-file name outside LegacyMeta.scala — keep table metadata in TableMeta"
   exit 1
 fi
-# QueryRegistrySpec builds no session: a repeated query name, or a
-# query that lost its oracle, fails here in the same sbt start-up.
-echo "[precommit] sbt Test/compile + QueryRegistrySpec…"
-sbt -batch 'Test/compile' 'testOnly graft.QueryRegistrySpec' >/tmp/precommit.log 2>&1 || {
-  tail -30 /tmp/precommit.log
-  echo "[precommit] COMPILE OR QUERY REGISTRY FAILED — commit blocked"
+# The main sources compile warning-free under -deprecation and
+# -Wunused:imports: -Werror (main compile only) turns any such warning
+# under src/main into a failed compile, which is never cached as done, so
+# every later run reports it again. QueryRegistrySpec builds no session:
+# a repeated query name, or a query that lost its oracle, fails here in
+# the same sbt start-up.
+echo "[precommit] sbt compile (warnings fail) + Test/compile + QueryRegistrySpec…"
+sbt -batch \
+  'set Compile / compile / scalacOptions ++= Seq("-deprecation", "-Wunused:imports", "-Werror")' \
+  'compile' 'Test/compile' 'testOnly graft.QueryRegistrySpec' >/tmp/precommit.log 2>&1 || {
+  grep -E '^\[(warn|error)\] .*src/main/' /tmp/precommit.log || tail -30 /tmp/precommit.log
+  echo "[precommit] COMPILE WARNING, COMPILE OR QUERY REGISTRY FAILED — commit blocked"
   exit 1
 }
 echo "[precommit] OK"

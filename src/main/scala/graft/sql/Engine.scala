@@ -3,7 +3,11 @@ package graft.sql
 import java.sql.{Date, Timestamp}
 import java.time.ZoneOffset
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, GraftSqlShim, Row}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.expressions.{Expression, SubqueryExpression}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, GlobalLimit, LocalLimit, LogicalPlan, Project, SubqueryAlias, UnresolvedWith}
+import org.apache.spark.sql.types.StructType
 
 import graft.catalog.GraftCatalog
 
@@ -17,9 +21,14 @@ import graft.catalog.GraftCatalog
   * (`app-gradio.py:265-266`).
   */
 final class Engine(catalog: GraftCatalog) {
+  import Engine.{AsOf, Current, Ref, SnapshotId, Travel}
 
-  /** Parse-time hook order: cleanup → DDL/DML intercept → time-travel
-    * rewrite → spark.sql. */
+  private val spark = catalog.spark
+
+  /** Hook order: cleanup → DDL/DML intercept → metadata-table and
+    * `table_changes` text rewrites → stored-view expansion → one parse
+    * ([[Binder]]) → metadata-answered aggregate → materialized-view
+    * rewrite (current snapshot only) → scan (the binder's plan walk). */
   // Impala/Spark EXPLAIN parity: render the plan the engine would run —
   // through EVERY tier (time travel, metadata-answered aggregates,
   // materialized-view navigation), so EXPLAIN shows when a query is
@@ -44,53 +53,15 @@ final class Engine(catalog: GraftCatalog) {
     SqlDdl.tryExecute(catalog, raw0).getOrElse {
       val cleaned = rewriteTableChanges(rewriteMetaTables(raw0))
       registerReferencedViews(cleaned, Set.empty)
-      val TimeTravelRewriter.Rewritten(stmt, asOf, version, tag) =
-        TimeTravelRewriter.rewrite(cleaned)
-      (asOf, version, tag) match {
-        case (Some(ms), _, _)  =>
-          metadataAgg(stmt,
-            (db, t) => catalog.store(db).snapshotMetaAsOf(t, Some(ms)))
-            .getOrElse(pinnedQuery(stmt, (db, t, cond) => {
-              val (df, files) = pinnedPruned(db, t, cond, Some(ms))
-              (df, Some(files))
-            }))
-        case (_, Some(id), _)  =>
-          metadataAgg(stmt,
-            (db, t) => catalog.store(db).snapshotMetaVersion(t, id))
-            .getOrElse(pinnedQuery(stmt, (db, t, _) => {
-              val (df, files) = catalog.store(db).readVersionWithFiles(t, id)
-              (df, Some(files))
-            }))
-        case (_, _, Some(tg))  =>
-          // ref → resolved PER TABLE (table-scoped metadata; unknown
-          // names fail loudly in resolveTag, never fall back). A BRANCH
-          // name reads fork-point + branch commits as a unit; the
-          // namespaces are disjoint by construction (create-time check).
-          metadataAgg(stmt,
-            (db, t) =>
-              if (catalog.store(db).branchExists(t, tg)) None
-              else catalog.store(db).snapshotMetaVersion(t,
-                catalog.store(db).resolveTag(t, tg)))
-            .getOrElse(pinnedQuery(stmt,
-              (db, t, _) =>
-                if (catalog.store(db).branchExists(t, tg))
-                  // branch file set = fork point + staged entries; its
-                  // size is not a snapshot-log line item — unscaled
-                  (catalog.store(db).readBranch(t, tg), None)
-                else {
-                  val (df, files) = catalog.store(db).readVersionWithFiles(
-                    t, catalog.store(db).resolveTag(t, tg))
-                  (df, Some(files))
-                }))
-        case _                 =>
-          // metadata-answered first (O(1)), then aggregate navigation
-          // over a FRESH materialized view (O(view)), then the scan —
-          // each tier falls through when its soundness gates fail
-          metadataAgg(stmt,
-            (db, t) => catalog.store(db).snapshotMetaAsOf(t, None))
-            .orElse(MvRewrite.tryRewrite(catalog, stmt))
-            .getOrElse(prunedQuery(stmt))
-      }
+      val b = new Binder(cleaned)
+      // metadata-answered first (O(1)), then — current snapshot only —
+      // aggregate navigation over a FRESH materialized view (O(view)),
+      // then the scan; each tier falls through when its soundness gates
+      // fail
+      metadataAgg(b)
+        .orElse(if (b.travel == Current) MvRewrite.tryRewrite(catalog, b.stmt)
+          else None)
+        .getOrElse(b.query())
     }
 
   // Iceberg-style METADATA TABLES, SQL-composable: `` `t$files` ``,
@@ -112,7 +83,6 @@ final class Engine(catalog: GraftCatalog) {
       val (cat, t) = SqlDdl.resolved(catalog, m.group(1))
       require(cat.store().exists(t), s"table not found: ${m.group(1)}")
       val kind = m.group(2).toLowerCase
-      val spark = catalog.spark
       import spark.implicits._
       val df = kind match {
         case "files" => cat.store().filesMetadata(t)
@@ -237,28 +207,8 @@ final class Engine(catalog: GraftCatalog) {
         .matcher(stmt).find()
       if (mentioned && !visiting(name.toLowerCase)) {
         registerReferencedViews(defn, visiting + name.toLowerCase)
-        val TimeTravelRewriter.Rewritten(body, asOf, version, tag) =
-          TimeTravelRewriter.rewrite(defn)
-        val df = (asOf, version, tag) match {
-          case (None, None, None) => prunedQuery(body)
-          case (Some(ms), _, _) =>
-            pinnedQuery(body, (db, t, cond) => {
-              val (d, files) = pinnedPruned(db, t, cond, Some(ms))
-              (d, Some(files))
-            })
-          case (_, Some(id), _) =>
-            pinnedQuery(body, (db, t, _) => {
-              val (d, files) = catalog.store(db).readVersionWithFiles(t, id)
-              (d, Some(files))
-            })
-          case (_, _, Some(tg)) =>
-            pinnedQuery(body, (db, t, _) => {
-              val (d, files) = catalog.store(db).readVersionWithFiles(t,
-                catalog.store(db).resolveTag(t, tg))
-              (d, Some(files))
-            })
-        }
-        df.createOrReplaceTempView(name)
+        // the body travels like a statement: same binder, same dispatch
+        new Binder(defn).query().createOrReplaceTempView(name)
       }
     }
   }
@@ -283,17 +233,10 @@ final class Engine(catalog: GraftCatalog) {
     * an empty relation with the snapshot's schema (driver-only, no job) —
     * the answer is byte-identical to what the scan would render.
     */
-  private def metadataAgg(stmt: String,
-      metaFor: (String, String) => Option[(org.apache.spark.sql.types.StructType,
-        Long, () => Seq[graft.store.DataFile])]): Option[DataFrame] = {
-    import org.apache.spark.sql.GraftSqlShim
-    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAlias, UnresolvedAttribute, UnresolvedFunction, UnresolvedRelation, UnresolvedStar}
-    import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, Literal}
-    import org.apache.spark.sql.catalyst.plans.logical._
+  private def metadataAgg(b: Binder): Option[DataFrame] = {
+    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAlias, UnresolvedAttribute, UnresolvedFunction, UnresolvedStar}
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Literal}
     import org.apache.spark.sql.types._
-    val spark = catalog.spark
-    val caseSensitive = spark.sessionState.conf.caseSensitiveAnalysis
-    def norm(s: String): String = if (caseSensitive) s else s.toLowerCase
 
     def unwrapLimit(p: LogicalPlan): LogicalPlan = p match {
       case GlobalLimit(Literal(n: Int, _), LocalLimit(_, child)) if n >= 1 => child
@@ -350,25 +293,13 @@ final class Engine(catalog: GraftCatalog) {
       case other => sys.error(s"unreachable stats type $other")
     }
 
-    // a bare name (current database), or one qualified with ANY existing
-    // database — the catalog is keyed by (db, table), per the reference's
-    // own multi-database layout (`iceberg-PC.py:97`)
     def tableRef(u: UnresolvedRelation): Option[(String, String)] =
-      u.multipartIdentifier match {
-        case Seq(one) =>
-          catalog.listTables().find(t => norm(t) == norm(one))
-            .map(catalog.database -> _)
-        case Seq(db, tbl) =>
-          catalog.listDatabases().find(d => norm(d) == norm(db))
-            .flatMap(realDb => catalog.listTablesIn(realDb)
-              .find(t => norm(t) == norm(tbl)).map(realDb -> _))
-        case _ => None
-      }
+      b.resolve(u.multipartIdentifier, Set.empty)
 
     def answer(node: LogicalPlan, items: Seq[Expression],
         u: UnresolvedRelation, cond: Option[Expression]): Option[DataFrame] =
       tableRef(u)
-        .flatMap { case (db, t) => metaFor(db, t).map((db, t, _)) }
+        .flatMap { case (db, t) => b.meta(db, t).map((db, t, _)) }
         .flatMap { case (db, t, (sch, recordCount, filesThunk)) =>
           // files hydrate at most once, and never for an unfiltered COUNT
           lazy val files = filesThunk()
@@ -402,7 +333,7 @@ final class Engine(catalog: GraftCatalog) {
               }
               case MinMax(isMin, colName) =>
                 for {
-                  field <- sch.fields.find(f => norm(f.name) == norm(colName))
+                  field <- sch.fields.find(f => b.norm(f.name) == b.norm(colName))
                   if statsTypes.contains(field.dataType)
                   inc <- included
                   folded <- {
@@ -435,7 +366,7 @@ final class Engine(catalog: GraftCatalog) {
           }
         }
 
-    unwrapLimit(GraftSqlShim.parsePlan(spark, stmt)) match {
+    unwrapLimit(b.plan) match {
       // the parser emits Project(aggs, rel); GROUP-BY-less aggregation
       // only becomes Aggregate during analysis (GlobalAggregates) —
       // match both for robustness. A Filter between the projection and
@@ -497,36 +428,26 @@ final class Engine(catalog: GraftCatalog) {
     Some(out.result())
   }
 
-  /** Time-travel read of `t`, partition-pruned by the enclosing filter
-    * when one exists and the table is partitioned — AS-OF queries over a
-    * day-partitioned table scan the day, not the snapshot. Any analysis
-    * hiccup falls back to the unpruned pinned read (the filter stays on
-    * top, so pruning can only drop provably-unmatchable files). Returns
-    * the scanned file list too, so the pin attaches statistics scaled
-    * to the snapshot's (or the pruned subset's) OWN logged rows/bytes —
-    * a 10×-smaller historical version, or a one-partition leg, must not
-    * plan at the current full-table size. */
-  private def pinnedPruned(db: String, t: String,
-      cond: Option[org.apache.spark.sql.catalyst.expressions.Expression],
-      asOfMs: Option[Long]): (DataFrame, Seq[graft.store.DataFile]) =
-    cond.filter(_ => catalog.store(db).partitionSpec(t).isDefined)
-      .flatMap(c => scala.util.Try(catalog.store(db).readPrunedWithFiles(t,
-        org.apache.spark.sql.GraftSqlShim.column(c), asOfMs)).toOption)
-      .getOrElse(catalog.store(db).readWithFiles(t, asOfMs))
-
-  /** Rule 3 applies the clause to *every* table (`app-gradio.py:138`).
-    * The statement is PARSED and each [[UnresolvedRelation]] naming a
-    * catalog table is replaced by the pinned snapshot's (already
-    * analyzed) plan under a [[SubqueryAlias]] carrying the original
-    * name — so `tbl.col` references and output column names resolve
-    * unchanged, and a column or alias that merely *spells* like a table
-    * name is never touched (the failure mode of the previous text-level
-    * rewrite). No temp views, no shared session state: two concurrent
-    * AS-OF queries at different snapshots cannot observe each other.
+  /** One statement's relation binder. The travel clause is stripped and
+    * the rest parsed ONCE; [[metadataAgg]] and [[query]] share the plan,
+    * one table-name resolver and one travel dispatch ([[meta]] for
+    * snapshot metadata, `read` for a pinned relation).
+    *
+    * [[query]] walks the parsed plan and replaces each
+    * [[UnresolvedRelation]] naming a catalog table by an analyzed plan
+    * under a [[SubqueryAlias]] carrying the original name — so `tbl.col`
+    * references and output column names resolve unchanged, and a column
+    * or alias that merely *spells* like a table name is never touched.
+    * No temp views, no shared session state: two concurrent AS-OF
+    * queries at different snapshots cannot observe each other. On the
+    * current snapshot only a filter-pruned relation (a `WHERE` directly
+    * on a table — SQL users get the same file pruning as
+    * [[GraftCatalog.tableWhere]]) and a foreign-database relation are
+    * spliced; every other name resolves through its temp view as usual.
     *
     * The walk is a hand-rolled recursion rather than `transformUp` for
     * three reasons: (a) relations inside expression subqueries
-    * (`IN (SELECT …)`, `EXISTS`, scalar subqueries) must be pinned too,
+    * (`IN (SELECT …)`, `EXISTS`, scalar subqueries) must be bound too,
     * so every node's [[SubqueryExpression]]s recurse; (b) a CTE name
     * shadows the base table for references *after* its definition
     * (`WITH items AS (…) SELECT … FROM items` reads the CTE), while the
@@ -535,154 +456,122 @@ final class Engine(catalog: GraftCatalog) {
     * (`db.items` after `USE db`, the reference's own style,
     * `append_iceberg.py:176`) or any other existing database (the
     * reference keeps its PC schema in a separate db, `iceberg-PC.py:97`)
-    * — while a name under a database that does not exist fails fast
-    * instead of silently reading the current snapshot while the rest of
-    * the query is pinned.
+    * — while under time travel a name under a database that does not
+    * exist fails fast instead of silently reading the current snapshot
+    * while the rest of the query is pinned.
     */
-  private def pinnedQuery(stmt: String,
-      pinnedRead: (String, String,
-        Option[org.apache.spark.sql.catalyst.expressions.Expression])
-        => (DataFrame, Option[Seq[graft.store.DataFile]]))
-      : DataFrame = {
-    import org.apache.spark.sql.GraftSqlShim
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
-    import org.apache.spark.sql.catalyst.expressions.{Expression, SubqueryExpression}
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, SubqueryAlias, UnresolvedWith}
-    val spark = catalog.spark
+  private final class Binder(text: String) {
+    private val rw = TimeTravelRewriter.rewrite(text)
+    val stmt: String = rw.sql
+    val travel: Travel = (rw.asOfMs, rw.versionId, rw.versionTag) match {
+      case (Some(ms), _, _) => AsOf(ms)
+      case (_, Some(id), _) => SnapshotId(id)
+      case (_, _, Some(r))  => Ref(r)
+      case _                => Current
+    }
+    val plan: LogicalPlan = GraftSqlShim.parsePlan(spark, stmt)
+
     // Name matching/shadowing follows the session's resolution mode:
     // with spark.sql.caseSensitive=true a CTE named ITEMS must NOT
     // shadow table items (and ITEMS itself is not a catalog reference).
-    val caseSensitive = spark.sessionState.conf.caseSensitiveAnalysis
+    private val caseSensitive = spark.sessionState.conf.caseSensitiveAnalysis
     def norm(s: String): String = if (caseSensitive) s else s.toLowerCase
-    val byName = catalog.listTables().map(t => norm(t) -> t).toMap
-    val pinned = scala.collection.mutable.HashMap.empty[String, LogicalPlan]
+    // listed on first use: an unfiltered bare name on the current
+    // snapshot never needs it
+    private lazy val byName = catalog.listTables().map(t => norm(t) -> t).toMap
 
-    def go(plan: LogicalPlan, shadowed: Set[String]): LogicalPlan = plan match {
-      case w: UnresolvedWith =>
-        // Non-recursive WITH: each definition sees only the CTEs defined
-        // before it; the main body sees all of them. A RECURSIVE CTE's
-        // own name is in scope inside its definition — the self-reference
-        // must be left for Spark's recursion resolution, not rewired to a
-        // catalog table that happens to share the name.
-        var inScope = shadowed
-        val defs = w.cteRelations.map { case (name, defn, colAliases) =>
-          val defScope = if (w.allowRecursion) inScope + norm(name) else inScope
-          val r = go(defn, defScope).asInstanceOf[SubqueryAlias]
-          inScope += norm(name)
-          (name, r, colAliases)
-        }
-        w.copy(child = go(w.child, inScope), cteRelations = defs)
-      case f: Filter =>
-        // a filter directly over a relation lets the pinned read prune
-        // partitioned tables by the condition
-        val child = f.child match {
-          case u: UnresolvedRelation => pinRel(u, shadowed, Some(f.condition))
-          case sa @ SubqueryAlias(_, u: UnresolvedRelation) =>
-            sa.copy(child = pinRel(u, shadowed, Some(f.condition)))
-          case other => go(other, shadowed)
-        }
-        f.copy(child = child).transformExpressionsUp {
-          case se: SubqueryExpression => se.withNewPlan(go(se.plan, shadowed))
-        }
-      case u: UnresolvedRelation => pinRel(u, shadowed, None)
-      case other =>
-        other.mapChildren(go(_, shadowed)).transformExpressionsUp {
-          case se: SubqueryExpression => se.withNewPlan(go(se.plan, shadowed))
-        }
+    /** The catalog table a relation names: a bare unshadowed name in the
+      * current database, or a name qualified with ANY existing database
+      * (CTE names are single-part, so a qualified reference is never
+      * shadowed). */
+    def resolve(parts: Seq[String],
+        shadowed: Set[String]): Option[(String, String)] = parts match {
+      case Seq(one) if !shadowed(norm(one)) =>
+        byName.get(norm(one)).map(catalog.database -> _)
+      case Seq(db, tbl) =>
+        catalog.listDatabases().find(d => norm(d) == norm(db))
+          .flatMap(realDb => catalog.listTablesIn(realDb)
+            .find(t => norm(t) == norm(tbl)).map(realDb -> _))
+      case _ => None
     }
 
-    def pinRel(u: UnresolvedRelation, shadowed: Set[String],
-        cond: Option[Expression]): LogicalPlan = {
-      // only the UNPRUNED pin is cached — a condition-pruned plan is a
-      // file subset and must never serve another reference. Pinned
-      // relations carry the table's catalog statistics SCALED to the
-      // pinned snapshot's (or pruned subset's) own logged rows/bytes —
-      // NDV/bounds still ride the latest COMPUTE STATS pass (the best
-      // available estimate for a historical version, and stats only
-      // shape plans, never rows; bounds re-validate per leaf against
-      // the pinned relation's historical attribute types).
-      def withStats(db: String, t: String,
-          r: (DataFrame, Option[Seq[graft.store.DataFile]])): LogicalPlan =
-        catalog.forDatabase(db).withTableStats(t, r._1, prunedTo = r._2)
+    /** Schema, record count and (lazily) live files of the snapshot this
+      * statement reads of `db.t`; None = not metadata-answerable. */
+    def meta(db: String, t: String): Option[(StructType, Long,
+        () => Seq[graft.store.DataFile])] = {
+      val st = catalog.store(db)
+      travel match {
+        case Current        => st.snapshotMetaAsOf(t, None)
+        case AsOf(ms)       => st.snapshotMetaAsOf(t, Some(ms))
+        case SnapshotId(id) => st.snapshotMetaVersion(t, id)
+        case Ref(r) =>
+          if (st.branchExists(t, r)) None
+          else st.snapshotMetaVersion(t, st.resolveTag(t, r))
+      }
+    }
+
+    /** The pinned read of `db.t`, with the file list it scans (None =
+      * unscaled). An AS-OF read is partition-pruned by the enclosing
+      * filter when one exists and the table is partitioned — AS-OF
+      * queries over a day-partitioned table scan the day, not the
+      * snapshot. Any analysis hiccup falls back to the unpruned pinned
+      * read (the filter stays on top, so pruning can only drop
+      * provably-unmatchable files). */
+    private def read(db: String, t: String, cond: Option[Expression])
+        : (DataFrame, Option[Seq[graft.store.DataFile]]) = {
+      val st = catalog.store(db)
+      travel match {
+        case AsOf(ms) =>
+          val (df, files) = cond.filter(_ => st.partitionSpec(t).isDefined)
+            .flatMap(c => scala.util.Try(st.readPrunedWithFiles(t,
+              GraftSqlShim.column(c), Some(ms))).toOption)
+            .getOrElse(st.readWithFiles(t, Some(ms)))
+          (df, Some(files))
+        case SnapshotId(id) =>
+          val (df, files) = st.readVersionWithFiles(t, id)
+          (df, Some(files))
+        // branch file set = fork point + staged entries; its size is not
+        // a snapshot-log line item — unscaled
+        case Ref(r) if st.branchExists(t, r) => (st.readBranch(t, r), None)
+        case Ref(r) =>
+          val (df, files) = st.readVersionWithFiles(t, st.resolveTag(t, r))
+          (df, Some(files))
+        case Current => sys.error("the current snapshot binds no pinned read")
+      }
+    }
+
+    // only the UNPRUNED pin is cached — a condition-pruned plan is a file
+    // subset and must never serve another reference. Pinned relations
+    // carry the table's catalog statistics SCALED to the pinned
+    // snapshot's (or pruned subset's) own logged rows/bytes, so a
+    // 10×-smaller historical version, or a one-partition leg, does not
+    // plan at the current full-table size — NDV/bounds still ride the
+    // latest COMPUTE STATS pass (the best available estimate for a
+    // historical version, and stats only shape plans, never rows; bounds
+    // re-validate per leaf against the pinned relation's historical
+    // attribute types).
+    private val pinned = scala.collection.mutable.HashMap.empty[String, LogicalPlan]
+    private def pin(db: String, t: String, cond: Option[Expression]): LogicalPlan = {
+      def withStats = {
+        val (df, files) = read(db, t, cond)
+        catalog.forDatabase(db).withTableStats(t, df, prunedTo = files)
           .queryExecution.analyzed
-      def pin(db: String, t: String): LogicalPlan = cond match {
-        case Some(c) => withStats(db, t, pinnedRead(db, t, Some(c)))
-        case None => pinned.getOrElseUpdate(s"$db.$t",
-          withStats(db, t, pinnedRead(db, t, None)))
       }
-      u.multipartIdentifier match {
-        case Seq(one) if !shadowed(norm(one)) && byName.contains(norm(one)) =>
-          SubqueryAlias(one, pin(catalog.database, byName(norm(one))))
-        // CTE names are single-part, so a qualified reference is never
-        // shadowed; a qualified name resolves against ITS database —
-        // current or foreign — and the alias keeps both parts so
-        // `db.table.col` references work
-        case Seq(db, tbl) =>
-          catalog.listDatabases().find(d => norm(d) == norm(db))
-            .flatMap(realDb => catalog.listTablesIn(realDb)
-              .find(t => norm(t) == norm(tbl)).map(realDb -> _)) match {
-            case Some((realDb, t)) =>
-              SubqueryAlias(Seq(db, tbl), pin(realDb, t))
-            case None if byName.contains(norm(tbl)) =>
-              throw new IllegalArgumentException(
-                s"time travel cannot pin qualified name '$db.$tbl': " +
-                  s"database '$db' does not exist or has no such table")
-            case None => u
-          }
-        case parts if parts.size > 1 && byName.contains(norm(parts.last)) =>
-          throw new IllegalArgumentException(
-            s"time travel cannot pin qualified name '${parts.mkString(".")}': " +
-              s"'${parts.init.mkString(".")}' is not a known database")
-        case _ => u
-      }
+      if (cond.isDefined) withStats
+      else pinned.getOrElseUpdate(s"$db.$t", withStats)
     }
-    GraftSqlShim.ofRows(spark, go(GraftSqlShim.parsePlan(spark, stmt), Set.empty))
-  }
 
-  /** Partition pruning for the PLAIN SQL path: a `WHERE` sitting directly
-    * on a partitioned catalog table is spliced so the relation scans only
-    * the files the snapshot log's partition values cannot rule out — SQL
-    * users get the same file pruning as [[GraftCatalog.tableWhere]]. The
-    * original Filter stays on top (pruning is conservative), so a failed
-    * or impossible prune degrades to the full scan, never to wrong rows.
-    * CTE shadowing and expression subqueries follow the same scoping as
-    * the time-travel walk.
-    */
-  private def prunedQuery(stmt: String): DataFrame = {
-    import org.apache.spark.sql.GraftSqlShim
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
-    import org.apache.spark.sql.catalyst.expressions.{Expression, SubqueryExpression}
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, SubqueryAlias, UnresolvedWith}
-    val spark = catalog.spark
-    val caseSensitive = spark.sessionState.conf.caseSensitiveAnalysis
-    def norm(s: String): String = if (caseSensitive) s else s.toLowerCase
-    lazy val byName = catalog.listTables().map(t => norm(t) -> t).toMap
-
-    // The catalog table a relation refers to: a bare unshadowed name in
-    // the current database, or a name qualified with ANY existing
-    // database (CTE names are single-part, so a qualified reference is
-    // never shadowed).
-    def resolveTable(u: UnresolvedRelation,
-        shadowed: Set[String]): Option[(String, String)] =
-      u.multipartIdentifier match {
-        case Seq(one) if !shadowed(norm(one)) =>
-          byName.get(norm(one)).map(catalog.database -> _)
-        case Seq(db, tbl) =>
-          catalog.listDatabases().find(d => norm(d) == norm(db))
-            .flatMap(realDb => catalog.listTablesIn(realDb)
-              .find(t => norm(t) == norm(tbl)).map(realDb -> _))
-        case _ => None
-      }
-
-    // Some(pruned analyzed plan) only for a partitioned catalog table
-    // whose filter analyzes against its schema; anything else → None →
-    // the relation resolves through its temp view as usual. The pruned
-    // relation re-attaches the table's catalog statistics (the splice
-    // bypasses the stats-bearing temp view) SCALED TO THE KEPT SUBSET's
-    // own logged rows/bytes — a leg pruned to one partition must not be
-    // estimated at full-table size, or it loses the broadcast that plain
-    // file-size estimation would have chosen.
-    def pruned(db: String, t: String, cond: Expression): Option[LogicalPlan] = {
+    // Current snapshot, filter over a table: Some(pruned analyzed plan)
+    // only for a partitioned or stats-bearing table whose filter analyzes
+    // against its schema; None → the relation binds as if unfiltered. The
+    // original Filter stays on top (pruning is conservative), so a failed
+    // or impossible prune degrades to the full scan, never to wrong rows.
+    // The pruned relation re-attaches the table's catalog statistics (the
+    // splice bypasses the stats-bearing temp view) SCALED TO THE KEPT
+    // SUBSET's own logged rows/bytes — a leg pruned to one partition must
+    // not be estimated at full-table size, or it loses the broadcast that
+    // plain file-size estimation would have chosen.
+    private def pruned(db: String, t: String, cond: Expression): Option[LogicalPlan] = {
       val store = catalog.store(db)
       // one log read and one metadata read serve both the prunability
       // check and the prune
@@ -699,59 +588,77 @@ final class Engine(catalog: GraftCatalog) {
       }.toOption
     }
 
-    // A current-db qualified relation resolves through its bare temp
-    // view, aliased with both parts so `db.table.col` references work; a
-    // FOREIGN-db one has no temp view, so the latest snapshot's analyzed
-    // plan is spliced in directly.
-    def plainRel(u: UnresolvedRelation, shadowed: Set[String]): LogicalPlan =
-      u.multipartIdentifier match {
-        case Seq(db, tbl) if norm(db) == norm(catalog.database) &&
-            byName.contains(norm(tbl)) =>
-          SubqueryAlias(Seq(db, tbl), u.copy(multipartIdentifier = Seq(tbl)))
-        case Seq(db, tbl) =>
-          resolveTable(u, shadowed) match {
-            case Some((realDb, t)) => SubqueryAlias(Seq(db, tbl),
-              catalog.store(realDb).read(t, None).queryExecution.analyzed)
+    private def bindRel(u: UnresolvedRelation, shadowed: Set[String],
+        cond: Option[Expression]): LogicalPlan = {
+      val parts = u.multipartIdentifier
+      travel match {
+        case Current =>
+          cond.flatMap(c => resolve(parts, shadowed)
+              .flatMap { case (db, t) => pruned(db, t, c) })
+            .map(SubqueryAlias(parts, _))
+            .getOrElse(parts match {
+              // a current-db qualified relation resolves through its bare
+              // temp view, aliased with both parts so `db.table.col`
+              // references work; a FOREIGN-db one has no temp view, so
+              // the latest snapshot's analyzed plan is spliced in
+              case Seq(db, tbl) if norm(db) == norm(catalog.database) &&
+                  byName.contains(norm(tbl)) =>
+                SubqueryAlias(parts, u.copy(multipartIdentifier = Seq(tbl)))
+              case Seq(_, _) => resolve(parts, shadowed)
+                .map { case (db, t) => SubqueryAlias(parts,
+                  catalog.store(db).read(t, None).queryExecution.analyzed) }
+                .getOrElse(u)
+              case _ => u
+            })
+        case _ =>
+          resolve(parts, shadowed) match {
+            case Some((db, t)) => SubqueryAlias(parts, pin(db, t, cond))
+            case None if parts.size > 1 && byName.contains(norm(parts.last)) =>
+              throw new IllegalArgumentException(
+                s"time travel cannot pin qualified name '${parts.mkString(".")}': " +
+                  s"database '${parts.init.mkString(".")}' does not exist " +
+                  "or has no such table")
             case None => u
           }
-        case _ => u
+      }
+    }
+
+    private def walk(plan: LogicalPlan, shadowed: Set[String]): LogicalPlan =
+      plan match {
+        case w: UnresolvedWith =>
+          // Non-recursive WITH: each definition sees only the CTEs defined
+          // before it; the main body sees all of them. A RECURSIVE CTE's
+          // own name is in scope inside its definition — the self-reference
+          // must be left for Spark's recursion resolution, not rewired to
+          // a catalog table that happens to share the name.
+          var inScope = shadowed
+          val defs = w.cteRelations.map { case (name, defn, colAliases) =>
+            val defScope = if (w.allowRecursion) inScope + norm(name) else inScope
+            val r = walk(defn, defScope).asInstanceOf[SubqueryAlias]
+            inScope += norm(name)
+            (name, r, colAliases)
+          }
+          w.copy(child = walk(w.child, inScope), cteRelations = defs)
+        case f: Filter =>
+          // a filter directly over a relation lets the read prune by the
+          // condition
+          val child = f.child match {
+            case u: UnresolvedRelation => bindRel(u, shadowed, Some(f.condition))
+            case sa @ SubqueryAlias(_, u: UnresolvedRelation) =>
+              sa.copy(child = bindRel(u, shadowed, Some(f.condition)))
+            case other => walk(other, shadowed)
+          }
+          f.copy(child = child).transformExpressionsUp {
+            case se: SubqueryExpression => se.withNewPlan(walk(se.plan, shadowed))
+          }
+        case u: UnresolvedRelation => bindRel(u, shadowed, None)
+        case other =>
+          other.mapChildren(walk(_, shadowed)).transformExpressionsUp {
+            case se: SubqueryExpression => se.withNewPlan(walk(se.plan, shadowed))
+          }
       }
 
-    def go(plan: LogicalPlan, shadowed: Set[String]): LogicalPlan = plan match {
-      case w: UnresolvedWith =>
-        var inScope = shadowed
-        val defs = w.cteRelations.map { case (name, defn, colAliases) =>
-          val defScope = if (w.allowRecursion) inScope + norm(name) else inScope
-          val r = go(defn, defScope).asInstanceOf[SubqueryAlias]
-          inScope += norm(name)
-          (name, r, colAliases)
-        }
-        w.copy(child = go(w.child, inScope), cteRelations = defs)
-      case f: Filter =>
-        val child = f.child match {
-          case u: UnresolvedRelation =>
-            resolveTable(u, shadowed)
-              .flatMap { case (db, t) => pruned(db, t, f.condition) }
-              .map(SubqueryAlias(u.multipartIdentifier, _))
-              .getOrElse(plainRel(u, shadowed))
-          case sa @ SubqueryAlias(_, u: UnresolvedRelation) =>
-            resolveTable(u, shadowed)
-              .flatMap { case (db, t) => pruned(db, t, f.condition) }
-              .map(p => sa.copy(child =
-                SubqueryAlias(u.multipartIdentifier, p)))
-              .getOrElse(sa.copy(child = plainRel(u, shadowed)))
-          case other => go(other, shadowed)
-        }
-        f.copy(child = child).transformExpressionsUp {
-          case se: SubqueryExpression => se.withNewPlan(go(se.plan, shadowed))
-        }
-      case u: UnresolvedRelation => plainRel(u, shadowed)
-      case other =>
-        other.mapChildren(go(_, shadowed)).transformExpressionsUp {
-          case se: SubqueryExpression => se.withNewPlan(go(se.plan, shadowed))
-        }
-    }
-    GraftSqlShim.ofRows(spark, go(GraftSqlShim.parsePlan(spark, stmt), Set.empty))
+    def query(): DataFrame = GraftSqlShim.ofRows(spark, walk(plan, Set.empty))
   }
 
   /** `run` = execute + render; max `maxRows` rows are rendered (the
@@ -763,6 +670,19 @@ final class Engine(catalog: GraftCatalog) {
 }
 
 object Engine {
+
+  /** The snapshot a statement or a stored view's body reads: the current
+    * one, or the single `FOR SYSTEM_TIME` / `FOR SYSTEM_VERSION` clause,
+    * which Rule 3 applies to *every* table (`app-gradio.py:138`). */
+  private sealed trait Travel
+  private case object Current extends Travel
+  private final case class AsOf(ms: Long) extends Travel
+  private final case class SnapshotId(id: Long) extends Travel
+  // a tag or branch name, resolved PER TABLE (table-scoped metadata;
+  // unknown names fail loudly in resolveTag, never fall back). A BRANCH
+  // name reads fork-point + branch commits as a unit; the namespaces are
+  // disjoint by construction (create-time check).
+  private final case class Ref(name: String) extends Travel
 
   /** Python-repr rendering of a result set: `[(v1, v2), (…)]`. */
   def render(rows: Array[Row]): String =

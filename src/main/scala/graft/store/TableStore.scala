@@ -85,8 +85,12 @@ final class TableStore(val root: HPath, spark: SparkSession) {
       partition = partition.orElse(m.partition),
       partitionZone = partition.map(_ => sessionZone.getId)
         .orElse(m.partitionZone)))
-    if (SnapshotLog.read(fs, tableDir(table)).isEmpty)
-      SnapshotLog.write(fs, tableDir(table), Seq.empty)
+    // under the commit lock: a first append racing CREATE must not be
+    // overwritten by the empty log
+    SnapshotLog.withTableLock(fs, tableDir(table)) {
+      if (SnapshotLog.read(fs, tableDir(table)).isEmpty)
+        SnapshotLog.write(fs, tableDir(table), Seq.empty)
+    }
   }
 
   def drop(table: String): Unit = {
@@ -644,14 +648,11 @@ final class TableStore(val root: HPath, spark: SparkSession) {
   /** Source files every COPY INTO commit has already ingested — log
     * metadata only (the ledger rides commit summaries, so it is exactly
     * as durable and atomic as the rows it describes). */
-  def copyIntoLoaded(table: String): Set[String] = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    import scala.jdk.CollectionConverters._
+  def copyIntoLoaded(table: String): Set[String] =
     SnapshotLog.read(fs, tableDir(table))
       .flatMap(_.summary.get(TableStore.CopyFilesKey))
-      .flatMap(j => mapper.readTree(j).elements().asScala.map(_.asText()))
+      .flatMap(jsonStrings)
       .toSet
-  }
 
   /** Reject frames whose columns cannot land in the table's schema —
     * BEFORE any bytes are written. An unknown frame column (typo, stale
@@ -1628,10 +1629,13 @@ final class TableStore(val root: HPath, spark: SparkSession) {
 
   /** Parse a snapshot-summary key holding a JSON array of relative
     * paths (the MOR/equality delete-dir lists). */
-  private def summaryPaths(s: Snapshot, key: String): Seq[String] = {
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
+  private def summaryPaths(s: Snapshot, key: String): Seq[String] =
+    jsonStrings(s.summary(key))
+
+  /** The strings of a JSON array (a summary key's path or file list). */
+  private def jsonStrings(json: String): Seq[String] = {
     import scala.jdk.CollectionConverters._
-    m.readTree(s.summary(key)).elements().asScala.map(_.asText()).toSeq
+    TableMeta.mapper.readTree(json).elements().asScala.map(_.asText()).toSeq
   }
 
   /** Id of the current snapshot (None = no commits yet). One log read,
@@ -3738,64 +3742,79 @@ final class TableStore(val root: HPath, spark: SparkSession) {
       s"no tag '$name' on $table"))
 
   /** Drop snapshots older than `olderThanMs` (keeping the latest and
-    * every TAGGED snapshot) and delete data files no surviving snapshot
-    * references.
+    * every TAGGED snapshot), delete data files no surviving snapshot
+    * references, and delete metadata versions that are neither the
+    * latest nor stamped by a surviving snapshot. All of it runs under the
+    * commit lock — a commit landing between the log's read and its
+    * rewrite would be erased from the log and its files orphaned — and
+    * the new log is published BEFORE anything is deleted, so a crash
+    * leaves debris for [[vacuum]], never a log naming missing files.
     */
   def expire(table: String, olderThanMs: Long): Unit = {
     val dir = tableDir(table)
-    val all = SnapshotLog.read(fs, dir).map(SnapshotLog.hydrate(fs, dir, _))
-    if (all.size <= 1) return
-    // tagged snapshots are pinned; so are branch FORK POINTS — expiring
-    // a base would silently hollow out every read of its branch
-    val tagged = tags(table).values.toSet ++
-      branches(table).values.map(_.baseSnapshotId)
-    val keep = all.filter(s =>
-        s.timestampMs >= olderThanMs || tagged(s.id)) match {
-      case Seq() => Seq(all.last)
-      case ks if ks.contains(all.last) => ks
-      case ks => ks :+ all.last
-    }
-    val live = keep.flatMap(_.filePaths).toSet
-    all.flatMap(_.filePaths).distinct.filterNot(live.contains).foreach { f =>
-      fs.delete(new HPath(dir, f), false)
-    }
-    // position-delete dirs only dropped snapshots' entries reference
-    val liveDeletes = keep.flatMap(_.files).flatMap(_.deletes)
-      .map(_.path).toSet
-    all.flatMap(_.files).flatMap(_.deletes).map(_.path).distinct
-      .filterNot(liveDeletes.contains)
-      .foreach(p => fs.delete(new HPath(dir, p), true))
-    // manifests are one-per-snapshot: dropped snapshots' manifests go too
-    val keptManifests = keep.flatMap(_.manifest).toSet
-    all.flatMap(_.manifest).filterNot(keptManifests.contains).foreach { m =>
-      fs.delete(new HPath(new HPath(dir, SnapshotLog.ManifestDir), m), false)
-    }
-    // so do their materialized change files (one cdc dir per commit)
-    val keptIds = keep.map(_.id).toSet
-    val dropped = all.filterNot(s => keptIds(s.id))
-    dropped.flatMap(_.summary.get(TableStore.CdcDirKey))
-      .foreach(d => fs.delete(new HPath(dir, d), true))
-    // the COPY INTO idempotency ledger is the union of CopyFilesKey
-    // entries over LIVE summaries — expiring a COPY commit must not
-    // shrink it (a later COPY of the same directory would silently
-    // re-ingest), so dropped commits' loaded-file sets fold forward
-    // into the oldest kept snapshot's summary
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    import scala.jdk.CollectionConverters._
-    def loadedOf(s: Snapshot): Seq[String] =
-      s.summary.get(TableStore.CopyFilesKey).toSeq
-        .flatMap(j => mapper.readTree(j).elements().asScala.map(_.asText()))
-    val orphaned = dropped.flatMap(loadedOf).distinct
-    val kept2 =
-      if (orphaned.isEmpty) keep
-      else {
-        val carrier = keep.head
-        val merged = (loadedOf(carrier) ++ orphaned).distinct
-        keep.updated(0, carrier.copy(summary = carrier.summary +
-          (TableStore.CopyFilesKey ->
-            mapper.writeValueAsString(merged.asJava))))
+    SnapshotLog.withTableLock(fs, dir) {
+      val all = SnapshotLog.read(fs, dir).map(SnapshotLog.hydrate(fs, dir, _))
+      // the lock is a file and NOT reentrant: the locked loader reads tags
+      val cur = load(table, locked = true)
+      // tagged snapshots are pinned; so are branch FORK POINTS — expiring
+      // a base would silently hollow out every read of its branch
+      val tagged = cur.meta.tags.values.toSet ++
+        branches(table).values.map(_.baseSnapshotId)
+      val keep =
+        if (all.size <= 1) all
+        else all.filter(s => s.timestampMs >= olderThanMs || tagged(s.id)) match {
+          case Seq() => Seq(all.last)
+          case ks if ks.contains(all.last) => ks
+          case ks => ks :+ all.last
+        }
+      val keptIds = keep.map(_.id).toSet
+      val dropped = all.filterNot(s => keptIds(s.id))
+      if (dropped.nonEmpty) {
+        // the COPY INTO idempotency ledger is the union of CopyFilesKey
+        // entries over LIVE summaries — expiring a COPY commit must not
+        // shrink it (a later COPY of the same directory would silently
+        // re-ingest), so dropped commits' loaded-file sets fold forward
+        // into the oldest kept snapshot's summary
+        def loadedOf(s: Snapshot): Seq[String] =
+          s.summary.get(TableStore.CopyFilesKey).toSeq.flatMap(jsonStrings)
+        val orphaned = dropped.flatMap(loadedOf).distinct
+        val kept2 =
+          if (orphaned.isEmpty) keep
+          else {
+            import scala.jdk.CollectionConverters._
+            val carrier = keep.head
+            val merged = (loadedOf(carrier) ++ orphaned).distinct
+            keep.updated(0, carrier.copy(summary = carrier.summary +
+              (TableStore.CopyFilesKey ->
+                TableMeta.mapper.writeValueAsString(merged.asJava))))
+          }
+        SnapshotLog.write(fs, dir, kept2)
+        val live = keep.flatMap(_.filePaths).toSet
+        all.flatMap(_.filePaths).distinct.filterNot(live.contains).foreach { f =>
+          fs.delete(new HPath(dir, f), false)
+        }
+        // position-delete dirs only dropped snapshots' entries reference
+        val liveDeletes = keep.flatMap(_.files).flatMap(_.deletes)
+          .map(_.path).toSet
+        all.flatMap(_.files).flatMap(_.deletes).map(_.path).distinct
+          .filterNot(liveDeletes.contains)
+          .foreach(p => fs.delete(new HPath(dir, p), true))
+        // manifests are one-per-snapshot: dropped snapshots' manifests go
+        // too
+        val keptManifests = keep.flatMap(_.manifest).toSet
+        all.flatMap(_.manifest).filterNot(keptManifests.contains).foreach { m =>
+          fs.delete(new HPath(new HPath(dir, SnapshotLog.ManifestDir), m), false)
+        }
+        // so do their materialized change files (one cdc dir per commit)
+        dropped.flatMap(_.summary.get(TableStore.CdcDirKey))
+          .foreach(d => fs.delete(new HPath(dir, d), true))
       }
-    SnapshotLog.write(fs, dir, kept2)
+      // every later read resolves its metadata through the latest
+      // version or a kept snapshot's stamp; the rest go
+      val stamped = keep.map(_.schemaVersion).toSet + cur.n
+      TableMeta.versions(fs, dir).filterNot(stamped)
+        .foreach(n => fs.delete(TableMeta.path(dir, n), false))
+    }
   }
 }
 

@@ -466,6 +466,28 @@ class EngineSpec extends AnyFunSuite {
     } finally spark.conf.set(key, prior)
   }
 
+  test("a stored view's body reads what the same SELECT reads, in every " +
+      "travel mode") {
+    val (cat, engine) = fixture() // snapshot 1 = ids 1, 2; snapshot 2 adds 3
+    val st = cat.store()
+    st.createTag("items", "first", Some(1L))
+    st.createBranch("items", "audit")
+    st.appendToBranch("items", Seq((9, "delta")).toDF("id", "name"), "audit")
+    val modes = Seq(
+      ("current", "", "1, 2, 3"),
+      ("system_time", " FOR SYSTEM_TIME AS OF '1970-01-01 00:00:01'", "1, 2"),
+      ("snapshot_id", " FOR SYSTEM_VERSION AS OF 1", "1, 2"),
+      ("tag", " FOR SYSTEM_VERSION AS OF 'first'", "1, 2"),
+      ("branch", " FOR SYSTEM_VERSION AS OF 'audit'", "1, 2, 3, 9"))
+    for ((mode, clause, ids) <- modes) {
+      val body = s"SELECT id FROM items$clause WHERE id > 0"
+      engine.sql(s"CREATE VIEW v_$mode AS $body")
+      val expected = ids.split(", ").map(i => s"($i,)").mkString("[", ", ", "]")
+      assert(engine.run(s"$body ORDER BY id") == expected, mode)
+      assert(engine.run(s"SELECT id FROM v_$mode ORDER BY id") == expected, mode)
+    }
+  }
+
   test("rendered output follows the tuple-list contract end to end") {
     val (_, engine) = fixture()
     assert(engine.run("SELECT id, name FROM items ORDER BY id LIMIT 2") ==
