@@ -23,17 +23,18 @@ if [ -n "$sidefiles" ]; then
   echo "[precommit] table side-file name outside LegacyMeta.scala — keep table metadata in TableMeta"
   exit 1
 fi
-# The main sources compile warning-free under -deprecation and
-# -Wunused:imports: -Werror (main compile only) turns any such warning
-# under src/main into a failed compile, which is never cached as done, so
-# every later run reports it again. QueryRegistrySpec builds no session:
-# a repeated query name, or a query that lost its oracle, fails here in
-# the same sbt start-up.
-echo "[precommit] sbt compile (warnings fail) + Test/compile + QueryRegistrySpec…"
+# The main and test sources compile warning-free under -deprecation and
+# -Wunused:imports: -Werror (on both compiles) turns any such warning
+# under src/main or src/test into a failed compile, which is never cached
+# as done, so every later run reports it again. QueryRegistrySpec builds
+# no session: a repeated query name, or a query that lost its oracle,
+# fails here in the same sbt start-up.
+echo "[precommit] sbt compile + Test/compile (warnings fail) + QueryRegistrySpec…"
 sbt -batch \
   'set Compile / compile / scalacOptions ++= Seq("-deprecation", "-Wunused:imports", "-Werror")' \
+  'set Test / compile / scalacOptions ++= Seq("-deprecation", "-Wunused:imports", "-Werror")' \
   'compile' 'Test/compile' 'testOnly graft.QueryRegistrySpec' >/tmp/precommit.log 2>&1 || {
-  grep -E '^\[(warn|error)\] .*src/main/' /tmp/precommit.log || tail -30 /tmp/precommit.log
+  grep -E '^\[(warn|error)\] .*src/(main|test)/' /tmp/precommit.log || tail -30 /tmp/precommit.log
   echo "[precommit] COMPILE WARNING, COMPILE OR QUERY REGISTRY FAILED — commit blocked"
   exit 1
 }

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-import graft.store.{PartitionSpec, Snapshot, SnapshotLog, TableStore}
+import graft.store.{PartitionSpec, Snapshot, SnapshotLog, TableMeta, TableStore}
 
 /** Database/table registry over [[graft.store.TableStore]].
   *
@@ -124,31 +124,28 @@ final class GraftCatalog(val warehouse: HPath, val spark: SparkSession) {
   private def viewsPath(db: String): HPath =
     new HPath(new HPath(warehouse, db), "_views.json")
 
-  /** Stored view definitions (name → SELECT text) of `db`. */
+  /** Stored view definitions (name → SELECT text) of `db`. Read on every
+    * non-DDL statement: one open, a missing file meaning no views. */
   def views(db: String = currentDb): Map[String, String] = {
-    val p = viewsPath(db)
-    if (!fs.exists(p)) Map.empty
-    else {
-      val in = fs.open(p)
-      val text =
+    val text =
+      try {
+        val in = fs.open(viewsPath(db))
         try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
         finally in.close()
-      val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(text)
-      import scala.jdk.CollectionConverters._
-      node.properties().asScala
-        .map(e => e.getKey -> e.getValue.asText()).toMap
-    }
+      } catch { case _: java.io.FileNotFoundException => return Map.empty }
+    import scala.jdk.CollectionConverters._
+    TableMeta.mapper.readTree(text).properties().asScala
+      .map(e => e.getKey -> e.getValue.asText()).toMap
   }
 
   private def writeViews(db: String, vs: Map[String, String]): Unit = {
     val p = viewsPath(db)
-    if (vs.isEmpty) { if (fs.exists(p)) fs.delete(p, false); return }
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = m.createObjectNode()
+    if (vs.isEmpty) { fs.delete(p, false); return }
+    val root = TableMeta.mapper.createObjectNode()
     vs.toSeq.sortBy(_._1).foreach { case (k, v) => root.put(k, v) }
     val out = fs.create(p, true)
-    try out.write(m.writerWithDefaultPrettyPrinter().writeValueAsString(root)
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    try out.write(TableMeta.mapper.writerWithDefaultPrettyPrinter()
+      .writeValueAsString(root).getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
   }
 

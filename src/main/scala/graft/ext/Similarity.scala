@@ -627,8 +627,8 @@ object Similarity {
     * the exact sequences the former independent per-seed
     * orderBy(hash).limit(poolK) TakeOrdered passes drew (the hash
     * depends only on the id; ids break the hash ties 64-bit hashes
-    * never produce at pool size). One [[SeedPoolAggregator]] scan
-    * replaces seeds.size corpus scans — the difference between reading
+    * never produce at pool size). One bounded-heap scan
+    * ([[seedPoolPartials]]) replaces seeds.size corpus scans — the difference between reading
     * 100 TB once and m times. A caller needing a SMALLER pool for some
     * seed takes a prefix: the ascending smallest-K list's prefix IS the
     * smallest-K' list. */
@@ -636,15 +636,14 @@ object Similarity {
       vecCol: String, seeds: Seq[Long],
       poolK: Int): Vector[Seq[Array[Float]]] = {
     val m = seeds.size
-    // ONE job, ONE stage: each partition folds its rows through the
-    // bounded [[SeedPoolAggregator]] and emits its ≤ m·poolK surviving
-    // (pool, hash, id, vector) entries; the driver merges the partials
-    // (same (hash, id) ascending order, take poolK — exactly the
-    // aggregator's mergeSorted ∘ finish). A full .agg() spelling paid a
-    // second stage behind a single-partition exchange plus the udaf
-    // machinery — ~0.15 s of pure fixed cost per training call at
-    // bench scale (measured; see OPTIMIZATION_r22.md, SeedPoolAggregator)
-    // for no scan saved; this form has the same per-job shape as one
+    // ONE job, ONE stage: each partition folds its rows into m bounded
+    // heaps and emits its ≤ m·poolK surviving (pool, hash, id, vector)
+    // entries; the driver merges the partials (same (hash, id) ascending
+    // order, take poolK). A full .agg() spelling paid a second stage
+    // behind a single-partition exchange plus the udaf machinery —
+    // ~0.15 s of pure fixed cost per training call at bench scale
+    // (measured; see OPTIMIZATION_r22.md, SeedPoolAggregator) for no
+    // scan saved; this form has the same per-job shape as one
     // TakeOrdered, while still reading the corpus ONCE for all m pools.
     val partials = seedPoolPartials(embeddings, idCol, vecCol, seeds, poolK)
       .collect()
@@ -658,7 +657,11 @@ object Similarity {
 
   /** The one-pass per-partition pool fold as a frame (the plan-evidence
     * seam — [[seedPools]] collects and driver-merges its bounded
-    * output). */
+    * output). Pool j keeps the poolK rows with the smallest
+    * (hash_j, id) in a max-heap on that pair: a row that does not
+    * qualify costs one comparison with the heap's head, one that does
+    * costs O(log poolK), and nothing is copied. Each pool is emitted in
+    * ascending (hash, id) order. */
   private[ext] def seedPoolPartials(embeddings: DataFrame, idCol: String,
       vecCol: String, seeds: Seq[Long],
       poolK: Int): org.apache.spark.sql.Dataset[(Int, Long, Long, Array[Float])] = {
@@ -674,12 +677,30 @@ object Similarity {
     implicit val inEnc = encoderOf[(Long, Array[Long], Array[Float])]
     implicit val outEnc = encoderOf[(Int, Long, Long, Array[Float])]
     proj.as[(Long, Array[Long], Array[Float])].mapPartitions { it =>
-      val agg = new SeedPoolAggregator(m, poolK)
-      var buf = agg.zero
-      it.foreach(row => buf = agg.reduce(buf, row))
-      buf.iterator.zipWithIndex.flatMap { case (pool, j) =>
-        pool.iterator.map(e => (j, e._1, e._2, e._3))
+      // (hash, id, vector), largest (hash, id) at the head
+      type E = (Long, Long, Array[Float])
+      val byHashId: Ordering[E] = (a, b) => {
+        val c = java.lang.Long.compare(a._1, b._1)
+        if (c != 0) c else java.lang.Long.compare(a._2, b._2)
       }
+      val heaps = Array.fill(m)(
+        new java.util.PriorityQueue[E](poolK + 1, byHashId.reverse))
+      it.foreach { case (id, hashes, vec) =>
+        var j = 0
+        while (j < m) {
+          val h = heaps(j)
+          val top = h.peek()
+          if (h.size < poolK) h.add((hashes(j), id, vec))
+          else if (hashes(j) < top._1 || (hashes(j) == top._1 && id < top._2)) {
+            h.poll(); h.add((hashes(j), id, vec))
+          }
+          j += 1
+        }
+      }
+      Iterator.tabulate(m) { j =>
+        heaps(j).toArray(new Array[E](0)).sorted(byHashId).iterator
+          .map(e => (j, e._1, e._2, e._3))
+      }.flatten
     }
   }
 
@@ -848,70 +869,6 @@ final class VectorMeanAggregator
     org.apache.spark.sql.GraftSqlShim.encoderOf[(Array[Double], Long)]
   override def outputEncoder: org.apache.spark.sql.Encoder[Array[Float]] =
     org.apache.spark.sql.GraftSqlShim.encoderOf[Array[Float]]
-}
-
-/** One-pass per-subspace seed pools: for each subspace j, keep the K
-  * rows with the SMALLEST (hash_j, id), where hash_j is the
-  * already-computed xxhash64(id, seed + j) column — the exact row set
-  * (and ascending-hash order) the former m independent
-  * orderBy(hash_j).limit(K) TakeOrdered passes collected, with `id` as
-  * a deterministic tie-break that 64-bit hashes never exercise at pool
-  * size. Partial aggregation keeps m bounded sorted lists per
-  * partition, so ONE corpus scan replaces m (guide §1.2) and the
-  * shuffle carries O(m · K) entries per partition, never the corpus. */
-final class SeedPoolAggregator(m: Int, k: Int) extends Aggregator[
-    (Long, Array[Long], Array[Float]),
-    Seq[Seq[(Long, Long, Array[Float])]],
-    Seq[Seq[Array[Float]]]] {
-
-  private type E = (Long, Long, Array[Float]) // (hash, id, vector)
-
-  override def zero: Seq[Seq[E]] = Vector.fill(m)(Vector.empty)
-
-  private def lt(a: E, b: E): Boolean =
-    a._1 < b._1 || (a._1 == b._1 && a._2 < b._2)
-
-  /** Insert into an ascending-sorted bounded list; rejection of a
-    * non-qualifying row is one comparison against the current max. */
-  private def insert(buf: Seq[E], e: E): Seq[E] =
-    if (buf.size >= k && !lt(e, buf.last)) buf
-    else {
-      val pos = buf.indexWhere(t => lt(e, t)) match {
-        case -1 => buf.size
-        case p => p
-      }
-      val grown = (buf.take(pos) :+ e) ++ buf.drop(pos)
-      if (grown.size > k) grown.dropRight(1) else grown
-    }
-
-  override def reduce(b: Seq[Seq[E]],
-      in: (Long, Array[Long], Array[Float])): Seq[Seq[E]] = {
-    val (id, hashes, vec) = in
-    Vector.tabulate(m)(j => insert(b(j), (hashes(j), id, vec)))
-  }
-
-  private def mergeSorted(a: Seq[E], b: Seq[E]): Seq[E] = {
-    val out = Vector.newBuilder[E]
-    var i = 0; var j = 0; var n = 0
-    while (n < k && (i < a.size || j < b.size)) {
-      if (j >= b.size || (i < a.size && lt(a(i), b(j)))) { out += a(i); i += 1 }
-      else { out += b(j); j += 1 }
-      n += 1
-    }
-    out.result()
-  }
-
-  override def merge(a: Seq[Seq[E]], b: Seq[Seq[E]]): Seq[Seq[E]] =
-    Vector.tabulate(m)(j => mergeSorted(a(j), b(j)))
-
-  override def finish(r: Seq[Seq[E]]): Seq[Seq[Array[Float]]] =
-    r.map(_.map(_._3))
-
-  override def bufferEncoder: org.apache.spark.sql.Encoder[Seq[Seq[E]]] =
-    org.apache.spark.sql.GraftSqlShim.encoderOf[Seq[Seq[E]]]
-  override def outputEncoder
-      : org.apache.spark.sql.Encoder[Seq[Seq[Array[Float]]]] =
-    org.apache.spark.sql.GraftSqlShim.encoderOf[Seq[Seq[Array[Float]]]]
 }
 
 final case class Candidate(score: Double, id: Long)

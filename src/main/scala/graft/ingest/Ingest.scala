@@ -2,6 +2,7 @@ package graft.ingest
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType}
 
 import graft.catalog.GraftCatalog
 
@@ -50,13 +51,26 @@ object Ingest {
 
   /** MAX-id continuation for incremental appends
     * (`append_iceberg.py:104-123`): next id = MAX(idCol)+1, or 1 on empty.
+    * An INT or BIGINT column is answered from the bounds the snapshot log
+    * keeps per file ([[graft.store.TableStore.columnBound]]), with no
+    * Spark job; the table is scanned only when metadata cannot answer.
     */
   def nextId(catalog: GraftCatalog, table: String, idCol: String): Long = {
-    catalog.table(table).agg(max(col(idCol))).head().get(0) match {
-      case null => 1L
-      case i: Int => i + 1L
-      case l: Long => l + 1L
-      case other => throw new IllegalArgumentException(s"non-integral id column $idCol: $other")
+    val st = catalog.store()
+    val m = st.meta(table)
+    val resolver = catalog.spark.sessionState.conf.resolver
+    val fromBounds = m.schema.fields.find(f => resolver(f.name, idCol))
+      .filter(f => f.dataType == IntegerType || f.dataType == LongType)
+      .flatMap(st.columnBound(_, st.dataFilesAsOf(table, None), m.renameEvents,
+        isMax = true))
+    val maxId = fromBounds.getOrElse {
+      catalog.table(table).agg(max(col(idCol))).head().get(0) match {
+        case null => None
+        case i: Int => Some(i.toLong)
+        case l: Long => Some(l)
+        case other => throw new IllegalArgumentException(s"non-integral id column $idCol: $other")
+      }
     }
+    maxId.fold(1L)(_ + 1L)
   }
 }

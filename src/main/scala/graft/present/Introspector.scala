@@ -10,6 +10,16 @@ import graft.catalog.GraftCatalog
   * sample rows per allow-listed table (`SQLDatabase.from_uri(...,
   * include_tables=…, sample_rows_in_table_info=10)`, `app-gradio.py:86-87`,
   * `README.md:11-12`). Tables outside the allow-list stay invisible.
+  *
+  * Every question builds the context again from the current snapshot;
+  * nothing is kept between calls. The sample rows are read on the driver
+  * with no Spark job ([[graft.store.TableStore.sampleRows]]): the first
+  * files of the planned scan, in the order Spark's own `limit(n)
+  * .collect()` reads them, through the Parquet reader the streaming
+  * source uses, so the rows and the prompt text are the ones that
+  * `collect()` gives. A table with delete files, a bucketed scan, a
+  * needed file split across scan partitions or a file the reader rejects
+  * is read by Spark, as `limit(n).collect()` reads it, with its jobs.
   */
 final class Introspector(
     catalog: GraftCatalog,
@@ -30,12 +40,12 @@ final class Introspector(
   def tableInfo(name: String): String = {
     val st = catalog.store()
     val meta = st.meta(name) // one metadata read serves the scan and the stats
-    val df = st.read(name, None, meta)
+    val (df, files) = st.readWithFiles(name, None, meta)
     val ddlCols = df.schema.fields
       .map(f => s"  ${f.name} ${f.dataType.sql}${if (f.nullable) "" else " NOT NULL"}")
       .mkString(",\n")
     val ddl = s"CREATE TABLE $name (\n$ddlCols\n)"
-    val sample = df.limit(sampleRows).collect()
+    val sample = st.sampleRows(df, files, sampleRows, meta)
     val header = df.columns.mkString("\t")
     val rows = sample.map(renderSampleRow).mkString("\n")
     val stats = meta.stats.map { s =>

@@ -222,16 +222,14 @@ final class Engine(catalog: GraftCatalog) {
     * time, so the reference's max-id continuation query
     * (`append_iceberg.py:116`) costs log metadata, not a 100 TB scan.
     *
-    * MIN/MAX is answered ONLY when every live file logged bounds for the
-    * column and the column is integral/date/timestamp: float/double stats
-    * are unsound in the presence of NaN (Spark orders NaN above all
-    * values; Parquet stats ignore that), and string bounds can be dropped
-    * by the log's length cap. Anything unanswerable — including a single
-    * stats-less legacy file — returns None and takes the scan path, so
-    * this is an optimization, never a semantics change. Output names,
-    * types, and nullability come from analyzing the SAME projection over
-    * an empty relation with the snapshot's schema (driver-only, no job) —
-    * the answer is byte-identical to what the scan would render.
+    * MIN/MAX is answered by [[graft.store.TableStore.columnBound]], the
+    * store's one bounds fold, only where it is exact. Anything
+    * unanswerable — including a single stats-less legacy file — returns
+    * None and takes the scan path, so this is an optimization, never a
+    * semantics change. Output names, types, and nullability come from
+    * analyzing the SAME projection over an empty relation with the
+    * snapshot's schema (driver-only, no job) — the answer is
+    * byte-identical to what the scan would render.
     */
   private def metadataAgg(b: Binder): Option[DataFrame] = {
     import org.apache.spark.sql.catalyst.analysis.{UnresolvedAlias, UnresolvedAttribute, UnresolvedFunction, UnresolvedStar}
@@ -275,9 +273,6 @@ final class Engine(catalog: GraftCatalog) {
       }
     }
 
-    val statsTypes: Set[DataType] =
-      Set(ByteType, ShortType, IntegerType, LongType, DateType,
-        TimestampType, TimestampNTZType)
     def external(dt: DataType, v: Long): Any = dt match {
       case ByteType     => v.toByte
       case ShortType    => v.toShort
@@ -334,17 +329,10 @@ final class Engine(catalog: GraftCatalog) {
               case MinMax(isMin, colName) =>
                 for {
                   field <- sch.fields.find(f => b.norm(f.name) == b.norm(colName))
-                  if statsTypes.contains(field.dataType)
                   inc <- included
                   folded <- {
-                    // a renamed column's old files logged their bounds
-                    // under the physical name of their time — fold over
-                    // the whole alias chain, like the read path does
                     val st = catalog.store(db)
-                    val names = (field.name +:
-                      st.aliasesOf(st.renameEvents(t), field.name))
-                      .map(_.toLowerCase)
-                    foldBounds(inc, names, isMin)
+                    st.columnBound(field, inc, st.renameEvents(t), isMax = !isMin)
                   }
                 } yield folded.map(external(field.dataType, _)).orNull
             }
@@ -385,37 +373,6 @@ final class Engine(catalog: GraftCatalog) {
         answer(a, items, u, Some(c))
       case _ => None
     }
-  }
-
-  /** Fold one side of the logged per-file bounds. Outer None = cannot
-    * answer (a file without bounds for the column); inner None = SQL NULL
-    * (no non-null values in any file — MIN/MAX ignore nulls). All-null
-    * files contribute nothing, exactly like the scan would. */
-  private def foldBounds(files: Seq[graft.store.DataFile],
-      namesLc: Seq[String], isMin: Boolean): Option[Option[Long]] = {
-    var acc: Option[Long] = None
-    for (f <- files) {
-      // merge-on-read position deletes: the logged bounds remain valid
-      // for PRUNING but the extreme value may itself be deleted — a
-      // metadata MIN/MAX over such a file would answer wrongly. COUNT
-      // stays exact (records is the live count); MIN/MAX declines to
-      // the scan path.
-      if (f.deletes.nonEmpty) return None
-      namesLc.iterator.flatMap(f.stats.get).nextOption() match {
-        case None => return None
-        case Some(b) =>
-          val r = graft.store.Pruning.fromBounds(b)
-          if (!r.allNulls) {
-            (if (isMin) r.min else r.max) match {
-              case Some(v: Long) =>
-                acc = Some(acc.fold(v)(a =>
-                  if (isMin) math.min(a, v) else math.max(a, v)))
-              case _ => return None
-            }
-          }
-      }
-    }
-    Some(acc)
   }
 
   /** Seq-of-Option traversal (all-or-nothing). */

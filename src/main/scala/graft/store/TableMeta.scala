@@ -68,7 +68,7 @@ object TableMeta {
 
   private[store] val Empty = TableMeta(new StructType())
 
-  private[store] val mapper: ObjectMapper = {
+  private[graft] val mapper: ObjectMapper = {
     val m = new ObjectMapper()
     m.registerModule(com.fasterxml.jackson.module.scala.DefaultScalaModule)
     // a schema is stored as Spark's own JSON form, inline

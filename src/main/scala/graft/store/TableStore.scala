@@ -1150,21 +1150,27 @@ final class TableStore(val root: HPath, spark: SparkSession) {
   /** [[read]] plus the resolved file list (same stats-scaling seam as
     * [[readVersionWithFiles]], for the AS-OF and latest pins). */
   private[graft] def readWithFiles(table: String,
-      asOfMs: Option[Long]): (DataFrame, Seq[DataFile]) = {
-    val m = meta(table)
+      asOfMs: Option[Long]): (DataFrame, Seq[DataFile]) =
+    readWithFiles(table, asOfMs, meta(table))
+
+  /** [[readWithFiles]] under an already-loaded record. */
+  private[graft] def readWithFiles(table: String, asOfMs: Option[Long],
+      m: TableMeta): (DataFrame, Seq[DataFile]) =
     asOfMs match {
-    case None =>
-      val files = dataFilesAsOf(table, None)
-      (readFileList(table, files, m), files)
-    case Some(_) =>
-      SnapshotLog.resolve(fs, tableDir(table), asOfMs) match {
-        case Some(snap) =>
-          (readFileListAs(table, snap.files, schemaAt(table, snap, m), m),
-            snap.files)
-        case None => (readFileList(table, Seq.empty, m), Seq.empty)
-      }
+      // latest read: always the CURRENT schema (evolution applies to all
+      // live data, Iceberg's current-read contract)
+      case None =>
+        val files = dataFilesAsOf(table, None)
+        (readFileList(table, files, m), files)
+      // time travel: the schema of the resolved snapshot's time
+      case Some(_) =>
+        SnapshotLog.resolve(fs, tableDir(table), asOfMs) match {
+          case Some(snap) =>
+            (readFileListAs(table, snap.files, schemaAt(table, snap, m), m),
+              snap.files)
+          case None => (readFileList(table, Seq.empty, m), Seq.empty)
+        }
     }
-  }
 
   /** Latest-snapshot read; `asOfMs` = time travel. Snapshot resolution →
     * exact file list is the manifest-pruning analogue: Spark scans only the
@@ -1176,18 +1182,114 @@ final class TableStore(val root: HPath, spark: SparkSession) {
   /** [[read]] under an already-loaded record. */
   private[graft] def read(table: String, asOfMs: Option[Long],
       m: TableMeta): DataFrame =
-    asOfMs match {
-      // latest read: always the CURRENT schema (evolution applies to all
-      // live data, Iceberg's current-read contract)
-      case None => readFileList(table, dataFilesAsOf(table, None), m)
-      // time travel: the schema of the resolved snapshot's time
-      case Some(_) =>
-        SnapshotLog.resolve(fs, tableDir(table), asOfMs) match {
-          case Some(snap) =>
-            readFileListAs(table, snap.files, schemaAt(table, snap, m), m)
-          case None => readFileList(table, Seq.empty, m)
-        }
+    readWithFiles(table, asOfMs, m)._1
+
+  /** The first `n` rows of the current snapshot: the rows, in their
+    * order, that `read(table).limit(n).collect()` returns, read on the
+    * driver with no Spark job. */
+  def sampleRows(table: String, n: Int, m: TableMeta): Array[Row] = {
+    val (df, files) = readWithFiles(table, None, m)
+    sampleRows(df, files, n, m)
+  }
+
+  /** [[sampleRows]] over a scan `df` already built from `files` under `m`.
+    *
+    * A collected limit reads the scan's file partitions in order and
+    * stops at `n` rows (`SparkPlan.executeTake`). This reads the same
+    * files in the order the planned scan's `FileScanRDD` holds them
+    * (planning starts no job, so the size-descending packing and its
+    * ties are Spark's own), each whole, with the streaming source's
+    * Parquet reader, which maps renamed columns, null-fills added ones
+    * and up-casts widened types, and turns its rows into [[Row]]s with
+    * the frame's own deserializer.
+    *
+    * Falls back to Spark's own read when the rows are not a prefix of
+    * whole files in that order: `df.limit(n).collect()` for delete files
+    * (an anti-join sits above the scan), and the take that collect runs,
+    * over the plan already built, for a bucketed scan (files grouped by
+    * bucket), a needed file split across partitions, or a file the
+    * reader rejects. */
+  private[graft] def sampleRows(df: DataFrame, files: Seq[DataFile], n: Int,
+      m: TableMeta): Array[Row] = {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.datasources.FileScanRDD
+    if (n <= 0 || files.exists(_.deletes.nonEmpty)) return df.limit(n).collect()
+    val plan = df.queryExecution.executedPlan
+    val toRow = org.apache.spark.sql.GraftSqlShim.rowDeserializer(df)
+    // what a collected limit runs (`CollectLimitExec` takes from its
+    // child), on the plan already built instead of planning it again
+    def viaSpark: Array[Row] = plan.executeTake(n).map(toRow)
+    val partitions = plan.collect {
+      case s: FileSourceScanExec => s
+    } match {
+      case Seq(scan) if !scan.bucketedScan => scan.inputRDD match {
+        case rdd: FileScanRDD => rdd.filePartitions
+        case _ => return viaSpark
+      }
+      case _ => return viaSpark
     }
+    val schema = df.schema
+    val aliases = aliasMap(m.renameEvents, schema)
+    val hconf = spark.sessionState.newHadoopConf()
+    val rows = Array.newBuilder[Row]
+    var taken = 0
+    val pending = partitions.iterator.flatMap(_.files)
+    while (taken < n && pending.hasNext) {
+      val f = pending.next()
+      if (f.start != 0 || f.length != f.fileSize) return viaSpark
+      try {
+        val r = new graft.streaming.GraftPartitionReader(f.toPath.toString,
+          schema, aliases, hconf = hconf)
+        try while (taken < n && r.next()) { rows += toRow(r.get()); taken += 1 }
+        finally r.close()
+      } catch { case scala.util.control.NonFatal(_) => return viaSpark }
+    }
+    rows.result()
+  }
+
+  /** MIN (`isMax = false`) or MAX of an integral, date or timestamp
+    * column over the current snapshot, folded from the bounds each data
+    * file logged at commit: no data file is read. Outer None: metadata
+    * cannot answer (see the overload); inner None: the column holds no
+    * non-null value, SQL NULL. */
+  def columnBound(table: String, column: String,
+      isMax: Boolean): Option[Option[Long]] = {
+    val m = meta(table)
+    val resolver = spark.sessionState.conf.resolver
+    m.schema.fields.find(f => resolver(f.name, column)).flatMap(f =>
+      columnBound(f, dataFilesAsOf(table, None), m.renameEvents, isMax))
+  }
+
+  /** [[columnBound]] of `field` over `files`: a snapshot's live files,
+    * or the subset a partition-aligned WHERE keeps. None (decline to a
+    * scan) when the type is not integral, date or timestamp — float and
+    * double bounds are unsound with NaN (Spark orders NaN above every
+    * value, Parquet stats ignore it) and string bounds can be cut by the
+    * log's length cap — or when any file logged no bounds for the column
+    * (a legacy file) or carries deletes (its extreme value may be
+    * deleted). All-null files contribute nothing, as in the scan. */
+  private[graft] def columnBound(field: StructField, files: Seq[DataFile],
+      events: Seq[(String, String)], isMax: Boolean): Option[Option[Long]] = {
+    if (!TableStore.BoundTypes.contains(field.dataType)) return None
+    // a renamed column's old files logged their bounds under the physical
+    // name of their time: fold over the whole alias chain, as reads do
+    val names = (field.name +: aliasesOf(events, field.name)).map(_.toLowerCase)
+    var acc: Option[Long] = None
+    for (f <- files) {
+      if (f.deletes.nonEmpty) return None
+      names.iterator.flatMap(f.stats.get).nextOption() match {
+        case None => return None
+        case Some(b) =>
+          val r = Pruning.fromBounds(b)
+          if (!r.allNulls) (if (isMax) r.max else r.min) match {
+            case Some(v: Long) =>
+              acc = Some(acc.fold(v)(a => if (isMax) math.max(a, v) else math.min(a, v)))
+            case _ => return None
+          }
+      }
+    }
+    Some(acc)
+  }
 
   /** Predicate-scoped read with PARTITION PRUNING: files whose logged
     * partition value proves no row can match `predicate` are dropped from
@@ -1538,11 +1640,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
       val (dirty, clean) =
         if (applyDeletes) files.partition(_.deletes.nonEmpty)
         else (Seq.empty[DataFile], files)
-      val events = m.renameEvents
-      val aliased: Seq[(String, Seq[String])] =
-        if (events.isEmpty) Seq.empty
-        else sch.fields.toSeq.map(f => f.name -> aliasesOf(events, f.name))
-          .filter(_._2.nonEmpty)
+      val aliasFor = aliasMap(m.renameEvents, sch)
       // Renamed columns: scan under ALL historical physical names
       // (each at the current — possibly widened — type) and coalesce
       // into the render name. Exactly one alias is non-absent per
@@ -1559,9 +1657,8 @@ final class TableStore(val root: HPath, spark: SparkSession) {
           else df.select(col("*"),
             col("_metadata.file_name").as(TableStore.MorFileCol),
             col("_metadata.row_index").as(TableStore.MorPosCol))
-        if (aliased.isEmpty) meta(scan(sch))
+        if (aliasFor.isEmpty) meta(scan(sch))
         else {
-          val aliasFor = aliased.toMap
           val union = StructType(sch.fields.flatMap(f =>
             f +: aliasFor.getOrElse(f.name, Seq.empty)
               .map(a => StructField(a, f.dataType, nullable = true))))
@@ -3219,6 +3316,14 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     out.toSeq
   }
 
+  /** Render-schema field name → its historical physical names, for the
+    * fields of `sch` that have any. */
+  private[graft] def aliasMap(events: Seq[(String, String)],
+      sch: StructType): Map[String, Seq[String]] =
+    if (events.isEmpty) Map.empty
+    else sch.fields.iterator.map(f => f.name -> aliasesOf(events, f.name))
+      .filter(_._2.nonEmpty).toMap
+
   /** `ALTER TABLE … RENAME COLUMN`: pure metadata — a new schema
     * version plus a rename event; no data file is touched. Reads of any
     * snapshot reconcile by the event chain ([[readFileListAs]]), so old
@@ -3819,6 +3924,11 @@ final class TableStore(val root: HPath, spark: SparkSession) {
 }
 
 object TableStore {
+
+  /** Column types whose logged per-file bounds answer MIN/MAX exactly
+    * ([[TableStore.columnBound]]). */
+  private[store] val BoundTypes: Set[DataType] = Set(ByteType, ShortType,
+    IntegerType, LongType, DateType, TimestampType, TimestampNTZType)
   /** Cap on per-file column-stats entries in the snapshot log (wide
     * tables keep the log bounded; columns beyond the cap fall back to
     * footer reads when pruned against). */

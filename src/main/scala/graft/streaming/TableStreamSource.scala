@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
@@ -396,13 +397,8 @@ private[streaming] final class GraftMicroBatchStream(
     val st = store
     if (opts.changeFeed) {
       val base = st.schema(opts.table)
-      val events = st.renameEvents(opts.table)
-      val aliases: Map[String, Seq[String]] =
-        if (events.isEmpty) Map.empty
-        else base.fields.toSeq
-          .map(f => f.name -> st.aliasesOf(events, f.name))
-          .filter(_._2.nonEmpty).toMap
-      return GraftCdcReaderFactory(base.json, aliases)
+      return GraftCdcReaderFactory(base.json,
+        st.aliasMap(st.renameEvents(opts.table), base))
     }
     // Row-level `where`: the same predicate that pruned files is
     // analyzed (type coercion, resolution — a malformed predicate fails
@@ -440,13 +436,9 @@ private[streaming] final class GraftMicroBatchStream(
     // a file was written appears in that file under a historical
     // physical name — ship the alias chains so executors resolve
     // per-file names the way the batch read path does.
-    val events = st.renameEvents(opts.table)
-    val aliases: Map[String, Seq[String]] =
-      if (events.isEmpty) Map.empty
-      else readSchema.fields.toSeq
-        .map(f => f.name -> st.aliasesOf(events, f.name))
-        .filter(_._2.nonEmpty).toMap
-    GraftReaderFactory(tableSchema.json, aliases, readSchema.json, boundPred)
+    GraftReaderFactory(tableSchema.json,
+      st.aliasMap(st.renameEvents(opts.table), readSchema), readSchema.json,
+      boundPred)
   }
 
   // Snapshot history IS the source's replay log and is retained by the
@@ -541,12 +533,16 @@ private[streaming] final case class GraftReaderFactory(schemaJson: String,
   * probe-then-`initialize(path, columns)` shape parsed every footer
   * twice — at many-small-files streaming scale that doubles the
   * per-batch metadata I/O.
+  *
+  * Executors read with a default Hadoop configuration; a driver-side
+  * caller ([[graft.store.TableStore.sampleRows]]) passes its session's.
   */
-private[streaming] final class GraftPartitionReader(
+private[graft] final class GraftPartitionReader(
     path: String, requested: StructType,
     aliases: Map[String, Seq[String]] = Map.empty,
     readSchemaOrNull: StructType = null,
-    predicate: Option[org.apache.spark.sql.catalyst.expressions.Expression] = None)
+    predicate: Option[org.apache.spark.sql.catalyst.expressions.Expression] = None,
+    hconf: Configuration = new Configuration())
     extends PartitionReader[InternalRow] {
 
   // The schema actually DECODED: the scan schema plus any
@@ -556,11 +552,13 @@ private[streaming] final class GraftPartitionReader(
   private val readSchema: StructType =
     if (readSchemaOrNull == null) requested else readSchemaOrNull
 
-  private val hconf = new Configuration()
-
   private val pf: ParquetFileReader = {
     GraftPartitionReader.footerOpens.incrementAndGet()
-    ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(path), hconf))
+    val file = new HPath(path)
+    // read options from `hconf`: the one-argument `open` builds them from
+    // a new Configuration, parsing Hadoop's default XML for every file
+    ParquetFileReader.open(HadoopInputFile.fromPath(file, hconf),
+      HadoopReadOptions.builder(hconf, file).build())
   }
 
   // Footer-first: which of the requested columns exist in this file —
@@ -704,7 +702,7 @@ private[streaming] final class GraftPartitionReader(
   override def close(): Unit = if (reader != null) reader.close()
 }
 
-private[streaming] object GraftPartitionReader {
+private[graft] object GraftPartitionReader {
   /** Footer opens across all readers — the spec's observable that each
     * streamed file costs exactly ONE footer parse. */
   val footerOpens = new java.util.concurrent.atomic.AtomicLong(0L)

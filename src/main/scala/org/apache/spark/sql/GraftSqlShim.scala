@@ -13,6 +13,13 @@ object GraftSqlShim {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** The deserializer `df.collect()` turns `df`'s internal rows into
+    * [[Row]]s with (`Dataset.exprEnc` is `private[sql]`): rows read
+    * around Spark's executors come out as `collect()` would give them. */
+  def rowDeserializer(df: DataFrame): catalyst.InternalRow => Row =
+    df.asInstanceOf[classic.Dataset[Row]].exprEnc.resolveAndBind()
+      .createDeserializer()
+
   /** Parse a SQL statement to its unresolved logical plan. */
   def parsePlan(spark: SparkSession, stmt: String): LogicalPlan =
     spark.asInstanceOf[classic.SparkSession].sessionState.sqlParser.parsePlan(stmt)

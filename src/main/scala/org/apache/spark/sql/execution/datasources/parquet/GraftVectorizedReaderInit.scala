@@ -64,7 +64,9 @@ object GraftVectorizedReaderInit {
     require(totalRowCount <= Int.MaxValue,
       s"file row count $totalRowCount exceeds a single reader's range")
     import org.apache.spark.sql.internal.SQLConf
-    val conf = new org.apache.hadoop.conf.Configuration()
+    // only the keys set here are read: loading Hadoop's default
+    // resources would parse their XML again for every file
+    val conf = new org.apache.hadoop.conf.Configuration(false)
     conf.setBoolean(SQLConf.PARQUET_BINARY_AS_STRING.key, false)
     conf.setBoolean(SQLConf.PARQUET_INT96_AS_TIMESTAMP.key, true)
     conf.setBoolean(SQLConf.CASE_SENSITIVE.key, false)

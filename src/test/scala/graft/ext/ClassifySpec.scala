@@ -53,7 +53,7 @@ class ClassifySpec extends AnyFunSuite {
     // leave local checkpoints registered until they are garbage-collected
     val before = spark.sparkContext.getPersistentRDDs.keySet
     Classify.trainQuality(labeled, "text", "label", dim = 128, epochs = 5)
-    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+    val left = spark.sparkContext.getPersistentRDDs.keySet.diff(before)
     assert(left.isEmpty, s"trainQuality left cached RDDs $left behind")
   }
 

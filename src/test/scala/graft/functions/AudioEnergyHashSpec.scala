@@ -2,7 +2,6 @@ package graft.functions
 
 import java.io.ByteArrayOutputStream
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SharedSpark

@@ -5,7 +5,6 @@ import java.io.ByteArrayOutputStream
 
 import javax.imageio.ImageIO
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SharedSpark

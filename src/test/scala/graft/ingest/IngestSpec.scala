@@ -2,7 +2,6 @@ package graft.ingest
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DateType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
 

@@ -2,8 +2,6 @@ package graft.store
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SharedSpark

@@ -172,7 +172,7 @@ class MaterializedViewSpec extends AnyFunSuite {
       .createTempDirectory("graft-mv-stream").toString
     val input = MemoryStream[(Int, String, Double, Option[Int])]
     val actions = scala.collection.mutable.ArrayBuffer[String]()
-    val q = input.toDF.toDF("id", "grp", "amount", "units")
+    val q = input.toDF().toDF("id", "grp", "amount", "units")
       .writeStream.option("checkpointLocation", ckpt).outputMode("append")
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
         graft.streaming.EventStreams

@@ -4,7 +4,6 @@ import java.time.ZoneId
 
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.GraftSqlShim
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SharedSpark

@@ -18,10 +18,8 @@ import graft.SharedSpark
   * Deterministic seeds — a failure reproduces.
   */
 class SchemaEvolutionFuzzSpec extends AnyFunSuite {
+  import SchemaEvolutionFuzzSpec.Col
   private lazy val spark = SharedSpark.spark
-
-  // column identity survives renames; `kind` widens int→long
-  private final case class Col(id: Int, var name: String, var kind: String)
 
   private def sparkType(kind: String): DataType = kind match {
     case "int"  => IntegerType
@@ -112,4 +110,9 @@ class SchemaEvolutionFuzzSpec extends AnyFunSuite {
       assert(got == expected, s"seed $seed: content mismatch")
     }
   }
+}
+
+private object SchemaEvolutionFuzzSpec {
+  // column identity survives renames; `kind` widens int→long
+  final case class Col(id: Int, var name: String, var kind: String)
 }

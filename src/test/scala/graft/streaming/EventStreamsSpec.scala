@@ -31,7 +31,7 @@ class EventStreamsSpec extends AnyFunSuite {
   test("hourlyCounts over a stream matches the batch aggregation") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, Timestamp, String, Double)]
-    val events = input.toDF.toDF("user_id", "ts", "event_type", "value")
+    val events = input.toDF().toDF("user_id", "ts", "event_type", "value")
     val query = EventStreams.hourlyCounts(events)
       .writeStream.format("memory").queryName("hourly_out")
       .outputMode("complete").start()
@@ -59,8 +59,8 @@ class EventStreamsSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val clicks = MemoryStream[(Long, Timestamp, Double)]
     val buys = MemoryStream[(Long, Timestamp, Double)]
-    val cdf = clicks.toDF.toDF("c_user", "c_ts", "c_value")
-    val bdf = buys.toDF.toDF("p_user", "p_ts", "p_value")
+    val cdf = clicks.toDF().toDF("c_user", "c_ts", "c_value")
+    val bdf = buys.toDF().toDF("p_user", "p_ts", "p_value")
     val query = EventStreams
       .joinStreams(cdf, bdf, "c_user", "p_user", "c_ts", "p_ts",
         lag = "30 minutes", watermarkDelay = "10 hours")
@@ -95,7 +95,7 @@ class EventStreamsSpec extends AnyFunSuite {
   test("stateful sessionization counts inactivity gaps across micro-batches") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, Timestamp, String, Double)]
-    val events = input.toDF.toDF("user_id", "ts", "event_type", "value")
+    val events = input.toDF().toDF("user_id", "ts", "event_type", "value")
     val query = EventStreams.sessionize(spark, events, stateTimeout = None)
       .writeStream.format("memory").queryName("sessions_out")
       .outputMode("update").start()
@@ -120,7 +120,7 @@ class EventStreamsSpec extends AnyFunSuite {
   test("dedupStream drops repeated content within the watermark") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, Timestamp, String)]
-    val events = input.toDF.toDF("event_id", "ts", "text")
+    val events = input.toDF().toDF("event_id", "ts", "text")
     val query = EventStreams.dedupStream(events, "text", "2 hours")
       .writeStream.format("memory").queryName("dedup_out")
       .outputMode("append").start()
@@ -165,11 +165,11 @@ class EventStreamsSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val input = MemoryStream[(Long, String, Timestamp)]
-    val docs = input.toDF.toDF("doc_id", "text", "ts")
+    val docs = input.toDF().toDF("doc_id", "text", "ts")
     val pairs = EventStreams.nearDupStream(spark, docs,
       "doc_id", "text", "ts", stateTimeout = None)
     val sink = "neardup_sink"
-    val q = pairs.toDF.writeStream.format("memory").queryName(sink)
+    val q = pairs.toDF().writeStream.format("memory").queryName(sink)
       .outputMode("append").start()
     val t0 = new Timestamp(1000L)
     val a = "the quick brown fox jumps over the lazy dog near the river bank"
@@ -246,7 +246,7 @@ class EventStreamsSpec extends AnyFunSuite {
       spark)
     cat.createDatabase("default")
     val input = MemoryStream[(Long, String)]
-    val cdc = input.toDF.toDF("id", "v")
+    val cdc = input.toDF().toDF("id", "v")
     cat.createTable("mirror_u", cdc.schema)
     val ckpt = Files.createTempDirectory("graft-ckpt-u").toString
     input.addData(Seq((1L, "a"), (2L, "b")))
@@ -298,12 +298,12 @@ class EventStreamsSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val input = MemoryStream[(Long, String, Timestamp)]
-    val docs = input.toDF.toDF("doc_id", "text", "ts")
+    val docs = input.toDF().toDF("doc_id", "text", "ts")
     val pairs = EventStreams.nearDupStream(spark, docs,
       "doc_id", "text", "ts", stateTimeout = None,
       eventTimeTimeoutMs = Some(60_000L)) // 1-minute horizon
     val sink = "neardup_evict_sink"
-    val q = pairs.toDF.writeStream.format("memory").queryName(sink)
+    val q = pairs.toDF().writeStream.format("memory").queryName(sink)
       .outputMode("append").start()
     def at(sec: Long) = new Timestamp(sec * 1000L)
     val a = "the quick brown fox jumps over the lazy dog near the river bank"
@@ -336,13 +336,13 @@ class EventStreamsSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val input = MemoryStream[(Long, String, Timestamp)]
-    val docs = input.toDF.toDF("doc_id", "text", "ts")
+    val docs = input.toDF().toDF("doc_id", "text", "ts")
     val pairs = EventStreams.nearDupStream(spark, docs,
       "doc_id", "text", "ts", stateTimeout = None,
       eventTimeTimeoutMs = Some(60_000L), // 1-minute horizon
       watermarkDelay = "50 seconds")
     val sink = "neardup_late_sink"
-    val q = pairs.toDF.writeStream.format("memory").queryName(sink)
+    val q = pairs.toDF().writeStream.format("memory").queryName(sink)
       .outputMode("append").start()
     def at(sec: Long) = new Timestamp(sec * 1000L)
     val a = "the quick brown fox jumps over the lazy dog near the river bank"
@@ -374,7 +374,7 @@ class EventStreamsSpec extends AnyFunSuite {
   test("the two timeout clocks are mutually exclusive") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, String, Timestamp)]
-    val docs = input.toDF.toDF("doc_id", "text", "ts")
+    val docs = input.toDF().toDF("doc_id", "text", "ts")
     val e = intercept[IllegalArgumentException](
       EventStreams.nearDupStream(spark, docs, "doc_id", "text", "ts",
         stateTimeout = Some("1 hour"), eventTimeTimeoutMs = Some(1000L)))
@@ -386,7 +386,7 @@ class EventStreamsSpec extends AnyFunSuite {
     val cat = new GraftCatalog(Files.createTempDirectory("graft-stream"), spark)
     cat.createDatabase("default")
     val input = MemoryStream[(Long, Timestamp, String, Double)]
-    val events = input.toDF.toDF("user_id", "ts", "event_type", "value")
+    val events = input.toDF().toDF("user_id", "ts", "event_type", "value")
     cat.createTable("events_t", events.schema)
 
     val ckpt = Files.createTempDirectory("graft-ckpt").toString
@@ -411,7 +411,7 @@ class EventStreamsSpec extends AnyFunSuite {
     val cat = new GraftCatalog(Files.createTempDirectory("graft-stream-p"), spark)
     cat.createDatabase("default")
     val input = MemoryStream[(Long, Timestamp, String, Double)]
-    val events = input.toDF.toDF("user_id", "ts", "event_type", "value")
+    val events = input.toDF().toDF("user_id", "ts", "event_type", "value")
     cat.createTable("events_p", events.schema,
       Some(graft.store.PartitionSpec("ts", "day")))
 
