@@ -23,16 +23,27 @@ if [ -n "$sidefiles" ]; then
   echo "[precommit] table side-file name outside LegacyMeta.scala — keep table metadata in TableMeta"
   exit 1
 fi
-# The main and test sources compile warning-free under -deprecation and
-# -Wunused:imports: -Werror (on both compiles) turns any such warning
+# One commit seam: snapshot-log writes, the WAP and branch sidecar
+# updates and the table lock are called only from the seam
+# (graft.store.TableCommit), so every snapshot is summed, guarded,
+# stamped and fed the same way.
+seam=$(git grep -nE 'SnapshotLog\.(commit|write|checkpoint|updateWap|updateBranches|publishWap|fastForward|withTableLock)' -- src/main ':!src/main/scala/graft/store/SnapshotLog.scala' ':!src/main/scala/graft/store/TableCommit.scala' || true)
+if [ -n "$seam" ]; then
+  echo "$seam"
+  echo "[precommit] snapshot-log write or table lock outside TableCommit.scala — commit through the seam"
+  exit 1
+fi
+# The main and test sources compile warning-free under -deprecation,
+# -Wunused:imports and -Wunused:privates,locals,patvars: -Werror (on
+# both compiles) turns any such warning
 # under src/main or src/test into a failed compile, which is never cached
 # as done, so every later run reports it again. QueryRegistrySpec builds
 # no session: a repeated query name, or a query that lost its oracle,
 # fails here in the same sbt start-up.
 echo "[precommit] sbt compile + Test/compile (warnings fail) + QueryRegistrySpec…"
 sbt -batch \
-  'set Compile / compile / scalacOptions ++= Seq("-deprecation", "-Wunused:imports", "-Werror")' \
-  'set Test / compile / scalacOptions ++= Seq("-deprecation", "-Wunused:imports", "-Werror")' \
+  'set Compile / compile / scalacOptions ++= Seq("-deprecation", "-Wunused:imports", "-Wunused:privates,locals,patvars", "-Werror")' \
+  'set Test / compile / scalacOptions ++= Seq("-deprecation", "-Wunused:imports", "-Wunused:privates,locals,patvars", "-Werror")' \
   'compile' 'Test/compile' 'testOnly graft.QueryRegistrySpec' >/tmp/precommit.log 2>&1 || {
   grep -E '^\[(warn|error)\] .*src/(main|test)/' /tmp/precommit.log || tail -30 /tmp/precommit.log
   echo "[precommit] COMPILE WARNING, COMPILE OR QUERY REGISTRY FAILED — commit blocked"

@@ -359,7 +359,7 @@ object Multimodal {
     * pixel re-encode needs a codec binding, out of scope here).
     * Half-up rounding via floor(x + 0.5): identical across engines,
     * unlike banker's rounding. */
-  def resize(df: DataFrame, maxSide: Int, contentCol: String = "content"): DataFrame = {
+  def resize(df: DataFrame, maxSide: Int): DataFrame = {
     val w = col("image_meta.width"); val hgt = col("image_meta.height")
     val scale = least(lit(maxSide) / greatest(w, hgt), lit(1.0))
     df.withColumn("resized_meta", struct(

@@ -307,10 +307,11 @@ object Similarity {
     * TakeOrderedAndProject, then re-rank just the candidates by cosine
     * over their dequantized SQ8 channel (a broadcast semi-join back
     * into the same pruned lists). I/O ∝ nprobe/nlist of the CODES, the
-    * trillion-vector serving shape. */
+    * trillion-vector serving shape. `vecCol` keeps the other probes'
+    * signature; the stored codes stand in for the vector column. */
   def ivfProbePq(spark: org.apache.spark.sql.SparkSession, path: String,
-      idCol: String, vecCol: String, query: Array[Float], k: Int,
-      nprobe: Int = 4, refine: Int = 0,
+      idCol: String, @annotation.unused vecCol: String,
+      query: Array[Float], k: Int, nprobe: Int = 4, refine: Int = 0,
       asOfSnapshotId: Option[Long] = None): DataFrame = {
     val st = indexStore(spark, path)
     val summary = asOfSnapshotId match {

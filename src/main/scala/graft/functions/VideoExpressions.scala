@@ -147,7 +147,6 @@ object VideoHeaderMeta {
       (u8(b, i + 2) << 8) | u8(b, i + 3)) & 0xFFFFFFFFL
   private def be64(b: Array[Byte], i: Int): Long =
     (be32(b, i) << 32) | be32(b, i + 4)
-  private def le16(b: Array[Byte], i: Int): Int = u8(b, i) | (u8(b, i + 1) << 8)
   private def le32(b: Array[Byte], i: Int): Long =
     (u8(b, i) | (u8(b, i + 1) << 8) | (u8(b, i + 2) << 16) |
       (u8(b, i + 3).toLong << 24)) & 0xFFFFFFFFL

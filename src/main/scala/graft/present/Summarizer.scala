@@ -12,10 +12,13 @@ object Summarizer {
 
   private val ScalarTuple = "\\[\\((-?[\\d.]+|'[^']*'),?\\)\\]".r
 
-  /** @param question      the user's question
+  /** @param question      the user's question (the template answers
+    *                      from the result alone; a model-backed
+    *                      summarizer reads it)
     * @param renderedResult engine output in `[(v,)]` form (`README.md:84`)
     */
-  def summarize(question: String, renderedResult: String): String =
+  def summarize(@annotation.unused question: String,
+      renderedResult: String): String =
     renderedResult match {
       case "[]" =>
         "There are no matching records for your question."

@@ -1880,7 +1880,7 @@ private[graft] object IcebergQueries {
     // Ordered conditional MERGE arms (first match wins): a negative
     // amount deletes, a larger amount updates, positive unmatched rows
     // insert — the "update if newer, else ignore" warehouse shape.
-    QuerySpec("q_sql_merge_cond", (s, dir) => {
+    QuerySpec("q_sql_merge_cond", (s, _) => {
       val cat = tempCatalog(s)
       val eng = new Engine(cat)
       eng.sql("CREATE TABLE accounts_c (id INT, balance DOUBLE, status STRING)")
@@ -1904,7 +1904,7 @@ private[graft] object IcebergQueries {
     // Catalog keyed by (database, table): a dimension table lives in its
     // own database (the reference's PC-variant layout, iceberg-PC.py:97)
     // and joins against the current database with no USE.
-    QuerySpec("q_sql_multidb", (s, dir) => {
+    QuerySpec("q_sql_multidb", (s, _) => {
       val cat = tempCatalog(s)
       val eng = new Engine(cat)
       eng.sql("CREATE DATABASE IF NOT EXISTS dimdb")
@@ -1923,7 +1923,7 @@ private[graft] object IcebergQueries {
     // SQL MERGE INTO (file-granular COW): update matched keys, insert the
     // rest — the statement that replaces the reference's manual max-id
     // continuation append (`append_iceberg.py:104-123`).
-    QuerySpec("q_sql_merge", (s, dir) => {
+    QuerySpec("q_sql_merge", (s, _) => {
       val cat = tempCatalog(s)
       val eng = new Engine(cat)
       eng.sql("CREATE TABLE accounts_m (id INT, balance DOUBLE, status STRING)")
@@ -1947,7 +1947,7 @@ private[graft] object IcebergQueries {
     // CREATE DATABASE / USE / DROP / CREATE TABLE STORED AS ICEBERG,
     // then batched INSERT VALUES (backtick columns, '' escaping, NULLs,
     // string date literals) — one snapshot per INSERT — then read back.
-    QuerySpec("q_sql_ddl_insert", (s, dir) => {
+    QuerySpec("q_sql_ddl_insert", (s, _) => {
       val cat = tempCatalog(s)
       val eng = new Engine(cat)
       eng.sql("CREATE DATABASE IF NOT EXISTS telco")
@@ -1981,7 +1981,7 @@ private[graft] object IcebergQueries {
     // must skip every already-loaded file), then an incremental third
     // file — final rows and the per-call (loaded, skipped) ledger are
     // literal-reconstructible.
-    QuerySpec("q_sql_copy_into", (s, dir) => {
+    QuerySpec("q_sql_copy_into", (s, _) => {
       val cat = tempCatalog(s)
       val eng = new Engine(cat)
       eng.sql("CREATE TABLE cp (id INT, name STRING, fee DOUBLE)")
@@ -2012,7 +2012,7 @@ private[graft] object IcebergQueries {
     // column write-DEFAULTs through the SQL engine: the pre-default
     // INSERT keeps its NULLs, post-default INSERTs store the constant,
     // DROP DEFAULT reverts — all literal-reconstructible.
-    QuerySpec("q_sql_defaults", (s, dir) => {
+    QuerySpec("q_sql_defaults", (s, _) => {
       val cat = tempCatalog(s)
       val eng = new Engine(cat)
       eng.sql("CREATE TABLE dft (id INT, status STRING, fee DOUBLE)")
@@ -2035,7 +2035,7 @@ private[graft] object IcebergQueries {
     // every later write inside the write job itself — the violating
     // INSERT fails (counted, not committed), NULL passes per the SQL
     // standard, and the surviving rows are exactly the valid inserts.
-    QuerySpec("q_sql_constraint", (s, dir) => {
+    QuerySpec("q_sql_constraint", (s, _) => {
       val cat = tempCatalog(s)
       val eng = new Engine(cat)
       eng.sql("CREATE TABLE lim (id INT, qty DOUBLE)")
@@ -2053,7 +2053,7 @@ private[graft] object IcebergQueries {
         |FROM (VALUES (1, 5.0), (2, 0.0), (3, NULL)) AS t(id, qty)
         |ORDER BY id""".stripMargin)),
 
-    QuerySpec("q_sql_row_ops", (s, dir) => {
+    QuerySpec("q_sql_row_ops", (s, _) => {
       val cat = tempCatalog(s)
       val eng = new Engine(cat)
       eng.sql("CREATE TABLE accounts (id INT, balance DOUBLE, status STRING)")

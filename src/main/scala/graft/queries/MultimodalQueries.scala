@@ -24,7 +24,7 @@ private[graft] object MultimodalQueries {
     // pairs collide at hamming 0 (C(50,2)·2 per family), cross-variant
     // at hamming 1 (50·50), families sit ≥31 bits apart — so the pair
     // census is fully reconstructible by the oracle from the counts.
-    QuerySpec("q_image_dedup", (s, dir) => {
+    QuerySpec("q_image_dedup", (s, _) => {
       import s.implicits._
       val pairs = graft.ext.Dedup.imageNearDuplicates(
         plantedImages(300).toDF("id", "content").repartition(8),
@@ -47,7 +47,7 @@ private[graft] object MultimodalQueries {
     // its minimum id (families are the residues mod 3 → roots 0, 1, 2)
     // of exactly 100 members — the multimodal dedup pipeline end to
     // end, census-checkable.
-    QuerySpec("q_image_canonical", (s, dir) => {
+    QuerySpec("q_image_canonical", (s, _) => {
       import s.implicits._
       val pairs = graft.ext.Dedup.imageNearDuplicates(
         plantedImages(300).toDF("id", "content").repartition(8),
@@ -71,7 +71,7 @@ private[graft] object MultimodalQueries {
     // envelope families × 2 one-bit variants: same census arithmetic
     // as q_image_dedup (gain invariance is spec-covered — an 8-bit
     // doubled ramp would clip, so the oracle fixture keeps unit gain).
-    QuerySpec("q_audio_dedup", (s, dir) => {
+    QuerySpec("q_audio_dedup", (s, _) => {
       def wav(env: Int => Int, gain: Int): Array[Byte] = {
         val samples = Array.tabulate(130)(k => (128 + env(k / 2) * gain).toByte)
         val out = new java.io.ByteArrayOutputStream()

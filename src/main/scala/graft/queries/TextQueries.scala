@@ -663,7 +663,7 @@ private[graft] object TextQueries {
     // misclassified to "und" (no function words to match; Chinese
     // without spaces tokenized to one giant unmatched "word") — the
     // char-trigram profiles must label ALL of them.
-    QuerySpec("q_lang_id", (s, dir) => {
+    QuerySpec("q_lang_id", (s, _) => {
       import s.implicits._
       val planted = Seq(
         (1L, "the cat is on the mat and it is very happy there"),

@@ -318,7 +318,7 @@ object SqlDdl {
         .getOrElse("")
       val sort = st.sortOrder(t) match {
         case Seq() => ""
-        case s if bucket.isDefined => "" // rendered inside CLUSTERED BY
+        case _ if bucket.isDefined => "" // rendered inside CLUSTERED BY
         case s => s"\nSORT BY (${s.mkString(", ")})"
       }
       val clustered = bucket.map { case (k, n) =>
@@ -360,7 +360,7 @@ object SqlDdl {
     * numeric columns of the pass (skew-aware selectivity). */
   private def computeStats(cat: GraftCatalog, t: String,
       colsDef: Option[String],
-      withHistogram: Boolean = false): Option[DataFrame] = {
+      withHistogram: Boolean): Option[DataFrame] = {
     val cols = colsDef.toSeq.flatMap(_.split(",").toSeq)
       .map(_.trim.stripPrefix("`").stripSuffix("`")).filter(_.nonEmpty)
     // bin count rides Spark's own knob (`…histogram.numBins`,
@@ -564,7 +564,7 @@ object SqlDdl {
       val (cat, t) = resolved(catalog, qn)
       val st = cat.store()
       // logical views describe through their evaluated schema
-      cat.views().find(_._1.equalsIgnoreCase(t)).foreach { case (v, defn) =>
+      cat.views().find(_._1.equalsIgnoreCase(t)).foreach { case (_, defn) =>
         import catalog.spark.implicits._
         val cols = new Engine(cat).sql(defn).schema.fields.toIndexedSeq
           .map(f => (f.name, f.dataType.sql.toLowerCase, ""))
@@ -925,8 +925,8 @@ object SqlDdl {
         case (Some(_), true) => throw new IllegalArgumentException(
           "DELETE with a subquery predicate is not supported on a " +
             "branch — publish or run it on main")
-        case (Some(b), false) => cat.store().deleteOnBranch(t, b,
-          org.apache.spark.sql.functions.expr(cond))
+        case (Some(b), false) => cat.store().deleteWhere(t,
+          org.apache.spark.sql.functions.expr(cond), branch = Some(b))
         case (None, true) => deleteViaSql(cat, t, cond)
         case (None, false) => cat.deleteWhere(t,
           org.apache.spark.sql.functions.expr(cond))
@@ -1330,8 +1330,8 @@ object SqlDdl {
       case (Some(_), true) => throw new IllegalArgumentException(
         "UPDATE with a subquery is not supported on a branch — publish " +
           "or run it on main")
-      case (Some(b), false) => catalog.store().updateOnBranch(table, b,
-        exprs, cond.map(expr))
+      case (Some(b), false) => catalog.store().updateWhere(table, exprs,
+        cond.map(expr), branch = Some(b))
       case (None, true) => updateViaSql(catalog, table, rawAssignments, cond)
       case (None, false) => catalog.updateWhere(table, exprs, cond.map(expr))
     }

@@ -266,8 +266,9 @@ object SqlMerge {
       // branch conf set → the COW records on the branch chain instead
       // of committing to the log (Iceberg's branch writes)
       SqlDdl.dmlBranch(tCat) match {
-        case Some(bn) => tCat.store().mergeOnBranch(target, bn, sourceKeys,
-          targetKeyCols, replaceFn, rewriteAll = arms.bySource.nonEmpty)
+        case Some(bn) => tCat.store().merge(target, sourceKeys,
+          targetKeyCols, replaceFn, rewriteAll = arms.bySource.nonEmpty,
+          branch = Some(bn))
         case None if tCat.store().morMergeMode(target) =>
           tCat.morMerge(target, sourceKeys, targetKeyCols,
             morParts, rewriteAll = arms.bySource.nonEmpty)
@@ -393,7 +394,7 @@ object SqlMerge {
         case NotMatched(cond) =>
           reachable("NOT MATCHED", arms.inserts.map(_.cond))
           arms = arms.copy(inserts = arms.inserts :+
-            parseInsert(Option(cond).map(_.trim), action, table))
+            parseInsert(Option(cond).map(_.trim), action))
         case Matched(cond) =>
           reachable("MATCHED", arms.matched.map(_.cond))
           arms = arms.copy(matched = arms.matched :+
@@ -460,8 +461,8 @@ object SqlMerge {
     sets
   }
 
-  private def parseInsert(cond: Option[String], action: String,
-      table: String): InsertArm = {
+  private def parseInsert(cond: Option[String],
+      action: String): InsertArm = {
     val Star = "(?is)^INSERT\\s+\\*\\s*$".r
     val Full = "(?is)^INSERT\\s*\\(([^)]*)\\)\\s*VALUES\\s*\\((.*)\\)\\s*$".r
     action.trim match {

@@ -100,7 +100,11 @@ final case class WapEntry(
     removedPaths: Seq[String] = Seq.empty,
     /** Operation fast-forward replays this entry as ('append' /
       * 'delete' / 'update' / 'merge'). */
-    operation: String = "append")
+    operation: String = "append",
+    /** Metadata version whose CHECK constraints guarded the write (None =
+      * unknown: a sidecar written before the field existed). Publishing
+      * re-checks the files against constraints added since. */
+    guardVersion: Option[Int] = None)
 
 /** One named branch: a fork point on the main chain plus an ordered
   * list of staged append entries (each reuses the [[WapEntry]] shape —
@@ -139,6 +143,11 @@ final case class Snapshot(
     * snapshots). */
   def fileCount: Int = if (storedFileCount >= 0) storedFileCount else files.size
   def hydrated: Boolean = manifest.isEmpty || files.nonEmpty || storedFileCount == 0
+  /** `recordCount` when exact; None while a live equality-delete ref
+    * makes it an upper bound. */
+  def exactRecordCount: Option[Long] =
+    if (summary.contains(SnapshotLog.EqualityDeletesMarker)) None
+    else Some(recordCount)
 }
 
 /** Append-only JSON commit log: `<tableDir>/snapshots.json`.
@@ -376,23 +385,6 @@ object SnapshotLog {
     }
   }
 
-  /** Append a commit; returns the new snapshot. Explicit `timestampMs`
-    * keeps tests deterministic (SURVEY.md §7.4 — injected commit times).
-    *
-    * `recordCount` is the snapshot's TOTAL when `replaceAll` and the
-    * ADDED-row delta otherwise; the cumulative total for appends is
-    * computed here, inside the lock, from the predecessor snapshot — so
-    * concurrent appends that serialized on the lock also serialize their
-    * counts (a pre-lock read of the prior count would let both writers
-    * base their total on the same stale value).
-    *
-    * The read-modify-write of the log runs under an advisory lock file
-    * (exclusive `create`, atomic on HDFS; best-effort on local FS), so
-    * two concurrent appends serialize instead of one silently losing its
-    * commit — Iceberg's optimistic-commit guarantee, via pessimistic
-    * means. Stale locks (crashed writer) are broken after
-    * [[StaleLockMs]].
-    */
   /** Thrown when an optimistic commit finds the table advanced past the
     * snapshot it was computed against — the caller must recompute from
     * the new current snapshot and retry (Iceberg's commit-conflict
@@ -400,6 +392,26 @@ object SnapshotLog {
   final class CommitConflictException(msg: String)
     extends java.util.ConcurrentModificationException(msg)
 
+  /** Append a commit; returns the new snapshot. Explicit `timestampMs`
+    * keeps tests deterministic (SURVEY.md §7.4 — injected commit times).
+    *
+    * `recordCount` is the snapshot's TOTAL when `replaceAll` and the
+    * row delta otherwise; the cumulative total for appends is computed
+    * here, inside the lock, from the predecessor snapshot — so
+    * concurrent appends that serialized on the lock also serialize their
+    * counts (a pre-lock read of the prior count would let both writers
+    * base their total on the same stale value). Without `replaceAll`,
+    * `removedPaths` leave the predecessor's file set before `newFiles`
+    * join it.
+    *
+    * The read-modify-write of the log runs under an advisory lock file
+    * (exclusive `create`, atomic on HDFS; best-effort on local FS), so
+    * two concurrent appends serialize instead of one silently losing its
+    * commit — Iceberg's optimistic-commit guarantee, via pessimistic
+    * means. Stale locks (crashed writer) are broken after
+    * [[StaleLockMs]]. `lockHeld` = the caller already holds it (the lock
+    * is not reentrant).
+    */
   def commit(
       fs: FileSystem,
       tableDir: HPath,
@@ -412,30 +424,15 @@ object SnapshotLog {
       manifestThreshold: Int = DefaultManifestThreshold,
       expectedLastId: Option[Long] = None,
       schemaVersionOf: () => Int = () => -1,
-      autoCheckpointThreshold: Int = AutoCheckpointInlineFiles): Snapshot =
-    withCommitLock(fs, tableDir) {
-      commitLocked(fs, tableDir, operation, newFiles, recordCount,
-        timestampMs, replaceAll, summary, manifestThreshold, expectedLastId,
-        schemaVersionOf, autoCheckpointThreshold)
-    }
-
-  /** [[commit]]'s body, for callers ALREADY holding the table lock
-    * (e.g. [[publishWap]], which must update the sidecar and the log
-    * under one acquisition — the lock is not reentrant). */
-  private def commitLocked(
-      fs: FileSystem,
-      tableDir: HPath,
-      operation: String,
-      newFiles: Seq[DataFile],
-      recordCount: Long,
-      timestampMs: Long,
-      replaceAll: Boolean,
-      summary: Map[String, String],
-      manifestThreshold: Int = DefaultManifestThreshold,
-      expectedLastId: Option[Long] = None,
-      schemaVersionOf: () => Int = () => -1,
-      autoCheckpointThreshold: Int = AutoCheckpointInlineFiles): Snapshot =
-    {
+      autoCheckpointThreshold: Int = AutoCheckpointInlineFiles,
+      removedPaths: Seq[String] = Seq.empty,
+      lockHeld: Boolean = false): Snapshot =
+    if (!lockHeld)
+      withTableLock(fs, tableDir)(commit(fs, tableDir, operation, newFiles,
+        recordCount, timestampMs, replaceAll, summary, manifestThreshold,
+        expectedLastId, schemaVersionOf, autoCheckpointThreshold,
+        removedPaths, lockHeld = true))
+    else {
       val existing = read(fs, tableDir)
       // Optimistic concurrency for COW writers: the carried-file list was
       // derived OUTSIDE this lock from a base snapshot; if another commit
@@ -451,7 +448,11 @@ object SnapshotLog {
       val prior = existing.lastOption
       val files =
         if (replaceAll) newFiles
-        else prior.map(hydrate(fs, tableDir, _).files).getOrElse(Seq.empty) ++ newFiles
+        else {
+          val rm = removedPaths.toSet
+          prior.map(hydrate(fs, tableDir, _).files).getOrElse(Seq.empty)
+            .filterNot(f => rm(f.path)) ++ newFiles
+        }
       val total =
         if (replaceAll) recordCount
         else prior.map(_.recordCount).getOrElse(0L) + recordCount
@@ -521,7 +522,7 @@ object SnapshotLog {
     * manifest read per query. Returns the number of entries folded. */
   def checkpoint(fs: FileSystem, tableDir: HPath,
       olderThanMs: Long): Int =
-    withCommitLock(fs, tableDir) {
+    withTableLock(fs, tableDir) {
       val all = read(fs, tableDir)
       val (next, folded) = foldEntries(fs, tableDir, all, olderThanMs)
       if (folded > 0) write(fs, tableDir, next)
@@ -575,10 +576,7 @@ object SnapshotLog {
   /** Run `f` under the table's advisory commit lock — shared by snapshot
     * commits AND schema-version allocation, so an ALTER cannot interleave
     * with a commit's version stamp. */
-  private[store] def withTableLock[T](fs: FileSystem, tableDir: HPath)(f: => T): T =
-    withCommitLock(fs, tableDir)(f)
-
-  private def withCommitLock[T](fs: FileSystem, tableDir: HPath)(f: => T): T = {
+  private[store] def withTableLock[T](fs: FileSystem, tableDir: HPath)(f: => T): T = {
     fs.mkdirs(tableDir)
     val lock = new HPath(tableDir, "commit.lock")
     val deadline = System.currentTimeMillis() + LockTimeoutMs
@@ -617,9 +615,13 @@ object SnapshotLog {
         wapId = e.get("wapId").asText(),
         timestampMs = e.get("timestampMs").asLong(),
         files = e.get("files").elements().asScala.map(readFile).toSeq,
-        recordCount = e.get("recordCount").asLong())
+        recordCount = e.get("recordCount").asLong(),
+        guardVersion = guardOf(e))
     }.toSeq
   }
+
+  private def guardOf(e: com.fasterxml.jackson.databind.JsonNode): Option[Int] =
+    Option(e.get("guardVersion")).map(_.asInt())
 
   def writeWap(fs: FileSystem, tableDir: HPath, entries: Seq[WapEntry]): Unit = {
     val p = wapPath(tableDir)
@@ -627,7 +629,8 @@ object SnapshotLog {
     val json = mapper.writerWithDefaultPrettyPrinter().writeValueAsString(
       entries.map(e => scala.collection.mutable.LinkedHashMap[String, Any](
         "wapId" -> e.wapId, "timestampMs" -> e.timestampMs,
-        "recordCount" -> e.recordCount, "files" -> e.files)))
+        "recordCount" -> e.recordCount, "files" -> e.files) ++
+        e.guardVersion.map("guardVersion" -> _)))
     val tmp = new HPath(tableDir, s"wap.json.tmp${System.nanoTime()}")
     val out = fs.create(tmp, true)
     try out.write(json.getBytes(StandardCharsets.UTF_8))
@@ -640,7 +643,7 @@ object SnapshotLog {
     * snapshot commits). */
   def updateWap(fs: FileSystem, tableDir: HPath)(
       f: Seq[WapEntry] => Seq[WapEntry]): Unit =
-    withCommitLock(fs, tableDir) {
+    withTableLock(fs, tableDir) {
       writeWap(fs, tableDir, f(readWap(fs, tableDir)))
     }
 
@@ -673,7 +676,8 @@ object SnapshotLog {
             removedPaths = Option(en.get("removedPaths")).toSeq
               .flatMap(_.elements().asScala.map(_.asText())),
             operation = Option(en.get("operation"))
-              .map(_.asText()).getOrElse("append"))
+              .map(_.asText()).getOrElse("append"),
+            guardVersion = guardOf(en))
         }.toSeq)
     }.toMap
   }
@@ -692,7 +696,8 @@ object SnapshotLog {
                 "wapId" -> e.wapId, "timestampMs" -> e.timestampMs,
                 "recordCount" -> e.recordCount, "files" -> e.files,
                 "removedPaths" -> e.removedPaths,
-                "operation" -> e.operation)))
+                "operation" -> e.operation) ++
+                e.guardVersion.map("guardVersion" -> _)))
         })
     val tmp = new HPath(tableDir, s"branches.json.tmp${System.nanoTime()}")
     val out = fs.create(tmp, true)
@@ -704,105 +709,22 @@ object SnapshotLog {
   /** Mutate the branch sidecar under the table's commit lock. */
   def updateBranches(fs: FileSystem, tableDir: HPath)(
       f: Map[String, Branch] => Map[String, Branch]): Unit =
-    withCommitLock(fs, tableDir) {
+    withTableLock(fs, tableDir) {
       writeBranches(fs, tableDir, f(readBranches(fs, tableDir)))
-    }
-
-  /** Fast-forward main to a branch head: requires main's current
-    * snapshot to BE the branch's fork point (Iceberg's fast-forward
-    * ancestor rule — anything else needs a merge, which append-only
-    * branches deliberately do not model). Each branch entry becomes one
-    * real append commit in order, re-stamped at publish time
-    * (`timestampMs + index` — Iceberg's cherry-pick also re-stamps, and
-    * reusing branch-write times could interleave main's history
-    * non-monotonically, breaking time travel's prefix property), then
-    * the branch is deleted — all under ONE lock acquisition. */
-  def fastForward(fs: FileSystem, tableDir: HPath, branch: String,
-      timestampMs: Long = System.currentTimeMillis(),
-      schemaVersionOf: () => Int = () => -1): Seq[Snapshot] =
-    withCommitLock(fs, tableDir) {
-      val branches = readBranches(fs, tableDir)
-      val b = branches.getOrElse(branch, throw new IllegalArgumentException(
-        s"no branch '$branch' " +
-          s"(branches: ${branches.keys.toSeq.sorted.mkString(", ")})"))
-      val head = read(fs, tableDir).lastOption.map(_.id).getOrElse(0L)
-      if (head != b.baseSnapshotId)
-        throw new IllegalStateException(
-          s"cannot fast-forward '$branch': main advanced from its fork " +
-            s"point $head != ${b.baseSnapshotId} — rebase by creating a " +
-            "new branch from the current head")
-      val snaps = b.entries.zipWithIndex.map { case (e, i) =>
-        if (e.operation == "append" && e.removedPaths.isEmpty)
-          commitLocked(fs, tableDir, "append", e.files, e.recordCount,
-            timestampMs + i, replaceAll = false,
-            summary = Map("branch" -> branch,
-              "added-files" -> e.files.size.toString,
-              "added-records" -> e.recordCount.toString),
-            schemaVersionOf = schemaVersionOf)
-        else {
-          // a branch COW entry replays as the row-changing commit it
-          // was: prior files minus its removals plus its rewrites, net
-          // row delta applied — so published history reads exactly like
-          // the same DML run on main
-          val prior = read(fs, tableDir).lastOption
-            .map(hydrate(fs, tableDir, _))
-          val rm = e.removedPaths.toSet
-          val files = prior.map(_.files).getOrElse(Seq.empty)
-            .filterNot(f => rm(f.path)) ++ e.files
-          val total = prior.map(_.recordCount).getOrElse(0L) + e.recordCount
-          commitLocked(fs, tableDir, e.operation, files, total,
-            timestampMs + i, replaceAll = true,
-            summary = Map("branch" -> branch,
-              "rewritten-files" -> e.removedPaths.size.toString,
-              "added-files" -> e.files.size.toString),
-            schemaVersionOf = schemaVersionOf)
-        }
-      }
-      writeBranches(fs, tableDir, branches - branch)
-      snaps
-    }
-
-  /** Publish a staged WAP change set: ONE lock acquisition covers the
-    * log commit and the sidecar removal, so no concurrent writer can
-    * interleave. The staged files are already promoted under `data/` —
-    * publishing is a metadata-only append commit (Iceberg's
-    * `publish_changes` cherry-pick). Double publishes raise: the commit
-    * log is checked for a prior `wap.id` stamp, which also closes the
-    * tiny crash window between the log write and the sidecar update. */
-  def publishWap(fs: FileSystem, tableDir: HPath, wapId: String,
-      timestampMs: Long = System.currentTimeMillis(),
-      schemaVersionOf: () => Int = () => -1): Snapshot =
-    withCommitLock(fs, tableDir) {
-      if (read(fs, tableDir).exists(_.summary.get("wap.id").contains(wapId)))
-        throw new IllegalStateException(
-          s"WAP change set '$wapId' is already published in this table")
-      val entries = readWap(fs, tableDir)
-      val entry = entries.find(_.wapId == wapId).getOrElse(
-        throw new IllegalArgumentException(
-          s"no staged WAP change set '$wapId' " +
-            s"(staged: ${entries.map(_.wapId).mkString(", ")})"))
-      val snap = commitLocked(fs, tableDir, "append", entry.files,
-        entry.recordCount, timestampMs, replaceAll = false,
-        summary = Map("wap.id" -> wapId,
-          "added-files" -> entry.files.size.toString,
-          "added-records" -> entry.recordCount.toString),
-        schemaVersionOf = schemaVersionOf)
-      writeWap(fs, tableDir, entries.filterNot(_.wapId == wapId))
-      snap
     }
 
   /** Time travel: newest snapshot with commit time <= asOfMs
     * (`FOR SYSTEM_TIME AS OF`, `app-gradio.py:138`, `README.md:100-107`).
     */
   def resolve(fs: FileSystem, tableDir: HPath, asOfMs: Option[Long]): Option[Snapshot] = {
-    val all = read(fs, tableDir)
-    val hit = asOfMs match {
-      case None     => all.lastOption
-      case Some(ts) => all.filter(_.timestampMs <= ts).lastOption
-    }
     // hydrate ONLY the resolved snapshot — reads never pay for history
-    hit.map(hydrate(fs, tableDir, _))
+    asOf(read(fs, tableDir), asOfMs).map(hydrate(fs, tableDir, _))
   }
+
+  /** The newest snapshot of `all` committed at or before `asOfMs` (the
+    * latest when None). */
+  def asOf(all: Seq[Snapshot], asOfMs: Option[Long]): Option[Snapshot] =
+    asOfMs.fold(all.lastOption)(ts => all.filter(_.timestampMs <= ts).lastOption)
 
   /** Version travel: the snapshot with exactly this id
     * (`FOR SYSTEM_VERSION AS OF <snapshot-id>`). */

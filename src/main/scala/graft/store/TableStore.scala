@@ -37,7 +37,9 @@ import org.apache.spark.sql.types._
   * snapshot BY REFERENCE — `DELETE FROM t WHERE id = 1` at 100 TB rewrites
   * one file, not the table.
   */
-final class TableStore(val root: HPath, spark: SparkSession) {
+final class TableStore(val root: HPath, spark: SparkSession)
+    extends TableCommit {
+  import TableCommit._
 
   private val fs: FileSystem =
     root.getFileSystem(spark.sessionState.newHadoopConf())
@@ -85,12 +87,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
       partition = partition.orElse(m.partition),
       partitionZone = partition.map(_ => sessionZone.getId)
         .orElse(m.partitionZone)))
-    // under the commit lock: a first append racing CREATE must not be
-    // overwritten by the empty log
-    SnapshotLog.withTableLock(fs, tableDir(table)) {
-      if (SnapshotLog.read(fs, tableDir(table)).isEmpty)
-        SnapshotLog.write(fs, tableDir(table), Seq.empty)
-    }
+    initLog(table)
   }
 
   def drop(table: String): Unit = {
@@ -111,65 +108,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
   def meta(table: String, version: Int): TableMeta =
     TableMeta.read(fs, tableDir(table), version)
 
-  private[store] def current(table: String): MetaVersion = load(table, locked = false)
-
-  /** Highest version, converting a legacy table first (under the table
-    * lock, unless the caller already holds it — the lock is a file and
-    * NOT reentrant). */
-  private def load(table: String, locked: Boolean): MetaVersion = {
-    val dir = tableDir(table)
-    TableMeta.latest(fs, dir).getOrElse {
-      if (!LegacyMeta.present(fs, dir)) MetaVersion(0, TableMeta.Empty)
-      else {
-        def migrate(): MetaVersion = TableMeta.latest(fs, dir).getOrElse {
-          LegacyMeta.migrate(fs, dir, sessionZone)
-          TableMeta.latest(fs, dir).get
-        }
-        if (locked) migrate() else SnapshotLog.withTableLock(fs, dir)(migrate())
-      }
-    }
-  }
-
-  /** The one writer of table metadata: under the table's commit lock,
-    * apply `f` to the current record and publish the result as the next
-    * version (`v<N+1>.json`, temp file + rename — a version is never
-    * rewritten). A metadata-only change adds no snapshot. Returns the
-    * new record (the current one when `f` changed nothing). */
-  private[store] def commitMeta(table: String)(f: TableMeta => TableMeta): TableMeta =
-    SnapshotLog.withTableLock(fs, tableDir(table)) {
-      val cur = load(table, locked = true)
-      // a bare snapshot log has no record: start from its files' schema
-      val base =
-        if (cur.n > 0 || !exists(table)) cur.meta
-        else TableMeta(scala.util.Try(inferredSchema(table)).getOrElse(new StructType()))
-      val next = f(base)
-      if (cur.n == 0 || next != base)
-        TableMeta.write(fs, tableDir(table), cur.n + 1, next)
-      next
-    }
-
-  /** Commit hook evaluated INSIDE the commit lock: the metadata version
-    * to stamp into the snapshot (-1 when the table has no record). When
-    * `guard` is the record a write built its CHECK guard from, a changed
-    * constraint set since then fails the commit — the rows were never
-    * checked against the new constraints. */
-  private def stamp(table: String,
-      guard: Option[MetaVersion] = None): () => Int = () => {
-    val dir = tableDir(table)
-    val n = TableMeta.latestVersion(fs, dir) match {
-      case 0 => load(table, locked = true).n
-      case v => v
-    }
-    guard.filter(_.n != n).foreach { g =>
-      if (TableMeta.read(fs, dir, n).constraints != g.meta.constraints)
-        throw new SnapshotLog.CommitConflictException(
-          s"CHECK constraints of $table changed while a write was being " +
-            "prepared — retry against the new constraints")
-    }
-    if (n == 0) -1 else n
-  }
-
-  private def inferredSchema(table: String): StructType =
+  private[store] def inferredSchema(table: String): StructType =
     spark.read.parquet(currentFiles(table): _*).schema
 
   def schema(table: String): StructType = {
@@ -290,16 +229,13 @@ final class TableStore(val root: HPath, spark: SparkSession) {
       extraSummary: Map[String, String] = Map.empty): Snapshot = {
     val mv = current(table)
     val moved = writeStaged(table, df, mv)
-    val n = moved.map(_.records).sum
     // Only the DELTA row count goes in: the cumulative recordCount is
     // computed inside the commit lock from the predecessor snapshot, so
     // two concurrent appends cannot both base their total on the same
     // stale prior count.
-    val snap = SnapshotLog.commit(fs, tableDir(table), "append", moved,
-      n, timestampMs, replaceAll = false,
-      summary = Map("added-files" -> moved.size.toString,
-        "added-records" -> n.toString) ++ extraSummary,
-      schemaVersionOf = stamp(table, Some(mv)))
+    val snap = commit(table, Change("append", timestampMs, moved,
+      delta = Some(moved.map(_.records).sum), guard = Some(mv),
+      counts = AppendCounts, summary = extraSummary))
     maybeAutoCompact(table, mv.meta)
     snap
   }
@@ -349,12 +285,13 @@ final class TableStore(val root: HPath, spark: SparkSession) {
   def stageWap(table: String, df: DataFrame, wapId: String,
       timestampMs: Long = System.currentTimeMillis()): Unit = {
     require(wapId.nonEmpty, "WAP id must be non-empty")
-    val moved = writeStaged(table, df, current(table))
-    val n = moved.map(_.records).sum
-    SnapshotLog.updateWap(fs, tableDir(table)) { entries =>
+    val mv = current(table)
+    val moved = writeStaged(table, df, mv)
+    updateWap(table) { entries =>
       require(!entries.exists(_.wapId == wapId),
         s"WAP id '$wapId' is already staged on $table")
-      entries :+ WapEntry(wapId, timestampMs, moved, n)
+      entries :+ WapEntry(wapId, timestampMs, moved, moved.map(_.records).sum,
+        guardVersion = Some(mv.n))
     }
   }
 
@@ -374,19 +311,11 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     readFileList(table, dataFilesAsOf(table, None) ++ entry.files, meta(table))
   }
 
-  /** Publish a staged change set: one atomic append commit of the
-    * already-promoted files (see [[SnapshotLog.publishWap]] — log and
-    * sidecar update under a single lock; double publish raises). */
-  def publishWap(table: String, wapId: String,
-      timestampMs: Long = System.currentTimeMillis()): Snapshot =
-    SnapshotLog.publishWap(fs, tableDir(table), wapId, timestampMs,
-      schemaVersionOf = stamp(table))
-
   /** Discard a staged change set: the sidecar entry is removed now; the
     * orphaned data files are reclaimed by the next [[vacuum]] (grace
     * window applies — same debris contract as a crashed write). */
   def discardWap(table: String, wapId: String): Unit =
-    SnapshotLog.updateWap(fs, tableDir(table)) { entries =>
+    updateWap(table) { entries =>
       require(entries.exists(_.wapId == wapId),
         s"no staged WAP change set '$wapId' on $table")
       entries.filterNot(_.wapId == wapId)
@@ -417,7 +346,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     if (atSnapshotId.isDefined)
       require(SnapshotLog.resolveVersion(fs, tableDir(table), base).isDefined,
         s"no snapshot id $base in $table")
-    SnapshotLog.updateBranches(fs, tableDir(table)) { bs =>
+    updateBranches(table) { bs =>
       require(!bs.keys.exists(_.equalsIgnoreCase(name)),
         s"branch already exists: $name")
       bs + (name -> Branch(base, Seq.empty))
@@ -426,7 +355,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
 
   /** Drop a branch; its staged files become vacuum-reclaimable debris. */
   def dropBranch(table: String, name: String): Unit =
-    SnapshotLog.updateBranches(fs, tableDir(table)) { bs =>
+    updateBranches(table) { bs =>
       val hit = bs.keys.find(_.equalsIgnoreCase(name)).getOrElse(
         throw new IllegalArgumentException(s"no branch '$name' on $table"))
       bs - hit
@@ -434,19 +363,16 @@ final class TableStore(val root: HPath, spark: SparkSession) {
 
   /** Append to a branch: the normal distributed write + promote, with
     * the commit recorded on the branch chain instead of the log — main
-    * readers never see it. Append-only by design: row-level ops on a
-    * branch would need merge semantics fast-forward cannot publish. */
+    * readers never see it. Row-level ops reach a branch through the
+    * `branch` argument of [[deleteWhere]], [[updateWhere]] and
+    * [[merge]]. */
   def appendToBranch(table: String, df: DataFrame, name: String,
       timestampMs: Long = System.currentTimeMillis()): Unit = {
-    val moved = writeStaged(table, df, current(table))
-    val n = moved.map(_.records).sum
-    SnapshotLog.updateBranches(fs, tableDir(table)) { bs =>
-      val key = bs.keys.find(_.equalsIgnoreCase(name)).getOrElse(
-        throw new IllegalArgumentException(s"no branch '$name' on $table"))
-      val b = bs(key)
-      bs + (key -> b.copy(entries = b.entries :+
-        WapEntry(s"$key-${b.entries.size}", timestampMs, moved, n)))
-    }
+    val mv = current(table)
+    val moved = writeStaged(table, df, mv)
+    commit(table, Change("append", timestampMs, moved,
+      delta = Some(moved.map(_.records).sum), guard = Some(mv),
+      branch = Some(name)))
   }
 
   /** Read a branch as a unit: the fork-point snapshot's files folded
@@ -454,14 +380,13 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     * their matched files and add rewrites), current schema. This is
     * what `FOR SYSTEM_VERSION AS OF '<branch>'` resolves to. */
   def readBranch(table: String, name: String): DataFrame =
-    readFileList(table, branchFileSet(table, branchNamed(table, name)._2),
+    readFileList(table, branchFileSet(table, branchNamed(table, name)),
       meta(table))
 
-  private def branchNamed(table: String, name: String): (String, Branch) = {
+  private def branchNamed(table: String, name: String): Branch = {
     val bs = branches(table)
-    val key = bs.keys.find(_.equalsIgnoreCase(name)).getOrElse(
+    bs.collectFirst { case (k, b) if k.equalsIgnoreCase(name) => b }.getOrElse(
       throw new IllegalArgumentException(s"no branch '$name' on $table"))
-    (key, bs(key))
   }
 
   /** A branch's CURRENT file set — fork-point files folded through the
@@ -475,133 +400,6 @@ final class TableStore(val root: HPath, spark: SparkSession) {
       val rm = e.removedPaths.toSet
       files.filterNot(f => rm(f.path)) ++ e.files
     }
-  }
-
-  // ---- branch-scoped row-level DML (Iceberg's branch writes: the WAP
-  // story for backfills — UPDATE/DELETE/MERGE staged invisibly on the
-  // branch, validated, then fast-forwarded onto main as real COW
-  // commits). Each op mirrors its main-chain twin exactly, except the
-  // base is the BRANCH's file set and the result is recorded as a
-  // branch entry (added files + removed paths + net row delta) instead
-  // of a log commit. ------------------------------------------------
-
-  /** Branch-scoped [[deleteWhere]]. */
-  def deleteOnBranch(table: String, name: String, predicate: Column,
-      timestampMs: Long = System.currentTimeMillis()): Unit =
-    withCowRetry() {
-      val mv = current(table)
-      val m = mv.meta
-      val (entriesAtPlan, cur) = branchCowBase(table, name)
-      val (matched, _) = matchedByPredicate(table, cur, predicate, m)
-      val replacement =
-        if (matched.isEmpty) None
-        else Some(readFileList(table, matched, m)
-          .filter(not(coalesce(predicate, lit(false)))))
-      branchCowRecord(table, name, "delete", matched, replacement,
-        entriesAtPlan, timestampMs, mv)
-    }
-
-  /** Branch-scoped [[updateWhere]]. */
-  def updateOnBranch(table: String, name: String,
-      assignments: Seq[(String, Column)], cond: Option[Column],
-      timestampMs: Long = System.currentTimeMillis()): Unit =
-    withCowRetry() {
-      val mv = current(table)
-      val m = mv.meta
-      val sch = m.schema
-      assignments.foreach { case (n, _) =>
-        require(sch.fieldNames.exists(_.equalsIgnoreCase(n)),
-          s"unknown column '$n' in UPDATE $table")
-      }
-      val (entriesAtPlan, cur) = branchCowBase(table, name)
-      val (matched, _) = cond match {
-        case Some(p) => matchedByPredicate(table, cur, p, m)
-        case None    => (cur, Seq.empty[DataFile])
-      }
-      val replacement =
-        if (matched.isEmpty) None
-        else {
-          val matchedPred = coalesce(cond.getOrElse(lit(true)), lit(false))
-          val byName = assignments.map { case (n, v) => n.toLowerCase -> v }.toMap
-          Some(readFileList(table, matched, m).select(sch.fields.toIndexedSeq.map { f =>
-            byName.get(f.name.toLowerCase) match {
-              case Some(value) =>
-                when(matchedPred, value.cast(f.dataType))
-                  .otherwise(col(f.name)).as(f.name)
-              case None => col(f.name)
-            }
-          }: _*))
-        }
-      branchCowRecord(table, name, "update", matched, replacement,
-        entriesAtPlan, timestampMs, mv)
-    }
-
-  /** Branch-scoped [[merge]]. */
-  def mergeOnBranch(table: String, name: String, sourceKeys: DataFrame,
-      keyCols: Seq[String], replace: DataFrame => DataFrame,
-      timestampMs: Long = System.currentTimeMillis(),
-      rewriteAll: Boolean = false): Unit =
-    withCowRetry() {
-      val mv = current(table)
-      val m = mv.meta
-      val (entriesAtPlan, cur) = branchCowBase(table, name)
-      val (matched, _) =
-        if (rewriteAll) (cur, Seq.empty[DataFile])
-        else matchedByKeys(table, cur, sourceKeys, keyCols, m)
-      val replacement = replace(readFileList(table, matched, m))
-      branchCowRecord(table, name, "merge", matched, Some(replacement),
-        entriesAtPlan, timestampMs, mv)
-    }
-
-  private def branchCowBase(table: String, name: String): (Int, Seq[DataFile]) = {
-    val (_, b) = branchNamed(table, name)
-    (b.entries.size, branchFileSet(table, b))
-  }
-
-  /** Stage the rewrite, then record it on the branch chain under the
-    * sidecar lock. OPTIMISTIC like [[cowCommit]]: the matched/carried
-    * split was planned against a branch state read outside the lock —
-    * if the branch gained entries since, throw the conflict and let the
-    * caller's bounded retry recompute. */
-  private def branchCowRecord(table: String, name: String, operation: String,
-      matched: Seq[DataFile], replacement: Option[DataFrame],
-      entriesAtPlan: Int, timestampMs: Long, mv: MetaVersion): Unit = {
-    val newFiles = replacement.map(writeStaged(table, _, mv)).getOrElse(Seq.empty)
-    val removedRows = TableStore.inParallel(matched)(recordsOf(table, _)).sum
-    val delta = newFiles.map(_.records).sum - removedRows
-    SnapshotLog.updateBranches(fs, tableDir(table)) { bs =>
-      val key = bs.keys.find(_.equalsIgnoreCase(name)).getOrElse(
-        throw new IllegalArgumentException(s"no branch '$name' on $table"))
-      val b = bs(key)
-      if (b.entries.size != entriesAtPlan)
-        throw new SnapshotLog.CommitConflictException(
-          s"branch '$name' of $table advanced while a '$operation' was " +
-            "being prepared — recompute and retry")
-      bs + (key -> b.copy(entries = b.entries :+ WapEntry(
-        s"$key-${b.entries.size}", timestampMs, newFiles, delta,
-        removedPaths = matched.map(_.path), operation = operation)))
-    }
-  }
-
-  /** Fast-forward main to the branch head (see
-    * [[SnapshotLog.fastForward]] — ancestor rule enforced, entries
-    * become real commits in order, branch deleted, one lock).
-    *
-    * Replayed branch COW commits (update/delete/merge) carry NO stored
-    * change files even when the table's change feed is enabled — the
-    * publish is metadata-only by design. The batch feed
-    * ([[readChanges]]) recovers their row-level effect from the file
-    * diff; the STREAMING CDC source, which requires stored change files
-    * for COW history, raises on such commits — run a diff-path
-    * catch-up ([[graft.streaming.ChangeFeedFollower]]) past the
-    * publish point before resuming a stream. */
-  def fastForward(table: String, name: String,
-      timestampMs: Long = System.currentTimeMillis()): Seq[Snapshot] = {
-    val bs = branches(table)
-    val key = bs.keys.find(_.equalsIgnoreCase(name)).getOrElse(
-      throw new IllegalArgumentException(s"no branch '$name' on $table"))
-    SnapshotLog.fastForward(fs, tableDir(table), key, timestampMs,
-      schemaVersionOf = stamp(table))
   }
 
   /** Highest streaming batch id `sinkId` has committed into this table
@@ -623,21 +421,13 @@ final class TableStore(val root: HPath, spark: SparkSession) {
       operation: String = "replace",
       extraSummary: Map[String, String] = Map.empty): Snapshot = {
     // change-feed parity for full overwrites (INSERT OVERWRITE, index
-    // rebuilds): the previous content is the "removed" side of the
-    // diff. Layout-only rewrites pass the rows-preserved marker and
-    // skip inside writeChangeFiles, same as the COW path.
-    val prevFiles = SnapshotLog.resolve(fs, tableDir(table), None)
-      .map(_.files).getOrElse(Seq.empty)
+    // rebuilds): the content the commit replaces is the "removed" side
+    // of the diff. Layout-only rewrites pass the rows-preserved marker
+    // and write no change files, same as the COW path.
     val mv = current(table)
     val moved = writeStaged(table, df, mv)
-    val n = moved.map(_.records).sum
-    val cdcSummary =
-      writeChangeFiles(table, prevFiles, moved, extraSummary, mv.meta)
-    SnapshotLog.commit(fs, tableDir(table), operation, moved, n, timestampMs,
-      replaceAll = true,
-      summary = Map("added-files" -> moved.size.toString,
-        "total-records" -> n.toString) ++ extraSummary ++ cdcSummary,
-      schemaVersionOf = stamp(table, Some(mv)))
+    commit(table, Change(operation, timestampMs, moved, guard = Some(mv),
+      counts = Seq(AddedFiles, TotalRecords), summary = extraSummary))
   }
 
   /** Newest snapshot committed at or before `tsMs` (time-travel
@@ -741,7 +531,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     // a commit that landed after the scan was never checked: re-check
     // the files it added under the lock, so no violating row can end up
     // under the new constraint (writes guarded without it fail their
-    // commit from here on — see [[stamp]])
+    // commit from here on — see [[TableCommit.commit]])
     commitMeta(table) { cur =>
       unused(cur)
       val now = SnapshotLog.resolve(fs, tableDir(table), None)
@@ -793,7 +583,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     * table's spec when one exists), promote the part files into data/,
     * return their [[DataFile]] entries with footer row counts and
     * partition values. `mv` is the record the write is shaped and
-    * guarded by; a commit of the files passes it to [[stamp]]. */
+    * guarded by; a commit of the files passes it as its guard. */
   private def writeStaged(table: String, df0: DataFrame,
       mv: MetaVersion): Seq[DataFile] = {
     val m = mv.meta
@@ -981,7 +771,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
 
   private def promoteOne(table: String, part: HPath,
       partition: Map[String, String],
-      nameFn: String => String = TableStore.defaultPromotedName): DataFile = {
+      nameFn: String => String): DataFile = {
     fs.mkdirs(dataDir(table))
     val name = nameFn(part.getName)
     val target = new HPath(dataDir(table), name)
@@ -1024,7 +814,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     finally reader.close()
   }
 
-  private def recordsOf(table: String, f: DataFile): Long =
+  private[store] def recordsOf(table: String, f: DataFile): Long =
     if (f.records >= 0) f.records else parquetRowCount(absPath(table, f.path))
 
   def currentFiles(table: String): Seq[String] =
@@ -1045,13 +835,8 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     * same contract as [[snapshotMetaAsOf]]). */
   def recordCountAsOf(table: String, asOfMs: Option[Long]): Option[Long] = {
     if (!exists(table)) return None
-    val all = SnapshotLog.read(fs, tableDir(table))
-    val hit = asOfMs match {
-      case None     => all.lastOption
-      case Some(ts) => all.filter(_.timestampMs <= ts).lastOption
-    }
-    hit.filterNot(_.summary.get(SnapshotLog.EqualityDeletesMarker)
-      .contains("true")).map(_.recordCount)
+    val hit = SnapshotLog.asOf(SnapshotLog.read(fs, tableDir(table)), asOfMs)
+    hit.flatMap(_.exactRecordCount)
   }
 
   /** Record count of an exact snapshot id (None = unknown id OR an
@@ -1060,10 +845,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
   def recordCountVersion(table: String, snapshotId: Long): Option[Long] =
     if (!exists(table)) None
     else SnapshotLog.read(fs, tableDir(table))
-      .find(_.id == snapshotId)
-      .filterNot(_.summary.get(SnapshotLog.EqualityDeletesMarker)
-        .contains("true"))
-      .map(_.recordCount)
+      .find(_.id == snapshotId).flatMap(_.exactRecordCount)
 
   /** Total on-disk data bytes of the snapshot AS OF `asOfMs` (latest
     * when None) from the log entry alone — NO manifest hydration (the
@@ -1073,11 +855,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
   def totalDataBytesAsOf(table: String,
       asOfMs: Option[Long] = None): Option[Long] = {
     if (!exists(table)) return None
-    val all = SnapshotLog.read(fs, tableDir(table))
-    val hit = asOfMs match {
-      case None     => all.lastOption
-      case Some(ts) => all.filter(_.timestampMs <= ts).lastOption
-    }
+    val hit = SnapshotLog.asOf(SnapshotLog.read(fs, tableDir(table)), asOfMs)
     hit.flatMap(_.summary.get(SnapshotLog.TotalDataBytesKey))
       .flatMap(_.toLongOption)
   }
@@ -1101,9 +879,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     val all = SnapshotLog.read(fs, dir)
     // equality deletes make recordCount an UPPER bound — surface -1 so
     // metadata COUNT declines to the scan (log-only check, no hydration)
-    def countOf(s: Snapshot): Long =
-      if (s.summary.contains(SnapshotLog.EqualityDeletesMarker)) -1L
-      else s.recordCount
+    def countOf(s: Snapshot): Long = s.exactRecordCount.getOrElse(-1L)
     asOfMs match {
       case None => all.lastOption match {
         case None => Some((m.schema, 0L, () => Seq.empty))
@@ -1123,9 +899,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     else {
       val dir = tableDir(table)
       SnapshotLog.read(fs, dir).find(_.id == snapshotId).map(s =>
-        (schemaAt(table, s, meta(table)),
-          if (s.summary.contains(SnapshotLog.EqualityDeletesMarker)) -1L
-          else s.recordCount,
+        (schemaAt(table, s, meta(table)), s.exactRecordCount.getOrElse(-1L),
           () => SnapshotLog.hydrate(fs, dir, s).files))
     }
 
@@ -1313,7 +1087,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
       .getOrElse(throw new IllegalArgumentException(
         s"table $table has no snapshot id $snapshotId"))
     val m = meta(table)
-    readFileListAs(table, pruneList(table, snap.files, predicate, m),
+    readFileListAs(table, pruneList(snap.files, predicate, m),
       schemaAt(table, snap, m), m).filter(predicate)
   }
 
@@ -1339,14 +1113,14 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     val m = meta(table)
     asOfMs match {
     case None =>
-      val kept = pruneList(table, dataFilesAsOf(table, None), predicate, m)
+      val kept = pruneList(dataFilesAsOf(table, None), predicate, m)
       (readFileList(table, kept, m), kept)
     // time travel: same snapshot-schema binding as read() — a pruned
     // AS-OF read must not render a different schema than the unpruned one
     case Some(_) =>
       SnapshotLog.resolve(fs, tableDir(table), asOfMs) match {
         case Some(snap) =>
-          val kept = pruneList(table, snap.files, predicate, m)
+          val kept = pruneList(snap.files, predicate, m)
           (readFileListAs(table, kept, schemaAt(table, snap, m), m), kept)
         case None => (readFileList(table, Seq.empty, m), Seq.empty)
       }
@@ -1357,7 +1131,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     * assertions). */
   def prunedFiles(table: String, predicate: Column,
       asOfMs: Option[Long] = None): Seq[DataFile] =
-    pruneList(table, dataFilesAsOf(table, asOfMs), predicate, meta(table))
+    pruneList(dataFilesAsOf(table, asOfMs), predicate, meta(table))
 
   /** Dynamic file pruning (the join-driven skipping Databricks calls
     * DFP): the files a scan for rows whose `keyCol` is one of `keys`
@@ -1380,7 +1154,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     require(sch.fieldNames.exists(_.equalsIgnoreCase(keyCol)),
       s"join-prune column '$keyCol' not in schema of $table")
     if (keys.isEmpty) return Seq.empty
-    pruneList(table, dataFilesAsOf(table, None),
+    pruneList(dataFilesAsOf(table, None),
       col(keyCol).isin(keys: _*), m)
   }
 
@@ -1399,7 +1173,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
   private[graft] def readPrunedFrom(table: String, files: Seq[DataFile],
       predicate: Column): DataFrame = {
     val m = meta(table)
-    readFileList(table, pruneList(table, files, predicate, m), m)
+    readFileList(table, pruneList(files, predicate, m), m)
   }
 
   /** The subset of an already-fetched file list the prune keeps — for
@@ -1409,14 +1183,14 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     * size and mis-ranked out of a broadcast). */
   private[graft] def prunedSubset(table: String, files: Seq[DataFile],
       predicate: Column, m: TableMeta): Seq[DataFile] =
-    pruneList(table, files, predicate, m)
+    pruneList(files, predicate, m)
 
   /** Relation over an explicit (already pruned) file list. */
   private[graft] def readFromFileList(table: String,
       files: Seq[DataFile], m: TableMeta): DataFrame =
     readFileList(table, files, m)
 
-  private def pruneList(table: String, files: Seq[DataFile],
+  private def pruneList(files: Seq[DataFile],
       predicate: Column, m: TableMeta): Seq[DataFile] = {
     if (files.isEmpty) return files
     val (hasPart, rangesOf) = fileRangeInfo(m)
@@ -1582,10 +1356,10 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     }.getOrElse(org.apache.spark.sql.catalyst.expressions.Literal.TrueLiteral)
   }
 
-  private def sessionZone: ZoneId =
+  private[store] def sessionZone: ZoneId =
     ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone)
 
-  private def readFileList(table: String, files: Seq[DataFile],
+  private[store] def readFileList(table: String, files: Seq[DataFile],
       m: TableMeta): DataFrame = {
     // bucket(n, key) tables: attach the BucketSpec so the scan reports
     // HashPartitioning(key, n) and same-bucketed joins plan shuffle-free.
@@ -1617,7 +1391,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     readFileListAs(table, files, m.schema, m, buckets)
   }
 
-  private def readFileListAs(table: String, files: Seq[DataFile],
+  private[store] def readFileListAs(table: String, files: Seq[DataFile],
       sch: StructType,
       m: TableMeta,
       buckets: Option[BucketSpec] = None,
@@ -1798,12 +1572,12 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     readFileListAs(table, added, schemaAt(table, to, m), m)
   }
 
-  /** The (added files, target snapshot) a [[readIncremental]] scan covers
-    * — exposed so callers/tests can assert the delta-only read. */
-  def incrementalFiles(table: String, fromId: Long,
-      toId: Option[Long] = None): (Seq[DataFile], Snapshot) = {
-    val dir = tableDir(table)
-    val all = SnapshotLog.read(fs, dir)
+  /** The log and the index range `(fromIdx, toIdx]` of the snapshot range
+    * `(fromId, toId]` (`fromId` 0 = from the beginning, `toId` None =
+    * the current snapshot); unknown ids and an inverted range raise. */
+  private def snapshotRange(table: String, fromId: Long,
+      toId: Option[Long]): (Seq[Snapshot], Int, Int) = {
+    val all = SnapshotLog.read(fs, tableDir(table))
     def idx(id: Long, what: String): Int = {
       val i = all.indexWhere(_.id == id)
       require(i >= 0, s"table $table has no snapshot id $id ($what)")
@@ -1818,6 +1592,15 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     val fromIdx = if (fromId == 0L) -1 else idx(fromId, "fromId")
     require(fromIdx <= toIdx,
       s"fromId $fromId is newer than toId ${all(toIdx).id} on $table")
+    (all, fromIdx, toIdx)
+  }
+
+  /** The (added files, target snapshot) a [[readIncremental]] scan covers
+    * — exposed so callers/tests can assert the delta-only read. */
+  def incrementalFiles(table: String, fromId: Long,
+      toId: Option[Long] = None): (Seq[DataFile], Snapshot) = {
+    val dir = tableDir(table)
+    val (all, fromIdx, toIdx) = snapshotRange(table, fromId, toId)
     val range = all.slice(fromIdx + 1, toIdx + 1)
     range.filterNot(_.operation == "append") match {
       case Seq() => ()
@@ -1846,21 +1629,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
   def incrementalAppendFiles(table: String, fromId: Long,
       toId: Option[Long] = None): (Seq[DataFile], Snapshot) = {
     val dir = tableDir(table)
-    val all = SnapshotLog.read(fs, dir)
-    def idx(id: Long, what: String): Int = {
-      val i = all.indexWhere(_.id == id)
-      require(i >= 0, s"table $table has no snapshot id $id ($what)")
-      i
-    }
-    val toIdx = toId match {
-      case Some(id) => idx(id, "toId")
-      case None =>
-        require(all.nonEmpty, s"table $table has no snapshots")
-        all.size - 1
-    }
-    val fromIdx = if (fromId == 0L) -1 else idx(fromId, "fromId")
-    require(fromIdx <= toIdx,
-      s"fromId $fromId is newer than toId ${all(toIdx).id} on $table")
+    val (all, fromIdx, toIdx) = snapshotRange(table, fromId, toId)
     var prev: Set[String] =
       if (fromIdx < 0) Set.empty
       else SnapshotLog.hydrate(fs, dir, all(fromIdx)).filePaths.toSet
@@ -1913,21 +1682,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
       toId: Option[Long] = None): DataFrame = {
     val m = meta(table)
     val dir = tableDir(table)
-    val all = SnapshotLog.read(fs, dir)
-    def idx(id: Long, what: String): Int = {
-      val i = all.indexWhere(_.id == id)
-      require(i >= 0, s"table $table has no snapshot id $id ($what)")
-      i
-    }
-    val toIdx = toId match {
-      case Some(id) => idx(id, "toId")
-      case None =>
-        require(all.nonEmpty, s"table $table has no snapshots")
-        all.size - 1
-    }
-    val fromIdx = if (fromId == 0L) -1 else idx(fromId, "fromId")
-    require(fromIdx <= toIdx,
-      s"fromId $fromId is newer than toId ${all(toIdx).id} on $table")
+    val (all, fromIdx, toIdx) = snapshotRange(table, fromId, toId)
     val sch = schemaAt(table, all(toIdx), m)
     val metaFree = sch.fields.forall(f => !TableStore.hasMapType(f.dataType))
     def tagged(df: DataFrame, ct: String, s: Snapshot): DataFrame =
@@ -2064,16 +1819,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
   private[graft] def changeFilePlan(table: String, fromId: Long,
       toId: Long): Seq[(String, Boolean, String, Long, Long)] = {
     val dir = tableDir(table)
-    val all = SnapshotLog.read(fs, dir)
-    def idx(id: Long, what: String): Int = {
-      val i = all.indexWhere(_.id == id)
-      require(i >= 0, s"table $table has no snapshot id $id ($what)")
-      i
-    }
-    val toIdx = idx(toId, "toId")
-    val fromIdx = if (fromId == 0L) -1 else idx(fromId, "fromId")
-    require(fromIdx <= toIdx,
-      s"fromId $fromId is newer than toId $toId on $table")
+    val (all, fromIdx, toIdx) = snapshotRange(table, fromId, Some(toId))
     var prev: Set[String] =
       if (fromIdx < 0) Set.empty
       else SnapshotLog.hydrate(fs, dir, all(fromIdx)).filePaths.toSet
@@ -2118,7 +1864,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     * manage their own file sets. */
   private[graft] def pruneDataFiles(table: String, files: Seq[DataFile],
       predicate: Column): Seq[DataFile] =
-    pruneList(table, files, predicate, meta(table))
+    pruneList(files, predicate, meta(table))
 
   /** `tbl$snapshots` metadata DataFrame (Iceberg's snapshots metadata
     * table): one row per commit with its parent id and summary map —
@@ -2172,7 +1918,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     */
   private def matchedByPredicate(table: String, baseFiles: Seq[DataFile],
       predicate: Column, m: TableMeta): (Seq[DataFile], Seq[DataFile]) = {
-    val surviving = pruneList(table, baseFiles, predicate, m) // stage 1: partition prune
+    val surviving = pruneList(baseFiles, predicate, m) // stage 1: partition prune
     val partCarried = baseFiles.diff(surviving)
     val pe = analyzedPredicate(m, predicate)
     // footer reads are independent driver metadata ops: parallelize.
@@ -2234,7 +1980,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
       else {
         val vals = sample.map(_.get(0)).filter(_ != null).toSeq
         if (vals.isEmpty) Seq.empty
-        else pruneList(table, statCand, col(keyCols.head).isin(vals: _*), m)
+        else pruneList(statCand, col(keyCols.head).isin(vals: _*), m)
       }
     }
 
@@ -2251,7 +1997,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
       if (lo == null || hi == null) lit(true)
       else col(k) >= lit(lo) && col(k) <= lit(hi)
     }.reduce(_ && _)
-    val surviving = pruneList(table, files, rangePred, m)
+    val surviving = pruneList(files, rangePred, m)
     val partCarried = files.diff(surviving)
     val pe = analyzedPredicate(m, rangePred)
     val rangeCols = pe.references.map(_.name.toLowerCase).toSet
@@ -2277,29 +2023,23 @@ final class TableStore(val root: HPath, spark: SparkSession) {
   }
 
   /** Commit `carried` by reference plus the rewritten `replacement` rows
-    * as fresh files — the file-granular COW commit. OPTIMISTIC: the
-    * matched/carried split was computed outside the commit lock against
-    * `baseId`; if another writer advanced the table since, the commit
-    * throws [[SnapshotLog.CommitConflictException]] instead of silently
+    * as fresh files — the file-granular COW commit, on main or as an
+    * entry of `branch`. OPTIMISTIC: the matched/carried split was
+    * computed outside the commit lock against `baseId`; if another writer
+    * advanced the table (or the branch) since, the commit throws
+    * [[SnapshotLog.CommitConflictException]] instead of silently
     * dropping that writer's changes (Iceberg's conflict contract). The
     * public row-level ops recompute and retry a bounded number of times. */
   private def cowCommit(table: String, mv: MetaVersion, operation: String,
       carried: Seq[DataFile], matched: Seq[DataFile],
       replacement: Option[DataFrame], timestampMs: Long,
-      baseId: Long, extraSummary: Map[String, String] = Map.empty): Snapshot = {
+      baseId: Long, extraSummary: Map[String, String] = Map.empty,
+      branch: Option[String] = None): Snapshot = {
     val newFiles = replacement.map(writeStaged(table, _, mv)).getOrElse(Seq.empty)
-    val total = TableStore.inParallel(carried)(recordsOf(table, _)).sum +
-      newFiles.map(_.records).sum
-    val cdcSummary =
-      writeChangeFiles(table, matched, newFiles, extraSummary, mv.meta)
-    SnapshotLog.commit(fs, tableDir(table), operation, carried ++ newFiles,
-      total, timestampMs, replaceAll = true,
-      summary = Map(
-        "rewritten-files" -> matched.size.toString,
-        "carried-files" -> carried.size.toString,
-        "added-files" -> newFiles.size.toString) ++ extraSummary ++ cdcSummary,
-      expectedLastId = Some(baseId),
-      schemaVersionOf = stamp(table, Some(mv)))
+    commit(table, Change(operation, timestampMs, carried ++ newFiles,
+      base = Some(baseId), removed = matched, added = newFiles,
+      guard = Some(mv), counts = RewriteCounts, summary = extraSummary,
+      branch = branch))
   }
 
   /** BOTH directions of the multiset diff between `removed` and `added`
@@ -2314,7 +2054,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     * exchange reuse dedupes). Multiset semantics identical: group-by
     * equality is exceptAll's own NULL-safe, float-normalized equality,
     * and ReplicateRows is the generator exceptAll itself plans. */
-  private def changeDiff(removed: DataFrame, added: DataFrame): DataFrame = {
+  private[store] def changeDiff(removed: DataFrame, added: DataFrame): DataFrame = {
     import org.apache.spark.sql.GraftSqlShim
     val cols = removed.columns.toSeq
     // counter names derived collision-free from the input schema: a
@@ -2343,43 +2083,6 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     }
     side(col(nrCol) - col(naCol), "delete")
       .unionByName(side(col(naCol) - col(nrCol), "insert"))
-  }
-
-  /** Materialized change files (Delta CDF's design): when the table's
-    * change feed is enabled, a COW commit writes its own row-level diff
-    * — 'delete' rows from the removed files minus the rewrite, 'insert'
-    * rows vice versa — as Parquet under `cdc/<uuid>/` BEFORE the log
-    * commit, and records the directory in the commit summary. The diff
-    * reads only the files this commit touched (one extra job ∝ the
-    * rewrite, the price Delta pays too); [[readChanges]] then serves
-    * the commit from the stored files at cost ∝ |changes| instead of
-    * re-diffing. Skipped for row-preserving rewrites (nothing to
-    * record) and map-typed schemas (set ops cannot compare maps — the
-    * read-side diff rejects those too, so behavior stays consistent). */
-  private def writeChangeFiles(table: String, matched: Seq[DataFile],
-      newFiles: Seq[DataFile], extraSummary: Map[String, String],
-      m: TableMeta): Map[String, String] = {
-    if (!m.changeFeedEnabled) return Map.empty
-    if (extraSummary.get(TableStore.RowsPreservedKey).contains("true"))
-      return Map.empty
-    if (matched.isEmpty && newFiles.isEmpty) return Map.empty
-    val sch = m.schema
-    if (sch.fields.exists(f => TableStore.hasMapType(f.dataType)))
-      return Map.empty
-    val removedDf = readFileListAs(table, matched, sch, m)
-    val addedDf = readFileListAs(table, newFiles, sch, m)
-    // one fused count-and-replicate for BOTH diff directions (see
-    // changeDiff) — the former exceptAll pair aggregated twice
-    val changes = changeDiff(removedDf, addedDf)
-    // bound the change-file count to the commit's own footprint: the
-    // exceptAll shuffle would otherwise emit one (usually tiny) file
-    // per shuffle partition on EVERY commit — the small-files problem,
-    // self-inflicted, in the metadata channel
-    val nOut = math.max(1, math.min(matched.size + newFiles.size, 16))
-    val rel = s"cdc/${UUID.randomUUID()}"
-    changes.coalesce(nOut).write.mode(SaveMode.Overwrite)
-      .parquet(new HPath(tableDir(table), rel).toString)
-    Map(TableStore.CdcDirKey -> rel)
   }
 
   /** Whether the table materializes change files at COW commits
@@ -2452,12 +2155,19 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     commitMeta(table)(m =>
       m.copy(properties = withChangeFeed(m.properties, enabled)))
 
-  /** Current snapshot (hydrated) + its id, the base a COW op computes
-    * against; id 0 = empty table. */
-  private def cowBase(table: String): (Long, Seq[DataFile]) = {
-    val snap = SnapshotLog.resolve(fs, tableDir(table), None)
-    (snap.map(_.id).getOrElse(0L), snap.map(_.files).getOrElse(Seq.empty))
-  }
+  /** The base a COW op computes against: the current snapshot's id (0 =
+    * empty table) and files, or on a branch its entry count and file
+    * set. */
+  private def cowBase(table: String,
+      branch: Option[String] = None): (Long, Seq[DataFile]) =
+    branch match {
+      case Some(name) =>
+        val b = branchNamed(table, name)
+        (b.entries.size.toLong, branchFileSet(table, b))
+      case None =>
+        val snap = SnapshotLog.resolve(fs, tableDir(table), None)
+        (snap.map(_.id).getOrElse(0L), snap.map(_.files).getOrElse(Seq.empty))
+    }
 
   // -------------------------------------------------------------------
   // Bucketed tables (CLUSTERED BY … INTO n BUCKETS)
@@ -2479,34 +2189,33 @@ final class TableStore(val root: HPath, spark: SparkSession) {
       case sp if sp.transform == "bucket" => (sp.column, sp.param.get)
     }
 
-  /** Retry a COW op on commit conflict: each attempt recomputes its
-    * matched/carried split from the then-current snapshot. */
-  private def withCowRetry[T](attempts: Int = 3)(op: => T): T =
-    try op catch {
-      case _: SnapshotLog.CommitConflictException if attempts > 1 =>
-        withCowRetry(attempts - 1)(op)
-    }
-
   /** Copy-on-write row deletion: rewrite ONLY files containing matching
     * rows, dropping those rows; carry every other file by reference.
     * SQL DELETE removes only rows where the predicate is TRUE — a NULL
     * predicate (e.g. `balance = 0` on a NULL balance) must keep the row,
-    * so the kept-set filter coalesces NULL to false before negating. */
+    * so the kept-set filter coalesces NULL to false before negating.
+    *
+    * With a `branch` (Iceberg's branch writes: the WAP story for
+    * backfills), the base is the branch's file set and the rewrite is
+    * recorded as a branch entry, invisible on main until fast-forward
+    * publishes it; branch ops are always copy-on-write and write no
+    * change files. The same holds for [[updateWhere]] and [[merge]]. */
   def deleteWhere(table: String, predicate: Column,
-      timestampMs: Long = System.currentTimeMillis()): Snapshot =
-    if (morMode(table, TableStore.DeleteModeProp))
+      timestampMs: Long = System.currentTimeMillis(),
+      branch: Option[String] = None): Snapshot =
+    if (branch.isEmpty && morMode(table, TableStore.DeleteModeProp))
       morDeleteWhere(table, predicate, timestampMs)
     else withCowRetry() {
       val mv = current(table)
       val m = mv.meta
-      val (baseId, baseFiles) = cowBase(table)
+      val (baseId, baseFiles) = cowBase(table, branch)
       val (matched, carried) = matchedByPredicate(table, baseFiles, predicate, m)
       val replacement =
         if (matched.isEmpty) None
         else Some(readFileList(table, matched, m)
           .filter(not(coalesce(predicate, lit(false)))))
       cowCommit(table, mv, "delete", carried, matched, replacement,
-        timestampMs, baseId)
+        timestampMs, baseId, branch = branch)
     }
 
   /** Copy-on-write UPDATE: rewrite only files containing matched rows.
@@ -2515,18 +2224,19 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     * the matched files' rows gives exactly that. */
   def updateWhere(table: String, assignments: Seq[(String, Column)],
       cond: Option[Column],
-      timestampMs: Long = System.currentTimeMillis()): Snapshot = {
+      timestampMs: Long = System.currentTimeMillis(),
+      branch: Option[String] = None): Snapshot = {
     val sch = meta(table).schema
     assignments.foreach { case (n, _) =>
       require(sch.fieldNames.exists(_.equalsIgnoreCase(n)),
         s"unknown column '$n' in UPDATE $table")
     }
-    if (morMode(table, TableStore.UpdateModeProp))
+    if (branch.isEmpty && morMode(table, TableStore.UpdateModeProp))
       return morUpdateWhere(table, assignments, cond, timestampMs)
     withCowRetry() {
       val mv = current(table)
       val m = mv.meta
-      val (baseId, baseFiles) = cowBase(table)
+      val (baseId, baseFiles) = cowBase(table, branch)
       val (matched, carried) = cond match {
         case Some(p) => matchedByPredicate(table, baseFiles, p, m)
         case None    => (baseFiles, Seq.empty[DataFile])
@@ -2546,7 +2256,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
           }: _*))
         }
       cowCommit(table, mv, "update", carried, matched, replacement,
-        timestampMs, baseId)
+        timestampMs, baseId, branch = branch)
     }
   }
 
@@ -2667,28 +2377,11 @@ final class TableStore(val root: HPath, spark: SparkSession) {
       baseId: Long,
       matched: Seq[DataFile], carried: Seq[DataFile], doomed: DataFrame,
       insertRows: Option[DataFrame], timestampMs: Long): Snapshot = {
-    val m = mv.meta
-    val dir = tableDir(table)
-    val rel = s"${TableStore.DeletesDir}/delete-${UUID.randomUUID()}"
-    val abs = new HPath(dir, rel).toString
-    val counts: Map[String, Long] =
-      if (matched.isEmpty) Map.empty
-      else {
-        doomed.select(
-          col(TableStore.MorFileCol).as(TableStore.DeleteFileField),
-          col(TableStore.MorPosCol).as(TableStore.DeletePosField))
-          .coalesce(math.max(1, math.min(matched.size, 8)))
-          .write.mode(SaveMode.Overwrite).parquet(abs)
-        // per-file delete counts from the WRITTEN file — the committed
-        // refs must describe exactly the positions on disk
-        spark.read.parquet(abs).groupBy(col(TableStore.DeleteFileField))
-          .count().collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-      }
+    val (rel, counts) = writePositionDeletes(table, matched.size)(
+      doomed.select(
+        col(TableStore.MorFileCol).as(TableStore.DeleteFileField),
+        col(TableStore.MorPosCol).as(TableStore.DeletePosField)))
     val totalDeleted = counts.values.sum
-    if (totalDeleted == 0 && fs.exists(new HPath(dir, rel)))
-      fs.delete(new HPath(dir, rel), true) // nothing matched: no ref to keep
-    val ref = DeleteRef(rel, 0L) // per-file records patched below
     val updatedEntries = matched.flatMap { f =>
       counts.get(TableStore.fileName(f.path)) match {
         case None => Some(f) // probe superset: no live row matched
@@ -2696,7 +2389,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
           val live = recordsOf(table, f) - n
           if (live <= 0) None // fully deleted: out of the snapshot
           else Some(f.copy(records = live,
-            deletes = f.deletes :+ ref.copy(records = n)))
+            deletes = f.deletes :+ DeleteRef(rel, n)))
       }
     }
     val newFiles = insertRows
@@ -2709,43 +2402,49 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     // change feed: MOR commits always know their exact row-level diff —
     // store it when the feed is on (cost ∝ changes); the diff path can
     // also recover it later from the delete files ([[readChanges]])
-    val cdcSummary =
-      if (!m.changeFeedEnabled || (totalDeleted == 0 && newFiles.isEmpty))
-        Map.empty[String, String]
-      else {
-        val sch = m.schema
-        val deleted = doomed
-          .drop(TableStore.MorFileCol, TableStore.MorPosCol)
-          .withColumn(TableStore.ChangeTypeCol, lit("delete"))
-        val changes = newFiles match {
-          case Seq() => deleted
-          case nf => deleted.unionByName(
-            readFileListAs(table, nf, sch, m)
-              .withColumn(TableStore.ChangeTypeCol, lit("insert")))
-        }
-        val cdcRel = s"cdc/${UUID.randomUUID()}"
-        changes.coalesce(math.max(1, math.min(matched.size + newFiles.size, 16)))
-          .write.mode(SaveMode.Overwrite)
-          .parquet(new HPath(dir, cdcRel).toString)
-        Map(TableStore.CdcDirKey -> cdcRel)
-      }
-    val total = TableStore.inParallel(carried)(recordsOf(table, _)).sum +
-      updatedEntries.map(f => recordsOf(table, f)).sum +
-      newFiles.map(_.records).sum
     val morSummary =
       if (totalDeleted == 0) Map.empty[String, String]
       else Map(
         TableStore.MorDeletesKey -> s"""["$rel"]""",
         "position-deletes" -> totalDeleted.toString)
-    SnapshotLog.commit(fs, dir, operation,
-      carried ++ updatedEntries ++ newFiles, total, timestampMs,
-      replaceAll = true,
-      summary = Map(
-        "merge-on-read" -> "true",
-        "carried-files" -> carried.size.toString,
-        "added-files" -> newFiles.size.toString) ++ morSummary ++ cdcSummary,
-      expectedLastId = Some(baseId),
-      schemaVersionOf = stamp(table, Some(mv)))
+    commit(table, Change(operation, timestampMs,
+      carried ++ updatedEntries ++ newFiles, base = Some(baseId),
+      removed = matched, added = newFiles,
+      feed = if (totalDeleted == 0 && newFiles.isEmpty) Feed.Off
+        else Feed.Rows(() => taggedChanges(table,
+          doomed.drop(TableStore.MorFileCol, TableStore.MorPosCol),
+          newFiles, mv.meta)),
+      guard = Some(mv), counts = Seq(CarriedFiles, AddedFiles),
+      summary = Map("merge-on-read" -> "true") ++ morSummary))
+  }
+
+  /** The one position-delete writer: `positions` (`_file`, `_pos`) as
+    * one delete-file directory of at most `min(files, 8)` files, and the
+    * positions per data file counted from what was WRITTEN — the
+    * committed refs must describe exactly the positions on disk. A
+    * directory left empty is removed; nothing is written for no files. */
+  private def writePositionDeletes(table: String, files: Int)(
+      positions: => DataFrame): (String, Map[String, Long]) = {
+    val rel = s"${TableStore.DeletesDir}/delete-${UUID.randomUUID()}"
+    if (files == 0) return (rel, Map.empty)
+    val abs = new HPath(tableDir(table), rel)
+    positions.coalesce(math.max(1, math.min(files, 8)))
+      .write.mode(SaveMode.Overwrite).parquet(abs.toString)
+    val counts = spark.read.parquet(abs.toString)
+      .groupBy(col(TableStore.DeleteFileField)).count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    if (counts.isEmpty) fs.delete(abs, true)
+    (rel, counts)
+  }
+
+  /** Change rows of a merge-on-read commit: `deleted` rows plus the rows
+    * of its `inserted` files. */
+  private def taggedChanges(table: String, deleted: DataFrame,
+      inserted: Seq[DataFile], m: TableMeta): DataFrame = {
+    val del = deleted.withColumn(TableStore.ChangeTypeCol, lit("delete"))
+    if (inserted.isEmpty) del
+    else del.unionByName(readFileListAs(table, inserted, m.schema, m)
+      .withColumn(TableStore.ChangeTypeCol, lit("insert")))
   }
 
   // -------------------------------------------------------------------
@@ -2842,7 +2541,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
 
   private def eqCommit(table: String, operation: String, keys0: DataFrame,
       insertRows: Option[DataFrame], timestampMs: Long,
-      extraSummary: Map[String, String] = Map.empty): Snapshot =
+      extraSummary: Map[String, String]): Snapshot =
     withCowRetry() {
       val mv = current(table)
       val m = mv.meta
@@ -2880,7 +2579,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
             tupleCount <= TableStore.EqPruneMaxKeys) {
           val vals = spark.read.parquet(abs).collect().map(_.get(0)).toSeq
           if (vals.contains(null)) baseFiles
-          else pruneList(table, baseFiles,
+          else pruneList(baseFiles,
             col(keyFields.head._2.name).isin(vals: _*), m)
         } else baseFiles
       if (tupleCount == 0) fs.delete(new HPath(dir, rel), true)
@@ -2888,59 +2587,33 @@ final class TableStore(val root: HPath, spark: SparkSession) {
         keyFields.map(_._2.name))
       val updatedEntries = attachSet.map(f =>
         f.copy(deletes = f.deletes :+ ref))
-      val carried = baseFiles.diff(attachSet)
       val newFiles = insertRows
         .map(rows => writeStaged(table, rows, mv))
         .getOrElse(Seq.empty)
         .filter(_.records != 0L)
-      // change feed ON: the exact row-level diff requires locating the
-      // matched rows — the one case where an equality commit pays a
-      // read (cost ∝ attach-set scan). Feed-less tables keep the pure
-      // O(batch) write; the batch table_changes() reader can also
-      // recover the diff later from the key file alone.
-      val cdcSummary =
-        if (!m.changeFeedEnabled ||
-            (tupleCount == 0 && newFiles.isEmpty))
-          Map.empty[String, String]
-        else {
-          val deleted = equalityDeleteJoin(table,
-            readFileListAs(table, attachSet, sch, m), Seq(ref), sch,
-            "left_semi", m)
-            .withColumn(TableStore.ChangeTypeCol, lit("delete"))
-          val changes = newFiles match {
-            case Seq() => deleted
-            case nf => deleted.unionByName(
-              readFileListAs(table, nf, sch, m)
-                .withColumn(TableStore.ChangeTypeCol, lit("insert")))
-          }
-          val cdcRel = s"cdc/${UUID.randomUUID()}"
-          changes.coalesce(math.max(1,
-            math.min(attachSet.size + newFiles.size, 16)))
-            .write.mode(SaveMode.Overwrite)
-            .parquet(new HPath(dir, cdcRel).toString)
-          Map(TableStore.CdcDirKey -> cdcRel)
-        }
       // records stay as logged — now an UPPER bound for the attach set
       // (matched counts are unknowable without the read this write
-      // exists to avoid); SnapshotLog.commit stamps the marker that
-      // makes metadata COUNT decline while any ref is live
-      val total = (carried ++ updatedEntries).map(f =>
-        recordsOf(table, f)).sum + newFiles.map(_.records).sum
+      // exists to avoid); the log commit stamps the marker that makes
+      // metadata COUNT decline while any ref is live
       val eqSummary =
         if (tupleCount == 0) Map.empty[String, String]
         else Map(
           TableStore.EqDeletesKey -> s"""["$rel"]""",
           "equality-delete-tuples" -> tupleCount.toString)
-      SnapshotLog.commit(fs, dir, operation,
-        carried ++ updatedEntries ++ newFiles, total, timestampMs,
-        replaceAll = true,
-        summary = Map(
-          "merge-on-read" -> "true",
-          "carried-files" -> carried.size.toString,
-          "added-files" -> newFiles.size.toString) ++ eqSummary ++
-          cdcSummary ++ extraSummary,
-        expectedLastId = Some(baseId),
-        schemaVersionOf = stamp(table, Some(mv)))
+      // change feed ON: the exact row-level diff requires locating the
+      // matched rows — the one case where an equality commit pays a
+      // read (cost ∝ attach-set scan). Feed-less tables keep the pure
+      // O(batch) write; the batch table_changes() reader can also
+      // recover the diff later from the key file alone.
+      commit(table, Change(operation, timestampMs,
+        baseFiles.diff(attachSet) ++ updatedEntries ++ newFiles,
+        base = Some(baseId), removed = attachSet, added = newFiles,
+        feed = if (tupleCount == 0 && newFiles.isEmpty) Feed.Off
+          else Feed.Rows(() => taggedChanges(table,
+            equalityDeleteJoin(table, readFileListAs(table, attachSet, sch, m),
+              Seq(ref), sch, "left_semi", m), newFiles, m)),
+        guard = Some(mv), counts = Seq(CarriedFiles, AddedFiles),
+        summary = Map("merge-on-read" -> "true") ++ eqSummary ++ extraSummary))
     }
 
   /** Delta-style SHALLOW CLONE: a new table whose first snapshot
@@ -2980,20 +2653,17 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     for (n <- TableMeta.versions(fs, srcDir))
       TableMeta.write(fs, tableDir(target), n, meta(source, n)
         .copy(tags = Map.empty, stats = None, view = None))
-    SnapshotLog.write(fs, tableDir(target), Seq.empty)
+    initLog(target)
     def rebase(rel: String): String =
       if (rel.startsWith("../") || new HPath(rel).isAbsolute) rel
       else s"../$source/$rel"
     val entries = snap.files.map(f => f.copy(path = rebase(f.path),
       deletes = f.deletes.map(d => d.copy(path = rebase(d.path)))))
-    SnapshotLog.commit(fs, tableDir(target), "clone", entries,
-      snap.recordCount, timestampMs, replaceAll = true,
-      summary = Map(
-        "shallow-clone" -> "true",
-        "source-table" -> source,
-        "source-snapshot-id" -> snap.id.toString,
-        TableStore.RowsPreservedKey -> "true"),
-      schemaVersionOf = stamp(target))
+    commit(target, Change("clone", timestampMs, entries, summary = Map(
+      "shallow-clone" -> "true",
+      "source-table" -> source,
+      "source-snapshot-id" -> snap.id.toString,
+      TableStore.RowsPreservedKey -> "true")))
   }
 
   /** `CALL rewrite_position_delete_files` (Iceberg parity): consolidate
@@ -3017,26 +2687,14 @@ final class TableStore(val root: HPath, spark: SparkSession) {
       val (baseId, baseFiles) = cowBase(table)
       // positional refs only: equality refs hold key tuples, not
       // positions, and stay attached verbatim (OPTIMIZE materializes
-      // them; this procedure only binpacks the positional side)
+      // them; this procedure only binpacks the positional side). With
+      // nothing stacked it still commits — maintenance scripts see their
+      // CALL in DESCRIBE HISTORY, like a no-op OPTIMIZE
       val dirty = baseFiles.filter(_.deletes.count(!_.isEquality) >= 2)
-      if (dirty.isEmpty)
-        // nothing stacked: still commit (maintenance scripts see their
-        // CALL in DESCRIBE HISTORY, like a no-op OPTIMIZE)
-        SnapshotLog.commit(fs, tableDir(table), "replace", baseFiles,
-          TableStore.inParallel(baseFiles)(recordsOf(table, _)).sum,
-          timestampMs, replaceAll = true,
-          summary = Map("rewritten-delete-files" -> "0",
-            "added-delete-files" -> "0",
-            TableStore.RowsPreservedKey -> "true"),
-          expectedLastId = Some(baseId),
-          schemaVersionOf = stamp(table))
-      else {
-        val dir = tableDir(table)
-        val dirtyNames = dirty.map(f => TableStore.fileName(f.path)).toSet
-        val oldRefs = dirty.flatMap(_.deletes.filterNot(_.isEquality))
-          .map(_.path).distinct
-        val rel = s"${TableStore.DeletesDir}/delete-${UUID.randomUUID()}"
-        val abs = new HPath(dir, rel).toString
+      val dirtyNames = dirty.map(f => TableStore.fileName(f.path)).toSet
+      val oldRefs = dirty.flatMap(_.deletes.filterNot(_.isEquality))
+        .map(_.path).distinct
+      val (rel, counts) = writePositionDeletes(table, dirty.size)(
         spark.read.parquet(oldRefs.map(p => absPath(table, p).toString): _*)
           .select(col(TableStore.DeleteFileField),
             col(TableStore.DeletePosField))
@@ -3044,34 +2702,27 @@ final class TableStore(val root: HPath, spark: SparkSession) {
           // only the consolidating files' positions in the new dir
           .filter(col(TableStore.DeleteFileField)
             .isin(dirtyNames.toSeq: _*))
-          .distinct()
-          .coalesce(math.max(1, math.min(dirty.size, 8)))
-          .write.mode(SaveMode.Overwrite).parquet(abs)
-        // committed refs must describe exactly the positions on disk
-        val counts = spark.read.parquet(abs)
-          .groupBy(col(TableStore.DeleteFileField)).count().collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-        val ref = DeleteRef(rel, 0L)
-        val updated = dirty.map { f =>
-          val n = counts.getOrElse(TableStore.fileName(f.path), 0L)
-          val eqRefs = f.deletes.filter(_.isEquality) // attached verbatim
-          f.copy(deletes =
-            (if (n == 0) Seq.empty else Seq(ref.copy(records = n))) ++ eqRefs)
-        }
-        val carried = baseFiles.diff(dirty)
-        val total = TableStore.inParallel(carried ++ updated)(
-          recordsOf(table, _)).sum
-        SnapshotLog.commit(fs, dir, "replace", carried ++ updated, total,
-          timestampMs, replaceAll = true,
-          summary = Map(
-            "rewritten-delete-files" -> oldRefs.size.toString,
-            "added-delete-files" -> "1",
-            TableStore.MorDeletesKey -> s"""["$rel"]""",
-            TableStore.RowsPreservedKey -> "true"),
-          expectedLastId = Some(baseId),
-          schemaVersionOf = stamp(table))
+          .distinct())
+      val updated = dirty.map { f =>
+        val n = counts.getOrElse(TableStore.fileName(f.path), 0L)
+        val eqRefs = f.deletes.filter(_.isEquality) // attached verbatim
+        f.copy(deletes =
+          (if (n == 0) Seq.empty else Seq(DeleteRef(rel, n))) ++ eqRefs)
       }
+      commit(table, Change("replace", timestampMs,
+        baseFiles.diff(dirty) ++ updated, base = Some(baseId),
+        summary = Map("rewritten-delete-files" -> oldRefs.size.toString) ++
+          deleteDirSummary(rel, counts)))
     }
+
+  /** Summary of a maintenance commit that wrote one position-delete dir
+    * (or none, when `counts` is empty); the row multiset is unchanged. */
+  private def deleteDirSummary(rel: String,
+      counts: Map[String, Long]): Map[String, String] =
+    Map("added-delete-files" -> (if (counts.isEmpty) "0" else "1")) ++
+      (if (counts.isEmpty) Map.empty
+       else Map(TableStore.MorDeletesKey -> s"""["$rel"]""")) +
+      (TableStore.RowsPreservedKey -> "true")
 
   /** `CALL convert_equality_deletes` (the minor compaction Flink's
     * Iceberg maintenance runs between CDC writes and full compaction):
@@ -3095,62 +2746,32 @@ final class TableStore(val root: HPath, spark: SparkSession) {
       val m = meta(table)
       val (baseId, baseFiles) = cowBase(table)
       val dirty = baseFiles.filter(_.deletes.exists(_.isEquality))
-      if (dirty.isEmpty)
-        SnapshotLog.commit(fs, tableDir(table), "replace", baseFiles,
-          TableStore.inParallel(baseFiles)(recordsOf(table, _)).sum,
-          timestampMs, replaceAll = true,
-          summary = Map("converted-equality-files" -> "0",
-            "added-delete-files" -> "0",
-            TableStore.RowsPreservedKey -> "true"),
-          expectedLastId = Some(baseId),
-          schemaVersionOf = stamp(table))
-      else {
-        val sch = m.schema
-        val dir = tableDir(table)
-        def positions(applyEq: Boolean): DataFrame =
-          readFileListAs(table, dirty, sch, m, keepPos = true,
-            applyEqDeletes = applyEq)
-            .select(col(TableStore.MorFileCol).as(TableStore.DeleteFileField),
-              col(TableStore.MorPosCol).as(TableStore.DeletePosField))
-        // rows live by position but dead by an equality ref — the rows
-        // existing positional refs have NOT already discounted, so the
-        // live-count arithmetic below holds in every interleaving of
-        // positional and equality commits
-        val dead = positions(applyEq = false).except(positions(applyEq = true))
-        val rel = s"${TableStore.DeletesDir}/delete-${UUID.randomUUID()}"
-        val abs = new HPath(dir, rel).toString
-        dead.coalesce(math.max(1, math.min(dirty.size, 8)))
-          .write.mode(SaveMode.Overwrite).parquet(abs)
-        val counts = spark.read.parquet(abs)
-          .groupBy(col(TableStore.DeleteFileField)).count().collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-        if (counts.isEmpty) fs.delete(new HPath(dir, rel), true)
-        val ref = DeleteRef(rel, 0L)
-        val updated = dirty.flatMap { f =>
-          val posRefs = f.deletes.filterNot(_.isEquality)
-          counts.get(TableStore.fileName(f.path)) match {
-            case None => Some(f.copy(deletes = posRefs)) // no key matched
-            case Some(n) =>
-              val live = recordsOf(table, f) - n
-              if (live <= 0) None // fully deleted: out of the snapshot
-              else Some(f.copy(records = live,
-                deletes = posRefs :+ ref.copy(records = n)))
-          }
+      def positions(applyEq: Boolean): DataFrame =
+        readFileListAs(table, dirty, m.schema, m, keepPos = true,
+          applyEqDeletes = applyEq)
+          .select(col(TableStore.MorFileCol).as(TableStore.DeleteFileField),
+            col(TableStore.MorPosCol).as(TableStore.DeletePosField))
+      // rows live by position but dead by an equality ref — the rows
+      // existing positional refs have NOT already discounted, so the
+      // live-count arithmetic below holds in every interleaving of
+      // positional and equality commits
+      val (rel, counts) = writePositionDeletes(table, dirty.size)(
+        positions(applyEq = false).except(positions(applyEq = true)))
+      val updated = dirty.flatMap { f =>
+        val posRefs = f.deletes.filterNot(_.isEquality)
+        counts.get(TableStore.fileName(f.path)) match {
+          case None => Some(f.copy(deletes = posRefs)) // no key matched
+          case Some(n) =>
+            val live = recordsOf(table, f) - n
+            if (live <= 0) None // fully deleted: out of the snapshot
+            else Some(f.copy(records = live,
+              deletes = posRefs :+ DeleteRef(rel, n)))
         }
-        val carried = baseFiles.diff(dirty)
-        val total = TableStore.inParallel(carried ++ updated)(
-          recordsOf(table, _)).sum
-        SnapshotLog.commit(fs, dir, "replace", carried ++ updated, total,
-          timestampMs, replaceAll = true,
-          summary = Map(
-            "converted-equality-files" -> dirty.size.toString,
-            "added-delete-files" -> (if (counts.isEmpty) "0" else "1"),
-            TableStore.RowsPreservedKey -> "true") ++
-            (if (counts.isEmpty) Map.empty[String, String]
-             else Map(TableStore.MorDeletesKey -> s"""["$rel"]""")),
-          expectedLastId = Some(baseId),
-          schemaVersionOf = stamp(table))
       }
+      commit(table, Change("replace", timestampMs,
+        baseFiles.diff(dirty) ++ updated, base = Some(baseId),
+        summary = Map("converted-equality-files" -> dirty.size.toString) ++
+          deleteDirSummary(rel, counts)))
     }
 
   /** Copy-on-write upsert (the MERGE INTO analogue): rows of `updates`
@@ -3183,17 +2804,18 @@ final class TableStore(val root: HPath, spark: SparkSession) {
   def merge(table: String, sourceKeys: DataFrame, keyCols: Seq[String],
       replace: DataFrame => DataFrame,
       timestampMs: Long = System.currentTimeMillis(),
-      rewriteAll: Boolean = false): Snapshot =
+      rewriteAll: Boolean = false,
+      branch: Option[String] = None): Snapshot =
     withCowRetry() {
       val mv = current(table)
       val m = mv.meta
-      val (baseId, baseFiles) = cowBase(table)
+      val (baseId, baseFiles) = cowBase(table, branch)
       val (matched, carried) =
         if (rewriteAll) (baseFiles, Seq.empty[DataFile])
         else matchedByKeys(table, baseFiles, sourceKeys, keyCols, m)
       val replacement = replace(readFileList(table, matched, m))
       cowCommit(table, mv, "merge", carried, matched, Some(replacement),
-        timestampMs, baseId)
+        timestampMs, baseId, branch = branch)
     }
 
   /** Read ONLY the named data files (leaf names) of the current
@@ -3425,19 +3047,11 @@ final class TableStore(val root: HPath, spark: SparkSession) {
   /** TRUNCATE: one `delete` snapshot with an empty file list — prior
     * snapshots keep their files for time travel until `expire`. */
   def truncate(table: String,
-      timestampMs: Long = System.currentTimeMillis()): Snapshot = {
+      timestampMs: Long = System.currentTimeMillis()): Snapshot =
     // change-feed parity: every previous row is a 'delete' — the diff
     // against an empty rewrite materializes exactly that
-    val prevFiles = SnapshotLog.resolve(fs, tableDir(table), None)
-      .map(_.files).getOrElse(Seq.empty)
-    val cdcSummary =
-      writeChangeFiles(table, prevFiles, Seq.empty, Map.empty, meta(table))
-    SnapshotLog.commit(fs, tableDir(table), "delete", Seq.empty, 0L,
-      timestampMs, replaceAll = true,
-      summary = Map("carried-files" -> "0",
-        "added-files" -> "0") ++ cdcSummary,
-      schemaVersionOf = stamp(table))
-  }
+    commit(table, Change("delete", timestampMs, Seq.empty,
+      counts = Seq(CarriedFiles, AddedFiles)))
 
   /** `CALL rollback_to_snapshot`: make an earlier snapshot's file list
     * the CURRENT state via a new `rollback` commit. History is
@@ -3457,27 +3071,17 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     // between the current file set and the target's — the files
     // dropped since the target are the 'delete' side, the restored
     // ones the 'insert' side (carried-through files net out)
-    val prevFiles = SnapshotLog.resolve(fs, tableDir(table), None)
-      .map(_.files).getOrElse(Seq.empty)
-    val prevPaths = prevFiles.map(_.path).toSet
-    val targetPaths = target.filePaths.toSet
-    val cdcSummary = writeChangeFiles(table,
-      prevFiles.filterNot(f => targetPaths(f.path)),
-      target.files.filterNot(f => prevPaths(f.path)), Map.empty, meta(table))
-    SnapshotLog.commit(fs, tableDir(table), "rollback", target.files,
-      target.recordCount, timestampMs, replaceAll = true,
-      summary = Map("rolled-back-to" -> snapshotId.toString,
-        "total-records" -> target.recordCount.toString) ++ cdcSummary,
-      schemaVersionOf = stamp(table))
+    commit(table, Change("rollback", timestampMs, target.files,
+      counts = Seq(TotalRecords),
+      summary = Map("rolled-back-to" -> snapshotId.toString)))
   }
 
   /** `CALL rollback_to_timestamp`: rollback to the newest snapshot
     * committed at or before `asOfMs`. */
   def rollbackToTime(table: String, asOfMs: Long,
       timestampMs: Long = System.currentTimeMillis()): Snapshot = {
-    val target = SnapshotLog.read(fs, tableDir(table))
-      .filter(_.timestampMs <= asOfMs).lastOption
-      .getOrElse(throw new IllegalArgumentException(
+    val target = SnapshotLog.asOf(SnapshotLog.read(fs, tableDir(table)),
+      Some(asOfMs)).getOrElse(throw new IllegalArgumentException(
         s"table $table has no snapshot at or before $asOfMs"))
     rollback(table, target.id, timestampMs)
   }
@@ -3624,7 +3228,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
       val mv = current(table)
       val m = mv.meta
       val (baseId, baseFiles) = cowBase(table)
-      val matched = pruneList(table, baseFiles, predicate, m)
+      val matched = pruneList(baseFiles, predicate, m)
       val carried = baseFiles.diff(matched)
       val replacement =
         if (matched.isEmpty) None
@@ -3799,14 +3403,6 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     out.result()
   }
 
-  /** Log checkpointing (see [[SnapshotLog.checkpoint]]): fold old
-    * snapshots' inline file lists into manifests so the log — rewritten
-    * whole on every commit — stays O(live inline files + snapshots)
-    * instead of O(snapshots × files). Pure metadata reshaping: every
-    * snapshot stays time-travelable with the same file list. */
-  def checkpointLog(table: String, olderThanMs: Long): Int =
-    SnapshotLog.checkpoint(fs, tableDir(table), olderThanMs)
-
   /** Named snapshot refs (Iceberg TAGS): name → snapshot id. A tag pins
     * history: [[expire]] keeps tagged snapshots (and their files)
     * regardless of age, and time travel accepts a quoted tag name
@@ -3857,10 +3453,7 @@ final class TableStore(val root: HPath, spark: SparkSession) {
     */
   def expire(table: String, olderThanMs: Long): Unit = {
     val dir = tableDir(table)
-    SnapshotLog.withTableLock(fs, dir) {
-      val all = SnapshotLog.read(fs, dir).map(SnapshotLog.hydrate(fs, dir, _))
-      // the lock is a file and NOT reentrant: the locked loader reads tags
-      val cur = load(table, locked = true)
+    rewriteLog(table) { (all, cur) =>
       // tagged snapshots are pinned; so are branch FORK POINTS — expiring
       // a base would silently hollow out every read of its branch
       val tagged = cur.meta.tags.values.toSet ++
@@ -3874,7 +3467,13 @@ final class TableStore(val root: HPath, spark: SparkSession) {
         }
       val keptIds = keep.map(_.id).toSet
       val dropped = all.filterNot(s => keptIds(s.id))
-      if (dropped.nonEmpty) {
+      // every later read resolves its metadata through the latest
+      // version or a kept snapshot's stamp; the rest go
+      val stamped = keep.map(_.schemaVersion).toSet + cur.n
+      def pruneVersions(): Unit = TableMeta.versions(fs, dir).filterNot(stamped)
+        .foreach(n => fs.delete(TableMeta.path(dir, n), false))
+      if (dropped.isEmpty) (None, () => pruneVersions())
+      else {
         // the COPY INTO idempotency ledger is the union of CopyFilesKey
         // entries over LIVE summaries — expiring a COPY commit must not
         // shrink it (a later COPY of the same directory would silently
@@ -3893,32 +3492,29 @@ final class TableStore(val root: HPath, spark: SparkSession) {
               (TableStore.CopyFilesKey ->
                 TableMeta.mapper.writeValueAsString(merged.asJava))))
           }
-        SnapshotLog.write(fs, dir, kept2)
-        val live = keep.flatMap(_.filePaths).toSet
-        all.flatMap(_.filePaths).distinct.filterNot(live.contains).foreach { f =>
-          fs.delete(new HPath(dir, f), false)
-        }
-        // position-delete dirs only dropped snapshots' entries reference
-        val liveDeletes = keep.flatMap(_.files).flatMap(_.deletes)
-          .map(_.path).toSet
-        all.flatMap(_.files).flatMap(_.deletes).map(_.path).distinct
-          .filterNot(liveDeletes.contains)
-          .foreach(p => fs.delete(new HPath(dir, p), true))
-        // manifests are one-per-snapshot: dropped snapshots' manifests go
-        // too
-        val keptManifests = keep.flatMap(_.manifest).toSet
-        all.flatMap(_.manifest).filterNot(keptManifests.contains).foreach { m =>
-          fs.delete(new HPath(new HPath(dir, SnapshotLog.ManifestDir), m), false)
-        }
-        // so do their materialized change files (one cdc dir per commit)
-        dropped.flatMap(_.summary.get(TableStore.CdcDirKey))
-          .foreach(d => fs.delete(new HPath(dir, d), true))
+        (Some(kept2), () => {
+          val live = keep.flatMap(_.filePaths).toSet
+          all.flatMap(_.filePaths).distinct.filterNot(live.contains).foreach { f =>
+            fs.delete(new HPath(dir, f), false)
+          }
+          // position-delete dirs only dropped snapshots' entries reference
+          val liveDeletes = keep.flatMap(_.files).flatMap(_.deletes)
+            .map(_.path).toSet
+          all.flatMap(_.files).flatMap(_.deletes).map(_.path).distinct
+            .filterNot(liveDeletes.contains)
+            .foreach(p => fs.delete(new HPath(dir, p), true))
+          // manifests are one-per-snapshot: dropped snapshots' manifests
+          // go too
+          val keptManifests = keep.flatMap(_.manifest).toSet
+          all.flatMap(_.manifest).filterNot(keptManifests.contains).foreach { m =>
+            fs.delete(new HPath(new HPath(dir, SnapshotLog.ManifestDir), m), false)
+          }
+          // so do their materialized change files (one cdc dir per commit)
+          dropped.flatMap(_.summary.get(TableStore.CdcDirKey))
+            .foreach(d => fs.delete(new HPath(dir, d), true))
+          pruneVersions()
+        })
       }
-      // every later read resolves its metadata through the latest
-      // version or a kept snapshot's stamp; the rest go
-      val stamped = keep.map(_.schemaVersion).toSet + cur.n
-      TableMeta.versions(fs, dir).filterNot(stamped)
-        .foreach(n => fs.delete(TableMeta.path(dir, n), false))
     }
   }
 }
@@ -3948,7 +3544,7 @@ object TableStore {
   val RowsPreservedKey = "rows-preserved"
 
   /** Summary key recording the `cdc/<uuid>` directory of a commit's
-    * materialized change files ([[TableStore.writeChangeFiles]]). */
+    * materialized change files (written by [[TableCommit.commit]]). */
   val CdcDirKey = "cdc-dir"
   /** The change-type tag column of the change feed ('insert'|'delete'). */
   val ChangeTypeCol = "_change_type"

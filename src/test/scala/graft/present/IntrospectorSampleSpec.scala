@@ -43,7 +43,7 @@ class IntrospectorSampleSpec extends AnyFunSuite {
 
   /** `sampleRows` equals `limit(n).collect()` row by row, and the prompt
     * text equals the collected one; returns the jobs `tableInfo` started. */
-  private def checkTable(cat: GraftCatalog, t: String, ns: Seq[Int] = Seq(10)): Int = {
+  private def checkTable(cat: GraftCatalog, t: String, ns: Seq[Int]): Int = {
     val st = cat.store()
     ns.foreach { n =>
       val want = st.read(t).limit(n).collect()

@@ -72,7 +72,7 @@ class TableStoreSpec extends AnyFunSuite {
     st.create("t", df(1 to 1).schema)
     val s1 = st.append("t", df(1 to 10), 1000L)
     val s2 = st.append("t", df(11 to 15), 2000L)
-    val s3 = st.append("t", df(16 to 18), 3000L)
+    st.append("t", df(16 to 18), 3000L)
     // (s1, s3] = appends 2 and 3
     assert(st.readIncremental("t", s1.id).as[Int].collect().sorted.toSeq == (11 to 18))
     // bounded range (s1, s2]
