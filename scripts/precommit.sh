@@ -33,6 +33,15 @@ if [ -n "$seam" ]; then
   echo "[precommit] snapshot-log write or table lock outside TableCommit.scala — commit through the seam"
   exit 1
 fi
+# One snapshot read path: only TableScan.pin resolves a snapshot and
+# only its scan builds a relation over data files (graft.store.TableScan);
+# the commit seam reads its base snapshot itself.
+scan=$(git grep -nE 'SnapshotLog\.(resolve|resolveVersion|asOf)|GraftSqlShim\.parquetScan' -- src/main ':!src/main/scala/graft/store/TableScan.scala' ':!src/main/scala/graft/store/TableCommit.scala' || true)
+if [ -n "$scan" ]; then
+  echo "$scan"
+  echo "[precommit] snapshot resolution or parquet scan outside TableScan.scala — read through pin/scan"
+  exit 1
+fi
 # The main and test sources compile warning-free under -deprecation,
 # -Wunused:imports and -Wunused:privates,locals,patvars: -Werror (on
 # both compiles) turns any such warning

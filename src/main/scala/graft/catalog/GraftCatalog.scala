@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-import graft.store.{PartitionSpec, Snapshot, SnapshotLog, TableMeta, TableStore}
+import graft.store.{At, DataFile, PartitionSpec, Pinned, Snapshot, SnapshotLog, TableMeta, TableStore}
 
 /** Database/table registry over [[graft.store.TableStore]].
   *
@@ -344,7 +344,9 @@ final class GraftCatalog(val warehouse: HPath, val spark: SparkSession) {
   /** Dynamic-file-pruning join: inner-join snapshot table `fact` to the
     * (selective) `dim` frame, scanning only the fact files whose
     * metadata — partition values, min/max stats, bucket ids, blooms —
-    * admits one of the dim's join keys ([[TableStore.filesForKeys]]).
+    * admits one of the dim's join keys: the key set becomes an IN
+    * predicate, so every metadata tier of [[TableStore.scan]]'s prune
+    * fires per key.
     * The dim side's DISTINCT keys are collected on the driver, so the
     * prune only engages when the key set is metadata-sized: past
     * `maxKeys` the plain join runs instead (same result, no collect
@@ -359,9 +361,15 @@ final class GraftCatalog(val warehouse: HPath, val spark: SparkSession) {
     // null dim keys never equi-join: drop them from the probe set (an
     // all-null dim correctly prunes to an empty fact scan)
     val keys = collected.filter(_ != null)
+    val st = store()
     val factDf =
-      if (collected.size > maxKeys) store().read(fact)
-      else store().readForKeys(fact, factKey, keys)
+      if (collected.size > maxKeys) st.read(fact)
+      else {
+        val m = st.meta(fact)
+        require(m.schema.fieldNames.exists(_.equalsIgnoreCase(factKey)),
+          s"join-prune column '$factKey' not in schema of $fact")
+        st.scan(st.pin(fact, At.Latest, m), Some(col(factKey).isin(keys: _*)))._1
+      }
     factDf.join(broadcast(dim), factDf(factKey) === dim(dimKey), "inner")
   }
 
@@ -433,9 +441,8 @@ final class GraftCatalog(val warehouse: HPath, val spark: SparkSession) {
   def registerView(name: String): Unit =
     if (!viewless) {
       val st = store()
-      val m = st.meta(name)
-      withTableStats(name, st.read(name, None, m), meta = Some(m))
-        .createOrReplaceTempView(name)
+      val p = st.pin(name, At.Latest, st.meta(name))
+      withTableStats(name, st.scan(p, None)._1, p).createOrReplaceTempView(name)
     }
 
   /** Attach the table's persisted statistics (row count from the
@@ -446,62 +453,56 @@ final class GraftCatalog(val warehouse: HPath, val spark: SparkSession) {
     * (`spark.sql.cbo.*` — set in the engine's session configs). A
     * table without stats, a log predating byte tracking, or any attach
     * hiccup returns `df` unchanged: stats can only improve plans, never
-    * break a read. Also applied by the Engine's partition-prune splice,
-    * so a filtered fact relation keeps its stats: the row count is the
-    * full table's (the pruned files are a subset — conservative), and
-    * the ON-TOP filter's own selectivity estimate shrinks it from
-    * there. `meta` is the table's record when the caller has loaded it. */
-  private[graft] def withTableStats(name: String,
-      df: DataFrame,
-      prunedTo: Option[Seq[graft.store.DataFile]] = None,
-      meta: Option[graft.store.TableMeta] = None): DataFrame =
+    * break a read. `pinned` is the snapshot `df` reads; the counts come
+    * from the current one (the same pin when `pinned` is the latest, so
+    * the log is parsed once). Also applied by the Engine's
+    * partition-prune splice, so a filtered fact relation keeps its
+    * stats. */
+  private[graft] def withTableStats(name: String, df: DataFrame,
+      pinned: Pinned, prunedTo: Option[Seq[DataFile]] = None): DataFrame =
     scala.util.Try {
       val st = store()
-      val m = meta.getOrElse(st.meta(name))
-      m.stats match {
+      pinned.meta.stats match {
         case None => df
         case Some(s) =>
-          st.snapshotMetaAsOf(name, None, m) match {
-            case Some((schema, recordCount, filesThunk)) =>
-              def sumBytes(fs: Seq[graft.store.DataFile]): Option[Long] = {
-                val b = fs.map(_.bytes)
-                if (b.isEmpty || b.exists(_ < 0)) None else Some(b.sum)
-              }
-              // equality deletes make the log count an upper bound
-              // (negative marker) — the stats pass's count is closer
-              val fullLive = if (recordCount >= 0) recordCount else s.rowCount
-              // `prunedTo`: the relation scans only this file SUBSET
-              // (the SQL splice's partition prune) — size it by the
-              // subset's own logged rows/bytes, or a heavily pruned leg
-              // would be estimated at full-table size and lose a
-              // broadcast plain file-size estimation would have chosen.
-              val (live, bytes) = prunedTo match {
-                case Some(kept) =>
-                  val rows =
-                    if (kept.nonEmpty && kept.forall(_.records >= 0))
-                      kept.map(_.records).sum
-                    else fullLive
-                  (rows, sumBytes(kept))
-                case None =>
-                  // byte total from the commit summary — O(1) log read,
-                  // no manifest hydration per registerView (hydrate only
-                  // for legacy logs predating the summary key)
-                  (fullLive, st.totalDataBytesAsOf(name)
-                    .orElse(sumBytes(filesThunk())))
-              }
-              bytes.filter(_ > 0) match {
-                case Some(bs) =>
-                  org.apache.spark.sql.GraftSqlShim.withCatalogStats(
-                    spark, df, graft.store.TableStats.toCatalogTable(
-                      currentDb, name, schema, s, live, bs),
-                    dataPathPrefix = Some(st.dataDirPath(name)),
-                    // hydrated ONLY if the plan has several data scan
-                    // groups (merge-on-read) — each leaf then sizes to
-                    // its own files instead of k× claiming the table
-                    fileMetaThunk = Some(() => st.fileMetaByPath(name,
-                      prunedTo.getOrElse(filesThunk()))))
-                case None => df
-              }
+          val p = if (pinned.at == At.Latest) pinned
+            else st.pin(name, At.Latest, pinned.meta)
+          def sumBytes(fs: Seq[DataFile]): Option[Long] = {
+            val b = fs.map(_.bytes)
+            if (b.isEmpty || b.exists(_ < 0)) None else Some(b.sum)
+          }
+          // equality deletes make the log count an upper bound — the
+          // stats pass's count is closer
+          val fullLive = p.recordCount.getOrElse(s.rowCount)
+          // `prunedTo`: the relation scans only this file SUBSET
+          // (the SQL splice's partition prune) — size it by the
+          // subset's own logged rows/bytes, or a heavily pruned leg
+          // would be estimated at full-table size and lose a
+          // broadcast plain file-size estimation would have chosen.
+          val (live, bytes) = prunedTo match {
+            case Some(kept) =>
+              val rows =
+                if (kept.nonEmpty && kept.forall(_.records >= 0))
+                  kept.map(_.records).sum
+                else fullLive
+              (rows, sumBytes(kept))
+            case None =>
+              // byte total from the commit summary — no manifest
+              // hydration per registerView (hydrate only for legacy logs
+              // predating the summary key)
+              (fullLive, p.totalDataBytes.orElse(sumBytes(p.files)))
+          }
+          bytes.filter(_ > 0) match {
+            case Some(bs) =>
+              org.apache.spark.sql.GraftSqlShim.withCatalogStats(
+                spark, df, graft.store.TableStats.toCatalogTable(
+                  currentDb, name, p.schema, s, live, bs),
+                dataPathPrefix = Some(st.dataDirPath(name)),
+                // hydrated ONLY if the plan has several data scan
+                // groups (merge-on-read) — each leaf then sizes to
+                // its own files instead of k× claiming the table
+                fileMetaThunk = Some(() => st.fileMetaByPath(name,
+                  prunedTo.getOrElse(p.files))))
             case None => df
           }
       }

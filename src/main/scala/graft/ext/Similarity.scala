@@ -190,6 +190,14 @@ object Similarity {
       path: String): graft.store.TableStore =
     new graft.store.TableStore(new org.apache.hadoop.fs.Path(path), spark)
 
+  /** The index snapshot a probe reads: the current one, or the one
+    * `asOfSnapshotId` names (an unknown id raises). Centroids and file
+    * set come from this one pin. */
+  private def pinIndex(st: graft.store.TableStore,
+      asOfSnapshotId: Option[Long]): graft.store.Pinned =
+    st.pin(IndexTable, asOfSnapshotId.fold[graft.store.At](
+      graft.store.At.Latest)(graft.store.At.Version), st.meta(IndexTable))
+
   /** Persist an IVF index at `path`: a store table identity-partitioned
     * by `_ivf_list` (one directory per list — the probe's pruning unit).
     * Vectors are co-located per list via `repartition(_ivf_list)` before
@@ -314,10 +322,8 @@ object Similarity {
       query: Array[Float], k: Int, nprobe: Int = 4, refine: Int = 0,
       asOfSnapshotId: Option[Long] = None): DataFrame = {
     val st = indexStore(spark, path)
-    val summary = asOfSnapshotId match {
-      case Some(id) => st.summaryVersion(IndexTable, id)
-      case None     => st.currentSummary(IndexTable)
-    }
+    val pinned = pinIndex(st, asOfSnapshotId)
+    val summary = pinned.summary
     val centroids = parseCentroids(summary, path)
     val codebooks = parseCodebooks(summary, path)
     val m = codebooks.size
@@ -327,10 +333,7 @@ object Similarity {
       .sortBy(-_._1).take(nprobe).map(_._2)
     require(lists.nonEmpty, s"no probe lists in the index at $path")
     val pred = col("_ivf_list").isin(lists: _*)
-    def pruned = asOfSnapshotId match {
-      case Some(id) => st.readWhereVersion(IndexTable, id, pred)
-      case None     => st.readWhere(IndexTable, pred)
-    }
+    def pruned = st.scan(pinned, Some(pred))._1.filter(pred)
     val adc = (0 until m).map { j =>
       val qj = java.util.Arrays.copyOfRange(query, j * dsub, (j + 1) * dsub)
       val tab = codebooks(j).map { cw =>
@@ -428,20 +431,15 @@ object Similarity {
     // pinned: an as-of probe ranks lists with the centroids of its time
     // (a rebuild may have moved them), the store backing's time-travel
     // dividend ("what did this query return before yesterday's append?")
-    val summary = asOfSnapshotId match {
-      case Some(id) => st.summaryVersion(IndexTable, id)
-      case None     => st.currentSummary(IndexTable)
-    }
+    val pinned = pinIndex(st, asOfSnapshotId)
+    val summary = pinned.summary
     val centroids = parseCentroids(summary, path)
     val lists = centroids.zipWithIndex
       .map { case (c, i) => (cosine(query, c), i) }
       .sortBy(-_._1).take(nprobe).map(_._2)
     require(lists.nonEmpty, s"no probe lists in the index at $path")
     val pred = col("_ivf_list").isin(lists: _*)
-    val raw = asOfSnapshotId match {
-      case Some(id) => st.readWhereVersion(IndexTable, id, pred)
-      case None     => st.readWhere(IndexTable, pred)
-    }
+    val raw = st.scan(pinned, Some(pred))._1.filter(pred)
     // quantized layout (ivfWriteIndexQuantized): dequantize inside the
     // probe projection — scan-local, codegen'd, only the pruned lists
     val frame =

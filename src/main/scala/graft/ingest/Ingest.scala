@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType}
 
 import graft.catalog.GraftCatalog
+import graft.store.At
 
 /** CSV→cast→append ingest pipeline.
   *
@@ -61,8 +62,8 @@ object Ingest {
     val resolver = catalog.spark.sessionState.conf.resolver
     val fromBounds = m.schema.fields.find(f => resolver(f.name, idCol))
       .filter(f => f.dataType == IntegerType || f.dataType == LongType)
-      .flatMap(st.columnBound(_, st.dataFilesAsOf(table, None), m.renameEvents,
-        isMax = true))
+      .flatMap(st.columnBound(_, st.pin(table, At.Latest, m).files,
+        m.renameEvents, isMax = true))
     val maxId = fromBounds.getOrElse {
       catalog.table(table).agg(max(col(idCol))).head().get(0) match {
         case null => None

@@ -3,6 +3,7 @@ package graft.present
 import org.apache.spark.sql.Row
 
 import graft.catalog.GraftCatalog
+import graft.store.At
 
 /** Schema-context assembly for the translation prompt.
   *
@@ -40,7 +41,7 @@ final class Introspector(
   def tableInfo(name: String): String = {
     val st = catalog.store()
     val meta = st.meta(name) // one metadata read serves the scan and the stats
-    val (df, files) = st.readWithFiles(name, None, meta)
+    val (df, files) = st.scan(st.pin(name, At.Latest, meta), None)
     val ddlCols = df.schema.fields
       .map(f => s"  ${f.name} ${f.dataType.sql}${if (f.nullable) "" else " NOT NULL"}")
       .mkString(",\n")

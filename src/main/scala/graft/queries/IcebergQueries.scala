@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.ext.Dedup
 import graft.ingest.Ingest
 import graft.sql.Engine
+import graft.store.At
 import BenchSplit.{benchSplit, drainSplit}
 import Fixtures.{t, ts, events, tempCatalog, scratchDir}
 
@@ -400,8 +401,8 @@ private[graft] object IcebergQueries {
       val st = cat.store()
       val hist = st.dataFilesAsOf("mirror_su", None)
       val everWritten = (1L to 2L).flatMap(v =>
-        st.snapshotMetaVersion("mirror_su", v)
-          .map(_._3().map(_.path).toSet).getOrElse(Set.empty)).toSet
+        st.pin("mirror_su", At.Version(v), st.meta("mirror_su"))
+          .files.map(_.path).toSet).toSet
       val sinkProof = everWritten.subsetOf(hist.map(_.path).toSet) &&
         eng.sql("SELECT COUNT(*) FROM `mirror_su$history`")
           .head().getLong(0) == 2L
@@ -1554,12 +1555,12 @@ private[graft] object IcebergQueries {
       graft.streaming.ChangeFeedFollower.mirrorMor(cat, "cdc_e_src",
         "cdc_e_dst", Seq("o_orderkey"), startAfterId = seedId)
       val st = cat.store()
-      val seeded = st.snapshotMetaVersion("cdc_e_dst", 1L)
-        .map(_._3().map(_.path).toSet).getOrElse(Set.empty)
+      val seeded = st.pin("cdc_e_dst", At.Version(1L), st.meta("cdc_e_dst"))
+        .files.map(_.path).toSet
       val cur = st.dataFilesAsOf("cdc_e_dst", None)
       val eqProof = seeded.subsetOf(cur.map(_.path).toSet) &&
         cur.exists(_.deletes.exists(_.isEquality)) &&
-        st.snapshotMetaAsOf("cdc_e_dst", None).exists(_._2 == -1L)
+        st.pin("cdc_e_dst", At.Latest, st.meta("cdc_e_dst")).recordCount.isEmpty
       cat.table("cdc_e_dst")
         .select(col("o_orderkey"), col("o_custkey"),
           round(col("o_totalprice"), 2).as("price"))
@@ -1636,8 +1637,8 @@ private[graft] object IcebergQueries {
       // already in snapshot 1 (no rewrite), the commit is marked
       // merge-on-read, and at least one entry carries a delete ref.
       val st = cat.store()
-      val v1 = st.snapshotMetaVersion("orders_mor", 1L)
-        .map(_._3().map(_.path).toSet).getOrElse(Set.empty)
+      val v1 = st.pin("orders_mor", At.Version(1L), st.meta("orders_mor"))
+        .files.map(_.path).toSet
       val cur = st.dataFilesAsOf("orders_mor", None)
       val noRewrite = cur.map(_.path).toSet.subsetOf(v1) &&
         cur.exists(_.deletes.nonEmpty) &&
@@ -1681,10 +1682,10 @@ private[graft] object IcebergQueries {
       // post-images (snapshot 2 keeps every original file), then
       // OPTIMIZE materializes the deletes away (snapshot 3 has no refs).
       val st = cat.store()
-      val v1 = st.snapshotMetaVersion("orders_mu", 1L)
-        .map(_._3().map(_.path).toSet).getOrElse(Set.empty)
-      val v2 = st.snapshotMetaVersion("orders_mu", 2L)
-        .map(_._3()).getOrElse(Seq.empty)
+      val v1 = st.pin("orders_mu", At.Version(1L), st.meta("orders_mu"))
+        .files.map(_.path).toSet
+      val v2 = st.pin("orders_mu", At.Version(2L), st.meta("orders_mu"))
+        .files
       val morThenClean = v1.subsetOf(v2.map(_.path).toSet) &&
         v2.exists(_.deletes.nonEmpty) &&
         st.dataFilesAsOf("orders_mu", None).forall(_.deletes.isEmpty)
@@ -1778,8 +1779,8 @@ private[graft] object IcebergQueries {
       // spread keys keep live rows in each), only position deletes and
       // appended post-images/inserts were committed
       val st = cat.store()
-      val v1 = st.snapshotMetaVersion("orders_mm", 1L)
-        .map(_._3().map(_.path).toSet).getOrElse(Set.empty)
+      val v1 = st.pin("orders_mm", At.Version(1L), st.meta("orders_mm"))
+        .files.map(_.path).toSet
       val cur = st.dataFilesAsOf("orders_mm", None).map(_.path).toSet
       val noRewrite = v1.subsetOf(cur) &&
         st.currentSummary("orders_mm").get("merge-on-read").contains("true")
@@ -1832,12 +1833,12 @@ private[graft] object IcebergQueries {
       // reference, (b) an equality ref is attached, (c) metadata COUNT
       // correctly declines to the scan while the ref is live.
       val st = cat.store()
-      val v1 = st.snapshotMetaVersion("orders_eq", 1L)
-        .map(_._3().map(_.path).toSet).getOrElse(Set.empty)
+      val v1 = st.pin("orders_eq", At.Version(1L), st.meta("orders_eq"))
+        .files.map(_.path).toSet
       val cur = st.dataFilesAsOf("orders_eq", None)
       val eqProof = v1.subsetOf(cur.map(_.path).toSet) &&
         cur.exists(_.deletes.exists(_.isEquality)) &&
-        st.snapshotMetaAsOf("orders_eq", None).exists(_._2 == -1L)
+        st.pin("orders_eq", At.Latest, st.meta("orders_eq")).recordCount.isEmpty
       // minor compaction: equality refs materialize into positional
       // ones with a key-column read — STILL no data file rewritten,
       // and metadata COUNT is exact again. The 'after' aggregate below
@@ -1846,7 +1847,7 @@ private[graft] object IcebergQueries {
       val conv = st.dataFilesAsOf("orders_eq", None)
       val convProof = v1.subsetOf(conv.map(_.path).toSet) &&
         conv.forall(_.deletes.forall(!_.isEquality)) &&
-        st.snapshotMetaAsOf("orders_eq", None).exists(_._2 >= 0L)
+        st.pin("orders_eq", At.Latest, st.meta("orders_eq")).recordCount.isDefined
       eng.sql("SELECT 'after' AS phase, COUNT(*) AS cnt, " +
           "ROUND(SUM(o_totalprice), 2) AS rev FROM orders_eq")
         .unionByName(eng.sql("SELECT 'before' AS phase, COUNT(*) AS cnt, " +

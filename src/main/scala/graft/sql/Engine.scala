@@ -3,13 +3,13 @@ package graft.sql
 import java.sql.{Date, Timestamp}
 import java.time.ZoneOffset
 
-import org.apache.spark.sql.{DataFrame, GraftSqlShim, Row}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim, Row}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
 import org.apache.spark.sql.catalyst.expressions.{Expression, SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, GlobalLimit, LocalLimit, LogicalPlan, Project, SubqueryAlias, UnresolvedWith}
-import org.apache.spark.sql.types.StructType
 
 import graft.catalog.GraftCatalog
+import graft.store.{At, Pinned}
 
 /** Executes one SQL statement against the catalog and renders the result
   * in the exact string shape the reference's downstream stages consume.
@@ -21,8 +21,6 @@ import graft.catalog.GraftCatalog
   * (`app-gradio.py:265-266`).
   */
 final class Engine(catalog: GraftCatalog) {
-  import Engine.{AsOf, Current, Ref, SnapshotId, Travel}
-
   private val spark = catalog.spark
 
   /** Hook order: cleanup → DDL/DML intercept → metadata-table and
@@ -59,7 +57,7 @@ final class Engine(catalog: GraftCatalog) {
       // then the scan; each tier falls through when its soundness gates
       // fail
       metadataAgg(b)
-        .orElse(if (b.travel == Current) MvRewrite.tryRewrite(catalog, b.stmt)
+        .orElse(if (b.at == At.Latest) MvRewrite.tryRewrite(catalog, b.stmt)
           else None)
         .getOrElse(b.query())
     }
@@ -294,29 +292,27 @@ final class Engine(catalog: GraftCatalog) {
     def answer(node: LogicalPlan, items: Seq[Expression],
         u: UnresolvedRelation, cond: Option[Expression]): Option[DataFrame] =
       tableRef(u)
-        .flatMap { case (db, t) => b.meta(db, t).map((db, t, _)) }
-        .flatMap { case (db, t, (sch, recordCount, filesThunk)) =>
-          // files hydrate at most once, and never for an unfiltered COUNT
-          lazy val files = filesThunk()
+        .flatMap { case (db, t) => b.meta(db, t).map(db -> _) }
+        .flatMap { case (db, p) =>
+          // files hydrate at most once, and never for an unfiltered COUNT;
           // with a WHERE: only when the predicate exactly partitions the
           // file population (partition-aligned — every file all-match or
           // no-match) can counts and bounds fold over the matching files;
           // any partial file, or an unanalyzable condition, declines to
           // the scan path
           lazy val included: Option[Seq[graft.store.DataFile]] = cond match {
-            case None => Some(files)
+            case None => Some(p.files)
             case Some(c) => scala.util.Try(catalog.store(db)
-                .exactMatchFiles(t, files, GraftSqlShim.column(c)))
+                .exactMatchFiles(p.files, GraftSqlShim.column(c), p.meta))
               .toOption.flatten
           }
           for {
             specs <- { val cs = items.map(classify)
                        if (cs.forall(_.isDefined)) Some(cs.flatten) else None }
             values <- traverse(specs) {
-              // recordCount < 0 = equality deletes live (upper bound
-              // only) or a pre-counting log: decline to the scan
-              case CountStar if cond.isEmpty =>
-                if (recordCount >= 0) Some(recordCount: Any) else None
+              // no count: equality deletes live (upper bound only) or a
+              // pre-counting log — decline to the scan
+              case CountStar if cond.isEmpty => p.recordCount
               case CountStar => included.flatMap { inc =>
                 // every matching file needs a logged row count (-1 =
                 // pre-counting log entry) AND no equality-delete refs
@@ -328,12 +324,10 @@ final class Engine(catalog: GraftCatalog) {
               }
               case MinMax(isMin, colName) =>
                 for {
-                  field <- sch.fields.find(f => b.norm(f.name) == b.norm(colName))
+                  field <- p.schema.fields.find(f => b.norm(f.name) == b.norm(colName))
                   inc <- included
-                  folded <- {
-                    val st = catalog.store(db)
-                    st.columnBound(field, inc, st.renameEvents(t), isMax = !isMin)
-                  }
+                  folded <- catalog.store(db).columnBound(field, inc,
+                    p.meta.renameEvents, isMax = !isMin)
                 } yield folded.map(external(field.dataType, _)).orNull
             }
             // names/types/nullability from the real analyzer over an empty
@@ -342,7 +336,7 @@ final class Engine(catalog: GraftCatalog) {
               val emptyRel = SubqueryAlias(u.multipartIdentifier,
                 spark.createDataFrame(
                   spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                  sch).queryExecution.analyzed)
+                  p.schema).queryExecution.analyzed)
               val child = cond.map(Filter(_, emptyRel)).getOrElse(emptyRel)
               GraftSqlShim.ofRows(spark, node.withNewChildren(Seq(child))).schema
             }.toOption
@@ -387,8 +381,9 @@ final class Engine(catalog: GraftCatalog) {
 
   /** One statement's relation binder. The travel clause is stripped and
     * the rest parsed ONCE; [[metadataAgg]] and [[query]] share the plan,
-    * one table-name resolver and one travel dispatch ([[meta]] for
-    * snapshot metadata, `read` for a pinned relation).
+    * one table-name resolver and one pinned snapshot per table
+    * ([[graft.store.TableScan.pin]]), which [[meta]] answers from and
+    * the relations scan.
     *
     * [[query]] walks the parsed plan and replaces each
     * [[UnresolvedRelation]] naming a catalog table by an analyzed plan
@@ -420,12 +415,7 @@ final class Engine(catalog: GraftCatalog) {
   private final class Binder(text: String) {
     private val rw = TimeTravelRewriter.rewrite(text)
     val stmt: String = rw.sql
-    val travel: Travel = (rw.asOfMs, rw.versionId, rw.versionTag) match {
-      case (Some(ms), _, _) => AsOf(ms)
-      case (_, Some(id), _) => SnapshotId(id)
-      case (_, _, Some(r))  => Ref(r)
-      case _                => Current
-    }
+    val at: At = rw.at
     val plan: LogicalPlan = GraftSqlShim.parsePlan(spark, stmt)
 
     // Name matching/shadowing follows the session's resolution mode:
@@ -452,131 +442,93 @@ final class Engine(catalog: GraftCatalog) {
       case _ => None
     }
 
-    /** Schema, record count and (lazily) live files of the snapshot this
-      * statement reads of `db.t`; None = not metadata-answerable. */
-    def meta(db: String, t: String): Option[(StructType, Long,
-        () => Seq[graft.store.DataFile])] = {
-      val st = catalog.store(db)
-      travel match {
-        case Current        => st.snapshotMetaAsOf(t, None)
-        case AsOf(ms)       => st.snapshotMetaAsOf(t, Some(ms))
-        case SnapshotId(id) => st.snapshotMetaVersion(t, id)
-        case Ref(r) =>
-          if (st.branchExists(t, r)) None
-          else st.snapshotMetaVersion(t, st.resolveTag(t, r))
-      }
+    // one pin per table: the metadata answer and the scan share it
+    private val pins = scala.collection.mutable.HashMap.empty[(String, String), Pinned]
+    private def pinOf(db: String, t: String): Pinned =
+      pins.getOrElseUpdate((db, t), {
+        val st = catalog.store(db)
+        st.pin(t, at, st.meta(t))
+      })
+
+    /** The snapshot this statement reads of `db.t`, when its metadata
+      * may answer: never a branch (its count is no log line item), nor
+      * a time travel that resolves no snapshot (the scan keeps its empty
+      * read or its error). */
+    def meta(db: String, t: String): Option[Pinned] =
+      Some(pinOf(db, t)).filter(p => !p.isBranch &&
+        (p.snapshot.isDefined || p.at == At.Latest))
+
+    /** The pruning rule per travel kind: the current snapshot prunes a
+      * partitioned or stats-bearing table, a time travel a partitioned
+      * one — AS-OF queries over a day-partitioned table scan the day, not
+      * the snapshot — and a version, tag or branch never. */
+    private def prunes(p: Pinned): Boolean = p.at match {
+      case At.Latest    => p.meta.partition.isDefined || p.files.exists(_.stats.nonEmpty)
+      case At.AsOfMs(_) => p.meta.partition.isDefined
+      case _            => false
     }
 
-    /** The pinned read of `db.t`, with the file list it scans (None =
-      * unscaled). An AS-OF read is partition-pruned by the enclosing
-      * filter when one exists and the table is partitioned — AS-OF
-      * queries over a day-partitioned table scan the day, not the
-      * snapshot. Any analysis hiccup falls back to the unpruned pinned
-      * read (the filter stays on top, so pruning can only drop
-      * provably-unmatchable files). */
-    private def read(db: String, t: String, cond: Option[Expression])
-        : (DataFrame, Option[Seq[graft.store.DataFile]]) = {
-      val st = catalog.store(db)
-      travel match {
-        case AsOf(ms) =>
-          val (df, files) = cond.filter(_ => st.partitionSpec(t).isDefined)
-            .flatMap(c => scala.util.Try(st.readPrunedWithFiles(t,
-              GraftSqlShim.column(c), Some(ms))).toOption)
-            .getOrElse(st.readWithFiles(t, Some(ms)))
-          (df, Some(files))
-        case SnapshotId(id) =>
-          val (df, files) = st.readVersionWithFiles(t, id)
-          (df, Some(files))
-        // branch file set = fork point + staged entries; its size is not
-        // a snapshot-log line item — unscaled
-        case Ref(r) if st.branchExists(t, r) => (st.readBranch(t, r), None)
-        case Ref(r) =>
-          val (df, files) = st.readVersionWithFiles(t, st.resolveTag(t, r))
-          (df, Some(files))
-        case Current => sys.error("the current snapshot binds no pinned read")
-      }
+    /** The analyzed relation over [[scan]] of `db.t`, carrying the
+      * table's catalog statistics SCALED to the scanned files' own logged
+      * rows/bytes, so a 10×-smaller historical version, or a one-partition
+      * leg, does not plan at the current full-table size (it would lose a
+      * broadcast plain file-size estimation chooses). A branch's file set
+      * is not a snapshot-log line item: its statistics stay unscaled.
+      * NDV/bounds ride the latest COMPUTE STATS pass (stats only shape
+      * plans, never rows; bounds re-validate per leaf against the
+      * relation's attribute types). */
+    private def relation(db: String, t: String, pred: Option[Column]): LogicalPlan = {
+      val p = pinOf(db, t)
+      val (df, files) = catalog.store(db).scan(p, pred)
+      catalog.forDatabase(db).withTableStats(t, df, p,
+          prunedTo = if (p.isBranch) None else Some(files))
+        .queryExecution.analyzed
     }
 
-    // only the UNPRUNED pin is cached — a condition-pruned plan is a file
-    // subset and must never serve another reference. Pinned relations
-    // carry the table's catalog statistics SCALED to the pinned
-    // snapshot's (or pruned subset's) own logged rows/bytes, so a
-    // 10×-smaller historical version, or a one-partition leg, does not
-    // plan at the current full-table size — NDV/bounds still ride the
-    // latest COMPUTE STATS pass (the best available estimate for a
-    // historical version, and stats only shape plans, never rows; bounds
-    // re-validate per leaf against the pinned relation's historical
-    // attribute types).
+    /** The relation pruned by `cond` where [[prunes]] allows it; None
+      * when it does not, or when the prune fails to analyze. The
+      * original Filter stays on top (pruning is conservative), so either
+      * way the unpruned relation is the correct fallback. */
+    private def pruned(db: String, t: String, cond: Expression): Option[LogicalPlan] =
+      Some(pinOf(db, t)).filter(prunes).flatMap(_ =>
+        scala.util.Try(relation(db, t, Some(GraftSqlShim.column(cond)))).toOption)
+
+    // only the UNPRUNED pinned relation is cached — a condition-pruned
+    // plan is a file subset and must never serve another reference
     private val pinned = scala.collection.mutable.HashMap.empty[String, LogicalPlan]
-    private def pin(db: String, t: String, cond: Option[Expression]): LogicalPlan = {
-      def withStats = {
-        val (df, files) = read(db, t, cond)
-        catalog.forDatabase(db).withTableStats(t, df, prunedTo = files)
-          .queryExecution.analyzed
-      }
-      if (cond.isDefined) withStats
-      else pinned.getOrElseUpdate(s"$db.$t", withStats)
-    }
-
-    // Current snapshot, filter over a table: Some(pruned analyzed plan)
-    // only for a partitioned or stats-bearing table whose filter analyzes
-    // against its schema; None → the relation binds as if unfiltered. The
-    // original Filter stays on top (pruning is conservative), so a failed
-    // or impossible prune degrades to the full scan, never to wrong rows.
-    // The pruned relation re-attaches the table's catalog statistics (the
-    // splice bypasses the stats-bearing temp view) SCALED TO THE KEPT
-    // SUBSET's own logged rows/bytes — a leg pruned to one partition must
-    // not be estimated at full-table size, or it loses the broadcast that
-    // plain file-size estimation would have chosen.
-    private def pruned(db: String, t: String, cond: Expression): Option[LogicalPlan] = {
-      val store = catalog.store(db)
-      // one log read and one metadata read serve both the prunability
-      // check and the prune
-      val files = store.dataFilesAsOf(t, None)
-      val m = store.meta(t)
-      val prunable = m.partition.isDefined || files.exists(_.stats.nonEmpty)
-      if (!prunable) None
-      else scala.util.Try {
-        val kept = store.prunedSubset(t, files, GraftSqlShim.column(cond), m)
-        catalog.forDatabase(db).withTableStats(t,
-            store.readFromFileList(t, kept, m), prunedTo = Some(kept),
-            meta = Some(m))
-          .queryExecution.analyzed
-      }.toOption
-    }
 
     private def bindRel(u: UnresolvedRelation, shadowed: Set[String],
         cond: Option[Expression]): LogicalPlan = {
       val parts = u.multipartIdentifier
-      travel match {
-        case Current =>
-          cond.flatMap(c => resolve(parts, shadowed)
-              .flatMap { case (db, t) => pruned(db, t, c) })
-            .map(SubqueryAlias(parts, _))
-            .getOrElse(parts match {
-              // a current-db qualified relation resolves through its bare
-              // temp view, aliased with both parts so `db.table.col`
-              // references work; a FOREIGN-db one has no temp view, so
-              // the latest snapshot's analyzed plan is spliced in
-              case Seq(db, tbl) if norm(db) == norm(catalog.database) &&
-                  byName.contains(norm(tbl)) =>
-                SubqueryAlias(parts, u.copy(multipartIdentifier = Seq(tbl)))
-              case Seq(_, _) => resolve(parts, shadowed)
-                .map { case (db, t) => SubqueryAlias(parts,
-                  catalog.store(db).read(t, None).queryExecution.analyzed) }
-                .getOrElse(u)
-              case _ => u
-            })
-        case _ =>
-          resolve(parts, shadowed) match {
-            case Some((db, t)) => SubqueryAlias(parts, pin(db, t, cond))
-            case None if parts.size > 1 && byName.contains(norm(parts.last)) =>
-              throw new IllegalArgumentException(
-                s"time travel cannot pin qualified name '${parts.mkString(".")}': " +
-                  s"database '${parts.init.mkString(".")}' does not exist " +
-                  "or has no such table")
-            case None => u
-          }
+      if (at == At.Latest)
+        cond.flatMap(c => resolve(parts, shadowed)
+            .flatMap { case (db, t) => pruned(db, t, c) })
+          .map(SubqueryAlias(parts, _))
+          .getOrElse(parts match {
+            // a current-db qualified relation resolves through its bare
+            // temp view, aliased with both parts so `db.table.col`
+            // references work; a FOREIGN-db one has no temp view, so
+            // the latest snapshot's analyzed plan is spliced in
+            case Seq(db, tbl) if norm(db) == norm(catalog.database) &&
+                byName.contains(norm(tbl)) =>
+              SubqueryAlias(parts, u.copy(multipartIdentifier = Seq(tbl)))
+            case Seq(_, _) => resolve(parts, shadowed)
+              .map { case (db, t) => SubqueryAlias(parts,
+                catalog.store(db).read(t, None).queryExecution.analyzed) }
+              .getOrElse(u)
+            case _ => u
+          })
+      else resolve(parts, shadowed) match {
+        case Some((db, t)) => SubqueryAlias(parts, cond match {
+          case Some(c) => pruned(db, t, c).getOrElse(relation(db, t, None))
+          case None => pinned.getOrElseUpdate(s"$db.$t", relation(db, t, None))
+        })
+        case None if parts.size > 1 && byName.contains(norm(parts.last)) =>
+          throw new IllegalArgumentException(
+            s"time travel cannot pin qualified name '${parts.mkString(".")}': " +
+              s"database '${parts.init.mkString(".")}' does not exist " +
+              "or has no such table")
+        case None => u
       }
     }
 
@@ -627,19 +579,6 @@ final class Engine(catalog: GraftCatalog) {
 }
 
 object Engine {
-
-  /** The snapshot a statement or a stored view's body reads: the current
-    * one, or the single `FOR SYSTEM_TIME` / `FOR SYSTEM_VERSION` clause,
-    * which Rule 3 applies to *every* table (`app-gradio.py:138`). */
-  private sealed trait Travel
-  private case object Current extends Travel
-  private final case class AsOf(ms: Long) extends Travel
-  private final case class SnapshotId(id: Long) extends Travel
-  // a tag or branch name, resolved PER TABLE (table-scoped metadata;
-  // unknown names fail loudly in resolveTag, never fall back). A BRANCH
-  // name reads fork-point + branch commits as a unit; the namespaces are
-  // disjoint by construction (create-time check).
-  private final case class Ref(name: String) extends Travel
 
   /** Python-repr rendering of a result set: `[(v1, v2), (…)]`. */
   def render(rows: Array[Row]): String =

@@ -103,6 +103,8 @@ object SqlMerge {
       keyPairs.map { case (tk, sk) => expr(s"${tgt(tk)} = ${src(sk)}") }
         .reduce(_ && _)
     val targetKeyCols = keyPairs.map(_._1)
+    val cardinality = s"MERGE INTO $target: a target row matches more " +
+      "than one source row (cardinality violation)"
     // matched-file detection keys, renamed into target column names
     val sourceKeys = sourceDf.select(
       keyPairs.map { case (tk, sk) => col(sk).as(tk) }: _*)
@@ -168,9 +170,7 @@ object SqlMerge {
               keyPairs.map { case (_, sk) => col(sk) }: _*)
             val s = sourceDf.withColumn(
               "__src_matches", count(lit(1)).over(w)).alias(sAlias)
-            val guard = assert_true(col("__src_matches") <= 1, lit(
-              s"MERGE INTO $target: a target row matches more than one " +
-                "source row (cardinality violation)"))
+            val guard = assert_true(col("__src_matches") <= 1, lit(cardinality))
             applyArms(t.join(s, joinCond, "inner"), arms.matched,
               coalesce(guard.cast("int"), route(arms.matched.map(_.cond))),
               f => expr(tgt(f)))
@@ -196,14 +196,15 @@ object SqlMerge {
         (Seq(unmatchedKept, matchedKept) ++ inserted).reduce(_ unionByName _)
     }
     // write.merge.mode = merge-on-read: instead of one replacement frame,
-    // hand the store (doomed positions, post-image rows). The matched
-    // frame arrives WITH scan positions attached; every row an arm
-    // updates or deletes contributes its position, update post-images
-    // and not-matched inserts append. The arm routing (and the fused
-    // cardinality guard) is the same machinery the COW path uses.
+    // hand the store (doomed rows, post-image rows). The matched frame
+    // arrives WITH scan positions attached; every row an arm updates or
+    // deletes is doomed with its target columns and position (the
+    // positions go into the delete file, the rows into the change
+    // feed), update post-images and not-matched inserts append. The arm
+    // routing (and the fused cardinality guard) is the same machinery
+    // the COW path uses.
     val morParts: DataFrame => (DataFrame, DataFrame) = { matchedWithPos =>
-      import graft.store.TableStore.{MorFileCol, MorPosCol}
-      val posSel = Seq(col(MorFileCol), col(MorPosCol))
+      val doomedSel = matchedWithPos.columns.toSeq.map(c => col(s"`$tAlias`.`$c`"))
       val t = matchedWithPos.alias(tAlias)
       val keysDistinct = sourceKeys.select(targetKeyCols.map(col): _*).distinct()
       val matchedPart: Option[(DataFrame, DataFrame)] =
@@ -213,14 +214,12 @@ object SqlMerge {
             keyPairs.map { case (_, sk) => col(sk) }: _*)
           val s = sourceDf.withColumn(
             "__src_matches", count(lit(1)).over(w)).alias(sAlias)
-          val guard = assert_true(col("__src_matches") <= 1, lit(
-            s"MERGE INTO $target: a target row matches more than one " +
-              "source row (cardinality violation)"))
+          val guard = assert_true(col("__src_matches") <= 1, lit(cardinality))
           val routed = t.join(s, joinCond, "inner")
             .withColumn("__arm0",
               coalesce(guard.cast("int"), route(arms.matched.map(_.cond))))
             .filter(col("__arm0") > 0)
-          Some((routed.select(posSel: _*),
+          Some((routed.select(doomedSel: _*),
             applyArms(routed, arms.matched, col("__arm0"),
               f => expr(tgt(f)))))
         }
@@ -231,7 +230,7 @@ object SqlMerge {
             .join(keysDistinct, targetKeyCols, "left_anti").alias(tAlias)
             .withColumn("__arm0", route(arms.bySource.map(_.cond)))
             .filter(col("__arm0") > 0)
-          Some((routed.select(posSel: _*),
+          Some((routed.select(doomedSel: _*),
             applyArms(routed, arms.bySource, col("__arm0"),
               f => expr(tgt(f)))))
         }
@@ -255,7 +254,7 @@ object SqlMerge {
         }
       val doomed = (matchedPart.map(_._1) ++ bySourcePart.map(_._1))
         .reduceOption(_ unionByName _)
-        .getOrElse(matchedWithPos.select(posSel: _*).limit(0))
+        .getOrElse(matchedWithPos.limit(0))
       val post = (matchedPart.map(_._2) ++ bySourcePart.map(_._2) ++
         insertedPart)
         .reduceOption(_ unionByName _)
@@ -276,18 +275,22 @@ object SqlMerge {
           replaceFn, rewriteAll = arms.bySource.nonEmpty)
       }
     } catch {
-      case e: Throwable if causeMessages(e).exists(
-          _.contains("cardinality violation")) =>
-        throw new IllegalStateException(
-          s"MERGE INTO $target: a target row matches more than one " +
-            "source row (cardinality violation)", e)
+      case e: Throwable if guardRaised(e, cardinality) =>
+        throw new IllegalStateException(cardinality, e)
     }
     ()
   }
 
-  private def causeMessages(t: Throwable): Seq[String] =
-    Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
-      .take(16).flatMap(e => Option(e.getMessage)).toSeq
+  /** Whether `t` is, or was caused by, the cardinality guard's own
+    * `assert_true` error — not any failure whose text mentions it (the
+    * plan of every MERGE carries the guard's message). */
+  private def guardRaised(t: Throwable, message: String): Boolean =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(16).exists {
+      case e: org.apache.spark.SparkThrowable =>
+        e.getCondition == "USER_RAISED_EXCEPTION" &&
+          Option(e.getMessageParameters.get("errorMessage")).contains(message)
+      case _ => false
+    }
 
   /** `name [AS a]` or `(subquery) [AS] a [(col, …)]` → (DataFrame, alias). */
   private def parseSource(catalog: GraftCatalog,

@@ -4,6 +4,8 @@ import java.sql.Timestamp
 import java.time.{LocalDate, LocalDateTime, ZoneOffset}
 import java.time.format.DateTimeFormatter
 
+import graft.store.At
+
 /** Handles Impala/Iceberg `FOR SYSTEM_TIME AS OF '<ts>'` syntax.
   *
   * The reference instructs the LLM to apply the clause "on every table in
@@ -30,7 +32,16 @@ object TimeTravelRewriter {
      "|VERSION\\s+AS\\s+OF)\\s+('([^']*)'|\"([^\"]*)\"|\\S+)").r
 
   final case class Rewritten(sql: String, asOfMs: Option[Long],
-      versionId: Option[Long] = None, versionTag: Option[String] = None)
+      versionId: Option[Long] = None, versionTag: Option[String] = None) {
+    /** The snapshot the statement reads: the one clause, which Rule 3
+      * applies to *every* table (`app-gradio.py:138`), or the latest. */
+    def at: At = (asOfMs, versionId, versionTag) match {
+      case (Some(ms), _, _) => At.AsOfMs(ms)
+      case (_, Some(id), _) => At.Version(id)
+      case (_, _, Some(r))  => At.Ref(r)
+      case _                => At.Latest
+    }
+  }
 
   def rewrite(sql: String): Rewritten = {
     var asOf: Option[Long] = None

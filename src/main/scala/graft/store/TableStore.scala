@@ -7,7 +7,6 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, concat, input_file_name, lit, max, min, not, struct, sum, to_json, when, xxhash64}
 import org.apache.spark.sql.types._
 
@@ -37,8 +36,8 @@ import org.apache.spark.sql.types._
   * snapshot BY REFERENCE — `DELETE FROM t WHERE id = 1` at 100 TB rewrites
   * one file, not the table.
   */
-final class TableStore(val root: HPath, spark: SparkSession)
-    extends TableCommit {
+final class TableStore(val root: HPath, private[store] val spark: SparkSession)
+    extends TableCommit with TableScan {
   import TableCommit._
 
   private val fs: FileSystem =
@@ -63,7 +62,7 @@ final class TableStore(val root: HPath, spark: SparkSession)
       files: Seq[DataFile]): Map[String, (Long, Long)] =
     files.map(f => fs.makeQualified(absPath(table, f.path)).toUri.getPath
       -> (f.records, f.bytes)).toMap
-  private def absPath(table: String, rel: String): HPath =
+  private[store] def absPath(table: String, rel: String): HPath =
     new HPath(tableDir(table), rel)
 
   def exists(table: String): Boolean =
@@ -118,7 +117,7 @@ final class TableStore(val root: HPath, spark: SparkSession)
 
   /** The schema a given snapshot committed under; the current schema
     * for snapshots stamped before versioning. */
-  private def schemaAt(table: String, snap: Snapshot, m: TableMeta): StructType =
+  private[store] def schemaAt(table: String, snap: Snapshot, m: TableMeta): StructType =
     if (snap.schemaVersion < 1) m.schema
     else try meta(table, snap.schemaVersion).schema
     catch { case _: java.io.FileNotFoundException => m.schema }
@@ -179,7 +178,7 @@ final class TableStore(val root: HPath, spark: SparkSession)
 
   /** Spec plus the zone its timestamp partition values are rendered in
     * (pinned at create; absent in pre-zone tables → session zone). */
-  private def partitionSpecZone(m: TableMeta): Option[(PartitionSpec, ZoneId)] =
+  private[store] def partitionSpecZone(m: TableMeta): Option[(PartitionSpec, ZoneId)] =
     m.partition.map(_ -> m.partitionZone.map(ZoneId.of).getOrElse(sessionZone))
 
   /** Partition-spec evolution (`ALTER TABLE … SET PARTITION SPEC`):
@@ -208,7 +207,7 @@ final class TableStore(val root: HPath, spark: SparkSession)
     * the current session zone disagrees with the table's pinned zone.
     * Only the calendar transforms render wall-clock values; identity,
     * bucket (internal-micros hash) and truncate are zone-free. */
-  private def zoneMismatch(m: TableMeta, sp: PartitionSpec,
+  private[store] def zoneMismatch(m: TableMeta, sp: PartitionSpec,
       specZone: ZoneId): Boolean = {
     val zoneSensitive = m.schema.fields
       .find(_.name.equalsIgnoreCase(sp.column))
@@ -344,7 +343,7 @@ final class TableStore(val root: HPath, spark: SparkSession)
       s"cannot create branch '$name': a tag with that name exists on $table")
     val base = atSnapshotId.getOrElse(currentSnapshotId(table).getOrElse(0L))
     if (atSnapshotId.isDefined)
-      require(SnapshotLog.resolveVersion(fs, tableDir(table), base).isDefined,
+      require(pin(table, At.Version(base), meta(table)).snapshot.isDefined,
         s"no snapshot id $base in $table")
     updateBranches(table) { bs =>
       require(!bs.keys.exists(_.equalsIgnoreCase(name)),
@@ -373,33 +372,6 @@ final class TableStore(val root: HPath, spark: SparkSession)
     commit(table, Change("append", timestampMs, moved,
       delta = Some(moved.map(_.records).sum), guard = Some(mv),
       branch = Some(name)))
-  }
-
-  /** Read a branch as a unit: the fork-point snapshot's files folded
-    * through every branch entry (appends add files; COW entries remove
-    * their matched files and add rewrites), current schema. This is
-    * what `FOR SYSTEM_VERSION AS OF '<branch>'` resolves to. */
-  def readBranch(table: String, name: String): DataFrame =
-    readFileList(table, branchFileSet(table, branchNamed(table, name)),
-      meta(table))
-
-  private def branchNamed(table: String, name: String): Branch = {
-    val bs = branches(table)
-    bs.collectFirst { case (k, b) if k.equalsIgnoreCase(name) => b }.getOrElse(
-      throw new IllegalArgumentException(s"no branch '$name' on $table"))
-  }
-
-  /** A branch's CURRENT file set — fork-point files folded through the
-    * entry chain. Pure log/sidecar metadata, no data I/O. */
-  private def branchFileSet(table: String, b: Branch): Seq[DataFile] = {
-    val base =
-      if (b.baseSnapshotId == 0L) Seq.empty
-      else SnapshotLog.resolveVersion(fs, tableDir(table), b.baseSnapshotId)
-        .map(_.files).getOrElse(Seq.empty)
-    b.entries.foldLeft(base) { (files, e) =>
-      val rm = e.removedPaths.toSet
-      files.filterNot(f => rm(f.path)) ++ e.files
-    }
   }
 
   /** Highest streaming batch id `sinkId` has committed into this table
@@ -433,7 +405,7 @@ final class TableStore(val root: HPath, spark: SparkSession)
   /** Newest snapshot committed at or before `tsMs` (time-travel
     * resolution exposed for timestamp-bounded change scans). */
   def snapshotIdAtOrBefore(table: String, tsMs: Long): Option[Long] =
-    SnapshotLog.resolve(fs, tableDir(table), Some(tsMs)).map(_.id)
+    pin(table, At.AsOfMs(tsMs), meta(table)).snapshot.map(_.id)
 
   /** Source files every COPY INTO commit has already ingested — log
     * metadata only (the ledger rides commit summaries, so it is exactly
@@ -526,19 +498,18 @@ final class TableStore(val root: HPath, spark: SparkSession)
         s"cannot add CHECK constraint '$name' to $table: existing row " +
           s"violates ($exprText): ${violated.headOption.getOrElse("")}")
     }
-    val base = SnapshotLog.resolve(fs, tableDir(table), None)
-    validate(base.map(_.files).getOrElse(Seq.empty), m)
+    val base = pin(table, At.Latest, m)
+    validate(base.files, m)
     // a commit that landed after the scan was never checked: re-check
     // the files it added under the lock, so no violating row can end up
     // under the new constraint (writes guarded without it fail their
     // commit from here on — see [[TableCommit.commit]])
     commitMeta(table) { cur =>
       unused(cur)
-      val now = SnapshotLog.resolve(fs, tableDir(table), None)
-      if (now.map(_.id) != base.map(_.id)) {
-        val seen = base.map(_.filePaths.toSet).getOrElse(Set.empty[String])
-        validate(now.map(_.files).getOrElse(Seq.empty)
-          .filterNot(f => seen(f.path)), cur)
+      val now = pin(table, At.Latest, cur)
+      if (now.snapshot.map(_.id) != base.snapshot.map(_.id)) {
+        val seen = base.files.map(_.path).toSet
+        validate(now.files.filterNot(f => seen(f.path)), cur)
       }
       cur.copy(constraints = cur.constraints :+ CheckConstraint(name, exprText))
     }
@@ -817,686 +788,8 @@ final class TableStore(val root: HPath, spark: SparkSession)
   private[store] def recordsOf(table: String, f: DataFile): Long =
     if (f.records >= 0) f.records else parquetRowCount(absPath(table, f.path))
 
-  def currentFiles(table: String): Seq[String] =
-    filesAsOf(table, None)
-
-  def filesAsOf(table: String, asOfMs: Option[Long]): Seq[String] =
-    dataFilesAsOf(table, asOfMs).map(f => absPath(table, f.path).toString)
-
-  def dataFilesAsOf(table: String, asOfMs: Option[Long]): Seq[DataFile] =
-    SnapshotLog.resolve(fs, tableDir(table), asOfMs)
-      .map(_.files).getOrElse(Seq.empty)
-
-  /** Record count of the snapshot AS OF `asOfMs` (latest when None) from
-    * the log entry alone — no manifest hydration, no data I/O. Powers
-    * metadata-answered `SELECT COUNT(*)`. None = no snapshot at that
-    * time, OR the count is only an upper bound because a live equality
-    * ref makes matched counts unknowable (decline, never guess — the
-    * same contract as [[snapshotMetaAsOf]]). */
-  def recordCountAsOf(table: String, asOfMs: Option[Long]): Option[Long] = {
-    if (!exists(table)) return None
-    val hit = SnapshotLog.asOf(SnapshotLog.read(fs, tableDir(table)), asOfMs)
-    hit.flatMap(_.exactRecordCount)
-  }
-
-  /** Record count of an exact snapshot id (None = unknown id OR an
-    * equality-declined count, so callers fall back to the raising read
-    * path and keep its error contract). */
-  def recordCountVersion(table: String, snapshotId: Long): Option[Long] =
-    if (!exists(table)) None
-    else SnapshotLog.read(fs, tableDir(table))
-      .find(_.id == snapshotId).flatMap(_.exactRecordCount)
-
-  /** Total on-disk data bytes of the snapshot AS OF `asOfMs` (latest
-    * when None) from the log entry alone — NO manifest hydration (the
-    * commit-summary fast path, [[SnapshotLog.TotalDataBytesKey]]).
-    * None = legacy log predating the key, or no snapshot; callers fall
-    * back to hydrating and summing once. */
-  def totalDataBytesAsOf(table: String,
-      asOfMs: Option[Long] = None): Option[Long] = {
-    if (!exists(table)) return None
-    val hit = SnapshotLog.asOf(SnapshotLog.read(fs, tableDir(table)), asOfMs)
-    hit.flatMap(_.summary.get(SnapshotLog.TotalDataBytesKey))
-      .flatMap(_.toLongOption)
-  }
-
-  /** Metadata for stats-answered aggregates: (schema of the resolved
-    * snapshot, record count, LAZY hydrated file list). The file thunk
-    * exists so a pure `COUNT(*)` never hydrates a manifest — only
-    * MIN/MAX answers touch the per-file stats. None = no snapshot
-    * resolves (callers fall back to the scan path and keep its
-    * semantics). A created-but-empty table resolves with count 0 and no
-    * files. */
-  def snapshotMetaAsOf(table: String, asOfMs: Option[Long])
-      : Option[(StructType, Long, () => Seq[DataFile])] =
-    snapshotMetaAsOf(table, asOfMs, meta(table))
-
-  /** [[snapshotMetaAsOf]] under an already-loaded record. */
-  private[graft] def snapshotMetaAsOf(table: String, asOfMs: Option[Long],
-      m: TableMeta): Option[(StructType, Long, () => Seq[DataFile])] = {
-    if (!exists(table)) return None
-    val dir = tableDir(table)
-    val all = SnapshotLog.read(fs, dir)
-    // equality deletes make recordCount an UPPER bound — surface -1 so
-    // metadata COUNT declines to the scan (log-only check, no hydration)
-    def countOf(s: Snapshot): Long = s.exactRecordCount.getOrElse(-1L)
-    asOfMs match {
-      case None => all.lastOption match {
-        case None => Some((m.schema, 0L, () => Seq.empty))
-        case Some(s) => Some((m.schema, countOf(s),
-          () => SnapshotLog.hydrate(fs, dir, s).files))
-      }
-      case Some(ts) => all.filter(_.timestampMs <= ts).lastOption.map(s =>
-        (schemaAt(table, s, m), countOf(s),
-          () => SnapshotLog.hydrate(fs, dir, s).files))
-    }
-  }
-
-  /** Same, resolved by exact snapshot id. */
-  def snapshotMetaVersion(table: String, snapshotId: Long)
-      : Option[(StructType, Long, () => Seq[DataFile])] =
-    if (!exists(table)) None
-    else {
-      val dir = tableDir(table)
-      SnapshotLog.read(fs, dir).find(_.id == snapshotId).map(s =>
-        (schemaAt(table, s, meta(table)), s.exactRecordCount.getOrElse(-1L),
-          () => SnapshotLog.hydrate(fs, dir, s).files))
-    }
-
-  /** Snapshot-id read (`FOR SYSTEM_VERSION AS OF`). Unknown ids raise —
-    * silently returning empty would read as "no data at that version". */
-  def readVersion(table: String, snapshotId: Long): DataFrame =
-    readVersionWithFiles(table, snapshotId)._1
-
-  /** [[readVersion]] plus the resolved snapshot's file list — the pin
-    * path attaches statistics scaled to the SNAPSHOT's own logged
-    * rows/bytes (a 10×-smaller historical version must not plan at
-    * today's size). */
-  private[graft] def readVersionWithFiles(table: String,
-      snapshotId: Long): (DataFrame, Seq[DataFile]) = {
-    val snap = SnapshotLog.resolveVersion(fs, tableDir(table), snapshotId)
-      .getOrElse(throw new IllegalArgumentException(
-        s"table $table has no snapshot id $snapshotId"))
-    val m = meta(table)
-    (readFileListAs(table, snap.files, schemaAt(table, snap, m), m), snap.files)
-  }
-
-  /** [[read]] plus the resolved file list (same stats-scaling seam as
-    * [[readVersionWithFiles]], for the AS-OF and latest pins). */
-  private[graft] def readWithFiles(table: String,
-      asOfMs: Option[Long]): (DataFrame, Seq[DataFile]) =
-    readWithFiles(table, asOfMs, meta(table))
-
-  /** [[readWithFiles]] under an already-loaded record. */
-  private[graft] def readWithFiles(table: String, asOfMs: Option[Long],
-      m: TableMeta): (DataFrame, Seq[DataFile]) =
-    asOfMs match {
-      // latest read: always the CURRENT schema (evolution applies to all
-      // live data, Iceberg's current-read contract)
-      case None =>
-        val files = dataFilesAsOf(table, None)
-        (readFileList(table, files, m), files)
-      // time travel: the schema of the resolved snapshot's time
-      case Some(_) =>
-        SnapshotLog.resolve(fs, tableDir(table), asOfMs) match {
-          case Some(snap) =>
-            (readFileListAs(table, snap.files, schemaAt(table, snap, m), m),
-              snap.files)
-          case None => (readFileList(table, Seq.empty, m), Seq.empty)
-        }
-    }
-
-  /** Latest-snapshot read; `asOfMs` = time travel. Snapshot resolution →
-    * exact file list is the manifest-pruning analogue: Spark scans only the
-    * files of that version (no directory listing, no stale files).
-    */
-  def read(table: String, asOfMs: Option[Long] = None): DataFrame =
-    read(table, asOfMs, meta(table))
-
-  /** [[read]] under an already-loaded record. */
-  private[graft] def read(table: String, asOfMs: Option[Long],
-      m: TableMeta): DataFrame =
-    readWithFiles(table, asOfMs, m)._1
-
-  /** The first `n` rows of the current snapshot: the rows, in their
-    * order, that `read(table).limit(n).collect()` returns, read on the
-    * driver with no Spark job. */
-  def sampleRows(table: String, n: Int, m: TableMeta): Array[Row] = {
-    val (df, files) = readWithFiles(table, None, m)
-    sampleRows(df, files, n, m)
-  }
-
-  /** [[sampleRows]] over a scan `df` already built from `files` under `m`.
-    *
-    * A collected limit reads the scan's file partitions in order and
-    * stops at `n` rows (`SparkPlan.executeTake`). This reads the same
-    * files in the order the planned scan's `FileScanRDD` holds them
-    * (planning starts no job, so the size-descending packing and its
-    * ties are Spark's own), each whole, with the streaming source's
-    * Parquet reader, which maps renamed columns, null-fills added ones
-    * and up-casts widened types, and turns its rows into [[Row]]s with
-    * the frame's own deserializer.
-    *
-    * Falls back to Spark's own read when the rows are not a prefix of
-    * whole files in that order: `df.limit(n).collect()` for delete files
-    * (an anti-join sits above the scan), and the take that collect runs,
-    * over the plan already built, for a bucketed scan (files grouped by
-    * bucket), a needed file split across partitions, or a file the
-    * reader rejects. */
-  private[graft] def sampleRows(df: DataFrame, files: Seq[DataFile], n: Int,
-      m: TableMeta): Array[Row] = {
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.execution.datasources.FileScanRDD
-    if (n <= 0 || files.exists(_.deletes.nonEmpty)) return df.limit(n).collect()
-    val plan = df.queryExecution.executedPlan
-    val toRow = org.apache.spark.sql.GraftSqlShim.rowDeserializer(df)
-    // what a collected limit runs (`CollectLimitExec` takes from its
-    // child), on the plan already built instead of planning it again
-    def viaSpark: Array[Row] = plan.executeTake(n).map(toRow)
-    val partitions = plan.collect {
-      case s: FileSourceScanExec => s
-    } match {
-      case Seq(scan) if !scan.bucketedScan => scan.inputRDD match {
-        case rdd: FileScanRDD => rdd.filePartitions
-        case _ => return viaSpark
-      }
-      case _ => return viaSpark
-    }
-    val schema = df.schema
-    val aliases = aliasMap(m.renameEvents, schema)
-    val hconf = spark.sessionState.newHadoopConf()
-    val rows = Array.newBuilder[Row]
-    var taken = 0
-    val pending = partitions.iterator.flatMap(_.files)
-    while (taken < n && pending.hasNext) {
-      val f = pending.next()
-      if (f.start != 0 || f.length != f.fileSize) return viaSpark
-      try {
-        val r = new graft.streaming.GraftPartitionReader(f.toPath.toString,
-          schema, aliases, hconf = hconf)
-        try while (taken < n && r.next()) { rows += toRow(r.get()); taken += 1 }
-        finally r.close()
-      } catch { case scala.util.control.NonFatal(_) => return viaSpark }
-    }
-    rows.result()
-  }
-
-  /** MIN (`isMax = false`) or MAX of an integral, date or timestamp
-    * column over the current snapshot, folded from the bounds each data
-    * file logged at commit: no data file is read. Outer None: metadata
-    * cannot answer (see the overload); inner None: the column holds no
-    * non-null value, SQL NULL. */
-  def columnBound(table: String, column: String,
-      isMax: Boolean): Option[Option[Long]] = {
-    val m = meta(table)
-    val resolver = spark.sessionState.conf.resolver
-    m.schema.fields.find(f => resolver(f.name, column)).flatMap(f =>
-      columnBound(f, dataFilesAsOf(table, None), m.renameEvents, isMax))
-  }
-
-  /** [[columnBound]] of `field` over `files`: a snapshot's live files,
-    * or the subset a partition-aligned WHERE keeps. None (decline to a
-    * scan) when the type is not integral, date or timestamp — float and
-    * double bounds are unsound with NaN (Spark orders NaN above every
-    * value, Parquet stats ignore it) and string bounds can be cut by the
-    * log's length cap — or when any file logged no bounds for the column
-    * (a legacy file) or carries deletes (its extreme value may be
-    * deleted). All-null files contribute nothing, as in the scan. */
-  private[graft] def columnBound(field: StructField, files: Seq[DataFile],
-      events: Seq[(String, String)], isMax: Boolean): Option[Option[Long]] = {
-    if (!TableStore.BoundTypes.contains(field.dataType)) return None
-    // a renamed column's old files logged their bounds under the physical
-    // name of their time: fold over the whole alias chain, as reads do
-    val names = (field.name +: aliasesOf(events, field.name)).map(_.toLowerCase)
-    var acc: Option[Long] = None
-    for (f <- files) {
-      if (f.deletes.nonEmpty) return None
-      names.iterator.flatMap(f.stats.get).nextOption() match {
-        case None => return None
-        case Some(b) =>
-          val r = Pruning.fromBounds(b)
-          if (!r.allNulls) (if (isMax) r.max else r.min) match {
-            case Some(v: Long) =>
-              acc = Some(acc.fold(v)(a => if (isMax) math.max(a, v) else math.min(a, v)))
-            case _ => return None
-          }
-      }
-    }
-    Some(acc)
-  }
-
-  /** Predicate-scoped read with PARTITION PRUNING: files whose logged
-    * partition value proves no row can match `predicate` are dropped from
-    * the scan before Spark ever sees the list — pure snapshot-log
-    * metadata, no storage I/O. The predicate is then still applied in
-    * full (pruning is conservative, not exact). At 100 TB with a
-    * `day(ts)` spec this is the difference between scanning one day's
-    * files and scanning the table.
-    */
-  def readWhere(table: String, predicate: Column,
-      asOfMs: Option[Long] = None): DataFrame =
-    readPruned(table, predicate, asOfMs).filter(predicate)
-
-  /** Predicate-scoped SYSTEM_VERSION read: snapshot-id time travel WITH
-    * partition/stat pruning and the row filter applied — `readWhere`'s
-    * contract at a pinned version (e.g. probing an index table as of a
-    * snapshot before an append). Unknown ids raise like [[readVersion]]. */
-  def readWhereVersion(table: String, snapshotId: Long,
-      predicate: Column): DataFrame = {
-    val snap = SnapshotLog.resolveVersion(fs, tableDir(table), snapshotId)
-      .getOrElse(throw new IllegalArgumentException(
-        s"table $table has no snapshot id $snapshotId"))
-    val m = meta(table)
-    readFileListAs(table, pruneList(snap.files, predicate, m),
-      schemaAt(table, snap, m), m).filter(predicate)
-  }
-
-  /** Summary map of snapshot `snapshotId` (raises on unknown ids). */
-  def summaryVersion(table: String, snapshotId: Long): Map[String, String] =
-    SnapshotLog.resolveVersion(fs, tableDir(table), snapshotId)
-      .getOrElse(throw new IllegalArgumentException(
-        s"table $table has no snapshot id $snapshotId"))
-      .summary
-
-  /** Pruned relation WITHOUT the predicate applied — for callers that
-    * keep their own Filter on top (the SQL-path plan splice): scans only
-    * [[prunedFiles]]. Pruning is conservative, so wrapping this in the
-    * original filter is always semantics-preserving. */
-  def readPruned(table: String, predicate: Column,
-      asOfMs: Option[Long] = None): DataFrame =
-    readPrunedWithFiles(table, predicate, asOfMs)._1
-
-  /** [[readPruned]] plus the KEPT file list, so the caller can scale
-    * attached statistics to the surviving subset. */
-  private[graft] def readPrunedWithFiles(table: String, predicate: Column,
-      asOfMs: Option[Long] = None): (DataFrame, Seq[DataFile]) = {
-    val m = meta(table)
-    asOfMs match {
-    case None =>
-      val kept = pruneList(dataFilesAsOf(table, None), predicate, m)
-      (readFileList(table, kept, m), kept)
-    // time travel: same snapshot-schema binding as read() — a pruned
-    // AS-OF read must not render a different schema than the unpruned one
-    case Some(_) =>
-      SnapshotLog.resolve(fs, tableDir(table), asOfMs) match {
-        case Some(snap) =>
-          val kept = pruneList(snap.files, predicate, m)
-          (readFileListAs(table, kept, schemaAt(table, snap, m), m), kept)
-        case None => (readFileList(table, Seq.empty, m), Seq.empty)
-      }
-    }
-  }
-
-  /** The file list [[readWhere]] would scan (exposed for plan/pruning
-    * assertions). */
-  def prunedFiles(table: String, predicate: Column,
-      asOfMs: Option[Long] = None): Seq[DataFile] =
-    pruneList(dataFilesAsOf(table, asOfMs), predicate, meta(table))
-
-  /** Dynamic file pruning (the join-driven skipping Databricks calls
-    * DFP): the files a scan for rows whose `keyCol` is one of `keys`
-    * must touch. The key set becomes an IN predicate, so EVERY metadata
-    * tier the static prune consults fires per key: partition values,
-    * per-file min/max stats (tight on sorted/z-ordered layouts), bucket
-    * ids (each key hashes to one bucket), and log-level bloom filters
-    * (point probes — the needle tier). At 100 TB this turns "scan the
-    * fact table to join 50 dim rows" into "scan the handful of files
-    * whose metadata admits one of 50 keys"; keys come from a
-    * driver-collected dim side, so callers must keep the set
-    * metadata-sized ([[graft.catalog.GraftCatalog.joinPruned]] enforces
-    * a cap and falls back to the plain join beyond it). */
-  def filesForKeys(table: String, keyCol: String,
-      keys: Seq[Any]): Seq[DataFile] = filesForKeys(table, keyCol, keys, meta(table))
-
-  private def filesForKeys(table: String, keyCol: String, keys: Seq[Any],
-      m: TableMeta): Seq[DataFile] = {
-    val sch = m.schema
-    require(sch.fieldNames.exists(_.equalsIgnoreCase(keyCol)),
-      s"join-prune column '$keyCol' not in schema of $table")
-    if (keys.isEmpty) return Seq.empty
-    pruneList(dataFilesAsOf(table, None),
-      col(keyCol).isin(keys: _*), m)
-  }
-
-  /** The relation over exactly [[filesForKeys]]'s files — no row filter
-    * (the caller's join keeps only matching rows; pruning is
-    * conservative, so the composition is semantics-preserving). */
-  def readForKeys(table: String, keyCol: String, keys: Seq[Any]): DataFrame = {
-    val m = meta(table)
-    readFileList(table, filesForKeys(table, keyCol, keys, m), m)
-  }
-
-  /** Pruned relation over an ALREADY-FETCHED file list (the SQL-path
-    * splice prefetches the list for its prunability check — re-reading
-    * the log, and re-hydrating a manifest, on every query would double
-    * the hot path's metadata I/O). */
-  private[graft] def readPrunedFrom(table: String, files: Seq[DataFile],
-      predicate: Column): DataFrame = {
-    val m = meta(table)
-    readFileList(table, pruneList(files, predicate, m), m)
-  }
-
-  /** The subset of an already-fetched file list the prune keeps — for
-    * callers that need the KEPT entries themselves (the SQL splice
-    * scales its attached statistics by the pruned subset's own logged
-    * rows/bytes, so a heavily pruned leg is not estimated at full-table
-    * size and mis-ranked out of a broadcast). */
-  private[graft] def prunedSubset(table: String, files: Seq[DataFile],
-      predicate: Column, m: TableMeta): Seq[DataFile] =
-    pruneList(files, predicate, m)
-
-  /** Relation over an explicit (already pruned) file list. */
-  private[graft] def readFromFileList(table: String,
-      files: Seq[DataFile], m: TableMeta): DataFrame =
-    readFileList(table, files, m)
-
-  private def pruneList(files: Seq[DataFile],
-      predicate: Column, m: TableMeta): Seq[DataFile] = {
-    if (files.isEmpty) return files
-    val (hasPart, rangesOf) = fileRangeInfo(m)
-    val bucketKeep = bucketChecker(m)
-    val bloomOf = bloomLookup(m, files)
-    if (!hasPart && bucketKeep.isEmpty && files.forall(_.stats.isEmpty) &&
-        bloomOf.isEmpty)
-      return files
-    val pe = analyzedPredicate(m, predicate)
-    files.filter(f => Pruning.mightMatch(pe, rangesOf(f)) &&
-      bucketKeep.forall(_(pe, f)) &&
-      bloomOf.forall(lk => BloomFilter.mightMatchBlooms(pe, lk(f))))
-  }
-
-  /** Per-file bloom lookup with rename reconciliation — old files
-    * logged their filters under the physical column name of their time,
-    * so probe names remap the same way [[fileRangeInfo]] remaps stats
-    * keys. None when no file in the list carries a filter (the common
-    * case skips the remap build entirely). */
-  private def bloomLookup(m: TableMeta, files: Seq[DataFile])
-      : Option[DataFile => String => Option[ColBloom]] = {
-    if (files.forall(_.blooms.isEmpty)) return None
-    val events = m.renameEvents
-    val remap: Map[String, String] =
-      if (events.isEmpty) Map.empty
-      else m.schema.fields.toSeq.flatMap(f =>
-        aliasesOf(events, f.name).map(a =>
-          a.toLowerCase -> f.name.toLowerCase)).toMap
-    Some(f => name => f.blooms.collectFirst {
-      case (c, b) if remap.getOrElse(c, c) == name => b
-    })
-  }
-
-  /** Bucket-transform prune check: Some((pred, file) => keep) when the
-    * current spec is `bucket(n, col)`. A file's bucket id comes from its
-    * logged partition value under the spec-qualified key (old-spec files
-    * miss the key → conservative keep). */
-  private def bucketChecker(m: TableMeta)
-      : Option[(org.apache.spark.sql.catalyst.expressions.Expression,
-        DataFile) => Boolean] =
-    m.partition.filter(_.transform == "bucket").map { sp =>
-      val n = sp.param.get
-      val srcType = m.schema.fields
-        .find(_.name.equalsIgnoreCase(sp.column)).map(_.dataType)
-        .getOrElse(StringType)
-      val keys = specPartitionKeys(m, sp)
-      (pe, f) =>
-        keys.iterator.flatMap(k => f.partition.collectFirst {
-          case (pk, v) if pk.equalsIgnoreCase(k) => v
-        }).nextOption().flatMap(_.toIntOption) match {
-          case Some(b) => Pruning.mightMatchBucket(pe, sp.column, srcType, n, b)
-          case None    => true // pre-spec / other-spec file: keep
-        }
-    }
-
-  /** Spec-qualified partition keys a bucket file may be logged under —
-    * the current column name plus its historical physical names. */
-  private def specPartitionKeys(m: TableMeta,
-      sp: PartitionSpec): Seq[String] = {
-    val events = m.renameEvents
-    val cols = sp.column +:
-      (if (events.isEmpty) Seq.empty else aliasesOf(events, sp.column))
-    cols.map(c => sp.copy(column = c).partitionKey)
-  }
-
-  /** Per-file column ranges for the pruning/exactness evaluators: the
-    * partition-derived range (when the spec survives the zone check)
-    * intersected with the logged footer stats. Returns whether a live
-    * partition dimension exists plus the per-file range function. */
-  private def fileRangeInfo(m: TableMeta)
-      : (Boolean, DataFile => Map[String, Pruning.ColRange]) = {
-    // zone drifted since create: partition values and predicate literals
-    // live in different wall-clock frames — the partition dimension is
-    // skipped (conservative); stored column stats are zone-free
-    val partInfo = partitionSpecZone(m)
-      .filterNot { case (sp, z) => zoneMismatch(m, sp, z) }
-    val sch = m.schema
-    val srcType = partInfo.map { case (sp, _) =>
-      sch.fields.find(_.name.equalsIgnoreCase(sp.column)).map(_.dataType)
-        .getOrElse(StringType)
-    }
-    // Renamed columns: old files logged their stats/partition values
-    // under the physical name of their time — remap onto the current
-    // name so a predicate on the new name still prunes them.
-    val events = m.renameEvents
-    val statRemap: Map[String, String] =
-      if (events.isEmpty) Map.empty
-      else sch.fields.toSeq.flatMap(f =>
-        aliasesOf(events, f.name).map(a => a.toLowerCase -> f.name.toLowerCase)).toMap
-    // parameterized transforms log values under spec-qualified keys
-    // (see PartitionSpec.partitionKey) so a later spec never misreads
-    // an old file's value; each historical column name gets its own key
-    val partNames: Seq[String] = partInfo.toSeq.flatMap { case (sp, _) =>
-      specPartitionKeys(m, sp)
-    }
-    (partInfo.isDefined, { f =>
-      val partRanges: Map[String, Pruning.ColRange] = partInfo match {
-        case Some((sp, zone)) =>
-          partNames.iterator
-            .flatMap(n => f.partition.collectFirst {
-              case (k, v) if k.equalsIgnoreCase(n) => v
-            }).nextOption() match {
-            case Some(v) =>
-              Map(sp.column.toLowerCase -> sp.sourceRange(v, srcType.get, zone))
-            case None => Map.empty // pre-spec file without partition value
-          }
-        case None => Map.empty
-      }
-      val statRanges = f.stats.map { case (c, b) =>
-        statRemap.getOrElse(c, c) -> Pruning.fromBounds(b) }
-      // both describe the same file: intersect per column (an unbounded
-      // stats entry must never loosen a bounded partition-derived range)
-      (partRanges.keySet ++ statRanges.keySet).map { c =>
-        c -> ((partRanges.get(c), statRanges.get(c)) match {
-          case (Some(p), Some(s)) => Pruning.intersect(p, s)
-          case (p, s)             => p.orElse(s).get
-        })
-      }.toMap
-    })
-  }
-
-  /** EXACT file classification under `predicate` — the metadata layer
-    * behind filtered `COUNT(*)`/`MIN`/`MAX` with no scan: Some(allMatch)
-    * when every file is provably all-match or no-match (a
-    * partition-aligned predicate over partition/stat ranges), None as
-    * soon as one file might match partially. Unlike [[pruneList]], which
-    * is conservative and always safe, callers may fold per-file record
-    * counts or bounds over the returned files ONLY because the
-    * classification is exact. */
-  private[graft] def exactMatchFiles(table: String, files: Seq[DataFile],
-      predicate: Column): Option[Seq[DataFile]] = {
-    val m = meta(table)
-    if (files.isEmpty) return Some(Seq.empty)
-    val (_, rangesOf) = fileRangeInfo(m)
-    val bucketKeep = bucketChecker(m)
-    val bloomOf = bloomLookup(m, files)
-    val pe = analyzedPredicate(m, predicate)
-    val out = Seq.newBuilder[DataFile]
-    for (f <- files) {
-      val ranges = rangesOf(f)
-      // provably-no-match first: a failed bucket check (literal hashes
-      // to a different bucket) and a bloom "no" (zero false negatives)
-      // are as exact as an out-of-range bound
-      if (Pruning.mightMatch(pe, ranges) && bucketKeep.forall(_(pe, f)) &&
-          bloomOf.forall(lk => BloomFilter.mightMatchBlooms(pe, lk(f)))) {
-        if (Pruning.mustMatchAll(pe, ranges)) out += f
-        else return None // partial file
-      }
-    }
-    Some(out.result())
-  }
-
-  /** Resolve `predicate` against the table schema so the pruning walker
-    * sees real Catalyst comparisons (the Spark 4 Column DSL builds lazy
-    * ColumnNodes) with the analyzer's coercion casts in place. Analysis
-    * over an empty relation — driver-only, no job. */
-  private def analyzedPredicate(m: TableMeta,
-      predicate: Column): org.apache.spark.sql.catalyst.expressions.Expression = {
-    import org.apache.spark.sql.catalyst.plans.logical.Filter
-    val df = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], m.schema)
-    df.filter(predicate).queryExecution.analyzed.collectFirst {
-      case f: Filter => f.condition
-    }.getOrElse(org.apache.spark.sql.catalyst.expressions.Literal.TrueLiteral)
-  }
-
   private[store] def sessionZone: ZoneId =
     ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone)
-
-  private[store] def readFileList(table: String, files: Seq[DataFile],
-      m: TableMeta): DataFrame = {
-    // bucket(n, key) tables: attach the BucketSpec so the scan reports
-    // HashPartitioning(key, n) and same-bucketed joins plan shuffle-free.
-    // Engaged only when the WHOLE current file population was written
-    // under the CURRENT spec (qualified partition key present — an old
-    // bucket(8) file read as bucket(16) would break the partitioning
-    // claim, not just miss an optimization), every file name carries a
-    // parsable bucket tag, and the KEY itself was never renamed (old
-    // files would surface the key under another physical name, so the
-    // scan's key attribute — and the partitioning claim — would be
-    // null-poisoned; non-key renames keep it, their coalesce projection
-    // sits above the scan and preserves partitioning).
-    val bucketable = m.partition
-      .filter(_.transform == "bucket")
-      .filter(_ => files.nonEmpty)
-      // merge-on-read deletes splice an anti-join above the scan, which
-      // would break the HashPartitioning claim a BucketSpec makes — a
-      // dirty file population reads through the standard path instead
-      // (correct, just not exchange-free; compaction restores the claim)
-      .filter(_ => files.forall(_.deletes.isEmpty))
-      .filter { sp =>
-        val key = sp.partitionKey
-        aliasesOf(m.renameEvents, sp.column).isEmpty &&
-          files.forall(f => f.partition.exists(_._1.equalsIgnoreCase(key)) &&
-            TableStore.bucketIdFromName(TableStore.fileName(f.path)).isDefined)
-      }
-    val buckets = bucketable.map(sp => BucketSpec(sp.param.get, Seq(sp.column),
-      sp.column +: m.sortOrder.filterNot(_.equalsIgnoreCase(sp.column))))
-    readFileListAs(table, files, m.schema, m, buckets)
-  }
-
-  private[store] def readFileListAs(table: String, files: Seq[DataFile],
-      sch: StructType,
-      m: TableMeta,
-      buckets: Option[BucketSpec] = None,
-      applyDeletes: Boolean = true,
-      keepPos: Boolean = false,
-      applyEqDeletes: Boolean = true): DataFrame =
-    if (files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        if (!keepPos) sch
-        else StructType(sch.fields ++ Array(
-          StructField(TableStore.MorFileCol, StringType, nullable = false),
-          StructField(TableStore.MorPosCol, LongType, nullable = false))))
-    else {
-      // merge-on-read: files carrying position-delete refs read through
-      // an anti-join on (leaf name, row index); clean files scan as-is.
-      // Callers that only LOCATE rows (the COW matched-file probes) pass
-      // applyDeletes = false — a superset there costs an extra rewrite
-      // at worst, never wrong rows — so their input_file_name() plans
-      // stay join-free.
-      val (dirty, clean) =
-        if (applyDeletes) files.partition(_.deletes.nonEmpty)
-        else (Seq.empty[DataFile], files)
-      val aliasFor = aliasMap(m.renameEvents, sch)
-      // Renamed columns: scan under ALL historical physical names
-      // (each at the current — possibly widened — type) and coalesce
-      // into the render name. Exactly one alias is non-absent per
-      // file because physical names are never reused; a rewritten
-      // (COW) file normalises to the current name on its way out.
-      // `withPos` additionally threads the scan's file/row-index
-      // metadata through the projection for the delete anti-join.
-      def scanPart(part: Seq[DataFile], withPos: Boolean): DataFrame = {
-        val logged = part.map(f => (absPath(table, f.path).toString, f.bytes))
-        def scan(s: StructType): DataFrame =
-          org.apache.spark.sql.GraftSqlShim.parquetScan(spark, logged, s, buckets)
-        def meta(df: DataFrame): DataFrame =
-          if (!withPos) df
-          else df.select(col("*"),
-            col("_metadata.file_name").as(TableStore.MorFileCol),
-            col("_metadata.row_index").as(TableStore.MorPosCol))
-        if (aliasFor.isEmpty) meta(scan(sch))
-        else {
-          val union = StructType(sch.fields.flatMap(f =>
-            f +: aliasFor.getOrElse(f.name, Seq.empty)
-              .map(a => StructField(a, f.dataType, nullable = true))))
-          val proj = sch.fields.toIndexedSeq.map { f =>
-            aliasFor.get(f.name) match {
-              case Some(as) => coalesce((f.name +: as).map(col): _*).as(f.name)
-              case None     => col(f.name)
-            }
-          } ++ (if (withPos)
-            Seq(col(TableStore.MorFileCol), col(TableStore.MorPosCol))
-          else Seq.empty)
-          meta(scan(union)).select(proj: _*)
-        }
-      }
-      if (dirty.isEmpty) scanPart(clean, withPos = keepPos)
-      else {
-        // Equality refs apply per FILE (sequence-number scoping), so the
-        // dirty population groups by its equality-ref set — one group in
-        // the overwhelmingly common case (all pre-delete files share the
-        // refs; later files are clean) — and each group's scan layers
-        // the positional anti-join, then one anti-join per equality key
-        // set. Both sides of every join are (small deletes, big scan):
-        // deletes broadcast below the threshold, so the plan stays
-        // scan-local at 100 TB. The degenerate case is a long run of
-        // NEEDLE upserts whose bounds-pruned attach sets each dirty a
-        // different file: distinct ref sets (and so union branches)
-        // grow per commit until maintenance — that is exactly the debt
-        // `convert_equality_deletes` retires for one key-column read
-        // ($delete_files shows when), and why equality writes are the
-        // CDC tier, not the general mutation path.
-        val groups = dirty
-          .groupBy(_.deletes.filter(_.isEquality).map(_.path).sorted)
-          .toSeq.sortBy(_._1.mkString(","))
-        val parts = groups.map { case (_, gf) =>
-          val posRefs = gf.flatMap(_.deletes.filterNot(_.isEquality))
-          val eqRefs = gf.head.deletes.filter(_.isEquality)
-          var cur = scanPart(gf, withPos = true)
-          if (posRefs.nonEmpty) {
-            val delPaths = posRefs.map(_.path).distinct
-              .map(p => absPath(table, p).toString)
-            var del = spark.read.parquet(delPaths: _*)
-              .select(col(TableStore.DeleteFileField),
-                col(TableStore.DeletePosField))
-            // small delete sets (the overwhelmingly common case)
-            // broadcast, keeping the anti-join scan-local; past the
-            // threshold Spark's planner picks the shuffle strategy —
-            // correct either way
-            if (posRefs.map(_.records).sum <= TableStore.MorBroadcastRows)
-              del = broadcast(del)
-            cur = cur.join(del,
-              col(TableStore.MorFileCol) === col(TableStore.DeleteFileField) &&
-                col(TableStore.MorPosCol) === col(TableStore.DeletePosField),
-              "left_anti")
-          }
-          if (applyEqDeletes)
-            cur = equalityDeleteJoin(table, cur, eqRefs, sch, "left_anti", m)
-          if (keepPos) cur
-          else cur.drop(TableStore.MorFileCol, TableStore.MorPosCol)
-        }
-        val dirtyPart = parts.reduce(_ unionByName _)
-        if (clean.isEmpty) dirtyPart
-        else scanPart(clean, withPos = keepPos).unionByName(dirtyPart)
-      }
-    }
 
   /** Parse a snapshot-summary key holding a JSON array of relative
     * paths (the MOR/equality delete-dir lists). */
@@ -2165,8 +1458,8 @@ final class TableStore(val root: HPath, spark: SparkSession)
         val b = branchNamed(table, name)
         (b.entries.size.toLong, branchFileSet(table, b))
       case None =>
-        val snap = SnapshotLog.resolve(fs, tableDir(table), None)
-        (snap.map(_.id).getOrElse(0L), snap.map(_.files).getOrElse(Seq.empty))
+        val p = pin(table, At.Latest, meta(table))
+        (p.snapshot.map(_.id).getOrElse(0L), p.files)
     }
 
   // -------------------------------------------------------------------
@@ -2467,7 +1760,7 @@ final class TableStore(val root: HPath, spark: SparkSession)
     * types, the same evolution rules the data scan applies. Null-safe
     * equality: a NULL key tuple deletes NULL-key rows, Iceberg's
     * equality-delete contract. Keys broadcast below the MOR threshold. */
-  private def equalityDeleteJoin(table: String, df: DataFrame,
+  private[store] def equalityDeleteJoin(table: String, df: DataFrame,
       eqRefs: Seq[DeleteRef], sch: StructType, joinType: String,
       m: TableMeta): DataFrame = {
     val events = m.renameEvents
@@ -2841,8 +2134,7 @@ final class TableStore(val root: HPath, spark: SparkSession)
       matchedNames: Set[String], replacement: Option[DataFrame],
       expectedLastId: Long,
       timestampMs: Long = System.currentTimeMillis()): Snapshot = {
-    val baseFiles = SnapshotLog.resolve(fs, tableDir(table), None)
-      .map(_.files).getOrElse(Seq.empty)
+    val baseFiles = dataFilesAsOf(table, None)
     val (matched, carried) = baseFiles.partition(f =>
       matchedNames(TableStore.fileName(f.path)))
     cowCommit(table, current(table), operation, carried, matched,
@@ -3064,9 +2356,7 @@ final class TableStore(val root: HPath, spark: SparkSession)
     * `skipRewrites`), never re-delivers. */
   def rollback(table: String, snapshotId: Long,
       timestampMs: Long = System.currentTimeMillis()): Snapshot = {
-    val target = SnapshotLog.resolveVersion(fs, tableDir(table), snapshotId)
-      .getOrElse(throw new IllegalArgumentException(
-        s"table $table has no snapshot id $snapshotId"))
+    val target = pin(table, At.Version(snapshotId), meta(table))
     // change-feed parity: a rollback's row-level effect is the diff
     // between the current file set and the target's — the files
     // dropped since the target are the 'delete' side, the restored
@@ -3080,8 +2370,8 @@ final class TableStore(val root: HPath, spark: SparkSession)
     * committed at or before `asOfMs`. */
   def rollbackToTime(table: String, asOfMs: Long,
       timestampMs: Long = System.currentTimeMillis()): Snapshot = {
-    val target = SnapshotLog.asOf(SnapshotLog.read(fs, tableDir(table)),
-      Some(asOfMs)).getOrElse(throw new IllegalArgumentException(
+    val target = pin(table, At.AsOfMs(asOfMs), meta(table)).snapshot
+      .getOrElse(throw new IllegalArgumentException(
         s"table $table has no snapshot at or before $asOfMs"))
     rollback(table, target.id, timestampMs)
   }

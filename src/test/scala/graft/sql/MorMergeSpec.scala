@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SharedSpark
 import graft.catalog.GraftCatalog
-import graft.store.TableStore
+import graft.store.{At, TableStore}
 
 /** `MERGE INTO` under `write.merge.mode = merge-on-read`: every arm shape
   * must produce EXACTLY the rows the copy-on-write path produces, while
@@ -44,8 +44,7 @@ class MorMergeSpec extends AnyFunSuite {
     eng.sql(mergeFor("cow"))
     eng.sql(mergeFor("mor"))
     val st = cat.store()
-    val v1 = st.snapshotMetaVersion("mor", 1L)
-      .map(_._3().map(_.path).toSet).getOrElse(Set.empty)
+    val v1 = st.pin("mor", At.Version(1L), st.meta("mor")).files.map(_.path).toSet
     val cur = st.dataFilesAsOf("mor", None).map(_.path).toSet
     val noRewrite = v1.subsetOf(cur) &&
       st.currentSummary("mor").get("merge-on-read").contains("true")
@@ -124,6 +123,35 @@ class MorMergeSpec extends AnyFunSuite {
     assert(Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
       .take(16).flatMap(x => Option(x.getMessage))
       .exists(_.contains("cardinality violation")))
+  }
+
+  test("MOR merge on a change-feed table commits; its changes net to the diff") {
+    val (cat, eng) = fixture()
+    import spark.implicits._
+    eng.sql("CREATE TABLE mor (id INT, balance DOUBLE, status STRING)")
+    cat.append("mor", Seq((1, 100.0, "open"), (2, 50.0, "open"),
+      (3, 75.0, "open")).toDF("id", "balance", "status").coalesce(1))
+    eng.sql("ALTER TABLE mor SET TBLPROPERTIES " +
+      "('write.merge.mode'='merge-on-read')")
+    val st = cat.store()
+    st.setChangeFeed("mor", true)
+    val base = st.currentSnapshotId("mor").get
+    eng.sql("""MERGE INTO mor AS t
+      USING (VALUES (1, 7.0), (2, -1.0), (9, 9.0)) AS s(id, amount)
+      ON t.id = s.id
+      WHEN MATCHED AND s.amount < 0 THEN DELETE
+      WHEN MATCHED THEN UPDATE SET balance = s.amount
+      WHEN NOT MATCHED THEN INSERT (id, balance, status) VALUES (s.id, s.amount, 'new')""")
+    assert(st.currentSummary("mor").contains(TableStore.CdcDirKey))
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select("id", "balance", "status").collect().map(_.toString).toSeq
+    val changes = st.readChanges("mor", base)
+    val inserted = rows(changes.filter($"_change_type" === "insert"))
+    val deleted = rows(changes.filter($"_change_type" === "delete"))
+    // before + inserted == after + deleted, as multisets
+    assert((rows(cat.tableVersion("mor", base)) ++ inserted).sorted ==
+      (rows(cat.table("mor")) ++ deleted).sorted)
+    assert(deleted.sorted == Seq("[1,100.0,open]", "[2,50.0,open]"))
   }
 
   test("MOR merge commit carries position deletes; time travel sees pre-state") {

@@ -7,6 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SharedSpark
 import graft.catalog.GraftCatalog
+import graft.store.At
 
 /** SQL write surface parity with the reference's warehouse scripts
   * (`/root/reference/create_iceberg.py:106-203`): DDL + batched INSERT
@@ -552,7 +553,7 @@ class SqlDdlSpec extends AnyFunSuite {
       == "[]")
     val st = cat.store()
     assert(st.dataFilesAsOf("eqt", None).map(_.path).toSet ==
-      st.snapshotMetaVersion("eqt", 1L).map(_._3().map(_.path).toSet).get)
+      st.pin("eqt", At.Version(1L), st.meta("eqt")).files.map(_.path).toSet)
     assert(eng.run("SELECT id FROM eqt ORDER BY id") == "[(1,), (3,)]")
     Seq((3L, "c2"), (4L, "d")).toDF("id", "v")
       .createOrReplaceTempView("eq_batch")
@@ -562,13 +563,13 @@ class SqlDdlSpec extends AnyFunSuite {
     assert(eng.run("SELECT v FROM eqt ORDER BY id") ==
       "[('a',), ('c2',), ('d',)]")
     // metadata COUNT declines (upper bound only) — the scan still answers
-    assert(st.snapshotMetaAsOf("eqt", None).get._2 == -1L)
+    assert(st.pin("eqt", At.Latest, st.meta("eqt")).recordCount.isEmpty)
     assert(eng.run("SELECT COUNT(*) FROM eqt") == "[(3,)]")
     // minor compaction: refs go positional, COUNT is metadata-exact again
     assert(eng.run("CALL convert_equality_deletes('eqt')") == "[]")
     assert(st.dataFilesAsOf("eqt", None)
       .forall(_.deletes.forall(!_.isEquality)))
-    assert(st.snapshotMetaAsOf("eqt", None).get._2 == 3L)
+    assert(st.pin("eqt", At.Latest, st.meta("eqt")).recordCount.contains(3L))
     assert(eng.run("SELECT v FROM eqt ORDER BY id") ==
       "[('a',), ('c2',), ('d',)]")
   }

@@ -133,6 +133,20 @@ class SqlMergeSpec extends AnyFunSuite {
     assert(eng.run("SELECT COUNT(*) FROM accounts") == "[(3,)]")
   }
 
+  test("a MERGE failing analysis surfaces its own error, not the guard's") {
+    val (_, eng) = fixture()
+    seed(eng)
+    // the plan of every MERGE carries the guard's message: only the
+    // guard's own runtime error is a cardinality violation
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      eng.sql("""MERGE INTO accounts t
+        USING (VALUES (2, 10.0)) AS s(id, amount)
+        ON t.id = s.id
+        WHEN MATCHED THEN UPDATE SET balance = s.nope"""))
+    assert(e.getCondition.startsWith("UNRESOLVED_COLUMN"))
+    assert(eng.run("SELECT COUNT(*) FROM accounts") == "[(3,)]")
+  }
+
   test("duplicate source keys that match no target row still insert") {
     val (_, eng) = fixture()
     seed(eng)

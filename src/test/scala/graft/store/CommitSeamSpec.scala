@@ -112,14 +112,10 @@ class CommitSeamSpec extends AnyFunSuite {
     run("m", "mor delete")(st.deleteWhere("m", col("id") <= 2, 2000L))
     run("m", "mor update")(st.updateWhere("m", Seq("v" -> lit(0.0)),
       Some(col("id") === 3), 3000L))
-    // a merge-on-read MERGE cannot write change files: its doomed frame
-    // carries positions only, so it runs with the feed off
-    st.setChangeFeed("m", false)
     run("m", "mor merge")(eng.sql("MERGE INTO m t USING " +
       "(SELECT 4 AS id, 44.0 AS v UNION ALL SELECT 11, 11.0) s " +
       "ON t.id = s.id WHEN MATCHED THEN UPDATE SET v = s.v " +
       "WHEN NOT MATCHED THEN INSERT (id, v) VALUES (s.id, s.v)"))
-    st.setChangeFeed("m", true)
     run("m", "rewritePositionDeleteFiles")(
       st.rewritePositionDeleteFiles("m", 5000L))
     run("m", "rewritePositionDeleteFiles idle")(
@@ -160,7 +156,7 @@ class CommitSeamSpec extends AnyFunSuite {
     "truncate | delete | 0 | added-files=0, carried-files=0, cdc-dir=cdc/*, total-data-bytes=*",
     "mor delete | delete | 8 | added-files=0, carried-files=0, cdc-dir=cdc/*, merge-on-read=true, mor-delete-files=[\"deletes/delete-*\"], position-deletes=2, total-data-bytes=*",
     "mor update | update | 8 | added-files=1, carried-files=0, cdc-dir=cdc/*, merge-on-read=true, mor-delete-files=[\"deletes/delete-*\"], position-deletes=1, total-data-bytes=*",
-    "mor merge | merge | 9 | added-files=2, carried-files=1, merge-on-read=true, mor-delete-files=[\"deletes/delete-*\"], position-deletes=1, total-data-bytes=*",
+    "mor merge | merge | 9 | added-files=2, carried-files=1, cdc-dir=cdc/*, merge-on-read=true, mor-delete-files=[\"deletes/delete-*\"], position-deletes=1, total-data-bytes=*",
     "rewritePositionDeleteFiles | replace | 9 | added-delete-files=1, mor-delete-files=[\"deletes/delete-*\"], rewritten-delete-files=3, rows-preserved=true, total-data-bytes=*",
     "rewritePositionDeleteFiles idle | replace | 9 | added-delete-files=0, rewritten-delete-files=0, rows-preserved=true, total-data-bytes=*",
     "equalityDelete | delete | 10 | added-files=0, carried-files=0, cdc-dir=cdc/*, eq-delete-files=[\"deletes/eqdelete-*\"], equality-delete-tuples=1, equality-deletes=true, merge-on-read=true, total-data-bytes=*",

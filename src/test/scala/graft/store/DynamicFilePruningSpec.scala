@@ -41,7 +41,8 @@ class DynamicFilePruningSpec extends AnyFunSuite {
     val st = cat.store()
     sortedFact(cat)
     // all keys inside [100, 200) → exactly the second file survives
-    val picked = st.filesForKeys("fact", "id", Seq(105, 150, 199))
+    val picked = st.scan(st.pin("fact", At.Latest, st.meta("fact")),
+      Some($"id".isin(105, 150, 199)))._2
     assert(picked.size == 1)
     val dim = Seq((105, "a"), (150, "b"), (199, "c")).toDF("k", "tag")
     val pruned = cat.joinPruned("fact", "id", dim, "k")
@@ -68,7 +69,8 @@ class DynamicFilePruningSpec extends AnyFunSuite {
     assert(st.currentFiles("t").size == 4)
     val needle = df.filter($"payload" === 17).select($"k")
       .head().getInt(0)
-    val picked = st.filesForKeys("t", "k", Seq(needle))
+    val picked = st.scan(st.pin("t", At.Latest, st.meta("t")),
+      Some($"k".isin(needle)))._2
     assert(picked.size < 4, "blooms should rule out at least one file")
     val dim = Seq((needle, "hit")).toDF("dk", "tag")
     val out = cat.joinPruned("t", "k", dim, "dk")
@@ -83,7 +85,8 @@ class DynamicFilePruningSpec extends AnyFunSuite {
       Some(PartitionSpec("id", "bucket", Some(8))))
     cat.append("b", (0 until 800).map(i => (i, s"s$i")).toDF("id", "s"), 1000L)
     val all = st.currentFiles("b").size
-    val picked = st.filesForKeys("b", "id", Seq(7))
+    val picked = st.scan(st.pin("b", At.Latest, st.meta("b")),
+      Some($"id".isin(7)))._2
     assert(picked.size < all, "a single key lives in one bucket")
     val dim = Seq((7, "d")).toDF("k", "t")
     assert(cat.joinPruned("b", "id", dim, "k").count() == 1)
@@ -110,6 +113,8 @@ class DynamicFilePruningSpec extends AnyFunSuite {
     assert(out == Seq((5, "x")))
     val allNull = Seq[(java.lang.Integer, String)]((null, "n")).toDF("k", "tag")
     assert(cat.joinPruned("fact", "id", allNull, "k").count() == 0)
-    assert(cat.store().filesForKeys("fact", "id", Seq.empty).isEmpty)
+    val st = cat.store()
+    assert(st.scan(st.pin("fact", At.Latest, st.meta("fact")),
+      Some($"id".isin()))._2.isEmpty)
   }
 }

@@ -55,13 +55,12 @@ class EqualityDeleteSpec extends AnyFunSuite {
     baseTable(st)
     st.equalityDelete("t", Seq(1L).toDF("id"), 2000L)
     // recordCount is now an upper bound: the meta triple must say so
-    val (_, cnt, _) = st.snapshotMetaAsOf("t", None).get
-    assert(cnt == -1L)
+    assert(st.pin("t", At.Latest, st.meta("t")).recordCount.isEmpty)
     // …and the plain count accessors decline too (SHOW TABLE STATS /
     // DESCRIBE report unknown, never the stale upper bound)
     assert(st.recordCountAsOf("t", None).isEmpty)
-    assert(st.recordCountVersion("t",
-      st.currentSnapshotId("t").get).isEmpty)
+    assert(st.pin("t", At.Version(st.currentSnapshotId("t").get), st.meta("t"))
+      .recordCount.isEmpty)
     // the scan still answers exactly
     assert(st.read("t").count() == 99)
   }
@@ -136,7 +135,7 @@ class EqualityDeleteSpec extends AnyFunSuite {
     assert(st.read("t").count() == 88)
     // counts exact again: the marker is gone from the compacted snapshot
     assert(!snap.summary.contains(SnapshotLog.EqualityDeletesMarker))
-    assert(st.snapshotMetaAsOf("t", None).get._2 == 88L)
+    assert(st.pin("t", At.Latest, st.meta("t")).recordCount.contains(88L))
   }
 
   test("rewrite_position_delete_files keeps equality refs verbatim") {
@@ -248,7 +247,7 @@ class EqualityDeleteSpec extends AnyFunSuite {
     baseTable(st)
     val before = st.dataFilesAsOf("t", None).map(_.path).toSet
     st.equalityDelete("t", Seq(1L, 2L, 3L).toDF("id"), 2000L)
-    assert(st.snapshotMetaAsOf("t", None).get._2 == -1L) // declined
+    assert(st.pin("t", At.Latest, st.meta("t")).recordCount.isEmpty) // declined
     val snap = st.convertEqualityDeletes("t", 3000L)
     assert(snap.summary("converted-equality-files").toInt >= 1)
     assert(snap.summary(TableStore.RowsPreservedKey) == "true")
@@ -258,7 +257,7 @@ class EqualityDeleteSpec extends AnyFunSuite {
     assert(files.forall(_.deletes.forall(!_.isEquality)))
     assert(files.exists(_.deletes.nonEmpty))
     // metadata COUNT exact again (marker gone, live counts in the log)
-    assert(st.snapshotMetaAsOf("t", None).get._2 == 97L)
+    assert(st.pin("t", At.Latest, st.meta("t")).recordCount.contains(97L))
     assert(st.read("t").count() == 97)
     assert(st.read("t").agg(min("id")).head().getLong(0) == 4L)
     // time travel: pre-delete and eq-ref-live snapshots both intact
@@ -279,7 +278,7 @@ class EqualityDeleteSpec extends AnyFunSuite {
     // positionally, so its key must not double-count
     assert(st.read("t").count() == 87)
     assert(st.read("t").agg(min("id")).head().getLong(0) == 14L)
-    assert(st.snapshotMetaAsOf("t", None).get._2 == 87L)
+    assert(st.pin("t", At.Latest, st.meta("t")).recordCount.contains(87L))
     assert(st.dataFilesAsOf("t", None)
       .forall(_.deletes.forall(!_.isEquality)))
   }
@@ -294,7 +293,7 @@ class EqualityDeleteSpec extends AnyFunSuite {
       .select("name").as[String].collect().toSeq
     assert(names == Seq("reborn"))
     assert(st.read("t").count() == 100)
-    assert(st.snapshotMetaAsOf("t", None).get._2 == 100L)
+    assert(st.pin("t", At.Latest, st.meta("t")).recordCount.contains(100L))
   }
 
   test("convert drops fully-deleted files and no-ops on a clean table") {

@@ -79,9 +79,9 @@ class EqualityModelPropertySpec extends AnyFunSuite {
       val want = model.toSeq.sortBy(_._1)
       val hasEq = st.dataFilesAsOf("t", None)
         .exists(_.deletes.exists(_.isEquality))
-      val meta = st.snapshotMetaAsOf("t", None).map(_._2)
+      val meta = st.pin("t", At.Latest, st.meta("t")).recordCount
       val metaOk =
-        if (hasEq) meta.contains(-1L) else meta.contains(want.size.toLong)
+        if (hasEq) meta.isEmpty else meta.contains(want.size.toLong)
       if (got != want)
         println(s"MISMATCH ops=$ops got=$got want=$want")
       if (!metaOk)

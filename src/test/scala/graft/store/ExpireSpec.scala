@@ -66,7 +66,7 @@ class ExpireSpec extends AnyFunSuite {
     assert(TableMeta.versions(fs, dir).size == latest)
     val ids = SnapshotLog.read(fs, dir).map(_.id)
     def schemas(keep: Seq[Long]) =
-      keep.map(id => st.readVersionWithFiles("m", id)._1.schema)
+      keep.map(id => st.scan(st.pin("m", At.Version(id), st.meta("m")), None)._1.schema)
     val before = schemas(ids.tail)
     st.expire("m", 1500L) // drops the first snapshot only
     val kept = SnapshotLog.read(fs, dir)

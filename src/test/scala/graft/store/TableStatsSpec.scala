@@ -275,13 +275,14 @@ class TableStatsSpec extends AnyFunSuite {
     eng.sql("COMPUTE STATS many")
     val hydratedSum = st.dataFilesAsOf("many", None).map(_.bytes).sum
     assert(hydratedSum > 0)
-    assert(st.totalDataBytesAsOf("many").contains(hydratedSum))
+    val latest = st.pin("many", At.Latest, st.meta("many"))
+    assert(latest.totalDataBytes.contains(hydratedSum))
     // attach to a PRE-BUILT relation: the summary fast path must not
     // touch the manifest (at 10⁶ files that is a metadata storm per
     // registerView)
     val rel = st.read("many")
     val before = SnapshotLog.manifestHydrations.get()
-    val attached = cat.withTableStats("many", rel)
+    val attached = cat.withTableStats("many", rel, latest)
     assert(SnapshotLog.manifestHydrations.get() == before,
       "stats attach must not hydrate the manifest")
     assert(attached.queryExecution.optimizedPlan.stats.rowCount

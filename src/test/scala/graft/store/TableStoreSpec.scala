@@ -196,11 +196,12 @@ class TableStoreSpec extends AnyFunSuite {
     st.create("t", df(1 to 1).schema)
     st.append("t", df(1 to 10), 1000L)
     st.overwrite("t", df(1 to 5), 2000L) // snapshot 1's files now orphaned
-    val oldFiles = st.filesAsOf("t", Some(1000L))
+    val oldFiles = st.dataFilesAsOf("t", Some(1000L))
+      .map(f => new HPath(st.tableDir("t"), f.path).toString)
     assert(oldFiles.nonEmpty)
     st.expire("t", olderThanMs = 1500L)
     // snapshot 1 is gone: as-of now resolves to nothing
-    assert(st.filesAsOf("t", Some(1000L)).isEmpty)
+    assert(st.pin("t", At.AsOfMs(1000L), st.meta("t")).files.isEmpty)
     // its data files were physically deleted
     oldFiles.foreach(f => assert(!fs.exists(new HPath(f)), s"should be deleted: $f"))
     // the surviving snapshot still reads
