@@ -42,6 +42,15 @@ if [ -n "$scan" ]; then
   echo "[precommit] snapshot resolution or parquet scan outside TableScan.scala — read through pin/scan"
   exit 1
 fi
+# One relation resolver: the Engine's binder binds every name in an
+# Engine statement itself; it registers no session temp view and reads
+# none (GraftCatalog.registerView's views serve plain spark.sql only).
+views=$(git grep -nE 'createOrReplaceTempView|registerView|spark\.table' -- src/main/scala/graft/sql/Engine.scala || true)
+if [ -n "$views" ]; then
+  echo "$views"
+  echo "[precommit] temp-view registration or lookup in Engine.scala — bind the name in Engine.Binder"
+  exit 1
+fi
 # The main and test sources compile warning-free under -deprecation,
 # -Wunused:imports and -Wunused:privates,locals,patvars: -Werror (on
 # both compiles) turns any such warning

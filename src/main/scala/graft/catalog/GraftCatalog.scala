@@ -10,9 +10,12 @@ import graft.store.{At, DataFile, PartitionSpec, Pinned, Snapshot, SnapshotLog, 
   *
   * Re-expresses the reference's warehouse DDL surface
   * (`CREATE DATABASE / USE / DROP TABLE / CREATE TABLE STORED AS ICEBERG`,
-  * `create_iceberg.py:106-155`) and registers each table's latest snapshot
-  * as a temp view so plain `spark.sql` sees the warehouse, like the
+  * `create_iceberg.py:106-155`). Each write through this class
+  * re-registers the table's latest snapshot as a session temp view
+  * ([[registerView]]) so plain `spark.sql` sees the warehouse, like the
   * reference's Impala connection sees its Iceberg catalog.
+  * [[graft.sql.Engine]] does not read those views: its binder resolves
+  * every name against the catalog at the statement's own pin.
   *
   * The warehouse root is a Hadoop path (`file:`, `hdfs:`, object store),
   * so the same catalog code serves the local test layout and a cluster
@@ -187,10 +190,7 @@ final class GraftCatalog(val warehouse: HPath, val spark: SparkSession) {
     val vs = views()
     val hit = vs.keys.find(_.equalsIgnoreCase(name))
     require(ifExists || hit.isDefined, s"view not found: $name")
-    hit.foreach { n =>
-      writeViews(currentDb, vs - n)
-      if (!viewless) spark.catalog.dropTempView(n)
-    }
+    hit.foreach(n => writeViews(currentDb, vs - n))
   }
 
   def dropTable(name: String): Unit = {
@@ -432,17 +432,34 @@ final class GraftCatalog(val warehouse: HPath, val spark: SparkSession) {
     snap
   }
 
-  /** Make `spark.sql("SELECT ... FROM <name>")` resolve to the latest
-    * snapshot (the reference's default read, `README.md:75-79`). When
-    * the table has persisted COMPUTE STATS, they are attached to the
-    * view's relation so the optimizer plans from them — see
-    * [[withTableStats]].
+  /** Make plain `spark.sql("SELECT ... FROM <name>")` and `spark.table`
+    * resolve to the latest snapshot (the reference's default read,
+    * `README.md:75-79`): the temp view holds [[relation]] at the latest
+    * pin, so a table carries its persisted COMPUTE STATS and a
+    * materialized view its rendered columns. [[graft.sql.Engine]] never
+    * reads these views — it binds every name itself — so a direct
+    * `store()` write leaves only plain `spark.sql` readers stale.
     */
   def registerView(name: String): Unit =
     if (!viewless) {
       val st = store()
-      val p = st.pin(name, At.Latest, st.meta(name))
-      withTableStats(name, st.scan(p, None)._1, p).createOrReplaceTempView(name)
+      relation(name, st.pin(name, At.Latest, st.meta(name))).createOrReplaceTempView(name)
+    }
+
+  /** `name`'s relation at the pinned snapshot, optionally pruned by
+    * `pred`: a materialized view renders its state (see
+    * [[graft.store.MaterializedView.render]]); a table carries its
+    * statistics (see [[withTableStats]]), scaled to the scanned files
+    * unless it reads the whole latest snapshot or a branch, whose files
+    * are no log line item. */
+  private[graft] def relation(name: String, p: Pinned,
+      pred: Option[org.apache.spark.sql.Column] = None): DataFrame =
+    p.meta.view match {
+      case Some(d) => graft.store.MaterializedView.render(store().scan(p, None)._1, d)
+      case None =>
+        val (df, files) = store().scan(p, pred)
+        val whole = p.isBranch || (p.at == At.Latest && pred.isEmpty)
+        withTableStats(name, df, p, prunedTo = if (whole) None else Some(files))
     }
 
   /** Attach the table's persisted statistics (row count from the
@@ -455,9 +472,7 @@ final class GraftCatalog(val warehouse: HPath, val spark: SparkSession) {
     * hiccup returns `df` unchanged: stats can only improve plans, never
     * break a read. `pinned` is the snapshot `df` reads; the counts come
     * from the current one (the same pin when `pinned` is the latest, so
-    * the log is parsed once). Also applied by the Engine's
-    * partition-prune splice, so a filtered fact relation keeps its
-    * stats. */
+    * the log is parsed once). */
   private[graft] def withTableStats(name: String, df: DataFrame,
       pinned: Pinned, prunedTo: Option[Seq[DataFile]] = None): DataFrame =
     scala.util.Try {
@@ -523,8 +538,7 @@ final class GraftCatalog(val warehouse: HPath, val spark: SparkSession) {
         graft.store.MaterializedView.definition(st, t).base.equalsIgnoreCase(b)))
       .map { t =>
         val action = graft.store.MaterializedView.refresh(st, t)
-        if (!viewless)
-          graft.store.MaterializedView.read(st, t).createOrReplaceTempView(t)
+        registerView(t)
         t -> action
       }.toMap
   }

@@ -4,7 +4,7 @@ import java.sql.{Date, Timestamp}
 import java.time.ZoneOffset
 
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim, Row}
-import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedRelation, UnresolvedTableValuedFunction}
 import org.apache.spark.sql.catalyst.expressions.{Expression, SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, GlobalLimit, LocalLimit, LogicalPlan, Project, SubqueryAlias, UnresolvedWith}
 
@@ -23,10 +23,11 @@ import graft.store.{At, Pinned}
 final class Engine(catalog: GraftCatalog) {
   private val spark = catalog.spark
 
-  /** Hook order: cleanup → DDL/DML intercept → metadata-table and
-    * `table_changes` text rewrites → stored-view expansion → one parse
-    * ([[Binder]]) → metadata-answered aggregate → materialized-view
-    * rewrite (current snapshot only) → scan (the binder's plan walk). */
+  /** Hook order: cleanup → DDL/DML intercept → one parse ([[Binder]]:
+    * travel clause stripped, bare `t$kind` backticked) →
+    * metadata-answered aggregate → materialized-view rewrite (current
+    * snapshot only) → scan (the binder's plan walk, which binds every
+    * relation name). */
   // Impala/Spark EXPLAIN parity: render the plan the engine would run —
   // through EVERY tier (time travel, metadata-answered aggregates,
   // materialized-view navigation), so EXPLAIN shows when a query is
@@ -49,9 +50,7 @@ final class Engine(catalog: GraftCatalog) {
 
   private def runStatement(raw0: String): DataFrame =
     SqlDdl.tryExecute(catalog, raw0).getOrElse {
-      val cleaned = rewriteTableChanges(rewriteMetaTables(raw0))
-      registerReferencedViews(cleaned, Set.empty)
-      val b = new Binder(cleaned)
+      val b = new Binder(raw0)
       // metadata-answered first (O(1)), then — current snapshot only —
       // aggregate navigation over a FRESH materialized view (O(view)),
       // then the scan; each tier falls through when its soundness gates
@@ -68,96 +67,92 @@ final class Engine(catalog: GraftCatalog) {
   // SHOW statements render the same data as fixed result sets; the $-form
   // joins/filters/aggregates like any relation — the warehouse-ops shape
   // ("total bytes per partition", "commits that added the most rows").
-  private val MetaTableRef =
-    ("(?i)`?((?:[A-Za-z_]\\w*\\.)?[A-Za-z_]\\w*)" +
-      "\\$(delete_files|files|history|snapshots|partitions|refs|manifests)`?").r
+  private val MetaKinds = "delete_files|files|history|snapshots|partitions|refs|manifests"
+  private val MetaTableName =
+    s"(?i)((?:[A-Za-z_]\\w*\\.)?[A-Za-z_]\\w*)\\$$($MetaKinds)".r
+  private val BareMetaTable =
+    s"(?i)(?<![\\w$$`])((?:[A-Za-z_]\\w*\\.)?)([A-Za-z_]\\w*\\$$(?:$MetaKinds))\\b(?!`)".r
 
-  /** Replace metadata-table references with registered temp views built
-    * from snapshot-log metadata (no data I/O; `$files` stats file sizes
-    * on the bounded parallel pool). No-op for statements without `$`. */
-  private def rewriteMetaTables(stmt: String): String = {
-    if (!stmt.contains("$")) return stmt
-    MetaTableRef.replaceAllIn(stmt, m => {
-      val (cat, t) = SqlDdl.resolved(catalog, m.group(1))
-      require(cat.store().exists(t), s"table not found: ${m.group(1)}")
-      val kind = m.group(2).toLowerCase
-      import spark.implicits._
-      val df = kind match {
-        case "files" => cat.store().filesMetadata(t)
-          .toDF("file_path", "record_count", "partition", "size_bytes")
-        case "delete_files" => cat.store().deleteFilesMetadata(t)
-          .toDF("file_path", "kind", "record_count",
-            "referencing_data_files", "equality_cols", "size_bytes")
-        case "history"   => cat.store().history(t)
-        case "snapshots" => cat.store().snapshotsMetadata(t)
-        case "partitions" => cat.store().partitionSummary(t)
-          .toDF("partition", "n_files", "n_records")
-        case "refs" => cat.store().refsMetadata(t)
-          .toDF("name", "type", "snapshot_id", "staged_commits")
-        case "manifests" => cat.store().manifestsMetadata(t)
-          .toDF("path", "length", "added_snapshot_id", "data_files_count")
-      }
-      val view = s"${t}__meta_$kind"
-      df.createOrReplaceTempView(view)
-      java.util.regex.Matcher.quoteReplacement(view)
-    })
+  /** Backtick each unquoted `t$kind` outside quoted text: Spark's lexer
+    * rejects `$` in a bare identifier. The binder resolves the name. */
+  private def quoteMetaTables(stmt: String): String =
+    if (!stmt.contains("$")) stmt
+    else BareMetaTable.replaceAllIn(stmt, m =>
+      java.util.regex.Matcher.quoteReplacement(
+        if (insideQuoted(stmt, m.start)) m.matched
+        else s"${m.group(1)}`${m.group(2)}`"))
+
+  /** The metadata frame of `` `name$kind` ``, built from snapshot-log
+    * metadata (no data I/O; `$files` stats file sizes on the bounded
+    * parallel pool). */
+  private def metaTable(name: String, kind: String): DataFrame = {
+    val (cat, t) = SqlDdl.resolved(catalog, name)
+    val st = cat.store()
+    require(st.exists(t), s"table not found: $name")
+    import spark.implicits._
+    kind.toLowerCase match {
+      case "files" => st.filesMetadata(t)
+        .toDF("file_path", "record_count", "partition", "size_bytes")
+      case "delete_files" => st.deleteFilesMetadata(t)
+        .toDF("file_path", "kind", "record_count",
+          "referencing_data_files", "equality_cols", "size_bytes")
+      case "history"   => st.history(t)
+      case "snapshots" => st.snapshotsMetadata(t)
+      case "partitions" => st.partitionSummary(t)
+        .toDF("partition", "n_files", "n_records")
+      case "refs" => st.refsMetadata(t)
+        .toDF("name", "type", "snapshot_id", "staged_commits")
+      case "manifests" => st.manifestsMetadata(t)
+        .toDF("path", "length", "added_snapshot_id", "data_files_count")
+    }
   }
 
-  // Delta's `table_changes` as a table-valued RELATION: the CALL form
-  // returns the raw feed; this form lets arbitrary SQL compose over it —
-  // `SELECT _change_type, count(*) FROM table_changes('t', 1) GROUP BY 1`.
-  // Positional bounds: snapshot ids, or TIMESTAMP literals with the CALL
-  // form's semantics (start = commits at-or-after the instant, end =
-  // at-or-before).
-  private val TcBound = "(?:(\\d+)|TIMESTAMP\\s+'([^']+)')"
-  private val TableChangesRef =
-    ("(?i)\\btable_changes\\s*\\(\\s*'([^']+)'\\s*" +
-      s"(?:,\\s*$TcBound\\s*(?:,\\s*$TcBound\\s*)?)?\\)").r
-
-  /** Replace `table_changes('t'[, start[, end]])` relations with temp
-    * views over [[graft.store.TableStore.readChanges]] — a lazy plan,
-    * no job until the enclosing query runs. No-op without the name.
-    * Matches inside quoted string literals are left alone (the text is
-    * data, not a relation), and the registered view name carries a
-    * per-call unique suffix so two Engine instances over different
-    * catalogs in one SparkSession cannot clobber each other's view
-    * between registration and execution. */
-  private def rewriteTableChanges(stmt: String): String = {
-    if (!stmt.toLowerCase.contains("table_changes")) return stmt
-    TableChangesRef.replaceAllIn(stmt, m => {
-      // the table name itself is a quoted literal, so "is this match in
-      // a string?" means: the `t` of table_changes sits inside an open
-      // quoted region begun earlier in the statement — single-quoted
-      // data, or double-quoted text (a string literal under Spark's
-      // default dialect; an identifier can't hold the phrase anyway)
-      if (insideQuoted(stmt, m.start))
-        java.util.regex.Matcher.quoteReplacement(m.matched)
-      else {
-        val (cat, t) = SqlDdl.resolved(catalog, m.group(1))
-        val st = cat.store()
-        require(st.exists(t), s"table not found: ${m.group(1)}")
-        val from = (Option(m.group(2)), Option(m.group(3))) match {
-          // start EXCLUSIVE: commits strictly before the instant are the
-          // baseline, at-or-after are the feed (the CALL form's rule)
-          case (_, Some(ts)) => st.snapshotIdAtOrBefore(t,
-            TimeTravelRewriter.parseTimestampMs(ts) - 1).getOrElse(0L)
-          case (Some(id), _) => id.toLong
-          case _ => 0L
-        }
-        val to = (Option(m.group(4)), Option(m.group(5))) match {
-          case (_, Some(ts)) => Some(st.snapshotIdAtOrBefore(t,
-            TimeTravelRewriter.parseTimestampMs(ts)).getOrElse(
-              throw new IllegalArgumentException(
-                s"table_changes: no commit of $t at or before '$ts'")))
-          case (Some(id), _) => Some(id.toLong)
-          case _ => None
-        }
-        val view = s"${t}__changes_${from}_${to.getOrElse("cur")}_" +
-          java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-        st.readChanges(t, from, to).createOrReplaceTempView(view)
-        java.util.regex.Matcher.quoteReplacement(view)
-      }
-    })
+  /** Delta's `table_changes('t'[, start[, end]])` as a table-valued
+    * RELATION over [[graft.store.TableStore.readChanges]] — a lazy plan,
+    * no job until the enclosing query runs. The CALL form returns the
+    * raw feed; this form lets arbitrary SQL compose over it. Bounds are
+    * snapshot ids, or TIMESTAMP literals with the CALL form's semantics:
+    * start = commits at-or-after the instant (exclusive of the baseline
+    * before it), end = at-or-before. */
+  private def tableChanges(args: Seq[Expression]): LogicalPlan = {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.{IntegerType, LongType, StringType, TimestampType}
+    val zone = java.time.ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone)
+    // Left = a snapshot id, Right = an instant in epoch millis; a
+    // TIMESTAMP's wall-clock text reads in UTC, as the CALL form's
+    // bounds and AS OF do, whatever the session time zone
+    def bound(e: Expression): Either[Long, Long] = e match {
+      case Literal(id: Int, IntegerType) => Left(id.toLong)
+      case Literal(id: Long, LongType) => Left(id)
+      case Literal(us: Long, TimestampType) => Right(java.time.Instant.EPOCH
+        .plus(us, java.time.temporal.ChronoUnit.MICROS).atZone(zone)
+        .toLocalDateTime.toInstant(ZoneOffset.UTC).toEpochMilli)
+      case other => throw new IllegalArgumentException(
+        s"table_changes: a bound is a snapshot id or a TIMESTAMP literal, got ${other.sql}")
+    }
+    val (name, bounds) = args match {
+      case Literal(n, _: StringType) +: rest if n != null && rest.size <= 2 =>
+        (n.toString, rest.map(bound))
+      case _ => throw new IllegalArgumentException(
+        "table_changes takes ('table'[, start[, end]])")
+    }
+    val (cat, t) = SqlDdl.resolved(catalog, name)
+    val st = cat.store()
+    require(st.exists(t), s"table not found: $name")
+    val from = bounds.headOption match {
+      // start EXCLUSIVE: commits strictly before the instant are the
+      // baseline, at-or-after are the feed
+      case Some(Right(ms)) => st.snapshotIdAtOrBefore(t, ms - 1).getOrElse(0L)
+      case Some(Left(id)) => id
+      case None => 0L
+    }
+    val to = bounds.lift(1).map {
+      case Right(ms) => st.snapshotIdAtOrBefore(t, ms).getOrElse(
+        throw new IllegalArgumentException(
+          s"table_changes: no commit of $t at or before ${java.time.Instant.ofEpochMilli(ms)}"))
+      case Left(id) => id
+    }
+    st.readChanges(t, from, to).queryExecution.analyzed
   }
 
   /** True when offset `at` falls inside a quoted region — same quote
@@ -185,30 +180,6 @@ final class Engine(catalog: GraftCatalog) {
       i += 1
     }
     inSingle || inDouble
-  }
-
-  /** Logical-view expansion: for every stored view whose name appears in
-    * `stmt`, (re-)evaluate its SELECT text through the full engine seam
-    * and register the result as a temp view — so the plan always reads
-    * the CURRENT base snapshot (the stored artifact is text, never a
-    * pinned file list), and views-over-views resolve by recursion
-    * (`visiting` breaks definition cycles; Spark then raises its own
-    * not-found on the truly unresolvable name). Word-boundary matching
-    * over-approximates harmlessly: registering a view the query does not
-    * use costs one lazy plan, no job. */
-  private def registerReferencedViews(stmt: String,
-      visiting: Set[String]): Unit = {
-    val vs = catalog.views()
-    vs.foreach { case (name, defn) =>
-      val mentioned = java.util.regex.Pattern
-        .compile("(?i)\\b" + java.util.regex.Pattern.quote(name) + "\\b")
-        .matcher(stmt).find()
-      if (mentioned && !visiting(name.toLowerCase)) {
-        registerReferencedViews(defn, visiting + name.toLowerCase)
-        // the body travels like a statement: same binder, same dispatch
-        new Binder(defn).query().createOrReplaceTempView(name)
-      }
-    }
   }
 
   /** `SELECT COUNT(*) | MIN(c) | MAX(c) [, …] FROM t` (bare relation, no
@@ -379,23 +350,26 @@ final class Engine(catalog: GraftCatalog) {
     Some(out.result())
   }
 
-  /** One statement's relation binder. The travel clause is stripped and
-    * the rest parsed ONCE; [[metadataAgg]] and [[query]] share the plan,
-    * one table-name resolver and one pinned snapshot per table
+  /** One statement's relation binder and the only place an Engine
+    * statement resolves a relation name. The travel clause is stripped
+    * and the rest parsed ONCE; [[metadataAgg]] and [[query]] share the
+    * plan, one table-name resolver and one pinned snapshot per table
     * ([[graft.store.TableScan.pin]]), which [[meta]] answers from and
     * the relations scan.
     *
-    * [[query]] walks the parsed plan and replaces each
-    * [[UnresolvedRelation]] naming a catalog table by an analyzed plan
-    * under a [[SubqueryAlias]] carrying the original name — so `tbl.col`
-    * references and output column names resolve unchanged, and a column
-    * or alias that merely *spells* like a table name is never touched.
-    * No temp views, no shared session state: two concurrent AS-OF
-    * queries at different snapshots cannot observe each other. On the
-    * current snapshot only a filter-pruned relation (a `WHERE` directly
-    * on a table — SQL users get the same file pruning as
-    * [[GraftCatalog.tableWhere]]) and a foreign-database relation are
-    * spliced; every other name resolves through its temp view as usual.
+    * [[query]] walks the parsed plan and replaces each name by an
+    * analyzed plan under a [[SubqueryAlias]] carrying the original name
+    * — so `tbl.col` references and output column names resolve
+    * unchanged, and a column or alias that merely *spells* like a table
+    * name is never touched. Precedence: a CTE, then a catalog table (its
+    * pinned scan at every travel kind — pruned by a `WHERE` directly on
+    * it where [[prunes]] allows, as [[GraftCatalog.tableWhere]] prunes; a
+    * materialized view renders), then a stored view (its body's walked
+    * plan, bound by its own binder), then `` `t$kind` `` metadata tables;
+    * `table_changes(...)` binds the change feed. Any other name is left
+    * to Spark (a session temp view). The binder registers no temp view
+    * and reads none of the catalog's: two catalogs in one session, or
+    * two concurrent AS-OF queries, cannot observe each other.
     *
     * The walk is a hand-rolled recursion rather than `transformUp` for
     * three reasons: (a) relations inside expression subqueries
@@ -411,9 +385,12 @@ final class Engine(catalog: GraftCatalog) {
     * — while under time travel a name under a database that does not
     * exist fails fast instead of silently reading the current snapshot
     * while the rest of the query is pinned.
+    *
+    * `visiting` holds the stored views whose bodies enclose this one, so
+    * a definition cycle leaves the name to Spark's own not-found.
     */
-  private final class Binder(text: String) {
-    private val rw = TimeTravelRewriter.rewrite(text)
+  private final class Binder(text: String, visiting: Set[String] = Set.empty) {
+    private val rw = TimeTravelRewriter.rewrite(quoteMetaTables(text))
     val stmt: String = rw.sql
     val at: At = rw.at
     val plan: LogicalPlan = GraftSqlShim.parsePlan(spark, stmt)
@@ -423,9 +400,10 @@ final class Engine(catalog: GraftCatalog) {
     // shadow table items (and ITEMS itself is not a catalog reference).
     private val caseSensitive = spark.sessionState.conf.caseSensitiveAnalysis
     def norm(s: String): String = if (caseSensitive) s else s.toLowerCase
-    // listed on first use: an unfiltered bare name on the current
-    // snapshot never needs it
+    // listed on first use: a statement without relations never needs it
     private lazy val byName = catalog.listTables().map(t => norm(t) -> t).toMap
+    // read only when a name is no catalog table
+    private lazy val views = catalog.views().map { case (n, d) => norm(n) -> d }
 
     /** The catalog table a relation names: a bare unshadowed name in the
       * current database, or a name qualified with ANY existing database
@@ -451,11 +429,12 @@ final class Engine(catalog: GraftCatalog) {
       })
 
     /** The snapshot this statement reads of `db.t`, when its metadata
-      * may answer: never a branch (its count is no log line item), nor
-      * a time travel that resolves no snapshot (the scan keeps its empty
-      * read or its error). */
+      * may answer: never a materialized view (its rows are the rendered
+      * state), nor a branch (its count is no log line item), nor a time
+      * travel that resolves no snapshot (the scan keeps its empty read
+      * or its error). */
     def meta(db: String, t: String): Option[Pinned] =
-      Some(pinOf(db, t)).filter(p => !p.isBranch &&
+      Some(pinOf(db, t)).filter(p => p.meta.view.isEmpty && !p.isBranch &&
         (p.snapshot.isDefined || p.at == At.Latest))
 
     /** The pruning rule per travel kind: the current snapshot prunes a
@@ -468,22 +447,10 @@ final class Engine(catalog: GraftCatalog) {
       case _            => false
     }
 
-    /** The analyzed relation over [[scan]] of `db.t`, carrying the
-      * table's catalog statistics SCALED to the scanned files' own logged
-      * rows/bytes, so a 10×-smaller historical version, or a one-partition
-      * leg, does not plan at the current full-table size (it would lose a
-      * broadcast plain file-size estimation chooses). A branch's file set
-      * is not a snapshot-log line item: its statistics stay unscaled.
-      * NDV/bounds ride the latest COMPUTE STATS pass (stats only shape
-      * plans, never rows; bounds re-validate per leaf against the
-      * relation's attribute types). */
-    private def relation(db: String, t: String, pred: Option[Column]): LogicalPlan = {
-      val p = pinOf(db, t)
-      val (df, files) = catalog.store(db).scan(p, pred)
-      catalog.forDatabase(db).withTableStats(t, df, p,
-          prunedTo = if (p.isBranch) None else Some(files))
-        .queryExecution.analyzed
-    }
+    /** The analyzed [[GraftCatalog.relation]] of `db.t` at this
+      * statement's pin. */
+    private def relation(db: String, t: String, pred: Option[Column]): LogicalPlan =
+      catalog.forDatabase(db).relation(t, pinOf(db, t), pred).queryExecution.analyzed
 
     /** The relation pruned by `cond` where [[prunes]] allows it; None
       * when it does not, or when the prune fails to analyze. The
@@ -493,42 +460,33 @@ final class Engine(catalog: GraftCatalog) {
       Some(pinOf(db, t)).filter(prunes).flatMap(_ =>
         scala.util.Try(relation(db, t, Some(GraftSqlShim.column(cond)))).toOption)
 
-    // only the UNPRUNED pinned relation is cached — a condition-pruned
-    // plan is a file subset and must never serve another reference
-    private val pinned = scala.collection.mutable.HashMap.empty[String, LogicalPlan]
+    // only the UNPRUNED relation is cached — a condition-pruned plan is
+    // a file subset and must never serve another reference
+    private val unpruned = scala.collection.mutable.HashMap.empty[(String, String), LogicalPlan]
 
     private def bindRel(u: UnresolvedRelation, shadowed: Set[String],
         cond: Option[Expression]): LogicalPlan = {
       val parts = u.multipartIdentifier
-      if (at == At.Latest)
-        cond.flatMap(c => resolve(parts, shadowed)
-            .flatMap { case (db, t) => pruned(db, t, c) })
-          .map(SubqueryAlias(parts, _))
-          .getOrElse(parts match {
-            // a current-db qualified relation resolves through its bare
-            // temp view, aliased with both parts so `db.table.col`
-            // references work; a FOREIGN-db one has no temp view, so
-            // the latest snapshot's analyzed plan is spliced in
-            case Seq(db, tbl) if norm(db) == norm(catalog.database) &&
-                byName.contains(norm(tbl)) =>
-              SubqueryAlias(parts, u.copy(multipartIdentifier = Seq(tbl)))
-            case Seq(_, _) => resolve(parts, shadowed)
-              .map { case (db, t) => SubqueryAlias(parts,
-                catalog.store(db).read(t, None).queryExecution.analyzed) }
-              .getOrElse(u)
+      resolve(parts, shadowed) match {
+        case Some((db, t)) => SubqueryAlias(parts, cond.flatMap(pruned(db, t, _))
+          .getOrElse(unpruned.getOrElseUpdate((db, t), relation(db, t, None))))
+        case None => parts match {
+          case Seq(one) if shadowed(norm(one)) => u
+          case Seq(v) if views.contains(norm(v)) && !visiting(norm(v)) =>
+            SubqueryAlias(parts,
+              new Binder(views(norm(v)), visiting + norm(v)).bound)
+          case _ => parts.mkString(".") match {
+            case MetaTableName(t, kind) =>
+              SubqueryAlias(parts, metaTable(t, kind).queryExecution.analyzed)
+            case name if at != At.Latest && parts.size > 1 &&
+                byName.contains(norm(parts.last)) =>
+              throw new IllegalArgumentException(
+                s"time travel cannot pin qualified name '$name': " +
+                  s"database '${parts.init.mkString(".")}' does not exist " +
+                  "or has no such table")
             case _ => u
-          })
-      else resolve(parts, shadowed) match {
-        case Some((db, t)) => SubqueryAlias(parts, cond match {
-          case Some(c) => pruned(db, t, c).getOrElse(relation(db, t, None))
-          case None => pinned.getOrElseUpdate(s"$db.$t", relation(db, t, None))
-        })
-        case None if parts.size > 1 && byName.contains(norm(parts.last)) =>
-          throw new IllegalArgumentException(
-            s"time travel cannot pin qualified name '${parts.mkString(".")}': " +
-              s"database '${parts.init.mkString(".")}' does not exist " +
-              "or has no such table")
-        case None => u
+          }
+        }
       }
     }
 
@@ -561,13 +519,18 @@ final class Engine(catalog: GraftCatalog) {
             case se: SubqueryExpression => se.withNewPlan(walk(se.plan, shadowed))
           }
         case u: UnresolvedRelation => bindRel(u, shadowed, None)
+        case f: UnresolvedTableValuedFunction
+            if f.name.map(_.toLowerCase) == Seq("table_changes") =>
+          tableChanges(f.functionArgs)
         case other =>
           other.mapChildren(walk(_, shadowed)).transformExpressionsUp {
             case se: SubqueryExpression => se.withNewPlan(walk(se.plan, shadowed))
           }
       }
 
-    def query(): DataFrame = GraftSqlShim.ofRows(spark, walk(plan, Set.empty))
+    lazy val bound: LogicalPlan = walk(plan, Set.empty)
+
+    def query(): DataFrame = GraftSqlShim.ofRows(spark, bound)
   }
 
   /** `run` = execute + render; max `maxRows` rows are rendered (the

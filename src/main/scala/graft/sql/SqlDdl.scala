@@ -512,15 +512,13 @@ object SqlDdl {
         s"GROUP BY must list column names, got '$c'"))
       val d = graft.store.MaterializedView.MvDef(base.trim, groupCols,
         parseMvAggs(items, groupCols), Option(whereDef).map(_.trim))
-      val rendered = graft.store.MaterializedView.create(cat.store(), t, d)
-      if (cat == catalog) rendered.createOrReplaceTempView(t)
+      graft.store.MaterializedView.create(cat.store(), t, d)
+      cat.registerView(t)
       Some(empty(catalog))
     case RefreshMv(qn) =>
       val (cat, t) = resolved(catalog, qn)
       val action = graft.store.MaterializedView.refresh(cat.store(), t)
-      if (cat == catalog)
-        graft.store.MaterializedView.read(cat.store(), t)
-          .createOrReplaceTempView(t)
+      cat.registerView(t)
       import catalog.spark.implicits._
       val (what, id) = action match {
         case graft.store.MaterializedView.UpToDate =>

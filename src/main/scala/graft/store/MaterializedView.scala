@@ -306,7 +306,8 @@ object MaterializedView {
       .as(f.name)).toIndexedSeq: _*)
   }
 
-  private def render(state: DataFrame, d: MvDef): DataFrame = {
+  /** The user-facing columns of a `state` frame under definition `d`. */
+  private[graft] def render(state: DataFrame, d: MvDef): DataFrame = {
     val have = state.schema.fieldNames.map(_.toLowerCase).toSet
     val cols = d.groupCols.map(col) ++ d.aggs.map { a =>
       if (a.func == "avg") (col(sumCol(a)) / col(cntCol(a))).as(a.alias)
